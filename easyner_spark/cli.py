@@ -255,12 +255,26 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
 
 
 def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
-    """The crawl -> training-corpus pipeline (the composed job
-    bench.py measures as `crawl2corpus`, productized): recrawl
-    collapse -> boilerplate extraction -> Gopher quality gate ->
-    paragraph dedup -> optional PII scrub -> host cap + deterministic
-    sample, materialized as resumable SnapshotTables like
-    :func:`run_pipeline`. Returns {stage: row_count}.
+    """The crawl -> training-corpus pipeline (`--mode curate`, the
+    benchmark's `curate_html` workload): boilerplate extraction ->
+    Gopher quality flags -> recrawl collapse carrying the flag ->
+    keep the flagged survivors -> paragraph dedup -> optional PII
+    scrub -> host cap + deterministic sample, materialized as
+    resumable SnapshotTables like :func:`run_pipeline`. Returns
+    {stage: row_count}.
+
+    Extraction and the Gopher flags run per crawl row, in the scan
+    stage at full input parallelism, before the collapse shuffle;
+    `latest_crawl` then keeps each url's newest crawl WITH its flag
+    (the input's columns first, so ties break exactly as on the raw
+    crawl), and the `gopher_keep` filter sits above the aggregate,
+    which blocks its push-down. Gating after the collapse instead
+    ran both in the collapse's few coalesced reduce tasks, and
+    Catalyst pushed the filter below the extractor's projection so
+    the pandas UDF ran twice per surviving page. A url whose newest
+    crawl fails the gate is dropped; an older crawl never stands in
+    for it. (Without `warc_ts` there is no collapse, and the filter
+    is still pushed below the extractor.)
 
     Config (all under cfg["curation"], every key optional):
 
@@ -293,24 +307,24 @@ def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
         return t.read(spark)
 
     pages = spark.read.parquet(cfg["input"]["pages_path"])
-    if cur.get("latest", "warc_ts" in pages.columns) and "warc_ts" in pages.columns:
-        pages = latest_crawl(pages)
-    if cur.get("extract", "text" not in pages.columns) and "html" in pages.columns:
+    cols = pages.columns
+    text_col = "text"
+    if cur.get("extract", "text" not in cols) and "html" in cols:
         from easyner_spark.operators.boilerplate import extract_text
 
-        pages = (
-            extract_text(pages, out_col="__extracted")
-            .withColumn("text", F.col("__extracted"))
-            .drop("__extracted")
-        )
+        pages = extract_text(pages, out_col="__extracted")
+        text_col = "__extracted"
 
     counts: dict[str, int] = {}
 
     def gated_df() -> DataFrame:
-        g = gopher_filters(
-            pages, id_col="url", keep_cols=("text",), **cur.get("gopher", {})
-        )
-        return g.where(F.col("gopher_keep")).select("url", "text")
+        flagged = gopher_filters(
+            pages, text_col=text_col, id_col="url", keep_cols=tuple(pages.columns),
+            **cur.get("gopher", {}),
+        ).select(*pages.columns, "gopher_keep")
+        if cur.get("latest", "warc_ts" in cols) and "warc_ts" in cols:
+            flagged = latest_crawl(flagged)
+        return flagged.where(F.col("gopher_keep")).select("url", F.col(text_col).alias("text"))
 
     gated = materialize("gated", gated_df)
     counts["gated"] = gated.count()
@@ -349,14 +363,15 @@ def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
         if cap:
             from easyner_spark.operators.sampling import per_host_cap
 
-            with_host = url_parts(df, keep=True)
-            keep_ids = per_host_cap(
-                with_host.select("url", "host", F.length("text").alias("sz")),
+            # capped in-row: a semi-join of the kept urls back onto
+            # `df` would compute everything above (the dedup shuffle)
+            # a second time
+            df = per_host_cap(
+                url_parts(df).withColumn("sz", F.length("text")),
                 cap=cap,
                 order_col="sz",
                 id_col="url",
-            ).select("url")
-            df = df.join(keep_ids, "url", "left_semi")
+            ).select("url", "text")
         rate = cur.get("sample_rate")
         if rate is not None:
             from easyner_spark.operators.sampling import deterministic_sample

@@ -827,7 +827,8 @@ def dsir_sample_oracle_sql(
 ) -> str:
     """DuckDB twin of :func:`dsir_sample` — same exact integer Gumbel
     key, same total order (key_q DESC, id ASC)."""
-    h = f"('0x' || substr(md5('{seed}' || id::VARCHAR), 1, {HASH_NIBBLES}))::BIGINT"
+    lit = seed.replace("'", "''")
+    h = f"('0x' || substr(md5('{lit}' || id::VARCHAR), 1, {HASH_NIBBLES}))::BIGINT"
     return f"""
 WITH {_dsir_cte(n_buckets, target_where, source)}
 SELECT id, n_grams, weight_q,

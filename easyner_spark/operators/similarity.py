@@ -441,7 +441,10 @@ def _driver_lloyd(
     the per-cell mean sums in a fixed sequence; ties in the cosine
     argmax break to the smallest centroid id (columns are pre-sorted
     by cid, argmax returns the first maximum) — the same tie rule as
-    the distributed struct-min."""
+    the distributed struct-min. A zero-norm vector or centroid has no
+    cosine: it raises ValueError, as the distributed twin's division
+    raises DIVIDE_BY_ZERO under the session's ANSI mode, instead of
+    NaN rows that argmax would collapse onto the first cell."""
     import numpy as np
 
     V = np.asarray([v for _, v in rows], dtype=np.float64)
@@ -450,6 +453,11 @@ def _driver_lloyd(
         order = sorted(range(len(cents)), key=lambda j: cents[j][0])
         C = np.asarray([cents[j][1] for j in order], dtype=np.float64)
         cn = np.sqrt((C * C).sum(axis=1))
+        if not (vn.all() and cn.all()):
+            raise ValueError(
+                f"IVF training: cosine undefined for {int((vn == 0).sum())} "
+                f"zero-norm vector(s) and {int((cn == 0).sum())} zero-norm centroid(s)"
+            )
         cos = (V @ C.T) / (vn[:, None] * cn[None, :])
         best = cos.argmax(axis=1)  # first max = smallest cid on ties
         refined: dict = {}

@@ -43,13 +43,15 @@ def split_sentences(
     `lang_filter` reproduces the reference's load-time drop of
     non-usable rows (empty-abstract filter, scripts/pubmed_bulk.py:115-117
     / P2) generalized to the input_hint `lang` column; pass None to keep
-    every row. Both filters are simple predicates that Catalyst pushes
-    into the parquet scan.
+    every row. The lang filter is a simple predicate that Catalyst
+    pushes into the parquet scan. Null or empty text needs no filter:
+    its filtered split is null or empty, so posexplode emits no rows
+    (a `text` predicate would also be pushed below an extracting
+    pandas UDF and run it twice).
     """
     df = pages
     if lang_filter is not None and "lang" in df.columns:
         df = df.where(F.col("lang") == lang_filter)
-    df = df.where(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
 
     sents = F.split(normalize_text(F.col(text_col)), SENT_SPLIT_JAVA)
     sents = F.filter(sents, lambda s: F.length(s) > 0)

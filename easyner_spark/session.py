@@ -4,8 +4,9 @@ Defaults chosen for the 100 TB design point and scaled-down local runs:
   - AQE on (runtime coalesce + skew-join splitting; the input is
     Common-Crawl-style with URL-host skew, SURVEY.md section 4.3).
   - Arrow on for all pandas-UDF exchange (no per-row Python anywhere).
-  - shuffle partitions ~ cores locally; on a real cluster this is set
-    per-job to ~2-3x total cores via spark-submit conf.
+  - local cores = SPARK_GRAFT_CPUS, else the CPUs this process may run
+    on; shuffle partitions ~ cores locally (on a real cluster this is
+    set per-job to ~2-3x total cores via spark-submit conf).
   - UTC session timezone so timestamps compare exactly against the
     DuckDB oracle (duckdb timestamps are UTC-naive).
 """
@@ -25,7 +26,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # default: the CPUs in this process's affinity mask (honours taskset)
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:

@@ -625,6 +625,39 @@ class TestIvfRecallGate:
         assert out.select("query_id").distinct().count() == 200
 
 
+class TestIvfZeroNorm:
+    """A zero vector has no cosine. The driver-side Lloyd raises, as
+    the distributed twin does (DIVIDE_BY_ZERO under ANSI), instead of
+    NaN rows that argmax assigns to the first cell."""
+
+    ROWS = [(0, [0.0, 0.0, 0.0])] + [
+        (i, [float(i % 3), float(i * 7 % 5), 1.0]) for i in range(1, 40)
+    ]
+
+    def test_driver_lloyd_raises(self):
+        from easyner_spark.operators.similarity import _driver_lloyd
+
+        rows = self.ROWS
+        with pytest.raises(ValueError, match="1 zero-norm vector"):
+            _driver_lloyd(rows, rows[1:5], refine_iters=1)
+        # a zero centroid is rejected too
+        with pytest.raises(ValueError, match="1 zero-norm centroid"):
+            _driver_lloyd(rows[1:], rows[:4], refine_iters=1)
+        # no Lloyd round: nothing is divided
+        assert _driver_lloyd(rows, rows[:4], refine_iters=0) == rows[:4]
+
+    def test_sampled_training_raises_like_distributed(self, spark):
+        from pyspark.errors import ArithmeticException
+
+        from easyner_spark.operators.similarity import train_ivf_centroids
+
+        emb = spark.createDataFrame(self.ROWS, "vec_id long, embedding array<double>")
+        with pytest.raises(ValueError, match="zero-norm"):
+            train_ivf_centroids(emb, n_centroids=4, refine_iters=1, train_frac=0.999)
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            train_ivf_centroids(emb, n_centroids=4, refine_iters=1)
+
+
 class TestParagraphDedup:
     """paragraph_dedup vs a plain-Python first-occurrence reference."""
 

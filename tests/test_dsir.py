@@ -84,3 +84,23 @@ def test_xxhash_fast_path_same_ranking_shape(spark, corpora):
     assert w[100] > w[102] and w[100] > w[103]
     with pytest.raises(ValueError, match="hash_fn"):
         dsir_weights(raw, target, hash_fn="sha1").collect()
+
+
+def test_oracle_seed_with_apostrophe(spark, corpora):
+    """The DuckDB twin quotes the seed literal: a seed with `'` runs
+    and draws the same sample as the Spark side."""
+    duckdb = pytest.importorskip("duckdb")
+    from easyner_spark.operators.scoring import dsir_sample_oracle_sql
+
+    target, raw = corpora
+    docs = target.unionByName(raw)
+    seed = "o'brien"
+    got = [
+        (r.id, r.key_q)
+        for r in dsir_sample(docs, docs.where("doc_id < 100"), k=3, seed=seed).collect()
+    ]
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    sql = dsir_sample_oracle_sql(3, target_where="doc_id < 100", seed=seed)
+    want = [(int(i), int(k)) for i, _, _, k in con.execute(sql).fetchall()]
+    assert got == want

@@ -396,6 +396,134 @@ class TestCurationPipeline:
         assert counts["corpus"] > 0
 
 
+def _spy_written(monkeypatch) -> dict:
+    """{table name: DataFrame} of every SnapshotTable.overwrite call."""
+    from easyner_spark.sinks import checkpoint
+
+    written = {}
+    orig = checkpoint.SnapshotTable.overwrite
+
+    def spy(self, df, *args, **kwargs):
+        written[self.path.rstrip("/").rsplit("/", 1)[-1]] = df
+        return orig(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(checkpoint.SnapshotTable, "overwrite", spy)
+    return written
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _html(*paras: str) -> bytes:
+    body = "".join(f"<p>{p}</p>" for p in paras)
+    return f"<html><body>{body}</body></html>".encode()
+
+
+class TestCurationRecrawls:
+    """run_curation on an html-only crawl with recrawls: the gate is
+    computed per crawl row and carried through the recrawl collapse,
+    which must select exactly what collapsing first and gating after
+    selects."""
+
+    GOOD = "the enzyme binds to the receptor in the cell"
+    GOPHER = {"min_words": 5, "min_stop_hits": 1}
+    ROWS = [
+        # newest crawl fails the gate, an older one passes: url dropped
+        ("https://a.org/1", 1, _html(GOOD + " stalemark")),
+        ("https://a.org/1", 2, _html("too short")),
+        # both pass: only the newest text survives
+        ("https://a.org/2", 1, _html(GOOD + " stalemark")),
+        ("https://a.org/2", 3, _html(GOOD + " fresh")),
+        # newest passes, older fails
+        ("https://a.org/3", 1, _html("nope")),
+        ("https://a.org/3", 2, _html(GOOD + " again")),
+        # equal warc_ts: the larger html wins (latest_crawl's contract),
+        # here the one that fails the gate, so the url is dropped
+        ("https://b.org/4", 5, _html(GOOD + " tie")),
+        ("https://b.org/4", 5, _html("zz failing tie")),
+        # equal warc_ts, both pass: the larger html's text is kept
+        ("https://b.org/5", 7, _html(GOOD + " aaa")),
+        ("https://b.org/5", 7, _html(GOOD + " zzz")),
+        # single crawl
+        ("https://b.org/6", 4, _html(GOOD + " alone")),
+    ]
+
+    @pytest.fixture()
+    def crawl_path(self, spark, tmp_path):
+        path = str(tmp_path / "crawl.parquet")
+        spark.createDataFrame(self.ROWS, "url string, ts long, html binary").select(
+            "url", F.timestamp_seconds("ts").alias("warc_ts"), "html"
+        ).write.parquet(path)
+        return path
+
+    def _run(self, spark, crawl_path, tmp_path, monkeypatch):
+        from easyner_spark.cli import run_curation
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+
+        written = _spy_written(monkeypatch)
+        out = str(tmp_path / "cur")
+        run_curation(spark, {
+            "input": {"pages_path": crawl_path},
+            "output_dir": out,
+            "curation": {"gopher": self.GOPHER, "paragraph_dedup": False},
+        })
+        gated = SnapshotTable(f"{out}/gated", ["url"]).read(spark)
+        return {r.url: r.text for r in gated.collect()}, written
+
+    def test_newest_crawl_decides(self, spark, crawl_path, tmp_path, monkeypatch):
+        got, _ = self._run(spark, crawl_path, tmp_path, monkeypatch)
+        assert set(got) == {
+            "https://a.org/2", "https://a.org/3", "https://b.org/5", "https://b.org/6",
+        }
+        assert not any("stalemark" in t for t in got.values())
+        assert got["https://a.org/2"].endswith("fresh")
+        assert got["https://b.org/5"].endswith("zzz")
+
+    def test_matches_collapse_then_gate(self, spark, crawl_path, tmp_path, monkeypatch):
+        from easyner_spark.operators.boilerplate import extract_text
+        from easyner_spark.operators.textstats import gopher_filters
+        from easyner_spark.operators.webtext import latest_crawl
+
+        got, _ = self._run(spark, crawl_path, tmp_path, monkeypatch)
+        latest = extract_text(latest_crawl(spark.read.parquet(crawl_path)), out_col="text")
+        old = gopher_filters(latest, id_col="url", keep_cols=("text",), **self.GOPHER)
+        want = {r.url: r.text for r in old.where("gopher_keep").collect()}
+        assert got == want
+
+    def test_gated_plan_extracts_once(self, spark, crawl_path, tmp_path, monkeypatch):
+        _, written = self._run(spark, crawl_path, tmp_path, monkeypatch)
+        assert _optimized(written["gated"]).count("ArrowEvalPython") == 1
+
+
+class TestKgHtmlExtractOnce:
+    def test_sentences_plan_one_udf_lang_filter_below(self, spark, tmp_path, monkeypatch):
+        """On html-only pages the splitter stage runs the extractor
+        once, and the lang predicate still filters before it."""
+        from easyner_spark.cli import run_pipeline
+
+        path = str(tmp_path / "pages.parquet")
+        spark.createDataFrame(
+            [("u1", _html("The enzyme binds. It works."), "en"),
+             ("u2", _html("Der Hund bellt."), "de"),
+             ("u3", _html(""), "en")],
+            "url string, html binary, lang string",
+        ).write.parquet(path)
+        written = _spy_written(monkeypatch)
+        counts = run_pipeline(spark, {
+            "input": {"pages_path": path},
+            "output_dir": str(tmp_path / "out"),
+            "modules": {"ner": False, "analysis": False, "nel": False,
+                        "triples": False, "components": False},
+        })
+        assert counts["sentences"] == 2
+        plan = _optimized(written["sentences"]).splitlines()
+        udf = [i for i, line in enumerate(plan) if "ArrowEvalPython" in line]
+        lang = [i for i, line in enumerate(plan) if "Filter" in line and "lang" in line]
+        assert len(udf) == 1
+        assert lang and lang[0] > udf[0]
+
+
 class TestCorpusShards:
     def test_deterministic_shards_roundtrip(self, spark, tmp_path):
         from easyner_spark.sinks.export import write_corpus_shards

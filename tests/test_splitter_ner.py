@@ -32,6 +32,15 @@ def test_split_sentences_udf_variant_identical(spark, pages_df):
     assert_pdf_equal(b, a, ["url", "sent_idx"])
 
 
+def test_split_sentences_null_or_empty_text_yields_nothing(spark):
+    pages = spark.createDataFrame(
+        [("a", None), ("b", ""), ("c", "\n\n"), ("d", "One. Two.")],
+        "url string, text string",
+    )
+    got = [tuple(r) for r in split_sentences(pages, lang_filter=None).collect()]
+    assert sorted(got) == [("d", 0, "One."), ("d", 1, "Two.")]
+
+
 def test_dict_ner_matches_gold(spark, fx, pages_df):
     sents = split_sentences(pages_df)
     got = dict_ner(sents, TERMS).toPandas()
