@@ -69,10 +69,6 @@ def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dict_ner(_sentences(spark, sf_dir), DICT)
 
 
-def _as_doc_id(df: DataFrame) -> DataFrame:
-    return df.withColumn("doc_id", F.col("url").cast("long")).drop("url")
-
-
 def q_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _sentences(spark, sf_dir)
     return out.select(
@@ -311,17 +307,6 @@ def q_entity_salience(spark: SparkSession, sf_dir: str) -> DataFrame:
         "salience",
         F.col("rank").alias("sal_rank"),
     )
-
-
-def q_host_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-citation relatedness over the extracted host graph with the
-    per-source fanout cap biting (max_out=3 < several sources' real
-    out-degree) so the deterministic truncation rule is value-checked,
-    not just the happy path."""
-    from easyner_spark.operators.webtext import host_cocitation, host_graph
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    return host_cocitation(hg, max_out=3)
 
 
 # Predicate-signature typing rules shared verbatim by the Spark query
@@ -765,9 +750,6 @@ def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOK_RE = r"(?U)\\w+|[^\\w\\s]"
-
-
 def _pronoun_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document token stream with pronouns injected (' the ' ->
     ' it ') — corpus vocabulary has no natural pronouns; the
@@ -911,206 +893,6 @@ def q_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_host_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-entity affinity: per-host mention counts and shares over
-    the pipeline's real mention table joined to the skewed host
-    synthesis — the source-authority feature for canonicalization
-    and crawl targeting."""
-    from easyner_spark.operators.webtext import host_topics
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    host = (
-        F.when(did % 10 < 3, F.lit("hub.example.com"))
-        .when(did % 10 < 5, F.lit("blog.example.org"))
-        .otherwise(
-            F.concat(
-                F.lit("site"), (did % 37).cast("string"),
-                F.lit(".example.net"),
-            )
-        )
-    )
-    hosts = d.select(did.cast("string").alias("url"), host.alias("host"))
-    return host_topics(_mentions(spark, sf_dir), hosts).select(
-        "host", "term", "n_mentions", "share"
-    )
-
-
-def q_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """schema.org microdata pulls (itemtype + itemprop/content) over
-    deterministic synthesis — the third structured-data syntax next
-    to jsonld/opengraph; flat-scope contract documented."""
-    from easyner_spark.operators.webtext import extract_microdata
-
-    return extract_microdata(_microdata_pages(spark, sf_dir))
-
-
-def _microdata_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every doc not divisible by 4 carries an itemscope'd Person/
-    Product (cycling) with two itemprops; every 6th adds a scopeless
-    extra itemprop; every 4th has no microdata."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    typ = F.when(
-        did % 2 == 0, F.lit("https://schema.org/Person")
-    ).otherwise(F.lit("https://schema.org/Product"))
-    html = F.concat(
-        F.lit("<html>"),
-        F.when(
-            did % 4 != 0,
-            F.concat(
-                F.lit('<div itemscope itemtype="'), typ, F.lit('">'),
-                F.lit('<span itemprop="name" content="Entity '),
-                (did % 30).cast("string"), F.lit('">x</span>'),
-                F.lit('<meta itemprop="sku" content="S'),
-                (did % 17).cast("string"), F.lit('"></div>'),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 6 == 0,
-            F.concat(
-                F.lit('<b itemprop="note" content="n'),
-                (did % 5).cast("string"), F.lit('">y</b>'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    return d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-
-
-_MICRODATA_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 4 != 0
-      THEN '<div itemscope itemtype="'
-           || (CASE WHEN doc_id % 2 = 0 THEN 'https://schema.org/Person'
-               ELSE 'https://schema.org/Product' END)
-           || '"><span itemprop="name" content="Entity ' || (doc_id % 30)
-           || '">x</span><meta itemprop="sku" content="S' || (doc_id % 17)
-           || '"></div>'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 6 = 0
-      THEN '<b itemprop="note" content="n' || (doc_id % 5) || '">y</b>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-
-
-def q_unescape_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML-entity normalization (fixed replace chain, &amp; last) —
-    the equality-key cleaner exact_dedup/anchor_terms/alias joins
-    need ('AT&amp;T' == 'AT&T')."""
-    from easyner_spark.operators.webtext import html_unescape
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    raw = F.concat(
-        F.lit("v&amp;"),
-        F.when(did % 2 == 0, F.lit("&lt;tag&gt; ")).otherwise(F.lit("")),
-        F.when(did % 3 == 0, F.lit("&quot;q&#39; ")).otherwise(F.lit("")),
-        F.when(did % 5 == 0, F.lit("&amp;lt;dbl ")).otherwise(F.lit("")),
-        F.lit("w&nbsp;z"),
-    )
-    return d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        raw.alias("raw"),
-        html_unescape(raw).alias("clean"),
-    )
-
-
-def q_host_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-bounded strongly-connected-component labels over the host
-    link graph — reciprocal-ring (link-exchange) detection that
-    undirected components over-merge."""
-    from easyner_spark.operators.graph import bounded_scc
-    from easyner_spark.operators.webtext import host_graph
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    return bounded_scc(
-        hg.select(
-            F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-        ),
-        k=3,
-    ).select("node", "scc_label")
-
-
-def q_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-text date mentions normalized to ISO-8601 by pure string
-    ops over deterministically injected long/ISO forms — the temporal
-    grounding feeder beyond edge_temporal's cue words."""
-    from easyner_spark.operators.webtext import date_facts
-
-    return date_facts(_date_pages(spark, sf_dir))
-
-
-def _date_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every 2nd doc carries a long-form date (month cycling by
-    doc_id, day 1-28, year 1999+id%25), every 3rd an ISO date, every
-    6th both."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    month_names = [
-        "January", "February", "March", "April", "May", "June",
-        "July", "August", "September", "October", "November",
-        "December",
-    ]
-    mexpr = F.when(did % 12 == 0, F.lit(month_names[0]))
-    for i, nm in enumerate(month_names[1:], start=1):
-        mexpr = mexpr.when(did % 12 == i, F.lit(nm))
-    text = F.concat(
-        F.lit("posted "),
-        F.when(
-            did % 2 == 0,
-            F.concat(
-                mexpr, F.lit(" "), (did % 28 + 1).cast("string"),
-                F.lit(", "), (1999 + did % 25).cast("string"), F.lit(" "),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit("on 20"), F.lpad((did % 100).cast("string"), 2, "0"),
-                F.lit("-"), F.lpad((did % 12 + 1).cast("string"), 2, "0"),
-                F.lit("-"), F.lpad((did % 28 + 1).cast("string"), 2, "0"),
-                F.lit(" "),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("end"),
-    )
-    return d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        text.alias("text"),
-    )
-
-
-_DATE_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  'posted '
-  || (CASE WHEN doc_id % 2 = 0
-      THEN (CASE doc_id % 12
-            WHEN 0 THEN 'January' WHEN 1 THEN 'February'
-            WHEN 2 THEN 'March' WHEN 3 THEN 'April'
-            WHEN 4 THEN 'May' WHEN 5 THEN 'June'
-            WHEN 6 THEN 'July' WHEN 7 THEN 'August'
-            WHEN 8 THEN 'September' WHEN 9 THEN 'October'
-            WHEN 10 THEN 'November' ELSE 'December' END)
-           || ' ' || (doc_id % 28 + 1) || ', ' || (1999 + doc_id % 25)
-           || ' '
-      ELSE '' END)
-  || (CASE WHEN doc_id % 3 = 0
-      THEN 'on 20' || lpad((doc_id % 100)::VARCHAR, 2, '0') || '-'
-           || lpad((doc_id % 12 + 1)::VARCHAR, 2, '0') || '-'
-           || lpad((doc_id % 28 + 1)::VARCHAR, 2, '0') || ' '
-      ELSE '' END)
-  || 'end' AS text
-FROM documents
-"""
-
-
 def q_kg_window_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window (<=5) entity co-occurrence counts — the tighter-
     evidence edge weighting sentence-level pairs can't express."""
@@ -1135,23 +917,6 @@ def q_kg_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return harmonic_centrality(edges, k=2).select(
         "source", "hc", "n_reached"
     )
-
-
-def q_host_wrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-proportional PageRank over the host link graph — the
-    rank the link COUNTS justify (host_graph's n_links drives the
-    inflow split), vs host_rank's one-host-one-vote uniform walk."""
-    from easyner_spark.operators.graph import weighted_pagerank
-    from easyner_spark.operators.webtext import host_graph
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    return weighted_pagerank(
-        hg.select(
-            F.col("src_host").alias("src"),
-            F.col("dst_host").alias("dst"),
-            F.col("n_links").alias("weight"),
-        )
-    ).select("node", "rank")
 
 
 _KWIC_TERMS = ("hash", "scan", "merge")
@@ -1187,65 +952,6 @@ def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kwic(ments, sents, window=20)
 
 
-def q_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scholarly-identifier pulls (DOI / arXiv / PMID) over pages with
-    deterministically injected citations — the web->literature
-    linking edge for a scientific KG."""
-    from easyner_spark.operators.webtext import citation_facts
-
-    return citation_facts(_citation_pages(spark, sf_dir))
-
-
-def _citation_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every 3rd doc cites a DOI, every 5th an arXiv id, every 7th a
-    PMID (some docs carry several); the rest carry none."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    text = F.concat(
-        F.lit("body "),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit("see 10.1038/j"), (did % 50).cast("string"),
-                F.lit(".x "),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 5 == 0,
-            F.concat(
-                F.lit("arXiv:20"), F.lpad((did % 100).cast("string"), 2, "0"),
-                F.lit(".1"), F.lpad((did % 1000).cast("string"), 4, "0"),
-                F.lit(" "),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 7 == 0,
-            F.concat(F.lit("PMID: "), (10000 + did).cast("string"), F.lit(" ")),
-        ).otherwise(F.lit("")),
-        F.lit("end"),
-    )
-    return d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        text.alias("text"),
-    )
-
-
-_CITATION_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  'body '
-  || (CASE WHEN doc_id % 3 = 0
-      THEN 'see 10.1038/j' || (doc_id % 50) || '.x ' ELSE '' END)
-  || (CASE WHEN doc_id % 5 = 0
-      THEN 'arXiv:20' || lpad((doc_id % 100)::VARCHAR, 2, '0')
-           || '.1' || lpad((doc_id % 1000)::VARCHAR, 4, '0') || ' '
-      ELSE '' END)
-  || (CASE WHEN doc_id % 7 = 0
-      THEN 'PMID: ' || (10000 + doc_id) || ' ' ELSE '' END)
-  || 'end' AS text
-FROM documents
-"""
-
-
 def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 TF-IDF keywords per document (smoothed sklearn-style
     idf, round-6 contract, per-doc window — no SinglePartition) —
@@ -1258,7 +964,7 @@ def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the entity co-occurrence graph — one
     exact-integer-sums Pearson row; the structural fingerprint that
-    picks the pruning strategy (k_core vs template_cap)."""
+    picks the pruning strategy (k_core vs per-template capping)."""
     from easyner_spark.operators.graph import (
         degree_assortativity,
         sentence_pairs,
@@ -1316,25 +1022,6 @@ def q_entity_merge_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edit_merge_candidates(
         _merge_label_rows(spark, sf_dir), max_dist=2
     ).select("id_a", "id_b", "label_a", "label_b", "dist")
-
-
-def q_host_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank spam mass over the extracted host link graph:
-    personalized PageRank from the two declared-trusted hosts vs plain
-    PageRank; mass -> 1 flags hosts whose authority is unreachable
-    from trust (link-farm shape). The demotion signal crawl
-    prioritization applies before believing host_rank."""
-    from easyner_spark.operators.graph import spam_mass
-    from easyner_spark.operators.webtext import host_graph
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    edges = hg.select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-    seeds = spark.createDataFrame(
-        [("hub.example.com",), ("blog.example.org",)], ["node"]
-    )
-    return spam_mass(edges, seeds).select("node", "pr", "tr", "spam_mass")
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1495,7 +1182,7 @@ def q_kg_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Webtext URL/host operators over the documents table with
 # deterministically synthesized urls (input_hint: pages keyed by url).
 # The url construction is repeated VERBATIM in the oracle SQL; both
-# engines parse/canonicalize with the same ASCII regexes.
+# engines parse with the same ASCII regexes.
 # ---------------------------------------------------------------------------
 
 
@@ -1516,21 +1203,6 @@ def _synth_url_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", url.alias("url"), "text", "lang")
 
 
-def q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host rollup (page count, chars, language spread) — one
-    partial-agg-absorbed shuffle on the extracted host key."""
-    from easyner_spark.operators.webtext import host_stats
-
-    out = host_stats(_synth_url_pages(spark, sf_dir))
-    return out.select(
-        "host",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("total_chars").cast("long").alias("total_chars"),
-        F.col("n_langs").cast("long").alias("n_langs"),
-        "mean_chars",
-    )
-
-
 def q_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-skew profile: rank/share/cumulative share plus the salt
     factor a host-keyed join would need (target 50 rows/partition at
@@ -1548,119 +1220,6 @@ def q_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-URL exact dedup: recrawl variants (www., tracking
-    params, trailing slash, fragments) collapse onto one canonical
-    form; min raw url per group survives."""
-    from easyner_spark.operators.webtext import url_dedup
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    host = (
-        F.when(did % 10 < 3, F.lit("hub.example.com"))
-        .when(did % 10 < 5, F.lit("blog.example.org"))
-        .otherwise(F.concat(F.lit("site"), (did % 37).cast("string"), F.lit(".example.net")))
-    )
-    base = F.concat(F.lit("https://"), host, F.lit("/p/"), (did % 211).cast("string"))
-    url = (
-        F.when(did % 4 == 0, F.concat(base, F.lit("?utm_source=feed&id="), (did % 211).cast("string")))
-        .when(did % 4 == 1, F.concat(F.lit("https://www."), host, F.lit("/p/"), (did % 211).cast("string")))
-        .when(did % 4 == 2, F.concat(base, F.lit("/")))
-        .otherwise(F.concat(base, F.lit("#sec-"), did.cast("string")))
-    )
-    pages = d.select("doc_id", url.alias("url"))
-    return url_dedup(pages).select("doc_id", "url", "canon_url", "is_dup")
-
-
-def q_resolve_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution by pointer doubling: a synthetic
-    functional redirect graph over documents (r = doc_id % 10):
-    r 1-4 step down one id (chains of 1..4 hops onto the r=0
-    terminal), r 7<->8 form a 2-cycle, r 9 self-loops; r 0/5/6 have
-    no redirect (terminals). Chains resolve with exact hop counts;
-    the cycles exhaust max_steps=8 and come back 'unresolved'."""
-    from easyner_spark.operators.webtext import resolve_redirects
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    r = did % 10
-    target_id = (
-        F.when(r.between(1, 4), did - 1)
-        .when(r == 7, did + 1)
-        .when(r == 8, did - 1)
-        .when(r == 9, did)
-    )
-    redirects = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        F.concat(F.lit("u"), target_id.cast("string")).alias("target"),
-    ).where(target_id.isNotNull())
-    return resolve_redirects(redirects, max_steps=8)
-
-
-def _synth_html_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_synth_url_pages + a deterministic html column (binary, as the
-    input_hint specifies) carrying 2-4 outlinks per page: one absolute
-    cross-host link, one relative link (resolves to the source host),
-    every 3rd page a protocol-relative link to the hub, every 4th a
-    mailto: (dropped by the classifier)."""
-    did = F.col("doc_id")
-    link_abs = F.concat(
-        F.lit('<a href="https://site'),
-        ((did * 7) % 37).cast("string"),
-        F.lit('.example.net/p/1">x</a>'),
-    )
-    link_rel = F.concat(
-        F.lit('<a href="/local/'), (did % 5).cast("string"), F.lit('">y</a>')
-    )
-    link_proto = F.when(
-        did % 3 == 0, F.lit('<a href="//hub.example.com/z">z</a>')
-    ).otherwise(F.lit(""))
-    link_mail = F.when(
-        did % 4 == 0, F.lit('<a href="mailto:a@b.c">m</a>')
-    ).otherwise(F.lit(""))
-    html = F.concat(
-        F.lit("<html><body><p>t</p>"),
-        link_abs, link_rel, link_proto, link_mail,
-        F.lit("</body></html>"),
-    )
-    return _synth_url_pages(spark, sf_dir).withColumn(
-        "html", html.cast("binary")
-    )
-
-
-def q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The host-level link graph (src_host, dst_host, n_links) — the
-    canonical Common-Crawl derived product, aggregated from regex href
-    extraction in one partial-agg shuffle."""
-    from easyner_spark.operators.webtext import host_graph
-
-    out = host_graph(_synth_html_pages(spark, sf_dir))
-    return out.select(
-        "src_host", "dst_host", F.col("n_links").cast("long").alias("n_links")
-    )
-
-
-def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-authority PageRank over the extracted link graph — link
-    extraction, host-graph rollup, and the fixed-iteration power
-    method composed end-to-end (crawl prioritization)."""
-    from easyner_spark.operators.graph import pagerank
-    from easyner_spark.operators.webtext import host_graph
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    edges = hg.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-    return pagerank(edges, iters=3).select("node", "rank")
-
-
-def q_host_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host link reciprocity over the extracted host graph — the
-    graph-side link-farm fingerprint (reciprocal-ring detection)."""
-    from easyner_spark.operators.webtext import host_graph, host_reciprocity
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    return host_reciprocity(hg)
-
-
 def q_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score-proportional deterministic sampling (FineWeb-style soft
     quality filter): keep probability n_words/200, integer-exact
@@ -1675,95 +1234,6 @@ def q_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_weighted_sample(
         scored, score_col="n_words", max_score=200, key="doc_id", seed="qs1"
     ).select(F.col("doc_id").alias("id"), "n_words")
-
-
-def q_host_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-farm signals over the extracted host graph: outlink
-    volume, fanout, hottest-target share, and reciprocity per source
-    host — exact BIGINT floor-division percentages, the graph-QA
-    layer crawl prioritization consults before trusting host_rank."""
-    from easyner_spark.operators.webtext import host_graph, host_spam_signals
-
-    return host_spam_signals(host_graph(_synth_html_pages(spark, sf_dir)))
-
-
-def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs/authorities over the extracted host link graph —
-    the hub/authority split PageRank can't make (an index page links
-    out everywhere = hub; a hot target = authority). Fixed-iteration,
-    L-inf normalized, round(·,9) state contract; oracle = unrolled
-    CTE chain (_hits_oracle_body, the pagerank recipe)."""
-    from easyner_spark.operators.graph import hits
-    from easyner_spark.operators.webtext import host_graph
-
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    edges = hg.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-    return hits(edges, iters=3)
-
-
-def _synth_anchor_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_synth_url_pages + html whose links carry MULTI-WORD anchor
-    text (the signal anchor_terms aggregates): an absolute cross-host
-    link ('Read Page N'), a relative link with two rotating labels,
-    every 4th page a protocol-relative 'The HUB portal' link."""
-    did = F.col("doc_id")
-    a1 = F.concat(
-        F.lit('<a href="https://site'),
-        ((did * 7) % 37).cast("string"),
-        F.lit('.example.net/p/1">Read Page '),
-        (did % 211).cast("string"),
-        F.lit("</a>"),
-    )
-    a2 = F.concat(
-        F.lit('<a href="/local/'),
-        (did % 5).cast("string"),
-        F.lit('">'),
-        F.when(did % 3 == 0, F.lit("Home & Garden")).otherwise(F.lit("next-page 2")),
-        F.lit("</a>"),
-    )
-    a3 = F.when(
-        did % 4 == 0, F.lit('<a href="//hub.example.com/z">The HUB portal</a>')
-    ).otherwise(F.lit(""))
-    html = F.concat(F.lit("<html><body>"), a1, a2, a3, F.lit("</body></html>"))
-    return _synth_url_pages(spark, sf_dir).withColumn("html", html.cast("binary"))
-
-
-def q_link_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text link density (jusText-style list-page signal):
-    synthetic pages whose anchor text is a 40-char snippet of the doc
-    and whose even-id pages carry 200 extra chars of body text, so
-    density splits by id parity; exact integer counts both engines."""
-    from easyner_spark.operators.webtext import link_density
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    html = F.concat(
-        F.lit('<html><body><a href="https://x.example/p">'),
-        F.substring("text", 1, 40),
-        F.lit("</a>"),
-        F.when(did % 2 == 0, F.substring("text", 41, 200)).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    pages = docs.select(did.cast("string").alias("url"), html.alias("html"))
-    out = link_density(pages)
-    return out.select(
-        F.col("url").cast("long").alias("id"),
-        "n_chars",
-        "n_anchors",
-        "anchor_chars",
-        "density_micro",
-        "is_linkfarm_page",
-    )
-
-
-def q_anchor_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host anchor-text term profile (dst_host, term, n) — the
-    web-derived alias/name table for entity canonicalization; one
-    partial-agg shuffle after scan-fused extraction."""
-    from easyner_spark.operators.webtext import anchor_terms
-
-    out = anchor_terms(_synth_anchor_pages(spark, sf_dir))
-    return out.select("dst_host", "term", F.col("n").cast("long").alias("n"))
 
 
 def q_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1820,58 +1290,6 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text_dedup",
         F.col("n_paras").cast("long").alias("n_paras"),
         F.col("n_kept").cast("long").alias("n_kept"),
-    )
-
-
-def q_crawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl scheduling: next-fetch priority per url = host authority
-    (PageRank over the extracted link graph) x recrawl change activity
-    (crawl_delta 'changed' count). The composition a crawler actually
-    ranks its frontier by — authority says the host matters, change
-    rate says the page goes stale. 50 urls x ~10 fetches on hosts
-    overlapping the link graph's tail (missing hosts take the 0.15
-    teleport floor via the left join)."""
-    from easyner_spark.operators.graph import pagerank
-    from easyner_spark.operators.webtext import crawl_delta, host_graph
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    key = did % 50
-    host = F.concat(F.lit("site"), (key % 37).cast("string"), F.lit(".example.net"))
-    pages = d.select(
-        F.concat(F.lit("https://"), host, F.lit("/p/"), key.cast("string")).alias("url"),
-        host.alias("host"),
-        (F.lit(1700000000) + did).cast("long").alias("warc_ts"),
-        F.concat(
-            F.lit("page content "),
-            key.cast("string"),
-            F.when(did % 7 < 2, F.lit(" v2")).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    freq = (
-        crawl_delta(pages)
-        .groupBy("url", "host")
-        .agg(
-            F.count(F.lit(1)).alias("n_fetches"),
-            F.sum(
-                F.when(F.col("change") == "changed", F.lit(1)).otherwise(F.lit(0))
-            ).alias("n_changed"),
-        )
-    )
-    hg = host_graph(_synth_html_pages(spark, sf_dir))
-    ranks = pagerank(
-        hg.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst")),
-        iters=3,
-    ).withColumnRenamed("node", "host")
-    out = freq.join(F.broadcast(ranks), "host", "left")
-    return out.select(
-        "url",
-        F.col("n_fetches").cast("long").alias("n_fetches"),
-        F.col("n_changed").cast("long").alias("n_changed"),
-        F.round(
-            F.coalesce(F.col("rank"), F.lit(0.15)) * (F.lit(1) + F.col("n_changed")),
-            6,
-        ).alias("priority"),
     )
 
 
@@ -1945,57 +1363,9 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_docs(_docs(spark, sf_dir), max_tokens=32, overlap=8, min_tail=5)
 
 
-def q_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UT1-style domain blocklist over the skewed synthetic urls:
-    blocking 'example.org' must also block 'blog.example.org' (parent-
-    domain semantics via the host_suffixes codegen array — zero
-    shuffle, zero join for a literal list). The oracle decides
-    membership by an INDEPENDENT formulation (exact-or-'.'-suffix
-    LIKE), so the suffix-array construction itself is under test."""
-    from easyner_spark.operators.webtext import url_blocklist_filter
-
-    blocked = ("example.org", "hub.example.com", "site5.example.net")
-    return url_blocklist_filter(_synth_url_pages(spark, sf_dir), blocked).select(
-        "doc_id", "url"
-    )
-
-
-_ROBOTS_RULES = [
-    # longest-match demo on the hot host: /p/1* disallowed EXCEPT the
-    # longer /p/11* allow carve-out; /p/13 is an exact-length tie
-    # (allow must win per RFC 9309)
-    ("hub.example.com", "disallow", "/p/1"),
-    ("hub.example.com", "allow", "/p/11"),
-    ("hub.example.com", "disallow", "/p/2"),
-    ("hub.example.com", "allow", "/p/13"),
-    ("hub.example.com", "disallow", "/p/13"),
-    # whole-host block via the empty prefix
-    ("blog.example.org", "disallow", ""),
-    # explicit allow-everything host
-    ("site3.example.net", "allow", "/"),
-    # rule that matches nothing on its host
-    ("site5.example.net", "disallow", "/q"),
-]
-
-
-def q_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REP politeness verdicts over the skewed synthetic urls:
-    longest-match, allow-on-tie, empty-prefix host block, rule-less
-    hosts allowed. Host-keyed join is AQE-decided (skew hazard
-    documented in webtext.robots_verdict); winner is a min-of-struct
-    partial agg on the url key."""
-    from easyner_spark.operators.webtext import robots_verdict
-
-    rules = spark.createDataFrame(
-        _ROBOTS_RULES, "host string, directive string, path_prefix string"
-    )
-    return robots_verdict(_synth_url_pages(spark, sf_dir), rules)
-
-
 # Closed 23-entity synthetic KG shared by the kg_negatives /
 # kg_random_walks / kg_degree_stats queries AND their oracles — one
-# definition per side so the Spark/SQL pairs cannot drift (the
-# _ANCHORS_PREFIX pattern).
+# definition per side so the Spark/SQL pairs cannot drift.
 _KG_EDGES_SQL = """SELECT 'e' || (doc_id % 23) AS a,
     'e' || ((doc_id * 7 + 3) % 23) AS b
   FROM documents
@@ -2790,60 +2160,6 @@ def q_kg_property_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TEMPLATE_PAGES_SQL = """SELECT 'https://site' || (doc_id % 7)
-      || '.example.net/p/' || doc_id AS url,
-    regexp_replace(text, ' a ', chr(10), 'g')
-      || chr(10) || 'copyright site ' || (doc_id % 7)
-      || (CASE WHEN doc_id % 2 = 0
-          THEN chr(10) || 'subscribe now' ELSE '' END) AS text
-  FROM documents"""
-
-
-def _template_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> 7-host pages with an engineered 100% per-host
-    footer ('copyright site K') and a ~50% promo line on top of the
-    senticized unique body paragraphs (twin of _TEMPLATE_PAGES_SQL)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    hid = (did % 7).cast("string")
-    url = F.concat(
-        F.lit("https://site"), hid, F.lit(".example.net/p/"), did.cast("string")
-    )
-    text = F.concat(
-        F.regexp_replace("text", " a ", "\n"),
-        F.lit("\ncopyright site "),
-        hid,
-        F.when(did % 2 == 0, F.lit("\nsubscribe now")).otherwise(F.lit("")),
-    )
-    return d.select(url.alias("url"), text.alias("text"))
-
-
-def q_host_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host template mining (webtext.host_templates): paragraphs
-    on >= 40% of a host's pages — the engineered footer (100%) and
-    promo (~50%) lines surface; unique body paragraphs do not.
-    Integer cross-multiply gate, min(struct) collapse, no floats."""
-    from easyner_spark.operators.webtext import host_templates
-
-    return host_templates(
-        _template_pages(spark, sf_dir), min_host_pages=3, min_frac_pct=40
-    )
-
-
-def q_template_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Detect -> strip composed end-to-end: every host's template
-    paragraphs anti-joined out of every page of that host (digests
-    cross the exchange, not text), texts rebuilt in paragraph order."""
-    from easyner_spark.operators.webtext import (
-        host_templates,
-        strip_host_templates,
-    )
-
-    pages = _template_pages(spark, sf_dir)
-    tmpl = host_templates(pages, min_host_pages=3, min_frac_pct=40)
-    return strip_host_templates(pages, tmpl)
-
-
 def _kg_rank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold triples + deterministic filtered negatives (kg_negatives
     k=3, slot-deduped), every candidate scored by the md5-32 micro-unit
@@ -2895,110 +2211,6 @@ def q_kg_rank_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranking_summary(ranking_eval(_kg_rank_candidates(spark, sf_dir)))
 
 
-def q_bitext(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional bitext mining over deterministic 3-page translation
-    clusters (doc_id div 3; langs en/de/fr by doc_id mod 3): sentences
-    of cross-language page pairs aligned by index under the 50%
-    sentence-count gate — the parallel-data product hreflang_clusters
-    exists to feed."""
-    from easyner_spark.operators.webtext import bitext_candidates
-
-    sents = _sentences(spark, sf_dir)
-    did = F.col("url").cast("long")
-    lang = (
-        F.when(did % 3 == 0, F.lit("en"))
-        .when(did % 3 == 1, F.lit("de"))
-        .otherwise(F.lit("fr"))
-    )
-    s = sents.select(
-        "url",
-        lang.alias("lang"),
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        "sentence",
-    )
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    clusters = d.select(
-        F.col("doc_id").cast("string").alias("node"),
-        F.concat(F.lit("g"), F.expr("doc_id div 3").cast("string")).alias(
-            "cluster"
-        ),
-    )
-    return bitext_candidates(s, clusters, max_count_diff_pct=50)
-
-
-def q_mirror_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-host mirror detection over deterministic 40-host pages
-    (doc_id % 40) where mirror-h<K> re-serves host h<K>'s even-doc_id
-    pages verbatim: every (h<K>, mirror-h<K>) pair flags at 100%
-    containment of the mirror's distinct content set; digest-count cap
-    and integer cross-multiply gate, no floats."""
-    from easyner_spark.operators.webtext import mirror_hosts
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    hid = (did % 40).cast("string")
-    base = d.select(
-        F.concat(
-            F.lit("http://h"), hid, F.lit(".example.org/p/"),
-            did.cast("string"),
-        ).alias("url"),
-        "text",
-    )
-    mirr = d.where(did % 2 == 0).select(
-        F.concat(
-            F.lit("http://mirror-h"), hid, F.lit(".example.org/p/"),
-            did.cast("string"),
-        ).alias("url"),
-        "text",
-    )
-    return mirror_hosts(base.unionByName(mirr))
-
-
-def q_url_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-URL equivalence classes over deterministic alias
-    evidence: per-doc url variants (utm param / www. / trailing slash
-    by doc_id % 3) that fold onto one base by normalization, every
-    5th page declaring a rel=canonical to one of 7 shared hubs
-    (bridging ~14 base classes each), every 11th url reached by a
-    redirect hop — all closed through the shared components engine."""
-    from easyner_spark.operators.webtext import url_equivalence
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    hid = (did % 13).cast("string")
-    pid = (did % 97).cast("string")
-    base = F.concat(F.lit("https://h"), hid, F.lit(".example.org/a/"), pid)
-    url = (
-        F.when(did % 3 == 0, F.concat(base, F.lit("?utm_source=mail")))
-        .when(
-            did % 3 == 1,
-            F.concat(
-                F.lit("https://www.h"), hid, F.lit(".example.org/a/"), pid
-            ),
-        )
-        .otherwise(F.concat(base, F.lit("/")))
-    )
-    html = F.when(
-        did % 5 == 0,
-        F.concat(
-            F.lit(
-                '<html><head><link rel="canonical"'
-                ' href="https://hub.example.org/c/'
-            ),
-            (did % 7).cast("string"),
-            F.lit('"></head></html>'),
-        ),
-    ).otherwise(F.lit("<html><head></head></html>"))
-    pages = d.select(url.alias("url"), html.alias("html"))
-    redirects = d.where(did % 11 == 0).select(
-        F.concat(
-            F.lit("https://old.example.org/r/"), did.cast("string")
-        ).alias("src"),
-        base.alias("dst"),
-    )
-    return url_equivalence(pages, redirects)
-
-
 def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment (syndication) detection: every 7th doc
     re-served inside a portal wrapper (id + 500000, chrome words
@@ -3019,179 +2231,6 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return containment_pairs(d.unionByName(portals), k=5)
-
-
-def _table_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> pages whose html carries a 2-row infobox table
-    (type/host facts from doc_id residues) plus, on every 4th page, a
-    3-column layout table the infobox arity gate must skip (twin of
-    _TABLE_PAGES_SQL)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    html = F.concat(
-        F.lit('<html><table class="infobox"><tr><th>type</th><td>t'),
-        (did % 6).cast("string"),
-        F.lit("</td></tr><tr><th>host</th><td>h"),
-        (did % 13).cast("string"),
-        F.lit("</td></tr></table>"),
-        F.when(
-            did % 4 == 0,
-            F.concat(
-                F.lit("<table><tr><td>x"),
-                (did % 3).cast("string"),
-                F.lit("</td><td>y</td><td>z</td></tr></table>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    return d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-
-
-_TABLE_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  '<html><table class="infobox"><tr><th>type</th><td>t' || (doc_id % 6)
-  || '</td></tr><tr><th>host</th><td>h' || (doc_id % 13)
-  || '</td></tr></table>'
-  || (CASE WHEN doc_id % 4 = 0
-      THEN '<table><tr><td>x' || (doc_id % 3)
-           || '</td><td>y</td><td>z</td></tr></table>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-
-
-def q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell HTML table extraction (webtext.extract_tables): three
-    stacked posexplodes over scan-fused regexp_extract_all, zero
-    shuffle; indices 0-based document order."""
-    from easyner_spark.operators.webtext import extract_tables
-
-    return extract_tables(_table_pages(spark, sf_dir))
-
-
-def q_infobox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Infobox key-value extraction (webtext.infobox_pairs): the
-    arity-2 gate keeps the 2-cell fact rows and skips every 4th
-    page's 3-column layout table."""
-    from easyner_spark.operators.webtext import infobox_pairs
-
-    return infobox_pairs(_table_pages(spark, sf_dir))
-
-
-def _sameas_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared sameAs synthesis (twin: _SAMEAS_PAGES_SQL): every 2nd
-    page a 2-target array (wiki + wikidata keyed by doc_id div 5, so
-    5-page groups share authorities), every 5th the single-string
-    form."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    g = F.expr("doc_id div 5").cast("string")
-    block = (
-        F.when(
-            did % 2 == 0,
-            F.concat(
-                F.lit('<script type="application/ld+json">'
-                      '{"@type": "Person", "name": "Entity '),
-                g,
-                F.lit('", "sameAs": ["https://wiki.example/E'),
-                g,
-                F.lit('", "https://data.example/Q'),
-                g,
-                F.lit('"]}</script>'),
-            ),
-        )
-        .when(
-            did % 5 == 0,
-            F.concat(
-                F.lit('<script type="application/ld+json">'
-                      '{"@type": "Organization",'
-                      ' "sameAs": "https://data.example/Q'),
-                g,
-                F.lit('"}</script>'),
-            ),
-        )
-        .otherwise(F.lit(""))
-    )
-    return d.select(
-        F.concat(F.lit("u"), s).alias("url"),
-        F.concat(F.lit("<html>"), block, F.lit("</html>")).alias("html"),
-    )
-
-
-def q_sameas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sameAs alignment edges over the shared synthesis — both
-    declaration forms value-checked."""
-    from easyner_spark.operators.webtext import extract_sameas
-
-    return extract_sameas(_sameas_pages(spark, sf_dir))
-
-
-def q_sameas_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-NLP entity merging over the shared sameAs synthesis: the
-    5-page authority groups collapse into one entity class each
-    (pages + their wiki/wikidata authorities, min-url canonical)
-    through the shared components engine."""
-    from easyner_spark.operators.webtext import sameas_clusters
-
-    return sameas_clusters(_sameas_pages(spark, sf_dir))
-
-
-def _pagination_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-page article series synthesis (doc_id div 4): interior pages
-    declare both rel=prev and rel=next, heads only next, tails only
-    prev; carries the document text for assembly (twin:
-    _pagination_oracle's pages_sql)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    g = F.expr("doc_id div 4").cast("string")
-    k = did % 4
-    base = F.concat(F.lit("https://p.example/s"), g, F.lit("/p"))
-    url = F.concat(base, k.cast("string"))
-    prev_el = F.when(
-        k > 0,
-        F.concat(F.lit('<link rel="prev" href="'), base,
-                 (k - 1).cast("string"), F.lit('">')),
-    ).otherwise(F.lit(""))
-    next_el = F.when(
-        k < 3,
-        F.concat(F.lit('<link rel="next" href="'), base,
-                 (k + 1).cast("string"), F.lit('">')),
-    ).otherwise(F.lit(""))
-    return d.select(
-        url.alias("url"),
-        F.concat(F.lit("<html><head>"), prev_el, next_el,
-                 F.lit("</head></html>")).alias("html"),
-        "text",
-    )
-
-
-def q_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pagination-series reconstruction over the shared 4-page series
-    synthesis — every page lands in its series at its exact page_ord
-    via the pointer-doubling walk."""
-    from easyner_spark.operators.webtext import pagination_series
-
-    return pagination_series(_pagination_pages(spark, sf_dir), max_pages=4)
-
-
-def q_series_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pagination capstone composed end-to-end: reconstruct the
-    4-page series, then concatenate each series' page texts in
-    page_ord order into one document (125-ish assembled articles at
-    sf0.01, n_pages = 4 each)."""
-    from easyner_spark.operators.webtext import (
-        assemble_series,
-        pagination_series,
-    )
-
-    pages = _pagination_pages(spark, sf_dir)
-    series = pagination_series(pages, max_pages=4)
-    return assemble_series(pages, series)
 
 
 def q_edge_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3389,80 +2428,6 @@ def q_numeric_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return numeric_facts(d.select("doc_id", text.alias("text")))
 
 
-def q_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outline extraction over deterministic page structure: one h1
-    per page, (doc_id % 4) h2 sections each followed by an h3, and an
-    empty h4 the emptiness gate drops."""
-    from easyner_spark.operators.webtext import extract_headings
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    # NB: Spark's sequence(1, 0) yields a DESCENDING [1, 0], so the
-    # zero-section case must be an explicit empty array
-    idxs = F.when(
-        did % 4 > 0, F.sequence(F.lit(1), (did % 4).cast("int"))
-    ).otherwise(F.array().cast("array<int>"))
-    sections = F.concat_ws(
-        "",
-        F.transform(
-            idxs,
-            lambda i: F.concat(
-                F.lit("<h2>section "), i.cast("string"),
-                F.lit("</h2><p>body</p><h3>notes "), i.cast("string"),
-                F.lit("</h3>"),
-            ),
-        ),
-    )
-    html = F.concat(
-        F.lit("<html><h1>doc "), s, F.lit("</h1>"),
-        sections,
-        F.lit("<h4>  </h4></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), s).alias("url"), html.alias("html")
-    )
-    return extract_headings(pages)
-
-
-def q_html_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """List extraction over deterministic structure: a 3-item nav
-    <ul> on every page plus a (doc_id % 3)-item ranked <ol>, one item
-    empty on every 6th page (dropped, positions kept)."""
-    from easyner_spark.operators.webtext import extract_lists
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    idxs = F.when(
-        did % 3 > 0, F.sequence(F.lit(1), (did % 3).cast("int"))
-    ).otherwise(F.array().cast("array<int>"))
-    ol = F.concat_ws(
-        "",
-        F.transform(
-            idxs,
-            lambda i: F.concat(
-                F.lit("<li>rank "), i.cast("string"), F.lit(" item</li>")
-            ),
-        ),
-    )
-    html = F.concat(
-        F.lit('<html><ul class="nav"><li>Home</li><li>Docs '),
-        s,
-        F.lit("</li>"),
-        F.when(did % 6 == 0, F.lit("<li> </li>")).otherwise(
-            F.lit("<li>Contact</li>")
-        ),
-        F.lit("</ul><ol>"),
-        ol,
-        F.lit("</ol></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), s).alias("url"), html.alias("html")
-    )
-    return extract_lists(pages)
-
-
 def q_ntriples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KG's interop export: the real extraction chain's distinct
     edges serialized as W3C N-Triples lines (byte-wise percent-encoded
@@ -3511,39 +2476,6 @@ def q_entity_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return entity_labels(linked, comp)
-
-
-def q_social(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Social-profile extraction over deterministic outlinks: every
-    page a twitter (x.com on odd docs) + github profile keyed by
-    doc_id div 3 (identity evidence shared by 3-page groups), every
-    4th a youtube @handle, plus a non-social link ignored."""
-    from easyner_spark.operators.webtext import social_profiles
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    g = F.expr("doc_id div 3").cast("string")
-    tw_host = F.when(did % 2 == 0, F.lit("twitter.com")).otherwise(
-        F.lit("x.com")
-    )
-    html = F.concat(
-        F.lit('<html><a href="https://'),
-        tw_host,
-        F.lit("/Org"), g, F.lit('">t</a>'),
-        F.lit('<a href="https://github.com/org-'), g, F.lit('">g</a>'),
-        F.when(
-            did % 4 == 0,
-            F.concat(F.lit('<a href="https://youtube.com/@org'), g,
-                     F.lit('">y</a>')),
-        ).otherwise(F.lit("")),
-        F.lit('<a href="https://example.org/x">n</a></html>'),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://h"), (did % 7).cast("string"),
-                 F.lit(".example.org/p/"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    return social_profiles(pages)
 
 
 def q_contacts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3674,41 +2606,6 @@ def q_mined_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return isa_closure(edges, max_depth=16)
 
 
-def q_definitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Glossary extraction over deterministic <dl> synthesis: every
-    page defines (doc_id % 4 + 1) terms; every 5th page adds an
-    orphan <dt> (no following <dd>, contributes nothing)."""
-    from easyner_spark.operators.webtext import extract_definitions
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    idxs = F.sequence(F.lit(1), (did % 4 + 1).cast("int"))
-    defs = F.concat_ws(
-        "",
-        F.transform(
-            idxs,
-            lambda i: F.concat(
-                F.lit("<dt>Term "), i.cast("string"),
-                F.lit("-"), (did % 9).cast("string"),
-                F.lit("</dt> <dd>meaning "), i.cast("string"),
-                F.lit(" of group "), (did % 9).cast("string"),
-                F.lit("</dd>"),
-            ),
-        ),
-    )
-    html = F.concat(
-        F.lit("<html><dl>"),
-        defs,
-        F.when(did % 5 == 0, F.lit("<dt>orphan</dt>")).otherwise(F.lit("")),
-        F.lit("</dl></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    return extract_definitions(pages)
-
-
 def q_host_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host language mixture composing the REAL lang_id
     predictions over the documents table with a deterministic 7-host
@@ -3728,237 +2625,6 @@ def q_host_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_lang_mix(rows)
 
 
-def q_definition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The glossary-to-KG composition: extract_definitions over <dl>
-    terms rotating through the alias dictionary, linked by the same
-    broadcast primary-alias join the NEL layer uses — (url, term,
-    entity_id, definition) definition-grade facts; 'window' stays
-    unlinked ('' id, the NEL miss contract)."""
-    from easyner_spark.operators.nel import primary_alias
-    from easyner_spark.operators.webtext import extract_definitions
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    term = F.element_at(
-        F.array(F.lit("hash"), F.lit("merge"), F.lit("spark"),
-                F.lit("window"), F.lit("sort table")),
-        (did % 5 + 1).cast("int"),
-    )
-    html = F.concat(
-        F.lit("<html><dl><dt>"), term,
-        F.lit("</dt><dd>meaning of "), term,
-        F.lit(" in doc "), did.cast("string"),
-        F.lit("</dd></dl></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    defs = extract_definitions(pages)
-    pa = primary_alias(_alias_df(spark)).select(
-        F.col("term").alias("_t"), F.col("ID")
-    )
-    return (
-        defs.join(F.broadcast(pa), defs["term"] == pa["_t"], "left")
-        .select(
-            "url",
-            "term",
-            F.coalesce(F.col("ID"), F.lit("")).alias("entity_id"),
-            "definition",
-        )
-    )
-
-
-def q_amp_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMP-variant folding composed end-to-end: every 2nd page
-    declares an amphtml mirror (root-relative on every 4th); the
-    edges feed url_equivalence so page + AMP variant land in one
-    canonical class."""
-    from easyner_spark.operators.webtext import (
-        extract_amphtml,
-        url_equivalence,
-    )
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    amp = F.when(
-        did % 4 == 0, F.concat(F.lit('<link rel="amphtml" href="/amp/'), s,
-                               F.lit('">')),
-    ).otherwise(
-        F.concat(F.lit('<link rel="amphtml" href="https://m'),
-                 (did % 7).cast("string"), F.lit(".example.org/amp/"), s,
-                 F.lit('">')),
-    )
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(did % 2 == 0, amp).otherwise(F.lit("")),
-        F.lit("</head></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://m"), (did % 7).cast("string"),
-                 F.lit(".example.org/p/"), s).alias("url"),
-        html.alias("html"),
-    )
-    return url_equivalence(pages, extract_amphtml(pages))
-
-
-def q_jsonld_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed-fact pulls over mixed JSON-LD blocks: Event blocks
-    (startDate + location) on even docs, Product blocks (price) on
-    odd — one generic puller, the block's @type as class context."""
-    from easyner_spark.operators.webtext import jsonld_fields
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    block = F.when(
-        did % 2 == 0,
-        F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Event", "name": "ev '),
-            s,
-            F.lit('", "startDate": "2026-0'),
-            (did % 9 + 1).cast("string"),
-            F.lit('-01", "location": "City '),
-            (did % 13).cast("string"),
-            F.lit('"}</script>'),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Product", "name": "w '),
-            s,
-            F.lit('", "price": "'),
-            (did % 90 + 10).cast("string"),
-            F.lit('.50"}</script>'),
-        )
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), s).alias("url"),
-        F.concat(F.lit("<html>"), block, F.lit("</html>")).alias("html"),
-    )
-    return jsonld_fields(pages)
-
-
-def q_anchor_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-rel classification over rotating rel variants: nofollow /
-    ugc sponsored / noopener / no rel — the follow flag the link graph
-    filters on before rank flows."""
-    from easyner_spark.operators.webtext import anchor_rels
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    rel = (
-        F.when(did % 4 == 0, F.lit(' rel="nofollow"'))
-        .when(did % 4 == 1, F.lit(' rel="ugc sponsored"'))
-        .when(did % 4 == 2, F.lit(' rel="noopener"'))
-        .otherwise(F.lit(""))
-    )
-    html = F.concat(
-        F.lit('<html><a href="https://t'), (did % 9).cast("string"),
-        F.lit(".example.org/x/"), s, F.lit('"'), rel,
-        F.lit(">out</a></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://a"), (did % 5).cast("string"),
-                 F.lit(".example.org/p/"), s).alias("url"),
-        html.alias("html"),
-    )
-    return anchor_rels(pages)
-
-
-def q_declarations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-declared page metadata over 4 variants: full declarations
-    (rotating lang), lang-only, charset-only, and nothing — the
-    declared side of the declared-vs-detected language QA pair."""
-    from easyner_spark.operators.webtext import page_declarations
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    lang = F.element_at(
-        F.array(F.lit("en"), F.lit("de"), F.lit("fr"), F.lit("sv")),
-        (did % 4 + 1).cast("int"),
-    )
-    html = (
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit('<html lang="'), lang,
-                F.lit('"><head><meta charset="utf-8">'
-                      '<meta property="og:locale" content="'),
-                lang, F.lit('_x"></head></html>'),
-            ),
-        )
-        .when(
-            did % 3 == 1,
-            F.concat(F.lit('<html lang="'), lang, F.lit('"><p>x</p></html>')),
-        )
-        .otherwise(
-            F.when(
-                did % 2 == 0,
-                F.lit('<html><meta charset="iso-8859-1"></html>'),
-            ).otherwise(F.lit("<html><p>none</p></html>"))
-        )
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    return page_declarations(pages)
-
-
-def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL path-template profile over 11 hosts x 3 engineered path
-    shapes: numeric post ids fold to '/post/{N}/comments', md5-derived
-    12-hex segments to '/s/{H}', and a literal '/about' stays
-    itself — the crawler-trap / URL-space map."""
-    from easyner_spark.operators.webtext import url_templates
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    path = (
-        F.when(did % 3 == 0,
-               F.concat(F.lit("/post/"), did.cast("string"),
-                        F.lit("/comments")))
-        .when(did % 3 == 1,
-              F.concat(F.lit("/s/"),
-                       F.substring(F.md5(did.cast("string")), 1, 12)))
-        .otherwise(F.lit("/about"))
-    )
-    pages = d.select(
-        F.concat(F.lit("https://t"), (did % 11).cast("string"),
-                 F.lit(".example.org"), path).alias("url")
-    )
-    return url_templates(pages)
-
-
-def q_template_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trap-aware capping over the same path-shape synthesis as
-    url_templates: the numeric post template is capped at 5 urls per
-    host (md5-rank deterministic pick), the literal /about and
-    singleton hex pages pass through."""
-    from easyner_spark.operators.webtext import template_cap
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    path = (
-        F.when(did % 3 == 0,
-               F.concat(F.lit("/post/"), did.cast("string"),
-                        F.lit("/comments")))
-        .when(did % 3 == 1,
-              F.concat(F.lit("/s/"),
-                       F.substring(F.md5(did.cast("string")), 1, 12)))
-        .otherwise(F.lit("/about"))
-    )
-    pages = d.select(
-        F.concat(F.lit("https://t"), (did % 11).cast("string"),
-                 F.lit(".example.org"), path).alias("url")
-    )
-    return template_cap(pages, cap=5)
-
-
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer readability counts over the real documents table:
     sentence / word / vowel-group-syllable counts and micro-unit
@@ -3967,445 +2633,6 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return readability_counts(d)
-
-
-def q_surface_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host structured-data adoption over 7 hosts with engineered
-    rates: jsonld on even docs, og on every 3rd, a table on every 5th,
-    title on all but every 11th — exact floor-division percentages
-    per host, one algebraic rollup."""
-    from easyner_spark.operators.webtext import host_surface_profile
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    html = F.concat(
-        F.lit("<html>"),
-        F.when(did % 11 != 0, F.lit("<title>t</title>")).otherwise(F.lit("")),
-        F.when(
-            did % 2 == 0,
-            F.lit('<script type="application/ld+json">{"@type":"T"}'
-                  "</script>"),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 3 == 0,
-            F.lit('<meta property="og:title" content="x">'),
-        ).otherwise(F.lit("")),
-        F.when(did % 5 == 0, F.lit("<table></table>")).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    pages = d.select(
-        F.concat(
-            F.lit("https://h"), (did % 7).cast("string"),
-            F.lit(".example.org/p/"), did.cast("string"),
-        ).alias("url"),
-        html.alias("html"),
-    )
-    return host_surface_profile(pages)
-
-
-def q_page_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The declared-entity layer over mixed-surface synthesis: every
-    page has a <title>, every 2nd an og card (title+type), every 3rd
-    a JSON-LD Person — all surfaces kept with provenance so
-    cross-source disagreement stays visible."""
-    from easyner_spark.operators.webtext import page_entities
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    html = F.concat(
-        F.lit("<html><head><title>Doc "),
-        s,
-        F.lit("</title>"),
-        F.when(
-            did % 2 == 0,
-            F.concat(
-                F.lit('<meta property="og:title" content="doc '),
-                s,
-                F.lit(' card"><meta property="og:type" content="article">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</head>"),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit('<script type="application/ld+json">'
-                      '{"@type": "Person", "name": "Entity '),
-                s,
-                F.lit('"}</script>'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), s).alias("url"), html.alias("html")
-    )
-    return page_entities(pages)
-
-
-def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """meta-refresh redirect extraction over four page variants:
-    absolute target (hard 0s move), root-relative, relative (resolved
-    against the declaring page's directory), and no refresh at all —
-    delays value-checked as BIGINT seconds."""
-    from easyner_spark.operators.webtext import extract_refresh
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    url = F.concat(
-        F.lit("https://h"), (did % 13).cast("string"),
-        F.lit(".example.org/d/"), s,
-    )
-    el = (
-        F.when(
-            did % 4 == 0,
-            F.concat(
-                F.lit('<meta http-equiv="refresh" content="0;'
-                      'url=https://h'),
-                (did % 13).cast("string"),
-                F.lit('.example.org/canonical">'),
-            ),
-        )
-        .when(
-            did % 4 == 1,
-            F.concat(
-                F.lit('<meta http-equiv="refresh" content="'),
-                (did % 9).cast("string"),
-                F.lit(';url=/home">'),
-            ),
-        )
-        .when(
-            did % 4 == 2,
-            F.concat(
-                F.lit('<meta http-equiv="refresh" content="'),
-                (did % 9).cast("string"),
-                F.lit("; url=next"),
-                (did % 5).cast("string"),
-                F.lit('.html">'),
-            ),
-        )
-        .otherwise(F.lit(""))
-    )
-    pages = d.select(
-        url.alias("url"),
-        F.concat(F.lit("<html>"), el, F.lit("</html>")).alias("html"),
-    )
-    return extract_refresh(pages)
-
-
-def q_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-LD extraction over deterministic ld+json synthesis: every
-    page declares an Article block (name = 'doc <id>'); every 4th
-    page adds a Person block missing its name — case-preserving
-    types, plain <script> ignored by the typed-wrapper contract."""
-    from easyner_spark.operators.webtext import extract_jsonld
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    html = F.concat(
-        F.lit('<html><script type="application/ld+json">'
-              '{"@context": "https://schema.org", "@type": "Article",'
-              ' "name": "doc '),
-        s,
-        F.lit('"}</script><script>var x = 1;</script>'),
-        F.when(
-            did % 4 == 0,
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Person"}</script>'),
-        ).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), s).alias("url"), html.alias("html")
-    )
-    return extract_jsonld(pages)
-
-
-def _breadcrumb_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic BreadcrumbList synthesis: every doc not divisible
-    by 7 declares a 3-level trail Home > Section <id%5> > Doc <id>;
-    every 4th doc prepends an Article decoy block (type gate); every
-    10th doc repeats the trail's top two levels in a second block
-    (distinct-url voting)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    sec = (did % 5).cast("string")
-    trail1 = F.concat(
-        F.lit('<script type="application/ld+json">'
-              '{"@type": "BreadcrumbList", "itemListElement": ['
-              '{"@type": "ListItem", "position": 1, "name": "Home"}, '
-              '{"@type": "ListItem", "position": 2, "name": "Section '),
-        sec,
-        F.lit('"}, {"@type": "ListItem", "position": 3, "name": "Doc '),
-        s,
-        F.lit('"}]}</script>'),
-    )
-    trail2 = F.concat(
-        F.lit('<script type="application/ld+json">'
-              '{"@type": "BreadcrumbList", "itemListElement": ['
-              '{"@type": "ListItem", "position": 1, "name": "Home"}, '
-              '{"@type": "ListItem", "position": 2, "name": "Section '),
-        sec,
-        F.lit('"}]}</script>'),
-    )
-    html = F.concat(
-        F.lit("<html>"),
-        F.when(
-            did % 4 == 0,
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Article", "name": "decoy"}</script>'),
-        ).otherwise(F.lit("")),
-        F.when(did % 7 != 0, trail1).otherwise(F.lit("")),
-        F.when((did % 10 == 0) & (did % 7 != 0), trail2).otherwise(
-            F.lit("")
-        ),
-        F.lit("</html>"),
-    )
-    return d.select(F.concat(F.lit("u"), s).alias("url"), html.alias("html"))
-
-
-_BREADCRUMB_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 4 = 0
-      THEN '<script type="application/ld+json">{"@type": "Article", "name": "decoy"}</script>'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 7 != 0
-      THEN '<script type="application/ld+json">{"@type": "BreadcrumbList", "itemListElement": [{"@type": "ListItem", "position": 1, "name": "Home"}, {"@type": "ListItem", "position": 2, "name": "Section '
-        || (doc_id % 5)
-        || '"}, {"@type": "ListItem", "position": 3, "name": "Doc '
-        || doc_id || '"}]}</script>'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 10 = 0 AND doc_id % 7 != 0
-      THEN '<script type="application/ld+json">{"@type": "BreadcrumbList", "itemListElement": [{"@type": "ListItem", "position": 1, "name": "Home"}, {"@type": "ListItem", "position": 2, "name": "Section '
-        || (doc_id % 5) || '"}]}</script>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-
-
-def q_breadcrumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Site-declared taxonomy trails (schema.org BreadcrumbList) over
-    the deterministic synthesis: type gate vs Article decoys, 1-based
-    positions, case-preserved names, block_idx in document order."""
-    from easyner_spark.operators.webtext import extract_breadcrumbs
-
-    return extract_breadcrumbs(_breadcrumb_pages(spark, sf_dir))
-
-
-def q_breadcrumb_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide declared-taxonomy rollup: adjacent trail pairs,
-    lowercased, distinct-url voting (the every-10th second block must
-    NOT double-count its page)."""
-    from easyner_spark.operators.webtext import (
-        breadcrumb_edges,
-        extract_breadcrumbs,
-    )
-
-    return breadcrumb_edges(
-        extract_breadcrumbs(_breadcrumb_pages(spark, sf_dir))
-    ).select("parent", "child", "n_pages")
-
-
-def _section_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic sectioned-page synthesis: every 6th doc opens
-    with a preamble list (NULL heading); docs not divisible by 7 get
-    '<h2>Topic <id%5></h2>' with a two-item list; every 3rd of those
-    adds a second '<h3>Tools</h3>' section."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    html = F.concat(
-        F.lit("<html>"),
-        F.when(
-            did % 6 == 0,
-            F.concat(
-                F.lit("<ul><li>pre"), (did % 4).cast("string"),
-                F.lit("</li></ul>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 7 != 0,
-            F.concat(
-                F.lit("<h2>Topic "), (did % 5).cast("string"),
-                F.lit("</h2><p>x</p><ul><li>Item "),
-                (did % 11).cast("string"),
-                F.lit("</li><li>Item "), (did % 13).cast("string"),
-                F.lit("</li></ul>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            (did % 3 == 0) & (did % 7 != 0),
-            F.concat(
-                F.lit("<h3>Tools</h3><ol><li>tool"),
-                (did % 3).cast("string"), F.lit("</li></ol>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    return d.select(F.concat(F.lit("u"), s).alias("url"), html.alias("html"))
-
-
-_SECTION_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 6 = 0
-      THEN '<ul><li>pre' || (doc_id % 4) || '</li></ul>' ELSE '' END)
-  || (CASE WHEN doc_id % 7 != 0
-      THEN '<h2>Topic ' || (doc_id % 5) || '</h2><p>x</p><ul><li>Item '
-        || (doc_id % 11) || '</li><li>Item ' || (doc_id % 13)
-        || '</li></ul>'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 3 = 0 AND doc_id % 7 != 0
-      THEN '<h3>Tools</h3><ol><li>tool' || (doc_id % 3) || '</li></ol>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-
-
-def q_section_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Section-scoped list extraction: nearest-preceding-heading
-    association, preamble lists with NULL heading, document-order
-    section/item indexes."""
-    from easyner_spark.operators.webtext import section_lists
-
-    return section_lists(_section_pages(spark, sf_dir))
-
-
-def q_list_memberships(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide (topic, member) rollup over section_lists — the
-    list-page member-of feeder for the mined taxonomy."""
-    from easyner_spark.operators.webtext import (
-        list_memberships,
-        section_lists,
-    )
-
-    return list_memberships(
-        section_lists(_section_pages(spark, sf_dir))
-    ).select("topic", "member", "n_pages")
-
-
-def q_soft404(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soft-404 detection over deterministic synthesis: every 9th doc
-    is a short canonical error page (phrase + short -> soft404), every
-    13th has the phrase buried in real-length text (hit flagged, gated
-    by length), every 11th url carries a not-found path segment."""
-    from easyner_spark.operators.webtext import soft404_signals
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    url = F.concat(
-        F.lit("https://h"),
-        (did % 20).cast("string"),
-        F.lit(".example.com/"),
-        F.when(did % 11 == 0, F.lit("not-found/")).otherwise(F.lit("p/")),
-        s,
-    )
-    txt = (
-        F.when(
-            did % 9 == 0,
-            F.lit("Error 404 page not found. The page does not exist."),
-        )
-        .when(did % 13 == 0, F.concat(F.col("text"), F.lit(" page not found")))
-        .otherwise(F.col("text"))
-    )
-    pages = d.select(url.alias("url"), txt.alias("text"))
-    return soft404_signals(pages).select(
-        "url",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        "hit_phrase",
-        "url_404",
-        "is_soft404",
-    )
-
-
-def q_opengraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Open Graph extraction over deterministic head synthesis: every
-    page carries og:title/og:type (4 rotating types), every 3rd page
-    an og:image gallery of 2 — repeated props emit one row each,
-    document order pinned by prop_idx."""
-    from easyner_spark.operators.webtext import extract_opengraph
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    html = F.concat(
-        F.lit('<html><head><meta property="og:title" content="doc '),
-        did.cast("string"),
-        F.lit('"><meta property="og:type" content="'),
-        F.element_at(
-            F.array(
-                F.lit("article"), F.lit("profile"),
-                F.lit("video"), F.lit("website"),
-            ),
-            (did % 4 + 1).cast("int"),
-        ),
-        F.lit('">'),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit('<meta property="og:image" content="https://img.example/'),
-                did.cast("string"),
-                F.lit('a.png"><meta property="og:image"'),
-                F.lit(' content="https://img.example/'),
-                did.cast("string"),
-                F.lit('b.png">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</head></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    return extract_opengraph(pages)
-
-
-def q_feed_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS/Atom feed parsing over deterministic feed synthesis: even
-    doc_ids serve RSS (2 items, every 5th missing pubDate), odd serve
-    Atom (2 entries) — case-insensitive tags, case-preserving
-    content, linkless items dropped."""
-    from easyner_spark.operators.webtext import feed_parse
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    rss = F.concat(
-        F.lit("<rss><channel><title>chan</title><item><title>Post A"),
-        s,
-        F.lit("</title><link>https://f.example/"),
-        s,
-        F.lit("/a</link>"),
-        F.when(
-            did % 5 != 0,
-            F.concat(F.lit("<pubDate>2026-01-0"), (did % 9 + 1).cast("string"), F.lit("</pubDate>")),
-        ).otherwise(F.lit("")),
-        F.lit("</item><item><link>https://f.example/"),
-        s,
-        F.lit("/b</link></item></channel></rss>"),
-    )
-    atom = F.concat(
-        F.lit('<feed><title>f</title><entry><title>Entry A'),
-        s,
-        F.lit('</title><link href="https://f.example/'),
-        s,
-        F.lit('/a"/><updated>2026-02-0'),
-        (did % 9 + 1).cast("string"),
-        F.lit('</updated></entry><entry><link href="https://f.example/'),
-        s,
-        F.lit('/b"/></entry></feed>'),
-    )
-    feeds = d.select(
-        F.concat(F.lit("https://f.example/feed/"), s).alias("url"),
-        F.when(did % 2 == 0, rss).otherwise(atom).alias("feed_xml"),
-    )
-    return feed_parse(feeds)
 
 
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4443,15 +2670,6 @@ def q_lang_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_quantiles(d, "lang", F.length("text"))
 
 
-def q_alias_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-phrase alias mining over the multi-word anchor corpus:
-    hub aliases ('the hub portal') earn multi-host confidence, self-
-    link phrases stay single-host and fail the gate."""
-    from easyner_spark.operators.webtext import alias_candidates
-
-    return alias_candidates(_synth_anchor_pages(spark, sf_dir))
-
-
 def q_seed_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from topic seeds {e1, e5} over the closed
     KG — teleport mass restricted to the seeds, 3 iterations, the
@@ -4482,123 +2700,6 @@ def q_ner_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mention_txt",
         "right_ctx",
     )
-
-
-def _doclinks_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pages synthesis for the page-graph queries (doc_links,
-    page_rank) — SQL twin: _DOCLINKS_PREFIX."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://site"),
-        (did % 37).cast("string"),
-        F.lit(".example.net/p/"),
-        did.cast("string"),
-    )
-    html = F.concat(
-        F.lit('<html><body><a href="https://site'),
-        ((did + 1) % 37).cast("string"),
-        F.lit(".example.net/p/"),
-        (did + 1).cast("string"),
-        F.lit('">a</a><a href="/p/'),
-        (did % 100).cast("string"),
-        F.lit('">b</a><a href="sub/page'),
-        (did % 7).cast("string"),
-        F.lit('">c</a><a href="//site'),
-        (did % 37).cast("string"),
-        F.lit(".example.net/p/"),
-        (did + 2).cast("string"),
-        F.lit('">d</a>'),
-        F.when(did % 5 == 0, F.lit('<a href="mailto:x@y.z">m</a>')).otherwise(
-            F.lit("")
-        ),
-        F.lit("</body></html>"),
-    ).cast("binary")
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-def q_doc_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-level link graph with href RESOLUTION value-checked on
-    every branch (keep_external=True): absolute link to the next doc's
-    exact url, root-relative '/p/<did%100>' (in-corpus only when the
-    target doc shares the host), relative 'sub/page<k>' (resolves
-    against the /p/ base dir, always external), protocol-relative
-    (inherits the base scheme), mailto dropped."""
-    from easyner_spark.operators.webtext import doc_link_graph
-
-    return doc_link_graph(_doclinks_pages(spark, sf_dir), keep_external=True)
-
-
-def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unified discovery frontier over the doc-link pages + a sitemap
-    announcing each page's protocol-relative link target (engineered
-    link+sitemap corroboration) + an RSS feed announcing the absolute
-    link target on every 3rd doc (link+feed) or a feed-only item —
-    parsed by the REAL sitemap_parse/feed_parse, merged with full
-    href resolution, anti-joined against the corpus, provenance
-    rolled up."""
-    from easyner_spark.operators.webtext import (
-        crawl_frontier,
-        feed_parse,
-        sitemap_parse,
-    )
-
-    pages = _doclinks_pages(spark, sf_dir)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    sm_xml = F.concat(
-        F.lit("<urlset><url><loc>https://site"),
-        (did % 37).cast("string"),
-        F.lit(".example.net/p/"),
-        (did + 2).cast("string"),
-        F.lit("</loc></url></urlset>"),
-    )
-    sitemaps = d.select(
-        F.concat(F.lit("https://site"), (did % 37).cast("string"),
-                 F.lit(".example.net/sitemap.xml")).alias("url"),
-        sm_xml.alias("sitemap_xml"),
-    )
-    fd_target = F.when(
-        did % 3 == 0,
-        F.concat(F.lit("https://site"), ((did + 1) % 37).cast("string"),
-                 F.lit(".example.net/p/"), (did + 1).cast("string")),
-    ).otherwise(F.concat(F.lit("https://feeds.example.org/item/"), s))
-    feeds = d.select(
-        F.concat(F.lit("https://feeds.example.org/f/"), s).alias("url"),
-        F.concat(
-            F.lit("<rss><channel><item><link>"),
-            fd_target,
-            F.lit("</link></item></channel></rss>"),
-        ).alias("feed_xml"),
-    )
-    extra = [
-        (sitemap_parse(sitemaps).select(F.col("loc").alias("url")), "sitemap"),
-        (feed_parse(feeds).select(F.col("link").alias("url")), "feed"),
-    ]
-    return crawl_frontier(pages, extra)
-
-
-def q_surt_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURT index keys over the skewed synthetic urls (CDX ordering:
-    reversed host labels + path) — hub.example.com and its would-be
-    subdomains all sort under 'com,example,hub)'."""
-    from easyner_spark.operators.webtext import surt_key
-
-    p = _synth_url_pages(spark, sf_dir)
-    return p.select("doc_id", "url", surt_key("url").alias("surt"))
-
-
-def q_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-level PageRank over the in-corpus page graph (the
-    Common-Crawl page-rank product): href resolution -> membership
-    join -> fixed-iteration PageRank. Uses doc_link_edges (the
-    count-free edge path) so no n_links rollup shuffle is paid just
-    to be dropped."""
-    from easyner_spark.operators.graph import pagerank
-    from easyner_spark.operators.webtext import doc_link_edges
-
-    return pagerank(doc_link_edges(_doclinks_pages(spark, sf_dir)), iters=3)
 
 
 def q_crawl_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4639,203 +2740,6 @@ def q_polite_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
         "host string, crawl_delay_s long",
     )
     return polite_quota(wts, delays, budget=10_000, epoch_seconds=3600)
-
-
-def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap announcements from robots.txt (global directive — one
-    inside a named-agent group still counts): even docs announce two
-    sitemaps, odd docs one valid plus a spec-invalid relative value
-    (dropped); case-insensitive name, trailing comments stripped."""
-    from easyner_spark.operators.webtext import robots_sitemaps
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    body = F.concat_ws(
-        "\n",
-        F.lit("User-agent: *"),
-        F.lit("Disallow: /tmp"),
-        F.concat(F.lit("Sitemap: https://r"), s,
-                 F.lit(".example.org/sitemap.xml")),
-        F.lit("User-agent: bot"),
-        F.lit("Disallow: /"),
-        F.when(
-            did % 2 == 0,
-            F.concat(F.lit("sitemap: https://r"), s, F.lit(".example.org/news"),
-                     (did % 4).cast("string"), F.lit(".xml   # extra")),
-        ).otherwise(F.lit("Sitemap: /relative-dropped")),
-    )
-    robots = d.select(
-        F.concat(F.lit("https://r"), s, F.lit(".example.org/robots.txt")).alias(
-            "url"
-        ),
-        body.alias("robots_txt"),
-    )
-    return robots_sitemaps(robots)
-
-
-def q_sitemap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap-index parsing over multi-line shard announcements: two
-    children per index (one with lastmod), plus a spec-invalid
-    loc-less block dropped."""
-    from easyner_spark.operators.webtext import sitemap_index_parse
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    h = (did % 11).cast("string")
-    xml = F.concat(
-        F.lit("<sitemapindex>\n<sitemap>\n  <loc>https://s"),
-        h,
-        F.lit(".example.org/sm-"),
-        did.cast("string"),
-        F.lit("-a.xml</loc>\n  <lastmod>2026-0"),
-        ((did % 9) + 1).cast("string"),
-        F.lit("-05</lastmod>\n</sitemap>\n<sitemap><loc>https://s"),
-        h,
-        F.lit(".example.org/sm-"),
-        did.cast("string"),
-        F.lit("-b.xml</loc></sitemap>\n"
-              "<sitemap><lastmod>2026-01-01</lastmod></sitemap>\n"
-              "</sitemapindex>"),
-    )
-    indexes = d.select(
-        F.concat(F.lit("https://s"), h, F.lit(".example.org/smi-"),
-                 did.cast("string"), F.lit(".xml")).alias("url"),
-        xml.alias("sitemap_xml"),
-    )
-    return sitemap_index_parse(indexes)
-
-
-def q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """robots.txt parsing over 13 synthetic hosts: named-agent blocks
-    dropped, '*' block kept, comments stripped (incl. trailing),
-    case-insensitive directive names, empty Disallow no-op dropped,
-    Crawl-delay captured — the raw-bytes front of the politeness
-    chain (parse -> robots_verdict -> polite_quota)."""
-    from easyner_spark.operators.webtext import parse_robots
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    h = (did % 13).cast("string")
-    body = F.concat_ws(
-        "\n",
-        F.concat(F.lit("# robots for host "), h),
-        F.lit("User-agent: Googlebot"),
-        F.lit("Disallow: /private"),
-        F.lit("User-agent: *"),
-        F.concat(F.lit("Disallow: /tmp"), h),
-        F.concat(F.lit("Allow: /tmp"), h, F.lit("/ok   # carve-out")),
-        F.concat(F.lit("Crawl-delay: "), ((did % 13) + 1).cast("string")),
-        F.lit("Disallow:"),
-        F.concat(F.lit("DISALLOW: /x"), ((did % 13) % 3).cast("string")),
-    )
-    robots = d.where(did < 13).select(
-        F.concat(F.lit("https://r"), h, F.lit(".example.org/robots.txt")).alias(
-            "url"
-        ),
-        body.alias("robots_txt"),
-    )
-    return parse_robots(robots)
-
-
-def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap parsing over multi-line XML bodies: one entry with
-    lastmod, one without, one spec-invalid (no <loc>, dropped) —
-    block-wise matching so lastmod never leaks across entries."""
-    from easyner_spark.operators.webtext import sitemap_parse
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    h = (did % 11).cast("string")
-    xml = F.concat(
-        F.lit("<urlset>\n<url>\n  <loc>https://s"),
-        h,
-        F.lit(".example.org/p/"),
-        did.cast("string"),
-        F.lit("</loc>\n  <lastmod>2026-0"),
-        ((did % 9) + 1).cast("string"),
-        F.lit("-01</lastmod>\n</url>\n<url><loc>https://s"),
-        h,
-        F.lit(".example.org/q/"),
-        (did * 3).cast("string"),
-        F.lit("</loc></url>\n<url><lastmod>2026-01-01</lastmod></url>\n</urlset>"),
-    )
-    sitemaps = d.select(
-        F.concat(F.lit("https://s"), h, F.lit(".example.org/sitemap.xml")).alias(
-            "url"
-        ),
-        xml.alias("sitemap_xml"),
-    )
-    return sitemap_parse(sitemaps)
-
-
-def q_meta_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-level robots directives over five content variants:
-    absent tag, 'noindex', mixed-case 'NOINDEX, nofollow', 'none'
-    (= both), and an explicit 'index, follow'."""
-    from easyner_spark.operators.webtext import meta_robots
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    content = (
-        F.when(did % 5 == 1, F.lit('<meta name="robots" content="noindex">'))
-        .when(
-            did % 5 == 2,
-            F.lit('<meta name="robots" content="NOINDEX, nofollow">'),
-        )
-        .when(did % 5 == 3, F.lit('<meta name="robots" content="none">'))
-        .when(
-            did % 5 == 4,
-            F.lit('<meta name="robots" content="index, follow">'),
-        )
-        .otherwise(F.lit(""))
-    )
-    pages = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        F.concat(F.lit("<html><head>"), content, F.lit("</head></html>"))
-        .cast("binary")
-        .alias("html"),
-    )
-    return meta_robots(pages)
-
-
-def q_hreflang_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Translation clusters over declared hreflang alternates: groups
-    of 4 pages star onto their head, every 8th head chains to the
-    next group's head (one-sided + chained declarations both merge —
-    the components closure handles what naive pairwise grouping
-    can't)."""
-    from easyner_spark.operators.webtext import hreflang_clusters
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    lang = (
-        F.when(did % 4 == 0, F.lit("en"))
-        .when(did % 4 == 1, F.lit("sv"))
-        .when(did % 4 == 2, F.lit("de"))
-        .otherwise(F.lit("fr"))
-    )
-    html = F.concat(
-        F.lit('<html><head><link rel="alternate" hreflang="'),
-        lang,
-        F.lit('" href="u'),
-        (did - did % 4).cast("string"),
-        F.lit('">'),
-        F.when(
-            did % 8 == 0,
-            F.concat(
-                F.lit('<link rel="alternate" hreflang="x-default" href="u'),
-                (did + 4).cast("string"),
-                F.lit('">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</head></html>"),
-    ).cast("binary")
-    pages = d.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    return hreflang_clusters(pages)
 
 
 def q_kg_node_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4898,31 +2802,6 @@ def q_kg_node_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_stale_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Announced-newer-than-fetched recrawl targets: the sitemap
-    lastmod (month did%9+1) vs the corpus fetch date (month did%7+1),
-    compared as ISO strings — same month sorts fresh (day 01 < 15).
-    The /q/ announcements never joined (never fetched: frontier's
-    job); closes the incremental-recrawl triad with sitemap_frontier
-    and crawl_delta."""
-    from easyner_spark.operators.webtext import stale_announcements
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    meta = d.select(
-        F.concat(
-            F.lit("https://s"),
-            (did % 11).cast("string"),
-            F.lit(".example.org/p/"),
-            did.cast("string"),
-        ).alias("url"),
-        F.concat(
-            F.lit("2026-0"), ((did % 7) + 1).cast("string"), F.lit("-15")
-        ).alias("fetch_date"),
-    )
-    return stale_announcements(q_sitemap_urls(spark, sf_dir), meta)
-
-
 def q_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact stratified eval-set selection: exactly 200 documents,
     apportioned across languages proportionally (Hamilton quotas),
@@ -4948,48 +2827,6 @@ def q_entity_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mention_lc", (F.col("url").cast("long") % 5).alias("epoch")
     )
     return entity_bursts(m, entity_col="mention_lc", epoch_col="epoch")
-
-
-def q_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head-metadata extraction: every 4th page titleless, every 5th
-    uses uppercase TITLE tags (case-insensitivity via lower()), every
-    2nd carries a meta description, every 3rd declares a rel=canonical
-    onto the hub mirror (so effective_url folds recrawl variants)."""
-    from easyner_spark.operators.webtext import extract_meta
-
-    base = _synth_url_pages(spark, sf_dir)
-    did = F.col("doc_id")
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(did % 4 == 0, F.lit("")).otherwise(
-            F.concat(
-                F.when(did % 5 == 0, F.lit("<TITLE> ")).otherwise(F.lit("<title> ")),
-                F.lit("Doc "),
-                (did % 211).cast("string"),
-                F.when(did % 5 == 0, F.lit(" </TITLE>")).otherwise(
-                    F.lit(" </title>")
-                ),
-            )
-        ),
-        F.when(
-            did % 2 == 0,
-            F.concat(
-                F.lit('<meta name="description" content="summary '),
-                (did % 50).cast("string"),
-                F.lit('">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit('<link rel="canonical" href="https://hub.example.com/c/'),
-                (did % 97).cast("string"),
-                F.lit('">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</head><body>x</body></html>"),
-    ).cast("binary")
-    return extract_meta(base.withColumn("html", html))
 
 
 def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6287,30 +4124,6 @@ def q_kg_pathsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-url recrawl scheduling (change rate x staleness, Cho-style)
-    over the 5-fetch synthetic recrawl history crawl_delta uses —
-    all-BIGINT rates and priorities."""
-    from easyner_spark.operators.webtext import recrawl_schedule
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://site"), (did % 100).cast("string"), F.lit(".example.net/p")
-    )
-    text = F.concat(
-        F.lit("page content "),
-        (did % 100).cast("string"),
-        F.when(did % 7 < 2, F.lit(" v2")).otherwise(F.lit("")),
-    )
-    pages = d.select(
-        url.alias("url"),
-        (F.lit(1700000000) + did).cast("long").alias("warc_ts"),
-        text.alias("text"),
-    )
-    return recrawl_schedule(pages)
-
-
 def q_kg_ego(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hop ego subgraph around n0/n5 over the rule KG: the induced
     edge set whose endpoints both lie within 2 undirected hops of a
@@ -6584,8 +4397,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The external driver value-checks the FIRST 50 registry entries (in
-# dict order) against the DuckDB oracles; the full 217 run locally via
-# tools/check_oracle.py. Lead the registry with this round's touched
+# dict order) against the DuckDB oracles; the full registry runs locally
+# via tools/check_oracle.py. Lead the registry with this round's touched
 # operators and the riskiest recent additions so the driver's window
 # covers them (VERDICT r3 #4); everything else keeps its historical
 # order behind them. queries() and oracle_sql() reorder identically,
@@ -6594,46 +4407,29 @@ _DRIVER_WINDOW_FIRST = [
     # --- round 5 window: the new FILTER query, then the oldest
     # never-driver-verified registry queries (VERDICT r4 #1 —
     # close the external ledger; the driver checks the FIRST 50) ---
-    "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk",
-    "dsir_weights", "dsir_sample", "semdedup", "kappa",
-    "host_topics",
-    "kg_link_predict",
-    "kg_kcore", "heavy_hitters", "kg_wl_labels", "kg_edge_history",
-    "pack_sequences", "length_quantiles", "bpe_merges", "bpe_token_counts",
-    "bpe_encode", "tokenized_pack", "host_stats", "url_dedup",
-    "resolve_redirects", "robots_rules", "html_meta", "entity_bursts",
-    "kg_random_walks", "walk_skipgrams", "kg_degree_stats", "kg_pattern",
-    "kg_violations", "host_templates", "template_strip", "kg_rank_eval",
-    "kg_rank_summary", "bitext", "mirror_hosts", "url_equivalence",
-    "containment", "html_tables", "infobox", "host_spam", "opengraph",
-    "feed_items", "crawl_frontier", "jsonld", "breadcrumbs",
-    "breadcrumb_edges", "soft404", "section_lists", "list_memberships",
-    "meta_refresh", "page_entities", "sameas", "sameas_entities",
-    "pagination",
+    "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk", "dsir_weights",
+    "dsir_sample", "semdedup", "kappa", "kg_link_predict", "kg_kcore",
+    "heavy_hitters", "kg_wl_labels", "kg_edge_history", "pack_sequences",
+    "length_quantiles", "bpe_merges", "bpe_token_counts", "bpe_encode",
+    "tokenized_pack", "entity_bursts", "kg_random_walks", "walk_skipgrams",
+    "kg_degree_stats", "kg_pattern", "kg_violations", "kg_rank_eval",
+    "kg_rank_summary", "containment",
     # --- remaining never-driver-verified (orders the tail so any
     # wider driver window keeps covering unchecked queries first) ---
-    "series_text", "surface_profile", "robots_sitemaps", "readability",
-    "url_templates", "template_cap", "edge_evidence", "edge_temporal",
-    "edge_negation", "edge_confidence", "acronyms", "quotes", "numeric_facts",
-    "headings", "html_lists", "ntriples", "entity_labels", "social",
-    "contacts", "geo", "copula_isa", "apposition", "mined_taxonomy",
-    "sitemap_index", "declarations", "definitions", "host_langs",
-    "definition_edges", "amp_fold", "jsonld_fields", "anchor_rels",
-    "compaction_plan", "lang_quantiles", "alias_candidates", "seed_expansion",
-    "ner_examples", "doc_links", "surt_index", "page_rank", "eval_split",
-    "robots_parse", "sitemap_urls", "meta_robots", "hreflang_clusters",
-    "kg_node_profile", "stale_pages", "latest_crawl", "host_graph",
-    "host_reciprocity", "quality_sample", "host_rank", "host_hits",
-    "anchor_terms", "crawl_delta", "crawl_priority", "name_match",
-    "fuzzy_link", "topic_id", "repeated_spans", "chunk_docs", "url_blocklist",
-    "mixture_sample", "deterministic_sample", "per_host_cap",
-    "word_repetition", "gopher_filters", "mojibake", "link_density",
-    "paragraph_langs", "pii_redact", "corpus_summary", "inverted_index",
-    "tfidf_sim", "label_centroids", "distinct_count", "length_histogram",
-    "sessionize", "asof_join", "event_rollup", "bm25_rank", "winnow_fps",
-    "winnow_dedup", "fuzzy_dedup_groups", "incremental_dedup",
-    "decontaminate", "ann_sq_topk", "warc_extract", "craft_iob2",
-    "flair_parse",
+    "readability", "edge_evidence", "edge_temporal", "edge_negation",
+    "edge_confidence", "acronyms", "quotes", "numeric_facts", "ntriples",
+    "entity_labels", "contacts", "geo", "copula_isa", "apposition",
+    "mined_taxonomy", "host_langs", "compaction_plan", "lang_quantiles",
+    "seed_expansion", "ner_examples", "eval_split", "kg_node_profile",
+    "latest_crawl", "quality_sample", "crawl_delta", "name_match",
+    "fuzzy_link", "topic_id", "repeated_spans", "chunk_docs", "mixture_sample",
+    "deterministic_sample", "per_host_cap", "word_repetition",
+    "gopher_filters", "mojibake", "paragraph_langs", "pii_redact",
+    "corpus_summary", "inverted_index", "tfidf_sim", "label_centroids",
+    "distinct_count", "length_histogram", "sessionize", "asof_join",
+    "event_rollup", "bm25_rank", "winnow_fps", "winnow_dedup",
+    "fuzzy_dedup_groups", "incremental_dedup", "decontaminate", "ann_sq_topk",
+    "warc_extract", "craft_iob2", "flair_parse",
 ]
 
 
@@ -6657,7 +4453,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fuse_claims": q_fuse_claims,
         "predicate_cardinality": q_predicate_cardinality,
         "entity_salience": q_entity_salience,
-        "host_cocitation": q_host_cocitation,
         "entity_types": q_entity_types,
         "isa_closure": q_isa_closure,
         "search_sentences": q_search_sentences,
@@ -6680,24 +4475,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_clustering": q_kg_clustering,
         "kg_modularity": q_kg_modularity,
         "kg_snapshot_diff": q_kg_snapshot_diff,
-        "host_trust": q_host_trust,
         "doc_keywords": q_doc_keywords,
         "kg_assortativity": q_kg_assortativity,
         "entity_merge_cands": q_entity_merge_cands,
-        "host_wrank": q_host_wrank,
         "kwic": q_kwic,
-        "citations": q_citations,
-        "dates": q_dates,
         "kg_window_cooc": q_kg_window_cooc,
         "kg_harmonic": q_kg_harmonic,
-        "microdata": q_microdata,
-        "unescape_text": q_unescape_text,
-        "host_scc": q_host_scc,
         "pronoun_links": q_pronoun_links,
         "passive_triples": q_passive_triples,
         "nominal_triples": q_nominal_triples,
         "kappa": q_kappa,
-        "host_topics": q_host_topics,
         "kg_link_predict": q_kg_link_predict,
         "kg_kcore": q_kg_kcore,
         "heavy_hitters": q_heavy_hitters,
@@ -6709,12 +4496,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_token_counts": q_bpe_token_counts,
         "bpe_encode": q_bpe_encode,
         "tokenized_pack": q_tokenized_pack,
-        "host_stats": q_host_stats,
         "host_skew": q_host_skew,
-        "url_dedup": q_url_dedup,
-        "resolve_redirects": q_resolve_redirects,
-        "robots_rules": q_robots_rules,
-        "html_meta": q_html_meta,
         "entity_bursts": q_entity_bursts,
         "kg_negatives": q_kg_negatives,
         "kg_rules": q_kg_rules,
@@ -6727,7 +4509,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_schema_graph": q_kg_schema_graph,
         "kg_metapath": q_kg_metapath,
         "kg_pathsim": q_kg_pathsim,
-        "recrawl_schedule": q_recrawl_schedule,
         "kg_align": q_kg_align,
         "temp_mixture": q_temp_mixture,
         "kg_pattern_optional": q_kg_pattern_optional,
@@ -6761,37 +4542,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pattern": q_kg_pattern,
         "kg_violations": q_kg_violations,
-        "host_templates": q_host_templates,
-        "template_strip": q_template_strip,
         "kg_rank_eval": q_kg_rank_eval,
         "kg_rank_summary": q_kg_rank_summary,
-        "bitext": q_bitext,
-        "mirror_hosts": q_mirror_hosts,
-        "url_equivalence": q_url_equivalence,
         "containment": q_containment,
-        "html_tables": q_html_tables,
-        "infobox": q_infobox,
-        "host_spam": q_host_spam,
-        "opengraph": q_opengraph,
-        "feed_items": q_feed_items,
-        "crawl_frontier": q_crawl_frontier,
-        "jsonld": q_jsonld,
-        "breadcrumbs": q_breadcrumbs,
-        "breadcrumb_edges": q_breadcrumb_edges,
-        "soft404": q_soft404,
-        "section_lists": q_section_lists,
-        "list_memberships": q_list_memberships,
-        "meta_refresh": q_meta_refresh,
-        "page_entities": q_page_entities,
-        "sameas": q_sameas,
-        "sameas_entities": q_sameas_entities,
-        "pagination": q_pagination,
-        "series_text": q_series_text,
-        "surface_profile": q_surface_profile,
-        "robots_sitemaps": q_robots_sitemaps,
         "readability": q_readability,
-        "url_templates": q_url_templates,
-        "template_cap": q_template_cap,
         "edge_evidence": q_edge_evidence,
         "edge_temporal": q_edge_temporal,
         "edge_negation": q_edge_negation,
@@ -6799,57 +4553,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "acronyms": q_acronyms,
         "quotes": q_quotes,
         "numeric_facts": q_numeric_facts,
-        "headings": q_headings,
-        "html_lists": q_html_lists,
         "ntriples": q_ntriples,
         "entity_labels": q_entity_labels,
-        "social": q_social,
         "contacts": q_contacts,
         "geo": q_geo,
         "copula_isa": q_copula_isa,
         "apposition": q_apposition,
         "mined_taxonomy": q_mined_taxonomy,
-        "sitemap_index": q_sitemap_index,
-        "declarations": q_declarations,
-        "definitions": q_definitions,
         "host_langs": q_host_langs,
-        "definition_edges": q_definition_edges,
-        "amp_fold": q_amp_fold,
-        "jsonld_fields": q_jsonld_fields,
-        "anchor_rels": q_anchor_rels,
         "compaction_plan": q_compaction_plan,
         "lang_quantiles": q_lang_quantiles,
-        "alias_candidates": q_alias_candidates,
         "seed_expansion": q_seed_expansion,
         "ner_examples": q_ner_examples,
-        "doc_links": q_doc_links,
-        "surt_index": q_surt_index,
-        "page_rank": q_page_rank,
         "crawl_quota": q_crawl_quota,
         "eval_split": q_eval_split,
         "polite_quota": q_polite_quota,
-        "robots_parse": q_robots_parse,
-        "sitemap_urls": q_sitemap_urls,
-        "meta_robots": q_meta_robots,
-        "hreflang_clusters": q_hreflang_clusters,
         "kg_node_profile": q_kg_node_profile,
-        "stale_pages": q_stale_pages,
         "latest_crawl": q_latest_crawl,
-        "host_graph": q_host_graph,
-        "host_reciprocity": q_host_reciprocity,
         "quality_sample": q_quality_sample,
-        "host_rank": q_host_rank,
-        "host_hits": q_host_hits,
-        "anchor_terms": q_anchor_terms,
         "crawl_delta": q_crawl_delta,
         "paragraph_dedup": q_paragraph_dedup,
-        "crawl_priority": q_crawl_priority,
         "name_match": q_name_match,
         "fuzzy_link": q_fuzzy_link,
         "topic_id": q_topic_id,
         "repeated_spans": q_repeated_spans,
         "chunk_docs": q_chunk_docs,
-        "url_blocklist": q_url_blocklist,
         "mixture_sample": q_mixture_sample,
         "deterministic_sample": q_deterministic_sample,
         "per_host_cap": q_per_host_cap,
@@ -6859,7 +4587,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_stats": q_text_stats,
         "lang_id": q_lang_id,
         "mojibake": q_mojibake,
-        "link_density": q_link_density,
         "paragraph_langs": q_paragraph_langs,
         "pii_redact": q_pii_redact,
         "corpus_summary": q_corpus_summary,
@@ -7579,44 +5306,6 @@ h AS (
 """
 
 
-def _redirects_oracle() -> str:
-    """q_resolve_redirects oracle: the synthetic functional redirect
-    graph (same doc_id % 10 rule) fed to the operator's module-local
-    recursive-CTE twin."""
-    from easyner_spark.operators.webtext import resolve_redirects_oracle_sql
-
-    cte = """r AS (
-  SELECT 'u' || doc_id AS url,
-         'u' || (CASE WHEN doc_id % 10 BETWEEN 1 AND 4 THEN doc_id - 1
-                      WHEN doc_id % 10 = 7 THEN doc_id + 1
-                      WHEN doc_id % 10 = 8 THEN doc_id - 1
-                      WHEN doc_id % 10 = 9 THEN doc_id END) AS target
-  FROM documents
-  WHERE doc_id % 10 IN (1, 2, 3, 4, 7, 8, 9)
-)"""
-    return resolve_redirects_oracle_sql(cte, max_steps=8)
-
-
-def _robots_oracle() -> str:
-    """q_robots_rules oracle: skewed-url synthesis + the _ROBOTS_RULES
-    literals fed to the operator's module-local SQL twin."""
-    from easyner_spark.operators.webtext import robots_verdict_oracle_sql
-
-    pages_sql = f"""SELECT (CASE WHEN doc_id % 13 = 0 THEN 'http' ELSE 'https' END)
-    || '://' || {_URL_HOST_CASE}
-    || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-    || '/p/' || doc_id AS url FROM documents"""
-    vals = ",\n    ".join(
-        f"('{h}', '{d}', '{p}')" for h, d, p in _ROBOTS_RULES
-    )
-    rules_sql = (
-        "SELECT * FROM (VALUES\n    "
-        + vals
-        + "\n  ) AS t(host, directive, path_prefix)"
-    )
-    return robots_verdict_oracle_sql(pages_sql, rules_sql)
-
-
 def _kg_violations_oracle() -> str:
     """q_kg_violations oracle: same constraints list over the shared
     engineered edge synthesis."""
@@ -7626,24 +5315,6 @@ def _kg_violations_oracle() -> str:
 
     return functional_violations_oracle_sql(
         f"WITH e AS ({_KG_FUNC_SQL})", _KG_CONSTRAINTS
-    )
-
-
-def _host_templates_oracle() -> str:
-    from easyner_spark.operators.webtext import host_templates_oracle_sql
-
-    return host_templates_oracle_sql(
-        _TEMPLATE_PAGES_SQL, min_host_pages=3, min_frac_pct=40
-    )
-
-
-def _template_strip_oracle() -> str:
-    from easyner_spark.operators.webtext import (
-        strip_host_templates_oracle_sql,
-    )
-
-    return strip_host_templates_oracle_sql(
-        _TEMPLATE_PAGES_SQL, min_host_pages=3, min_frac_pct=40
     )
 
 
@@ -7676,74 +5347,6 @@ FROM cand"""
     return ranking_eval_oracle_sql(cands)
 
 
-def _bitext_oracle() -> str:
-    """q_bitext oracle: the sentence prelude relabeled (url, lang) +
-    the deterministic doc_id div 3 cluster table, through the
-    operator's module-local SQL twin."""
-    from easyner_spark.operators.webtext import bitext_candidates_oracle_sql
-
-    sentences_sql = _PRELUDE + """
-SELECT doc_id::VARCHAR AS url,
-       CASE (doc_id % 3) WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-            ELSE 'fr' END AS lang,
-       sent_idx::BIGINT AS sent_idx, sentence
-FROM sentences
-"""
-    clusters_sql = (
-        "SELECT doc_id::VARCHAR AS node, "
-        "'g' || (doc_id // 3)::VARCHAR AS cluster FROM documents"
-    )
-    return bitext_candidates_oracle_sql(
-        sentences_sql, clusters_sql, max_count_diff_pct=50
-    )
-
-
-def _mirror_hosts_oracle() -> str:
-    """q_mirror_hosts oracle: the deterministic base+mirror page
-    synthesis through the operator's module-local SQL twin (oracle
-    groups on raw text where Spark groups on its sha2 digest)."""
-    from easyner_spark.operators.webtext import mirror_hosts_oracle_sql
-
-    pages_sql = """
-SELECT 'http://h' || (doc_id % 40)::VARCHAR || '.example.org/p/'
-         || doc_id::VARCHAR AS url, text
-FROM documents
-UNION ALL
-SELECT 'http://mirror-h' || (doc_id % 40)::VARCHAR || '.example.org/p/'
-         || doc_id::VARCHAR AS url, text
-FROM documents WHERE doc_id % 2 = 0
-"""
-    return mirror_hosts_oracle_sql(pages_sql)
-
-
-def _url_equivalence_oracle() -> str:
-    """q_url_equivalence oracle: the deterministic variant/canonical/
-    redirect synthesis through the operator's module-local twin (same
-    CANONICAL_RE, same canonical_url chain, min-label closure)."""
-    from easyner_spark.operators.webtext import url_equivalence_oracle_sql
-
-    pages_sql = """
-SELECT CASE WHEN doc_id % 3 = 0
-            THEN 'https://h' || (doc_id % 13) || '.example.org/a/'
-                 || (doc_id % 97) || '?utm_source=mail'
-            WHEN doc_id % 3 = 1
-            THEN 'https://www.h' || (doc_id % 13) || '.example.org/a/'
-                 || (doc_id % 97)
-            ELSE 'https://h' || (doc_id % 13) || '.example.org/a/'
-                 || (doc_id % 97) || '/' END AS url,
-       CASE WHEN doc_id % 5 = 0
-            THEN '<html><head><link rel="canonical" href="https://hub.example.org/c/'
-                 || (doc_id % 7) || '"></head></html>'
-            ELSE '<html><head></head></html>' END AS html
-FROM documents
-"""
-    redirects_sql = """SELECT
-    'https://old.example.org/r/' || doc_id AS src,
-    'https://h' || (doc_id % 13) || '.example.org/a/' || (doc_id % 97) AS dst
-  FROM documents WHERE doc_id % 11 = 0"""
-    return url_equivalence_oracle_sql(pages_sql, redirects_sql)
-
-
 def _containment_oracle() -> str:
     """q_containment oracle: the base + portal-wrapper synthesis
     through the operator's module-local twin (same \\w+ tokenizer,
@@ -7761,153 +5364,6 @@ FROM documents WHERE doc_id % 7 = 0
     return containment_pairs_oracle_sql(docs_sql, k=5)
 
 
-def _html_tables_oracle() -> str:
-    """q_html_tables oracle: the shared table-page synthesis through
-    the operator's module-local twin (same three regexes)."""
-    from easyner_spark.operators.webtext import extract_tables_oracle_sql
-
-    return extract_tables_oracle_sql(_TABLE_PAGES_SQL)
-
-
-def _infobox_oracle() -> str:
-    """q_infobox oracle: same synthesis through the arity-2 twin."""
-    from easyner_spark.operators.webtext import infobox_pairs_oracle_sql
-
-    return infobox_pairs_oracle_sql(_TABLE_PAGES_SQL)
-
-
-def _host_spam_oracle() -> str:
-    """q_host_spam oracle: the shared host-edge CTE chain through the
-    operator's module-local twin (BIGINT floor-division percentages)."""
-    from easyner_spark.operators.webtext import host_spam_signals_oracle_sql
-
-    return host_spam_signals_oracle_sql(_HOSTLINKS_CTE.rstrip().rstrip(","))
-
-
-def _opengraph_oracle() -> str:
-    """q_opengraph oracle: the same og head synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import extract_opengraph_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><head><meta property="og:title" content="doc ' || doc_id
-  || '"><meta property="og:type" content="'
-  || (CASE (doc_id % 4) WHEN 0 THEN 'article' WHEN 1 THEN 'profile'
-           WHEN 2 THEN 'video' ELSE 'website' END)
-  || '">'
-  || (CASE WHEN doc_id % 3 = 0
-      THEN '<meta property="og:image" content="https://img.example/'
-           || doc_id || 'a.png"><meta property="og:image"'
-           || ' content="https://img.example/' || doc_id || 'b.png">'
-      ELSE '' END)
-  || '</head></html>' AS html
-FROM documents
-"""
-    return extract_opengraph_oracle_sql(pages_sql)
-
-
-def _feed_items_oracle() -> str:
-    """q_feed_items oracle: the even-RSS / odd-Atom synthesis through
-    the operator's module-local twin."""
-    from easyner_spark.operators.webtext import feed_parse_oracle_sql
-
-    feeds_sql = """
-SELECT 'https://f.example/feed/' || doc_id AS url,
-  CASE WHEN doc_id % 2 = 0 THEN
-    '<rss><channel><title>chan</title><item><title>Post A' || doc_id
-    || '</title><link>https://f.example/' || doc_id || '/a</link>'
-    || (CASE WHEN doc_id % 5 != 0
-        THEN '<pubDate>2026-01-0' || (doc_id % 9 + 1) || '</pubDate>'
-        ELSE '' END)
-    || '</item><item><link>https://f.example/' || doc_id
-    || '/b</link></item></channel></rss>'
-  ELSE
-    '<feed><title>f</title><entry><title>Entry A' || doc_id
-    || '</title><link href="https://f.example/' || doc_id
-    || '/a"/><updated>2026-02-0' || (doc_id % 9 + 1)
-    || '</updated></entry><entry><link href="https://f.example/' || doc_id
-    || '/b"/></entry></feed>'
-  END AS feed_xml
-FROM documents
-"""
-    return feed_parse_oracle_sql(feeds_sql)
-
-
-def _crawl_frontier_oracle() -> str:
-    """q_crawl_frontier oracle: the doc-link prefix + sitemap/feed
-    parser twins as extra-source subqueries, through the operator's
-    module-local twin."""
-    from easyner_spark.operators.webtext import (
-        crawl_frontier_oracle_sql,
-        feed_parse_oracle_sql,
-        sitemap_parse_oracle_sql,
-    )
-
-    pages_sql = (
-        "SELECT 'https://site' || (doc_id % 37) || '.example.net/p/'"
-        " || doc_id AS url FROM documents"
-    )
-    sm_sql = """
-SELECT 'https://site' || (doc_id % 37) || '.example.net/sitemap.xml' AS url,
-  '<urlset><url><loc>https://site' || (doc_id % 37) || '.example.net/p/'
-  || (doc_id + 2) || '</loc></url></urlset>' AS sitemap_xml
-FROM documents
-"""
-    fd_sql = """
-SELECT 'https://feeds.example.org/f/' || doc_id AS url,
-  '<rss><channel><item><link>'
-  || (CASE WHEN doc_id % 3 = 0
-      THEN 'https://site' || ((doc_id + 1) % 37) || '.example.net/p/'
-           || (doc_id + 1)
-      ELSE 'https://feeds.example.org/item/' || doc_id END)
-  || '</link></item></channel></rss>' AS feed_xml
-FROM documents
-"""
-    return crawl_frontier_oracle_sql(
-        _DOCLINKS_PREFIX,
-        pages_sql,
-        [
-            (
-                f"SELECT loc AS url FROM ({sitemap_parse_oracle_sql(sm_sql)})",
-                "sitemap",
-            ),
-            (
-                f"SELECT link AS url FROM ({feed_parse_oracle_sql(fd_sql)})",
-                "feed",
-            ),
-        ],
-    )
-
-
-_TEMPLATE_PAGES_URL_SQL = """
-SELECT 'https://t' || (doc_id % 11) || '.example.org'
-  || (CASE WHEN doc_id % 3 = 0
-      THEN '/post/' || doc_id || '/comments'
-      WHEN doc_id % 3 = 1
-      THEN '/s/' || substr(md5(doc_id::VARCHAR), 1, 12)
-      ELSE '/about' END) AS url
-FROM documents
-"""
-
-
-def _url_templates_oracle() -> str:
-    """q_url_templates oracle: the shared path-shape synthesis through
-    the operator's module-local twin (md5 hex agrees byte-for-byte
-    across engines)."""
-    from easyner_spark.operators.webtext import url_templates_oracle_sql
-
-    return url_templates_oracle_sql(_TEMPLATE_PAGES_URL_SQL)
-
-
-def _template_cap_oracle() -> str:
-    """q_template_cap oracle: the same synthesis through the capping
-    twin (md5-rank pick agrees across engines)."""
-    from easyner_spark.operators.webtext import template_cap_oracle_sql
-
-    return template_cap_oracle_sql(_TEMPLATE_PAGES_URL_SQL, cap=5)
-
-
 def _readability_oracle() -> str:
     """q_readability oracle: the real documents table through the
     operator's module-local twin."""
@@ -7923,194 +5379,6 @@ def _readability_oracle() -> str:
         " words_per_sent_micro, syll_per_word_micro"
         f" FROM ({twin})"
     )
-
-
-def _robots_sitemaps_oracle() -> str:
-    """q_robots_sitemaps oracle: the same announcement synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.webtext import robots_sitemaps_oracle_sql
-
-    robots_sql = """
-SELECT 'https://r' || doc_id || '.example.org/robots.txt' AS url,
-  'User-agent: *' || chr(10)
-  || 'Disallow: /tmp' || chr(10)
-  || 'Sitemap: https://r' || doc_id || '.example.org/sitemap.xml' || chr(10)
-  || 'User-agent: bot' || chr(10)
-  || 'Disallow: /' || chr(10)
-  || (CASE WHEN doc_id % 2 = 0
-      THEN 'sitemap: https://r' || doc_id || '.example.org/news'
-           || (doc_id % 4) || '.xml   # extra'
-      ELSE 'Sitemap: /relative-dropped' END) AS robots_txt
-FROM documents
-"""
-    return robots_sitemaps_oracle_sql(robots_sql)
-
-
-def _anchor_rels_oracle() -> str:
-    """q_anchor_rels oracle: the rotating-rel synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import anchor_rels_oracle_sql
-
-    pages_sql = """
-SELECT 'https://a' || (doc_id % 5) || '.example.org/p/' || doc_id AS url,
-  '<html><a href="https://t' || (doc_id % 9) || '.example.org/x/'
-  || doc_id || '"'
-  || (CASE WHEN doc_id % 4 = 0 THEN ' rel="nofollow"'
-       WHEN doc_id % 4 = 1 THEN ' rel="ugc sponsored"'
-       WHEN doc_id % 4 = 2 THEN ' rel="noopener"'
-       ELSE '' END)
-  || '>out</a></html>' AS html
-FROM documents
-"""
-    return anchor_rels_oracle_sql(pages_sql)
-
-
-def _jsonld_fields_oracle() -> str:
-    """q_jsonld_fields oracle: the Event/Product synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import jsonld_fields_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 2 = 0
-      THEN '<script type="application/ld+json">{"@type": "Event", "name": "ev '
-           || doc_id || '", "startDate": "2026-0' || (doc_id % 9 + 1)
-           || '-01", "location": "City ' || (doc_id % 13) || '"}</script>'
-      ELSE '<script type="application/ld+json">{"@type": "Product", "name": "w '
-           || doc_id || '", "price": "' || (doc_id % 90 + 10)
-           || '.50"}</script>' END)
-  || '</html>' AS html
-FROM documents
-"""
-    return jsonld_fields_oracle_sql(pages_sql)
-
-
-_AMP_PAGES_SQL = """
-SELECT 'https://m' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-  '<html><head>'
-  || (CASE WHEN doc_id % 2 = 0 THEN
-        (CASE WHEN doc_id % 4 = 0
-          THEN '<link rel="amphtml" href="/amp/' || doc_id || '">'
-          ELSE '<link rel="amphtml" href="https://m' || (doc_id % 7)
-               || '.example.org/amp/' || doc_id || '">' END)
-      ELSE '' END)
-  || '</head></html>' AS html
-FROM documents
-"""
-
-
-def _amp_fold_oracle() -> str:
-    """q_amp_fold oracle: the amphtml twin as url_equivalence's
-    redirects subquery over the shared synthesis."""
-    from easyner_spark.operators.webtext import (
-        extract_amphtml_oracle_sql,
-        url_equivalence_oracle_sql,
-    )
-
-    return url_equivalence_oracle_sql(
-        _AMP_PAGES_SQL, extract_amphtml_oracle_sql(_AMP_PAGES_SQL)
-    )
-
-
-def _definition_edges_oracle() -> str:
-    """q_definition_edges oracle: the rotating-term <dl> synthesis
-    through the extraction twin, left-joined to the SAME ALIAS list
-    (primary-alias min(ID) fold) inlined as VALUES."""
-    from easyner_spark.operators.webtext import (
-        extract_definitions_oracle_sql,
-    )
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><dl><dt>'
-  || (CASE (doc_id % 5) WHEN 0 THEN 'hash' WHEN 1 THEN 'merge'
-       WHEN 2 THEN 'spark' WHEN 3 THEN 'window' ELSE 'sort table' END)
-  || '</dt><dd>meaning of '
-  || (CASE (doc_id % 5) WHEN 0 THEN 'hash' WHEN 1 THEN 'merge'
-       WHEN 2 THEN 'spark' WHEN 3 THEN 'window' ELSE 'sort table' END)
-  || ' in doc ' || doc_id || '</dd></dl></html>' AS html
-FROM documents
-"""
-    alias_values = ", ".join(f"('{t}', '{i}')" for t, i in ALIAS)
-    defs = extract_definitions_oracle_sql(pages_sql)
-    return f"""
-WITH dfs AS (SELECT * FROM ({defs})),
-al AS (SELECT term, min(id) AS id
-       FROM (VALUES {alias_values}) a(term, id) GROUP BY term)
-SELECT d.url, d.term, coalesce(al.id, '') AS entity_id, d.definition
-FROM dfs d LEFT JOIN al ON d.term = al.term
-"""
-
-
-def _definitions_oracle() -> str:
-    """q_definitions oracle: the same <dl> synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import (
-        extract_definitions_oracle_sql,
-    )
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><dl>'
-  || array_to_string(list_transform(range(1, (doc_id % 4 + 1) + 1),
-       i -> '<dt>Term ' || i || '-' || (doc_id % 9)
-            || '</dt> <dd>meaning ' || i || ' of group '
-            || (doc_id % 9) || '</dd>'), '')
-  || (CASE WHEN doc_id % 5 = 0 THEN '<dt>orphan</dt>' ELSE '' END)
-  || '</dl></html>' AS html
-FROM documents
-"""
-    return extract_definitions_oracle_sql(pages_sql)
-
-
-def _declarations_oracle() -> str:
-    """q_declarations oracle: the four-variant synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import page_declarations_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  (CASE WHEN doc_id % 3 = 0
-    THEN '<html lang="'
-      || (CASE (doc_id % 4) WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-           WHEN 2 THEN 'fr' ELSE 'sv' END)
-      || '"><head><meta charset="utf-8"><meta property="og:locale" content="'
-      || (CASE (doc_id % 4) WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-           WHEN 2 THEN 'fr' ELSE 'sv' END)
-      || '_x"></head></html>'
-   WHEN doc_id % 3 = 1
-    THEN '<html lang="'
-      || (CASE (doc_id % 4) WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-           WHEN 2 THEN 'fr' ELSE 'sv' END)
-      || '"><p>x</p></html>'
-   WHEN doc_id % 2 = 0
-    THEN '<html><meta charset="iso-8859-1"></html>'
-   ELSE '<html><p>none</p></html>' END) AS html
-FROM documents
-"""
-    return page_declarations_oracle_sql(pages_sql)
-
-
-def _sitemap_index_oracle() -> str:
-    """q_sitemap_index oracle: the shard-announcement synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.webtext import sitemap_index_parse_oracle_sql
-
-    indexes_sql = """
-SELECT 'https://s' || (doc_id % 11) || '.example.org/smi-' || doc_id
-         || '.xml' AS url,
-  '<sitemapindex>' || chr(10) || '<sitemap>' || chr(10)
-  || '  <loc>https://s' || (doc_id % 11) || '.example.org/sm-' || doc_id
-  || '-a.xml</loc>' || chr(10) || '  <lastmod>2026-0' || (doc_id % 9 + 1)
-  || '-05</lastmod>' || chr(10) || '</sitemap>' || chr(10)
-  || '<sitemap><loc>https://s' || (doc_id % 11) || '.example.org/sm-'
-  || doc_id || '-b.xml</loc></sitemap>' || chr(10)
-  || '<sitemap><lastmod>2026-01-01</lastmod></sitemap>' || chr(10)
-  || '</sitemapindex>' AS sitemap_xml
-FROM documents
-"""
-    return sitemap_index_parse_oracle_sql(indexes_sql)
 
 
 def _mined_taxonomy_oracle() -> str:
@@ -8211,27 +5479,6 @@ FROM documents
     return contact_facts_oracle_sql(docs_sql)
 
 
-def _social_oracle() -> str:
-    """q_social oracle: the deterministic profile-outlink synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.webtext import social_profiles_oracle_sql
-
-    pages_sql = """
-SELECT 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-  '<html><a href="https://'
-  || (CASE WHEN doc_id % 2 = 0 THEN 'twitter.com' ELSE 'x.com' END)
-  || '/Org' || (doc_id // 3) || '">t</a>'
-  || '<a href="https://github.com/org-' || (doc_id // 3) || '">g</a>'
-  || (CASE WHEN doc_id % 4 = 0
-      THEN '<a href="https://youtube.com/@org' || (doc_id // 3)
-           || '">y</a>'
-      ELSE '' END)
-  || '<a href="https://example.org/x">n</a></html>' AS html
-FROM documents
-"""
-    return social_profiles_oracle_sql(pages_sql)
-
-
 def _ntriples_oracle() -> str:
     """q_ntriples oracle: the prelude's distinct edge set through the
     serializer's module-local twin (prelude nested as a FROM subquery
@@ -8244,43 +5491,6 @@ def _ntriples_oracle() -> str:
         + " SELECT DISTINCT subj_id, pred, obj_id FROM triples)"
     )
     return to_ntriples_oracle_sql(edges_sql)
-
-
-def _html_lists_oracle() -> str:
-    """q_html_lists oracle: the same nav/ranked-list synthesis through
-    the operator's module-local twin."""
-    from easyner_spark.operators.webtext import extract_lists_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><ul class="nav"><li>Home</li><li>Docs ' || doc_id || '</li>'
-  || (CASE WHEN doc_id % 6 = 0 THEN '<li> </li>'
-      ELSE '<li>Contact</li>' END)
-  || '</ul><ol>'
-  || coalesce(array_to_string(list_transform(range(1, (doc_id % 3) + 1),
-       i -> '<li>rank ' || i || ' item</li>'), ''), '')
-  || '</ol></html>' AS html
-FROM documents
-"""
-    return extract_lists_oracle_sql(pages_sql)
-
-
-def _headings_oracle() -> str:
-    """q_headings oracle: the same deterministic outline synthesis
-    through the operator's module-local twin (range() is empty when
-    stop <= start, matching the Spark side's explicit empty array)."""
-    from easyner_spark.operators.webtext import extract_headings_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><h1>doc ' || doc_id || '</h1>'
-  || coalesce(array_to_string(list_transform(range(1, (doc_id % 4) + 1),
-       i -> '<h2>section ' || i || '</h2><p>body</p><h3>notes ' || i
-            || '</h3>'), ''), '')
-  || '<h4>  </h4></html>' AS html
-FROM documents
-"""
-    return extract_headings_oracle_sql(pages_sql)
 
 
 def _numeric_facts_oracle() -> str:
@@ -8349,222 +5559,6 @@ SELECT doc_id AS id,
 FROM documents
 """
     return acronym_pairs_oracle_sql(docs_sql)
-
-
-def _surface_profile_oracle() -> str:
-    """q_surface_profile oracle: the engineered-rates synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.webtext import (
-        host_surface_profile_oracle_sql,
-    )
-
-    pages_sql = """
-SELECT 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 11 != 0 THEN '<title>t</title>' ELSE '' END)
-  || (CASE WHEN doc_id % 2 = 0
-      THEN '<script type="application/ld+json">{"@type":"T"}</script>'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 3 = 0
-      THEN '<meta property="og:title" content="x">' ELSE '' END)
-  || (CASE WHEN doc_id % 5 = 0 THEN '<table></table>' ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-    return host_surface_profile_oracle_sql(pages_sql)
-
-
-_PAGINATION_PAGES_SQL = """
-SELECT 'https://p.example/s' || (doc_id // 4) || '/p' || (doc_id % 4) AS url,
-  '<html><head>'
-  || (CASE WHEN doc_id % 4 > 0
-      THEN '<link rel="prev" href="https://p.example/s' || (doc_id // 4)
-           || '/p' || (doc_id % 4 - 1) || '">'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 4 < 3
-      THEN '<link rel="next" href="https://p.example/s' || (doc_id // 4)
-           || '/p' || (doc_id % 4 + 1) || '">'
-      ELSE '' END)
-  || '</head></html>' AS html,
-  text
-FROM documents
-"""
-
-
-def _pagination_oracle() -> str:
-    """q_pagination oracle: the shared 4-page-series synthesis through
-    the operator's module-local twin (extraction + inverse edges +
-    pointer-doubling walk via the redirect twin's final_sql hook)."""
-    from easyner_spark.operators.webtext import pagination_series_oracle_sql
-
-    return pagination_series_oracle_sql(_PAGINATION_PAGES_SQL, max_pages=4)
-
-
-def _series_text_oracle() -> str:
-    """q_series_text oracle: the pagination twin nested as the series
-    subquery of the assembly twin over the same synthesis."""
-    from easyner_spark.operators.webtext import (
-        assemble_series_oracle_sql,
-        pagination_series_oracle_sql,
-    )
-
-    return assemble_series_oracle_sql(
-        f"SELECT url, text FROM ({_PAGINATION_PAGES_SQL})",
-        pagination_series_oracle_sql(_PAGINATION_PAGES_SQL, max_pages=4),
-    )
-
-
-_SAMEAS_PAGES_SQL = """
-SELECT 'u' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 2 = 0
-      THEN '<script type="application/ld+json">{"@type": "Person", "name": "Entity '
-           || (doc_id // 5) || '", "sameAs": ["https://wiki.example/E'
-           || (doc_id // 5) || '", "https://data.example/Q'
-           || (doc_id // 5) || '"]}</script>'
-      WHEN doc_id % 5 = 0
-      THEN '<script type="application/ld+json">{"@type": "Organization", "sameAs": "https://data.example/Q'
-           || (doc_id // 5) || '"}</script>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-
-
-def _sameas_oracle() -> str:
-    """q_sameas oracle: the shared synthesis through the operator's
-    module-local twin."""
-    from easyner_spark.operators.webtext import extract_sameas_oracle_sql
-
-    return extract_sameas_oracle_sql(_SAMEAS_PAGES_SQL)
-
-
-def _sameas_entities_oracle() -> str:
-    """q_sameas_entities oracle: the same synthesis through the
-    flat-CTE min-label closure twin."""
-    from easyner_spark.operators.webtext import sameas_clusters_oracle_sql
-
-    return sameas_clusters_oracle_sql(_SAMEAS_PAGES_SQL)
-
-
-def _page_entities_oracle() -> str:
-    """q_page_entities oracle: the mixed-surface synthesis through the
-    operator's module-local twin (which itself embeds the jsonld
-    twin)."""
-    from easyner_spark.operators.webtext import page_entities_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><head><title>Doc ' || doc_id || '</title>'
-  || (CASE WHEN doc_id % 2 = 0
-      THEN '<meta property="og:title" content="doc ' || doc_id
-           || ' card"><meta property="og:type" content="article">'
-      ELSE '' END)
-  || '</head>'
-  || (CASE WHEN doc_id % 3 = 0
-      THEN '<script type="application/ld+json">{"@type": "Person", "name": "Entity '
-           || doc_id || '"}</script>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-    return page_entities_oracle_sql(pages_sql)
-
-
-def _meta_refresh_oracle() -> str:
-    """q_meta_refresh oracle: the four-variant synthesis through the
-    operator's module-local twin (same element regex + href branches)."""
-    from easyner_spark.operators.webtext import extract_refresh_oracle_sql
-
-    pages_sql = """
-SELECT 'https://h' || (doc_id % 13) || '.example.org/d/' || doc_id AS url,
-  '<html>'
-  || (CASE WHEN doc_id % 4 = 0
-      THEN '<meta http-equiv="refresh" content="0;url=https://h'
-           || (doc_id % 13) || '.example.org/canonical">'
-      WHEN doc_id % 4 = 1
-      THEN '<meta http-equiv="refresh" content="' || (doc_id % 9)
-           || ';url=/home">'
-      WHEN doc_id % 4 = 2
-      THEN '<meta http-equiv="refresh" content="' || (doc_id % 9)
-           || '; url=next' || (doc_id % 5) || '.html">'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-    return extract_refresh_oracle_sql(pages_sql)
-
-
-def _jsonld_oracle() -> str:
-    """q_jsonld oracle: the Article/every-4th-Person synthesis through
-    the operator's module-local twin."""
-    from easyner_spark.operators.webtext import extract_jsonld_oracle_sql
-
-    pages_sql = """
-SELECT 'u' || doc_id AS url,
-  '<html><script type="application/ld+json">{"@context": "https://schema.org", "@type": "Article", "name": "doc '
-  || doc_id || '"}</script><script>var x = 1;</script>'
-  || (CASE WHEN doc_id % 4 = 0
-      THEN '<script type="application/ld+json">{"@type": "Person"}</script>'
-      ELSE '' END)
-  || '</html>' AS html
-FROM documents
-"""
-    return extract_jsonld_oracle_sql(pages_sql)
-
-
-def _breadcrumbs_oracle() -> str:
-    """q_breadcrumbs oracle: the BreadcrumbList synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import (
-        extract_breadcrumbs_oracle_sql,
-    )
-
-    return extract_breadcrumbs_oracle_sql(_BREADCRUMB_PAGES_SQL)
-
-
-def _breadcrumb_edges_oracle() -> str:
-    """q_breadcrumb_edges oracle: adjacency + distinct-url rollup in
-    SQL over the same synthesis."""
-    from easyner_spark.operators.webtext import breadcrumb_edges_oracle_sql
-
-    return breadcrumb_edges_oracle_sql(_BREADCRUMB_PAGES_SQL)
-
-
-def _section_lists_oracle() -> str:
-    """q_section_lists oracle: the sectioned-page synthesis through
-    the operator's module-local twin."""
-    from easyner_spark.operators.webtext import section_lists_oracle_sql
-
-    return section_lists_oracle_sql(_SECTION_PAGES_SQL)
-
-
-def _list_memberships_oracle() -> str:
-    """q_list_memberships oracle: the rollup twin over the same
-    synthesis."""
-    from easyner_spark.operators.webtext import list_memberships_oracle_sql
-
-    return list_memberships_oracle_sql(_SECTION_PAGES_SQL)
-
-
-def _soft404_oracle() -> str:
-    """q_soft404 oracle: the error-page synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import soft404_oracle_sql
-
-    pages_sql = """
-SELECT 'https://h' || (doc_id % 20) || '.example.com/'
-         || (CASE WHEN doc_id % 11 = 0 THEN 'not-found/' ELSE 'p/' END)
-         || doc_id AS url,
-  CASE WHEN doc_id % 9 = 0
-       THEN 'Error 404 page not found. The page does not exist.'
-       WHEN doc_id % 13 = 0 THEN text || ' page not found'
-       ELSE text END AS text
-FROM documents
-"""
-    return soft404_oracle_sql(pages_sql).replace(
-        "length(t) AS n_chars", "length(t)::BIGINT AS n_chars"
-    )
 
 
 def _kg_pattern_oracle() -> str:
@@ -8646,141 +5640,6 @@ def _kg_random_walks_oracle() -> str:
     )
 
 
-_DOCLINKS_PREFIX = """
-WITH d AS (
-  SELECT doc_id,
-    'https://site' || (doc_id % 37) || '.example.net/p/' || doc_id AS src_url,
-    '<html><body><a href="https://site' || ((doc_id + 1) % 37)
-    || '.example.net/p/' || (doc_id + 1)
-    || '">a</a><a href="/p/' || (doc_id % 100)
-    || '">b</a><a href="sub/page' || (doc_id % 7)
-    || '">c</a><a href="//site' || (doc_id % 37)
-    || '.example.net/p/' || (doc_id + 2) || '">d</a>'
-    || (CASE WHEN doc_id % 5 = 0
-        THEN '<a href="mailto:x@y.z">m</a>' ELSE '' END)
-    || '</body></html>' AS html
-  FROM documents
-),
-els AS (SELECT src_url,
-               unnest(regexp_extract_all(html,
-                 '<a href="[^"]*"[^>]*>[^<]*</a>', 0)) AS el
-        FROM d),
-pa AS (SELECT src_url,
-              regexp_extract(el, 'href="([^"]*)"', 1) AS href
-       FROM els)"""
-
-
-# q_hreflang_clusters oracle: same extraction regexes over the same
-# synthesized heads, then the min-label reachability closure
-# (_COMPONENTS_ORACLE's pattern on a new edge type).
-_HREFLANG_ORACLE = """
-WITH RECURSIVE d AS (
-  SELECT 'u' || doc_id AS url,
-    '<html><head><link rel="alternate" hreflang="'
-    || (CASE WHEN doc_id % 4 = 0 THEN 'en'
-             WHEN doc_id % 4 = 1 THEN 'sv'
-             WHEN doc_id % 4 = 2 THEN 'de' ELSE 'fr' END)
-    || '" href="u' || (doc_id - doc_id % 4) || '">'
-    || (CASE WHEN doc_id % 8 = 0
-        THEN '<link rel="alternate" hreflang="x-default" href="u'
-             || (doc_id + 4) || '">'
-        ELSE '' END)
-    || '</head></html>' AS html
-  FROM documents
-),
-els AS (SELECT url,
-               unnest(regexp_extract_all(lower(html),
-                 '<link rel="alternate" hreflang="[^"]*" href="[^"]*"', 0)) AS el
-        FROM d),
-hl_edges AS (
-  SELECT DISTINCT url AS a, regexp_extract(el, 'href="([^"]*)"', 1) AS b
-  FROM els WHERE regexp_extract(el, 'href="([^"]*)"', 1) != ''
-),
-hl_sym AS (SELECT a, b FROM hl_edges UNION SELECT b, a FROM hl_edges),
-hl_nodes AS (SELECT DISTINCT a AS node FROM hl_sym),
-reach(node, lbl) AS (
-  SELECT node, node FROM hl_nodes
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN hl_sym e ON r.node = e.a
-)
-SELECT node, min(lbl) AS cluster FROM reach GROUP BY node
-"""
-
-
-def _stale_pages_oracle() -> str:
-    """q_stale_pages oracle: the sitemap-parse oracle as the entries
-    subquery + the fetch-date synthesis, through the operator's
-    module-local twin."""
-    from easyner_spark.operators.webtext import stale_announcements_oracle_sql
-
-    corpus_sql = """SELECT
-    'https://s' || (doc_id % 11) || '.example.org/p/' || doc_id AS url,
-    '2026-0' || ((doc_id % 7) + 1) || '-15' AS fetch_date
-  FROM documents"""
-    return stale_announcements_oracle_sql(_sitemap_urls_oracle(), corpus_sql)
-
-
-def _meta_robots_oracle() -> str:
-    """q_meta_robots oracle: the five-variant synthesis fed to the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import meta_robots_oracle_sql
-
-    pages_sql = """SELECT 'u' || doc_id AS url,
-    '<html><head>'
-    || (CASE WHEN doc_id % 5 = 1
-             THEN '<meta name="robots" content="noindex">'
-             WHEN doc_id % 5 = 2
-             THEN '<meta name="robots" content="NOINDEX, nofollow">'
-             WHEN doc_id % 5 = 3
-             THEN '<meta name="robots" content="none">'
-             WHEN doc_id % 5 = 4
-             THEN '<meta name="robots" content="index, follow">'
-             ELSE '' END)
-    || '</head></html>' AS html
-  FROM documents"""
-    return meta_robots_oracle_sql(pages_sql)
-
-
-def _sitemap_urls_oracle() -> str:
-    """q_sitemap_urls oracle: the synthetic multi-line sitemap bodies
-    fed to the operator's module-local twin."""
-    from easyner_spark.operators.webtext import sitemap_parse_oracle_sql
-
-    sitemaps_sql = """SELECT
-    'https://s' || (doc_id % 11) || '.example.org/sitemap.xml' AS url,
-    '<urlset>' || chr(10) || '<url>' || chr(10)
-    || '  <loc>https://s' || (doc_id % 11) || '.example.org/p/' || doc_id
-    || '</loc>' || chr(10)
-    || '  <lastmod>2026-0' || ((doc_id % 9) + 1) || '-01</lastmod>'
-    || chr(10) || '</url>' || chr(10)
-    || '<url><loc>https://s' || (doc_id % 11) || '.example.org/q/'
-    || (doc_id * 3) || '</loc></url>' || chr(10)
-    || '<url><lastmod>2026-01-01</lastmod></url>' || chr(10)
-    || '</urlset>' AS sitemap_xml
-  FROM documents"""
-    return sitemap_parse_oracle_sql(sitemaps_sql)
-
-
-def _robots_parse_oracle() -> str:
-    """q_robots_parse oracle: the synthetic robots.txt bodies fed to
-    the operator's module-local twin."""
-    from easyner_spark.operators.webtext import parse_robots_oracle_sql
-
-    robots_sql = """SELECT
-    'https://r' || (doc_id % 13) || '.example.org/robots.txt' AS url,
-    '# robots for host ' || (doc_id % 13)
-    || chr(10) || 'User-agent: Googlebot'
-    || chr(10) || 'Disallow: /private'
-    || chr(10) || 'User-agent: *'
-    || chr(10) || 'Disallow: /tmp' || (doc_id % 13)
-    || chr(10) || 'Allow: /tmp' || (doc_id % 13) || '/ok   # carve-out'
-    || chr(10) || 'Crawl-delay: ' || ((doc_id % 13) + 1)
-    || chr(10) || 'Disallow:'
-    || chr(10) || 'DISALLOW: /x' || ((doc_id % 13) % 3) AS robots_txt
-  FROM documents WHERE doc_id < 13"""
-    return parse_robots_oracle_sql(robots_sql)
-
-
 def _polite_quota_oracle() -> str:
     """q_polite_quota oracle: host page counts + literal delay rows
     fed to the operator's module-local twin."""
@@ -8822,50 +5681,6 @@ def _crawl_quota_oracle() -> str:
         + "SELECT host AS key, count(*)::BIGINT AS w FROM h GROUP BY host"
     )
     return apportion_budget_oracle_sql(weights_sql, budget=10_000)
-
-
-def _page_rank_oracle() -> str:
-    """q_page_rank oracle: the doc-link CTE chain continued by the
-    shared unrolled PageRank body over in-corpus edges."""
-    from easyner_spark.operators.webtext import doc_link_graph_oracle_sql
-
-    pages_sql = (
-        "SELECT 'https://site' || (doc_id % 37) || '.example.net/p/'"
-        " || doc_id AS url FROM documents"
-    )
-    return doc_link_graph_oracle_sql(
-        _DOCLINKS_PREFIX,
-        pages_sql,
-        final_sql=_pagerank_oracle_body(
-            e_sql="SELECT DISTINCT src_url AS src, dst_url AS dst"
-            " FROM flagged WHERE in_corpus"
-        ),
-    )
-
-
-def _surt_index_oracle() -> str:
-    """q_surt_index oracle: the skewed url synthesis + the operator's
-    scalar SQL twin."""
-    from easyner_spark.operators.webtext import surt_key_oracle_sql
-
-    return f"""{_URL_PAGES_CTE}
-SELECT doc_id::BIGINT AS doc_id, url, {surt_key_oracle_sql("url")} AS surt
-FROM p
-"""
-
-
-def _doc_links_oracle() -> str:
-    """q_doc_links oracle: the link synthesis prefix + corpus urls fed
-    to the operator's module-local twin."""
-    from easyner_spark.operators.webtext import doc_link_graph_oracle_sql
-
-    pages_sql = (
-        "SELECT 'https://site' || (doc_id % 37) || '.example.net/p/'"
-        " || doc_id AS url FROM documents"
-    )
-    return doc_link_graph_oracle_sql(
-        _DOCLINKS_PREFIX, pages_sql, keep_external=True
-    )
 
 
 def _ner_examples_oracle() -> str:
@@ -9027,20 +5842,6 @@ def _kg_pathsim_oracle() -> str:
     return metapath_pathsim_oracle_sql(
         f"SELECT * FROM ({_KG_AFFIL_SQL})", ("works_for", "employs")
     )
-
-
-def _recrawl_schedule_oracle() -> str:
-    """q_recrawl_schedule oracle: the crawl_delta pages synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.webtext import recrawl_schedule_oracle_sql
-
-    pages_sql = """SELECT
-  'https://site' || (doc_id % 100) || '.example.net/p' AS url,
-  1700000000 + doc_id AS warc_ts,
-  'page content ' || (doc_id % 100)
-  || (CASE WHEN doc_id % 7 < 2 THEN ' v2' ELSE '' END) AS text
-  FROM documents"""
-    return recrawl_schedule_oracle_sql(pages_sql)
 
 
 def _temp_mixture_oracle() -> str:
@@ -9208,128 +6009,6 @@ def _entity_bursts_oracle() -> str:
     return entity_bursts_oracle_sql(prefix)
 
 
-def _html_meta_oracle() -> str:
-    """q_html_meta oracle: head-tag synthesis mirrored verbatim, fed
-    to the operator's module-local SQL twin."""
-    from easyner_spark.operators.webtext import extract_meta_oracle_sql
-
-    pages_sql = f"""SELECT (CASE WHEN doc_id % 13 = 0 THEN 'http' ELSE 'https' END)
-    || '://' || {_URL_HOST_CASE}
-    || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-    || '/p/' || doc_id AS url,
-  '<html><head>'
-  || (CASE WHEN doc_id % 4 = 0 THEN '' ELSE
-      (CASE WHEN doc_id % 5 = 0 THEN '<TITLE> ' ELSE '<title> ' END)
-      || 'Doc ' || (doc_id % 211)
-      || (CASE WHEN doc_id % 5 = 0 THEN ' </TITLE>' ELSE ' </title>' END) END)
-  || (CASE WHEN doc_id % 2 = 0
-      THEN '<meta name="description" content="summary ' || (doc_id % 50) || '">'
-      ELSE '' END)
-  || (CASE WHEN doc_id % 3 = 0
-      THEN '<link rel="canonical" href="https://hub.example.com/c/'
-           || (doc_id % 97) || '">'
-      ELSE '' END)
-  || '</head><body>x</body></html>' AS html
-FROM documents"""
-    return extract_meta_oracle_sql(pages_sql)
-
-
-# Anchor extraction WITH-chain shared by the anchor_terms and
-# alias_candidates oracles: url/html synthesis mirrored verbatim from
-# _synth_anchor_pages, element/href/text pulls + target classifier
-# mirrored from webtext.extract_anchors. Last relation:
-# t(src_host, anchor, dst_host).
-_ANCHORS_PREFIX = f"""
-WITH d AS (
-  SELECT doc_id,
-    regexp_replace(lower(regexp_extract(
-      (CASE WHEN doc_id % 13 = 0 THEN 'http' ELSE 'https' END) || '://'
-      || {_URL_HOST_CASE}
-      || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-      || '/p/' || doc_id,
-      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '') AS src_host,
-    '<html><body><a href="https://site' || ((doc_id * 7) % 37)
-    || '.example.net/p/1">Read Page ' || (doc_id % 211) || '</a>'
-    || '<a href="/local/' || (doc_id % 5) || '">'
-    || (CASE WHEN doc_id % 3 = 0 THEN 'Home & Garden' ELSE 'next-page 2' END)
-    || '</a>'
-    || (CASE WHEN doc_id % 4 = 0
-        THEN '<a href="//hub.example.com/z">The HUB portal</a>' ELSE '' END)
-    || '</body></html>' AS html
-  FROM documents
-),
-els AS (SELECT src_host,
-               unnest(regexp_extract_all(html,
-                 '<a href="[^"]*"[^>]*>[^<]*</a>', 0)) AS el
-        FROM d),
-pa AS (SELECT src_host,
-              regexp_extract(el, 'href="([^"]*)"', 1) AS href,
-              regexp_extract(el, '>([^<]*)</a>', 1) AS anchor
-       FROM els),
-t AS (
-  SELECT src_host, anchor,
-    CASE WHEN regexp_matches(href, '^[hH][tT][tT][pP][sS]?://')
-         THEN regexp_replace(lower(regexp_extract(href,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '')
-         WHEN href LIKE '//%'
-         THEN regexp_replace(lower(regexp_extract(href,
-                '^//([^/?#]+)', 1)), ':\\d+$', '')
-         WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-         ELSE src_host END AS dst_host
-  FROM pa
-)"""
-
-
-def _alias_candidates_oracle() -> str:
-    """q_alias_candidates oracle: the shared anchors prefix fed to the
-    operator's module-local twin."""
-    from easyner_spark.operators.webtext import alias_candidates_oracle_sql
-
-    return alias_candidates_oracle_sql(_ANCHORS_PREFIX)
-
-
-# Host link-graph CTE: url/html synthesis mirrored verbatim from
-# _synth_html_pages, href extraction + classifier mirrored from
-# webtext.extract_links (same regexes, same when-chain order).
-_HOSTLINKS_CTE = f"""
-WITH d AS (
-  SELECT doc_id,
-    regexp_replace(lower(regexp_extract(
-      (CASE WHEN doc_id % 13 = 0 THEN 'http' ELSE 'https' END) || '://'
-      || {_URL_HOST_CASE}
-      || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-      || '/p/' || doc_id,
-      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '') AS src_host,
-    '<html><body><p>t</p><a href="https://site' || ((doc_id * 7) % 37)
-    || '.example.net/p/1">x</a><a href="/local/' || (doc_id % 5) || '">y</a>'
-    || (CASE WHEN doc_id % 3 = 0 THEN '<a href="//hub.example.com/z">z</a>' ELSE '' END)
-    || (CASE WHEN doc_id % 4 = 0 THEN '<a href="mailto:a@b.c">m</a>' ELSE '' END)
-    || '</body></html>' AS html
-  FROM documents
-),
-l AS (SELECT src_host,
-             unnest(regexp_extract_all(html, 'href="([^"]*)"', 1)) AS href
-      FROM d),
-t AS (
-  SELECT src_host,
-    CASE WHEN regexp_matches(href, '^[hH][tT][tT][pP][sS]?://')
-         THEN regexp_replace(lower(regexp_extract(href,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '')
-         WHEN href LIKE '//%'
-         THEN regexp_replace(lower(regexp_extract(href,
-                '^//([^/?#]+)', 1)), ':\\d+$', '')
-         WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-         ELSE src_host END AS dst_host
-  FROM l
-),
-hg AS (
-  SELECT src_host, dst_host, count(*) AS n_links
-  FROM t WHERE dst_host IS NOT NULL AND dst_host != ''
-  GROUP BY src_host, dst_host
-)
-"""
-
-
 def _sample_oracle() -> str:
     """md5-threshold sampling gate — threshold shared with
     sampling.sample_threshold so both engines cut on the same 12-hex
@@ -9418,52 +6097,6 @@ FROM r
 """
 
 
-def _hits_oracle_body(
-    iters: int = 3,
-    e_sql: str = "SELECT DISTINCT src_host AS src, dst_host AS dst FROM hg",
-) -> str:
-    """Unrolled HITS CTE chain mirroring operators/graph.hits' op
-    order exactly: per iteration, authority = round(sum of PREVIOUS
-    hubs over in-edges / max, 9) for every node (missing -> 0), then
-    hub = round(sum of NEW authorities over out-edges / max, 9);
-    output rounds to 6."""
-    parts = [
-        f"""
-, e AS ({e_sql}),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-h0 AS (SELECT node, 1.0 AS hub FROM nodes)"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f""",
-a{t}_raw AS (
-  SELECT e.dst AS node, sum(h.hub) AS v
-  FROM e JOIN h{t - 1} h ON e.src = h.node GROUP BY e.dst
-),
-a{t} AS (
-  SELECT nodes.node,
-         round(coalesce(r.v, 0.0) / (SELECT max(v) FROM a{t}_raw), 9) AS auth
-  FROM nodes LEFT JOIN a{t}_raw r ON nodes.node = r.node
-),
-h{t}_raw AS (
-  SELECT e.src AS node, sum(a.auth) AS v
-  FROM e JOIN a{t} a ON e.dst = a.node GROUP BY e.src
-),
-h{t} AS (
-  SELECT nodes.node,
-         round(coalesce(r.v, 0.0) / (SELECT max(v) FROM h{t}_raw), 9) AS hub
-  FROM nodes LEFT JOIN h{t}_raw r ON nodes.node = r.node
-)"""
-        )
-    parts.append(
-        f"""
-SELECT a.node, round(a.auth, 6) AS authority, round(h.hub, 6) AS hub
-FROM a{iters} a JOIN h{iters} h ON a.node = h.node
-"""
-    )
-    return "".join(parts)
-
-
 def _clustering_oracle() -> str:
     from easyner_spark.operators.graph import clustering_coeff_oracle_sql
 
@@ -9496,16 +6129,6 @@ def _snapshot_diff_oracle() -> str:
     )
 
 
-def _host_trust_oracle() -> str:
-    from easyner_spark.operators.graph import spam_mass_oracle_sql
-
-    return _HOSTLINKS_CTE + spam_mass_oracle_sql(
-        e_sql="SELECT DISTINCT src_host AS src, dst_host AS dst FROM hg",
-        seeds_sql="SELECT 'hub.example.com' AS node"
-        " UNION ALL SELECT 'blog.example.org' AS node",
-    )
-
-
 def _doc_keywords_oracle() -> str:
     from easyner_spark.operators.ranking import doc_keywords_oracle_sql
 
@@ -9524,15 +6147,6 @@ def _merge_cands_oracle() -> str:
     return edit_merge_candidates_oracle_sql(_MERGE_LABELS_SQL, max_dist=2)
 
 
-def _host_wrank_oracle() -> str:
-    from easyner_spark.operators.graph import weighted_pagerank_oracle_sql
-
-    return _HOSTLINKS_CTE + weighted_pagerank_oracle_sql(
-        e_sql="SELECT src_host AS src, dst_host AS dst,"
-        " n_links::BIGINT AS w FROM hg"
-    )
-
-
 def _kwic_oracle() -> str:
     from easyner_spark.operators.search import kwic_oracle_sql
 
@@ -9549,18 +6163,6 @@ WHERE strpos(text, t.term) > 0"""
         " text AS sentence FROM documents"
     )
     return kwic_oracle_sql(mentions_sql, sentences_sql, window=20)
-
-
-def _citations_oracle() -> str:
-    from easyner_spark.operators.webtext import citation_facts_oracle_sql
-
-    return citation_facts_oracle_sql(_CITATION_PAGES_SQL)
-
-
-def _dates_oracle() -> str:
-    from easyner_spark.operators.webtext import date_facts_oracle_sql
-
-    return date_facts_oracle_sql(_DATE_PAGES_SQL)
 
 
 def _window_cooc_oracle() -> str:
@@ -9595,35 +6197,6 @@ hcw AS (
   FROM hc_walk GROUP BY source, node
 )"""
     return harmonic_centrality_oracle_sql(prefix, k=2)
-
-
-def _microdata_oracle() -> str:
-    from easyner_spark.operators.webtext import extract_microdata_oracle_sql
-
-    return extract_microdata_oracle_sql(_MICRODATA_PAGES_SQL)
-
-
-def _unescape_oracle() -> str:
-    from easyner_spark.operators.webtext import html_unescape_sql
-
-    raw = """'v&amp;'
-  || (CASE WHEN doc_id % 2 = 0 THEN '&lt;tag&gt; ' ELSE '' END)
-  || (CASE WHEN doc_id % 3 = 0 THEN '&quot;q&#39; ' ELSE '' END)
-  || (CASE WHEN doc_id % 5 = 0 THEN '&amp;lt;dbl ' ELSE '' END)
-  || 'w&nbsp;z'"""
-    return f"""
-WITH ue AS (SELECT 'u' || doc_id AS url, {raw} AS raw FROM documents)
-SELECT url, raw, {html_unescape_sql('raw')} AS clean FROM ue
-"""
-
-
-def _host_scc_oracle() -> str:
-    from easyner_spark.operators.graph import bounded_scc_oracle_sql
-
-    prefix = _HOSTLINKS_CTE.replace("WITH d AS", "WITH RECURSIVE d AS", 1) + """
-, sccE AS (SELECT DISTINCT src_host AS a, dst_host AS b FROM hg
-           WHERE src_host != dst_host)"""
-    return bounded_scc_oracle_sql(prefix, k=3)
 
 
 _PRONOUN_TOKS_CTE = """
@@ -9667,17 +6240,6 @@ def _kappa_oracle() -> str:
         " ELSE 'O' END AS label FROM plt0"
     )
     return _PRONOUN_TOKS_CTE + cohens_kappa_oracle_sql(pred, gold)
-
-
-def _host_topics_oracle() -> str:
-    from easyner_spark.operators.webtext import host_topics_oracle_sql
-
-    hosts = f"""SELECT doc_id::VARCHAR AS url, {_URL_HOST_CASE} AS host
-FROM documents"""
-    return _PRELUDE + host_topics_oracle_sql(
-        "SELECT doc_id::VARCHAR AS url, mention_lc AS term FROM mentions",
-        hosts,
-    )
 
 
 def _passive_triples_oracle() -> str:
@@ -9788,24 +6350,14 @@ FROM nmhit
     )
 
 
-def _pagerank_oracle_body(
-    iters: int = 3,
-    e_sql: str = "SELECT DISTINCT subj_id AS src, obj_id AS dst FROM triples",
-    final_sql: str | None = None,
-) -> str:
-    """Unrolled PageRank CTE chain over a distinct edge list (default:
-    the triple graph; host_rank passes the link-graph edges),
+def _pagerank_oracle_body(iters: int = 3) -> str:
+    """Unrolled PageRank CTE chain over the distinct triple graph,
     mirroring operators/graph.pagerank's op order exactly: base =
     (1.0 - 0.85) / N, inflow = sum(rank / deg), state = round(base +
-    0.85 * coalesce(inflow, 0.0), 9), output round(·, 6).
-
-    `final_sql` replaces the default terminal SELECT so consumers can
-    keep composing CTEs on top of the final iteration (crawl_priority
-    joins the ranks against recrawl change rates); it must start with
-    ', ' (CTE continuation) or a SELECT."""
+    0.85 * coalesce(inflow, 0.0), 9), output round(·, 6)."""
     parts = [
-        f"""
-, e AS ({e_sql}),
+        """
+, e AS (SELECT DISTINCT subj_id AS src, obj_id AS dst FROM triples),
 nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
 nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
 deg AS (SELECT src, count(*)::DOUBLE AS deg FROM e GROUP BY src),
@@ -9827,11 +6379,7 @@ it{t} AS (
   ) s ON nodes.node = s.node
 )"""
         )
-    parts.append(
-        final_sql
-        if final_sql is not None
-        else f"\nSELECT node, round(rank, 6) AS rank FROM it{iters}\n"
-    )
+    parts.append(f"\nSELECT node, round(rank, 6) AS rank FROM it{iters}\n")
     return "".join(parts)
 
 
@@ -9906,11 +6454,6 @@ def oracle_sql() -> dict[str, str]:
         entity_types_oracle_sql,
         fuse_claims_oracle_sql,
         predicate_cardinality_oracle_sql,
-    )
-    from easyner_spark.operators.webtext import (
-        host_cocitation_oracle_sql,
-        host_reciprocity_oracle_sql,
-        link_density_oracle_sql,
     )
     from easyner_spark.operators.sampling import (
         quality_weighted_sample_oracle_sql,
@@ -10025,17 +6568,6 @@ FROM events GROUP BY event_type
         "text_stats": stats_sql,
         "lang_id": langid_sql,
         "paragraph_langs": paragraph_langs_oracle_sql(),
-        "link_density": "SELECT url::BIGINT AS id, n_chars, n_anchors,"
-        " anchor_chars, density_micro, is_linkfarm_page FROM ("
-        + link_density_oracle_sql(
-            "SELECT doc_id::VARCHAR AS url,"
-            " '<html><body><a href=\"https://x.example/p\">'"
-            " || substr(text, 1, 40) || '</a>'"
-            " || (CASE WHEN doc_id % 2 = 0 THEN substr(text, 41, 200)"
-            "     ELSE '' END)"
-            " || '</body></html>' AS html FROM documents"
-        )
-        + ") ld",
         "mojibake": mojibake_stats_oracle_sql(
             "SELECT doc_id AS id,"
             " (CASE WHEN doc_id % 3 = 0"
@@ -10737,10 +7269,6 @@ FROM alln LEFT JOIN corners ON alln.node = corners.node
         # Full-outer epoch diff over support-weighted triple edges
         # (graph.edge_diff_oracle_sql, continuation after _PRELUDE)
         "kg_snapshot_diff": _snapshot_diff_oracle(),
-        # Shared-edge-CTE dual power method: plain p-chain +
-        # seed-teleport t-chain, mass on the 6-rounded outputs
-        # (graph.spam_mass_oracle_sql after _HOSTLINKS_CTE)
-        "host_trust": _host_trust_oracle(),
         # Smoothed-idf TF-IDF with a per-doc rank window
         # (ranking.doc_keywords_oracle_sql on the raw documents table)
         "doc_keywords": _doc_keywords_oracle(),
@@ -10750,18 +7278,9 @@ FROM alln LEFT JOIN corners ON alln.node = corners.node
         # Two-key blocked self-join + levenshtein verify over the
         # noisy-label synthesis (nel.edit_merge_candidates_oracle_sql)
         "entity_merge_cands": _merge_cands_oracle(),
-        # Weight-proportional unrolled power method over hg's n_links
-        # (graph.weighted_pagerank_oracle_sql after _HOSTLINKS_CTE)
-        "host_wrank": _host_wrank_oracle(),
         # strpos-located first occurrences + pure substr windows
         # (search.kwic_oracle_sql)
         "kwic": _kwic_oracle(),
-        # Shared-verbatim DOI/arXiv/PMID patterns over the injected
-        # synthesis (webtext.citation_facts_oracle_sql)
-        "citations": _citations_oracle(),
-        # Month-name CASE map + lpad, no engine date parser
-        # (webtext.date_facts_oracle_sql over the injected synthesis)
-        "dates": _dates_oracle(),
         # Banded self-join on (doc, sent) positions
         # (graph.window_cooc_oracle_sql over the mentions CTE)
         "kg_window_cooc": _window_cooc_oracle(),
@@ -10769,15 +7288,6 @@ FROM alln LEFT JOIN corners ON alln.node = corners.node
         # counts -> fixed-order reciprocal fold
         # (graph.harmonic_centrality_oracle_sql)
         "kg_harmonic": _harmonic_oracle(),
-        # Flat-scope itemtype/itemprop pulls, patterns shared verbatim
-        # (webtext.extract_microdata_oracle_sql)
-        "microdata": _microdata_oracle(),
-        # Same fixed replace chain via webtext.html_unescape_sql
-        "unescape_text": _unescape_oracle(),
-        # Recursive directed walk + swapped-key mutual join + min
-        # rollup (graph.bounded_scc_oracle_sql after a RECURSIVE
-        # _HOSTLINKS_CTE)
-        "host_scc": _host_scc_oracle(),
         # Banded doc-join + max(struct) nearest-antecedent rollup
         # (triples.pronoun_links_oracle_sql over the injected stream)
         "pronoun_links": _pronoun_links_oracle(),
@@ -10789,9 +7299,6 @@ FROM alln LEFT JOIN corners ON alln.node = corners.node
         "nominal_triples": _nominal_triples_oracle(),
         # N^2-scaled integer kappa (evaluate.cohens_kappa_oracle_sql)
         "kappa": _kappa_oracle(),
-        # Composite (host, term) rollup + host-total join
-        # (webtext.host_topics_oracle_sql over the mentions CTE)
-        "host_topics": _host_topics_oracle(),
         "heavy_hitters": _cms_oracle(),
         # Unrolled WL rounds over the shared pr CTE (graph.wl_labels_oracle_sql)
         "kg_wl_labels": _wl_oracle(),
@@ -10813,17 +7320,6 @@ SELECT g.subj_id, g.pred, g.obj_id, g.first_epoch, g.last_epoch,
             ELSE 'active' END AS status
 FROM g CROSS JOIN mx
 """,
-        # Per-host rollup over deterministically skewed synthetic urls;
-        # host parse = the same ASCII regex as webtext.url_parts
-        "host_stats": _URL_PAGES_CTE
-        + """
-SELECT host,
-  count(*)::BIGINT AS n_docs,
-  sum(length(text))::BIGINT AS total_chars,
-  count(DISTINCT lang)::BIGINT AS n_langs,
-  round(sum(length(text))::DOUBLE / count(*)::DOUBLE, 6) AS mean_chars
-FROM h GROUP BY host
-""",
         # Host-skew profile: rank/share/cum_share + salt factor
         # (webtext.host_skew_profile, target_partition_rows=50)
         "host_skew": _URL_PAGES_CTE
@@ -10840,55 +7336,6 @@ SELECT host,
   greatest(1, ceil(n_docs::DOUBLE / 50.0)::INT)::BIGINT AS salt
 FROM c CROSS JOIN t
 """,
-        # Canonical-URL dedup: regexp chain mirrors
-        # webtext.canonical_url step for step ('g' only where Spark's
-        # replace-all semantics could see a second match)
-        "url_dedup": f"""
-WITH b AS (
-  SELECT doc_id,
-    {_URL_HOST_CASE} AS host,
-    'https://' || {_URL_HOST_CASE} || '/p/' || (doc_id % 211) AS base
-  FROM documents
-),
-p AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 4 = 0 THEN base || '?utm_source=feed&id=' || (doc_id % 211)
-         WHEN doc_id % 4 = 1 THEN 'https://www.' || host || '/p/' || (doc_id % 211)
-         WHEN doc_id % 4 = 2 THEN base || '/'
-         ELSE base || '#sec-' || doc_id END AS url
-  FROM b
-),
-c AS (
-  SELECT doc_id, url,
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                lower(regexp_extract(u0, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1))
-                || regexp_replace(u0, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', ''),
-                '://www\\.', '://'),
-              '[?&](utm_[a-z]+|fbclid|gclid)=[^&#]*', '', 'g'),
-            '\\?&', '?'),
-          '^([^?&]*)&', '\\1?'),
-        '[?&]$', ''),
-      '/$', '') AS canon_url
-  FROM (SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS u0 FROM p)
-)
-SELECT doc_id::BIGINT AS doc_id, url, canon_url,
-       (url != min(url) OVER (PARTITION BY canon_url)) AS is_dup
-FROM c
-""",
-        # Redirect-chain resolution: depth-capped recursive CTE walks
-        # the same min(chain, 8) steps as the pointer-doubling
-        # operator (webtext.resolve_redirects_oracle_sql)
-        "resolve_redirects": _redirects_oracle(),
-        # REP politeness verdicts: integer-encoded (neg_len, rank)
-        # winner tuple (webtext.robots_verdict_oracle_sql)
-        "robots_rules": _robots_oracle(),
-        # Head-metadata extraction (webtext.extract_meta_oracle_sql)
-        "html_meta": _html_meta_oracle(),
         # Per-entity epoch burst detection
         # (analysis.entity_bursts_oracle_sql over the mentions prelude)
         "entity_bursts": _entity_bursts_oracle(),
@@ -10914,7 +7361,6 @@ FROM c
         "kg_schema_graph": _kg_schema_graph_oracle(),
         "kg_metapath": _kg_metapath_oracle(),
         "kg_pathsim": _kg_pathsim_oracle(),
-        "recrawl_schedule": _recrawl_schedule_oracle(),
         "kg_align": _kg_align_oracle(),
         "temp_mixture": _temp_mixture_oracle(),
         "kg_pattern_optional": _kg_pattern_optional_oracle(),
@@ -10967,46 +7413,13 @@ FROM c
         # Declared-constraint contradiction table
         # (triples.functional_violations_oracle_sql over _KG_FUNC_SQL)
         "kg_violations": _kg_violations_oracle(),
-        # Per-host template mining / stripping
-        # (webtext.host_templates_oracle_sql twins over the shared
-        # engineered 7-host pages synthesis)
-        "host_templates": _host_templates_oracle(),
-        "template_strip": _template_strip_oracle(),
         # Filtered KG link-prediction ranking + rollup
         # (graph.ranking_eval_oracle_sql over gold + kg_negatives
         # candidates, md5-32 micro-unit scores)
         "kg_rank_eval": _kg_rank_oracle(summary=False),
         "kg_rank_summary": _kg_rank_oracle(summary=True),
-        # Positional bitext mining over deterministic clusters
-        # (webtext.bitext_candidates_oracle_sql over the shared
-        # sentence prelude)
-        "bitext": _bitext_oracle(),
-        "mirror_hosts": _mirror_hosts_oracle(),
-        "url_equivalence": _url_equivalence_oracle(),
         "containment": _containment_oracle(),
-        "html_tables": _html_tables_oracle(),
-        "infobox": _infobox_oracle(),
-        "host_spam": _host_spam_oracle(),
-        "opengraph": _opengraph_oracle(),
-        "feed_items": _feed_items_oracle(),
-        "crawl_frontier": _crawl_frontier_oracle(),
-        "jsonld": _jsonld_oracle(),
-        "breadcrumbs": _breadcrumbs_oracle(),
-        "breadcrumb_edges": _breadcrumb_edges_oracle(),
-        "soft404": _soft404_oracle(),
-        "section_lists": _section_lists_oracle(),
-        "list_memberships": _list_memberships_oracle(),
-        "meta_refresh": _meta_refresh_oracle(),
-        "page_entities": _page_entities_oracle(),
-        "sameas": _sameas_oracle(),
-        "sameas_entities": _sameas_entities_oracle(),
-        "pagination": _pagination_oracle(),
-        "series_text": _series_text_oracle(),
-        "surface_profile": _surface_profile_oracle(),
-        "robots_sitemaps": _robots_sitemaps_oracle(),
         "readability": _readability_oracle(),
-        "url_templates": _url_templates_oracle(),
-        "template_cap": _template_cap_oracle(),
         # Evidence sentences per edge: the shared prelude's triples +
         # sentences CTEs through the edge_evidence twin's shape; the
         # rank ORDER BY casts doc_id to VARCHAR because the Spark side
@@ -11099,28 +7512,14 @@ FROM cst s JOIN cng n
         "quotes": _quotes_oracle(),
         # Numeric facts: injected measurements through the twin
         "numeric_facts": _numeric_facts_oracle(),
-        # Outline extraction: deterministic h1/h2/h3 structure
-        "headings": _headings_oracle(),
-        # List extraction: nav <ul> + ranked <ol> synthesis
-        "html_lists": _html_lists_oracle(),
         # N-Triples export: prelude edges through the serializer twin
         "ntriples": _ntriples_oracle(),
         "entity_labels": _ENTITY_LABELS_ORACLE,
-        "social": _social_oracle(),
         "contacts": _contacts_oracle(),
         "geo": _geo_oracle(),
         "copula_isa": _copula_isa_oracle(),
         "apposition": _apposition_oracle(),
         "mined_taxonomy": _mined_taxonomy_oracle(),
-        "sitemap_index": _sitemap_index_oracle(),
-        "declarations": _declarations_oracle(),
-        "definitions": _definitions_oracle(),
-        # Per-host language mixture: the REAL lang_id oracle body as
-        # the rows subquery (FROM-nesting, plain WITH)
-        "definition_edges": _definition_edges_oracle(),
-        "amp_fold": _amp_fold_oracle(),
-        "jsonld_fields": _jsonld_fields_oracle(),
-        "anchor_rels": _anchor_rels_oracle(),
         "host_langs": host_lang_mix_oracle_sql(
             "SELECT 'h' || (doc_id % 7) AS host, lang_pred AS lang"
             f" FROM ({langid_sql})"
@@ -11158,14 +7557,6 @@ GROUP BY e.subj_id, e.pred, e.obj_id
         # Distant-supervision NER examples over the mentions prelude
         # (ner_dict.ner_examples_oracle_sql)
         "ner_examples": _ner_examples_oracle(),
-        # Page-level link graph with href resolution
-        # (webtext.doc_link_graph_oracle_sql)
-        "doc_links": _doc_links_oracle(),
-        # SURT CDX index keys (webtext.surt_key_oracle_sql)
-        "surt_index": _surt_index_oracle(),
-        # Doc-level PageRank over the in-corpus page graph
-        # (doc_link_graph oracle composing _pagerank_oracle_body)
-        "page_rank": _page_rank_oracle(),
         # Hamilton fetch-budget apportionment
         # (sampling.apportion_budget_oracle_sql)
         "crawl_quota": _crawl_quota_oracle(),
@@ -11174,17 +7565,6 @@ GROUP BY e.subj_id, e.pred, e.obj_id
         "eval_split": _eval_split_oracle(),
         # Crawl-delay-capped quotas (sampling.polite_quota_oracle_sql)
         "polite_quota": _polite_quota_oracle(),
-        # robots.txt parsing (webtext.parse_robots_oracle_sql)
-        "robots_parse": _robots_parse_oracle(),
-        # Sitemap parsing (webtext.sitemap_parse_oracle_sql)
-        "sitemap_urls": _sitemap_urls_oracle(),
-        # Page-level robots directives (webtext.meta_robots_oracle_sql)
-        "meta_robots": _meta_robots_oracle(),
-        # Translation clusters: hreflang edges + reachability closure
-        "hreflang_clusters": _HREFLANG_ORACLE,
-        # Announced-newer-than-fetched recrawl targets
-        # (webtext.stale_announcements_oracle_sql)
-        "stale_pages": _stale_pages_oracle(),
         # Materialized KG node table: mention/doc rollups + degree +
         # the min-label closure, all over the shared prelude
         "kg_node_profile": _PRELUDE.replace("WITH sent0", "WITH RECURSIVE sent0", 1)
@@ -11223,15 +7603,6 @@ FROM pe
 LEFT JOIN np_comp ON pe.entity_id = np_comp.node
 LEFT JOIN np_dg ON pe.entity_id = np_dg.e
 """,
-        # Host-level link graph from regex href extraction
-        "host_graph": _HOSTLINKS_CTE
-        + """
-SELECT src_host, dst_host, n_links::BIGINT AS n_links FROM hg
-""",
-        "host_reciprocity": host_reciprocity_oracle_sql(
-            "SELECT src_host AS s, dst_host AS d FROM hg",
-            with_prefix=_HOSTLINKS_CTE.rstrip().rstrip(","),
-        ),
         "quality_sample": "SELECT doc_id AS id, n_words FROM ("
         + quality_weighted_sample_oracle_sql(
             "SELECT doc_id, len(regexp_extract_all(lower(text), '\\w+'))::BIGINT"
@@ -11242,30 +7613,6 @@ SELECT src_host, dst_host, n_links::BIGINT AS n_links FROM hg
             seed="qs1",
         )
         + ") qs",
-        # Co-citation over the same link graph, fanout cap biting
-        "host_cocitation": host_cocitation_oracle_sql(_HOSTLINKS_CTE, max_out=3),
-        # PageRank over the extracted host link graph (same unrolled
-        # body as kg_pagerank, edges from the link-graph CTE)
-        "host_rank": _HOSTLINKS_CTE
-        + _pagerank_oracle_body(
-            e_sql="SELECT DISTINCT src_host AS src, dst_host AS dst FROM hg"
-        ),
-        "host_hits": _HOSTLINKS_CTE + _hits_oracle_body(iters=3),
-        # Anchor-text term profile: element extraction + href/text
-        # pulls + target classifier mirrored from webtext
-        # (extract_anchors / anchor_terms), synthesis from
-        # _synth_anchor_pages
-        "anchor_terms": _ANCHORS_PREFIX
-        + """,
-tok AS (SELECT dst_host,
-               unnest(regexp_extract_all(lower(anchor), '[a-z0-9]+')) AS term
-        FROM t WHERE dst_host IS NOT NULL AND dst_host != '')
-SELECT dst_host, term, count(*)::BIGINT AS n
-FROM tok GROUP BY dst_host, term
-""",
-        # Anchor-phrase alias dictionary mining
-        # (webtext.alias_candidates_oracle_sql over the same prefix)
-        "alias_candidates": _alias_candidates_oracle(),
         # Recrawl change tracking: lag over (url, warc_ts) — ts unique
         # per fetch by construction, so ordering is total
         "crawl_delta": """
@@ -11321,38 +7668,6 @@ SELECT t.doc_id::BIGINT AS doc_id,
        coalesce(r.n_kept, 0)::BIGINT AS n_kept
 FROM tot t LEFT JOIN reb r ON t.doc_id = r.doc_id
 """,
-        # Crawl-frontier priority: link-graph PageRank (unrolled CTE
-        # chain continued past its final iteration via final_sql)
-        # joined against recrawl change counts
-        "crawl_priority": _HOSTLINKS_CTE
-        + _pagerank_oracle_body(
-            e_sql="SELECT DISTINCT src_host AS src, dst_host AS dst FROM hg",
-            final_sql="""
-, pr AS (SELECT node, round(rank, 6) AS rank FROM it3),
-pages AS (
-  SELECT 'https://site' || ((doc_id % 50) % 37) || '.example.net/p/'
-           || (doc_id % 50) AS url,
-         'site' || ((doc_id % 50) % 37) || '.example.net' AS host,
-         1700000000 + doc_id AS warc_ts,
-         'page content ' || (doc_id % 50)
-           || (CASE WHEN doc_id % 7 < 2 THEN ' v2' ELSE '' END) AS text
-  FROM documents
-),
-lg AS (SELECT *, lag(text) OVER (PARTITION BY url ORDER BY warc_ts) AS prev
-       FROM pages),
-freq AS (
-  SELECT url, host, count(*) AS n_fetches,
-         sum(CASE WHEN prev IS NOT NULL AND prev != text
-                  THEN 1 ELSE 0 END) AS n_changed
-  FROM lg GROUP BY url, host
-)
-SELECT f.url, f.n_fetches::BIGINT AS n_fetches,
-       f.n_changed::BIGINT AS n_changed,
-       round(coalesce(pr.rank, 0.15::DOUBLE) * (1 + f.n_changed), 6)
-         AS priority
-FROM freq f LEFT JOIN pr ON f.host = pr.node
-""",
-        ),
         # Deterministic md5-gated sample (threshold string shared with
         # sampling.sample_threshold)
         # full fuzzy-NEL chain: variant surfaces -> bipartite char-gram
@@ -11430,17 +7745,6 @@ SELECT name, entity_id, jq FROM cand WHERE rn = 1
             ),
         ),
         "chunk_docs": chunk_docs_oracle_sql(max_tokens=32, overlap=8, min_tail=5),
-        # INDEPENDENT membership formulation (exact host or dot-suffix
-        # LIKE) — does not mirror the suffix-array construction
-        "url_blocklist": _URL_PAGES_CTE
-        + """
-SELECT doc_id, url FROM h
-WHERE NOT (
-     host = 'example.org'       OR host LIKE '%.example.org'
-  OR host = 'hub.example.com'   OR host LIKE '%.hub.example.com'
-  OR host = 'site5.example.net' OR host LIKE '%.site5.example.net'
-)
-""",
         # exact BIGINT mixture gate: h32(url) * 1e6 < ppm(lang) * 2^32
         "mixture_sample": _URL_PAGES_CTE
         + """

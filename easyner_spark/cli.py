@@ -38,7 +38,7 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -456,8 +456,13 @@ def run_query(spark: SparkSession, cfg: dict) -> dict[str, int]:
             )
         if q.get("limit"):
             out = out.limit(int(q["limit"]))
-        write_tsv(out, f"{out_dir}/query_{name}")
-        counts[name] = out.count()
+        # the row count rides the write (no second execution)
+        rows = Observation()
+        write_tsv(
+            out.observe(rows, F.count(F.lit(1)).alias("n")),
+            f"{out_dir}/query_{name}",
+        )
+        counts[name] = rows.get["n"]
     return counts
 
 

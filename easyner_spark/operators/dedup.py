@@ -896,10 +896,10 @@ def containment_pairs(
     Exactness: integer cross-multiply gate
     (shared * 100 >= pct * n_contained); no floats.
 
-    Scale (same bounded shape as webtext.mirror_hosts): shingles are
+    Scale: shingles are
     df-gated to 2..max_df docs by an algebraic COUNT BEFORE any array
     collect — a shingle in more docs is corpus boilerplate
-    (paragraph_dedup / host_templates territory) and its exclusion is
+    (paragraph_dedup territory) and its exclusion is
     documented semantics, not silent truncation; the per-shingle
     sorted id array is <= max_df by construction, so the in-array i<j
     pair fan-out is <= max_df^2/2 per shingle; the (a, b) shared

@@ -403,7 +403,7 @@ def isa_closure(
     case AQE skew-split handles the build side) + ONE min() groupBy
     dedup whose partial aggs absorb fan-in; the path table is
     localCheckpoint'ed each round so lineage stays O(1) across the
-    log2(max_depth) rounds (the resolve_redirects policy). The closure
+    log2(max_depth) rounds (pointer doubling). The closure
     table itself is the output product — its size, not the algorithm,
     is the 100-TB budget item, and `max_depth` is the explicit knob.
 
@@ -1853,7 +1853,7 @@ def degree_assortativity(
     standard convention, Newman 2002, public). r > 0: hubs link hubs
     (social-network shape); r < 0: hubs link leaves (web/biology
     shape) — the one-number structural fingerprint that tells a KG
-    curator which pruning strategy (k_core vs template_cap) fits.
+    curator which pruning strategy (k_core vs per-template capping) fits.
 
     Exactness: every sum is BIGINT over integer degree products —
     by symmetry sum_x = sum_y and sum_xx = sum_yy, so r reduces to
@@ -1960,8 +1960,8 @@ def weighted_pagerank(
     distributes proportionally to weight instead of uniformly:
     r_{t+1}(n) = round((1-d)/N + d * sum_{m->n} r_t(m) * w(m,n)/W(m),
     state_round), W(m) = m's total out-weight. Over the host graph
-    this is the rank the link COUNTS justify (host_graph carries
-    n_links for exactly this): a host linking a target 10,000 times
+    this is the rank the link COUNTS justify (weight = n_links per
+    host pair): a host linking a target 10,000 times
     endorses it differently than one linking it once — and a spam
     host's repeated self-promotion concentrates on few targets, where
     uniform PageRank would dilute it.
@@ -2188,8 +2188,8 @@ def bounded_scc(
     node trivially reaches itself, so singletons label themselves).
     The directed-cycle detector components' undirected transitivity
     can't be: on the host graph, a nontrivial label groups RECIPROCAL
-    link structures — link exchanges and farm rings — which is
-    exactly the host_spam_signals evidence at multi-hop range.
+    link structures — link exchanges and farm rings — the
+    link-farm reciprocity evidence at multi-hop range.
 
     Bounded honestly: cycles longer than k hops split (label = self);
     k is the explicit cost knob because the forward-reach table is

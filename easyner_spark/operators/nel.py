@@ -504,7 +504,7 @@ def edit_merge_candidates(
 
     Scale: candidate generation is a self-join PER BLOCK KEY; blocks
     bigger than `max_block` (degenerate keys: 'the'-prefixed
-    everything) are DROPPED, not exploded — the template_cap policy.
+    everything) are DROPPED, not exploded (a documented cap).
     One shuffle on the block key, levenshtein verification runs
     JVM-side post-join, id_a < id_b halves the output, distinct
     merges the two key families.
@@ -957,7 +957,7 @@ def reciprocal_best_links(
     candidate-pair table: keep (a, b) iff b is a's highest-scoring
     partner AND a is b's. The standard high-precision gate for entity
     alignment (cross-KG sameAs), bilingual lexicon induction over
-    bitext_candidates, and mirror-host pairing — mutual preference
+    candidate bitext, and mirror-host pairing — mutual preference
     kills the asymmetric hub matches a one-sided argmax lets through.
 
     Determinism contract: `score_col` is an INTEGER (micro-unit

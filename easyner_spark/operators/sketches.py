@@ -604,8 +604,8 @@ def kmv_set_ops(
 
     Scale: the sketch table is one bounded row per group (<= k longs);
     the self-join is array math over group-pair rows — for unbounded
-    group counts feed a candidate pair list instead of the full cross
-    (the host_cocitation pattern)."""
+    group counts feed a candidate pair list instead of the full
+    cross."""
     a = sketches.select(
         F.col(group_col).alias("g_a"), F.col("sketch").alias("sk_a")
     )

@@ -758,7 +758,7 @@ def host_lang_mix(
     the curation-planning table over lang_id's predictions: which
     hosts are monolingual (route whole-host), which are multilingual
     (route per-page), and which report a language their content
-    doesn't match (join page_declarations for the declared side).
+    doesn't match (join the pages' declared language for that).
     pct_micro is the exact BIGINT micro-unit share of the host's docs.
 
     Scale (1 data shuffle): the composite (host, lang) rollup; host

@@ -550,6 +550,37 @@ def _validate_patterns(patterns: list[tuple[str, str, str]]) -> None:
             )
 
 
+def _validate_optionals(
+    req_vars: list[str],
+    optionals: list[list[tuple[str, str, str]]] | None,
+) -> list[tuple[list[str], list[str]]]:
+    """(shared, new) variables per OPTIONAL group. Each group must
+    share a variable with the required block, and its new variables
+    must be disjoint from the required block's and every earlier
+    group's (one output column per variable)."""
+    seen = set(req_vars)
+    out = []
+    for group in optionals or []:
+        _validate_patterns(group)
+        gvars = _pattern_vars(group)
+        shared = [v for v in gvars if v in req_vars]
+        new = [v for v in gvars if v not in req_vars]
+        if not shared:
+            raise ValueError(
+                f"optional group shares no variable with the required "
+                f"block: {group!r}"
+            )
+        clash = [v for v in new if v in seen]
+        if clash:
+            raise ValueError(
+                f"optional groups must introduce disjoint new "
+                f"variables; clash on {clash!r}"
+            )
+        seen.update(new)
+        out.append((shared, new))
+    return out
+
+
 _FILTER_OPS = {
     "=", "!=", "<", "<=", ">", ">=", "prefix", "contains", "regex",
 }
@@ -1069,22 +1100,8 @@ def match_patterns(
             block(group).select(*shared).distinct(), shared, "left_anti"
         )
     all_vars = list(req_vars)
-    for group in optionals or []:
-        _validate_patterns(group)
-        gvars = _pattern_vars(group)
-        shared = [v for v in gvars if v in req_vars]
-        new = [v for v in gvars if v not in req_vars]
-        if not shared:
-            raise ValueError(
-                f"optional group shares no variable with the required "
-                f"block: {group!r}"
-            )
-        clash = [v for v in new if v in all_vars]
-        if clash:
-            raise ValueError(
-                f"optional groups must introduce disjoint new "
-                f"variables; clash on {clash!r}"
-            )
+    opt_vars = _validate_optionals(req_vars, optionals)
+    for group, (shared, new) in zip(optionals or [], opt_vars):
         out = out.join(block(group).select(*shared, *new), shared, "left")
         all_vars.extend(new)
     out = out.select(*all_vars)
@@ -1252,16 +1269,11 @@ def match_patterns_oracle_sql(
         req_src = "\nUNION ALL\n".join(alts)
     out_cols = [f"req.{v}" for v in req_vars]
     joins = []
-    seen = set(req_vars)
-    for gi, group in enumerate(optionals or []):
-        _validate_patterns(group)
-        gvars = _pattern_vars(group)
-        shared = [v for v in gvars if v in req_vars]
-        new = [v for v in gvars if v not in seen]
+    opt_vars = _validate_optionals(req_vars, optionals)
+    for gi, (group, (shared, new)) in enumerate(zip(optionals or [], opt_vars)):
         on = " AND ".join(f"req.{v} = g{gi}.{v}" for v in shared)
         joins.append(f"LEFT JOIN ({naive(group)}) g{gi} ON {on}")
         out_cols.extend(f"g{gi}.{v}" for v in new)
-        seen.update(new)
     antis = []
     for v, vals in (bindings or {}).items():
         in_list = ", ".join(
@@ -1283,10 +1295,7 @@ SELECT {kw}{", ".join(out_cols)}
 FROM ({req_src}) req
 {nl.join(joins)}{where}
 """
-    all_out = list(req_vars) + [
-        v for gi, group in enumerate(optionals or [])
-        for v in _pattern_vars(group) if v not in req_vars
-    ]
+    all_out = list(req_vars) + [v for _, new in opt_vars for v in new]
     final_cols = all_out
     if group_by is not None or aggregates is not None:
         gb, aggs = _validate_aggregates(group_by, aggregates, all_out)
@@ -1432,7 +1441,7 @@ def edge_evidence(
     a triple emitted once per sentence pair keeps keys uniform; (2)
     the top-k window on the edge key — a hot edge's partition is
     bounded by its DISTINCT evidence sentences, and k rows survive;
-    per the url_dedup skew-tier measurement the single-shuffle window
+    per BASELINE.md's hot-canonical-url tier the single-shuffle window
     beats groupBy-min+join-back when every surviving row needs the
     group verdict. The sentence TEXT joins in AFTER the k-filter on
     the uniform (url, sent_idx) key — text never crosses the edge-key
@@ -3274,7 +3283,7 @@ def entity_summaries(
     Scale: predicate totals are a bounded broadcast table; the only
     shuffle is the per-entity rank window, partitioned BY entity — a
     hub entity sorts its own facts inside one task (degree-bounded,
-    the url_dedup-measured window class), never the corpus.
+    the bounded-per-key window class), never the corpus.
 
     Reference parity: no analog (the reference's analysis ends at
     frequency rollups, scripts/analysis.py:40-80).

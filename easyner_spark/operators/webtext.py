@@ -1,40 +1,30 @@
-"""Web-corpus URL operators: host extraction, URL canonicalization,
-per-host corpus statistics, and the host-skew profile that drives the
-salting strategy for host-keyed shuffles.
+"""Web-corpus URL operators: the recrawl collapse, url decomposition,
+recrawl change tracking, and the host-skew profile that sizes salted
+host-keyed shuffles.
 
 The north-star job runs over Common-Crawl-style pages keyed by url
 (BASELINE.json input_hint: `url:string, warc_ts, html, text, lang`).
-At 10^12 documents the url HOST is the natural partitioning key for
-politeness grouping, per-site dedup, and domain-level quality gates —
-and it is also the canonical skew hazard: a handful of hosts
-(wikipedia.org, blogspot hosts, large forums) hold orders of magnitude
-more pages than the median site. The reference pipeline never has to
-face this (its corpora are PubMed-sized); these operators are the
-beyond-reference layer that makes host-keyed work safe at crawl scale.
+The input holds every fetch of a url, and the url HOST is the natural
+key for politeness grouping and per-site caps. It is also the
+canonical skew hazard: a handful of hosts hold orders of magnitude
+more pages than the median site.
 
 Scale design:
 
-- `url_parts` / `canonical_url` are pure per-row codegen column chains
-  (regexp over the url string) — they fuse into the scan, zero shuffle.
-  We deliberately use `regexp_extract` rather than Spark's
-  `parse_url()` so the DuckDB oracle can run the byte-identical
-  pattern; both engines anchor the same ASCII regex.
-- `host_stats` is ONE hash aggregate on the host key with map-side
-  partial aggregation; skewed hosts are absorbed by the partial agg
-  (a hot host's rows combine within each input split before the
-  exchange), so unlike a host-keyed JOIN, the rollup itself needs no
-  salting — the same partial-agg-absorbs-skew result measured in
-  tools/skew_bench.py (BASELINE.md skew tier: unsalted rollup 1.66 s
-  beat salted 2.31 s at a 33% hot key).
+- `url_parts` is a pure per-row codegen column chain (regexp over the
+  url string) that fuses into the scan, zero shuffle. It uses
+  `regexp_extract` rather than Spark's `parse_url()` so the DuckDB
+  oracle can run the byte-identical pattern; both engines anchor the
+  same ASCII regex.
+- `latest_crawl` keeps the newest fetch per url with one algebraic
+  `max(struct)` aggregate, so recrawl skew is absorbed map-side.
+- `crawl_delta` compares each fetch with the previous one inside a
+  url-partitioned window (each url sorts only its own history).
 - `host_skew_profile` ranks hosts by page share and computes the salt
   factor a host-keyed JOIN or applyInPandas would need
-  (`ceil(n_docs / target_partition_rows)`), i.e. it materializes the
-  skew diagnosis the north rule requires ("URL-host skew via salted
-  repartitioning") as a queryable table instead of a hard-coded
-  constant. Window functions over a single host-count aggregate: the
-  rank/cumsum window moves ONE row per host, not per page, so the
-  window stage operates on |hosts| rows (millions) not |pages|
-  (trillions).
+  (`ceil(n_docs / target_partition_rows)`); `salted_repartition_by_host`
+  applies it. The rank/cumsum runs over the |hosts|-row aggregate,
+  not over pages.
 """
 
 from __future__ import annotations
@@ -86,72 +76,6 @@ def url_parts(
     for name, col in cols.items():
         out = out.withColumn(name, col)
     return out if keep else out.select(url_col, *cols)
-
-
-def canonical_url(url: Column | str) -> Column:
-    """Canonical form for exact URL-level dedup: lowercase scheme+host,
-    drop `www.` prefix, drop fragment, drop common tracking query
-    params (utm_*, fbclid, gclid), drop a trailing `/` on the path.
-
-    Chain of regexp_replace — per-row codegen, runs at scan speed.
-    The param-strip removes `utm_`/`fbclid`/`gclid` pairs wherever
-    they appear in the query string, then tidies the separators left
-    behind: if the stripped pair was the leading `?p=v`, the first
-    surviving `&` is promoted back to `?`; a dangling trailing `?`/`&`
-    is dropped. A trailing `/` is stripped uniformly (including the
-    bare root path — documented normalization choice, mirrored by the
-    oracle).
-    """
-    u = F.col(url) if isinstance(url, str) else url
-    # fragment off first so later patterns never match inside it
-    u = F.regexp_replace(u, r"#.*$", "")
-    # lowercase scheme://host (match group, rebuild). The scheme class
-    # must NOT admit ':' or '/' — a greedy class would extend the
-    # match to a LATER '://' inside the path and lowercase
-    # case-significant path segments.
-    scheme_host = F.lower(
-        F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
-    )
-    rest = F.regexp_replace(u, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
-    u = F.concat(scheme_host, rest)
-    u = F.regexp_replace(u, r"://www\.", "://")
-    # tracking params; then re-tidy the separators they leave behind
-    u = F.regexp_replace(u, r"[?&](utm_[a-z]+|fbclid|gclid)=[^&#]*", "")
-    u = F.regexp_replace(u, r"\?&", "?")
-    u = F.regexp_replace(u, r"^([^?&]*)&", r"$1?")
-    u = F.regexp_replace(u, r"[?&]$", "")
-    u = F.regexp_replace(u, r"/$", "")
-    return u
-
-
-def host_stats(
-    pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-) -> DataFrame:
-    """Per-host corpus rollup: page count, total/mean text chars, and
-    language spread. ONE hash-aggregate shuffle on host; partial
-    aggregation absorbs host skew map-side (see module docstring).
-
-    `n_langs` uses a collect_set size rather than countDistinct: the
-    countDistinct Expand rewrite doubles the aggregate's input rows
-    and resets partitioning (measured round-2 pitfall), while a
-    set-union partial agg stays one pass. Language cardinality per
-    host is tiny (<200) so the set is bounded.
-    """
-    df = url_parts(pages, url_col=url_col, keep=True)
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length(F.col(text_col))).alias("total_chars"),
-    ]
-    if lang_col is not None:
-        aggs.append(F.size(F.collect_set(F.col(lang_col))).alias("n_langs"))
-    out = df.groupBy("host").agg(*aggs)
-    return out.withColumn(
-        "mean_chars",
-        F.round(F.col("total_chars") / F.col("n_docs"), 6),
-    )
 
 
 def host_skew_profile(
@@ -207,176 +131,6 @@ def host_skew_profile(
             ).alias("salt"),
         )
     )
-
-
-HREF_RE = r'href="([^"]*)"'     # double-quoted hrefs; oracle-shared
-ABS_URL_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*:"   # has a scheme
-PROTO_REL_HOST_RE = r"^//([^/?#]+)"
-
-
-def extract_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Outlink extraction: one row per (page url, href) with the
-    resolved target host. Pure codegen — regexp_extract_all over the
-    utf-8-decoded html, posexplode, a when-chain classifier:
-
-      * absolute http(s) links -> their own host (lowered, :port
-        stripped);
-      * protocol-relative `//host/...` -> that host;
-      * other scheme-ful links (mailto:, javascript:, ftp:, data:)
-        -> dropped (`target_host` null, filtered);
-      * everything else is a relative path -> the SOURCE host.
-
-    The href regex is the deliberate crawl-grade simplification
-    (double-quoted attributes only) so the DuckDB oracle can run the
-    byte-identical pattern; the boilerplate HTMLParser walk is the
-    place a full attribute parser would live if unquoted hrefs
-    mattered (operators/boilerplate.py handles real DOM quirks).
-
-    Scale shape: narrow projection + generator (posexplode) — no
-    shuffle; fan-out is bounded by links-per-page. Runs at scan speed
-    like every per-row stage here.
-    """
-    src_host = _host_col(F.col(url_col))
-    links = pages.select(
-        F.col(url_col),
-        src_host.alias("src_host"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(cast({html_col} as string), '{HREF_RE}', 1)"
-            )
-        ).alias("href"),
-    )
-    # '' arises from malformed absolute/protocol-relative hrefs
-    # ('https://', '//') whose host regex finds nothing — junk, same
-    # as the null-target schemes.
-    return (
-        links.withColumn("target_host", _target_host_col(F.col("href")))
-        .where(F.col("target_host").isNotNull() & (F.col("target_host") != ""))
-    )
-
-
-def _target_host_col(href: Column, src_host: Column | None = None) -> Column:
-    """The outlink target-host classifier shared by extract_links and
-    extract_anchors (docstring on extract_links; the oracle mirrors the
-    when-chain order exactly)."""
-    if src_host is None:
-        src_host = F.col("src_host")
-    return (
-        F.when(href.rlike(r"^[hH][tT][tT][pP][sS]?://"), _host_col(href))
-        .when(href.startswith("//"), _host_col(href, PROTO_REL_HOST_RE))
-        .when(href.rlike(ABS_URL_RE), F.lit(None).cast("string"))
-        .otherwise(src_host)
-    )
-
-
-def host_graph(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    drop_self: bool = False,
-) -> DataFrame:
-    """The host-level link graph: (src_host, dst_host, n_links) edge
-    list aggregated from every outlink — the canonical Common-Crawl
-    derived product (the "host web graph") and the input to
-    graph.pagerank for host authority.
-
-    One shuffle (edge-key rollup with map-side partial agg — the hub
-    host's out-edges combine within each split, so host skew is
-    absorbed exactly like host_stats). Feed the result to
-    graph.pagerank(src='src_host', dst='dst_host') for the standard
-    crawl-prioritization ranking.
-    """
-    e = extract_links(pages, html_col=html_col, url_col=url_col)
-    if drop_self:
-        e = e.where(F.col("src_host") != F.col("target_host"))
-    return (
-        e.groupBy(F.col("src_host"), F.col("target_host").alias("dst_host"))
-        .agg(F.count(F.lit(1)).alias("n_links"))
-    )
-
-
-def host_cocitation(
-    hg: DataFrame,
-    max_out: int = 32,
-) -> DataFrame:
-    """Co-citation strength over the host graph: (host_a, host_b,
-    n_sources) = how many distinct source hosts link to BOTH — the
-    classic relatedness signal (Small 1973) used to cluster mirror /
-    affiliate hosts and to propose same-as candidates for KG node
-    merging that share no lexical alias.
-
-    Input: host_graph output (src_host, dst_host, n_links).
-
-    The quadratic hazard and its cap: a directory hub linking to 10^5
-    hosts would alone emit ~10^10/2 pairs. Per source host we keep
-    only the top `max_out` destinations by (n_links DESC, dst_host
-    ASC) — a DETERMINISTIC truncation (documented, not silent: hubs
-    beyond the cap contribute only their strongest endorsements, which
-    is also the signal argument — a 10^5-outlink directory's co-links
-    are near-noise). Pair fan-out is then bounded by
-    max_out*(max_out-1)/2 per source.
-
-    Plan shape: ONE repartition("src_host") feeds the rank window AND
-    the per-source array collect (same prefix clustering — no second
-    exchange); pairs come from the in-array i<j transform (bounded by
-    the cap, sorted so host_a < host_b), one explode, then the
-    pair-key rollup shuffle with map-side partial agg. Two shuffles
-    total; no self-join of the raw edge list.
-    """
-    w = Window.partitionBy("src_host").orderBy(
-        F.col("n_links").desc(), F.col("dst_host").asc()
-    )
-    kept = (
-        hg.repartition("src_host")
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_out)
-    )
-    per_src = kept.groupBy("src_host").agg(
-        F.array_sort(F.collect_list("dst_host")).alias("dsts")
-    )
-    n = F.size("dsts")
-    pairs = F.flatten(
-        F.transform(
-            F.col("dsts"),
-            lambda x, i: F.transform(
-                F.slice(F.col("dsts"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("host_a"), y.alias("host_b")),
-            ),
-        )
-    )
-    return (
-        per_src.where(n >= 2)
-        .select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.host_a").alias("host_a"), F.col("p.host_b").alias("host_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
-    )
-
-
-def host_cocitation_oracle_sql(with_prefix: str, max_out: int = 32) -> str:
-    """DuckDB twin of host_cocitation; `with_prefix` is a complete
-    WITH chain whose LAST relation is hg(src_host, dst_host, n_links)
-    — composes directly with the entry's _HOSTLINKS_CTE. The
-    relational formulation (rank window + self-join on source) — fine
-    at oracle scale, exactly the shape the distributed operator
-    avoids."""
-    return f"""{with_prefix},
-kept AS (
-  SELECT src_host, dst_host,
-         row_number() OVER (PARTITION BY src_host
-                            ORDER BY n_links DESC, dst_host ASC) AS rn
-  FROM hg
-)
-SELECT a.dst_host AS host_a, b.dst_host AS host_b,
-       count(*)::BIGINT AS n_sources
-FROM kept a
-JOIN kept b ON a.src_host = b.src_host AND a.dst_host < b.dst_host
-WHERE a.rn <= {max_out} AND b.rn <= {max_out}
-GROUP BY a.dst_host, b.dst_host
-"""
 
 
 def latest_crawl(
@@ -440,8 +194,8 @@ def salted_repartition_by_host(
     way). Downstream per-host work (applyInPandas politeness batches,
     host-keyed joins) inherits the partitioning; host-level AGGREGATES
     should aggregate the salted partials first (sum over salt cells)
-    — or simply use host_stats, whose partial aggs absorb skew without
-    salting (BASELINE.md skew tier).
+    — a plain host groupBy's partial aggs absorb skew without salting
+    (BASELINE.md skew tier).
 
     The salt expression reuses xxhash64 (JVM codegen, same family as
     the MinHash path) — deterministic, so two runs co-partition.
@@ -463,34 +217,167 @@ def salted_repartition_by_host(
     return salted.repartition("host", "_salt")
 
 
-def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """Exact URL-level dedup on the canonical form: keeps one page per
-    canonical url (min url string wins — deterministic), flags the
-    rest. Same one-shuffle shape as dedup.exact_dedup but keyed on
-    `canon_url` instead of a content hash, so recrawls of
-    `http://www.x.com/a?utm_source=rss` and `http://x.com/a`
-    collapse. Canonical-key grouping is host-skew-prone (one hot host
-    -> many canon keys, still fine; one hot PAGE url recrawled
-    billions of times -> hot key), so the group key includes the full
-    canonical url whose cardinality bounds any single reduce group by
-    the recrawl count of one page.
+def crawl_delta(
+    pages: DataFrame,
+    url_col: str = "url",
+    ts_col: str = "warc_ts",
+    text_col: str = "text",
+) -> DataFrame:
+    """Recrawl change tracking: for every fetch of every url, compare
+    against the PREVIOUS fetch of the same url (by `ts_col`) and emit
+    `change` in {'new','unchanged','changed'} plus `delta_chars`
+    (extracted-text length delta, 0 for first fetch). This is the
+    crawl-frequency/freshness signal a recrawl scheduler and an
+    incremental KG both consume (only 'changed' pages need re-NER).
 
-    Plan choice (measured, tools/skew_bench.py `url` tier, 600k rows /
-    30% on ONE canon key, interleaved): the single-shuffle window
-    (1.14 s) beats the groupBy-min + join-back alternative (2.84 s) —
-    two shuffles cost more than sorting a 180k-row hot partition.
-    Unlike paragraph_dedup's boilerplate digests (10^10 replicas
-    possible), a canon-url key is bounded by ONE page's recrawl count;
-    if a snapshot table genuinely exceeds reducer capacity per page,
-    collapse recrawls with latest_crawl (algebraic, skew-immune)
-    BEFORE deduping — that is the intended composition, not a salted
-    window.
+    Contract: ordering within a url is by `ts_col` alone — callers
+    must not feed duplicate (url, ts) fetches (latest_crawl's struct
+    tie-break exists for that collapse); comparison is exact string
+    equality on `text_col`, with null text (failed extraction)
+    coalesced to '' first — so two consecutive failed fetches compare
+    'unchanged' and delta_chars is never null (the streaming twin,
+    streaming.stateful_crawl_delta, hashes '' for null and matches
+    row for row).
+
+    Scale shape: ONE shuffle (window partitioned by url). Unlike a
+    corpus-wide sort, each url sorts only its OWN recrawl history —
+    a hot url recrawled millions of times is the bound, not the
+    10^12-row table. Production note: at that extreme, compare
+    sha2(text) instead of text to keep the shuffled row narrow; the
+    text comparison here keeps the oracle byte-identical.
     """
-    df = pages.withColumn("canon_url", canonical_url(url_col))
-    w = Window.partitionBy("canon_url")
+    w = Window.partitionBy(url_col).orderBy(ts_col)
+    # lag of the COALESCED text: '' is a real value, so _prev is null
+    # ONLY on the first fetch — 'new' detection stays unambiguous
+    cur = F.coalesce(F.col(text_col), F.lit(""))
+    prev = F.lag(cur).over(w)
     return (
-        df.withColumn("keep_url", F.min(F.col(url_col)).over(w))
-        .withColumn("is_dup", (F.col(url_col) != F.col("keep_url")))
+        pages.withColumn("_prev", prev)
+        .withColumn(
+            "change",
+            F.when(F.col("_prev").isNull(), F.lit("new"))
+            .when(F.col("_prev") == cur, F.lit("unchanged"))
+            .otherwise(F.lit("changed")),
+        )
+        .withColumn(
+            "delta_chars",
+            F.when(F.col("_prev").isNull(), F.lit(0)).otherwise(
+                F.length(cur) - F.length("_prev")
+            ),
+        )
+        .drop("_prev")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Deferred tranche: host rollups, link/anchor extraction, url policy and
+# page-structure extractors that no shipped job reaches. Only their own
+# tests and tools/surface.py's KEEP map hold them; the next cut deletes
+# them together with those tests.
+# ---------------------------------------------------------------------------
+
+
+def host_stats(
+    pages: DataFrame,
+    url_col: str = "url",
+    text_col: str = "text",
+    lang_col: str | None = "lang",
+) -> DataFrame:
+    """Per-host corpus rollup: page count, total/mean text chars, and
+    language spread. ONE hash-aggregate shuffle on host; partial
+    aggregation absorbs host skew map-side (see module docstring).
+
+    `n_langs` uses a collect_set size rather than countDistinct: the
+    countDistinct Expand rewrite doubles the aggregate's input rows
+    and resets partitioning (measured round-2 pitfall), while a
+    set-union partial agg stays one pass. Language cardinality per
+    host is tiny (<200) so the set is bounded.
+    """
+    df = url_parts(pages, url_col=url_col, keep=True)
+    aggs = [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.length(F.col(text_col))).alias("total_chars"),
+    ]
+    if lang_col is not None:
+        aggs.append(F.size(F.collect_set(F.col(lang_col))).alias("n_langs"))
+    out = df.groupBy("host").agg(*aggs)
+    return out.withColumn(
+        "mean_chars",
+        F.round(F.col("total_chars") / F.col("n_docs"), 6),
+    )
+ABS_URL_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*:"   # has a scheme
+PROTO_REL_HOST_RE = r"^//([^/?#]+)"
+
+
+def _target_host_col(href: Column, src_host: Column | None = None) -> Column:
+    """The outlink target-host classifier of extract_anchors: absolute
+    http(s) and protocol-relative hrefs resolve to their own host, other
+    schemes (mailto:, javascript:) to null, relative hrefs to the source
+    host (the oracle mirrors the when-chain order exactly)."""
+    if src_host is None:
+        src_host = F.col("src_host")
+    return (
+        F.when(href.rlike(r"^[hH][tT][tT][pP][sS]?://"), _host_col(href))
+        .when(href.startswith("//"), _host_col(href, PROTO_REL_HOST_RE))
+        .when(href.rlike(ABS_URL_RE), F.lit(None).cast("string"))
+        .otherwise(src_host)
+    )
+
+
+def host_cocitation(
+    hg: DataFrame,
+    max_out: int = 32,
+) -> DataFrame:
+    """Co-citation strength over the host graph: (host_a, host_b,
+    n_sources) = how many distinct source hosts link to BOTH — the
+    classic relatedness signal (Small 1973) used to cluster mirror /
+    affiliate hosts and to propose same-as candidates for KG node
+    merging that share no lexical alias.
+
+    Input: a host edge table (src_host, dst_host, n_links).
+
+    The quadratic hazard and its cap: a directory hub linking to 10^5
+    hosts would alone emit ~10^10/2 pairs. Per source host we keep
+    only the top `max_out` destinations by (n_links DESC, dst_host
+    ASC) — a DETERMINISTIC truncation (documented, not silent: hubs
+    beyond the cap contribute only their strongest endorsements, which
+    is also the signal argument — a 10^5-outlink directory's co-links
+    are near-noise). Pair fan-out is then bounded by
+    max_out*(max_out-1)/2 per source.
+
+    Plan shape: ONE repartition("src_host") feeds the rank window AND
+    the per-source array collect (same prefix clustering — no second
+    exchange); pairs come from the in-array i<j transform (bounded by
+    the cap, sorted so host_a < host_b), one explode, then the
+    pair-key rollup shuffle with map-side partial agg. Two shuffles
+    total; no self-join of the raw edge list.
+    """
+    w = Window.partitionBy("src_host").orderBy(
+        F.col("n_links").desc(), F.col("dst_host").asc()
+    )
+    kept = (
+        hg.repartition("src_host")
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= max_out)
+    )
+    per_src = kept.groupBy("src_host").agg(
+        F.array_sort(F.collect_list("dst_host")).alias("dsts")
+    )
+    n = F.size("dsts")
+    pairs = F.flatten(
+        F.transform(
+            F.col("dsts"),
+            lambda x, i: F.transform(
+                F.slice(F.col("dsts"), i + 2, F.greatest(n - i - 1, F.lit(0))),
+                lambda y: F.struct(x.alias("host_a"), y.alias("host_b")),
+            ),
+        )
+    )
+    return (
+        per_src.where(n >= 2)
+        .select(F.explode(pairs).alias("p"))
+        .groupBy(F.col("p.host_a").alias("host_a"), F.col("p.host_b").alias("host_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
     )
 
 
@@ -506,15 +393,15 @@ def extract_anchors(
     url_col: str = "url",
 ) -> DataFrame:
     """Anchor extraction: one row per (page url, href, anchor text)
-    with the resolved target host — extract_links plus the LINK TEXT,
+    with the resolved target host — the outlink plus the LINK TEXT,
     the classic web-KG signal (anchor text is how the rest of the web
     NAMES the target; Common-Crawl anchor corpora feed entity-alias
     dictionaries exactly like the reference's NEL alias table,
-    /root/reference/data/dictionaries: the alias->ID lookup here is
+    EasyNER's data/dictionaries: the alias->ID lookup here is
     built FROM anchors instead of curated lists).
 
-    Same crawl-grade double-quoted-attribute simplification as
-    extract_links (docstring there); elements are matched whole
+    Crawl-grade simplification: only double-quoted href attributes
+    match; elements are matched whole
     (`<a href="..."...>text</a>`) then href/text pulled out per
     element, so the DuckDB oracle can run byte-identical patterns.
     Pure codegen: regexp_extract_all + posexplode, zero shuffle.
@@ -572,58 +459,6 @@ def anchor_terms(
         ).alias("term"),
     )
     return toks.groupBy("dst_host", "term").agg(F.count(F.lit(1)).alias("n"))
-
-
-def crawl_delta(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-) -> DataFrame:
-    """Recrawl change tracking: for every fetch of every url, compare
-    against the PREVIOUS fetch of the same url (by `ts_col`) and emit
-    `change` in {'new','unchanged','changed'} plus `delta_chars`
-    (extracted-text length delta, 0 for first fetch). This is the
-    crawl-frequency/freshness signal a recrawl scheduler and an
-    incremental KG both consume (only 'changed' pages need re-NER).
-
-    Contract: ordering within a url is by `ts_col` alone — callers
-    must not feed duplicate (url, ts) fetches (latest_crawl's struct
-    tie-break exists for that collapse); comparison is exact string
-    equality on `text_col`, with null text (failed extraction)
-    coalesced to '' first — so two consecutive failed fetches compare
-    'unchanged' and delta_chars is never null (the streaming twin,
-    streaming.stateful_crawl_delta, hashes '' for null and matches
-    row for row).
-
-    Scale shape: ONE shuffle (window partitioned by url). Unlike a
-    corpus-wide sort, each url sorts only its OWN recrawl history —
-    a hot url recrawled millions of times is the bound, not the
-    10^12-row table. Production note: at that extreme, compare
-    sha2(text) instead of text to keep the shuffled row narrow; the
-    text comparison here keeps the oracle byte-identical.
-    """
-    w = Window.partitionBy(url_col).orderBy(ts_col)
-    # lag of the COALESCED text: '' is a real value, so _prev is null
-    # ONLY on the first fetch — 'new' detection stays unambiguous
-    cur = F.coalesce(F.col(text_col), F.lit(""))
-    prev = F.lag(cur).over(w)
-    return (
-        pages.withColumn("_prev", prev)
-        .withColumn(
-            "change",
-            F.when(F.col("_prev").isNull(), F.lit("new"))
-            .when(F.col("_prev") == cur, F.lit("unchanged"))
-            .otherwise(F.lit("changed")),
-        )
-        .withColumn(
-            "delta_chars",
-            F.when(F.col("_prev").isNull(), F.lit(0)).otherwise(
-                F.length(cur) - F.length("_prev")
-            ),
-        )
-        .drop("_prev")
-    )
 
 
 def host_suffixes(host: Column | str) -> Column:
@@ -761,881 +596,8 @@ def resolve_redirects(
         .otherwise(F.lit("unresolved"))
         .alias("status"),
     )
-
-
-def resolve_redirects_oracle_sql(
-    redirects_cte: str, max_steps: int = 8, final_sql: str | None = None
-) -> str:
-    """DuckDB twin of resolve_redirects: a depth-capped recursive CTE
-    walks the same min(chain, max_steps) single steps; the max-hops row
-    per url is the final state (hops strictly increases, so it is
-    unique). `redirects_cte` must define relation r(url, target).
-    `final_sql` replaces the terminal SELECT so consumers can keep
-    composing CTEs over `last` (pagination_series does; it must start
-    with ', ' or a SELECT — the doc_link_graph_oracle_sql contract)."""
-    return f"""
-WITH RECURSIVE {redirects_cte},
-walk(url, cur, hops, done) AS (
-  SELECT r.url, r.target, 1, t.url IS NULL
-  FROM r LEFT JOIN r t ON r.target = t.url
-  UNION ALL
-  SELECT w.url, n.target, w.hops + 1, t2.url IS NULL
-  FROM walk w
-  JOIN r n ON w.cur = n.url
-  LEFT JOIN r t2 ON n.target = t2.url
-  WHERE NOT w.done AND w.hops < {max_steps}
-),
-last AS (
-  SELECT url, cur, hops,
-         CASE WHEN done THEN 'resolved' ELSE 'unresolved' END AS status,
-         row_number() OVER (PARTITION BY url ORDER BY hops DESC) AS rn
-  FROM walk
-)
-{final_sql if final_sql is not None else '''SELECT url, cur AS final_url, hops::BIGINT AS hops, status
-FROM last WHERE rn = 1
-'''}"""
-
-
-def robots_verdict(
-    pages: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
-    """REP (robots.txt) politeness audit: per url, the verdict the
-    Robots Exclusion Protocol longest-match rule produces. `rules` is
-    (host, directive 'allow'|'disallow', path_prefix) — one row per
-    robots.txt line for the crawler's user-agent, prefix-matched
-    against the url path ('' prefix matches everything, like a bare
-    `Disallow:` line inverted). Winner per url = the matching rule
-    with the LONGEST path_prefix; on a length tie, allow wins — the
-    google/REP RFC 9309 tiebreak. Urls whose host has no rules, or no
-    matching prefix, are allowed.
-
-    Output: (url, n_matched, win_len, verdict) with win_len = -1 when
-    nothing matched. Use `robots_filter` for the actual gate.
-
-    Scale shape: the pages->rules join keys on HOST — the canonical
-    skew key (see module docstring); the join is AQE-decided, never a
-    forced broadcast (a full-crawl robots corpus is millions of hosts
-    — small per host, not small in total), and hot hosts fan out by
-    at most rules-per-host (tens) before the url-keyed winner
-    aggregate absorbs them map-side (min-of-struct partial agg, the
-    paragraph_dedup pattern). Path extraction is the module's shared
-    scan-fused ASCII regex.
-    """
-    host = _host_col(F.col(url_col))
-    path = F.coalesce(
-        F.nullif(F.regexp_extract(F.col(url_col), PATH_RE, 1), F.lit("")),
-        F.lit("/"),
-    )
-    p = pages.select(
-        F.col(url_col).alias("url"), host.alias("_host"), path.alias("_path")
-    )
-    r = rules.select(
-        F.col("host").alias("_host"),
-        F.col("directive"),
-        F.col("path_prefix"),
-    )
-    j = p.join(r, "_host", "left")
-    matched = F.col("path_prefix").isNotNull() & F.col("_path").startswith(
-        F.col("path_prefix")
-    )
-    rank = F.when(F.col("directive") == "disallow", F.lit(1)).otherwise(F.lit(0))
-    key = F.when(
-        matched,
-        F.struct(
-            (-F.length("path_prefix")).cast("long").alias("neg_len"),
-            rank.cast("long").alias("rank"),
-        ),
-    )
-    won = j.groupBy("url").agg(
-        F.sum(F.when(matched, 1).otherwise(0)).cast("long").alias("n_matched"),
-        F.min(key).alias("_win"),  # min skips NULLs: unmatched rows drop out
-    )
-    return won.select(
-        "url",
-        "n_matched",
-        F.coalesce(-F.col("_win.neg_len"), F.lit(-1)).cast("long").alias("win_len"),
-        F.when(F.col("_win.rank") == 1, F.lit("disallowed"))
-        .otherwise(F.lit("allowed"))
-        .alias("verdict"),
-    )
-
-
-def robots_filter(
-    pages: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    keep_disallowed: bool = False,
-) -> DataFrame:
-    """Drop pages robots_verdict disallows (keep_disallowed=True
-    inverts — audit mode), preserving the input schema."""
-    bad = (
-        robots_verdict(pages, rules, url_col=url_col)
-        .where(F.col("verdict") == "disallowed")
-        .select(F.col("url").alias(url_col))
-    )
-    how = "left_semi" if keep_disallowed else "left_anti"
-    return pages.join(bad, url_col, how)
-
-
-def robots_verdict_oracle_sql(pages_sql: str, rules_sql: str) -> str:
-    """DuckDB twin of robots_verdict. `pages_sql` must yield (url),
-    `rules_sql` (host, directive, path_prefix). Same longest-match /
-    allow-on-tie winner via a min over the identical (neg_len, rank)
-    tuple, encoded as a BIGINT (len < 2^20 assumed) so both engines
-    order identically."""
-    return f"""
-WITH pg AS ({pages_sql}),
-ru AS ({rules_sql}),
-px AS (
-  SELECT url,
-    regexp_replace(lower(regexp_extract(url,
-      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '') AS host,
-    coalesce(nullif(regexp_extract(url,
-      '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1), ''), '/') AS path
-  FROM pg
-),
-j AS (
-  SELECT px.url,
-    CASE WHEN ru.path_prefix IS NOT NULL
-              AND starts_with(px.path, ru.path_prefix)
-         THEN 1 ELSE 0 END AS m,
-    CASE WHEN ru.path_prefix IS NOT NULL
-              AND starts_with(px.path, ru.path_prefix)
-         THEN -length(ru.path_prefix) * 2
-              + (CASE WHEN ru.directive = 'disallow' THEN 1 ELSE 0 END)
-         END AS key
-  FROM px LEFT JOIN ru ON px.host = ru.host
-),
-w AS (
-  SELECT url, sum(m)::BIGINT AS n_matched, min(key) AS wk
-  FROM j GROUP BY url
-)
-SELECT url, n_matched,
-       coalesce((-(wk - (((wk % 2) + 2) % 2))) / 2, -1)::BIGINT AS win_len,
-       CASE WHEN ((wk % 2) + 2) % 2 = 1 THEN 'disallowed'
-            ELSE 'allowed' END AS verdict
-FROM w
-"""
-
-
-# Head-metadata patterns: same crawl-grade simplification as HREF_RE
-# (double-quoted attributes, fixed attribute order) so the DuckDB
-# oracle runs byte-identical regexes. Case-insensitivity is handled by
-# matching on lower(html) — Java and RE2 flag syntax differs, lower()
-# does not.
-TITLE_RE = r"<title[^>]*>([^<]*)</title>"
-META_DESC_RE = r'<meta name="description" content="([^"]*)"'
-CANONICAL_RE = r'<link rel="canonical" href="([^"]*)"'
-
-
-def extract_meta(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Head-metadata extraction per page: (url, title, meta_desc,
-    canonical_href, effective_url). Missing elements are NULL;
-    `effective_url` = canonical_href when the page declares a
-    rel=canonical (the dedup key a crawl pipeline actually groups on —
-    CMS mirrors and tracking-param variants all declare the same
-    canonical), else the fetched url. Title is whitespace-trimmed;
-    all matching is on lower(html) so tag/attribute case never
-    matters, and values come from the ORIGINAL bytes via position
-    arithmetic-free re-extraction on the lowered text (titles are
-    lowercased — the canonicalized comparison form, same contract as
-    mention_lc in the NER layer).
-
-    Scale shape: pure per-row codegen regexp chain over the decoded
-    html — fuses into the scan, zero shuffle, prunes to (url, html).
-    """
-    h = F.lower(F.col(html_col).cast("string"))
-    title = F.nullif(F.trim(F.regexp_extract(h, TITLE_RE, 1)), F.lit(""))
-    desc = F.nullif(F.regexp_extract(h, META_DESC_RE, 1), F.lit(""))
-    canon = F.nullif(F.regexp_extract(h, CANONICAL_RE, 1), F.lit(""))
-    return pages.select(
-        F.col(url_col).alias("url"),
-        title.alias("title"),
-        desc.alias("meta_desc"),
-        canon.alias("canonical_href"),
-        F.coalesce(canon, F.col(url_col)).alias("effective_url"),
-    )
-
-
-def extract_meta_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_meta; `pages_sql` must yield
-    (url, html) with html TEXT (the synthesis side casts)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-h AS (SELECT url, lower(html) AS lh FROM pg)
-SELECT url,
-  nullif(trim(regexp_extract(lh, '<title[^>]*>([^<]*)</title>', 1)), '') AS title,
-  nullif(regexp_extract(lh, '<meta name="description" content="([^"]*)"', 1), '')
-    AS meta_desc,
-  nullif(regexp_extract(lh, '<link rel="canonical" href="([^"]*)"', 1), '')
-    AS canonical_href,
-  coalesce(
-    nullif(regexp_extract(lh, '<link rel="canonical" href="([^"]*)"', 1), ''),
-    url) AS effective_url
-FROM h
-"""
-
-
-# ASCII whitespace class shared with the oracle (Java '\s' and RE2
-# '\s' agree on ASCII; the explicit class removes any doubt).
-ALIAS_WS_RE = r"[ \t\r\n]+"
-
-
-def alias_candidates(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    min_support: int = 2,
-    min_hosts: int = 2,
-) -> DataFrame:
-    """Entity-alias dictionary mining from anchor text — the web-scale
-    replacement for the reference's curated alias lists (its NEL
-    dictionary, /root/reference/data/dictionaries): the full
-    NORMALIZED anchor phrase (lowercased, whitespace-collapsed) is an
-    alias CANDIDATE for the host it points at. Output per
-    (entity_host, alias): support (total inlinks using that phrase),
-    n_src_hosts (distinct linking hosts), and is_confident = support
-    >= min_support AND n_src_hosts >= min_hosts — the multi-host
-    evidence gate that stops a single spam site from minting aliases.
-
-    Scale shape: phrase normalization fuses into the anchor scan; the
-    distinct-host count is a composite pre-agg (entity, alias,
-    src_host) followed by a rollup whose key is a PREFIX of the
-    pre-agg key, so Catalyst reuses the first shuffle's partitioning
-    (the entity_frequency one-shuffle pattern) — and no countDistinct
-    Expand. Hot targets (everyone links the hub) are absorbed
-    map-side by both aggregates.
-    """
-    a = extract_anchors(pages, html_col=html_col, url_col=url_col)
-    alias = F.lower(F.trim(F.regexp_replace(F.col("anchor"), ALIAS_WS_RE, " ")))
-    base = a.select(
-        F.col("target_host").alias("entity_host"),
-        alias.alias("alias"),
-        F.col("src_host"),
-    ).where(F.col("alias") != "")
-    g0 = (
-        base.repartition("entity_host", "alias")
-        .groupBy("entity_host", "alias", "src_host")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return g0.groupBy("entity_host", "alias").agg(
-        F.sum("cnt").cast("long").alias("support"),
-        F.count(F.lit(1)).cast("long").alias("n_src_hosts"),
-    ).withColumn(
-        "is_confident",
-        (F.col("support") >= min_support) & (F.col("n_src_hosts") >= min_hosts),
-    )
-
-
-def alias_candidates_oracle_sql(
-    anchors_prefix: str, min_support: int = 2, min_hosts: int = 2
-) -> str:
-    """DuckDB twin of alias_candidates; `anchors_prefix` is a complete
-    WITH chain whose last relation is t(src_host, anchor, dst_host)
-    (nullable/empty dst_host rows are filtered here)."""
-    return f"""{anchors_prefix},
-base AS (
-  SELECT dst_host AS entity_host,
-         lower(trim(regexp_replace(anchor, '[ \t\r\n]+', ' ', 'g'))) AS alias,
-         src_host
-  FROM t WHERE dst_host IS NOT NULL AND dst_host != ''
-),
-g0 AS (
-  SELECT entity_host, alias, src_host, count(*) AS cnt
-  FROM base WHERE alias != ''
-  GROUP BY entity_host, alias, src_host
-)
-SELECT entity_host, alias,
-       sum(cnt)::BIGINT AS support,
-       count(*)::BIGINT AS n_src_hosts,
-       (sum(cnt) >= {min_support} AND count(*) >= {min_hosts}) AS is_confident
-FROM g0 GROUP BY entity_host, alias
-"""
-
-
-# Origin = scheme://authority (host incl. any port), shared with the
-# DuckDB twin verbatim.
-ORIGIN_RE = r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)"
-
-
-def resolve_href(base: Column, href: Column) -> Column:
-    """Resolve an href against its page url (the RFC 3986 cases a
-    crawler meets in practice):
-
-      * absolute http(s)  -> itself;
-      * protocol-relative -> base's scheme + ':' + href;
-      * root-relative /x  -> base origin (scheme://host[:port]) + href;
-      * other scheme-ful  -> NULL (mailto:, javascript:, data:, ftp:);
-      * relative          -> base DIRECTORY (path up to the last '/',
-                             '/' when the path is empty) + href.
-
-    Dot segments ('../', './') are kept verbatim — normalize the
-    output with canonical_url if the consumer needs it; the in-corpus
-    join in doc_link_graph is exact-string either way. Pure codegen
-    when-chain over the module's shared ASCII regexes — zero shuffle.
-    """
-    scheme = F.regexp_extract(F.lower(base), SCHEME_RE, 1)
-    origin = F.regexp_extract(base, ORIGIN_RE, 1)
-    path = F.regexp_extract(base, PATH_RE, 1)
-    base_dir = F.concat(
-        origin,
-        F.when(path == "", F.lit("/")).otherwise(
-            F.regexp_replace(path, r"[^/]*$", "")
-        ),
-    )
-    return (
-        F.when(href.rlike("^[hH][tT][tT][pP][sS]?://"), href)
-        .when(href.startswith("//"), F.concat(scheme, F.lit(":"), href))
-        .when(href.startswith("/"), F.concat(origin, href))
-        .when(href.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:"), F.lit(None))
-        .otherwise(F.concat(base_dir, href))
-    )
-
-
-def doc_link_graph(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    keep_external: bool = False,
-) -> DataFrame:
-    """Page-level link graph — the Common-Crawl "page graph" product
-    (host_graph is its host-level rollup): (src_url, dst_url,
-    in_corpus, n_links) with dst_url the RESOLVED absolute target and
-    in_corpus = dst_url exists as a page url in this corpus. With
-    keep_external=False only in-corpus edges survive (the input to a
-    doc-level PageRank); keep_external=True keeps the full frontier —
-    exactly the crawl-discovery table a scheduler feeds from.
-
-    Scale shape: href extraction + resolution fuse into the scan; the
-    in-corpus membership is ONE url-keyed join against the distinct
-    page-url table (uniform sha-like key — urls don't skew the way
-    hosts do), then one (src,dst) rollup. No host-keyed shuffle at
-    all.
-
-    NB: hrefs come from a raw element scan (ANCHOR_EL_RE), NOT from
-    extract_anchors — that operator's target-host filter would
-    silently drop relative links on pages whose url fails host
-    extraction, diverging from resolve_href (and from the oracle,
-    which classifies nothing by host). resolve_href itself NULLs the
-    scheme-ful junk (mailto:, javascript:)."""
-    flagged = _doc_link_flagged(pages, html_col, url_col)
-    if not keep_external:
-        flagged = flagged.where(F.col("in_corpus"))
-    return flagged.groupBy("src_url", "dst_url", "in_corpus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_links")
-    )
-
-
-def _doc_link_flagged(
-    pages: DataFrame, html_col: str, url_col: str
-) -> DataFrame:
-    """(src_url, dst_url, in_corpus) pre-rollup edge stream shared by
-    doc_link_graph and doc_link_edges."""
-    els = pages.select(
-        F.col(url_col).alias("src_url"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(cast({html_col} as string),"
-                f" '{ANCHOR_EL_RE}', 0)"
-            )
-        ).alias("_el"),
-    )
-    hrefs = els.select(
-        "src_url",
-        F.regexp_extract(F.col("_el"), ANCHOR_HREF_RE, 1).alias("href"),
-    )
-    resolved = hrefs.select(
-        "src_url",
-        resolve_href(F.col("src_url"), F.col("href")).alias("dst_url"),
-    ).where(F.col("dst_url").isNotNull())
-    corpus = pages.select(F.col(url_col).alias("dst_url")).distinct()
-    return resolved.join(
-        corpus.withColumn("_in", F.lit(True)), "dst_url", "left"
-    ).select(
-        "src_url",
-        "dst_url",
-        F.coalesce(F.col("_in"), F.lit(False)).alias("in_corpus"),
-    )
-
-
-def doc_link_edges(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Distinct in-corpus (src, dst) page edges WITHOUT the link-count
-    rollup — the PageRank input path: skips doc_link_graph's counting
-    shuffle whose n_links a rank consumer would immediately drop."""
-    return (
-        _doc_link_flagged(pages, html_col, url_col)
-        .where(F.col("in_corpus"))
-        .select(F.col("src_url").alias("src"), F.col("dst_url").alias("dst"))
-        .distinct()
-    )
-
-
-def doc_link_graph_oracle_sql(
-    anchors_prefix: str,
-    pages_sql: str,
-    keep_external: bool = False,
-    final_sql: str | None = None,
-) -> str:
-    """DuckDB twin of doc_link_graph; `anchors_prefix` is a WITH chain
-    whose last relation is pa(src_url, href, ...) carrying the page
-    url and raw href; `pages_sql` yields the corpus urls (url).
-    `final_sql` replaces the default terminal SELECT so consumers can
-    keep composing CTEs over `flagged` (the page-PageRank oracle does;
-    it must start with ', ' or a SELECT — the _pagerank_oracle_body
-    composition contract)."""
-    gate = "" if keep_external else "WHERE in_corpus"
-    return f"""{anchors_prefix},
-res AS (
-  SELECT src_url,
-    CASE
-      WHEN regexp_matches(href, '^[hH][tT][tT][pP][sS]?://') THEN href
-      WHEN href LIKE '//%' THEN
-        regexp_extract(lower(src_url), '^([a-z][a-z0-9+.-]*)://', 1)
-        || ':' || href
-      WHEN href LIKE '/%' THEN
-        regexp_extract(src_url, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)
-        || href
-      WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-      ELSE
-        regexp_extract(src_url, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)
-        || (CASE WHEN regexp_extract(src_url,
-                 '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) = ''
-            THEN '/'
-            ELSE regexp_replace(regexp_extract(src_url,
-                 '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-                 '[^/]*$', '') END)
-        || href
-    END AS dst_url
-  FROM pa
-),
-corpus AS (SELECT DISTINCT url AS dst_url FROM ({pages_sql})),
-flagged AS (
-  SELECT r.src_url, r.dst_url, c.dst_url IS NOT NULL AS in_corpus
-  FROM res r LEFT JOIN corpus c USING (dst_url)
-  WHERE r.dst_url IS NOT NULL
-)
-{final_sql if final_sql is not None else f'''SELECT src_url, dst_url, in_corpus, count(*)::BIGINT AS n_links
-FROM flagged {gate}
-GROUP BY src_url, dst_url, in_corpus
-'''}"""
-
-
-def surt_key(url: Column | str) -> Column:
-    """SURT (Sort-friendly URI Reordering Transform) key — the CDX
-    index ordering Common Crawl's URL index uses: host labels reversed
-    and comma-joined, then ')' and the path ('/' when empty), e.g.
-    https://blog.example.org:8080/p/1 -> 'org,example,blog)/p/1'.
-    Range-partitioning or sorting by this key lays every page of a
-    registered domain (and all its subdomains) adjacently — the
-    locality that makes per-site sweeps and index lookups range scans
-    instead of full scans. Contract simplifications vs the full SURT
-    spec, documented: scheme and port dropped (the engine-wide
-    _host_col normalization), query strings dropped (canonical_url
-    handles tracking-param noise before this); both engines share the
-    exact string pipeline.
-    """
-    u = F.col(url) if isinstance(url, str) else url
-    host = _host_col(u)
-    path = F.coalesce(
-        F.nullif(F.regexp_extract(u, PATH_RE, 1), F.lit("")), F.lit("/")
-    )
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    return F.concat(rev, F.lit(")"), path)
-
-
-def surt_key_oracle_sql(url_expr: str) -> str:
-    """DuckDB twin of surt_key as a scalar SQL expression over
-    `url_expr`."""
-    host = (
-        f"regexp_replace(lower(regexp_extract({url_expr}, "
-        f"'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '')"
-    )
-    path = (
-        f"coalesce(nullif(regexp_extract({url_expr}, "
-        f"'^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1), ''), '/')"
-    )
-    return (
-        f"array_to_string(list_reverse(string_split({host}, '.')), ',')"
-        f" || ')' || {path}"
-    )
-
-
-def parse_robots(
-    robots: DataFrame,
-    url_col: str = "url",
-    text_col: str = "robots_txt",
-) -> DataFrame:
-    """robots.txt parser: raw fetched text -> the rules table
-    robots_verdict / polite_quota consume — (host, directive, value,
-    line_no) with directive in {'allow', 'disallow', 'crawl_delay'}.
-    Closes the politeness ring end-to-end: parse -> verdict -> quota.
-
-    Contract (documented simplifications vs RFC 9309 grouping):
-      * a rule line is governed by the MOST RECENT User-agent line
-        above it; only '*' groups are kept (a generic crawler — named
-        agents out of scope). NB: in a multi-UA group header
-        ('User-agent: *' then 'User-agent: x' then rules) RFC shares
-        the rules with BOTH agents; here the nearest UA wins, so such
-        rules attach to 'x' and are dropped.
-      * '#' comments stripped, lines trimmed, directive names
-        lowercased ('Crawl-delay' -> 'crawl_delay');
-      * empty-value Allow/Disallow lines are RFC no-ops ('Disallow:'
-        = allow everything) and are dropped — absence of a rule IS
-        allowed-by-default downstream;
-      * crawl_delay keeps its raw value string (caller casts; a
-        malformed delay should be a visible cast failure, not a
-        silent drop).
-
-    Scale shape: line explode is scan-fused; the governing-UA
-    resolution is ONE window partitioned by host ordered by line
-    number (a robots.txt is a few KB — a host's lines always fit one
-    reducer), then a pure filter. No other shuffle.
-    """
-    from pyspark.sql import Window
-
-    host = _host_col(F.col(url_col))
-    lines = robots.select(
-        host.alias("host"),
-        F.posexplode(F.split(F.col(text_col), r"\n")).alias("line_no", "_raw"),
-    )
-    clean = F.trim(F.regexp_replace(F.col("_raw"), r"#.*$", ""))
-    parsed = lines.select(
-        "host",
-        F.col("line_no").cast("long").alias("line_no"),
-        F.lower(
-            F.trim(F.regexp_extract(clean, r"^([A-Za-z-]+)\s*:", 1))
-        ).alias("_name"),
-        F.trim(F.regexp_extract(clean, r"^[A-Za-z-]+\s*:(.*)$", 1)).alias(
-            "_value"
-        ),
-    )
-    w = (
-        Window.partitionBy("host")
-        .orderBy("line_no")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    governed = parsed.withColumn(
-        "_ua",
-        F.last(
-            F.when(F.col("_name") == "user-agent", F.col("_value")),
-            ignorenulls=True,
-        ).over(w),
-    )
-    return (
-        governed.where(
-            (F.col("_ua") == "*")
-            & F.col("_name").isin("allow", "disallow", "crawl-delay")
-            & (F.col("_value") != "")
-        )
-        .select(
-            "host",
-            F.replace(F.col("_name"), F.lit("-"), F.lit("_")).alias(
-                "directive"
-            ),
-            F.col("_value").alias("value"),
-            "line_no",
-        )
-    )
-
-
-def parse_robots_oracle_sql(robots_sql: str) -> str:
-    """DuckDB twin of parse_robots; `robots_sql` yields
-    (url, robots_txt)."""
-    return f"""
-WITH src AS ({robots_sql}),
-lines AS (
-  SELECT regexp_replace(lower(regexp_extract(url,
-           '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)), ':\\d+$', '') AS host,
-         generate_subscripts(string_split(robots_txt, chr(10)), 1) - 1
-           AS line_no,
-         unnest(string_split(robots_txt, chr(10))) AS raw
-  FROM src
-),
-parsed AS (
-  SELECT host, line_no::BIGINT AS line_no,
-         lower(trim(regexp_extract(
-           trim(regexp_replace(raw, '#.*$', '')), '^([A-Za-z-]+)\\s*:', 1)))
-           AS name,
-         trim(regexp_extract(
-           trim(regexp_replace(raw, '#.*$', '')),
-           '^[A-Za-z-]+\\s*:(.*)$', 1)) AS value
-  FROM lines
-),
-governed AS (
-  SELECT *,
-         last_value(CASE WHEN name = 'user-agent' THEN value END IGNORE NULLS)
-           OVER (PARTITION BY host ORDER BY line_no
-                 ROWS UNBOUNDED PRECEDING) AS ua
-  FROM parsed
-)
-SELECT host, replace(name, '-', '_') AS directive, value, line_no
-FROM governed
-WHERE ua = '*' AND name IN ('allow', 'disallow', 'crawl-delay')
-  AND value != ''
-"""
-
-
-# Sitemap element patterns (crawl-grade: standard sitemap.xml emits
-# one <loc>/<lastmod> per <url> block; shared with the oracle).
-SITEMAP_URL_RE = r"<url>[\s\S]*?</url>"  # [\s\S] crosses newlines in Java AND RE2
 SITEMAP_LOC_RE = r"<loc>([^<]*)</loc>"
 SITEMAP_LASTMOD_RE = r"<lastmod>([^<]*)</lastmod>"
-
-
-def sitemap_parse(
-    sitemaps: DataFrame,
-    url_col: str = "url",
-    xml_col: str = "sitemap_xml",
-) -> DataFrame:
-    """Sitemap parser — the crawl-discovery source next to link
-    extraction: (sitemap_url, loc, lastmod) per <url> entry, lastmod
-    NULL when absent. <url> blocks are matched whole then loc/lastmod
-    pulled per block, so a lastmod can never attach to a neighboring
-    entry (the same element-then-attribute pattern extract_anchors
-    uses). Entries without a <loc> are dropped (spec-invalid).
-
-    Feed `sitemap_frontier` to get the urls a crawler hasn't fetched
-    yet; join lastmod against the corpus's warc_ts for recrawl
-    scheduling (the crawl_delta change signal, announced instead of
-    measured).
-
-    Scale shape: one regexp_extract_all + posexplode per sitemap —
-    scan-fused, fan-out bounded by entries-per-sitemap (spec caps at
-    50k); zero shuffle."""
-    blocks = sitemaps.select(
-        F.col(url_col).alias("sitemap_url"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(cast({xml_col} as string),"
-                f" r'{SITEMAP_URL_RE}', 0)"  # r'': keep \s\S literal
-            )
-        ).alias("_b"),
-    )
-    return blocks.select(
-        "sitemap_url",
-        F.nullif(
-            F.regexp_extract(F.col("_b"), SITEMAP_LOC_RE, 1), F.lit("")
-        ).alias("loc"),
-        F.nullif(
-            F.regexp_extract(F.col("_b"), SITEMAP_LASTMOD_RE, 1), F.lit("")
-        ).alias("lastmod"),
-    ).where(F.col("loc").isNotNull())
-
-
-def sitemap_frontier(
-    sitemaps: DataFrame,
-    pages: DataFrame,
-    url_col: str = "url",
-    xml_col: str = "sitemap_xml",
-) -> DataFrame:
-    """Announced-but-unfetched urls: sitemap locs anti-joined against
-    the corpus — the discovery feed a crawl scheduler merges with the
-    link-graph frontier (doc_link_graph keep_external). One uniform
-    url-keyed anti-join; locs dedup first so a url announced by many
-    sitemaps enqueues once (smallest announcing sitemap_url wins,
-    deterministic)."""
-    locs = (
-        sitemap_parse(sitemaps, url_col=url_col, xml_col=xml_col)
-        .groupBy("loc")
-        .agg(F.min("sitemap_url").alias("sitemap_url"))
-    )
-    corpus = pages.select(F.col(url_col).alias("loc")).distinct()
-    return locs.join(corpus, "loc", "left_anti").select("sitemap_url", "loc")
-
-
-def sitemap_parse_oracle_sql(sitemaps_sql: str) -> str:
-    """DuckDB twin of sitemap_parse; `sitemaps_sql` yields
-    (url, sitemap_xml)."""
-    return f"""
-WITH src AS ({sitemaps_sql}),
-blocks AS (
-  SELECT url AS sitemap_url,
-         unnest(regexp_extract_all(sitemap_xml, '<url>[\\s\\S]*?</url>', 0)) AS b
-  FROM src
-)
-SELECT sitemap_url,
-       nullif(regexp_extract(b, '<loc>([^<]*)</loc>', 1), '') AS loc,
-       nullif(regexp_extract(b, '<lastmod>([^<]*)</lastmod>', 1), '') AS lastmod
-FROM blocks
-WHERE nullif(regexp_extract(b, '<loc>([^<]*)</loc>', 1), '') IS NOT NULL
-"""
-
-
-META_ROBOTS_RE = r'<meta name="robots" content="([^"]*)"'
-
-
-def meta_robots(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Page-level robots meta directives — the third politeness
-    surface after robots.txt and rel=canonical: (url, noindex,
-    nofollow). A crawler may FETCH a noindex page but must drop it
-    from the corpus/index, and must not expand a nofollow page's
-    outlinks into the frontier (gate doc_link_graph's input with
-    this). Tokens are matched on the comma-split, trimmed, lowered
-    content list, so 'NOINDEX, nofollow' and 'none' (= both, per the
-    de-facto standard) all register. Absent tag = all false.
-    Zero shuffle — matching on lower(html) like extract_meta."""
-    h = F.lower(F.col(html_col).cast("string"))
-    content = F.regexp_extract(h, META_ROBOTS_RE, 1)
-    toks = F.transform(
-        F.split(content, ","), lambda t: F.trim(t)
-    )
-    return pages.select(
-        F.col(url_col).alias("url"),
-        (
-            F.array_contains(toks, "noindex") | F.array_contains(toks, "none")
-        ).alias("noindex"),
-        (
-            F.array_contains(toks, "nofollow") | F.array_contains(toks, "none")
-        ).alias("nofollow"),
-    )
-
-
-def meta_robots_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of meta_robots; `pages_sql` yields (url, html)
-    with html TEXT."""
-    return f"""
-WITH pg AS ({pages_sql}),
-c AS (
-  SELECT url,
-         list_transform(
-           string_split(regexp_extract(lower(html),
-             '<meta name="robots" content="([^"]*)"', 1), ','),
-           t -> trim(t)) AS toks
-  FROM pg
-)
-SELECT url,
-       (list_contains(toks, 'noindex') OR list_contains(toks, 'none'))
-         AS noindex,
-       (list_contains(toks, 'nofollow') OR list_contains(toks, 'none'))
-         AS nofollow
-FROM c
-"""
-
-
-HREFLANG_EL_RE = r'<link rel="alternate" hreflang="[^"]*" href="[^"]*"'
-HREFLANG_LANG_RE = r'hreflang="([^"]*)"'
-HREFLANG_HREF_RE = r'href="([^"]*)"'
-
-
-def extract_hreflang(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """hreflang alternate links: (url, hreflang, href) per
-    <link rel="alternate" hreflang=..> element — how a multilingual
-    site declares its translation variants. Same crawl-grade
-    double-quoted fixed-attribute-order contract as the other head
-    extractors; zero shuffle."""
-    els = pages.select(
-        F.col(url_col).alias("url"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" '{HREFLANG_EL_RE}', 0)"
-            )
-        ).alias("_el"),
-    )
-    return els.select(
-        "url",
-        F.regexp_extract(F.col("_el"), HREFLANG_LANG_RE, 1).alias("hreflang"),
-        F.regexp_extract(F.col("_el"), HREFLANG_HREF_RE, 1).alias("href"),
-    ).where(F.col("href") != "")
-
-
-def hreflang_clusters(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Translation clusters: (node, cluster) where cluster = min url
-    reachable over declared hreflang alternates — pages are grouped
-    with every translation variant even when declarations are
-    one-sided or chained (page A lists B, B lists C). This is the
-    multilingual-corpus grouping key: dedup one variant per cluster,
-    or mine the cluster as parallel data. Built as
-    connected_components over the (url, href) edge set — the same
-    alternating-star engine the KG's entity merging uses (new edge
-    type, zero new iteration code)."""
-    from easyner_spark.operators.components import connected_components
-
-    edges = extract_hreflang(pages, html_col=html_col, url_col=url_col).select(
-        F.col("url").alias("src"), F.col("href").alias("dst")
-    )
-    return connected_components(edges).select(
-        "node", F.col("component").alias("cluster")
-    )
-
-
-def stale_announcements(
-    sitemap_entries: DataFrame,
-    corpus_meta: DataFrame,
-    url_col: str = "url",
-    fetched_col: str = "fetch_date",
-) -> DataFrame:
-    """Announced-newer-than-fetched detection: sitemap (loc, lastmod)
-    joined against the corpus's per-url last fetch date; a page is
-    STALE when its announced lastmod sorts after the fetch date (ISO
-    dates compare correctly as strings — no date parsing, which the
-    two engines handle differently around timezones). Output one row
-    per announced, already-fetched url: (url, lastmod, fetch_date,
-    status 'stale'|'fresh'); never-fetched urls belong to
-    sitemap_frontier, not here. NULL lastmod = 'fresh' (no evidence
-    of change — recrawl cadence falls back to crawl_delta).
-
-    Together with sitemap_frontier and crawl_delta this closes the
-    incremental-recrawl loop: announced-new (here), never-fetched
-    (frontier), and measured-changed (delta). One uniform url-keyed
-    join, no other shuffle."""
-    ann = sitemap_entries.select(
-        F.col("loc").alias("url"), F.col("lastmod")
-    ).where(F.col("url").isNotNull())
-    meta = corpus_meta.select(
-        F.col(url_col).alias("url"), F.col(fetched_col).alias("fetch_date")
-    )
-    j = ann.join(meta, "url")
-    return j.select(
-        "url",
-        "lastmod",
-        "fetch_date",
-        F.when(
-            F.col("lastmod").isNotNull()
-            & (F.col("lastmod") > F.col("fetch_date")),
-            F.lit("stale"),
-        )
-        .otherwise(F.lit("fresh"))
-        .alias("status"),
-    )
-
-
-def stale_announcements_oracle_sql(
-    entries_sql: str, corpus_sql: str
-) -> str:
-    """DuckDB twin of stale_announcements; `entries_sql` yields
-    (loc, lastmod), `corpus_sql` yields (url, fetch_date)."""
-    return f"""
-WITH ann AS (SELECT loc AS url, lastmod FROM ({entries_sql})
-             WHERE loc IS NOT NULL),
-meta AS (SELECT url, fetch_date FROM ({corpus_sql}))
-SELECT ann.url, ann.lastmod, meta.fetch_date,
-       CASE WHEN ann.lastmod IS NOT NULL AND ann.lastmod > meta.fetch_date
-            THEN 'stale' ELSE 'fresh' END AS status
-FROM ann JOIN meta USING (url)
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1789,591 +751,11 @@ WHERE t.host_pages >= {min_host_pages}
 """
 
 
-def strip_host_templates_oracle_sql(
-    pages_sql: str,
-    min_host_pages: int = 3,
-    min_frac_pct: int = 50,
-) -> str:
-    """DuckDB twin of the detect->strip composition: host_templates
-    over `pages_sql`, then every template paragraph anti-joined out of
-    its host's pages and the texts rebuilt in paragraph order."""
-    tmpl = host_templates_oracle_sql(pages_sql, min_host_pages, min_frac_pct)
-    return f"""
-WITH tm AS MATERIALIZED ({tmpl}),
-pg AS ({pages_sql}),
-h AS (
-  SELECT url, text, regexp_replace(
-           lower(regexp_extract(url, '{HOST_RE}', 1)),
-           ':\\d+$', '') AS host
-  FROM pg
-),
-paras AS (
-  SELECT url, host,
-         generate_subscripts(string_split(text, chr(10)), 1) - 1 AS pidx,
-         unnest(string_split(text, chr(10))) AS para
-  FROM h
-),
-kept AS (
-  SELECT p.url, p.pidx, p.para
-  FROM paras p LEFT JOIN tm ON tm.host = p.host AND tm.para = p.para
-  WHERE tm.para IS NULL
-),
-reb AS (
-  SELECT url, string_agg(para, chr(10) ORDER BY pidx) AS text_stripped,
-         count(*)::BIGINT AS n_kept
-  FROM kept GROUP BY url
-),
-tot AS (SELECT url, len(string_split(text, chr(10)))::BIGINT AS n_paras FROM h)
-SELECT t.url, coalesce(r.text_stripped, '') AS text_stripped,
-       t.n_paras, coalesce(r.n_kept, 0)::BIGINT AS n_kept
-FROM tot t LEFT JOIN reb r ON t.url = r.url
-"""
-
-
-# ---------------------------------------------------------------------------
-# Parallel-corpus (bitext) candidate mining over translation clusters
-# ---------------------------------------------------------------------------
-
-def bitext_candidates(
-    sentences: DataFrame,
-    clusters: DataFrame,
-    max_count_diff_pct: int = 50,
-    url_col: str = "url",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Positional bitext mining: align sentences of translation-variant
-    page pairs by sentence INDEX — the classic cheap baseline for
-    parallel-data extraction from multilingual sites (pages translated
-    sentence-by-sentence line up positionally; an embedding-margin
-    reranker slots in downstream on these candidates). Inputs:
-    `sentences` (url, lang, sent_idx, sentence) and `clusters`
-    (node, cluster) — hreflang_clusters output. Output one row per
-    aligned sentence pair: (cluster, url_a, lang_a, url_b, lang_b,
-    sent_idx, sent_a, sent_b), pairs canonicalized lang_a < lang_b
-    (same-language variants are dedup targets, not bitext — excluded).
-
-    A WikiMatrix-style length gate drops page pairs whose sentence
-    counts diverge: |n_a - n_b| * 100 <= max_count_diff_pct *
-    greatest(n_a, n_b) — integer cross-multiply, no floats.
-
-    Scale: membership join on the url key (uniform); per-page counts
-    one partial-agg shuffle; the page-pair self-join keys on CLUSTER —
-    cluster sizes are bounded by a site's language count (dozens, not
-    degrees), so the fan-out is structural, never hub-sized; sentence
-    attachment is two (url [, sent_idx]) equi-joins. Sentence text
-    crosses each exchange once.
-    """
-    s = (
-        sentences.select(
-            F.col(url_col).alias("url"),
-            F.col(lang_col).alias("lang"),
-            F.col("sent_idx").cast("long").alias("sent_idx"),
-            "sentence",
-        )
-        .join(clusters, F.col("url") == F.col("node"))
-        .select("cluster", "url", "lang", "sent_idx", "sentence")
-    )
-    counts = s.groupBy("cluster", "url", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sents")
-    )
-    a = counts.select(
-        "cluster",
-        F.col("url").alias("url_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("n_sents").alias("n_a"),
-    )
-    b = counts.select(
-        "cluster",
-        F.col("url").alias("url_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("n_sents").alias("n_b"),
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .where(
-            (F.col("lang_a") < F.col("lang_b"))
-            & (
-                F.abs(F.col("n_a") - F.col("n_b")) * 100
-                <= max_count_diff_pct * F.greatest("n_a", "n_b")
-            )
-        )
-        .select("cluster", "url_a", "lang_a", "url_b", "lang_b")
-    )
-    sa = s.select(
-        F.col("url").alias("url_a"),
-        F.col("sent_idx"),
-        F.col("sentence").alias("sent_a"),
-    )
-    sb = s.select(
-        F.col("url").alias("url_b"),
-        F.col("sent_idx"),
-        F.col("sentence").alias("sent_b"),
-    )
-    return (
-        pairs.join(sa, "url_a")
-        .join(sb, ["url_b", "sent_idx"])
-        .select(
-            "cluster",
-            "url_a",
-            "lang_a",
-            "url_b",
-            "lang_b",
-            "sent_idx",
-            "sent_a",
-            "sent_b",
-        )
-    )
-
-
-def bitext_candidates_oracle_sql(
-    sentences_sql: str,
-    clusters_sql: str,
-    max_count_diff_pct: int = 50,
-) -> str:
-    """DuckDB twin of bitext_candidates; `sentences_sql` yields
-    (url, lang, sent_idx, sentence), `clusters_sql` yields
-    (node, cluster)."""
-    return f"""
-WITH sents AS MATERIALIZED ({sentences_sql}),
-cl AS ({clusters_sql}),
-s AS (
-  SELECT cl.cluster, sents.url, sents.lang,
-         sents.sent_idx::BIGINT AS sent_idx, sents.sentence
-  FROM sents JOIN cl ON sents.url = cl.node
-),
-counts AS (
-  SELECT cluster, url, lang, count(*)::BIGINT AS n_sents
-  FROM s GROUP BY cluster, url, lang
-),
-pairs AS (
-  SELECT a.cluster, a.url AS url_a, a.lang AS lang_a,
-         b.url AS url_b, b.lang AS lang_b
-  FROM counts a JOIN counts b ON a.cluster = b.cluster
-  WHERE a.lang < b.lang
-    AND abs(a.n_sents - b.n_sents) * 100
-        <= {max_count_diff_pct} * greatest(a.n_sents, b.n_sents)
-)
-SELECT p.cluster, p.url_a, p.lang_a, p.url_b, p.lang_b,
-       sa.sent_idx, sa.sentence AS sent_a, sb.sentence AS sent_b
-FROM pairs p
-JOIN s sa ON sa.url = p.url_a
-JOIN s sb ON sb.url = p.url_b AND sb.sent_idx = sa.sent_idx
-"""
-
-
-def mirror_hosts(
-    pages: DataFrame,
-    min_shared: int = 2,
-    min_overlap_pct: int = 50,
-    max_hosts_per_digest: int = 32,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Cross-host mirror detection: host pairs whose distinct
-    page-content sets overlap by >= `min_overlap_pct`% of the SMALLER
-    host's set (containment, not Jaccard — a partial mirror of a big
-    site should still flag) and share >= `min_shared` distinct page
-    texts. Output: (host_a, host_b, shared, n_a, n_b) with
-    host_a < host_b; n_* are distinct content digests per host. The
-    cross-HOST complement of host_templates' within-host rule and
-    paragraph_dedup's corpus-wide rule: mirrors.example.org serving
-    the same pages as example.org should collapse to ONE host's worth
-    of crawl budget / training text, and this table is what the
-    curation step joins against to do it.
-
-    Input contract: one row per url (run latest_crawl first).
-
-    Exactness: the overlap gate is an integer cross-multiply
-    (shared * 100 >= min_overlap_pct * least(n_a, n_b)); no floats.
-
-    Scale (audited at sf0.01: 7 planned exchanges, 2 reused, small
-    sides AQE-broadcast — every key uniform or cap-bounded): (1)
-    per-(host, digest) distinct — uniform composite key, however hot
-    the host; (2) a per-digest host COUNT (algebraic partial aggs
-    absorb a digest served by millions of hosts — think empty pages
-    or parked-domain boilerplate) gates digests to
-    2..max_hosts_per_digest BEFORE any array is collected (the gate
-    costs the count rollup plus the digest-key join alignment), so
-    the subsequent per-digest
-    sort_array(collect_set(host)) group is <= cap rows by
-    construction and the in-array i<j pair fan-out is
-    <= cap*(cap-1)/2 per digest — the quadratic is bounded by a knob,
-    never by the data; digests above the cap are corpus-wide
-    boilerplate, not mirror evidence, and dropping them is the
-    documented semantics, not a silent truncation; (3) the
-    (host_a, host_b) shared-count agg — algebraic. Per-host totals
-    ride the already-shuffled (host, digest) frame; the two totals
-    joins are AQE-decided (|hosts| rows). Digest hex crosses
-    exchanges, never page text.
-    """
-    host = _host_col(F.col(url_col))
-    hd = (
-        pages.select(
-            host.alias("host"), F.sha2(F.col(text_col), 256).alias("_d")
-        )
-        .groupBy("host", "_d")
-        .agg(F.count(F.lit(1)).alias("_drop"))
-        .drop("_drop")
-    )
-    eligible = (
-        hd.groupBy("_d")
-        .agg(F.count(F.lit(1)).cast("long").alias("_nh"))
-        .where(
-            (F.col("_nh") >= 2) & (F.col("_nh") <= max_hosts_per_digest)
-        )
-        .select("_d")
-    )
-    grouped = (
-        hd.join(eligible, "_d")
-        .groupBy("_d")
-        .agg(F.sort_array(F.collect_set("host")).alias("_hs"))
-    )
-    n = F.size(F.col("_hs"))
-    pairs = F.flatten(
-        F.transform(
-            F.col("_hs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_hs"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x.alias("host_a"), y.alias("host_b")
-                ),
-            ),
-        )
-    )
-    shared = (
-        grouped.select(F.explode(pairs).alias("p"))
-        .select("p.host_a", "p.host_b")
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-    )
-    totals = hd.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_digests")
-    )
-    return (
-        shared.join(
-            totals.select(
-                F.col("host").alias("host_a"), F.col("n_digests").alias("n_a")
-            ),
-            "host_a",
-        )
-        .join(
-            totals.select(
-                F.col("host").alias("host_b"), F.col("n_digests").alias("n_b")
-            ),
-            "host_b",
-        )
-        .where(
-            (F.col("shared") >= min_shared)
-            & (
-                F.col("shared") * 100
-                >= min_overlap_pct * F.least(F.col("n_a"), F.col("n_b"))
-            )
-        )
-        .select("host_a", "host_b", "shared", "n_a", "n_b")
-    )
-
-
-def mirror_hosts_oracle_sql(
-    pages_sql: str,
-    min_shared: int = 2,
-    min_overlap_pct: int = 50,
-    max_hosts_per_digest: int = 32,
-) -> str:
-    """DuckDB twin of mirror_hosts; `pages_sql` yields (url, text).
-    Groups on raw text where the operator groups on its sha2 digest —
-    identical results (collision-free digest), and the host regex is
-    shared verbatim (HOST_RE)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-hd AS (
-  SELECT DISTINCT
-         regexp_replace(
-           lower(regexp_extract(url, '{HOST_RE}', 1)),
-           ':\\d+$', '') AS host,
-         text
-  FROM pg
-),
-eligible AS (
-  SELECT text FROM hd GROUP BY text
-  HAVING count(*) >= 2 AND count(*) <= {max_hosts_per_digest}
-),
-shared AS (
-  SELECT a.host AS host_a, b.host AS host_b, count(*)::BIGINT AS shared
-  FROM hd a
-  JOIN hd b ON a.text = b.text AND a.host < b.host
-  JOIN eligible e ON a.text = e.text
-  GROUP BY a.host, b.host
-),
-tot AS (SELECT host, count(*)::BIGINT AS n_digests FROM hd GROUP BY host)
-SELECT s.host_a, s.host_b, s.shared,
-       ta.n_digests AS n_a, tb.n_digests AS n_b
-FROM shared s
-JOIN tot ta ON s.host_a = ta.host
-JOIN tot tb ON s.host_b = tb.host
-WHERE s.shared >= {min_shared}
-  AND s.shared * 100 >= {min_overlap_pct} * least(ta.n_digests, tb.n_digests)
-"""
-
-
-def url_equivalence(
-    pages: DataFrame,
-    redirects: DataFrame | None = None,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Canonical-URL equivalence classes: every url grouped with every
-    alias the crawl evidences, closed transitively — (node, canonical)
-    where canonical = min url reachable. Three edge types feed ONE
-    components run: (1) rel=canonical declarations from the page head
-    (extract_meta — CMS mirrors and tracking-param variants all
-    declare the same canonical), (2) redirect hops from an optional
-    (src, dst) frame (resolve_redirects' input shape; its OUTPUT also
-    works — src->final is just a shortcut edge of the same class),
-    (3) the canonical_url normalization fold (www./tracking-param/
-    fragment/trailing-slash) applied to every crawled url AND every
-    declared canonical target, so `https://www.x.com/a` declared as
-    canonical and `https://x.com/a` fetched directly still merge.
-    Redirect endpoints are not re-normalized here (a redirect src is
-    by definition a fetched url — feed it through `pages` if it was
-    crawled). This is the URL analog of the KG's entity merging:
-    same alternating-star components engine, new edge types, zero new
-    iteration code; the class table is what crawl-budget, dedup, and
-    link-graph layers join on to collapse aliases to ONE url.
-
-    Scale shape: edge construction is pure per-row codegen (extract
-    regexes + the canonical_url regexp chain, scan-fused, zero
-    shuffle); the closure cost is connected_components' — alternating
-    large/small-star rounds on the uniform url key, hot-alias fans
-    bounded the same way the KG's common-alias worst case is
-    (tools/components_stress.py tier).
-    """
-    from easyner_spark.operators.components import connected_components
-
-    meta = extract_meta(pages, html_col=html_col, url_col=url_col)
-    declared = meta.where(
-        F.col("canonical_href").isNotNull()
-        & (F.col("canonical_href") != F.col("url"))
-    ).select(F.col("url").alias("src"), F.col("canonical_href").alias("dst"))
-    crawled_norm = (
-        pages.select(F.col(url_col).alias("src"))
-        .withColumn("dst", canonical_url("src"))
-        .where(F.col("dst") != F.col("src"))
-    )
-    target_norm = (
-        meta.where(F.col("canonical_href").isNotNull())
-        .select(F.col("canonical_href").alias("src"))
-        .withColumn("dst", canonical_url("src"))
-        .where(F.col("dst") != F.col("src"))
-    )
-    edges = declared.unionByName(crawled_norm).unionByName(target_norm)
-    if redirects is not None:
-        edges = edges.unionByName(
-            redirects.select(
-                F.col("src").cast("string").alias("src"),
-                F.col("dst").cast("string").alias("dst"),
-            )
-        )
-    return connected_components(edges).select(
-        "node", F.col("component").alias("canonical")
-    )
-
-
-# DuckDB twin of the canonical_url regexp chain (same patterns, same
-# order; DuckDB needs the explicit 'g' flag where Spark's
-# regexp_replace is global by default). Shared by every oracle that
-# normalizes urls.
-def canon_url_sql(expr: str) -> str:
-    return (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        "regexp_replace(regexp_replace("
-        f"lower(regexp_extract(regexp_replace({expr}, '#.*$', ''),"
-        " '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1))"
-        f" || regexp_replace(regexp_replace({expr}, '#.*$', ''),"
-        " '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', ''),"
-        " '://www\\.', '://'),"
-        " '[?&](utm_[a-z]+|fbclid|gclid)=[^&#]*', '', 'g'),"
-        " '\\?&', '?'),"
-        " '^([^?&]*)&', '\\1?'),"
-        " '[?&]$', ''),"
-        " '/$', '')"
-    )
-
-
-def url_equivalence_oracle_sql(
-    pages_sql: str, redirects_sql: str | None = None
-) -> str:
-    """DuckDB twin of url_equivalence; `pages_sql` yields (url, html)
-    with html TEXT, optional `redirects_sql` yields (src, dst). Same
-    CANONICAL_RE extraction and canonical_url chain, then the
-    min-label reachability closure (_COMPONENTS_ORACLE's pattern)."""
-    redirect_edges = (
-        f"UNION ALL SELECT src AS a, dst AS b FROM ({redirects_sql})"
-        if redirects_sql is not None
-        else ""
-    )
-    return f"""
-WITH RECURSIVE pg AS ({pages_sql}),
-meta AS (
-  SELECT url,
-    nullif(regexp_extract(lower(html),
-      '<link rel="canonical" href="([^"]*)"', 1), '') AS canon_href
-  FROM pg
-),
-raw_edges AS (
-  SELECT url AS a, canon_href AS b FROM meta
-  WHERE canon_href IS NOT NULL AND canon_href != url
-  UNION ALL
-  SELECT url AS a, {canon_url_sql('url')} AS b FROM pg
-  UNION ALL
-  SELECT canon_href AS a, {canon_url_sql('canon_href')} AS b
-  FROM meta WHERE canon_href IS NOT NULL
-  {redirect_edges}
-),
-edges AS (SELECT DISTINCT a, b FROM raw_edges WHERE a != b),
-sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-nodes AS (SELECT DISTINCT a AS node FROM sym),
-reach(node, lbl) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN sym e ON r.node = e.a
-)
-SELECT node, min(lbl) AS canonical FROM reach GROUP BY node
-"""
-
-
-# crawl-grade fixed-format table contract, shared verbatim with the
-# oracles ((?s) dotall + lazy body so adjacent tables/rows never merge;
-# cell text is the [^<]* run — nested markup ends the cell, same
-# tolerance class as the other head/anchor extractors)
-TABLE_RE = r"(?s)<table[^>]*>.*?</table>"
-TABLE_TR_RE = r"(?s)<tr[^>]*>.*?</tr>"
-TABLE_TD_RE = r"<t[dh][^>]*>([^<]*)</t[dh]>"
-
-
-def _table_rows(
-    pages: DataFrame, html_col: str, url_col: str
-) -> DataFrame:
-    """(url, table_idx, row_idx, _cs: array<string>) — one row per
-    <tr>, cells as an array. Shared by extract_tables/infobox_pairs."""
-    tb = pages.select(
-        F.col(url_col).alias("url"),
-        F.posexplode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" '{TABLE_RE}', 0)"
-            )
-        ).alias("table_idx", "_tbl"),
-    )
-    rows = tb.select(
-        "url",
-        "table_idx",
-        F.posexplode(
-            F.expr(f"regexp_extract_all(_tbl, '{TABLE_TR_RE}', 0)")
-        ).alias("row_idx", "_tr"),
-    )
-    return rows.select(
-        "url",
-        "table_idx",
-        "row_idx",
-        F.expr(f"regexp_extract_all(_tr, '{TABLE_TD_RE}', 1)").alias("_cs"),
-    )
-
-
-def extract_tables(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """HTML table extraction: one row per cell — (url, table_idx,
-    row_idx, col_idx, cell), all indices 0-based document order, cell
-    text lowercased (the engine-wide canonicalized comparison form).
-    <th> and <td> both count as cells (header position is recoverable
-    as row_idx/col_idx 0). Pages without tables emit nothing.
-
-    Scale shape: three stacked posexplodes over scan-fused
-    regexp_extract_all — pure per-row codegen, ZERO shuffle; output
-    fan-out is the corpus's total cell count, partition-local.
-    """
-    return _table_rows(pages, html_col, url_col).select(
-        "url",
-        "table_idx",
-        "row_idx",
-        F.posexplode("_cs").alias("col_idx", "cell"),
-    )
-
-
-def infobox_pairs(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Infobox-style key-value extraction: rows of EXACTLY two cells
-    read as (url, table_idx, row_idx, key, value) — the classic
-    semi-structured KG-construction source (Wikipedia-style infoboxes,
-    spec sheets, fact boxes). Feed the output to extract_triples-style
-    canonicalization with url as the subject surface: (page entity,
-    key, value). Rows with any other arity (layout tables, colspan
-    headers) are skipped by the arity gate, not guessed at.
-
-    Same zero-shuffle scan-fused shape as extract_tables.
-    """
-    rows = _table_rows(pages, html_col, url_col)
-    return rows.where(F.size("_cs") == 2).select(
-        "url",
-        "table_idx",
-        "row_idx",
-        F.col("_cs")[0].alias("key"),
-        F.col("_cs")[1].alias("value"),
-    )
-
-
-def _table_rows_sql(pages_sql: str) -> str:
-    """DuckDB CTE chain producing (url, table_idx, row_idx, cs) —
-    the oracle's twin of _table_rows (same three regexes)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-h AS (SELECT url, lower(html) AS lh FROM pg),
-t AS (SELECT url,
-        regexp_extract_all(lh, '(?s)<table[^>]*>.*?</table>', 0) AS tbls
-      FROM h),
-tb AS (SELECT url, u.i AS table_idx, u.v AS tbl
-       FROM (SELECT url, unnest(list_transform(range(0, len(tbls)),
-               i -> {{'i': i, 'v': tbls[(i+1)::INT]}})) AS u FROM t)),
-tr AS (SELECT url, table_idx, u.i AS row_idx, u.v AS trow
-       FROM (SELECT url, table_idx,
-               unnest(list_transform(range(0, len(rws)),
-                 i -> {{'i': i, 'v': rws[(i+1)::INT]}})) AS u
-             FROM (SELECT url, table_idx,
-                     regexp_extract_all(tbl, '(?s)<tr[^>]*>.*?</tr>', 0)
-                       AS rws FROM tb))),
-rc AS (SELECT url, table_idx, row_idx,
-         regexp_extract_all(trow, '<t[dh][^>]*>([^<]*)</t[dh]>', 1) AS cs
-       FROM tr)"""
-
-
-def extract_tables_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_tables; `pages_sql` yields (url, html)
-    with html TEXT."""
-    return f"""{_table_rows_sql(pages_sql)}
-SELECT url, table_idx::INT AS table_idx, row_idx::INT AS row_idx,
-       u.i::INT AS col_idx, u.v AS cell
-FROM (SELECT url, table_idx, row_idx,
-        unnest(list_transform(range(0, len(cs)),
-          i -> {{'i': i, 'v': cs[(i+1)::INT]}})) AS u FROM rc)
-"""
-
-
-def infobox_pairs_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of infobox_pairs (the arity-2 gate over the same
-    row parse)."""
-    return f"""{_table_rows_sql(pages_sql)}
-SELECT url, table_idx::INT AS table_idx, row_idx::INT AS row_idx,
-       cs[1] AS key, cs[2] AS value
-FROM rc WHERE len(cs) = 2
-"""
-
-
 def host_spam_signals(
     edges: DataFrame, drop_self: bool = True
 ) -> DataFrame:
     """Link-farm / spam-host signals per source host over the host
-    graph (host_graph's (src_host, dst_host, n_links) edge table):
+    graph (a (src_host, dst_host, n_links) edge table):
     (host, n_out, fanout, top_share_pct, reciprocity_pct) where n_out
     = total outlinks, fanout = distinct target hosts, top_share_pct =
     the single hottest target's share of all outlinks (a host pushing
@@ -2388,7 +770,7 @@ def host_spam_signals(
     algebraic (sum/count/max partial aggs absorb a hub host's
     millions of edge rows map-side); reciprocity is a left-semi
     self-join on the COMPOSITE (src_host, dst_host) key — uniform
-    however hot either host, because host_graph already collapsed
+    however hot either host, because the edge table already collapsed
     multiplicity into n_links — followed by the same algebraic
     rollup; the final signals join is per-host rows, AQE-decided.
     """
@@ -2428,7 +810,7 @@ def host_spam_signals_oracle_sql(
 ) -> str:
     """DuckDB twin of host_spam_signals; `with_prefix` is a WITH
     chain ending in a CTE `hg` that yields (src_host, dst_host,
-    n_links) — host_graph's output shape."""
+    n_links) — the host edge table shape."""
     self_pred = "WHERE src_host != dst_host" if drop_self else ""
     return f"""{with_prefix},
 e AS (SELECT src_host, dst_host, n_links FROM hg {self_pred}),
@@ -2510,201 +892,6 @@ FROM (SELECT url, unnest(list_transform(range(0, len(els)),
 """
 
 
-# Feed contract: tag names matched case-insensitively ((?i) — real
-# feeds write <pubDate>), content captured in original case (urls and
-# titles are case-significant). [\s\S] crosses newlines in Java AND
-# RE2; no backreferences (RE2 lacks them), so RSS items and Atom
-# entries are two separate passes unioned.
-FEED_RSS_ITEM_RE = r"(?i)<item>[\s\S]*?</item>"
-FEED_ATOM_ENTRY_RE = r"(?i)<entry>[\s\S]*?</entry>"
-FEED_RSS_LINK_RE = r"(?i)<link>([^<]*)</link>"
-FEED_ATOM_LINK_RE = r'(?i)<link href="([^"]*)"'
-FEED_TITLE_RE = r"(?i)<title>([^<]*)</title>"
-FEED_RSS_DATE_RE = r"(?i)<pubdate>([^<]*)</pubdate>"
-FEED_ATOM_DATE_RE = r"(?i)<updated>([^<]*)</updated>"
-
-
-def feed_parse(
-    feeds: DataFrame, url_col: str = "url", xml_col: str = "feed_xml"
-) -> DataFrame:
-    """RSS 2.0 / Atom feed parser — the third crawl-discovery source
-    next to link extraction and sitemaps, and the one that carries
-    editorial recency: (feed_url, kind, item_idx, link, title,
-    published) per <item> (rss) or <entry> (atom). `published` is
-    pubDate / updated, NULL when absent; items without a link are
-    dropped (nothing to fetch). item_idx is document order within the
-    feed per kind — feeds are newest-first by convention, so idx 0 is
-    the freshest item. Blocks are matched whole then fields pulled
-    per block (the sitemap_parse element-then-attribute pattern), so
-    a date can never attach to a neighboring item.
-
-    Compose like sitemaps: anti-join `link` against the corpus for
-    frontier discovery; join `published` against warc_ts for recrawl
-    scheduling (stale_announcements' shape).
-
-    Scale: one regexp_extract_all + posexplode per kind, unioned —
-    scan-fused, zero shuffle."""
-
-    def _pass(kind: str, item_re: str, link_re: str, date_re: str):
-        blocks = feeds.select(
-            F.col(url_col).alias("feed_url"),
-            F.posexplode(
-                F.expr(
-                    f"regexp_extract_all(cast({xml_col} as string),"
-                    f" r'{item_re}', 0)"
-                )
-            ).alias("item_idx", "_b"),
-        )
-        return blocks.select(
-            "feed_url",
-            F.lit(kind).alias("kind"),
-            "item_idx",
-            F.nullif(
-                F.regexp_extract(F.col("_b"), link_re, 1), F.lit("")
-            ).alias("link"),
-            F.nullif(
-                F.regexp_extract(F.col("_b"), FEED_TITLE_RE, 1), F.lit("")
-            ).alias("title"),
-            F.nullif(
-                F.regexp_extract(F.col("_b"), date_re, 1), F.lit("")
-            ).alias("published"),
-        ).where(F.col("link").isNotNull())
-
-    rss = _pass("rss", FEED_RSS_ITEM_RE, FEED_RSS_LINK_RE, FEED_RSS_DATE_RE)
-    atom = _pass(
-        "atom", FEED_ATOM_ENTRY_RE, FEED_ATOM_LINK_RE, FEED_ATOM_DATE_RE
-    )
-    return rss.unionByName(atom)
-
-
-def feed_parse_oracle_sql(feeds_sql: str) -> str:
-    """DuckDB twin of feed_parse; `feeds_sql` yields (url, feed_xml)."""
-
-    def _pass(kind: str, item_re: str, link_re: str, date_re: str) -> str:
-        return f"""
-SELECT url AS feed_url, '{kind}' AS kind, u.i::INT AS item_idx,
-       nullif(regexp_extract(u.v, '{link_re}', 1), '') AS link,
-       nullif(regexp_extract(u.v, '(?i)<title>([^<]*)</title>', 1), '')
-         AS title,
-       nullif(regexp_extract(u.v, '{date_re}', 1), '') AS published
-FROM (SELECT url, unnest(list_transform(range(0, len(bs)),
-        i -> {{'i': i, 'v': bs[(i+1)::INT]}})) AS u
-      FROM (SELECT url, regexp_extract_all(feed_xml, '{item_re}', 0) AS bs
-            FROM fd))
-"""
-
-    rss = _pass(
-        "rss",
-        r"(?i)<item>[\s\S]*?</item>",
-        r"(?i)<link>([^<]*)</link>",
-        r"(?i)<pubdate>([^<]*)</pubdate>",
-    )
-    atom = _pass(
-        "atom",
-        r"(?i)<entry>[\s\S]*?</entry>",
-        r'(?i)<link href="([^"]*)"',
-        r"(?i)<updated>([^<]*)</updated>",
-    )
-    return f"""
-WITH fd AS ({feeds_sql}),
-allrows AS ({rss} UNION ALL {atom})
-SELECT * FROM allrows WHERE link IS NOT NULL
-"""
-
-
-def crawl_frontier(
-    pages: DataFrame,
-    extra_sources: list[tuple[DataFrame, str]] = (),
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Unified discovery frontier: every url any source announces that
-    the corpus has NOT fetched, with provenance — (url, sources,
-    n_sources) where sources is the sorted comma-joined source-name
-    set. Link targets (anchor extraction + full RFC 3986 resolve_href)
-    are always a source, named 'link'; `extra_sources` adds
-    (frame-with-a-url-column, name) pairs — sitemap_parse locs,
-    feed_parse links, future discovery surfaces. A url announced by
-    multiple sources enqueues ONCE; n_sources is the scheduler's
-    corroboration signal (a url three surfaces announce outranks a
-    stray href).
-
-    Scale (3 shuffles, all on the uniform url key, same-key so AQE
-    coalesces the pipeline): candidate distinct, corpus left-anti
-    join, and the provenance rollup — collect_set is bounded by the
-    number of SOURCES (a handful), never by data.
-    """
-    links = (
-        pages.select(
-            F.col(url_col).alias("src_url"),
-            F.explode(
-                F.expr(
-                    f"regexp_extract_all(cast({html_col} as string),"
-                    f" '{ANCHOR_EL_RE}', 0)"
-                )
-            ).alias("_el"),
-        )
-        .select(
-            "src_url",
-            F.regexp_extract(F.col("_el"), ANCHOR_HREF_RE, 1).alias("href"),
-        )
-        .select(
-            resolve_href(F.col("src_url"), F.col("href")).alias("url"),
-            F.lit("link").alias("source"),
-        )
-        .where(F.col("url").isNotNull())
-    )
-    cand = links
-    for frame, name in extra_sources:
-        cand = cand.unionByName(
-            frame.select(
-                F.col("url").cast("string").alias("url"),
-                F.lit(name).alias("source"),
-            )
-        )
-    cand = cand.distinct()
-    corpus = pages.select(F.col(url_col).alias("url")).distinct()
-    fresh = cand.join(corpus, "url", "left_anti")
-    return fresh.groupBy("url").agg(
-        F.concat_ws(",", F.sort_array(F.collect_set("source"))).alias(
-            "sources"
-        ),
-        F.count(F.lit(1)).cast("long").alias("n_sources"),
-    )
-
-
-def crawl_frontier_oracle_sql(
-    anchors_prefix: str,
-    pages_sql: str,
-    extra_sources: list[tuple[str, str]] = (),
-) -> str:
-    """DuckDB twin of crawl_frontier; same contract as
-    doc_link_graph_oracle_sql for `anchors_prefix`/`pages_sql`;
-    `extra_sources` is (sql-yielding-a-url-column, name) pairs
-    (subquery WITHs are fine — DuckDB accepts them)."""
-    from easyner_spark.operators.webtext import doc_link_graph_oracle_sql
-
-    extras = "".join(
-        f"\n    UNION ALL SELECT url, '{name}' AS source FROM ({sql})"
-        for sql, name in extra_sources
-    )
-    final = f""",
-cand AS (
-  SELECT DISTINCT url, source FROM (
-    SELECT dst_url AS url, 'link' AS source FROM flagged{extras}
-  ) WHERE url IS NOT NULL
-),
-fresh AS (
-  SELECT c.url, c.source FROM cand c
-  LEFT JOIN corpus k ON c.url = k.dst_url WHERE k.dst_url IS NULL
-)
-SELECT url, array_to_string(list_sort(list(source)), ',') AS sources,
-       count(*)::BIGINT AS n_sources
-FROM fresh GROUP BY url
-"""
-    return doc_link_graph_oracle_sql(anchors_prefix, pages_sql, final_sql=final)
-
-
 # JSON-LD contract: the <script type="application/ld+json"> wrapper is
 # matched literally (real CMSes emit it lowercase); payload text keeps
 # ORIGINAL case — schema.org @type values are case-significant
@@ -2713,725 +900,6 @@ FROM fresh GROUP BY url
 # opaque text.
 JSONLD_BLOCK_RE = r'(?s)<script type="application/ld\+json">(.*?)</script>'
 JSONLD_TYPE_RE = r'"@type"\s*:\s*"([^"]*)"'
-JSONLD_NAME_RE = r'"name"\s*:\s*"([^"]*)"'
-
-
-def extract_jsonld(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """schema.org JSON-LD extraction: (url, block_idx, type, name,
-    payload) per embedded ld+json script block — the highest-precision
-    KG-construction source a page offers (publishers declare their own
-    entities: Article, Person, Product, Organization...). `type`/
-    `name` are the first "@type"/"name" string values in the block
-    (regex pulls, NULL when absent); `payload` is the raw JSON text
-    for downstream from_json consumers with a declared schema. Pair
-    with extract_opengraph/infobox_pairs: JSON-LD where publishers
-    provide it, og:type/infobox heuristics where they don't.
-
-    Zero shuffle: one regexp_extract_all(group 1) + posexplode + two
-    scan-fused field pulls.
-    """
-    blocks = pages.select(
-        F.col(url_col).alias("url"),
-        F.posexplode(
-            F.expr(
-                f"regexp_extract_all(cast({html_col} as string),"
-                f" r'{JSONLD_BLOCK_RE}', 1)"  # r'': keep \+ literal
-            )
-        ).alias("block_idx", "payload"),
-    )
-    return blocks.select(
-        "url",
-        "block_idx",
-        F.nullif(
-            F.regexp_extract(F.col("payload"), JSONLD_TYPE_RE, 1), F.lit("")
-        ).alias("type"),
-        F.nullif(
-            F.regexp_extract(F.col("payload"), JSONLD_NAME_RE, 1), F.lit("")
-        ).alias("name"),
-        "payload",
-    )
-
-
-def _jsonld_cte_sql(pages_sql: str) -> str:
-    """Flat CTE chain ending in jl(url, block_idx, type, name,
-    payload) — flat so it composes under WITH RECURSIVE (DuckDB
-    mishandles NESTED WITHs inside a recursive chain's CTE bodies)."""
-    return f"""jpg AS ({pages_sql}),
-jb AS (SELECT url,
-        regexp_extract_all(html,
-          '(?s)<script type="application/ld\\+json">(.*?)</script>', 1) AS bs
-      FROM jpg),
-jl AS (
-  SELECT url, u.i::INT AS block_idx,
-       nullif(regexp_extract(u.v, '"@type"\\s*:\\s*"([^"]*)"', 1), '')
-         AS type,
-       nullif(regexp_extract(u.v, '"name"\\s*:\\s*"([^"]*)"', 1), '')
-         AS name,
-       u.v AS payload
-  FROM (SELECT url, unnest(list_transform(range(0, len(bs)),
-          i -> {{'i': i, 'v': bs[(i+1)::INT]}})) AS u FROM jb)
-)"""
-
-
-def extract_jsonld_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_jsonld; `pages_sql` yields (url, html)."""
-    return f"""
-WITH {_jsonld_cte_sql(pages_sql)}
-SELECT * FROM jl
-"""
-
-
-# meta-refresh contract (the third redirect surface after HTTP hops
-# and rel=canonical): double-quoted fixed-format, delay;url=target.
-# Tag/attr names + the url= keyword matched on lower(html); the target
-# is re-captured in one pass, case preserved only as far as lowering
-# the whole document allows — same tolerance class as extract_meta
-# (documented: crawlers compare refresh targets canonicalized anyway).
-REFRESH_EL_RE = r'<meta http-equiv="refresh" content="[0-9]+;\s*url=[^"]*"'
-REFRESH_DELAY_RE = r'content="([0-9]+);'
-REFRESH_URL_RE = r"url=([^\"]*)\""
-
-
-def extract_refresh(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """meta http-equiv=refresh redirects: (src, delay_sec, dst) per
-    declaration — the in-PAGE redirect surface (parked domains, moved
-    content, interstitials) that HTTP-level redirect logs never see.
-    Feed (src, dst) rows to resolve_redirects for chain collapse or
-    to url_equivalence as redirect evidence; delay_sec 0 is a hard
-    move, larger delays are interstitial hints. Relative targets are
-    resolved against the declaring page (resolve_href).
-
-    Zero shuffle: scan-fused element extraction + field pulls.
-    """
-    els = pages.select(
-        F.col(url_col).alias("src"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" r'{REFRESH_EL_RE}', 0)"  # r'': keep \s literal
-            )
-        ).alias("_el"),
-    )
-    return els.select(
-        "src",
-        F.regexp_extract(F.col("_el"), REFRESH_DELAY_RE, 1)
-        .cast("long")
-        .alias("delay_sec"),
-        resolve_href(
-            F.col("src"), F.regexp_extract(F.col("_el"), REFRESH_URL_RE, 1)
-        ).alias("dst"),
-    ).where(F.col("dst").isNotNull())
-
-
-def extract_refresh_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_refresh; `pages_sql` yields (url, html).
-    Href resolution covers the same absolute / protocol-relative /
-    root-relative / relative / non-http branches as
-    doc_link_graph_oracle_sql's res CTE."""
-    return f"""
-WITH pg AS ({pages_sql}),
-e AS (SELECT url AS src,
-        unnest(regexp_extract_all(lower(html),
-          '<meta http-equiv="refresh" content="[0-9]+;\\s*url=[^"]*"', 0))
-          AS el
-      FROM pg),
-f AS (SELECT src,
-        regexp_extract(el, 'content="([0-9]+);', 1)::BIGINT AS delay_sec,
-        regexp_extract(el, 'url=([^"]*)"', 1) AS href
-      FROM e)
-SELECT src, delay_sec, dst FROM (
-SELECT src, delay_sec,
-  CASE
-    WHEN regexp_matches(href, '^[hH][tT][tT][pP][sS]?://') THEN href
-    WHEN href LIKE '//%' THEN
-      regexp_extract(lower(src), '^([a-z][a-z0-9+.-]*)://', 1) || ':' || href
-    WHEN href LIKE '/%' THEN
-      regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1) || href
-    WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-    ELSE
-      regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)
-      || (CASE WHEN regexp_extract(src,
-               '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) = ''
-          THEN '/'
-          ELSE regexp_replace(regexp_extract(src,
-               '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-               '[^/]*$', '') END)
-      || href
-  END AS dst
-FROM f
-) WHERE dst IS NOT NULL
-"""
-
-
-def page_entities(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """The page's declared-entity layer, all surfaces unioned with
-    provenance: (url, source, type, name) from (1) JSON-LD blocks
-    (source='jsonld' — publisher-declared, highest precision, name
-    required), (2) the Open Graph card (source='og' — og:title as
-    name, og:type as type when present), (3) the <title> element
-    (source='title' — name only, the fallback every page has). The
-    KG node-profile layer joins this by url and takes the
-    highest-precedence source present; keeping every row (not
-    coalescing here) preserves cross-source disagreement as a QA
-    signal (a page whose og:title contradicts its JSON-LD name is
-    worth flagging).
-
-    Zero shuffle: a pure union of three scan-fused projections —
-    whole-stage codegen end to end.
-    """
-    h = F.lower(F.col(html_col).cast("string"))
-    jl = (
-        extract_jsonld(pages, html_col=html_col, url_col=url_col)
-        .where(F.col("name").isNotNull())
-        .select(
-            "url", F.lit("jsonld").alias("source"), "type", "name"
-        )
-    )
-    og_title = F.nullif(
-        F.regexp_extract(h, '<meta property="og:title" content="([^"]*)"', 1),
-        F.lit(""),
-    )
-    og_type = F.nullif(
-        F.regexp_extract(h, '<meta property="og:type" content="([^"]*)"', 1),
-        F.lit(""),
-    )
-    og = pages.select(
-        F.col(url_col).alias("url"),
-        F.lit("og").alias("source"),
-        og_type.alias("type"),
-        og_title.alias("name"),
-    ).where(F.col("name").isNotNull())
-    ti = pages.select(
-        F.col(url_col).alias("url"),
-        F.lit("title").alias("source"),
-        F.lit(None).cast("string").alias("type"),
-        F.nullif(
-            F.trim(F.regexp_extract(h, TITLE_RE, 1)), F.lit("")
-        ).alias("name"),
-    ).where(F.col("name").isNotNull())
-    return jl.unionByName(og).unionByName(ti)
-
-
-def page_entities_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of page_entities; `pages_sql` yields (url, html)."""
-    jsonld = extract_jsonld_oracle_sql(pages_sql)
-    return f"""
-WITH pg AS ({pages_sql}),
-lh AS (SELECT url, lower(html) AS h FROM pg),
-jl AS (SELECT url, 'jsonld' AS source, type, name
-       FROM ({jsonld}) WHERE name IS NOT NULL),
-og AS (
-  SELECT url, 'og' AS source,
-    nullif(regexp_extract(h,
-      '<meta property="og:type" content="([^"]*)"', 1), '') AS type,
-    nullif(regexp_extract(h,
-      '<meta property="og:title" content="([^"]*)"', 1), '') AS name
-  FROM lh
-),
-ti AS (
-  SELECT url, 'title' AS source, NULL::VARCHAR AS type,
-    nullif(trim(regexp_extract(h, '<title[^>]*>([^<]*)</title>', 1)), '')
-      AS name
-  FROM lh
-)
-SELECT * FROM jl
-UNION ALL SELECT * FROM og WHERE name IS NOT NULL
-UNION ALL SELECT * FROM ti WHERE name IS NOT NULL
-"""
-
-
-# sameAs contract: array form "sameAs": ["u1", "u2"] and single-string
-# form "sameAs": "u" both supported; the forms are disjoint by the
-# character after the colon, so no double counting.
-SAMEAS_ARR_RE = r'(?s)"sameAs"\s*:\s*\[(.*?)\]'
-SAMEAS_ONE_RE = r'"sameAs"\s*:\s*"([^"]*)"'
-SAMEAS_URL_RE = r'"([^"]*)"'
-
-
-def extract_sameas(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """schema.org sameAs alignment edges from JSON-LD blocks: (url,
-    name, sameas) — the page's declared entity aligned to external
-    authorities (Wikipedia, Wikidata, social profiles). This is GOLD
-    entity-canonicalization evidence: two pages whose entities declare
-    the same sameAs target are the same entity, no fuzzy matching
-    needed — feed (url, sameas) pairs to the components engine next
-    to name_similarity_edges, or rank authorities per entity. `name`
-    is the block's declared name (NULL when absent). Array and
-    single-string sameAs forms both parse; one row per target,
-    document order within the block preserved.
-
-    Zero shuffle: rides extract_jsonld's scan-fused block extraction
-    + one more posexplode over the array body.
-    """
-    jl = extract_jsonld(pages, html_col=html_col, url_col=url_col)
-    arr = (
-        jl.select(
-            "url",
-            "block_idx",
-            "name",
-            F.expr(
-                f"regexp_extract_all("
-                f"regexp_extract(payload, r'{SAMEAS_ARR_RE}', 1),"
-                f" r'{SAMEAS_URL_RE}', 1)"
-            ).alias("_us"),
-        )
-        .select(
-            "url", "block_idx", "name",
-            F.posexplode("_us").alias("sameas_idx", "sameas"),
-        )
-    )
-    one = (
-        jl.select(
-            "url",
-            "block_idx",
-            "name",
-            F.lit(0).alias("sameas_idx"),
-            F.nullif(
-                F.regexp_extract(F.col("payload"), SAMEAS_ONE_RE, 1),
-                F.lit(""),
-            ).alias("sameas"),
-        )
-        .where(F.col("sameas").isNotNull())
-    )
-    return arr.unionByName(one)
-
-
-def _sameas_cte_sql(pages_sql: str) -> str:
-    """Flat CTE chain ending in sa(url, block_idx, name, sameas_idx,
-    sameas) — shared by the sameas and sameas_clusters twins, flat so
-    it also composes under WITH RECURSIVE (DuckDB mishandles NESTED
-    WITHs inside a recursive chain's CTE bodies)."""
-    return f"""{_jsonld_cte_sql(pages_sql)},
-arr AS (
-  SELECT url, block_idx, name,
-    regexp_extract_all(
-      regexp_extract(payload, '(?s)"sameAs"\\s*:\\s*\\[(.*?)\\]', 1),
-      '"([^"]*)"', 1) AS us
-  FROM jl
-),
-arr_x AS (
-  SELECT url, block_idx, name, u.i::INT AS sameas_idx, u.v AS sameas
-  FROM (SELECT url, block_idx, name,
-          unnest(list_transform(range(0, len(us)),
-            i -> {{'i': i, 'v': us[(i+1)::INT]}})) AS u FROM arr)
-),
-one AS (
-  SELECT url, block_idx, name, 0 AS sameas_idx,
-    nullif(regexp_extract(payload, '"sameAs"\\s*:\\s*"([^"]*)"', 1), '')
-      AS sameas
-  FROM jl
-),
-sa AS (
-  SELECT * FROM arr_x
-  UNION ALL SELECT * FROM one WHERE sameas IS NOT NULL
-)"""
-
-
-def extract_sameas_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_sameas; `pages_sql` yields (url, html)."""
-    return f"""
-WITH {_sameas_cte_sql(pages_sql)}
-SELECT * FROM sa
-"""
-
-
-def sameas_clusters(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Cross-document entity merging from sameAs evidence alone:
-    (node, entity) where node is a page url or an authority url and
-    entity = min url reachable over (page, sameAs-target) edges —
-    pages whose JSON-LD entities share ANY authority (directly or
-    through a chain: A and B both cite Wikipedia, B and C both cite
-    Wikidata => A,B,C merge) land in one entity class. This is the
-    zero-NLP canonicalization tier that runs BEFORE name similarity:
-    exact declared evidence first, fuzzy matching only for what's
-    left. Same components engine as the KG/url layers; edge
-    construction zero shuffle.
-    """
-    from easyner_spark.operators.components import connected_components
-
-    edges = extract_sameas(
-        pages, html_col=html_col, url_col=url_col
-    ).select(F.col("url").alias("src"), F.col("sameas").alias("dst"))
-    return connected_components(edges).select(
-        "node", F.col("component").alias("entity")
-    )
-
-
-def sameas_clusters_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin: the sameas twin's (url, sameas) edges through the
-    min-label reachability closure."""
-    return f"""
-WITH RECURSIVE {_sameas_cte_sql(pages_sql)},
-edges AS (SELECT DISTINCT url AS a, sameas AS b FROM sa),
-sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-nodes AS (SELECT DISTINCT a AS node FROM sym),
-reach(node, lbl) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN sym e ON r.node = e.a
-)
-SELECT node, min(lbl) AS entity FROM reach GROUP BY node
-"""
-
-
-def href_resolve_case_sql(src_expr: str, href_expr: str) -> str:
-    """The DuckDB CASE twin of resolve_href (absolute /
-    protocol-relative / root-relative / non-http-scheme NULL /
-    relative branches) — shared by every oracle that resolves hrefs;
-    same branches as doc_link_graph_oracle_sql's res CTE."""
-    return f"""CASE
-    WHEN regexp_matches({href_expr}, '^[hH][tT][tT][pP][sS]?://')
-      THEN {href_expr}
-    WHEN {href_expr} LIKE '//%' THEN
-      regexp_extract(lower({src_expr}), '^([a-z][a-z0-9+.-]*)://', 1)
-      || ':' || {href_expr}
-    WHEN {href_expr} LIKE '/%' THEN
-      regexp_extract({src_expr}, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)
-      || {href_expr}
-    WHEN regexp_matches({href_expr}, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-    ELSE
-      regexp_extract({src_expr}, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)
-      || (CASE WHEN regexp_extract({src_expr},
-               '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) = ''
-          THEN '/'
-          ELSE regexp_replace(regexp_extract({src_expr},
-               '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-               '[^/]*$', '') END)
-      || {href_expr}
-  END"""
-
-
-# pagination contract: same double-quoted fixed-order class as the
-# other <link> extractors
-PAG_EL_RE = r'<link rel="(?:next|prev)" href="[^"]*"'
-PAG_REL_RE = r'rel="([^"]*)"'
-PAG_HREF_RE = r'href="([^"]*)"'
-
-
-def extract_rel_pagination(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """rel=next/prev pagination declarations: (url, rel, target) with
-    full href resolution — the multi-page-article surface (page 2 of
-    a listicle is a CONTINUATION, not a duplicate or a distinct doc).
-    Zero shuffle."""
-    els = pages.select(
-        F.col(url_col).alias("url"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" '{PAG_EL_RE}', 0)"
-            )
-        ).alias("_el"),
-    )
-    return els.select(
-        "url",
-        F.regexp_extract(F.col("_el"), PAG_REL_RE, 1).alias("rel"),
-        resolve_href(
-            F.col("url"), F.regexp_extract(F.col("_el"), PAG_HREF_RE, 1)
-        ).alias("target"),
-    ).where(F.col("target").isNotNull())
-
-
-def pagination_series(
-    pages: DataFrame,
-    max_pages: int = 16,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Multi-page article reconstruction from rel=next/prev: (url,
-    series, page_ord, status) where series = the head page (the one
-    nothing points back from) and page_ord = exact distance from the
-    head. prev-pointers come from BOTH declarations (a page's own
-    rel=prev, and the inverse of its predecessor's rel=next — either
-    alone suffices; conflicting duplicates collapse min-wins,
-    deterministic). The chain walk is resolve_redirects' pointer
-    doubling on the prev-edge table — log2(max_pages) bounded-key
-    self-joins, no per-step sequential lookups; `max_pages` must be a
-    power of two (the doubling contract). Rows with status
-    'unresolved' are cycles or over-long chains (page_ord =
-    max_pages, the walk's documented cap value). Downstream: a
-    training-corpus builder concatenates a series in page_ord order
-    instead of treating continuation pages as near-dup noise.
-    """
-    rel = extract_rel_pagination(pages, html_col=html_col, url_col=url_col)
-    prev_edges = (
-        rel.where(F.col("rel") == "prev")
-        .select("url", F.col("target").alias("prev"))
-        .unionByName(
-            rel.where(F.col("rel") == "next").select(
-                F.col("target").alias("url"), F.col("url").alias("prev")
-            )
-        )
-        .groupBy("url")
-        .agg(F.min("prev").alias("target"))
-    )
-    res = resolve_redirects(prev_edges, max_steps=max_pages)
-    body = res.select(
-        "url",
-        F.col("final_url").alias("series"),
-        F.col("hops").alias("page_ord"),
-        "status",
-    )
-    heads = (
-        res.where(F.col("status") == "resolved")
-        .select(F.col("final_url").alias("url"))
-        .distinct()
-        .select(
-            "url",
-            F.col("url").alias("series"),
-            F.lit(0).cast("long").alias("page_ord"),
-            F.lit("resolved").alias("status"),
-        )
-    )
-    return body.unionByName(heads)
-
-
-def pagination_series_oracle_sql(pages_sql: str, max_pages: int = 16) -> str:
-    """DuckDB twin of pagination_series: same extraction + inverse
-    edges + min-collapse, composed through the redirect-walk twin's
-    final_sql hook."""
-    resolve = href_resolve_case_sql("url", "href")
-    redirects_cte = f"""ppg AS ({pages_sql}),
-pels AS (SELECT url,
-          unnest(regexp_extract_all(lower(html),
-            '<link rel="(?:next|prev)" href="[^"]*"', 0)) AS el
-        FROM ppg),
-prel0 AS (SELECT url, regexp_extract(el, 'rel="([^"]*)"', 1) AS rel,
-                regexp_extract(el, 'href="([^"]*)"', 1) AS href
-         FROM pels),
-prel AS (SELECT url, rel, {resolve} AS target FROM prel0),
-pe AS (
-  SELECT url, target AS prev FROM prel WHERE rel = 'prev' AND target IS NOT NULL
-  UNION ALL
-  SELECT target AS url, url AS prev FROM prel WHERE rel = 'next' AND target IS NOT NULL
-),
-r AS (SELECT url, min(prev) AS target FROM pe GROUP BY url)"""
-    final = """,
-body AS (
-  SELECT url, cur AS series, hops::BIGINT AS page_ord, status
-  FROM last WHERE rn = 1
-),
-heads AS (
-  SELECT DISTINCT series AS url, series, 0::BIGINT AS page_ord,
-         'resolved' AS status
-  FROM body WHERE status = 'resolved'
-)
-SELECT * FROM body UNION ALL SELECT * FROM heads
-"""
-    return resolve_redirects_oracle_sql(
-        redirects_cte, max_steps=max_pages, final_sql=final
-    )
-
-
-def assemble_series(
-    pages: DataFrame,
-    series: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
-    """Series-aware corpus assembly: concatenate each pagination
-    series' page texts in page_ord order into ONE document — (series,
-    n_pages, text). Pages not in any series (single-page docs) pass
-    through as their own 1-page series. Unresolved series rows
-    (cycles / over-cap chains from pagination_series) are EXCLUDED —
-    garbage order would corrupt the text; they stay behind for the
-    dedup tier to handle as ordinary pages.
-
-    Scale (2 shuffles): one uniform url-keyed left join onto the
-    (bounded) series table, one groupBy(series) whose per-group size
-    is bounded by max_pages — the struct-array sort is per-series
-    local, never a global window.
-    """
-    s = series.where(F.col("status") == "resolved").select(
-        F.col("url").alias(url_col), "series", "page_ord"
-    )
-    joined = pages.select(url_col, text_col).join(s, url_col, "left")
-    normalized = joined.select(
-        F.coalesce(F.col("series"), F.col(url_col)).alias("series"),
-        F.coalesce(F.col("page_ord"), F.lit(0)).cast("long").alias("page_ord"),
-        F.col(text_col).alias("_t"),
-    )
-    return normalized.groupBy("series").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pages"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("page_ord", F.col("_t").alias("t")))
-                ),
-                lambda x: x["t"],
-            ),
-            sep,
-        ).alias("text"),
-    )
-
-
-def assemble_series_oracle_sql(
-    pages_sql: str, series_sql: str, sep: str = r"\n"
-) -> str:
-    """DuckDB twin of assemble_series; `pages_sql` yields (url, text),
-    `series_sql` yields (url, series, page_ord, status). `sep` is a
-    DuckDB escape-string body (default newline)."""
-    return f"""
-WITH apg AS ({pages_sql}),
-asr AS (SELECT url, series, page_ord FROM ({series_sql})
-        WHERE status = 'resolved'),
-norm AS (
-  SELECT coalesce(s.series, p.url) AS series,
-         coalesce(s.page_ord, 0)::BIGINT AS page_ord, p.text
-  FROM apg p LEFT JOIN asr s ON p.url = s.url
-)
-SELECT series, count(*)::BIGINT AS n_pages,
-       string_agg(text, e'{sep}' ORDER BY page_ord, text) AS text
-FROM norm GROUP BY series
-"""
-
-
-def host_surface_profile(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Per-host structured-data adoption: (host, n_pages, pct_jsonld,
-    pct_og, pct_table, pct_title) — what fraction of a host's pages
-    carry each extraction surface. This is the extraction PLANNER's
-    table: a host at 95% JSON-LD routes through the declared-entity
-    tier; a host at 0% structured data routes to the NER/boilerplate
-    tier — and a host whose adoption suddenly drops flags a template
-    change that broke extraction. Percentages are exact BIGINT floor
-    divisions.
-
-    Scale: per-page booleans are scan-fused regex probes (zero
-    shuffle), then ONE algebraic host rollup — sums absorb any host's
-    page count map-side.
-    """
-    h = F.lower(F.col(html_col).cast("string"))
-    raw = F.col(html_col).cast("string")
-    probes = pages.select(
-        _host_col(F.col(url_col)).alias("host"),
-        F.col(url_col).alias("_u"),
-        (raw.contains('<script type="application/ld+json">')).cast("long")
-        .alias("_jsonld"),
-        (h.contains('<meta property="og:')).cast("long").alias("_og"),
-        (h.contains("<table")).cast("long").alias("_table"),
-        (h.contains("<title")).cast("long").alias("_title"),
-    )
-    agg = probes.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pages"),
-        F.sum("_jsonld").alias("_sj"),
-        F.sum("_og").alias("_so"),
-        F.sum("_table").alias("_st"),
-        F.sum("_title").alias("_sti"),
-    )
-    return agg.select(
-        "host",
-        "n_pages",
-        F.expr("_sj * 100 div n_pages").alias("pct_jsonld"),
-        F.expr("_so * 100 div n_pages").alias("pct_og"),
-        F.expr("_st * 100 div n_pages").alias("pct_table"),
-        F.expr("_sti * 100 div n_pages").alias("pct_title"),
-    )
-
-
-def host_surface_profile_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of host_surface_profile; `pages_sql` yields
-    (url, html)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-pr AS (
-  SELECT regexp_replace(lower(regexp_extract(url, '{HOST_RE}', 1)),
-           ':\\d+$', '') AS host,
-    (position('<script type="application/ld+json">' IN html) > 0)::BIGINT
-      AS j,
-    (position('<meta property="og:' IN lower(html)) > 0)::BIGINT AS o,
-    (position('<table' IN lower(html)) > 0)::BIGINT AS t,
-    (position('<title' IN lower(html)) > 0)::BIGINT AS ti
-  FROM pg
-)
-SELECT host, count(*)::BIGINT AS n_pages,
-       sum(j) * 100 // count(*) AS pct_jsonld,
-       sum(o) * 100 // count(*) AS pct_og,
-       sum(t) * 100 // count(*) AS pct_table,
-       sum(ti) * 100 // count(*) AS pct_title
-FROM pr GROUP BY host
-"""
-
-
-def robots_sitemaps(
-    robots: DataFrame,
-    url_col: str = "url",
-    text_col: str = "robots_txt",
-) -> DataFrame:
-    """Sitemap announcements from robots.txt: (host, sitemap_url,
-    line_no) per `Sitemap:` line — the missing link between the
-    politeness chain and the discovery chain: robots.txt announces
-    the sitemaps, sitemap_parse reads them, sitemap_frontier/
-    crawl_frontier enqueue what they announce. Per RFC 9309 /
-    sitemaps.org the directive is GLOBAL (not scoped to a User-agent
-    group), so every Sitemap line counts wherever it appears —
-    deliberately different from parse_robots' group-scoped rules.
-    Directive name case-insensitive, value must be an absolute url
-    per the spec (non-http values dropped); '#' comments stripped.
-
-    Zero shuffle: line explode + scan-fused pulls.
-    """
-    host = _host_col(F.col(url_col))
-    lines = robots.select(
-        host.alias("host"),
-        F.posexplode(
-            F.split(F.col(text_col), r"\n")
-        ).alias("line_no", "_raw"),
-    )
-    clean = F.trim(F.regexp_replace(F.col("_raw"), r"#.*$", ""))
-    name = F.lower(F.trim(F.regexp_extract(clean, r"^([A-Za-z-]+)\s*:", 1)))
-    value = F.trim(F.regexp_extract(clean, r"^[A-Za-z-]+\s*:\s*(.*)$", 1))
-    return (
-        lines.select(
-            "host",
-            F.col("line_no").cast("long").alias("line_no"),
-            name.alias("_n"),
-            value.alias("sitemap_url"),
-        )
-        .where(
-            (F.col("_n") == "sitemap")
-            & F.col("sitemap_url").rlike("^[hH][tT][tT][pP][sS]?://")
-        )
-        .select("host", "sitemap_url", "line_no")
-    )
-
-
-def robots_sitemaps_oracle_sql(robots_sql: str) -> str:
-    """DuckDB twin of robots_sitemaps; `robots_sql` yields
-    (url, robots_txt)."""
-    return f"""
-WITH rb AS ({robots_sql}),
-ln AS (SELECT
-         regexp_replace(lower(regexp_extract(url, '{HOST_RE}', 1)),
-           ':\\d+$', '') AS host,
-         u.i::BIGINT AS line_no,
-         trim(regexp_replace(u.v, '#.*$', '')) AS clean
-       FROM (SELECT url, unnest(list_transform(range(0, len(ls)),
-               i -> {{'i': i, 'v': ls[(i+1)::INT]}})) AS u
-             FROM (SELECT url, string_split(robots_txt, chr(10)) AS ls
-                   FROM rb)))
-SELECT host,
-       trim(regexp_extract(clean, '^[A-Za-z-]+\\s*:\\s*(.*)$', 1))
-         AS sitemap_url,
-       line_no
-FROM ln
-WHERE lower(trim(regexp_extract(clean, '^([A-Za-z-]+)\\s*:', 1))) = 'sitemap'
-  AND regexp_matches(trim(regexp_extract(clean, '^[A-Za-z-]+\\s*:\\s*(.*)$', 1)),
-        '^[hH][tT][tT][pP][sS]?://')
-"""
 
 
 def url_templates(
@@ -3618,159 +1086,7 @@ x AS (SELECT url, u.i::INT AS heading_idx,
               i -> {{'i': i, 'v': els[(i+1)::INT]}})) AS u FROM e))
 SELECT * FROM x WHERE text != ''
 """
-
-
-# list contract: <ul>/<ol> blocks matched whole ((?s) lazy), items as
-# [^<]* runs — same tolerance class as tables/headings
-LIST_EL_RE = r"(?s)<[uo]l[^>]*>.*?</[uo]l>"
 LIST_ITEM_RE = r"<li[^>]*>([^<]*)</li>"
-
-
-def extract_lists(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """HTML list extraction: (url, list_idx, item_idx, ordered, item)
-    per <li> — the third structured surface next to tables and
-    headings: navigation menus (boilerplate evidence), feature/spec
-    bullets (fact candidates), and ranked <ol> lists whose item order
-    IS data. `ordered` distinguishes <ol> from <ul>; items trimmed,
-    lowercased, empties dropped; block-first matching so items never
-    attach to a neighboring list.
-
-    Zero shuffle: two stacked posexplodes over scan-fused
-    regexp_extract_all.
-    """
-    blocks = pages.select(
-        F.col(url_col).alias("url"),
-        F.posexplode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" '{LIST_EL_RE}', 0)"
-            )
-        ).alias("list_idx", "_b"),
-    )
-    items = blocks.select(
-        "url",
-        "list_idx",
-        F.col("_b").startswith("<ol").alias("ordered"),
-        F.posexplode(
-            F.expr(f"regexp_extract_all(_b, '{LIST_ITEM_RE}', 1)")
-        ).alias("item_idx", "_item"),
-    )
-    return items.select(
-        "url", "list_idx", "item_idx", "ordered",
-        F.trim(F.col("_item")).alias("item"),
-    ).where(F.col("item") != "")
-
-
-def extract_lists_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_lists; `pages_sql` yields (url, html)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-b AS (SELECT url,
-        regexp_extract_all(lower(html), '(?s)<[uo]l[^>]*>.*?</[uo]l>', 0)
-          AS bs
-      FROM pg),
-bl AS (SELECT url, u.i::INT AS list_idx, u.v AS blk
-       FROM (SELECT url, unnest(list_transform(range(0, len(bs)),
-               i -> {{'i': i, 'v': bs[(i+1)::INT]}})) AS u FROM b)),
-it AS (SELECT url, list_idx, blk LIKE '<ol%' AS ordered,
-         u.i::INT AS item_idx, trim(u.v) AS item
-       FROM (SELECT url, list_idx, blk,
-               unnest(list_transform(range(0, len(xs)),
-                 i -> {{'i': i, 'v': xs[(i+1)::INT]}})) AS u
-             FROM (SELECT url, list_idx, blk,
-                     regexp_extract_all(blk, '<li[^>]*>([^<]*)</li>', 1)
-                       AS xs FROM bl)))
-SELECT url, list_idx, item_idx, ordered, item FROM it WHERE item != ''
-"""
-
-
-# social-profile contract, shared with the oracle: platform host ->
-# handle extraction pattern over RESOLVED hrefs; handle charset is the
-# platforms' common [A-Za-z0-9_.-]; kept lowercase (comparison form)
-SOCIAL_PLATFORMS = (
-    ("twitter", r"^https?://(?:www\.)?(?:twitter|x)\.com/([a-z0-9_.-]+)"),
-    ("github", r"^https?://(?:www\.)?github\.com/([a-z0-9_.-]+)"),
-    ("linkedin", r"^https?://(?:www\.)?linkedin\.com/in/([a-z0-9_.-]+)"),
-    ("instagram", r"^https?://(?:www\.)?instagram\.com/([a-z0-9_.-]+)"),
-    ("youtube", r"^https?://(?:www\.)?youtube\.com/@([a-z0-9_.-]+)"),
-)
-
-
-def social_profiles(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Social-profile link extraction: (url, platform, handle) per
-    outlink into a known profile platform — KG node enrichment (a
-    page's declared official profiles are identity evidence of the
-    sameAs class: two pages linking the same github handle likely
-    describe the same entity — feed (url, platform || ':' || handle)
-    edges to the components engine). Hrefs are resolved then
-    lowercased; the handle is the first path segment under each
-    platform's profile scheme; one row per distinct (page, platform,
-    handle).
-
-    Scale: scan-fused anchor extraction + resolution + a platform
-    CASE chain (zero shuffle), then ONE distinct on the uniform
-    composite key.
-    """
-    hrefs = pages.select(
-        F.col(url_col).alias("url"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(cast({html_col} as string),"
-                f" '{ANCHOR_EL_RE}', 0)"
-            )
-        ).alias("_el"),
-    ).select(
-        "url",
-        F.lower(
-            resolve_href(
-                F.col("url"),
-                F.regexp_extract(F.col("_el"), ANCHOR_HREF_RE, 1),
-            )
-        ).alias("_t"),
-    ).where(F.col("_t").isNotNull())
-    platform = F.lit(None).cast("string")
-    handle = F.lit(None).cast("string")
-    for name, pat in reversed(SOCIAL_PLATFORMS):
-        hit = F.nullif(F.regexp_extract(F.col("_t"), pat, 1), F.lit(""))
-        platform = F.when(hit.isNotNull(), F.lit(name)).otherwise(platform)
-        handle = F.when(hit.isNotNull(), hit).otherwise(handle)
-    return (
-        hrefs.select("url", platform.alias("platform"), handle.alias("handle"))
-        .where(F.col("platform").isNotNull())
-        .distinct()
-    )
-
-
-def social_profiles_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of social_profiles; `pages_sql` yields (url, html)."""
-    resolve = href_resolve_case_sql("url", "href")
-    arms = "\n".join(
-        f"    WHEN regexp_extract(t, '{pat}', 1) != ''"
-        f" THEN struct_pack(p := '{name}',"
-        f" h := regexp_extract(t, '{pat}', 1))"
-        for name, pat in SOCIAL_PLATFORMS
-    )
-    return f"""
-WITH pg AS ({pages_sql}),
-a AS (SELECT url,
-        unnest(regexp_extract_all(html,
-          '<a href="[^"]*"[^>]*>[^<]*</a>', 0)) AS el
-      FROM pg),
-h AS (SELECT url, regexp_extract(el, 'href="([^"]*)"', 1) AS href FROM a),
-r AS (SELECT url, lower({resolve}) AS t FROM h),
-m AS (
-  SELECT url, CASE
-{arms}
-    ELSE NULL END AS ph
-  FROM r WHERE t IS NOT NULL
-)
-SELECT DISTINCT url, ph.p AS platform, ph.h AS handle
-FROM m WHERE ph IS NOT NULL
-"""
 
 
 # sitemap-index contract: <sitemap> blocks (the nesting level above
@@ -3885,266 +1201,6 @@ FROM h
 """
 
 
-# definition-list contract: <dl> blocks matched whole; inside, <dt>
-# terms pair with the <dd> that FOLLOWS them (the HTML glossary
-# semantic); [^<]* runs, same tolerance class as the other structures
-DL_EL_RE = r"(?s)<dl[^>]*>.*?</dl>"
-DT_DD_RE = r"<dt[^>]*>([^<]*)</dt>\s*<dd[^>]*>([^<]*)</dd>"
-
-
-def extract_definitions(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Glossary extraction: (url, dl_idx, def_idx, term, definition)
-    per <dt>/<dd> pair inside <dl> blocks — the fourth structured
-    surface (tables, headings, lists, definitions): glossaries, FAQ
-    schemas, and spec sheets define terms IN PLACE, giving the KG
-    definition-grade (term, MEANS, text) facts with none of the
-    copula pattern's ambiguity. Terms lowercased/trimmed (the
-    canonical comparison form), definitions kept verbatim-trimmed;
-    a <dt> without an adjacent following <dd> contributes nothing.
-
-    Zero shuffle: two stacked posexplodes over scan-fused
-    regexp_extract_all (block first, pair second — a pair never
-    crosses a <dl> boundary).
-    """
-    blocks = pages.select(
-        F.col(url_col).alias("url"),
-        F.posexplode(
-            F.expr(
-                f"regexp_extract_all(cast({html_col} as string),"
-                f" '{DL_EL_RE}', 0)"
-            )
-        ).alias("dl_idx", "_b"),
-    )
-    pairs = blocks.select(
-        "url",
-        "dl_idx",
-        F.posexplode(
-            F.expr(f"regexp_extract_all(_b, r'{DT_DD_RE}', 0)")
-        ).alias("def_idx", "_p"),
-    )
-    return pairs.select(
-        "url",
-        "dl_idx",
-        "def_idx",
-        F.lower(F.trim(F.regexp_extract(F.col("_p"), DT_DD_RE, 1))).alias(
-            "term"
-        ),
-        F.trim(F.regexp_extract(F.col("_p"), DT_DD_RE, 2)).alias(
-            "definition"
-        ),
-    ).where((F.col("term") != "") & (F.col("definition") != ""))
-
-
-def extract_definitions_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_definitions; `pages_sql` yields
-    (url, html)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-b AS (SELECT url,
-        regexp_extract_all(html, '(?s)<dl[^>]*>.*?</dl>', 0) AS bs
-      FROM pg),
-bl AS (SELECT url, u.i::INT AS dl_idx, u.v AS blk
-       FROM (SELECT url, unnest(list_transform(range(0, len(bs)),
-               i -> {{'i': i, 'v': bs[(i+1)::INT]}})) AS u FROM b)),
-pr AS (SELECT url, dl_idx, u.i::INT AS def_idx, u.v AS p
-       FROM (SELECT url, dl_idx,
-               unnest(list_transform(range(0, len(ps)),
-                 i -> {{'i': i, 'v': ps[(i+1)::INT]}})) AS u
-             FROM (SELECT url, dl_idx,
-                     regexp_extract_all(blk,
-                       '<dt[^>]*>([^<]*)</dt>\\s*<dd[^>]*>([^<]*)</dd>',
-                       0) AS ps FROM bl)))
-SELECT url, dl_idx, def_idx,
-  lower(trim(regexp_extract(p,
-    '<dt[^>]*>([^<]*)</dt>\\s*<dd[^>]*>([^<]*)</dd>', 1))) AS term,
-  trim(regexp_extract(p,
-    '<dt[^>]*>([^<]*)</dt>\\s*<dd[^>]*>([^<]*)</dd>', 2)) AS definition
-FROM pr
-WHERE lower(trim(regexp_extract(p,
-    '<dt[^>]*>([^<]*)</dt>\\s*<dd[^>]*>([^<]*)</dd>', 1))) != ''
-  AND trim(regexp_extract(p,
-    '<dt[^>]*>([^<]*)</dt>\\s*<dd[^>]*>([^<]*)</dd>', 2)) != ''
-"""
-
-
-# AMP contract: same double-quoted fixed-order class
-AMP_EL_RE = r'<link rel="amphtml" href="([^"]*)"'
-
-
-def extract_amphtml(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """AMP-variant declarations: (src, dst) per rel=amphtml link —
-    the FIFTH url-equivalence evidence source (after rel=canonical,
-    redirects, normalization, and og:url): a page and its AMP mirror
-    are the same document, and treating them as distinct double-counts
-    content in dedup and splits link equity in ranking. Feed directly
-    to url_equivalence's `redirects` argument (same (src, dst) edge
-    shape). Targets resolved via resolve_href (AMP pages are often
-    declared root-relative under /amp/).
-
-    Zero shuffle: scan-fused extraction + resolution.
-    """
-    els = pages.select(
-        F.col(url_col).alias("src"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" '{AMP_EL_RE}', 1)"
-            )
-        ).alias("_href"),
-    )
-    return els.select(
-        "src",
-        resolve_href(F.col("src"), F.col("_href")).alias("dst"),
-    ).where(F.col("dst").isNotNull())
-
-
-def extract_amphtml_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_amphtml; `pages_sql` yields (url, html)."""
-    resolve = href_resolve_case_sql("src", "href")
-    return f"""
-WITH pg AS ({pages_sql}),
-e AS (SELECT url AS src,
-        unnest(regexp_extract_all(lower(html),
-          '<link rel="amphtml" href="([^"]*)"', 1)) AS href
-      FROM pg)
-SELECT src, dst FROM (
-  SELECT src, {resolve} AS dst FROM e
-) WHERE dst IS NOT NULL
-"""
-
-
-def jsonld_fields(
-    pages: DataFrame,
-    fields: tuple[str, ...] = ("startDate", "location", "author", "price"),
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Generic JSON-LD field pulls: (url, block_idx, type, field,
-    value) — for each declared field name, the block's first string
-    value (same crawl-grade top-level-string contract as @type/name).
-    This is the typed-fact layer over extract_jsonld: an Event block
-    yields its startDate and location, a Product its price — each row
-    a (page entity, field, value) fact with the block's @type as the
-    class context, no per-schema operator needed. Field names are
-    matched case-SENSITIVELY (schema.org camelCase is normative);
-    blocks without a field emit no row for it.
-
-    Zero shuffle: rides extract_jsonld + one explode over the
-    bounded field list with scan-fused pulls.
-    """
-    jl = extract_jsonld(pages, html_col=html_col, url_col=url_col)
-    field_arr = F.array(*[F.lit(f) for f in fields])
-    rows = jl.select(
-        "url", "block_idx", "type", "payload",
-        F.explode(field_arr).alias("field"),
-    )
-    # per-field pull: one CASE arm per requested field (bounded list)
-    value = F.lit(None).cast("string")
-    for f in reversed(fields):
-        pulled = F.nullif(
-            F.regexp_extract(
-                F.col("payload"), '"' + f + r'"\s*:\s*"([^"]*)"', 1
-            ),
-            F.lit(""),
-        )
-        value = F.when(F.col("field") == f, pulled).otherwise(value)
-    return rows.select(
-        "url", "block_idx", "type", "field", value.alias("value")
-    ).where(F.col("value").isNotNull())
-
-
-def jsonld_fields_oracle_sql(
-    pages_sql: str,
-    fields: tuple[str, ...] = ("startDate", "location", "author", "price"),
-) -> str:
-    """DuckDB twin of jsonld_fields; `pages_sql` yields (url, html)."""
-    arms = "\n".join(
-        f"    WHEN field = '{f}' THEN"
-        f" nullif(regexp_extract(payload, '\"{f}\"\\s*:\\s*\"([^\"]*)\"', 1), '')"
-        for f in fields
-    )
-    field_list = ", ".join(f"'{f}'" for f in fields)
-    return f"""
-WITH {_jsonld_cte_sql(pages_sql)},
-fx AS (SELECT url, block_idx, type, payload, unnest([{field_list}]) AS field
-       FROM jl),
-v AS (SELECT url, block_idx, type, field,
-        CASE
-{arms}
-        ELSE NULL END AS value
-      FROM fx)
-SELECT url, block_idx, type, field, value FROM v WHERE value IS NOT NULL
-"""
-
-
-ANCHOR_REL_RE = r' rel="([^"]*)"'
-
-
-def anchor_rels(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Link-rel classification per anchor: (src, dst, rel, follow) —
-    rel="nofollow"/"ugc"/"sponsored" links must not pass rank or count
-    as endorsement evidence (the Google link-spam trichotomy), so the
-    link-graph layer filters on `follow` before host_graph / PageRank
-    and the frontier can deprioritize nofollow-only discoveries.
-    `rel` is the raw lowercased token list (NULL when absent);
-    `follow` is false when any of the three opt-out tokens appears.
-    Targets resolved via resolve_href, non-http dropped.
-
-    Zero shuffle: scan-fused anchor extraction + rel pull + resolve.
-    """
-    els = pages.select(
-        F.col(url_col).alias("src"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(lower(cast({html_col} as string)),"
-                f" '{ANCHOR_EL_RE}', 0)"
-            )
-        ).alias("_el"),
-    )
-    rel = F.nullif(
-        F.regexp_extract(F.col("_el"), ANCHOR_REL_RE, 1), F.lit("")
-    )
-    return els.select(
-        "src",
-        resolve_href(
-            F.col("src"), F.regexp_extract(F.col("_el"), ANCHOR_HREF_RE, 1)
-        ).alias("dst"),
-        rel.alias("rel"),
-        (
-            ~F.coalesce(
-                rel.rlike(r"\b(nofollow|ugc|sponsored)\b"), F.lit(False)
-            )
-        ).alias("follow"),
-    ).where(F.col("dst").isNotNull())
-
-
-def anchor_rels_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of anchor_rels; `pages_sql` yields (url, html)."""
-    resolve = href_resolve_case_sql("src", "href")
-    return f"""
-WITH pg AS ({pages_sql}),
-a AS (SELECT url AS src,
-        unnest(regexp_extract_all(lower(html),
-          '<a href="[^"]*"[^>]*>[^<]*</a>', 0)) AS el
-      FROM pg),
-f AS (SELECT src,
-        regexp_extract(el, 'href="([^"]*)"', 1) AS href,
-        nullif(regexp_extract(el, ' rel="([^"]*)"', 1), '') AS rel
-      FROM a)
-SELECT src, dst, rel,
-  NOT coalesce(regexp_matches(rel, '\\b(nofollow|ugc|sponsored)\\b'), FALSE)
-    AS follow
-FROM (SELECT src, {resolve} AS dst, rel FROM f)
-WHERE dst IS NOT NULL
-"""
-
-
 # breadcrumb contract: schema.org BreadcrumbList JSON-LD, the dominant
 # machine-readable breadcrumb on the web. A block is a breadcrumb
 # trail iff its FIRST "@type" value (extract_jsonld's `type`
@@ -4205,45 +1261,6 @@ def extract_breadcrumbs(
     )
 
 
-def _breadcrumb_cte_sql(pages_sql: str) -> str:
-    """Flat CTE chain ending in bc(url, block_idx, position, name) —
-    the DuckDB twin of extract_breadcrumbs."""
-    item_re = (
-        '\\{"@type": "ListItem", "position": (\\d+), "name": "([^"]*)"\\}'
-    )
-    return f"""bpg AS ({pages_sql}),
-bbl AS (SELECT url,
-        regexp_extract_all(html,
-          '(?s)<script type="application/ld\\+json">(.*?)</script>', 1) AS bs
-      FROM bpg),
-bfl AS (
-  SELECT url, u.i::INT AS block_idx, u.v AS payload
-  FROM (SELECT url, unnest(list_transform(range(0, len(bs)),
-          i -> {{'i': i, 'v': bs[(i+1)::INT]}})) AS u FROM bbl)
-  WHERE regexp_extract(u.v, '"@type"\\s*:\\s*"([^"]*)"', 1)
-          = 'BreadcrumbList'
-),
-bit AS (SELECT url, block_idx,
-        regexp_extract_all(payload, '{item_re}', 0) AS its
-      FROM bfl),
-bc AS (
-  SELECT url, block_idx,
-    regexp_extract(u.v, '{item_re}', 1)::INT AS position,
-    regexp_extract(u.v, '{item_re}', 2) AS name
-  FROM (SELECT url, block_idx, unnest(list_transform(range(0, len(its)),
-          i -> {{'i': i, 'v': its[(i+1)::INT]}})) AS u FROM bit)
-)"""
-
-
-def extract_breadcrumbs_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of extract_breadcrumbs; `pages_sql` yields
-    (url, html)."""
-    return f"""
-WITH {_breadcrumb_cte_sql(pages_sql)}
-SELECT url, block_idx, position, name FROM bc
-"""
-
-
 def breadcrumb_edges(
     crumbs: DataFrame, min_pages: int = 1
 ) -> DataFrame:
@@ -4280,29 +1297,6 @@ def breadcrumb_edges(
         .agg(F.count("*").alias("n_pages"))
         .where(F.col("n_pages") >= min_pages)
     )
-
-
-def breadcrumb_edges_oracle_sql(pages_sql: str, min_pages: int = 1) -> str:
-    """DuckDB twin of breadcrumb_edges over extract_breadcrumbs."""
-    return f"""
-WITH {_breadcrumb_cte_sql(pages_sql)},
-badj AS (
-  SELECT url,
-    lag(position) OVER (PARTITION BY url, block_idx ORDER BY position)
-      AS prev_pos,
-    lag(name) OVER (PARTITION BY url, block_idx ORDER BY position)
-      AS prev_name,
-    position, name
-  FROM bc
-),
-bpair AS (
-  SELECT DISTINCT lower(prev_name) AS parent, lower(name) AS child, url
-  FROM badj WHERE prev_pos = position - 1
-)
-SELECT parent, child, count(*)::BIGINT AS n_pages
-FROM bpair GROUP BY parent, child
-HAVING count(*) >= {min_pages}
-"""
 
 
 # soft-404 phrase contract: lowercased alternation, shared verbatim
@@ -4345,21 +1339,6 @@ def soft404_signals(
         url_404.alias("url_404"),
         (hit & (n < max_chars)).alias("is_soft404"),
     )
-
-
-def soft404_oracle_sql(pages_sql: str, max_chars: int = 600) -> str:
-    """DuckDB twin of soft404_signals; `pages_sql` yields (url, text)."""
-    return f"""
-WITH spg AS ({pages_sql}),
-sft AS (SELECT url, coalesce(text, '') AS t FROM spg)
-SELECT url,
-  length(t) AS n_chars,
-  regexp_matches(lower(t), '{SOFT404_RE}') AS hit_phrase,
-  regexp_matches(lower(url), '(/404([/.]|$)|not-found)') AS url_404,
-  (regexp_matches(lower(t), '{SOFT404_RE}')
-     AND length(t) < {max_chars}) AS is_soft404
-FROM sft
-"""
 
 
 # section contract: a section starts at each <h1>-<h6> open tag; the
@@ -4417,45 +1396,6 @@ def section_lists(
     ).where(F.col("item") != "")
 
 
-def _section_lists_cte_sql(pages_sql: str) -> str:
-    """Flat CTE chain ending in sl(url, section_idx, heading,
-    item_idx, item) -- the DuckDB twin of section_lists."""
-    return f"""spg AS ({pages_sql}),
-smk AS (SELECT url,
-        regexp_replace(lower(html), '<h([1-6])', chr(1) || '<h\\1', 'g')
-          AS m
-      FROM spg),
-ssc AS (
-  SELECT url, u.i::INT AS section_idx, u.v AS sec
-  FROM (SELECT url, unnest(list_transform(range(0, len(ss)),
-          i -> {{'i': i, 'v': ss[(i+1)::INT]}})) AS u
-        FROM (SELECT url, string_split(m, chr(1)) AS ss FROM smk))
-),
-sit AS (
-  SELECT url, section_idx,
-    nullif(trim(regexp_extract(sec,
-      '<h([1-6])[^>]*>([^<]*)</h[1-6]>', 2)), '') AS heading,
-    regexp_extract_all(sec, '<li[^>]*>([^<]*)</li>', 1) AS its
-  FROM ssc
-),
-sl AS (
-  SELECT url, section_idx, heading, u.i::INT AS item_idx,
-    trim(u.v) AS item
-  FROM (SELECT url, section_idx, heading,
-          unnest(list_transform(range(0, len(its)),
-            i -> {{'i': i, 'v': its[(i+1)::INT]}})) AS u FROM sit)
-  WHERE trim(u.v) != ''
-)"""
-
-
-def section_lists_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of section_lists; `pages_sql` yields (url, html)."""
-    return f"""
-WITH {_section_lists_cte_sql(pages_sql)}
-SELECT url, section_idx, heading, item_idx, item FROM sl
-"""
-
-
 def list_memberships(
     sections: DataFrame, min_pages: int = 1
 ) -> DataFrame:
@@ -4482,197 +1422,6 @@ def list_memberships(
         .agg(F.count("*").alias("n_pages"))
         .where(F.col("n_pages") >= min_pages)
     )
-
-
-def list_memberships_oracle_sql(pages_sql: str, min_pages: int = 1) -> str:
-    """DuckDB twin of list_memberships over section_lists."""
-    return f"""
-WITH {_section_lists_cte_sql(pages_sql)},
-sm AS (
-  SELECT DISTINCT heading AS topic, item AS member, url
-  FROM sl WHERE heading IS NOT NULL
-)
-SELECT topic, member, count(*)::BIGINT AS n_pages
-FROM sm GROUP BY topic, member
-HAVING count(*) >= {min_pages}
-"""
-
-
-# scholarly-identifier pulls; patterns shared VERBATIM with the DuckDB
-# oracle (both engines run them on lower(text); no lookaround, so Java
-# regex and RE2 agree)
-DOI_RE = r"10\.[0-9]{4,9}/[-._;()/:a-z0-9]+"
-ARXIV_RE = r"arxiv:([0-9]{4}\.[0-9]{4,5})"
-PMID_RE = r"pmid:? ?([0-9]{1,8})"
-
-
-def citation_facts(
-    pages: DataFrame, text_col: str = "text", url_col: str = "url"
-) -> DataFrame:
-    """(url, cite_type, cite_idx, cite_id) — scholarly identifiers
-    pulled from page text: DOIs, arXiv ids, PMIDs, in document order
-    per type. The web->literature linking signal a scientific KG
-    joins on (a page citing PMID 123 grounds its extracted triples in
-    that record); the reference pipeline starts FROM PubMed ids —
-    this is the inverse edge the web side contributes.
-
-    Three zero-shuffle regex pulls over one lowered projection,
-    union'd — scan-fused codegen, no UDF. Trailing-punctuation noise
-    on DOI matches is kept verbatim (deterministic > clever); the
-    consumer strips it at join time against a registry.
-    """
-    low = F.lower(F.col(text_col))
-    base = pages.select(F.col(url_col).alias("url"), low.alias("_t"))
-
-    def _pull(kind: str, pat: str, grp: int) -> DataFrame:
-        return base.select(
-            "url",
-            F.lit(kind).alias("cite_type"),
-            F.posexplode(
-                F.expr(f"regexp_extract_all(_t, r'{pat}', {grp})")
-            ).alias("cite_idx", "cite_id"),
-        )
-
-    return (
-        _pull("doi", DOI_RE, 0)
-        .unionByName(_pull("arxiv", ARXIV_RE, 1))
-        .unionByName(_pull("pmid", PMID_RE, 1))
-        .select(
-            "url",
-            "cite_type",
-            F.col("cite_idx").cast("long").alias("cite_idx"),
-            "cite_id",
-        )
-    )
-
-
-def citation_facts_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of :func:`citation_facts`; `pages_sql` yields
-    (url, text)."""
-    pulls = []
-    for kind, pat, grp in (
-        ("doi", DOI_RE, 0),
-        ("arxiv", ARXIV_RE, 1),
-        ("pmid", PMID_RE, 1),
-    ):
-        dgrp = grp
-        pulls.append(f"""
-  SELECT url, '{kind}' AS cite_type, u.i::BIGINT AS cite_idx,
-         u.v AS cite_id
-  FROM (SELECT url, unnest(list_transform(range(0, len(ids)),
-          i -> {{'i': i, 'v': ids[(i+1)::INT]}})) AS u
-        FROM (SELECT url,
-                regexp_extract_all(lower(text), '{pat}', {dgrp}) AS ids
-              FROM cfp))""")
-    body = "\n  UNION ALL".join(pulls)
-    return f"""
-WITH cfp AS ({pages_sql})
-{body}
-"""
-
-
-# date patterns, shared verbatim with the oracle (lowered text)
-ISO_DATE_RE = r"[0-9]{4}-[0-9]{2}-[0-9]{2}"
-LONG_DATE_RE = (
-    r"(january|february|march|april|may|june|july|august|september"
-    r"|october|november|december) [0-9]{1,2}, [0-9]{4}"
-)
-_MONTHS = (
-    "january february march april may june july august september"
-    " october november december"
-).split()
-
-
-def date_facts(
-    pages: DataFrame, text_col: str = "text", url_col: str = "url"
-) -> DataFrame:
-    """(url, date_kind, date_idx, raw, iso) — in-text date mentions
-    normalized to ISO-8601 strings: bare YYYY-MM-DD plus the long
-    'Month D, YYYY' form (month-name CASE map + lpad, pure string
-    ops, no engine date parser — to_date/strptime semantics differ
-    across engines, string arithmetic doesn't). The temporal
-    grounding feeder for edge_temporal beyond its in-sentence cue
-    words, and the page-freshness signal crawl scheduling reads when
-    warc_ts disagrees with the content.
-
-    Two zero-shuffle regex pulls over one lowered projection; no
-    validity check (2026-99-99 normalizes verbatim — deterministic >
-    clever; the consumer filters at join time).
-    """
-    low = F.lower(F.col(text_col))
-    base = pages.select(F.col(url_col).alias("url"), low.alias("_t"))
-    iso = base.select(
-        "url",
-        F.lit("iso").alias("date_kind"),
-        F.posexplode(
-            F.expr(f"regexp_extract_all(_t, r'{ISO_DATE_RE}', 0)")
-        ).alias("date_idx", "raw"),
-    ).withColumn("iso", F.col("raw"))
-    lng = base.select(
-        "url",
-        F.lit("long").alias("date_kind"),
-        F.posexplode(
-            F.expr(f"regexp_extract_all(_t, r'{LONG_DATE_RE}', 0)")
-        ).alias("date_idx", "raw"),
-    )
-    mon = F.regexp_extract(F.col("raw"), LONG_DATE_RE, 1)
-    day = F.regexp_extract(F.col("raw"), r"([0-9]{1,2}), [0-9]{4}", 1)
-    year = F.regexp_extract(F.col("raw"), r"([0-9]{4})$", 1)
-    mexpr = F.when(mon == _MONTHS[0], F.lit("01"))
-    for i, name in enumerate(_MONTHS[1:], start=2):
-        mexpr = mexpr.when(mon == name, F.lit(f"{i:02d}"))
-    lng = lng.withColumn(
-        "iso",
-        F.concat(year, F.lit("-"), mexpr, F.lit("-"), F.lpad(day, 2, "0")),
-    )
-    return iso.unionByName(lng).select(
-        "url",
-        "date_kind",
-        F.col("date_idx").cast("long").alias("date_idx"),
-        "raw",
-        "iso",
-    )
-
-
-def date_facts_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of :func:`date_facts`; `pages_sql` yields
-    (url, text)."""
-    mcase = " ".join(
-        f"WHEN '{name}' THEN '{i:02d}'"
-        for i, name in enumerate(_MONTHS, start=1)
-    )
-    return f"""
-WITH dfp AS (SELECT url, lower(text) AS t FROM ({pages_sql})),
-diso AS (
-  SELECT url, 'iso' AS date_kind, u.i::BIGINT AS date_idx,
-         u.v AS raw, u.v AS iso
-  FROM (SELECT url, unnest(list_transform(range(0, len(ms)),
-          i -> {{'i': i, 'v': ms[(i+1)::INT]}})) AS u
-        FROM (SELECT url,
-                regexp_extract_all(t, '{ISO_DATE_RE}', 0) AS ms
-              FROM dfp))
-),
-dlraw AS (
-  SELECT url, u.i::BIGINT AS date_idx, u.v AS raw
-  FROM (SELECT url, unnest(list_transform(range(0, len(ms)),
-          i -> {{'i': i, 'v': ms[(i+1)::INT]}})) AS u
-        FROM (SELECT url,
-                regexp_extract_all(t, '{LONG_DATE_RE}', 0) AS ms
-              FROM dfp))
-),
-dlong AS (
-  SELECT url, 'long' AS date_kind, date_idx, raw,
-         regexp_extract(raw, '([0-9]{{4}})$', 1) || '-'
-         || (CASE regexp_extract(raw, '{LONG_DATE_RE}', 1) {mcase} END)
-         || '-'
-         || lpad(regexp_extract(raw, '([0-9]{{1,2}}), [0-9]{{4}}', 1), 2, '0')
-           AS iso
-  FROM dlraw
-)
-SELECT url, date_kind, date_idx, raw, iso FROM diso
-UNION ALL
-SELECT url, date_kind, date_idx, raw, iso FROM dlong
-"""
 
 
 # microdata patterns (flat pulls; shared verbatim with the oracle)
@@ -4717,27 +1466,6 @@ def extract_microdata(
     )
 
 
-def extract_microdata_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of :func:`extract_microdata`; `pages_sql` yields
-    (url, html) with html TEXT."""
-    return f"""
-WITH mdp AS (SELECT url, lower(html) AS lh FROM ({pages_sql})),
-mde AS (
-  SELECT url,
-         regexp_extract(lh, '{MICRO_TYPE_RE}', 1) AS item_type,
-         regexp_extract_all(lh, '{MICRO_PROP_EL_RE}', 0) AS els
-  FROM mdp
-)
-SELECT url, item_type, u.i::BIGINT AS prop_idx,
-       regexp_extract(u.v, '{MICRO_PROP_RE}', 1) AS prop,
-       regexp_extract(u.v, '{MICRO_CONTENT_RE}', 1) AS content
-FROM (SELECT url, item_type,
-        unnest(list_transform(range(0, len(els)),
-          i -> {{'i': i, 'v': els[(i+1)::INT]}})) AS u
-      FROM mde)
-"""
-
-
 # the five XML-predefined entities + the three numerically-common web
 # ones; ORDER MATTERS (&amp; last, or '&amp;lt;' would double-decode)
 _HTML_ENTITIES = (
@@ -4767,79 +1495,6 @@ def html_unescape(col) -> "Column":
     return c
 
 
-def html_unescape_sql(expr: str) -> str:
-    """The DuckDB twin expression of :func:`html_unescape` over
-    `expr` — same replace chain, same order."""
-    out = expr
-    for ent, ch in _HTML_ENTITIES:
-        lit = ch.replace("'", "''")
-        out = f"replace({out}, '{ent}', '{lit}')"
-    return out
-
-
-def host_topics(
-    mentions: DataFrame,
-    page_hosts: DataFrame,
-    min_count: int = 1,
-    doc_col: str = "url",
-    term_col: str = "mention_lc",
-) -> DataFrame:
-    """(host, term, n_mentions, share) — the host-entity affinity
-    rollup: which hosts talk about which entities, and how much of
-    each host's mention mass an entity takes (share = n / host_total,
-    one exact-integer division). The source-authority feature entity
-    canonicalization and crawl targeting both read ("site X is 40%
-    about rapamycin — trust its alias evidence / crawl it deeper"),
-    and the bipartite matrix behind any host-topic clustering.
-
-    Shape: one doc-keyed join to attach hosts (page_hosts is (url,
-    host), near-unique per url), then ONE composite rollup on (host,
-    term) and a host rollup joined back — partial aggs absorb hot
-    hosts; the share never needs a window.
-    """
-    mh = mentions.select(
-        F.col(doc_col).alias("url"), F.col(term_col).alias("term")
-    ).join(page_hosts.select("url", "host"), "url")
-    per = mh.groupBy("host", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("n_mentions")
-    )
-    tot = per.groupBy("host").agg(
-        F.sum("n_mentions").cast("long").alias("_tot")
-    )
-    return (
-        per.join(tot, "host")
-        .select(
-            "host",
-            "term",
-            "n_mentions",
-            F.round(
-                F.col("n_mentions").cast("double") / F.col("_tot").cast("double"),
-                6,
-            ).alias("share"),
-        )
-        .where(F.col("n_mentions") >= min_count)
-    )
-
-
-def host_topics_oracle_sql(
-    mentions_sql: str, hosts_sql: str, min_count: int = 1
-) -> str:
-    """DuckDB twin of :func:`host_topics`; mentions_sql yields
-    (url, term), hosts_sql (url, host). CTE CONTINUATION."""
-    return f"""
-, htm AS (SELECT m.term, h.host
-          FROM ({mentions_sql}) m JOIN ({hosts_sql}) h ON m.url = h.url),
-htp AS (SELECT host, term, count(*)::BIGINT AS n_mentions
-        FROM htm GROUP BY host, term),
-htt AS (SELECT host, sum(n_mentions)::BIGINT AS tot
-        FROM htp GROUP BY host)
-SELECT p.host, p.term, p.n_mentions,
-       round(p.n_mentions::DOUBLE / t.tot::DOUBLE, 6) AS share
-FROM htp p JOIN htt t ON p.host = t.host
-WHERE p.n_mentions >= {min_count}
-"""
-
-
 def host_reciprocity(
     host_edges: DataFrame, src: str = "src_host", dst: str = "dst_host"
 ) -> DataFrame:
@@ -4865,7 +1520,7 @@ def host_reciprocity(
     count aggregates combine map-side.
 
     Reference parity: EasyNER has no link graph (no analog anywhere in
-    scripts/); north_star crawl-hygiene surface over webtext.host_graph.
+    scripts/); north_star crawl-hygiene surface over a host edge table.
     """
     e = (
         host_edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
@@ -4888,224 +1543,3 @@ def host_reciprocity(
             ),
         )
     )
-
-
-def host_reciprocity_oracle_sql(edges_sql: str, with_prefix: str = "") -> str:
-    """DuckDB twin of :func:`host_reciprocity`; `edges_sql` yields
-    (s, d) directed host pairs (pre-dedup input is fine). Pass an
-    existing WITH chain via `with_prefix` (ending mid-chain, no
-    trailing comma) to build edges from its relations."""
-    head = f"{with_prefix}," if with_prefix else "WITH"
-    return f"""{head}
-e AS (
-  SELECT DISTINCT s, d FROM ({edges_sql}) WHERE s <> d
-),
-recip AS (
-  SELECT a.s, count(*)::BIGINT AS n_recip
-  FROM e a WHERE EXISTS (SELECT 1 FROM e b WHERE b.s = a.d AND b.d = a.s)
-  GROUP BY a.s
-),
-outs AS (SELECT s, count(*)::BIGINT AS n_out FROM e GROUP BY s)
-SELECT o.s AS host, o.n_out,
-       coalesce(r.n_recip, 0)::BIGINT AS n_recip,
-       (coalesce(r.n_recip, 0) * 1000000) // o.n_out AS recip_micro
-FROM outs o LEFT JOIN recip r ON o.s = r.s
-"""
-
-
-def link_density(
-    pages: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """(url, n_chars, n_anchors, anchor_chars, density_micro,
-    is_linkfarm_page) — anchor-text link density per page: the jusText /
-    boilerplate-literature signal the Gopher word-level rules cannot
-    see (a navigation hub or tag-cloud page is fluent English word by
-    word; what gives it away is that most of its TEXT lives inside
-    <a> elements). density_micro = anchor_chars * 1e6 div n_chars over
-    the raw html's visible anchor text vs total non-tag text;
-    is_linkfarm_page flags density > 50% (integer cross-multiply).
-
-    Contract shared verbatim with the oracle: anchors are the
-    crawl-grade double-quoted `<a href="...">text</a>` elements of
-    extract_anchors (ANCHOR_EL_RE); page text = html with all
-    `<...>` tags deleted (the boilerplate module's tag-strip
-    simplification); both lengths are exact integers. Zero shuffle —
-    two regex passes fused into the scan.
-
-    Reference parity: EasyNER never sees HTML (its inputs are abstract
-    text, scripts/downloader.py); north_star crawl-curation surface
-    alongside gopher_filters/template_strip.
-    """
-    h = F.col(html_col).cast("string")
-    base = pages.select(
-        F.col(url_col).alias("url"),
-        F.length(F.regexp_replace(h, "<[^>]*>", "")).cast("long").alias("n_chars"),
-        F.expr(
-            f"regexp_extract_all(cast({html_col} as string), '{ANCHOR_EL_RE}', 0)"
-        ).alias("_els"),
-    )
-    texts = base.select(
-        "url",
-        "n_chars",
-        F.size("_els").cast("long").alias("n_anchors"),
-        F.aggregate(
-            F.transform(
-                F.col("_els"),
-                lambda el: F.length(F.regexp_extract(el, ANCHOR_TEXT_RE, 1)),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("anchor_chars"),
-    )
-    return texts.select(
-        "url",
-        "n_chars",
-        "n_anchors",
-        "anchor_chars",
-        F.when(
-            F.col("n_chars") > 0,
-            F.expr("(anchor_chars * 1000000) div n_chars"),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("density_micro"),
-        (
-            (F.col("anchor_chars") * F.lit(2) > F.col("n_chars"))
-            & (F.col("n_chars") > 0)
-        ).alias("is_linkfarm_page"),
-    )
-
-
-def link_density_oracle_sql(pages_sql: str) -> str:
-    """DuckDB twin of :func:`link_density`; `pages_sql` yields
-    (url, html)."""
-    return f"""
-WITH pg AS ({pages_sql}),
-base AS (
-  SELECT url,
-         length(regexp_replace(html, '<[^>]*>', '', 'g'))::BIGINT AS n_chars,
-         regexp_extract_all(html, '{ANCHOR_EL_RE}') AS els
-  FROM pg
-),
-t AS (
-  SELECT url, n_chars,
-         len(els)::BIGINT AS n_anchors,
-         coalesce(list_sum(list_transform(els,
-             el -> length(regexp_extract(el, '>([^<]*)</a>', 1)))), 0)::BIGINT
-           AS anchor_chars
-  FROM base
-)
-SELECT url, n_chars, n_anchors, anchor_chars,
-       (CASE WHEN n_chars > 0 THEN (anchor_chars * 1000000) // n_chars
-             ELSE 0 END)::BIGINT AS density_micro,
-       (anchor_chars * 2 > n_chars AND n_chars > 0) AS is_linkfarm_page
-FROM t
-"""
-
-
-def recrawl_schedule(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-    prior_rate_micro: int = 500_000,
-) -> DataFrame:
-    """(url, n_fetches, n_changed, change_rate_micro, age_s,
-    priority) — frequency-based recrawl scheduling (the Cho &
-    Garcia-Molina estimator shape): per url, the observed change
-    rate across its fetch history times its staleness, the number a
-    crawler sorts its recrawl frontier by. Complements
-    crawl_priority (host authority x change activity) with the
-    PER-URL rate-x-staleness view:
-
-        change_rate_micro  floor(1e6 · n_changed / (n_fetches - 1)),
-                           the fraction of revisits that found new
-                           content; single-fetch urls take
-                           `prior_rate_micro` (unknown rate, prior ½)
-        age_s              corpus-latest-fetch ts minus this url's
-                           last fetch ts (exact integer seconds)
-        priority           change_rate_micro · (age_s + 1) — BIGINT;
-                           +1 keeps just-fetched-but-volatile urls
-                           ordered above frozen ones at equal age
-
-    Exactness: all BIGINT (rate is a micro-unit floor; the product is
-    < 2^63 for any age below ~292k years). Scale shape: crawl_delta's
-    per-url window (each url sorts only its own history) then ONE
-    url-keyed rollup; the corpus-max timestamp rides back as a
-    broadcast 1-row cross join — never a collect, never a global
-    window.
-    """
-    d = crawl_delta(pages, url_col=url_col, ts_col=ts_col, text_col=text_col)
-    per = (
-        d.groupBy(F.col(url_col).alias("url"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_fetches"),
-            F.sum((F.col("change") == "changed").cast("long"))
-            .cast("long")
-            .alias("n_changed"),
-            F.max(F.col(ts_col).cast("long")).alias("_last_ts"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    mx = per.agg(F.max("_last_ts").alias("_now_ts"))
-    return (
-        per.crossJoin(F.broadcast(mx))
-        .withColumn(
-            "change_rate_micro",
-            F.when(
-                F.col("n_fetches") > 1,
-                F.expr("(1000000 * n_changed) div (n_fetches - 1)"),
-            )
-            .otherwise(F.lit(prior_rate_micro))
-            .cast("long"),
-        )
-        .withColumn(
-            "age_s", (F.col("_now_ts") - F.col("_last_ts")).cast("long")
-        )
-        .select(
-            "url",
-            "n_fetches",
-            "n_changed",
-            "change_rate_micro",
-            "age_s",
-            F.expr("change_rate_micro * (age_s + 1)")
-            .cast("long")
-            .alias("priority"),
-        )
-    )
-
-
-def recrawl_schedule_oracle_sql(
-    pages_sql: str, prior_rate_micro: int = 500_000
-) -> str:
-    """DuckDB twin of :func:`recrawl_schedule`; `pages_sql` yields
-    (url, warc_ts, text) fetch rows."""
-    return f"""
-WITH rs_pages AS ({pages_sql}),
-rs_lag AS (
-  SELECT url, warc_ts,
-         coalesce(text, '') AS cur,
-         lag(coalesce(text, '')) OVER (PARTITION BY url ORDER BY warc_ts)
-           AS prev
-  FROM rs_pages
-),
-rs_per AS (
-  SELECT url,
-         count(*)::BIGINT AS n_fetches,
-         sum(CASE WHEN prev IS NOT NULL AND prev <> cur
-                  THEN 1 ELSE 0 END)::BIGINT AS n_changed,
-         max(warc_ts)::BIGINT AS last_ts
-  FROM rs_lag GROUP BY url
-),
-rs_now AS (SELECT max(last_ts) AS now_ts FROM rs_per)
-SELECT url, n_fetches, n_changed,
-       (CASE WHEN n_fetches > 1
-             THEN (1000000 * n_changed) // (n_fetches - 1)
-             ELSE {prior_rate_micro} END)::BIGINT AS change_rate_micro,
-       (now_ts - last_ts)::BIGINT AS age_s,
-       ((CASE WHEN n_fetches > 1
-              THEN (1000000 * n_changed) // (n_fetches - 1)
-              ELSE {prior_rate_micro} END)
-        * (now_ts - last_ts + 1))::BIGINT AS priority
-FROM rs_per, rs_now
-"""

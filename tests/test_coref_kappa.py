@@ -1,8 +1,7 @@
-"""Pronoun antecedent links, Cohen's kappa, host-entity affinity."""
+"""Pronoun antecedent links and Cohen's kappa."""
 
 from easyner_spark.operators.evaluate import cohens_kappa
 from easyner_spark.operators.triples import pronoun_links
-from easyner_spark.operators.webtext import host_topics
 
 
 def _toks(spark, rows):
@@ -85,21 +84,3 @@ def test_cohens_kappa_perfect_degenerate(spark):
     row = cohens_kappa(pred, pred).collect()[0]
     assert row.kappa == 1.0
 
-
-def test_host_topics(spark):
-    ments = spark.createDataFrame(
-        [("u1", "mtor"), ("u1", "mtor"), ("u1", "tsc1"),
-         ("u2", "mtor"), ("u3", "tsc1")],
-        ["url", "mention_lc"],
-    )
-    hosts = spark.createDataFrame(
-        [("u1", "a.com"), ("u2", "a.com"), ("u3", "b.org")],
-        ["url", "host"],
-    )
-    out = {
-        (r.host, r.term): (r.n_mentions, r.share)
-        for r in host_topics(ments, hosts).collect()
-    }
-    assert out[("a.com", "mtor")] == (3, 0.75)
-    assert out[("a.com", "tsc1")] == (1, 0.25)
-    assert out[("b.org", "tsc1")] == (1, 1.0)

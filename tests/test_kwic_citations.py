@@ -1,8 +1,7 @@
-"""Weighted PageRank, KWIC concordance, scholarly-identifier pulls."""
+"""Weighted PageRank and KWIC concordance."""
 
 from easyner_spark.operators.graph import pagerank, weighted_pagerank
 from easyner_spark.operators.search import kwic
-from easyner_spark.operators.webtext import citation_facts
 
 
 def test_weighted_equals_plain_on_uniform_weights(spark):
@@ -61,24 +60,3 @@ def test_kwic(spark):
     assert out["rapamycin"].left_ctx == ""
     assert out["rapamycin"].right_ctx == " inhib"
 
-
-def test_citation_facts(spark):
-    pages = spark.createDataFrame(
-        [
-            ("u1", "see DOI 10.1038/s41586-020-2012 and arXiv:2005.14165"),
-            ("u2", "PMID: 32015508 then pmid 123 again 10.1000/xyz(2)."),
-            ("u3", "no identifiers here"),
-        ],
-        ["url", "text"],
-    )
-    rows = {
-        (r.url, r.cite_type, r.cite_idx): r.cite_id
-        for r in citation_facts(pages).collect()
-    }
-    assert rows[("u1", "doi", 0)] == "10.1038/s41586-020-2012"
-    assert rows[("u1", "arxiv", 0)] == "2005.14165"
-    assert rows[("u2", "pmid", 0)] == "32015508"
-    assert rows[("u2", "pmid", 1)] == "123"
-    # DOI match keeps trailing punctuation verbatim (documented)
-    assert rows[("u2", "doi", 0)].startswith("10.1000/xyz")
-    assert not any(u == "u3" for u, _, _ in rows)

@@ -1,8 +1,7 @@
-"""PathSim metapath similarity and recrawl scheduling — hand-computed
-expectations, all-integer contracts."""
+"""PathSim metapath similarity — hand-computed expectations,
+all-integer contracts."""
 
 from easyner_spark.operators.triples import metapath_pathsim
-from easyner_spark.operators.webtext import recrawl_schedule
 
 
 def test_metapath_pathsim_peers_beat_hubs(spark):
@@ -54,27 +53,3 @@ def test_metapath_pathsim_no_shared_path_no_row(spark):
     out = metapath_pathsim(t, ("works_for", "employs")).collect()
     assert out == []  # disjoint employers -> no off-diagonal pairs
 
-
-def test_recrawl_schedule_rates_and_priority(spark):
-    # u1: 3 fetches, text flips twice -> rate 1e6; last at t=30
-    # u2: 3 fetches, never changes   -> rate 0;   last at t=50 (=now)
-    # u3: 1 fetch -> prior rate 500000; last at t=10
-    rows = [
-        ("u1", 10, "a"),
-        ("u1", 20, "b"),
-        ("u1", 30, "c"),
-        ("u2", 30, "x"),
-        ("u2", 40, "x"),
-        ("u2", 50, "x"),
-        ("u3", 10, "z"),
-    ]
-    pages = spark.createDataFrame(rows, ["url", "warc_ts", "text"])
-    out = {r.url: r for r in recrawl_schedule(pages).collect()}
-    assert out["u1"].n_fetches == 3 and out["u1"].n_changed == 2
-    assert out["u1"].change_rate_micro == 1000000
-    assert out["u1"].age_s == 20
-    assert out["u1"].priority == 1000000 * 21
-    assert out["u2"].change_rate_micro == 0 and out["u2"].priority == 0
-    assert out["u3"].change_rate_micro == 500000
-    assert out["u3"].age_s == 40
-    assert out["u3"].priority == 500000 * 41

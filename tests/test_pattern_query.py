@@ -213,6 +213,17 @@ def test_optional_validation(spark, edges):
         )
 
 
+def test_optional_clash_raises_in_both_twins(spark, edges):
+    """Two optional groups that both introduce ?w: the Spark side and
+    the DuckDB oracle generator reject the same spec."""
+    pats = [("?x", "inhibits", "?y")]
+    opts = [[("?y", "binds", "?w")], [("?x", "binds", "?w")]]
+    with pytest.raises(ValueError, match="disjoint new"):
+        match_patterns(edges, pats, optionals=opts)
+    with pytest.raises(ValueError, match="disjoint new"):
+        match_patterns_oracle_sql("SELECT * FROM t0", pats, optionals=opts)
+
+
 CHAIN = [
     ("a", "located_in", "b"),
     ("b", "located_in", "c"),

@@ -119,20 +119,6 @@ def test_blocking_quality_broadcast_combine(spark):
     assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_recrawl_schedule_no_global_window(spark):
-    from easyner_spark.operators.webtext import recrawl_schedule
-
-    pages = spark.range(400).select(
-        F.concat(F.lit("u"), (F.col("id") % 40).cast("string")).alias("url"),
-        (F.lit(1700000000) + F.col("id")).cast("long").alias("warc_ts"),
-        F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias("text"),
-    )
-    plan = _final_plan(recrawl_schedule(pages))
-    # the per-url window partitions by url; the corpus max rides a
-    # broadcast 1-row join — no serial exchange over row data
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 def test_shortest_paths_and_kg_paths_no_serial_reducer(spark):
     from easyner_spark.operators.graph import kg_paths, shortest_paths
 

@@ -664,6 +664,56 @@ class TestQueryMode:
         )
         assert 0 < counts["per_subj"] <= 10
 
+    def test_query_runs_plan_once(self, spark, tmp_path):
+        """run_query's count rides the TSV write: it runs no more jobs
+        than bgp_stats + write_tsv alone on the same frame, and the
+        count equals the data rows written."""
+        import glob
+        from pathlib import Path
+
+        from easyner_spark.cli import run_query
+        from easyner_spark.operators.triples import bgp_stats, match_patterns
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+        from easyner_spark.sinks.export import write_tsv
+
+        out_dir = str(tmp_path / "out")
+        edges = spark.createDataFrame(
+            [(f"e{i % 7}", "p" if i % 2 else "q", f"e{i * 3 % 11}")
+             for i in range(40)],
+            "subj_id string, pred string, obj_id string",
+        )
+        snap = SnapshotTable(f"{out_dir}/edges", ["subj_id", "pred", "obj_id"])
+        snap.overwrite(edges)
+        pats = [("?x", "p", "?y"), ("?y", "q", "?z")]
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(tracker.getJobIdsForGroup(group))
+
+        def alone():
+            e = snap.read(spark)
+            write_tsv(match_patterns(e, pats, stats=bgp_stats(e)),
+                      str(tmp_path / "alone"))
+
+        counts = {}
+        q = {"output_dir": out_dir,
+             "queries": [{"name": "two", "patterns": [list(p) for p in pats]}]}
+        n_alone = jobs("plan_once_alone", alone)
+        n_query = jobs("plan_once_query",
+                       lambda: counts.update(run_query(spark, q)))
+        assert n_query <= n_alone
+        rows = sum(
+            len(Path(f).read_text(encoding="utf-8").splitlines()) - 1
+            for f in glob.glob(f"{out_dir}/query_two/part-*")
+        )
+        assert counts["two"] == rows > 0
+
     def test_standing_queries_in_pipeline(self, spark, pages_df, tmp_path):
         from easyner_spark.cli import run_pipeline
         from easyner_spark.sinks.checkpoint import SnapshotTable

@@ -1,0 +1,79 @@
+"""Product-surface ratchet over tools/surface.py's reachability closure
+(pure AST, no Spark). It fails when dead code lands: a module's count of
+public defs that no shipped job reaches may only shrink. Lower a count
+here when a change deletes or wires in such defs."""
+
+import importlib.util
+from pathlib import Path
+
+import pytest
+
+_PATH = Path(__file__).resolve().parents[1] / "tools" / "surface.py"
+_spec = importlib.util.spec_from_file_location("surface", _PATH)
+surface = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(surface)
+
+# Unreached public defs per module (without the `easyner_spark.`
+# prefix); a module not listed has none.
+UNREACHED_PUBLIC = {
+    "fixtures": 1,
+    "functions.text": 5,
+    "operators.analysis": 8,
+    "operators.boilerplate": 1,
+    "operators.components": 2,
+    "operators.dedup": 27,
+    "operators.evaluate": 6,
+    "operators.events": 3,
+    "operators.graph": 48,
+    "operators.iob": 11,
+    "operators.merger": 6,
+    "operators.multimodal": 7,
+    "operators.nel": 15,
+    "operators.ner_dict": 3,
+    "operators.ner_model": 9,
+    "operators.ranking": 12,
+    "operators.sampling": 21,
+    "operators.scoring": 17,
+    "operators.search": 4,
+    "operators.similarity": 17,
+    "operators.sketches": 23,
+    "operators.splitter": 3,
+    "operators.textstats": 24,
+    "operators.tokenizer": 8,
+    "operators.triples": 80,
+    "operators.webtext": 61,
+    "schemas": 7,
+    "sinks.bucketed": 2,
+    "sinks.chart": 1,
+    "sinks.checkpoint": 5,
+    "sinks.export": 5,
+    "sinks.graphviz": 1,
+    "sinks.iceberg": 3,
+    "sinks.layout": 7,
+    "sinks.pubtator": 7,
+    "sinks.rdf": 6,
+    "sources.craft": 5,
+    "sources.loaders": 9,
+    "sources.warc": 8,
+}
+
+
+@pytest.fixture(scope="module")
+def report():
+    return surface.report()
+
+
+def test_kept_defs_are_the_only_unreached(report):
+    for mod, keep in surface.KEEP.items():
+        dead = set(surface.public(report[mod]["unreached"]))
+        assert dead == set(keep), f"{mod}: unreached {sorted(dead)}, kept {sorted(keep)}"
+
+
+def test_unreached_counts_only_shrink(report):
+    grown = {}
+    for mod, r in report.items():
+        short = mod.removeprefix("easyner_spark.")
+        n = len(surface.public(r["unreached"]))
+        if n > UNREACHED_PUBLIC.get(short, 0):
+            grown[short] = (UNREACHED_PUBLIC.get(short, 0), n)
+    assert not grown, f"new unreached public defs (recorded, now): {grown}"

@@ -1,28 +1,7 @@
-"""date_facts normalization, token-window co-occurrence, k-bounded
-harmonic centrality — closed-form hand values."""
+"""Token-window co-occurrence and k-bounded harmonic centrality —
+closed-form hand values."""
 
 from easyner_spark.operators.graph import harmonic_centrality, window_cooc
-from easyner_spark.operators.webtext import date_facts
-
-
-def test_date_facts(spark):
-    pages = spark.createDataFrame(
-        [
-            ("u1", "Published March 5, 2021 and updated on 2022-01-30."),
-            ("u2", "December 25, 1999 twice: December 1, 1999."),
-            ("u3", "no dates"),
-        ],
-        ["url", "text"],
-    )
-    rows = {
-        (r.url, r.date_kind, r.date_idx): (r.raw, r.iso)
-        for r in date_facts(pages).collect()
-    }
-    assert rows[("u1", "long", 0)] == ("march 5, 2021", "2021-03-05")
-    assert rows[("u1", "iso", 0)] == ("2022-01-30", "2022-01-30")
-    assert rows[("u2", "long", 0)][1] == "1999-12-25"
-    assert rows[("u2", "long", 1)][1] == "1999-12-01"
-    assert not any(u == "u3" for u, _, _ in rows)
 
 
 def test_window_cooc(spark):

@@ -6,10 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from easyner_spark.operators.webtext import (
-    canonical_url,
     host_skew_profile,
     host_stats,
-    url_dedup,
     url_parts,
 )
 
@@ -40,62 +38,6 @@ class TestUrlParts:
         )
         r3 = out["not a url"]                          # malformed -> empty parts
         assert (r3["scheme"], r3["host"], r3["reg_domain"], r3["path"]) == ("", "", "", "")
-
-
-class TestCanonicalUrl:
-    CASES = [
-        # www strip + fragment strip
-        ("https://www.x.com/a#frag", "https://x.com/a"),
-        # trailing slash (incl. root)
-        ("https://x.com/a/", "https://x.com/a"),
-        ("https://x.com/", "https://x.com"),
-        # leading tracking param: '&' promoted back to '?'
-        ("https://x.com/a?utm_source=rss&id=3", "https://x.com/a?id=3"),
-        # mid/trailing tracking params
-        ("https://x.com/a?id=3&utm_medium=email", "https://x.com/a?id=3"),
-        ("https://x.com/a?fbclid=abc", "https://x.com/a"),
-        # scheme+host lowercase, path case preserved
-        ("HTTPS://X.COM/Path", "https://x.com/Path"),
-        # a later '://' inside the path must NOT extend the lowered
-        # span (greedy-class regression)
-        ("https://x.com/redirect/HTTPS://EVIL.com", "https://x.com/redirect/HTTPS://EVIL.com"),
-        # untouched url survives
-        ("https://x.com/a?id=3", "https://x.com/a?id=3"),
-    ]
-
-    def test_cases(self, spark):
-        df = spark.createDataFrame([(u,) for u, _ in self.CASES], "url string")
-        got = {
-            r["url"]: r["c"]
-            for r in df.select("url", canonical_url("url").alias("c")).collect()
-        }
-        for raw, want in self.CASES:
-            assert got[raw] == want, raw
-
-
-class TestUrlDedup:
-    def test_variants_collapse(self, spark):
-        df = spark.createDataFrame(
-            [
-                ("https://x.com/a",),
-                ("https://www.x.com/a",),
-                ("https://x.com/a/",),
-                ("https://x.com/a#f",),
-                ("https://x.com/b",),
-            ],
-            "url string",
-        )
-        rows = url_dedup(df).collect()
-        groups = {}
-        for r in rows:
-            groups.setdefault(r["canon_url"], []).append(r)
-        assert len(groups["https://x.com/a"]) == 4
-        # min raw url survives; the other three flagged
-        dups = [r["url"] for r in groups["https://x.com/a"] if r["is_dup"]]
-        keep = [r["url"] for r in groups["https://x.com/a"] if not r["is_dup"]]
-        assert keep == ["https://www.x.com/a"]  # lexicographically smallest raw
-        assert len(dups) == 3
-        assert not groups["https://x.com/b"][0]["is_dup"]
 
 
 class TestHostStats:
@@ -155,52 +97,6 @@ class TestSaltedRepartition:
         for h, (n_parts, n_salts) in per_host.items():
             if h != "hot.com":
                 assert (n_parts, n_salts) == (1, 1)
-
-
-class TestExtractLinks:
-    def _pages(self, spark, html):
-        return spark.createDataFrame(
-            [("https://src.example.com:8080/page", bytearray(html.encode()))],
-            "url string, html binary",
-        )
-
-    def test_classifier(self, spark):
-        from easyner_spark.operators.webtext import extract_links
-
-        html = (
-            '<a href="https://Other.COM:443/x">a</a>'
-            '<a href="HTTP://up.net/y">b</a>'
-            '<a href="//proto.org/z">c</a>'
-            '<a href="/relative/path">d</a>'
-            '<a href="page2.html">e</a>'
-            '<a href="mailto:a@b.c">drop</a>'
-            '<a href="javascript:void(0)">drop</a>'
-            '<a href="https://">drop</a>'
-            '<a href="//">drop</a>'
-            "<a href='single-quoted'>not matched</a>"
-        )
-        out = extract_links(self._pages(spark, html)).collect()
-        got = {(r["href"], r["target_host"]) for r in out}
-        assert got == {
-            ("https://Other.COM:443/x", "other.com"),
-            ("HTTP://up.net/y", "up.net"),
-            ("//proto.org/z", "proto.org"),
-            ("/relative/path", "src.example.com"),   # port-stripped source
-            ("page2.html", "src.example.com"),
-        }
-
-    def test_host_graph_rollup(self, spark):
-        from easyner_spark.operators.webtext import host_graph
-
-        rows = [
-            ("https://a.com/1", b'<a href="https://b.com/x">l</a><a href="/s">l</a>'),
-            ("https://a.com/2", b'<a href="https://b.com/y">l</a>'),
-        ]
-        df = spark.createDataFrame(rows, "url string, html binary")
-        out = {(r["src_host"], r["dst_host"]): r["n_links"] for r in host_graph(df).collect()}
-        assert out == {("a.com", "b.com"): 2, ("a.com", "a.com"): 1}
-        dropped = host_graph(df, drop_self=True).collect()
-        assert {(r["src_host"], r["dst_host"]) for r in dropped} == {("a.com", "b.com")}
 
 
 class TestLatestCrawl:

@@ -12,7 +12,13 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers must import easyner_spark too (pandas-UDF closures):
+# set before the session starts so the workers inherit it
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 import pandas as pd
@@ -49,7 +55,7 @@ def main() -> None:
 
     from easyner_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cores=8)
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

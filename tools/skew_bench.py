@@ -250,57 +250,6 @@ def main() -> None:
                 }
             )
         )
-    # --- url-dedup tier: hot recrawled page ---------------------------
-    # 30% of all pages are recrawl variants of ONE canonical url (the
-    # url_dedup docstring's declared hazard). Contenders produce the
-    # same (url, canon_url, keep_url, is_dup) rows:
-    #   url_window   shipped: min(url) OVER (PARTITION BY canon_url) —
-    #                the hot key's rows sort on ONE reducer
-    #   url_aggjoin  groupBy(canon_url).min + join back — partial aggs
-    #                collapse the hot key map-side; the join is
-    #                AQE-skew-splittable
-    if os.environ.get("SKEW_TIER", "all") in ("all", "url"):
-        from easyner_spark.operators.webtext import canonical_url, url_dedup
-
-        pages = spark.read.parquet(_pages_parquet(spark, n_pages))
-        hot_page = F.pmod(F.xxhash64("url"), F.lit(10)) < 3
-        udocs = pages.select(
-            F.when(
-                hot_page,
-                F.concat(
-                    F.lit("https://www.hot.example.com/story?utm_source=s"),
-                    F.pmod(F.xxhash64("url", "warc_ts"), F.lit(97)).cast("string"),
-                ),
-            ).otherwise(F.col("url")).alias("url")
-        )
-
-        def url_aggjoin():
-            df = udocs.withColumn("canon_url", canonical_url("url"))
-            mins = df.groupBy("canon_url").agg(F.min("url").alias("keep_url"))
-            return df.join(mins, "canon_url").withColumn(
-                "is_dup", F.col("url") != F.col("keep_url")
-            )
-
-        url_results = timed_all(
-            {
-                "url_window": lambda: url_dedup(udocs),
-                "url_aggjoin": url_aggjoin,
-            }
-        )
-        n_rows = udocs.count()
-        print(
-            json.dumps(
-                {
-                    "metric": "skew_stress_url",
-                    "pages": n_pages,
-                    "rows": n_rows,
-                    "hot_share": 0.3,
-                    "cpus": cpus,
-                    "repeat": repeat,
-                    "sec": url_results,
-                }
-            )
-        )
     if os.environ.get("SKEW_TIER", "all") in ("all", "events"):
         # hot-user sessionization: ONE user owns ~30% of all events
         # (a bot/crawler identity). Both formulations shuffle once on
