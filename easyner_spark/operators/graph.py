@@ -465,94 +465,6 @@ GROUP BY node, anc
 """
 
 
-def hits(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    state_round: int = 9,
-) -> DataFrame:
-    """(node, authority, hub) — fixed-iteration HITS over a directed
-    edge list (Kleinberg): good HUBS link to many good authorities,
-    good AUTHORITIES are linked from many good hubs — the webtext
-    signal pair PageRank alone doesn't give (a link-farm index page is
-    a hub, never an authority).
-
-    Contract (mirrored verbatim by the DuckDB oracle, the
-    operators/graph.pagerank recipe):
-      * edges are DISTINCT (src, dst); nodes = src UNION dst;
-      * h_0 = 1.0 for every node;
-      * a_t(n) = round(sum_{m->n} h_{t-1}(m) / max_n(...), state_round)
-        — L-infinity normalization (divide by the max), the documented
-        variant that avoids cross-engine sqrt while keeping the same
-        fixpoint direction as the L2 classic;
-      * h_t(n) = round(sum_{n->m} a_t(m) / max, state_round) using the
-        NEW authorities;
-      * per-iteration rounding snaps both engines to identical state
-        before float drift can compound; output rounds to 6.
-
-    Scale: each iteration is two keyed aggregates (groupBy dst, then
-    groupBy src — both partial-agg absorbed) plus two 1-row max
-    aggregates broadcast back; localCheckpoint per iteration caps
-    lineage growth exactly as pagerank/components do.
-    """
-    if iters < 1:
-        raise ValueError(f"hits needs iters >= 1: {iters}")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(iters):
-        a_raw = (
-            e.join(hub.select(F.col("node").alias("src"), "hub"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("v"))
-        )
-        a_max = a_raw.agg(F.max("v").alias("m"))
-        auth = (
-            nodes.crossJoin(F.broadcast(a_max))
-            .join(a_raw, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    F.coalesce(F.col("v"), F.lit(0.0)) / F.col("m"), state_round
-                ).alias("auth"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        h_raw = (
-            e.join(auth.select(F.col("node").alias("dst"), "auth"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("v"))
-        )
-        h_max = h_raw.agg(F.max("v").alias("m"))
-        hub = (
-            nodes.crossJoin(F.broadcast(h_max))
-            .join(h_raw, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    F.coalesce(F.col("v"), F.lit(0.0)) / F.col("m"), state_round
-                ).alias("hub"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        auth.join(hub, "node")
-        .select(
-            "node",
-            F.round("auth", 6).alias("authority"),
-            F.round("hub", 6).alias("hub"),
-        )
-    )
-
-
 def link_prediction(
     edges: DataFrame,
     src: str = "src",
@@ -1440,8 +1352,8 @@ FROM ranks
 
 
 # ---------------------------------------------------------------------------
-# Graph cohesion QA: local clustering coefficient, modularity,
-# TrustRank spam mass, and snapshot edge diffs
+# Graph cohesion QA: local clustering coefficient, modularity and
+# snapshot edge diffs
 # ---------------------------------------------------------------------------
 
 def clustering_coeff(
@@ -1650,120 +1562,6 @@ CROSS JOIN qm
 """
 
 
-def spam_mass(
-    edges: DataFrame,
-    trusted: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    damping: float = DAMPING,
-) -> DataFrame:
-    """(node, pr, tr, spam_mass) — TrustRank spam-mass estimation
-    (Gyongyi et al., VLDB'04/'05, public): tr = PageRank with
-    teleport restricted to a trusted seed set (exactly
-    :func:`personalized_pagerank`), pr = plain :func:`pagerank`, and
-    relative spam mass = (pr - tr) / pr — the fraction of a node's
-    authority NOT reachable from trust. Hosts near 1.0 earn their
-    rank from un-trusted (link-farm-shaped) neighborhoods; crawl
-    prioritization demotes them before host_rank is believed.
-
-    Both ranks follow the repo's round(·, 9) iteration / round(·, 6)
-    output contract, so the mass — one subtraction and division on
-    already-rounded doubles, rounded again to 6 — is bit-identical
-    cross-engine. Scale: the two power methods share the edge prep
-    cost profile (one shuffle per iteration each); the final join is
-    keyed on node, uniform.
-    """
-    pr = pagerank(edges, src=src, dst=dst, iters=iters, damping=damping)
-    tr = personalized_pagerank(
-        edges, trusted, src=src, dst=dst, iters=iters, damping=damping
-    )
-    return (
-        pr.withColumnRenamed("rank", "pr")
-        .join(tr.withColumnRenamed("rank", "tr"), "node")
-        .select(
-            "node",
-            "pr",
-            "tr",
-            F.when(
-                F.col("pr") > 0,
-                F.round((F.col("pr") - F.col("tr")) / F.col("pr"), 6),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("spam_mass"),
-        )
-    )
-
-
-def spam_mass_oracle_sql(
-    e_sql: str, seeds_sql: str, iters: int = 3
-) -> str:
-    """DuckDB twin of :func:`spam_mass`: the unrolled plain-PageRank
-    chain (p0..pN) and the unrolled personalized chain (t0..tN) over
-    ONE shared edge/node/degree CTE set, joined on node. `e_sql` must
-    yield DISTINCT (src, dst); `seeds_sql` one column (node).
-
-    Returns a CTE CONTINUATION (leading ', ') -- the caller prepends
-    an existing WITH chain (the _pagerank_oracle_body convention)."""
-    parts = [
-        f"""
-, e AS ({e_sql}),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-deg AS (SELECT src, count(*)::DOUBLE AS deg FROM e GROUP BY src),
-s AS (SELECT DISTINCT node FROM ({seeds_sql})
-      WHERE node IN (SELECT node FROM nodes)),
-nsn AS (SELECT count(*)::DOUBLE AS ns FROM s),
-tele AS (
-  SELECT nodes.node,
-         CASE WHEN s.node IS NOT NULL THEN 1.0 / nsn.ns ELSE 0.0 END AS tele
-  FROM nodes CROSS JOIN nsn LEFT JOIN s ON nodes.node = s.node
-),
-p0 AS (SELECT node, round(1.0 / nn.n, 9) AS rank FROM nodes CROSS JOIN nn),
-t0 AS (SELECT node, round(tele, 9) AS rank FROM tele)"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f""",
-p{t} AS (
-  SELECT nodes.node,
-         round((1.0 - 0.85) / nn.n + 0.85 * coalesce(x.inflow, 0.0), 9) AS rank
-  FROM nodes CROSS JOIN nn
-  LEFT JOIN (
-    SELECT e.dst AS node, sum(r.rank / deg.deg) AS inflow
-    FROM e
-    JOIN deg ON e.src = deg.src
-    JOIN p{t - 1} r ON e.src = r.node
-    GROUP BY e.dst
-  ) x ON nodes.node = x.node
-),
-t{t} AS (
-  SELECT tele.node,
-         round((1.0 - 0.85) * tele.tele
-               + 0.85 * coalesce(x.inflow, 0.0), 9) AS rank
-  FROM tele
-  LEFT JOIN (
-    SELECT e.dst AS node, sum(r.rank / deg.deg) AS inflow
-    FROM e
-    JOIN deg ON e.src = deg.src
-    JOIN t{t - 1} r ON e.src = r.node
-    GROUP BY e.dst
-  ) x ON tele.node = x.node
-)"""
-        )
-    parts.append(
-        f"""
-SELECT p.node, round(p.rank, 6) AS pr, round(t.rank, 6) AS tr,
-       CASE WHEN round(p.rank, 6) > 0
-            THEN round((round(p.rank, 6) - round(t.rank, 6))
-                       / round(p.rank, 6), 6)
-            ELSE 0.0 END AS spam_mass
-FROM p{iters} p JOIN t{iters} t ON p.node = t.node
-"""
-    )
-    return "".join(parts)
-
-
 def edge_diff(
     old: DataFrame,
     new: DataFrame,
@@ -1947,116 +1745,6 @@ FROM daagg
 """
 
 
-def weighted_pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    iters: int = 3,
-    damping: float = DAMPING,
-    state_round: int = 9,
-) -> DataFrame:
-    """:func:`pagerank` generalized to INTEGER edge weights — inflow
-    distributes proportionally to weight instead of uniformly:
-    r_{t+1}(n) = round((1-d)/N + d * sum_{m->n} r_t(m) * w(m,n)/W(m),
-    state_round), W(m) = m's total out-weight. Over the host graph
-    this is the rank the link COUNTS justify (weight = n_links per
-    host pair): a host linking a target 10,000 times
-    endorses it differently than one linking it once — and a spam
-    host's repeated self-promotion concentrates on few targets, where
-    uniform PageRank would dilute it.
-
-    Parallel edges must be pre-aggregated (one (src, dst) row each);
-    weights are summed as exact BIGINTs, so w/W is one double
-    division and the round(·, state_round) state contract holds
-    cross-engine exactly as in pagerank. Scale shape identical: one
-    shuffle per iteration, src-partitioned edge reuse,
-    localCheckpoint-capped lineage.
-    """
-    e = (
-        edges.groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .agg(F.sum(F.col(weight)).cast("long").alias("w"))
-        .repartition("src")
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    wdeg = e.groupBy("src").agg(F.sum("w").cast("long").alias("wdeg"))
-    base = (1.0 - damping) / float(n)
-    ranks = nodes.select(
-        "node", F.round(F.lit(1.0 / float(n)), state_round).alias("rank")
-    )
-    for _ in range(iters):
-        contrib = (
-            e.join(wdeg, "src")
-            .join(ranks.select(F.col("node").alias("src"), "rank"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    F.col("rank")
-                    * (F.col("w").cast("double") / F.col("wdeg").cast("double"))
-                ).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0)),
-                    state_round,
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
-
-
-def weighted_pagerank_oracle_sql(e_sql: str, iters: int = 3) -> str:
-    """DuckDB twin of :func:`weighted_pagerank`; `e_sql` must yield
-    (src, dst, w) with one row per edge (pre-aggregated weights).
-    CTE CONTINUATION (leading ', '), the _pagerank_oracle_body
-    convention. NOTE the inflow term is rank * (w/W) — same
-    association order as the engine."""
-    parts = [
-        f"""
-, we AS ({e_sql}),
-wnodes AS (SELECT src AS node FROM we UNION SELECT dst FROM we),
-wnn AS (SELECT count(*)::DOUBLE AS n FROM wnodes),
-wdeg AS (SELECT src, sum(w)::BIGINT AS wdeg FROM we GROUP BY src),
-w0 AS (SELECT node, round(1.0 / wnn.n, 9) AS rank
-       FROM wnodes CROSS JOIN wnn)"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f""",
-w{t} AS (
-  SELECT wnodes.node,
-         round((1.0 - 0.85) / wnn.n + 0.85 * coalesce(x.inflow, 0.0), 9)
-           AS rank
-  FROM wnodes CROSS JOIN wnn
-  LEFT JOIN (
-    SELECT we.dst AS node,
-           sum(r.rank * (we.w::DOUBLE / wdeg.wdeg::DOUBLE)) AS inflow
-    FROM we
-    JOIN wdeg ON we.src = wdeg.src
-    JOIN w{t - 1} r ON we.src = r.node
-    GROUP BY we.dst
-  ) x ON wnodes.node = x.node
-)"""
-        )
-    parts.append(f"\nSELECT node, round(rank, 6) AS rank FROM w{iters}\n")
-    return "".join(parts)
-
-
 def harmonic_centrality(
     edges: DataFrame,
     k: int = 2,
@@ -2173,85 +1861,6 @@ FROM wco x JOIN wco y
   ON x.d = y.d AND x.s = y.s AND x.t < y.t
      AND abs(x.p - y.p) <= {window}
 GROUP BY x.t, y.t
-"""
-
-
-def bounded_scc(
-    edges: DataFrame,
-    k: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """(node, scc_label) — k-bounded strongly-connected-component
-    labels over the DIRECTED edge set: scc_label(n) = the smallest
-    node id m with n ->* m and m ->* n, both within k hops (every
-    node trivially reaches itself, so singletons label themselves).
-    The directed-cycle detector components' undirected transitivity
-    can't be: on the host graph, a nontrivial label groups RECIPROCAL
-    link structures — link exchanges and farm rings — the
-    link-farm reciprocity evidence at multi-hop range.
-
-    Bounded honestly: cycles longer than k hops split (label = self);
-    k is the explicit cost knob because the forward-reach table is
-    the k-neighborhood product. Shape: k directed frontier joins
-    (the k_hop recipe minus symmetrization), then ONE self-join of
-    the reach table on the swapped key pair (source=node AND
-    node=source — mutual reachability), then a min() rollup.
-    """
-    if k < 1:
-        raise ValueError("bounded_scc needs k >= 1")
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    best = nodes.select(F.col("node").alias("source"), "node")
-    frontier = best
-    for _ in range(1, k + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["a"])
-            .select("source", F.col("b").alias("node"))
-        )
-        frontier = nxt.join(best, ["source", "node"], "left_anti").distinct()
-        best = best.unionByName(frontier).localCheckpoint(eager=True)
-    back = best.select(
-        F.col("node").alias("source"), F.col("source").alias("node")
-    )
-    mutual = best.join(back, ["source", "node"], "left_semi")
-    return (
-        mutual.groupBy("source")
-        .agg(F.min("node").alias("scc_label"))
-        .select(F.col("source").alias("node"), "scc_label")
-    )
-
-
-def bounded_scc_oracle_sql(prefix_cte: str, k: int = 3) -> str:
-    """DuckDB twin of :func:`bounded_scc`; `prefix_cte` is a complete
-    WITH RECURSIVE chain whose LAST relation is sccE(a, b) —
-    DISTINCT directed edges, no self loops (flat chain per the repo's
-    nested-WITH quirk)."""
-    return f"""{prefix_cte},
-sccN AS (SELECT a AS node FROM sccE UNION SELECT b FROM sccE),
-sccW(source, node, dist) AS (
-  SELECT node, node, 0 FROM sccN
-  UNION
-  SELECT w.source, e.b, w.dist + 1
-  FROM sccW w JOIN sccE e ON w.node = e.a
-  WHERE w.dist < {k}
-),
-sccR AS (SELECT DISTINCT source, node FROM sccW),
-sccM AS (
-  SELECT r.source, r.node
-  FROM sccR r
-  JOIN sccR x ON r.source = x.node AND r.node = x.source
-)
-SELECT source AS node, min(node) AS scc_label
-FROM sccM GROUP BY source
 """
 
 

@@ -697,7 +697,10 @@ def dsir_weights(
     unigram_lm_score GROUP BY convention). `ratios` accepts a
     persisted :func:`dsir_log_ratios` frame to skip model fitting
     (the vocab= / centroids= amortization pattern) — it must have
-    been built with the SAME hash_fn and n_buckets. `hash_fn=
+    been built with the SAME hash_fn and n_buckets; a frame whose row
+    count is not n_buckets, or whose `b` leaves [0, n_buckets), raises
+    ValueError (one aggregate over the bounded frame) instead of
+    silently dropping bigram mass in the join. `hash_fn=
     'xxhash64'` is the production fast path (~3x at sf0.1: the cost
     is one hash per bigram occurrence over three corpus scans, and
     xxhash64 is JVM-native where md5 round-trips a hex string);
@@ -709,6 +712,18 @@ def dsir_weights(
     with partial combine. No corpus collect, no unbounded state."""
     if ratios is None:
         ratios = dsir_log_ratios(target, raw, n_buckets, text_col, hash_fn)
+    else:
+        n, in_range = ratios.agg(
+            F.count(F.lit(1)),
+            F.count(F.when(F.col("b").between(0, n_buckets - 1), 1)),
+        ).first()
+        if n != n_buckets or in_range != n:
+            raise ValueError(
+                f"ratios has {n} rows ({n - in_range} with b outside "
+                f"[0, {n_buckets})); dsir_weights expects n_buckets="
+                f"{n_buckets}: build it with dsir_log_ratios at the same "
+                "n_buckets"
+            )
     bg = raw.select(
         F.col(id_col).alias("id"),
         F.explode(_bigram_array(words_array(text_col))).alias("g"),

@@ -1,76 +1,8 @@
-"""url_blocklist_filter + mixture_sample: semantics and plan shape.
-Value parity is pinned by the url_blocklist / mixture_sample oracle
-queries (independent membership / exact-integer-gate formulations)."""
+"""mixture_sample and chunk_docs: semantics and plan shape. Value
+parity is pinned by the mixture_sample oracle query (exact-integer-gate
+formulation)."""
 
 import pytest
-from pyspark.sql import functions as F
-
-PAGES = [
-    (1, "https://blog.example.org/a"),       # parent-domain block
-    (2, "https://example.org/b"),            # exact block
-    (3, "https://notexample.org/c"),         # must NOT match (no dot rule)
-    (4, "https://deep.a.ads.net:8080/d"),    # nested parent + port strip
-    (5, "https://ADS.net/e"),                # case-normalized exact
-    (6, "https://safe.example.com/f"),       # kept
-    (7, "bad-url-no-scheme"),                # malformed: kept (host '')
-]
-BLOCKED = ("example.org", "ads.net")
-
-
-def _pages(spark):
-    return spark.createDataFrame(PAGES, "doc_id long, url string")
-
-
-class TestBlocklist:
-    def test_literal_list_semantics(self, spark):
-        from easyner_spark.operators.webtext import url_blocklist_filter
-
-        kept = {
-            r["doc_id"]
-            for r in url_blocklist_filter(_pages(spark), BLOCKED).collect()
-        }
-        assert kept == {3, 6, 7}
-
-    def test_audit_mode_is_complement(self, spark):
-        from easyner_spark.operators.webtext import url_blocklist_filter
-
-        blocked = {
-            r["doc_id"]
-            for r in url_blocklist_filter(
-                _pages(spark), BLOCKED, keep_blocked=True
-            ).collect()
-        }
-        assert blocked == {1, 2, 4, 5}
-
-    def test_dataframe_blocklist_matches_literal(self, spark):
-        from easyner_spark.operators.webtext import url_blocklist_filter
-
-        bl = spark.createDataFrame([(d,) for d in BLOCKED], "domain string")
-        a = {r["doc_id"] for r in url_blocklist_filter(_pages(spark), bl).collect()}
-        b = {r["doc_id"] for r in url_blocklist_filter(_pages(spark), BLOCKED).collect()}
-        assert a == b == {3, 6, 7}
-
-    def test_literal_path_zero_shuffle(self, spark):
-        from easyner_spark.operators.webtext import url_blocklist_filter
-
-        plan = (
-            url_blocklist_filter(_pages(spark), BLOCKED)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan
-
-    def test_host_suffixes_shape(self, spark):
-        from easyner_spark.operators.webtext import host_suffixes
-
-        got = (
-            spark.createDataFrame([("a.b.example.net",), ("localhost",)], "h string")
-            .select(host_suffixes("h").alias("s"))
-            .collect()
-        )
-        assert got[0]["s"] == ["a.b.example.net", "b.example.net", "example.net"]
-        assert got[1]["s"] == ["localhost"]
 
 
 class TestMixture:

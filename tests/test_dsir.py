@@ -50,6 +50,13 @@ def test_ratios_reuse_matches_self_fit(spark, corpora):
     assert ratios.count() == 2048  # every bucket present, bounded
 
 
+def test_ratios_from_other_n_buckets_raise(spark, corpora):
+    target, raw = corpora
+    ratios = dsir_log_ratios(target, raw, n_buckets=1024)
+    with pytest.raises(ValueError, match="1024 rows.*n_buckets=2048"):
+        dsir_weights(raw, target, ratios=ratios)
+
+
 def test_sample_topk_deterministic_and_seeded(spark, corpora):
     target, raw = corpora
     s1 = [r.id for r in dsir_sample(raw, target, k=2).collect()]

@@ -147,42 +147,6 @@ class TestKHop:
         assert len(got) == 9
 
 
-class TestHits:
-    # index -> {a, b, c}; a, b also link each other; d links to a only.
-    EDGES = [
-        ("index", "a"), ("index", "b"), ("index", "c"),
-        ("a", "b"), ("b", "a"), ("d", "a"),
-    ]
-
-    def _run(self, spark, **kw):
-        from easyner_spark.operators.graph import hits
-
-        e = spark.createDataFrame(self.EDGES, "src string, dst string")
-        return {r["node"]: r for r in hits(e, **kw).collect()}
-
-    def test_hub_authority_separation(self, spark):
-        got = self._run(spark, iters=3)
-        # the index page out-links everywhere: top hub, zero authority
-        assert got["index"]["hub"] == max(r["hub"] for r in got.values())
-        assert got["index"]["authority"] == 0.0
-        # 'a' is the most-linked-from-good-hubs node: top authority
-        assert got["a"]["authority"] == max(r["authority"] for r in got.values())
-        assert got["a"]["authority"] == 1.0  # L-inf normalization peak
-        # 'c' is only a target: authority > 0, hub 0
-        assert got["c"]["authority"] > 0.0 and got["c"]["hub"] == 0.0
-
-    def test_deterministic_across_runs(self, spark):
-        a = {k: (v["authority"], v["hub"]) for k, v in self._run(spark).items()}
-        b = {k: (v["authority"], v["hub"]) for k, v in self._run(spark).items()}
-        assert a == b
-
-    def test_values_bounded(self, spark):
-        got = self._run(spark, iters=2)
-        for r in got.values():
-            assert 0.0 <= r["authority"] <= 1.0
-            assert 0.0 <= r["hub"] <= 1.0
-
-
 class TestLinkPrediction:
     EDGES = [(1, 2), (1, 3), (2, 3), (2, 4)]
 

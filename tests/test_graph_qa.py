@@ -1,5 +1,5 @@
 """Graph-QA layer: local clustering coefficient, modularity
-decomposition, TrustRank spam mass, and snapshot edge diffs —
+decomposition and snapshot edge diffs —
 hand-graph values checked exactly (floats follow the round(·, 6)
 contract, so closed-form expectations are safe to compare with ==)."""
 
@@ -10,7 +10,6 @@ from easyner_spark.operators.graph import (
     edge_diff,
     label_propagation,
     modularity,
-    spam_mass,
 )
 
 
@@ -70,22 +69,6 @@ def test_modularity_composes_with_lpa(spark):
     )
     out = modularity(e, label_propagation(e, iters=3)).collect()
     assert sum(r.q_term for r in out) > 0.4  # disconnected cliques: Q = 0.5
-
-
-def test_spam_mass(spark):
-    # trusted hub t feeds a; s is an untrusted source feeding b
-    e = _edges(spark, [("t", "a"), ("a", "b"), ("s", "b"), ("s", "c")])
-    seeds = spark.createDataFrame([("t",)], ["node"])
-    out = {r.node: r for r in spam_mass(e, seeds).collect()}
-    # s gets no teleport and no inflow: tr = 0, pr > 0 -> mass 1.0
-    assert out["s"].tr == 0.0 and out["s"].pr > 0
-    assert out["s"].spam_mass == 1.0
-    # the trusted seed's own mass is strongly negative (tr >> pr)
-    assert out["t"].spam_mass < 0
-    # every node appears, mass bit-stable under the rounding contract
-    assert set(out) == {"t", "a", "b", "s", "c"}
-    for r in out.values():
-        assert r.spam_mass == round((r.pr - r.tr) / r.pr, 6)
 
 
 def test_edge_diff(spark):

@@ -1,13 +1,8 @@
 """KG profiling operators: predicate cardinality classes, per-doc
-entity salience, host co-citation with the fanout cap."""
-
-import itertools
-
-import pytest
+entity salience, entity types and the is-a closure."""
 
 from easyner_spark.operators.analysis import entity_salience
 from easyner_spark.operators.triples import predicate_cardinality
-from easyner_spark.operators.webtext import host_cocitation
 
 
 def test_predicate_cardinality_classes(spark):
@@ -87,55 +82,6 @@ def test_entity_salience_drops_unlinked(spark):
     )
     out = entity_salience(lm).collect()
     assert len(out) == 1 and out[0]["entity_id"] == "e1"
-
-
-def _brute_cocitation(rows, max_out):
-    """Reference recomputation: per-src top max_out dsts by
-    (n_links desc, dst asc), then count sources per dst pair."""
-    by_src = {}
-    for src, dst, n in rows:
-        by_src.setdefault(src, []).append((-n, dst))
-    pairs = {}
-    for src, dsts in by_src.items():
-        kept = sorted(d for _, d in sorted(dsts)[:max_out])
-        for a, b in itertools.combinations(kept, 2):
-            pairs[(a, b)] = pairs.get((a, b), 0) + 1
-    return pairs
-
-
-@pytest.mark.parametrize("max_out", [2, 3, 100])
-def test_host_cocitation_matches_bruteforce(spark, max_out):
-    rows = [
-        ("s1.com", "a.com", 5),
-        ("s1.com", "b.com", 3),
-        ("s1.com", "c.com", 3),  # ties b.com on n_links -> dst asc
-        ("s1.com", "d.com", 1),
-        ("s2.com", "a.com", 1),
-        ("s2.com", "b.com", 9),
-        ("s3.com", "a.com", 2),
-        ("s3.com", "b.com", 2),
-        ("s3.com", "c.com", 2),
-        ("s4.com", "z.com", 4),  # single-dst source emits nothing
-    ]
-    hg = spark.createDataFrame(
-        rows, "src_host string, dst_host string, n_links long"
-    )
-    got = {
-        (r["host_a"], r["host_b"]): r["n_sources"]
-        for r in host_cocitation(hg, max_out=max_out).collect()
-    }
-    assert got == _brute_cocitation(rows, max_out)
-
-
-def test_host_cocitation_cap_bites(spark):
-    rows = [("s.com", f"d{i}.com", 10 - i) for i in range(6)]
-    hg = spark.createDataFrame(
-        rows, "src_host string, dst_host string, n_links long"
-    )
-    got = host_cocitation(hg, max_out=3).collect()
-    # top-3 dsts (d0,d1,d2) -> C(3,2)=3 pairs, none involving d3..d5
-    assert len(got) == 3
-    assert all("d3" not in (r["host_a"], r["host_b"]) for r in got)
 
 
 def test_entity_types_votes_and_ties(spark):

@@ -1,15 +1,13 @@
-"""Score-proportional deterministic sampling + host link reciprocity.
+"""Score-proportional deterministic sampling.
 
 Reference parity: EasyNER has no sampling stage (subsetting is the
-id-list filter, scripts/searcher.py) and no link graph; both are
-north_star curation / crawl-hygiene surface.
+id-list filter, scripts/searcher.py); this is north_star curation
+surface.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from easyner_spark.operators.sampling import quality_weighted_sample
-from easyner_spark.operators.webtext import host_reciprocity
 
 
 class TestQualityWeightedSample:
@@ -53,35 +51,3 @@ class TestQualityWeightedSample:
         assert [r.url for r in out] == ["b"]  # -5 -> 0 drops; 1e6 clamps to max
         with pytest.raises(ValueError):
             quality_weighted_sample(df, "score", max_score=2**31)
-
-
-class TestHostReciprocity:
-    def test_counts_and_micro_fraction(self, spark):
-        edges = spark.createDataFrame(
-            [
-                ("a", "b"), ("b", "a"),            # reciprocated pair
-                ("a", "c"), ("a", "d"),            # one-way
-                ("a", "b"),                        # duplicate collapses
-                ("e", "e"),                        # self-loop dropped
-                ("c", "a"),                        # makes a<->c reciprocal
-            ],
-            "src_host string, dst_host string",
-        )
-        out = {r.host: (r.n_out, r.n_recip, r.recip_micro)
-               for r in host_reciprocity(edges).collect()}
-        assert out["a"] == (3, 2, 666666)   # b,c of b,c,d link back
-        assert out["b"] == (1, 1, 1000000)
-        assert out["c"] == (1, 1, 1000000)
-        assert "d" not in out               # no outlinks -> no row
-        assert "e" not in out               # self-loop only
-
-    def test_farm_ring_scores_one(self, spark):
-        ring = [(f"h{i}", f"h{(i + 1) % 4}") for i in range(4)]
-        ring += [(b, a) for a, b in ring]
-        organic = [("org", f"h{i}") for i in range(4)]
-        edges = spark.createDataFrame(
-            ring + organic, "src_host string, dst_host string"
-        )
-        out = {r.host: r.recip_micro for r in host_reciprocity(edges).collect()}
-        assert all(out[f"h{i}"] == 1000000 for i in range(4))
-        assert out["org"] == 0

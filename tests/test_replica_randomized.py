@@ -7,36 +7,6 @@ import hashlib
 import random
 
 from easyner_spark.operators.sampling import apportion_budget
-from easyner_spark.operators.webtext import resolve_redirects
-
-
-def _py_resolve(edges, max_steps):
-    nxt = dict(edges)
-    out = {}
-    for u in nxt:
-        cur, hops = u, 0
-        while hops < max_steps and cur in nxt:
-            cur = nxt[cur]
-            hops += 1
-        done = cur not in nxt
-        out[u] = (cur, hops, "resolved" if done else "unresolved")
-    return out
-
-
-def test_redirects_random_functional_graph(spark):
-    rng = random.Random(7)
-    nodes = [f"n{i}" for i in range(300)]
-    # ~70% of nodes redirect somewhere (self-loops and cycles arise
-    # naturally from random targets)
-    edges = [
-        (u, rng.choice(nodes)) for u in nodes if rng.random() < 0.7
-    ]
-    df = spark.createDataFrame(edges, "url string, target string")
-    got = {
-        r["url"]: (r["final_url"], r["hops"], r["status"])
-        for r in resolve_redirects(df, max_steps=8).collect()
-    }
-    assert got == _py_resolve(edges, 8)
 
 
 def _py_hamilton(weights, budget):

@@ -210,10 +210,3 @@ class TestReviewFixes:
         for r in got.values():
             assert r["score_q"] is not None
             assert r["cross_entropy"] is not None and r["cross_entropy"] > 0
-
-    def test_hits_iters_gate(self, spark):
-        from easyner_spark.operators.graph import hits
-
-        e = spark.createDataFrame([("a", "b")], "src string, dst string")
-        with pytest.raises(ValueError):
-            hits(e, iters=0)

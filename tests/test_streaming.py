@@ -377,15 +377,6 @@ class TestCurationOpsOnStreams:
             "m_mix", lambda r: r["doc_id"],
         )
 
-    def test_blocklist_streams(self, spark, docs_dir):
-        from easyner_spark.operators.webtext import url_blocklist_filter
-
-        self._assert_stream_eq_batch(
-            spark, docs_dir,
-            lambda df: url_blocklist_filter(df, ("example.org", "ads.net")),
-            "m_block", lambda r: r["doc_id"],
-        )
-
     def test_topic_id_streams(self, spark, docs_dir):
         from easyner_spark.operators.textstats import topic_id
 

@@ -5,11 +5,7 @@ never produces (malformed urls, all-symbol text, tie-broken labels)."""
 import pytest
 from pyspark.sql import functions as F
 
-from easyner_spark.operators.webtext import (
-    host_skew_profile,
-    host_stats,
-    url_parts,
-)
+from easyner_spark.operators.webtext import host_skew_profile, url_parts
 
 
 def _pages(spark, rows):
@@ -40,21 +36,14 @@ class TestUrlParts:
         assert (r3["scheme"], r3["host"], r3["reg_domain"], r3["path"]) == ("", "", "", "")
 
 
-class TestHostStats:
-    def test_rollup_and_skew(self, spark):
+class TestHostSkewProfile:
+    def test_rank_salt_and_share(self, spark):
         rows = [
             (f"https://hot.com/{i}", "x" * 10, "en") for i in range(6)
         ] + [
             ("https://cold.org/1", "y" * 4, "en"),
             ("https://cold.org/2", "y" * 6, "de"),
         ]
-        out = {r["host"]: r for r in host_stats(_pages(spark, rows)).collect()}
-        assert out["hot.com"]["n_docs"] == 6
-        assert out["hot.com"]["total_chars"] == 60
-        assert out["hot.com"]["n_langs"] == 1
-        assert out["cold.org"]["mean_chars"] == 5.0
-        assert out["cold.org"]["n_langs"] == 2
-
         prof = {
             r["host"]: r
             for r in host_skew_profile(
@@ -188,12 +177,6 @@ class TestPlanShapes:
         plan = gopher_filters(df)._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
 
-    def test_host_stats_single_shuffle(self, spark):
-        """One hash-aggregate exchange on host, nothing else."""
-        df = _pages(spark, [("https://x.com/a", "t", "en")])
-        plan = host_stats(df)._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1
-
 
 class TestWordRepetition:
     def _run(self, spark, texts, **kw):
@@ -256,53 +239,6 @@ class TestLabelPropagation:
 
 
 class TestAnchorsAndDelta:
-    def _pages(self, spark, html, url="https://a.example.com/p"):
-        return spark.createDataFrame(
-            [(url, bytearray(html, "utf-8"))], "url string, html binary"
-        )
-
-    def test_extract_anchors_pairs_href_and_text(self, spark):
-        from easyner_spark.operators.webtext import extract_anchors
-
-        html = (
-            '<a href="https://B.example.org/x">Read This Page</a>'
-            '<a href="/rel">local link</a>'
-            '<a href="//cdn.example.net/y">The CDN</a>'
-            '<a href="mailto:a@b.c">drop me</a>'
-            '<a href="https://c.example.io/q" rel="nofollow">attr salad</a>'
-        )
-        rows = {
-            r["href"]: (r["target_host"], r["anchor"])
-            for r in extract_anchors(self._pages(spark, html)).collect()
-        }
-        assert rows == {
-            "https://B.example.org/x": ("b.example.org", "Read This Page"),
-            "/rel": ("a.example.com", "local link"),
-            "//cdn.example.net/y": ("cdn.example.net", "The CDN"),
-            "https://c.example.io/q": ("c.example.io", "attr salad"),
-        }
-
-    def test_anchor_terms_rollup(self, spark):
-        from easyner_spark.operators.webtext import anchor_terms
-
-        html = (
-            '<a href="https://b.example.org/1">Great Site</a>'
-            '<a href="https://b.example.org/2">great site indeed</a>'
-            '<a href="/self">Home-Page 2</a>'
-        )
-        got = {
-            (r["dst_host"], r["term"]): r["n"]
-            for r in anchor_terms(self._pages(spark, html)).collect()
-        }
-        assert got == {
-            ("b.example.org", "great"): 2,
-            ("b.example.org", "site"): 2,
-            ("b.example.org", "indeed"): 1,
-            ("a.example.com", "home"): 1,
-            ("a.example.com", "page"): 1,
-            ("a.example.com", "2"): 1,
-        }
-
     def test_crawl_delta_null_text_contract(self, spark):
         """Null text (failed extraction) coalesces to '': consecutive
         nulls are 'unchanged', delta_chars is never null — the exact
@@ -363,24 +299,6 @@ class TestNewOpPlans:
             [("https://a.example.com/p", bytearray(b'<a href="/x">t</a>'), "body", 1)],
             "url string, html binary, text string, warc_ts long",
         )
-
-    def test_anchor_terms_one_shuffle(self, spark):
-        from easyner_spark.operators.webtext import anchor_terms
-
-        plan = (
-            anchor_terms(self._pages(spark))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert plan.count("Exchange") == 1  # the (dst_host, term) rollup
-
-    def test_extract_anchors_zero_shuffle(self, spark):
-        from easyner_spark.operators.webtext import extract_anchors
-
-        plan = (
-            extract_anchors(self._pages(spark))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in plan
 
     def test_crawl_delta_one_shuffle(self, spark):
         from easyner_spark.operators.webtext import crawl_delta

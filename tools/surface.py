@@ -31,27 +31,6 @@ SEEDS = ["easyner_spark/cli.py", "easyner_spark/kg.py", "easyner_spark/streaming
          "bench.py", "perfbench/run.py"]
 ENTRY = "__spark_entry__.py"
 
-# The next webtext tranche: no shipped job reaches these; they stay,
-# with their own tests, until a follow-up cut deletes both together.
-_WEBTEXT_NEXT = """
-    ABS_URL_RE ANCHOR_EL_RE ANCHOR_HREF_RE ANCHOR_TEXT_RE ANCHOR_TOKEN_RE
-    BREADCRUMB_ITEM_RE DECL_CHARSET_RE DECL_HTML_LANG_RE DECL_OG_LOCALE_RE
-    HEADING_EL_RE JSONLD_BLOCK_RE JSONLD_TYPE_RE LIST_ITEM_RE
-    MICRO_CONTENT_RE MICRO_PROP_EL_RE MICRO_PROP_RE MICRO_TYPE_RE
-    OG_CONTENT_RE OG_EL_RE OG_PROP_RE PROTO_REL_HOST_RE SECTION_SENTINEL
-    SITEMAP_IDX_RE SITEMAP_LASTMOD_RE SITEMAP_LOC_RE SOFT404_RE
-    anchor_terms breadcrumb_edges extract_anchors extract_breadcrumbs
-    extract_headings extract_headings_oracle_sql extract_microdata
-    extract_opengraph extract_opengraph_oracle_sql host_cocitation
-    host_reciprocity host_spam_signals host_spam_signals_oracle_sql
-    host_stats host_suffixes host_templates host_templates_oracle_sql
-    html_unescape list_memberships page_declarations
-    page_declarations_oracle_sql resolve_redirects section_lists
-    sitemap_index_parse sitemap_index_parse_oracle_sql soft404_signals
-    strip_host_templates template_cap template_cap_oracle_sql
-    url_blocklist_filter url_templates url_templates_oracle_sql
-""".split()
-
 # Unreached public defs kept on purpose, each with its reason.
 KEEP = {
     "easyner_spark.operators.webtext": {
@@ -60,7 +39,6 @@ KEEP = {
         "salted_repartition_by_host": "the north rule's host-skew mechanism; "
                                       "wire it in where measured or delete it",
         "host_skew_profile": "sizes salted_repartition_by_host's salt",
-        **dict.fromkeys(_WEBTEXT_NEXT, "next webtext tranche"),
     },
 }
 
