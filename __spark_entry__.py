@@ -335,27 +335,6 @@ def q_entity_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     return entity_types(edges, TYPE_RULES)
 
 
-def q_isa_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Taxonomy transitive closure by min-plus doubling over a
-    deterministic synthetic subclass forest: n_k is-a n_(k DIV 2)
-    (depth ~9 at 500 docs — deeper than one doubling round, so the
-    squaring recurrence is genuinely exercised) plus a second parent
-    n_(k DIV 3) on every 5th node to make it a DAG (multi-parent
-    min-depth paths value-checked, not just the chain)."""
-    from easyner_spark.operators.graph import isa_closure
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tree = docs.where(F.col("doc_id") >= 1).select(
-        F.concat(F.lit("n"), F.col("doc_id").cast("string")).alias("child"),
-        F.concat(F.lit("n"), F.expr("doc_id DIV 2").cast("string")).alias("parent"),
-    )
-    dag = docs.where((F.col("doc_id") % 5 == 0) & (F.col("doc_id") >= 3)).select(
-        F.concat(F.lit("n"), F.col("doc_id").cast("string")).alias("child"),
-        F.concat(F.lit("n"), F.expr("doc_id DIV 3").cast("string")).alias("parent"),
-    )
-    return isa_closure(tree.unionByName(dag), max_depth=16)
-
-
 SEARCH_TERMS = ["hash", "sort table"]
 
 
@@ -634,19 +613,6 @@ def q_k_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_hop(edges, k=2).select("source", "node", "dist")
 
 
-def q_kg_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PMI/NPMI edge weighting over sentence-level entity co-occurrence
-    (beyond-reference KG edge scoring; reference analog is the raw pair
-    count in cooccurrence_analysis.py). Floats follow the repo-wide
-    round(·, 6) oracle contract; counts are exact integers."""
-    from easyner_spark.operators.graph import edge_pmi
-
-    out = edge_pmi(_mentions(spark, sf_dir))
-    return out.select(
-        "a", "b", "pair_cnt", "cnt_a", "cnt_b", "pmi", "npmi"
-    )
-
-
 def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration (3) PageRank over the distinct directed triple
     graph — GraphFrames-style iterative DataFrame joins with a per-
@@ -658,96 +624,6 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     )
     return pagerank(edges).select("node", "rank")
-
-
-def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank from seeds (KB:01, KB:03) over the
-    directed triple graph — random walk with restart, ALL-BIGINT
-    micro-unit iteration (3 rounds, damping 17/20)."""
-    from easyner_spark.operators.graph import ppr
-
-    edges = q_triples(spark, sf_dir).select(
-        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-    )
-    return ppr(edges, seeds=("KB:01", "KB:03")).select("node", "score", "is_seed")
-
-
-def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts over the undirected entity
-    co-occurrence graph (canonical-ordering wedge join, a < b < c) —
-    integer-exact, the graph-cohesion companion to components."""
-    from easyner_spark.operators.graph import sentence_pairs, triangle_counts
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    return triangle_counts(und).select("node", "triangles")
-
-
-def q_kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic fixed-iteration label propagation over the entity
-    co-occurrence graph — the community layer between edge_pmi's
-    weights and components' pure reachability (operators/graph.py
-    docstring: LPA splits what transitivity over-merges)."""
-    from easyner_spark.operators.graph import label_propagation, sentence_pairs
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    return label_propagation(und, iters=3).select("node", "label")
-
-
-def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node LOCAL clustering coefficient over the entity
-    co-occurrence graph — the clique-vs-star split kg_triangles' raw
-    counts can't make (a promiscuous extraction-artifact hub has many
-    triangles but a near-zero coefficient). Ratio computed from exact
-    integers under the round(·, 6) contract."""
-    from easyner_spark.operators.graph import clustering_coeff, sentence_pairs
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    return clustering_coeff(und).select(
-        "node", "degree", "triangles", "coeff"
-    )
-
-
-def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity decomposition of kg_communities' LPA labels
-    over the co-occurrence graph — per-community q_term rows (exact
-    integers e_c, D_c, m in one rounded double expression) instead of
-    one global order-dependent float sum; Q = sum(q_term)."""
-    from easyner_spark.operators.graph import (
-        label_propagation,
-        modularity,
-        sentence_pairs,
-    )
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    lab = label_propagation(und, iters=3)
-    return modularity(und, lab).select(
-        "community", "n_nodes", "degree_sum", "intra_edges", "q_term"
-    )
-
-
-def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff between two KG epochs: edges from the first 4/5
-    of documents vs the full corpus (weight = support count) through
-    edge_diff — the added/changed/removed audit slice an incremental
-    build publishes next to each checkpoint, and the exact re-process
-    set for downstream consumers."""
-    from easyner_spark.operators.graph import edge_diff
-
-    t = q_triples(spark, sf_dir)
-    keys = ("subj_id", "pred", "obj_id")
-    old = (
-        t.where(F.col("doc_id") % 5 < 4)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )
-    new = t.groupBy(*keys).agg(F.count(F.lit(1)).alias("weight"))
-    return edge_diff(old, new, keys=keys).select(
-        *keys, "old_weight", "new_weight", "delta", "status"
-    )
 
 
 def _pronoun_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -893,32 +769,6 @@ def q_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_kg_window_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-window (<=5) entity co-occurrence counts — the tighter-
-    evidence edge weighting sentence-level pairs can't express."""
-    from easyner_spark.operators.graph import window_cooc
-
-    m = _mentions(spark, sf_dir)
-    return window_cooc(
-        m, window=5, doc_col="url", sent_col="sent_idx",
-        term_col="mention_lc", pos_col="begin_tok",
-    ).select("a", "b", "n_pairs")
-
-
-def q_kg_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-bounded harmonic centrality over the triple graph — the
-    disconnected-graph centrality, distance counts rolled up as exact
-    integers and folded in one fixed-order float expression."""
-    from easyner_spark.operators.graph import harmonic_centrality
-
-    edges = q_triples(spark, sf_dir).select(
-        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-    )
-    return harmonic_centrality(edges, k=2).select(
-        "source", "hc", "n_reached"
-    )
-
-
 _KWIC_TERMS = ("hash", "scan", "merge")
 
 
@@ -959,22 +809,6 @@ def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easyner_spark.operators.ranking import doc_keywords
 
     return doc_keywords(_docs(spark, sf_dir), k=5)
-
-
-def q_kg_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the entity co-occurrence graph — one
-    exact-integer-sums Pearson row; the structural fingerprint that
-    picks the pruning strategy (k_core vs per-template capping)."""
-    from easyner_spark.operators.graph import (
-        degree_assortativity,
-        sentence_pairs,
-    )
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    return degree_assortativity(und).select(
-        "m2", "sum_x", "sum_xx", "sum_xy", "r"
-    )
 
 
 def _merge_label_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1120,18 +954,6 @@ def q_kg_edge_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edge_history(t)
 
 
-def q_kg_wl_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-round Weisfeiler-Lehman structural labels over the entity
-    co-occurrence graph: string-hash color refinement, no floats —
-    entities sharing a label are structurally indistinguishable to
-    depth 2 (graph.wl_labels docstring)."""
-    from easyner_spark.operators.graph import sentence_pairs, wl_labels
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    return wl_labels(und, iters=2)
-
-
 CMS_CANDIDATES = ["join", "hash", "row", "batch", "scan", "zzznope"]
 
 
@@ -1162,20 +984,6 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = sentence_pairs(_mentions(spark, sf_dir))
     und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     return k_core(und, k=2, max_rounds=8)
-
-
-def q_kg_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbor / Adamic-Adar link prediction over the entity
-    co-occurrence graph — the KG-completion layer above components
-    (reachability) and kg_communities (density): pairs that SHARE
-    neighbors but never co-occur are the candidate missing edges.
-    Adamic-Adar weights are micro-unit-quantized per wedge center
-    before the cross-row sum (graph.link_prediction docstring)."""
-    from easyner_spark.operators.graph import link_prediction, sentence_pairs
-
-    pairs = sentence_pairs(_mentions(spark, sf_dir))
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    return link_prediction(und, min_common=2)
 
 
 # ---------------------------------------------------------------------------
@@ -1363,9 +1171,9 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_docs(_docs(spark, sf_dir), max_tokens=32, overlap=8, min_tail=5)
 
 
-# Closed 23-entity synthetic KG shared by the kg_negatives /
-# kg_random_walks / kg_degree_stats queries AND their oracles — one
-# definition per side so the Spark/SQL pairs cannot drift.
+# Closed 23-entity synthetic KG shared by the kg_degree_stats and
+# kg_pattern* queries AND their oracles — one definition per side so
+# the Spark/SQL pairs cannot drift.
 _KG_EDGES_SQL = """SELECT 'e' || (doc_id % 23) AS a,
     'e' || ((doc_id * 7 + 3) % 23) AS b
   FROM documents
@@ -1407,16 +1215,6 @@ def _kg_synth_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((did % 23) != ((did * 7 + 3) % 23))
         .distinct()
     )
-
-
-def q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered-LCWA negative sampling over the closed deterministic
-    triple set (23-entity vocab, 3 predicates): per true triple k=3
-    md5-indexed object corruptions, self-corruptions and accidental
-    positives dropped — bit-reproducible, no RNG."""
-    from easyner_spark.operators.graph import kg_negatives
-
-    return kg_negatives(_kg_synth_triples(spark, sf_dir), k=3)
 
 
 # Richer closed synthetic KG for rule mining: 31-entity vocab, 7
@@ -1802,26 +1600,6 @@ def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "x", "y", zorder_key(["x", "y"], bits=6).alias("zkey"))
 
 
-def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic DeepWalk corpus over the closed 23-entity triple
-    graph (subj->obj edges): 2 walks x 3 steps per start node,
-    md5-indexed neighbor choice, dangling nodes end walks early."""
-    from easyner_spark.operators.graph import kg_random_walks
-
-    return kg_random_walks(
-        _kg_synth_edges(spark, sf_dir), walk_len=3, walks_per_node=2
-    )
-
-
-def q_walk_skipgrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skip-gram pair counts (window 2) over the deterministic walk
-    corpus — the DeepWalk chain composed end-to-end: edges -> walks ->
-    training pairs."""
-    from easyner_spark.operators.graph import walk_skipgrams
-
-    return walk_skipgrams(q_kg_random_walks(spark, sf_dir), window=2)
-
-
 def q_kg_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG health monitoring: exact quantiles of the node total-degree
     distribution over the closed 23-entity graph — the degree table is
@@ -2158,57 +1936,6 @@ def q_kg_property_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         pred="pred",
         obj="obj",
     )
-
-
-def _kg_rank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gold triples + deterministic filtered negatives (kg_negatives
-    k=3, slot-deduped), every candidate scored by the md5-32 micro-unit
-    rule — the bit-reproducible stand-in for a trained KG-embedding
-    scorer, shared with the SQL twin."""
-    from easyner_spark.operators.graph import kg_negatives
-
-    t = _kg_synth_triples(spark, sf_dir)
-    negs = (
-        kg_negatives(t, k=3)
-        .select("subj", "pred", F.col("obj_neg").alias("obj"))
-        .distinct()
-        .withColumn("is_gold", F.lit(0))
-    )
-    gold = t.select("subj", "pred", "obj").withColumn("is_gold", F.lit(1))
-    cand = gold.unionByName(negs)
-    score = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", "subj", "pred", "obj", F.lit("sc"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
-    return cand.withColumn("score_micro", score)
-
-
-def q_kg_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered link-prediction ranking (Bordes-style protocol): per
-    gold triple, rank among its query's scored candidates — one
-    bounded (subj, pred) equi-join + one partial-agg count, ties
-    broken deterministically by smaller object id, other golds never
-    count as competitors."""
-    from easyner_spark.operators.graph import ranking_eval
-
-    return ranking_eval(_kg_rank_candidates(spark, sf_dir))
-
-
-def q_kg_rank_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus rollup of the ranking eval: n_gold, Hits@1/3/10 counts,
-    reciprocal-rank sums in micro-units (integer div — exact across
-    engines) and the integer-mean mrr_micro."""
-    from easyner_spark.operators.graph import ranking_eval, ranking_summary
-
-    return ranking_summary(ranking_eval(_kg_rank_candidates(spark, sf_dir)))
 
 
 def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2579,33 +2306,6 @@ def q_apposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apposition_facts(sents)
 
 
-def q_mined_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mining->closure chain composed end-to-end: copula is-a
-    candidates over chained hypernym sentences ('kindK is a
-    kind(K div 3)'), support-floored, self-edges dropped, then the
-    min-plus doubling closure — ancestors at exact minimal depth
-    (chains reach depth 3: kind24 -> kind8 -> kind2 -> kind0)."""
-    from easyner_spark.operators.graph import isa_closure
-    from easyner_spark.operators.triples import copula_isa
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    k = (did % 25).cast("string")
-    p = F.expr("(doc_id % 25) div 3").cast("string")
-    sents = d.select(
-        did.cast("string").alias("url"),
-        F.concat(
-            F.col("text"),
-            F.lit(" A kind"), k, F.lit(" is a kind"), p, F.lit(" again."),
-        ).alias("sentence"),
-    )
-    cands = copula_isa(sents)
-    edges = cands.where(
-        (F.col("n_docs") >= 2) & (F.col("child") != F.col("parent"))
-    ).select("child", "parent")
-    return isa_closure(edges, max_depth=16)
-
-
 def q_host_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host language mixture composing the REAL lang_id
     predictions over the documents table with a deterministic 7-host
@@ -2668,19 +2368,6 @@ def q_lang_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return grouped_quantiles(d, "lang", F.length("text"))
-
-
-def q_seed_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank from topic seeds {e1, e5} over the closed
-    KG — teleport mass restricted to the seeds, 3 iterations, the
-    per-iteration round(·, 9) state contract that makes the iterative
-    float algorithm value-oracle-able."""
-    from easyner_spark.operators.graph import personalized_pagerank
-
-    seeds = spark.createDataFrame([("e1",), ("e5",)], "node string")
-    return personalized_pagerank(
-        _kg_synth_edges(spark, sf_dir), seeds, iters=3
-    )
 
 
 def q_ner_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4408,19 +4095,17 @@ _DRIVER_WINDOW_FIRST = [
     # never-driver-verified registry queries (VERDICT r4 #1 —
     # close the external ledger; the driver checks the FIRST 50) ---
     "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk", "dsir_weights",
-    "dsir_sample", "semdedup", "kappa", "kg_link_predict", "kg_kcore",
-    "heavy_hitters", "kg_wl_labels", "kg_edge_history", "pack_sequences",
-    "length_quantiles", "bpe_merges", "bpe_token_counts", "bpe_encode",
-    "tokenized_pack", "entity_bursts", "kg_random_walks", "walk_skipgrams",
-    "kg_degree_stats", "kg_pattern", "kg_violations", "kg_rank_eval",
-    "kg_rank_summary", "containment",
+    "dsir_sample", "semdedup", "kappa", "kg_kcore", "heavy_hitters",
+    "kg_edge_history", "pack_sequences", "length_quantiles", "bpe_merges",
+    "bpe_token_counts", "bpe_encode", "tokenized_pack", "entity_bursts",
+    "kg_degree_stats", "kg_pattern", "kg_violations", "containment",
     # --- remaining never-driver-verified (orders the tail so any
     # wider driver window keeps covering unchecked queries first) ---
     "readability", "edge_evidence", "edge_temporal", "edge_negation",
     "edge_confidence", "acronyms", "quotes", "numeric_facts", "ntriples",
     "entity_labels", "contacts", "geo", "copula_isa", "apposition",
-    "mined_taxonomy", "host_langs", "compaction_plan", "lang_quantiles",
-    "seed_expansion", "ner_examples", "eval_split", "kg_node_profile",
+    "host_langs", "compaction_plan", "lang_quantiles", "ner_examples",
+    "eval_split", "kg_node_profile",
     "latest_crawl", "quality_sample", "crawl_delta", "name_match",
     "fuzzy_link", "topic_id", "repeated_spans", "chunk_docs", "mixture_sample",
     "deterministic_sample", "per_host_cap", "word_repetition",
@@ -4454,7 +4139,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "predicate_cardinality": q_predicate_cardinality,
         "entity_salience": q_entity_salience,
         "entity_types": q_entity_types,
-        "isa_closure": q_isa_closure,
         "search_sentences": q_search_sentences,
         "search_mentions": q_search_mentions,
         "doc_offsets": q_doc_offsets,
@@ -4467,28 +4151,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "components": q_components,
         "incremental_components": q_incremental_components,
         "k_hop": q_k_hop,
-        "kg_pmi": q_kg_pmi,
         "kg_pagerank": q_kg_pagerank,
-        "kg_ppr": q_kg_ppr,
-        "kg_triangles": q_kg_triangles,
-        "kg_communities": q_kg_communities,
-        "kg_clustering": q_kg_clustering,
-        "kg_modularity": q_kg_modularity,
-        "kg_snapshot_diff": q_kg_snapshot_diff,
         "doc_keywords": q_doc_keywords,
-        "kg_assortativity": q_kg_assortativity,
         "entity_merge_cands": q_entity_merge_cands,
         "kwic": q_kwic,
-        "kg_window_cooc": q_kg_window_cooc,
-        "kg_harmonic": q_kg_harmonic,
         "pronoun_links": q_pronoun_links,
         "passive_triples": q_passive_triples,
         "nominal_triples": q_nominal_triples,
         "kappa": q_kappa,
-        "kg_link_predict": q_kg_link_predict,
         "kg_kcore": q_kg_kcore,
         "heavy_hitters": q_heavy_hitters,
-        "kg_wl_labels": q_kg_wl_labels,
         "kg_edge_history": q_kg_edge_history,
         "pack_sequences": q_pack_sequences,
         "length_quantiles": q_length_quantiles,
@@ -4498,7 +4170,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tokenized_pack": q_tokenized_pack,
         "host_skew": q_host_skew,
         "entity_bursts": q_entity_bursts,
-        "kg_negatives": q_kg_negatives,
         "kg_rules": q_kg_rules,
         "kg_rule_preds": q_kg_rule_preds,
         "kg_pred_signatures": q_kg_pred_signatures,
@@ -4537,13 +4208,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_ntriples": q_kg_ntriples,
         "kg_shapes": q_kg_shapes,
         "length_drift": q_length_drift,
-        "kg_random_walks": q_kg_random_walks,
-        "walk_skipgrams": q_walk_skipgrams,
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pattern": q_kg_pattern,
         "kg_violations": q_kg_violations,
-        "kg_rank_eval": q_kg_rank_eval,
-        "kg_rank_summary": q_kg_rank_summary,
         "containment": q_containment,
         "readability": q_readability,
         "edge_evidence": q_edge_evidence,
@@ -4559,11 +4226,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo": q_geo,
         "copula_isa": q_copula_isa,
         "apposition": q_apposition,
-        "mined_taxonomy": q_mined_taxonomy,
         "host_langs": q_host_langs,
         "compaction_plan": q_compaction_plan,
         "lang_quantiles": q_lang_quantiles,
-        "seed_expansion": q_seed_expansion,
         "ner_examples": q_ner_examples,
         "crawl_quota": q_crawl_quota,
         "eval_split": q_eval_split,
@@ -5110,8 +4775,7 @@ def _sq_oracle() -> str:
 
 def _cooc_pairs_cte() -> str:
     """_PRELUDE extended with pr(a, b): the canonical distinct entity
-    co-occurrence pairs — shared by the kg_triangles /
-    kg_link_predict / kg_kcore oracles."""
+    co-occurrence pairs the kg_kcore oracle peels."""
     return _PRELUDE + """
 , occ AS (SELECT DISTINCT doc_id, sent_idx, mention_lc AS term FROM mentions),
 pr AS (
@@ -5121,22 +4785,10 @@ pr AS (
 )"""
 
 
-def _link_predict_oracle() -> str:
-    from easyner_spark.operators.graph import link_prediction_oracle_sql
-
-    return link_prediction_oracle_sql(_cooc_pairs_cte(), min_common=2)
-
-
 def _kcore_oracle() -> str:
     from easyner_spark.operators.graph import k_core_oracle_sql
 
     return k_core_oracle_sql(_cooc_pairs_cte(), k=2, max_rounds=8)
-
-
-def _wl_oracle() -> str:
-    from easyner_spark.operators.graph import wl_labels_oracle_sql
-
-    return wl_labels_oracle_sql(_cooc_pairs_cte(), iters=2)
 
 
 def _pack_oracle() -> str:
@@ -5242,45 +4894,6 @@ FROM m
 """
 
 
-def _lpa_oracle_body(iters: int = 3, final_sql: str | None = None) -> str:
-    """Unrolled fixed-iteration label propagation over the undirected
-    entity co-occurrence graph, mirroring operators/graph.
-    label_propagation's contract exactly: symmetrized distinct edges,
-    label_0 = own id, per round the neighbor-majority label with ties
-    to the SMALLEST label (row_number over cnt DESC, label ASC ==
-    Spark's min(struct(-cnt, label)))."""
-    parts = [
-        """
-, occ AS (SELECT DISTINCT doc_id, sent_idx, mention_lc AS term FROM mentions),
-pr AS (
-  SELECT DISTINCT x.term AS a, y.term AS b
-  FROM occ x JOIN occ y
-    ON x.doc_id = y.doc_id AND x.sent_idx = y.sent_idx AND x.term < y.term
-),
-sym AS (SELECT a AS node, b AS nbr FROM pr UNION SELECT b, a FROM pr),
-it0 AS (SELECT DISTINCT node, node AS label FROM sym)"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f""",
-it{t} AS (
-  SELECT node, label FROM (
-    SELECT s.node, r.label, count(*) AS cnt,
-           row_number() OVER (PARTITION BY s.node
-                              ORDER BY count(*) DESC, r.label) AS rn
-    FROM sym s JOIN it{t - 1} r ON s.nbr = r.node
-    GROUP BY s.node, r.label
-  ) WHERE rn = 1
-)"""
-        )
-    parts.append(
-        final_sql
-        if final_sql is not None
-        else f"\nSELECT node, label FROM it{iters}\n"
-    )
-    return "".join(parts)
-
-
 # Deterministic skewed url synthesis shared (verbatim) by the webtext
 # oracle queries — the SQL twin of __spark_entry__._synth_url_pages.
 _URL_HOST_CASE = """CASE WHEN doc_id % 10 < 3 THEN 'hub.example.com'
@@ -5318,35 +4931,6 @@ def _kg_violations_oracle() -> str:
     )
 
 
-def _kg_rank_oracle(summary: bool) -> str:
-    """q_kg_rank_eval / q_kg_rank_summary oracles: the same gold +
-    filtered-negative candidate synthesis (kg_negatives SQL twin,
-    slot-deduped) scored by the shared md5-32 micro-unit rule."""
-    from easyner_spark.operators.graph import (
-        kg_negatives_oracle_sql,
-        ranking_eval_oracle_sql,
-        ranking_summary_oracle_sql,
-    )
-
-    negs = kg_negatives_oracle_sql(_KG_TRIPLES_SQL, k=3)
-    cands = f"""
-WITH negs AS MATERIALIZED ({negs}),
-golds AS ({_KG_TRIPLES_SQL}),
-cand AS (
-  SELECT subj, pred, obj, 1 AS is_gold FROM golds
-  UNION ALL
-  SELECT DISTINCT subj, pred, obj_neg AS obj, 0 AS is_gold FROM negs
-)
-SELECT subj, pred, obj,
-       ('0x' || substr(md5(subj || '|' || pred || '|' || obj || '|sc'),
-                       1, 8))::BIGINT % 1000000 AS score_micro,
-       is_gold
-FROM cand"""
-    if summary:
-        return ranking_summary_oracle_sql(cands)
-    return ranking_eval_oracle_sql(cands)
-
-
 def _containment_oracle() -> str:
     """q_containment oracle: the base + portal-wrapper synthesis
     through the operator's module-local twin (same \\w+ tokenizer,
@@ -5379,36 +4963,6 @@ def _readability_oracle() -> str:
         " words_per_sent_micro, syll_per_word_micro"
         f" FROM ({twin})"
     )
-
-
-def _mined_taxonomy_oracle() -> str:
-    """q_mined_taxonomy oracle: the chained-hypernym mining flattened
-    into the WITH RECURSIVE prefix the closure twin requires (flat
-    chain per the nested-WITH quirk; explicit self-edge drop)."""
-    from easyner_spark.operators.graph import (
-        isa_closure_oracle_sql,
-        ppr_oracle_sql,
-    )
-
-    prefix = r"""WITH RECURSIVE csent AS (
-  SELECT doc_id::VARCHAR AS url,
-    text || ' A kind' || (doc_id % 25) || ' is a kind'
-    || ((doc_id % 25) // 3) || ' again.' AS sentence
-  FROM documents
-),
-cels AS (SELECT url,
-           unnest(regexp_extract_all(lower(sentence),
-             '\b[a-z][a-z0-9-]+ (?:is|are) (?:a|an|the) [a-z][a-z0-9-]+',
-             0)) AS el
-         FROM csent),
-cp AS (SELECT DISTINCT url,
-         regexp_extract(el, '^([a-z0-9-]+) ', 1) AS child,
-         regexp_extract(el, ' ([a-z0-9-]+)$', 1) AS parent
-       FROM cels),
-ced AS (SELECT child, parent, count(*)::BIGINT AS n
-        FROM cp GROUP BY child, parent),
-e AS (SELECT child, parent FROM ced WHERE n >= 2 AND child != parent)"""
-    return isa_closure_oracle_sql(prefix, max_depth=16)
 
 
 def _apposition_oracle() -> str:
@@ -5630,16 +5184,6 @@ def _kg_property_path_oracle() -> str:
     )
 
 
-def _kg_random_walks_oracle() -> str:
-    """q_kg_random_walks oracle: the shared closed edge synthesis fed
-    to the operator's module-local unrolled SQL twin."""
-    from easyner_spark.operators.graph import kg_random_walks_oracle_sql
-
-    return kg_random_walks_oracle_sql(
-        _KG_EDGES_SQL, walk_len=3, walks_per_node=2
-    )
-
-
 def _polite_quota_oracle() -> str:
     """q_polite_quota oracle: host page counts + literal delay rows
     fed to the operator's module-local twin."""
@@ -5691,18 +5235,6 @@ def _ner_examples_oracle() -> str:
     return ner_examples_oracle_sql(_PRELUDE, window=3)
 
 
-def _seed_expansion_oracle() -> str:
-    """q_seed_expansion oracle: shared closed-KG edges + literal seed
-    rows fed to the operator's module-local twin."""
-    from easyner_spark.operators.graph import personalized_pagerank_oracle_sql
-
-    return personalized_pagerank_oracle_sql(
-        f"SELECT DISTINCT a AS src, b AS dst FROM ({_KG_EDGES_SQL})",
-        "SELECT * FROM (VALUES ('e1'), ('e5')) AS t(node)",
-        iters=3,
-    )
-
-
 def _lang_quantiles_oracle() -> str:
     from easyner_spark.operators.sketches import grouped_quantiles_oracle_sql
 
@@ -5733,22 +5265,6 @@ def _kg_degree_stats_oracle() -> str:
   ) GROUP BY node
 ) AS degsrc"""
     return exact_quantiles_oracle_sql("deg", source=source)
-
-
-def _walk_skipgrams_oracle() -> str:
-    """q_walk_skipgrams oracle: the walks oracle as a MATERIALIZED
-    subquery under the operator's module-local twin."""
-    from easyner_spark.operators.graph import walk_skipgrams_oracle_sql
-
-    return walk_skipgrams_oracle_sql(_kg_random_walks_oracle(), window=2)
-
-
-def _kg_negatives_oracle() -> str:
-    """q_kg_negatives oracle: the closed triple synthesis fed to the
-    operator's module-local SQL twin."""
-    from easyner_spark.operators.graph import kg_negatives_oracle_sql
-
-    return kg_negatives_oracle_sql(_KG_TRIPLES_SQL, k=3)
 
 
 def _kg_rules_oracle() -> str:
@@ -6097,48 +5613,10 @@ FROM r
 """
 
 
-def _clustering_oracle() -> str:
-    from easyner_spark.operators.graph import clustering_coeff_oracle_sql
-
-    return clustering_coeff_oracle_sql(_cooc_pairs_cte())
-
-
-def _modularity_oracle() -> str:
-    from easyner_spark.operators.graph import modularity_oracle_sql
-
-    prefix = _PRELUDE + _lpa_oracle_body(
-        final_sql=",\nlab AS (SELECT node, label AS community FROM it3)"
-    )
-    return modularity_oracle_sql(prefix)
-
-
-def _snapshot_diff_oracle() -> str:
-    from easyner_spark.operators.graph import edge_diff_oracle_sql
-
-    keys = ("subj_id", "pred", "obj_id")
-    old_sql = (
-        "SELECT subj_id, pred, obj_id, count(*) AS weight FROM triples"
-        " WHERE doc_id % 5 < 4 GROUP BY subj_id, pred, obj_id"
-    )
-    new_sql = (
-        "SELECT subj_id, pred, obj_id, count(*) AS weight FROM triples"
-        " GROUP BY subj_id, pred, obj_id"
-    )
-    return _PRELUDE + edge_diff_oracle_sql(
-        old_sql, new_sql, keys=keys, continuation=True
-    )
-
-
 def _doc_keywords_oracle() -> str:
     from easyner_spark.operators.ranking import doc_keywords_oracle_sql
 
     return doc_keywords_oracle_sql(k=5)
-
-
-def _assortativity_oracle() -> str:
-    from easyner_spark.operators.graph import degree_assortativity_oracle_sql
-
-    return degree_assortativity_oracle_sql(_cooc_pairs_cte())
 
 
 def _merge_cands_oracle() -> str:
@@ -6163,40 +5641,6 @@ WHERE strpos(text, t.term) > 0"""
         " text AS sentence FROM documents"
     )
     return kwic_oracle_sql(mentions_sql, sentences_sql, window=20)
-
-
-def _window_cooc_oracle() -> str:
-    from easyner_spark.operators.graph import window_cooc_oracle_sql
-
-    occ = (
-        "SELECT DISTINCT doc_id AS d, sent_idx AS s,"
-        " mention_lc AS t, begin_tok AS p FROM mentions"
-    )
-    return _PRELUDE + ",\nwcbase AS (" + occ + ")" + window_cooc_oracle_sql(
-        "SELECT * FROM wcbase", window=5
-    ).replace("WITH wco AS", ", wco AS", 1).lstrip("\n")
-
-
-def _harmonic_oracle() -> str:
-    from easyner_spark.operators.graph import harmonic_centrality_oracle_sql
-
-    prefix = _PRELUDE.replace("WITH sent0", "WITH RECURSIVE sent0", 1) + """
-, hc_edges AS (SELECT DISTINCT subj_id AS a, obj_id AS b FROM triples
-               WHERE subj_id <> obj_id),
-hc_sym AS (SELECT a, b FROM hc_edges UNION SELECT b, a FROM hc_edges),
-hc_nodes AS (SELECT DISTINCT a AS node FROM hc_sym),
-hc_walk(source, node, dist) AS (
-  SELECT node, node, 0 FROM hc_nodes
-  UNION
-  SELECT w.source, e.b, w.dist + 1
-  FROM hc_walk w JOIN hc_sym e ON w.node = e.a
-  WHERE w.dist < 2
-),
-hcw AS (
-  SELECT source, node, min(dist)::BIGINT AS dist
-  FROM hc_walk GROUP BY source, node
-)"""
-    return harmonic_centrality_oracle_sql(prefix, k=2)
 
 
 _PRONOUN_TOKS_CTE = """
@@ -6445,10 +5889,6 @@ def oracle_sql() -> dict[str, str]:
     from easyner_spark.operators.nel import (
         fs_em_linkage_oracle_sql,
         name_similarity_oracle_sql,
-    )
-    from easyner_spark.operators.graph import (
-        isa_closure_oracle_sql,
-        ppr_oracle_sql,
     )
     from easyner_spark.operators.triples import (
         entity_types_oracle_sql,
@@ -6729,16 +6169,6 @@ FROM d CROSS JOIN t
         "predicate_triples": _predicate_triples_oracle(),
         "entity_types": entity_types_oracle_sql(
             _predicate_triples_oracle(as_prefix=True), TYPE_RULES
-        ),
-        "isa_closure": isa_closure_oracle_sql(
-            """WITH RECURSIVE e AS (
-  SELECT 'n' || doc_id AS child, 'n' || (doc_id // 2) AS parent
-  FROM documents WHERE doc_id >= 1
-  UNION ALL
-  SELECT 'n' || doc_id, 'n' || (doc_id // 3)
-  FROM documents WHERE doc_id % 5 = 0 AND doc_id >= 3
-)""",
-            max_depth=16,
         ),
         **_dedup_oracles(),
         **_similarity_oracles(),
@@ -7185,109 +6615,22 @@ walk(source, node, dist) AS (
 SELECT source, node, min(dist)::BIGINT AS dist
 FROM walk GROUP BY source, node
 """,
-        # PMI over sentence-level entity co-occurrence: counts cast to
-        # double BEFORE arithmetic (exact), one libm ln() per output,
-        # round(6) — mirrors operators/graph.edge_pmi op-for-op
-        "kg_pmi": _PRELUDE
-        + """
-, occ AS (SELECT DISTINCT doc_id, sent_idx, mention_lc AS term FROM mentions),
-ns AS (SELECT count(*)::DOUBLE AS n_sents
-       FROM (SELECT DISTINCT doc_id, sent_idx FROM occ)),
-marg AS (SELECT term, count(*) AS cnt FROM occ GROUP BY term),
-prs AS (
-  SELECT x.term AS a, y.term AS b, count(*) AS pair_cnt
-  FROM occ x JOIN occ y
-    ON x.doc_id = y.doc_id AND x.sent_idx = y.sent_idx AND x.term < y.term
-  GROUP BY x.term, y.term
-)
-SELECT p.a, p.b, p.pair_cnt::BIGINT AS pair_cnt,
-       ma.cnt::BIGINT AS cnt_a, mb.cnt::BIGINT AS cnt_b,
-       round(ln((p.pair_cnt::DOUBLE * ns.n_sents)
-                / (ma.cnt::DOUBLE * mb.cnt::DOUBLE)), 6) AS pmi,
-       round(ln((p.pair_cnt::DOUBLE * ns.n_sents)
-                / (ma.cnt::DOUBLE * mb.cnt::DOUBLE))
-             / -ln(p.pair_cnt::DOUBLE / ns.n_sents), 6) AS npmi
-FROM prs p
-JOIN marg ma ON p.a = ma.term
-JOIN marg mb ON p.b = mb.term
-CROSS JOIN ns
-""",
         # Unrolled 3-iteration PageRank; per-iteration round(·, 9) is
         # the cross-engine state contract (operators/graph.pagerank)
         "kg_pagerank": _PRELUDE + _pagerank_oracle_body(),
-        "kg_ppr": ppr_oracle_sql(
-            _PRELUDE
-            + """,
-e AS (SELECT DISTINCT subj_id AS src, obj_id AS dst FROM triples)""",
-            seeds=("KB:01", "KB:03"),
-            iters=3,
-        ),
-        # Canonical-ordering wedge join, integer-exact
-        "kg_triangles": _PRELUDE
-        + """
-, occ AS (SELECT DISTINCT doc_id, sent_idx, mention_lc AS term FROM mentions),
-pr AS (
-  SELECT DISTINCT x.term AS a, y.term AS b
-  FROM occ x JOIN occ y
-    ON x.doc_id = y.doc_id AND x.sent_idx = y.sent_idx AND x.term < y.term
-),
-tri AS (
-  SELECT w1.a, w1.b, w2.b AS c
-  FROM pr w1
-  JOIN pr w2 ON w1.a = w2.a AND w1.b < w2.b
-  JOIN pr e ON e.a = w1.b AND e.b = w2.b
-),
-corners AS (
-  SELECT node, count(*) AS triangles FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri)
-  GROUP BY node
-),
-alln AS (SELECT a AS node FROM pr UNION SELECT b FROM pr)
-SELECT alln.node, coalesce(corners.triangles, 0)::BIGINT AS triangles
-FROM alln LEFT JOIN corners ON alln.node = corners.node
-""",
-        # Fixed-iteration neighbor-majority label propagation; unrolled
-        # CTE mirrors operators/graph.label_propagation's determinism
-        # contract (ties -> smallest label)
-        "kg_communities": _PRELUDE + _lpa_oracle_body(),
-        # Wedge/quantize/anti-join body generated NEXT TO the operator
-        # (graph.link_prediction_oracle_sql); pr = the same canonical
-        # co-occurrence pair CTE kg_triangles uses
-        "kg_link_predict": _link_predict_oracle(),
-        # 8 unrolled peeling rounds (graph.k_core_oracle_sql), same
-        # pr CTE; capped-round contract matches the engine bit-for-bit
+        # 8 unrolled peeling rounds (graph.k_core_oracle_sql) over the
+        # canonical co-occurrence pair CTE; capped-round contract
+        # matches the engine bit-for-bit
         "kg_kcore": _kcore_oracle(),
-        # Wedge-join triangles + degree rollup -> exact-integer ratio
-        # (graph.clustering_coeff_oracle_sql over the shared pr CTE)
-        "kg_clustering": _clustering_oracle(),
-        # LPA chain re-aliased as lab(node, community), then the
-        # per-community exact-integer q_term decomposition
-        # (graph.modularity_oracle_sql)
-        "kg_modularity": _modularity_oracle(),
-        # Full-outer epoch diff over support-weighted triple edges
-        # (graph.edge_diff_oracle_sql, continuation after _PRELUDE)
-        "kg_snapshot_diff": _snapshot_diff_oracle(),
         # Smoothed-idf TF-IDF with a per-doc rank window
         # (ranking.doc_keywords_oracle_sql on the raw documents table)
         "doc_keywords": _doc_keywords_oracle(),
-        # Exact-BIGINT Pearson sums over the shared pr CTE
-        # (graph.degree_assortativity_oracle_sql)
-        "kg_assortativity": _assortativity_oracle(),
         # Two-key blocked self-join + levenshtein verify over the
         # noisy-label synthesis (nel.edit_merge_candidates_oracle_sql)
         "entity_merge_cands": _merge_cands_oracle(),
         # strpos-located first occurrences + pure substr windows
         # (search.kwic_oracle_sql)
         "kwic": _kwic_oracle(),
-        # Banded self-join on (doc, sent) positions
-        # (graph.window_cooc_oracle_sql over the mentions CTE)
-        "kg_window_cooc": _window_cooc_oracle(),
-        # k_hop's recursive min-dist walk -> per-distance integer
-        # counts -> fixed-order reciprocal fold
-        # (graph.harmonic_centrality_oracle_sql)
-        "kg_harmonic": _harmonic_oracle(),
         # Banded doc-join + max(struct) nearest-antecedent rollup
         # (triples.pronoun_links_oracle_sql over the injected stream)
         "pronoun_links": _pronoun_links_oracle(),
@@ -7300,8 +6643,6 @@ FROM alln LEFT JOIN corners ON alln.node = corners.node
         # N^2-scaled integer kappa (evaluate.cohens_kappa_oracle_sql)
         "kappa": _kappa_oracle(),
         "heavy_hitters": _cms_oracle(),
-        # Unrolled WL rounds over the shared pr CTE (graph.wl_labels_oracle_sql)
-        "kg_wl_labels": _wl_oracle(),
         "pack_sequences": _pack_oracle(),
         "kg_edge_history": _PRELUDE
         + """
@@ -7339,8 +6680,6 @@ FROM c CROSS JOIN t
         # Per-entity epoch burst detection
         # (analysis.entity_bursts_oracle_sql over the mentions prelude)
         "entity_bursts": _entity_bursts_oracle(),
-        # Filtered-LCWA negative sampling (graph.kg_negatives_oracle_sql)
-        "kg_negatives": _kg_negatives_oracle(),
         # AMIE-style horn-rule mining over the designed 31-entity
         # rule KG (triples.mine_rules_oracle_sql)
         "kg_rules": _kg_rules_oracle(),
@@ -7399,11 +6738,6 @@ FROM c CROSS JOIN t
         "kg_shapes": _kg_shapes_oracle(),
         # Epoch distribution drift (sketches.histogram_drift_oracle_sql)
         "length_drift": _length_drift_oracle(),
-        # Deterministic DeepWalk corpus (graph.kg_random_walks_oracle_sql)
-        "kg_random_walks": _kg_random_walks_oracle(),
-        # Skip-gram pairs over the walk corpus
-        # (graph.walk_skipgrams_oracle_sql wrapping the walks oracle)
-        "walk_skipgrams": _walk_skipgrams_oracle(),
         # Degree-distribution quantiles of the closed KG
         # (sketches.exact_quantiles_oracle_sql over the degree table)
         "kg_degree_stats": _kg_degree_stats_oracle(),
@@ -7413,11 +6747,6 @@ FROM c CROSS JOIN t
         # Declared-constraint contradiction table
         # (triples.functional_violations_oracle_sql over _KG_FUNC_SQL)
         "kg_violations": _kg_violations_oracle(),
-        # Filtered KG link-prediction ranking + rollup
-        # (graph.ranking_eval_oracle_sql over gold + kg_negatives
-        # candidates, md5-32 micro-unit scores)
-        "kg_rank_eval": _kg_rank_oracle(summary=False),
-        "kg_rank_summary": _kg_rank_oracle(summary=True),
         "containment": _containment_oracle(),
         "readability": _readability_oracle(),
         # Evidence sentences per edge: the shared prelude's triples +
@@ -7519,7 +6848,6 @@ FROM cst s JOIN cng n
         "geo": _geo_oracle(),
         "copula_isa": _copula_isa_oracle(),
         "apposition": _apposition_oracle(),
-        "mined_taxonomy": _mined_taxonomy_oracle(),
         "host_langs": host_lang_mix_oracle_sql(
             "SELECT 'h' || (doc_id % 7) AS host, lang_pred AS lang"
             f" FROM ({langid_sql})"
@@ -7551,9 +6879,6 @@ GROUP BY e.subj_id, e.pred, e.obj_id
         # Per-language exact quantiles
         # (sketches.grouped_quantiles_oracle_sql)
         "lang_quantiles": _lang_quantiles_oracle(),
-        # Personalized PageRank seed expansion
-        # (graph.personalized_pagerank_oracle_sql)
-        "seed_expansion": _seed_expansion_oracle(),
         # Distant-supervision NER examples over the mentions prelude
         # (ner_dict.ner_examples_oracle_sql)
         "ner_examples": _ner_examples_oracle(),

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -70,6 +71,21 @@ def _load_alias(spark: SparkSession, path: str | None) -> DataFrame:
     )
 
 
+def _materialize(spark: SparkSession, table, df_fn, resume: bool) -> tuple[DataFrame, int]:
+    """Write `df_fn()` as `table`'s next snapshot; return the snapshot
+    read back and its row count. The count rides the write as an
+    Observation, so the stage's plan runs once. Only a resumed stage,
+    whose snapshot already exists, is counted by a scan."""
+    snap = table.current_snapshot()
+    if resume and snap is not None:
+        print(f"[skip] {os.path.basename(table.path)}: snapshot {snap} exists")
+        df = table.read(spark)
+        return df, df.count()
+    rows = Observation()
+    table.overwrite(df_fn().observe(rows, F.count(F.lit(1)).alias("n")))
+    return table.read(spark), rows.get["n"]
+
+
 def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
     """Run the enabled stages; returns {stage: row_count}."""
     from easyner_spark.operators.analysis import entity_frequency
@@ -96,16 +112,6 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
         "nodes": ["node"],
     }
     tables = {n: SnapshotTable(f"{out_dir}/{n}", k) for n, k in keys.items()}
-
-    def materialize(name: str, df_fn) -> DataFrame | None:
-        t = tables[name]
-        if resume and t.current_snapshot() is not None:
-            print(f"[skip] {name}: snapshot {t.current_snapshot()} exists")
-            return t.read(spark)
-        df = df_fn()
-        t.overwrite(df)
-        return t.read(spark)
-
     counts: dict[str, int] = {}
     inp = cfg["input"]
     if "pubmed_xml_path" in inp:
@@ -149,22 +155,23 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
 
     sents = None
     if modules["splitter"]:
-        sents = materialize(
-            "sentences", lambda: split_sentences(pages, lang_filter=cfg.get("lang", "en"))
+        sents, counts["sentences"] = _materialize(
+            spark, tables["sentences"],
+            lambda: split_sentences(pages, lang_filter=cfg.get("lang", "en")), resume,
         )
-        counts["sentences"] = sents.count()
 
     ments = None
     if modules["ner"] and sents is not None:
         terms = _load_terms(cfg.get("dictionary_path"))
-        ments = materialize("mentions", lambda: dict_ner(sents, terms))
-        counts["mentions"] = ments.count()
+        ments, counts["mentions"] = _materialize(
+            spark, tables["mentions"], lambda: dict_ner(sents, terms), resume
+        )
 
     if modules["analysis"] and ments is not None:
-        freq = materialize(
-            "frequency", lambda: entity_frequency(ments, mention_col="mention_lc")
+        freq, counts["frequency"] = _materialize(
+            spark, tables["frequency"],
+            lambda: entity_frequency(ments, mention_col="mention_lc"), resume,
         )
-        counts["frequency"] = freq.count()
         if modules.get("chart"):
             from easyner_spark.sinks.chart import write_barchart_svg
 
@@ -187,13 +194,14 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
             from easyner_spark.operators.nel import disambiguate_mentions
 
             key = ["url", "sent_idx", "begin_tok", "end_tok", "mention_lc"]
-            linked = materialize(
-                "linked",
+            linked, counts["linked"] = _materialize(
+                spark, tables["linked"],
                 lambda: disambiguate_mentions(ments, sents, raw_alias)
                 .drop("n_cands", "score")
                 # reattach the char spans downstream triple extraction
                 # keys on (the disambiguator works in token space)
                 .join(ments.select(*key, "begin", "end"), key),
+                resume,
             )
         elif cfg.get("fuzzy_nel"):
             # second-pass canonicalization: surface forms the exact
@@ -207,29 +215,32 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
             from easyner_spark.operators.nel import fuzzy_canonicalize_mentions
 
             thr = float(cfg.get("fuzzy_threshold", 0.6))
-            linked = materialize(
-                "linked",
+            linked, counts["linked"] = _materialize(
+                spark, tables["linked"],
                 lambda: fuzzy_canonicalize_mentions(ments, raw_alias, threshold=thr),
+                resume,
             )
         else:
-            linked = materialize(
-                "linked", lambda: link_entities(ments, alias, keep_unmatched=False)
+            linked, counts["linked"] = _materialize(
+                spark, tables["linked"],
+                lambda: link_entities(ments, alias, keep_unmatched=False), resume,
             )
-        counts["linked"] = linked.count()
 
     edges = None
     if modules["triples"] and linked is not None:
-        edges = materialize("edges", lambda: aggregate_edges(extract_triples(linked)))
-        counts["edges"] = edges.count()
+        edges, counts["edges"] = _materialize(
+            spark, tables["edges"],
+            lambda: aggregate_edges(extract_triples(linked)), resume,
+        )
 
     if modules["components"] and edges is not None:
-        nodes = materialize(
-            "nodes",
+        _, counts["nodes"] = _materialize(
+            spark, tables["nodes"],
             lambda: connected_components(
                 edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
             ),
+            resume,
         )
-        counts["nodes"] = nodes.count()
 
     # standing queries: fold each registered pattern set against the
     # fresh edge snapshot (epoch = the snapshot id, so alerts line up
@@ -298,14 +309,6 @@ def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
         "corpus": SnapshotTable(f"{out_dir}/corpus", ["url"]),
     }
 
-    def materialize(name: str, df_fn) -> DataFrame:
-        t = tables[name]
-        if resume and t.current_snapshot() is not None:
-            print(f"[skip] {name}: snapshot {t.current_snapshot()} exists")
-            return t.read(spark)
-        t.overwrite(df_fn())
-        return t.read(spark)
-
     pages = spark.read.parquet(cfg["input"]["pages_path"])
     cols = pages.columns
     text_col = "text"
@@ -326,8 +329,7 @@ def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
             flagged = latest_crawl(flagged)
         return flagged.where(F.col("gopher_keep")).select("url", F.col(text_col).alias("text"))
 
-    gated = materialize("gated", gated_df)
-    counts["gated"] = gated.count()
+    gated, counts["gated"] = _materialize(spark, tables["gated"], gated_df, resume)
 
     def corpus_df() -> DataFrame:
         df = gated
@@ -379,8 +381,7 @@ def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
             df = deterministic_sample(df, rate=rate, key="url", seed=str(cur.get("seed", "")))
         return df
 
-    corpus = materialize("corpus", corpus_df)
-    counts["corpus"] = corpus.count()
+    _, counts["corpus"] = _materialize(spark, tables["corpus"], corpus_df, resume)
     return counts
 
 

@@ -353,9 +353,9 @@ def word_repetition(
 
     Contract (oracle-mirrored): words = lowercased `\\w+`; n-grams are
     space-joined consecutive windows; the top gram is the (count DESC,
-    gram ASC) argmin — `min(struct(-cnt, gram))`, same determinism
-    trick as graph.label_propagation; `top_ngram_frac = cnt *
-    (length(gram) - (n-1)) / sum(word lengths)` (the subtraction
+    gram ASC) argmin — `min(struct(-cnt, gram))`, the same
+    first-per-key trick as dedup.paragraph_dedup; `top_ngram_frac =
+    cnt * (length(gram) - (n-1)) / sum(word lengths)` (the subtraction
     removes the joining spaces, so the numerator is exactly the
     characters the gram's occurrences cover). Documents with fewer
     than n words emit ('', 0, 0.0) and pass the gate.

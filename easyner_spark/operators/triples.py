@@ -1901,9 +1901,8 @@ def copula_isa(
     text_col: str = "sentence",
 ) -> DataFrame:
     """Copula is-a mining: 'a transformer is a model' -> (child,
-    parent, n_docs) hypernym candidates — the web-mined feeder for
-    graph.isa_closure's taxonomy (closure over MINED edges instead of
-    a curated ontology). Single hyphenatable alphanumeric terms ('covid-19') by documented contract
+    parent, n_docs) hypernym candidates — web-mined taxonomy edges
+    instead of a curated ontology. Single hyphenatable alphanumeric terms ('covid-19') by documented contract
     (multi-word NPs need a chunker; this is the zero-dependency tier);
     per-doc dedup before the support rollup so a repeated template
     sentence counts once per document.

@@ -1,8 +1,8 @@
 """sampling.global_rank — the distributed escape hatch for global
 rank/cumsum over key-cardinality frames (VERDICT r3 watch-item):
 value parity across strategies, the no-SinglePartition plan contract,
-and the auto threshold switch, plus the three rewired call sites
-(host_skew_profile, apportion_budget, kg_negatives)."""
+and the auto threshold switch, plus the two rewired call sites
+(host_skew_profile, apportion_budget)."""
 
 import random
 
@@ -99,15 +99,3 @@ class TestRewiredCallSites:
         d = apportion_budget(wts, budget=9_999, rank_strategy="distributed")
         assert w.orderBy("host").collect() == d.orderBy("host").collect()
         assert d.groupBy().sum("quota").collect()[0][0] == 9_999
-
-    def test_kg_negatives_distributed_parity(self, spark):
-        from easyner_spark.operators.graph import kg_negatives
-
-        rows = [(f"s{i%7}", "rel", f"o{i%13}") for i in range(60)]
-        t = spark.createDataFrame(rows, "subj string, pred string, obj string")
-        w = kg_negatives(t, k=2, rank_strategy="window")
-        d = kg_negatives(t, k=2, rank_strategy="distributed")
-        key = ["subj", "pred", "slot", "obj_neg"]
-        assert sorted(map(tuple, w.select(*key).collect())) == sorted(
-            map(tuple, d.select(*key).collect())
-        )

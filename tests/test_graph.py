@@ -1,18 +1,11 @@
-"""KG graph-analytics operators: PMI edge weights, fixed-iteration
-PageRank, triangle counts — each checked against an independent
-pure-Python computation (the DuckDB value oracles ride in
-__spark_entry__.oracle_sql)."""
-
-import math
+"""KG graph-analytics operators: sentence co-occurrence pairs,
+fixed-iteration PageRank, k-hop reachability and k-core peeling —
+each checked against an independent pure-Python computation or the
+DuckDB twin."""
 
 import pytest
 
-from easyner_spark.operators.graph import (
-    edge_pmi,
-    pagerank,
-    sentence_pairs,
-    triangle_counts,
-)
+from easyner_spark.operators.graph import pagerank, sentence_pairs
 
 
 @pytest.fixture(scope="module")
@@ -33,17 +26,6 @@ def test_sentence_pairs_counts(mentions_df):
     got = {(r["a"], r["b"]): r["pair_cnt"] for r in sentence_pairs(mentions_df).collect()}
     # duplicate (u1,0,x) must not double-count the (x,y) pair
     assert got == {("x", "y"): 2, ("x", "z"): 2, ("y", "z"): 2}
-
-
-def test_edge_pmi_values(mentions_df):
-    out = {(r["a"], r["b"]): r for r in edge_pmi(mentions_df).collect()}
-    # N = 4 sentences; marginals: x=3, y=3, z=3; every pair count = 2
-    for key in [("x", "y"), ("x", "z"), ("y", "z")]:
-        r = out[key]
-        assert (r["pair_cnt"], r["cnt_a"], r["cnt_b"]) == (2, 3, 3)
-        pmi = math.log((2.0 * 4.0) / (3.0 * 3.0))
-        assert r["pmi"] == round(pmi, 6)
-        assert r["npmi"] == round(pmi / -math.log(2.0 / 4.0), 6)
 
 
 def _py_pagerank(edges, iters=3, d=0.85, state_round=9):
@@ -83,24 +65,6 @@ def test_pagerank_floor_for_no_inedge_node(spark):
     got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
     assert got["solo"] == round(round((1.0 - 0.85) / 3.0, 9), 6)
     assert got == _py_pagerank([("solo", "hub"), ("hub", "x"), ("x", "hub")])
-
-
-def test_triangles_k4_and_pendant(spark):
-    # K4 on {1,2,3,4}: every node is in C(3,2)=3 triangles; node 5
-    # hangs off node 1 with none. Direction/self-loops must not matter.
-    edges = [(a, b) for a in range(1, 5) for b in range(1, 5) if a != b]
-    edges += [(5, 1), (1, 5), (2, 2)]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 0}
-
-
-def test_triangles_triangle_free(spark):
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "src int, dst int"
-    )
-    got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
-    assert got == {1: 0, 2: 0, 3: 0, 4: 0}
 
 
 class TestKHop:
@@ -145,63 +109,6 @@ class TestKHop:
         assert got[("a", "c")] == 1
         # (source, node) pairs are unique — no duplicate rows
         assert len(got) == 9
-
-
-class TestLinkPrediction:
-    EDGES = [(1, 2), (1, 3), (2, 3), (2, 4)]
-
-    def _und(self, spark):
-        return spark.createDataFrame(self.EDGES, "src long, dst long")
-
-    def test_hand_computed_wedges(self, spark):
-        """Degrees 1:2 2:3 3:2 4:1. Non-edge pairs with a common
-        neighbor: (1,4) and (3,4), both via node 2 only, so
-        common=1 and aa_q6 = floor(1e6/ln 3) = 910239 for each."""
-        from easyner_spark.operators.graph import link_prediction
-
-        got = {
-            (r.a, r.b): (r.common, r.aa_q6)
-            for r in link_prediction(self._und(spark)).collect()
-        }
-        assert got == {(1, 4): (1, 910239), (3, 4): (1, 910239)}
-
-    def test_max_degree_drops_hub_centers(self, spark):
-        """max_degree=2 removes node 2 (deg 3) as a wedge center; the
-        surviving centers only generate wedges over existing edges, so
-        nothing is predicted."""
-        from easyner_spark.operators.graph import link_prediction
-
-        assert link_prediction(self._und(spark), max_degree=2).count() == 0
-
-    def test_direction_and_duplicate_insensitive(self, spark):
-        """Reversed/duplicated input rows canonicalize away: identical
-        predictions."""
-        from easyner_spark.operators.graph import link_prediction
-
-        noisy = spark.createDataFrame(
-            self.EDGES + [(b, a) for a, b in self.EDGES] + self.EDGES,
-            "src long, dst long",
-        )
-        base = sorted(map(tuple, link_prediction(self._und(spark)).collect()))
-        got = sorted(map(tuple, link_prediction(noisy).collect()))
-        assert got == base
-
-    def test_duckdb_oracle_parity(self, spark):
-        """Module-local oracle generator reproduces the operator on a
-        literal pair CTE — same generator the driver consumes."""
-        import duckdb
-
-        from easyner_spark.operators.graph import (
-            link_prediction,
-            link_prediction_oracle_sql,
-        )
-
-        got = sorted(map(tuple, link_prediction(self._und(spark)).collect()))
-        sql = link_prediction_oracle_sql(
-            "WITH pr AS (SELECT * FROM (VALUES (1, 2), (1, 3), (2, 3), (2, 4)) t(a, b))"
-        )
-        want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
-        assert got == want
 
 
 class TestKCore:
@@ -261,42 +168,3 @@ class TestKCore:
         r8 = sorted(map(tuple, k_core(und, k=2, max_rounds=8).collect()))
         r9 = sorted(map(tuple, k_core(und, k=2, max_rounds=9).collect()))
         assert r8 == r9 and len(r8) > 0
-
-
-class TestWLLabels:
-    def _lbl(self, spark, edges, iters=2):
-        from easyner_spark.operators.graph import wl_labels
-
-        df = spark.createDataFrame(edges, "src string, dst string")
-        return {r.node: r.wl_label for r in wl_labels(df, iters=iters).collect()}
-
-    def test_path_equivalence_classes(self, spark):
-        """Path a-b-c-d-e: color refinement separates {a,e} (ends),
-        {b,d} (inner), {c} (center) — mirror-symmetric nodes share a
-        label, distinct roles never do."""
-        got = self._lbl(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")])
-        assert got["a"] == got["e"] and got["b"] == got["d"]
-        assert len({got["a"], got["b"], got["c"]}) == 3
-
-    def test_vertex_transitive_graph_single_color(self, spark):
-        got = self._lbl(spark, [("x", "y"), ("y", "z"), ("x", "z")])
-        assert len(set(got.values())) == 1
-
-    def test_iters_zero_is_degree(self, spark):
-        got = self._lbl(spark, [("a", "b"), ("b", "c")], iters=0)
-        assert got == {"a": "1", "b": "2", "c": "1"}
-
-    def test_duckdb_oracle_parity(self, spark):
-        import duckdb
-
-        from easyner_spark.operators.graph import wl_labels, wl_labels_oracle_sql
-
-        edges = [(1, 2), (2, 3), (3, 4), (4, 5), (2, 4)]
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = sorted(map(tuple, wl_labels(df, iters=2).collect()))
-        vals = ", ".join(f"({a}, {b})" for a, b in edges)
-        sql = wl_labels_oracle_sql(
-            f"WITH pr AS (SELECT * FROM (VALUES {vals}) t(a, b))", iters=2
-        )
-        want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
-        assert got == want

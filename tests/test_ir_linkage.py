@@ -1,9 +1,8 @@
-"""TF-IDF keywords, degree assortativity, and edit-distance merge
-candidates — closed-form hand values under the round(·, 6) contract."""
+"""TF-IDF keywords and edit-distance merge candidates — closed-form
+hand values under the round(·, 6) contract."""
 
 import math
 
-from easyner_spark.operators.graph import degree_assortativity
 from easyner_spark.operators.nel import edit_merge_candidates
 from easyner_spark.operators.ranking import doc_keywords
 
@@ -27,25 +26,6 @@ def test_doc_keywords(spark):
     # deterministic tie-break: doc 2 has two df-matched... spark/trino
     # tf equal but idf differs (trino df=1 beats spark df=2)
     assert out[(2, "trino")].rank == 1 and out[(2, "spark")].rank == 2
-
-
-def test_degree_assortativity_star(spark):
-    # a star is maximally disassortative: r = -1
-    e = spark.createDataFrame(
-        [("h", "a"), ("h", "b"), ("h", "c")], ["src", "dst"]
-    )
-    row = degree_assortativity(e).collect()[0]
-    assert row.m2 == 6  # 3 undirected edges, both orientations
-    assert row.r == -1.0
-
-
-def test_degree_assortativity_regular(spark):
-    # a cycle is degree-regular: zero variance -> r defined as 0.0
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"]
-    )
-    row = degree_assortativity(e).collect()[0]
-    assert row.r == 0.0 and row.sum_xx * row.m2 == row.sum_x**2
 
 
 def test_edit_merge_candidates(spark):

@@ -1,5 +1,5 @@
 """KG profiling operators: predicate cardinality classes, per-doc
-entity salience, entity types and the is-a closure."""
+entity salience and entity types."""
 
 from easyner_spark.operators.analysis import entity_salience
 from easyner_spark.operators.triples import predicate_cardinality
@@ -119,36 +119,3 @@ def test_entity_types_votes_and_ties(spark):
     assert got["both"]["ent_type"] == "aaa_type"
     # disZ: no matching rule at all -> absent
     assert "disZ" not in got
-
-
-def test_isa_closure_chain_and_dag(spark):
-    from easyner_spark.operators.graph import isa_closure
-
-    edges = spark.createDataFrame(
-        # chain a->b->c->d plus shortcut a->c (min depth must win)
-        [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c")],
-        "child string, parent string",
-    )
-    got = {(r["node"], r["anc"]): r["depth"] for r in isa_closure(edges, max_depth=8).collect()}
-    assert got[("a", "b")] == 1
-    assert got[("a", "c")] == 1  # shortcut beats a->b->c
-    assert got[("a", "d")] == 2  # via the shortcut, not 3 via b
-    assert got[("b", "d")] == 2
-    assert got[("c", "d")] == 1
-    assert ("d", "a") not in got  # directed
-
-
-def test_isa_closure_depth_cap_and_cycle(spark):
-    from easyner_spark.operators.graph import isa_closure
-
-    chain = [(f"v{i}", f"v{i+1}") for i in range(6)]  # v0..v6 depth up to 6
-    edges = spark.createDataFrame(
-        chain + [("x", "y"), ("y", "x")],  # 2-cycle garbage
-        "child string, parent string",
-    )
-    got = {(r["node"], r["anc"]): r["depth"] for r in isa_closure(edges, max_depth=3).collect()}
-    assert got[("v0", "v3")] == 3
-    assert ("v0", "v4") not in got  # beyond cap
-    # cycle: each sees the other at depth 1, never itself
-    assert got[("x", "y")] == 1 and got[("y", "x")] == 1
-    assert ("x", "x") not in got and ("y", "y") not in got

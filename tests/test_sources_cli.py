@@ -242,6 +242,94 @@ class TestCli:
         skipped = capsys.readouterr().out.count("[skip]")
         assert skipped == 6
 
+    def test_fresh_run_counts_ride_the_writes(self, spark, pages_df, tmp_path, monkeypatch):
+        """A fresh (resume=False) kg or curate run takes every stage's
+        row count from its snapshot write: the CLI calls no
+        DataFrame.count, and the counts equal the snapshot rows."""
+        import sys
+
+        from easyner_spark.cli import run_curation, run_pipeline
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+
+        df_cls = type(spark.range(1))
+        orig = df_cls.count
+        cli_counts = []
+
+        def spy(self):
+            if sys._getframe(1).f_globals.get("__name__") == "easyner_spark.cli":
+                cli_counts.append(self)
+            return orig(self)
+
+        pages_path = str(tmp_path / "pages.parquet")
+        pages_df.write.parquet(pages_path)
+        out = str(tmp_path / "out")
+        monkeypatch.setattr(df_cls, "count", spy)
+        counts = run_pipeline(
+            spark, {"input": {"pages_path": pages_path}, "output_dir": out, "resume": False}
+        )
+        counts.update(run_curation(spark, {
+            "input": {"pages_path": pages_path}, "output_dir": out, "resume": False,
+            "curation": {"gopher": {"min_words": 3, "min_stop_hits": 0}},
+        }))
+        monkeypatch.undo()
+        assert cli_counts == []
+        assert set(counts) == {"sentences", "mentions", "frequency", "linked",
+                               "edges", "nodes", "gated", "corpus"}
+        for name, n in counts.items():
+            assert SnapshotTable(f"{out}/{name}", []).read(spark).count() == n > 0, name
+
+    def test_killed_stage_resumes_to_identical_tables(self, spark, pages_df, tmp_path, monkeypatch):
+        """Kill the `linked` stage before its data is written, and
+        again after the write but before the pointer commit; a resumed
+        run then ends with the same edges/nodes rows and counts as a
+        clean run."""
+        import os
+
+        from easyner_spark.cli import run_pipeline
+        from easyner_spark.operators import nel
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+
+        pages_path = str(tmp_path / "pages.parquet")
+        pages_df.write.parquet(pages_path)
+
+        def table(out, name):
+            return SnapshotTable(f"{tmp_path / out}/{name}", [])
+
+        def rows(out, name):
+            return sorted(map(tuple, table(out, name).read(spark).collect()))
+
+        def cfg(out):
+            return {"input": {"pages_path": pages_path}, "output_dir": str(tmp_path / out)}
+
+        clean = run_pipeline(spark, cfg("clean"))
+
+        def raise_in_stage(*a, **kw):
+            raise RuntimeError("killed inside the linked stage")
+
+        orig_commit = SnapshotTable._commit
+
+        def raise_before_commit(self, snap, epoch=None):
+            if self.path.endswith("/linked"):
+                raise RuntimeError("killed before the linked pointer commit")
+            return orig_commit(self, snap, epoch)
+
+        faults = {
+            "before_write": (nel, "link_entities", raise_in_stage),
+            "before_commit": (SnapshotTable, "_commit", raise_before_commit),
+        }
+        for out, (owner, attr, fault) in faults.items():
+            with monkeypatch.context() as m:
+                m.setattr(owner, attr, fault)
+                with pytest.raises(RuntimeError, match="killed"):
+                    run_pipeline(spark, cfg(out))
+            linked = table(out, "linked")
+            assert linked.current_snapshot() is None
+            assert os.path.isdir(linked._snap_dir(1)) == (out == "before_commit")
+            assert table(out, "mentions").current_snapshot() == 1
+            assert run_pipeline(spark, cfg(out)) == clean, out
+            for name in ("edges", "nodes"):
+                assert rows(out, name) == rows("clean", name), (out, name)
+
     def test_disambiguate_nel_stage(self, spark, pages_df, tmp_path):
         from easyner_spark.cli import run_pipeline
 

@@ -26,7 +26,7 @@ UNREACHED_PUBLIC = {
     "operators.dedup": 27,
     "operators.evaluate": 6,
     "operators.events": 3,
-    "operators.graph": 41,
+    "operators.graph": 6,
     "operators.iob": 11,
     "operators.merger": 6,
     "operators.multimodal": 7,
@@ -81,3 +81,12 @@ def test_unreached_counts_match_recorded(report):
            for m in UNREACHED_PUBLIC.keys() | now.keys()
            if UNREACHED_PUBLIC.get(m) != now.get(m)}
     assert not off, f"unreached public defs (recorded, now): {off}"
+
+
+def test_driver_window_names_are_registry_keys():
+    """`_prioritize` skips a window name with no query, so a cut that
+    deletes a query must delete its window name too."""
+    import __spark_entry__ as e
+
+    missing = [n for n in e._DRIVER_WINDOW_FIRST if n not in e.queries()]
+    assert not missing, f"window names with no query: {missing}"

@@ -1,6 +1,6 @@
-"""Webtext URL/host operators + Gopher quality gate + label
-propagation: unit tests for the edge cases the sf0.01 oracle corpus
-never produces (malformed urls, all-symbol text, tie-broken labels)."""
+"""Webtext URL/host operators + Gopher quality gate: unit tests for
+the edge cases the sf0.01 oracle corpus never produces (malformed
+urls, all-symbol text)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -207,35 +207,6 @@ class TestWordRepetition:
         out = self._run(spark, ["b a b a b"])
         # "b a" x2 and "a b" x2 tie; smallest gram wins
         assert out[0]["top_gram"] == "a b"
-
-
-class TestLabelPropagation:
-    def _lpa(self, spark, edges, iters=3):
-        from easyner_spark.operators.graph import label_propagation
-
-        df = spark.createDataFrame(edges, "src string, dst string")
-        return {r["node"]: r["label"] for r in label_propagation(df, iters=iters).collect()}
-
-    def test_two_cliques_one_bridge(self, spark):
-        tri1 = [("a", "b"), ("b", "c"), ("a", "c")]
-        tri2 = [("x", "y"), ("y", "z"), ("x", "z")]
-        out = self._lpa(spark, tri1 + tri2 + [("c", "x")])
-        # each triangle converges to one internal label; the bridge
-        # does not merge them (unlike connected components, which
-        # would label all six nodes "a")
-        assert out["a"] == out["b"] == out["c"]
-        assert out["x"] == out["y"] == out["z"]
-        assert out["a"] != out["x"]
-
-    def test_tie_breaks_to_smallest_label(self, spark):
-        # node m has two neighbors with distinct labels, one vote each
-        out = self._lpa(spark, [("m", "q"), ("m", "p")], iters=1)
-        assert out["m"] == "p"
-
-    def test_self_loops_dropped_and_symmetric(self, spark):
-        out = self._lpa(spark, [("a", "a"), ("a", "b")], iters=2)
-        # self loop ignored: a<->b swap labels each sync round
-        assert out == {"a": "a", "b": "b"}
 
 
 class TestAnchorsAndDelta:

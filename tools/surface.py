@@ -40,6 +40,17 @@ KEEP = {
                                       "wire it in where measured or delete it",
         "host_skew_profile": "sizes salted_repartition_by_host's salt",
     },
+    "easyner_spark.operators.graph": {
+        "k_core_oracle_sql": "DuckDB twin of k_core, which core_numbers "
+                             "(kg.core_numbers) peels with",
+        "core_numbers_oracle_sql": "DuckDB twin of core_numbers (kg.core_numbers)",
+        "shortest_paths_oracle_sql": "DuckDB twin of shortest_paths "
+                                     "(kg.distances)",
+        "kg_paths_oracle_sql": "DuckDB twin of kg_paths (kg.paths)",
+        "ego_subgraph_oracle_sql": "DuckDB twin of ego_subgraph (kg.ego)",
+        "sentence_pairs": "builds the co-occurrence graph of q_kg_kcore and "
+                          "tests/test_graph.py's driver-scale k_core check",
+    },
 }
 
 
