@@ -157,40 +157,6 @@ def q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_predicate_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dependency-pattern predicate extraction (north_star): inject a
-    deterministic relation verb into the word soup (' slow ' -> ' inhibits ',
-    a token that genuinely occurs in the corpus)
-    so the lexicon path fires on real pairs, then run the char-gap
-    pattern rule; pairs with no verb between the spans keep the
-    co-occurrence fallback."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.ner_dict import dict_ner
-    from easyner_spark.operators.splitter import split_sentences
-    from easyner_spark.operators.triples import extract_predicate_triples
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.regexp_replace(
-            F.regexp_replace("text", " slow ", " inhibits "), " a ", ". "
-        ).alias("text"),
-        "lang",
-    )
-    sents = split_sentences(pages, lang_filter=None)
-    linked = link_entities(
-        dict_ner(sents, DICT), primary_alias(_alias_df(spark)), keep_unmatched=False
-    )
-    out = extract_predicate_triples(linked, sents)
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        "subj_id",
-        "pred",
-        "obj_id",
-    )
-
-
 def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easyner_spark.operators.nel import link_entities, primary_alias
     from easyner_spark.operators.triples import aggregate_edges, extract_triples
@@ -206,86 +172,6 @@ def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("support").cast("long").alias("support"),
         F.col("doc_count").cast("long").alias("doc_count"),
     )
-
-
-def q_fuse_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Knowledge fusion (TruthFinder/Sums-style iterative truth
-    discovery) over the real extraction output: each triple becomes a
-    claim attributed to a synthetic host bucket source = 'h'||(doc_id%7)
-    — the Common-Crawl many-hosts-assert-conflicting-facts shape. Three
-    trust iterations, per-step round(9) state so Spark and DuckDB walk
-    the identical float trajectory."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.triples import extract_triples, fuse_claims
-
-    linked = link_entities(
-        _mentions(spark, sf_dir), primary_alias(_alias_df(spark)), keep_unmatched=False
-    )
-    claims = extract_triples(linked).select(
-        F.concat(F.lit("h"), (F.col("url").cast("long") % 7).cast("string")).alias(
-            "source"
-        ),
-        "subj_id",
-        "pred",
-        "obj_id",
-    )
-    out = fuse_claims(claims, iters=3, state_round=9)
-    return out.select(
-        "subj_id",
-        "pred",
-        "obj_id",
-        F.col("n_sources").cast("long").alias("n_sources"),
-        F.col("confidence").cast("double").alias("confidence"),
-        "is_best",
-    )
-
-
-def q_predicate_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema induction over the KG edge table: per-predicate
-    functional-property profile (1:1 / 1:N / N:1 / N:M). Input edges =
-    the real co-occurrence triples (N:M by construction) UNION three
-    synthetic predicates engineered to land in each other cardinality
-    class (capital_of 1:1, has_part 1:N, in_country N:1) — the synth
-    axis exists because the extraction pipeline emits a single
-    predicate and the classifier's CASE arms all need coverage."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.triples import (
-        extract_triples,
-        predicate_cardinality,
-    )
-
-    linked = link_entities(
-        _mentions(spark, sf_dir), primary_alias(_alias_df(spark)), keep_unmatched=False
-    )
-    real = extract_triples(linked).select("subj_id", "pred", "obj_id")
-    d = F.col("doc_id").cast("string")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    synth = (
-        docs.select(
-            F.concat(F.lit("s"), d).alias("subj_id"),
-            F.lit("capital_of").alias("pred"),
-            F.concat(F.lit("o"), d).alias("obj_id"),
-        )
-        .unionByName(
-            docs.select(
-                F.concat(F.lit("s"), (F.col("doc_id") % 10).cast("string")).alias(
-                    "subj_id"
-                ),
-                F.lit("has_part").alias("pred"),
-                F.concat(F.lit("o"), d).alias("obj_id"),
-            )
-        )
-        .unionByName(
-            docs.select(
-                F.concat(F.lit("s"), d).alias("subj_id"),
-                F.lit("in_country").alias("pred"),
-                F.concat(F.lit("o"), (F.col("doc_id") % 10).cast("string")).alias(
-                    "obj_id"
-                ),
-            )
-        )
-    )
-    return predicate_cardinality(real.unionByName(synth).distinct())
 
 
 def q_entity_salience(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,32 +193,6 @@ def q_entity_salience(spark: SparkSession, sf_dir: str) -> DataFrame:
         "salience",
         F.col("rank").alias("sal_rank"),
     )
-
-
-# Predicate-signature typing rules shared verbatim by the Spark query
-# and the DuckDB oracle VALUES list (entity_types_oracle_sql inlines
-# this same object).
-TYPE_RULES = [
-    ("inhibits", "subj", "chemical", 2),
-    ("inhibits", "obj", "protein", 2),
-    ("co_occurs_with", "subj", "concept", 1),
-    ("co_occurs_with", "obj", "concept", 1),
-]
-
-
-def q_entity_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ontology-lite type induction: the predicate-pattern pipeline's
-    edges (inhibits + co_occurs_with fallback) vote types onto their
-    endpoints; argmax with type-asc ties. Composes the whole chain
-    extract -> link -> predicate triples -> typed nodes."""
-    from easyner_spark.operators.triples import entity_types
-
-    edges = (
-        q_predicate_triples(spark, sf_dir)
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
-    return entity_types(edges, TYPE_RULES)
 
 
 SEARCH_TERMS = ["hash", "sort table"]
@@ -647,104 +507,6 @@ def _pronoun_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_passive_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Passive-voice pattern triples with flipped roles (north_star
-    coverage): inject ' slow ' -> ' is inhibited by ' (a real corpus
-    token) so the passive rule
-    fires on real pairs; 'X is inhibited by Y' emits
-    (Y, inhibits, X) — the triple the order-based active rule gets
-    backward. Non-passive pairs emit nothing."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.ner_dict import dict_ner
-    from easyner_spark.operators.splitter import split_sentences
-    from easyner_spark.operators.triples import extract_passive_triples
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.regexp_replace(
-            F.regexp_replace("text", " slow ", " is inhibited by "), " a ", ". "
-        ).alias("text"),
-        "lang",
-    )
-    sents = split_sentences(pages, lang_filter=None)
-    linked = link_entities(
-        dict_ner(sents, DICT), primary_alias(_alias_df(spark)), keep_unmatched=False
-    )
-    out = extract_passive_triples(linked, sents)
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        "subj_id",
-        "pred",
-        "obj_id",
-    )
-
-
-def q_nominal_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nominalization pattern triples (north_star coverage): inject
-    ' slow ' -> ' inhibition of hash by ' so the phrase lands before a
-    real dictionary mention ('hash') and fires whenever the NEXT soup
-    token is also an entity; 'inhibition of X by Y' emits
-    (Y, inhibits, X) — a shape neither the active order rule (the
-    predicate precedes both entities) nor the passive rule covers.
-    First-span semantics apply: sentences where 'hash' already
-    occurred earlier keep the earlier span and emit nothing."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.ner_dict import dict_ner
-    from easyner_spark.operators.splitter import split_sentences
-    from easyner_spark.operators.triples import extract_nominal_triples
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.regexp_replace(
-            F.regexp_replace(
-                F.regexp_replace("text", " slow ", " inhibition of hash by "),
-                " big ",
-                " suppression of merge by ",
-            ),
-            " a ",
-            ". ",
-        ).alias("text"),
-        "lang",
-    )
-    sents = split_sentences(pages, lang_filter=None)
-    linked = link_entities(
-        dict_ner(sents, DICT), primary_alias(_alias_df(spark)), keep_unmatched=False
-    )
-    out = extract_nominal_triples(linked, sents)
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        "subj_id",
-        "pred",
-        "obj_id",
-    )
-
-
-def q_pronoun_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coreference-lite: injected pronouns linked to the nearest
-    preceding dictionary mention in the same sentence (lookback 0) —
-    the KG recall booster for 'it inhibits X' sentences the
-    dictionary path drops."""
-    from easyner_spark.operators.triples import pronoun_links
-
-    toks = _pronoun_tokens(spark, sf_dir)
-    ments = toks.where(F.col("tok").isin("hash", "scan")).select(
-        "doc_id", "sent_idx",
-        F.col("tok_idx").alias("begin_tok"),
-        (F.col("tok_idx") + 1).alias("end_tok"),
-        F.col("tok").alias("term"),
-    )
-    return pronoun_links(toks, ments, lookback=0).select(
-        "doc_id", "sent_idx", "tok_idx", "pronoun",
-        F.col("ant_sent").cast("long").alias("ant_sent"),
-        F.col("ant_tok").cast("long").alias("ant_tok"),
-        "antecedent",
-    )
-
-
 def q_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between the deterministic pred/gold token
     labelings (error_regions' rater pair) — chance-corrected
@@ -938,20 +700,6 @@ def q_tokenized_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("seq_id").cast("long").alias("seq_id"),
         F.col("seq_off").cast("long").alias("seq_off"),
     )
-
-
-def q_kg_edge_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-edge temporal lifecycle (first/last epoch, epoch count,
-    new/stale/active status vs the latest crawl epoch) -- the diff
-    view an incremental KG maintains per ingestion round. Epoch is
-    synthesized as doc_id % 5 (same recipe as latest_crawl's
-    synthetic recrawls); exact integers + string CASE only."""
-    from easyner_spark.operators.triples import edge_history
-
-    t = q_triples(spark, sf_dir).withColumn(
-        "epoch", (F.col("doc_id") % 5).cast("long")
-    )
-    return edge_history(t)
 
 
 CMS_CANDIDATES = ["join", "hash", "row", "batch", "scan", "zzznope"]
@@ -1217,15 +965,13 @@ def _kg_synth_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Richer closed synthetic KG for rule mining: 31-entity vocab, 7
-# predicates built as residue permutations x -> a*x+b (mod 31) so the
-# DISTINCT triple set is the same exact algebra at every sf >= 217
-# docs, with DESIGNED rule structure: employs = works_for^-1 (inv rule
-# conf 1.0), city_of = located_in gated on subj residue (imp rule one
-# direction 1.0, other 21/31), near an involution (symmetric inv
-# rule), and same_region = near o located_in gated on subj%5 (chain
-# rule std-conf 24/31 but PCA-conf 1.0 — the open-world case PCA
-# exists for). One definition per side (the _KG_EDGES_SQL pattern).
+# Richer closed synthetic KG (the "rule KG") behind the KG-facade
+# queries: 31-entity vocab, 7 predicates built as residue permutations
+# x -> a*x+b (mod 31) so the DISTINCT triple set is the same exact
+# algebra at every sf >= 217 docs, with designed structure: employs =
+# works_for^-1, city_of = located_in gated on subj residue, near an
+# involution, and same_region = near o located_in gated on subj%5. One
+# definition per side (the _KG_EDGES_SQL pattern).
 _KG_RULES_SQL = """SELECT DISTINCT
   'n' || (CASE WHEN doc_id % 7 = 1 THEN (doc_id * 3 + 2) % 31
                ELSE doc_id % 31 END) AS subj,
@@ -1288,27 +1034,6 @@ def _kg_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_kg_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMIE-style closed horn-rule mining (imp/inv/chain shapes with
-    support, std confidence, PCA confidence, head coverage — all
-    exact BIGINT micro-units) over the designed 31-entity rule KG."""
-    from easyner_spark.operators.triples import mine_rules
-
-    return mine_rules(_kg_rules_triples(spark, sf_dir), min_support=2)
-
-
-def q_kg_rule_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG completion: apply the mined rules (PCA confidence >= 0.7)
-    to derive missing triples with best-rule score + firing-rule
-    count — the AMIE prediction step, broadcast rules on bounded
-    predicate vocabulary."""
-    from easyner_spark.operators.triples import rule_predictions
-
-    return rule_predictions(
-        _kg_rules_triples(spark, sf_dir), min_support=2, min_pca_micro=700_000
-    )
-
-
 # Deterministic node-type table for the 31-entity rule KG: residue
 # mod 3 -> person/place/org; 'n7' left untyped to exercise the
 # unknown bucket. One definition per side.
@@ -1327,63 +1052,6 @@ def _kg_rules_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("id") % 3 == 1, F.lit("place"))
         .otherwise(F.lit("org"))
         .alias("ent_type"),
-    )
-
-
-def q_kg_pred_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate domain/range signature induction over the rule KG:
-    per (pred, subj_type, obj_type) exact counts, micro shares, and
-    the min(struct)-argmax dominant flag; 'n7' untyped to cover the
-    unknown bucket."""
-    from easyner_spark.operators.triples import predicate_signatures
-
-    return predicate_signatures(
-        _kg_rules_triples(spark, sf_dir), _kg_rules_types(spark, sf_dir)
-    )
-
-
-def q_kg_pred_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate synonym / inverse / symmetry detection over the
-    designed rule KG — employs=works_for^-1 scores inverse containment
-    1.0, 'near' scores as an involution, city_of surfaces as a
-    located_in subset; exact BIGINT micro-unit Jaccard + both
-    containments."""
-    from easyner_spark.operators.triples import predicate_equivalences
-
-    return predicate_equivalences(_kg_rules_triples(spark, sf_dir))
-
-
-# Sparser node-type table for type inference: only residues with
-# range % 4 != 0 are typed, so n0, n4, ..., n28 (8 entities) are the
-# inference targets. One definition per side.
-_KG_SPARSE_TYPES_SQL = """SELECT 'n' || range AS entity_id,
-  CASE range % 3 WHEN 0 THEN 'person' WHEN 1 THEN 'place'
-       ELSE 'org' END AS ent_type
-  FROM range(0, 31) WHERE range % 4 != 0"""
-
-
-def _kg_sparse_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(entity_id, ent_type) twin of _KG_SPARSE_TYPES_SQL."""
-    r = spark.range(31).where(F.col("id") % 4 != 0)
-    return r.select(
-        F.concat(F.lit("n"), F.col("id").cast("string")).alias("entity_id"),
-        F.when(F.col("id") % 3 == 0, F.lit("person"))
-        .when(F.col("id") % 3 == 1, F.lit("place"))
-        .otherwise(F.lit("org"))
-        .alias("ent_type"),
-    )
-
-
-def q_kg_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signature-vote type propagation: the 8 untyped rule-KG
-    entities inherit exact BIGINT vote shares from the typed
-    participants of their predicates (subject votes from domain
-    counts, object votes from range counts), argmax flagged via the
-    min(struct) rule."""
-    from easyner_spark.operators.triples import infer_entity_types
-
-    return infer_entity_types(
-        _kg_rules_triples(spark, sf_dir), _kg_sparse_types(spark, sf_dir)
     )
 
 
@@ -1489,35 +1157,6 @@ def _length_drift_oracle() -> str:
     return histogram_drift_oracle_sql(ha, hb)
 
 
-# Declared SHACL-lite shapes for the rule KG. One definition per side.
-_KG_SHAPES_SQL = """SELECT * FROM (VALUES
-  ('works_for', 'person', 'org', 2),
-  ('located_in', '', 'place', 0),
-  ('near', 'place', 'place', 3)) AS s(pred, domain_type, range_type, max_out)"""
-
-_KG_SHAPES_ROWS = [
-    ("works_for", "person", "org", 2),
-    ("located_in", "", "place", 0),
-    ("near", "place", "place", 3),
-]
-
-
-def q_kg_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SHACL-lite validation of the rule KG against declared
-    domain/range/max-out shapes — the residue type table guarantees
-    deterministic violations of all three kinds; n7 stays untyped and
-    is correctly never flagged."""
-    from easyner_spark.operators.triples import validate_shapes
-
-    shapes = spark.createDataFrame(
-        _KG_SHAPES_ROWS,
-        "pred string, domain_type string, range_type string, max_out long",
-    )
-    return validate_shapes(
-        _kg_rules_triples(spark, sf_dir), _kg_rules_types(spark, sf_dir), shapes
-    )
-
-
 # N-Triples fixture: ids that exercise IRI percent-encoding (space,
 # angle brackets, pipe, quote). One definition per side.
 _NT_SRC_SQL = """SELECT
@@ -1549,40 +1188,6 @@ def q_kg_ntriples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit('o"'), (did % 13).cast("string")).alias("obj"),
     )
     return to_ntriples(t)
-
-
-# Predicate provenance fixture: 4 multi-host predicates + one
-# single-source spam predicate. One definition per side.
-_PRED_SUPPORT_SQL = """SELECT
-  CASE doc_id % 5 WHEN 0 THEN 'treats' WHEN 1 THEN 'inhibits'
-       WHEN 2 THEN 'binds' WHEN 3 THEN 'activates'
-       ELSE 'spamlink' END AS pred,
-  CASE WHEN doc_id % 5 = 4 THEN 'farm.biz'
-       ELSE 'h' || (doc_id % 7) END AS host
-  FROM documents"""
-
-
-def q_pred_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate source-diversity QA: exact per-predicate fact and
-    distinct-source counts, dominant source share, single-source
-    tripwire (the 'spamlink' predicate trips it by construction)."""
-    from easyner_spark.operators.triples import predicate_support_profile
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    m = did % 5
-    t = d.select(
-        F.when(m == 0, F.lit("treats"))
-        .when(m == 1, F.lit("inhibits"))
-        .when(m == 2, F.lit("binds"))
-        .when(m == 3, F.lit("activates"))
-        .otherwise(F.lit("spamlink"))
-        .alias("pred"),
-        F.when(m == 4, F.lit("farm.biz"))
-        .otherwise(F.concat(F.lit("h"), (did % 7).cast("string")))
-        .alias("host"),
-    )
-    return predicate_support_profile(t)
 
 
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1960,106 +1565,6 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_pairs(d.unionByName(portals), k=5)
 
 
-def q_edge_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evidence sentences per KG edge over the real extraction chain
-    (split -> dict NER -> NEL -> triples): up to 3 deterministic
-    lexicographic-min (url, sent_idx) examples per edge, sentence text
-    joined in AFTER the k-filter on the uniform sentence key."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.triples import edge_evidence, extract_triples
-
-    linked = link_entities(
-        _mentions(spark, sf_dir), primary_alias(_alias_df(spark)),
-        keep_unmatched=False,
-    )
-    tri = extract_triples(linked)
-    out = edge_evidence(tri, _sentences(spark, sf_dir), k=3)
-    return out.select(
-        "subj_id", "pred", "obj_id", "evidence_rank",
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        "sentence",
-    )
-
-
-def q_edge_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-text temporal qualifiers over the real extraction chain:
-    every 3rd sentence gets a deterministic ISO date appended, so
-    edges collect first/last event dates and a temporal-support
-    ratio; undated edges keep NULLs."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.triples import edge_temporal, extract_triples
-
-    linked = link_entities(
-        _mentions(spark, sf_dir), primary_alias(_alias_df(spark)),
-        keep_unmatched=False,
-    )
-    tri = extract_triples(linked)
-    sents = _sentences(spark, sf_dir).select(
-        "url",
-        "sent_idx",
-        F.when(
-            F.col("sent_idx") % 3 == 0,
-            F.concat(
-                F.col("sentence"),
-                F.lit(" dated 2020-01-"),
-                F.lpad(((F.col("sent_idx") % 28) + 1).cast("string"), 2, "0"),
-            ),
-        ).otherwise(F.col("sentence")).alias("sentence"),
-    )
-    return edge_temporal(tri, sents)
-
-
-def q_edge_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Negation QA over the real extraction chain: every 4th sentence
-    gets a negation cue injected, so edges carry exact negated-vs-
-    total evidence counts for the confidence downgrade."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.triples import edge_negation, extract_triples
-
-    linked = link_entities(
-        _mentions(spark, sf_dir), primary_alias(_alias_df(spark)),
-        keep_unmatched=False,
-    )
-    tri = extract_triples(linked)
-    sents = _sentences(spark, sf_dir).select(
-        "url",
-        "sent_idx",
-        F.when(
-            F.col("sent_idx") % 4 == 0,
-            F.concat(F.col("sentence"), F.lit(" but not confirmed")),
-        ).otherwise(F.col("sentence")).alias("sentence"),
-    )
-    return edge_negation(tri, sents)
-
-
-def q_edge_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed edge confidence over the real chain with the same
-    every-4th-sentence negation injection: non-negated share x
-    doc-diversity clamp in exact micro-units — the rankable edge
-    table the KG ships."""
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.triples import (
-        edge_confidence,
-        extract_triples,
-    )
-
-    linked = link_entities(
-        _mentions(spark, sf_dir), primary_alias(_alias_df(spark)),
-        keep_unmatched=False,
-    )
-    tri = extract_triples(linked)
-    sents = _sentences(spark, sf_dir).select(
-        "url",
-        "sent_idx",
-        F.when(
-            F.col("sent_idx") % 4 == 0,
-            F.concat(F.col("sentence"), F.lit(" but not confirmed")),
-        ).otherwise(F.col("sentence")).alias("sentence"),
-    )
-    return edge_confidence(tri, sents, doc_clamp=5)
-
-
 def q_acronyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Acronym-definition mining over injected definitions: 12
     deterministic 3-word org names with matching acronyms (initials
@@ -2091,68 +1596,6 @@ def q_acronyms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit("")),
     )
     return acronym_pairs(d.select("doc_id", text.alias("text")))
-
-
-def q_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quote attribution over injected attributed quotes: every doc
-    one 'said' quote from a rotating 2-word speaker, every 3rd doc a
-    second 'says' quote — speakers lowercased, order pinned by
-    quote_idx, the trailing sentence never spliced into the name."""
-    from easyner_spark.operators.triples import quote_attributions
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    name = F.element_at(
-        F.array(F.lit("Ada Wong"), F.lit("Bo Chen"), F.lit("Cy Day"),
-                F.lit("Di Eko")),
-        (did % 4 + 1).cast("int"),
-    )
-    text = F.concat(
-        F.col("text"),
-        F.lit(' "Claim number '),
-        did.cast("string"),
-        F.lit(' holds in every test we ran," said '),
-        name,
-        F.lit(". More prose."),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit(' "We will keep verifying the results" says '),
-                name,
-                F.lit("."),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    return quote_attributions(d.select("doc_id", text.alias("text")))
-
-
-def q_numeric_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numeric-fact extraction over injected measurements: every doc
-    one integer kg fact + one decimal percent; every 4th doc a
-    %-shorthand (normalized to 'percent') and a '5kgs' trap the unit
-    boundary must reject."""
-    from easyner_spark.operators.triples import numeric_facts
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    text = F.concat(
-        F.col("text"),
-        F.lit(" The sample weighs "),
-        (did % 90 + 10).cast("string"),
-        F.lit(" kg at "),
-        (did % 80 + 10).cast("string"),
-        F.lit("."),
-        (did % 10).cast("string"),
-        F.lit(" percent purity."),
-        F.when(
-            did % 4 == 0,
-            F.concat(
-                F.lit(" Up "), (did % 30).cast("string"),
-                F.lit("% from 5kgs baseline."),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    return numeric_facts(d.select("doc_id", text.alias("text")))
 
 
 def q_ntriples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2227,83 +1670,6 @@ def q_contacts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit("")),
     )
     return contact_facts(d.select("doc_id", text.alias("text")))
-
-
-def q_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coordinate extraction over injected geo lines: a valid lat/lon
-    per doc (lat from doc_id % 170 - 85, lon from doc_id % 350 - 175)
-    plus an out-of-range version-number pair every 3rd doc that the
-    plausibility gate drops."""
-    from easyner_spark.operators.triples import geo_facts
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    lat = (did % 170 - 85).cast("string")
-    lon = (did % 350 - 175).cast("string")
-    text = F.concat(
-        F.col("text"),
-        F.lit(" Located at "), lat, F.lit("."),
-        (did % 9000 + 1000).cast("string"),
-        F.lit(", "), lon, F.lit("."),
-        (did % 900 + 100).cast("string"),
-        F.lit(" on the map."),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit(" Release 99."), (did % 10).cast("string"),
-                F.lit(", 999."), (did % 10).cast("string"), F.lit(" shipped."),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    return geo_facts(d.select("doc_id", text.alias("text")))
-
-
-def q_copula_isa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Copula is-a mining over injected hypernym sentences: 25 child
-    terms mapping onto 9 parents (doc_id residues), plus the real
-    document text riding along as noise the pattern never matches —
-    multi-doc support counts per (child, parent)."""
-    from easyner_spark.operators.triples import copula_isa
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    k = (did % 25).cast("string")
-    p = F.expr("(doc_id % 25) div 3").cast("string")
-    sents = d.select(
-        did.cast("string").alias("url"),
-        F.concat(
-            F.col("text"),
-            F.lit(" A kind"), k, F.lit(" is a type"), p, F.lit(" indeed."),
-        ).alias("sentence"),
-    )
-    return copula_isa(sents)
-
-
-def q_apposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Appositive role mining over injected 'Name<k>, the <role>
-    of/at Org<g>' sentences riding on real document text as noise —
-    the NP-carried relation family the verb lexicon can't extract;
-    multi-doc support per (subj, role, obj)."""
-    from easyner_spark.operators.triples import apposition_facts
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    role = F.element_at(
-        F.array(F.lit("ceo"), F.lit("director"), F.lit("founder")),
-        (did % 3 + 1).cast("int"),
-    )
-    conn = F.when(did % 2 == 0, F.lit("of")).otherwise(F.lit("at"))
-    sents = d.select(
-        did.cast("string").alias("url"),
-        F.concat(
-            F.col("text"),
-            F.lit(" Note that Alice"), (did % 21).cast("string"),
-            F.lit(", the "), role, F.lit(" "), conn,
-            F.lit(" Acme"), (did % 7).cast("string"),
-            F.lit(", spoke."),
-        ).alias("sentence"),
-    )
-    return apposition_facts(sents)
 
 
 def q_host_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2759,8 +2125,8 @@ def q_paragraph_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Double-encoding artifact detection. The synthetic corpus is
-    clean ASCII, so deterministic corruption is injected first (the
-    q_predicate_triples recipe): docs with doc_id%3==0 get ' a ' ->
+    clean ASCII, so deterministic corruption is injected first: docs
+    with doc_id%3==0 get ' a ' ->
     ' \u00c3\u00a1 ' (the UTF-8-as-Latin-1 shape), docs with
     doc_id%7==0 get a smart-quote artifact suffix — both mirrored
     verbatim in the oracle SQL."""
@@ -3754,10 +3120,6 @@ def q_kg_metapath(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Affiliation KG for PathSim: 40 persons across 7 companies of UNEQUAL
-# size (p works_for c(p%7); every 5th person moonlights at c((p+3)%7))
-# with employs as the exact inverse — off-diagonal peer pairs exist and
-# double-affiliation persons get larger diagonals. One def per side.
 _KG_AFFIL_SQL = """WITH affil_p AS (
   SELECT DISTINCT doc_id % 40 AS x FROM documents
 )
@@ -3828,57 +3190,6 @@ def _kg_ego_oracle() -> str:
     prefix = f"""WITH RECURSIVE kgrE AS ({_KG_RULES_SQL}),
 egoE AS (SELECT DISTINCT subj AS a, obj AS b FROM kgrE WHERE subj <> obj)"""
     return ego_subgraph_oracle_sql(prefix, ("n0", "n5"), k=2)
-
-
-# Epoch-stamped functional-conflict fixture: 10 subjects x 4 objects
-# across 3 epochs, predicate split by parity. One definition per side.
-_TFV_SQL = """SELECT 's' || (doc_id % 10) AS subj,
-  CASE WHEN doc_id % 2 = 0 THEN 'capital_of' ELSE 'id_of' END AS pred,
-  'o' || (doc_id % 4) AS obj,
-  doc_id % 3 AS epoch
-  FROM documents"""
-
-
-def _tfv_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(subj, pred, obj, epoch) twin of _TFV_SQL."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    return d.select(
-        F.concat(F.lit("s"), (did % 10).cast("string")).alias("subj"),
-        F.when(did % 2 == 0, F.lit("capital_of"))
-        .otherwise(F.lit("id_of"))
-        .alias("pred"),
-        F.concat(F.lit("o"), (did % 4).cast("string")).alias("obj"),
-        (did % 3).alias("epoch"),
-    )
-
-
-def q_kg_temporal_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-epoch functional conflicts: capital_of (functional) and
-    id_of (inverse-functional) violations WITHIN each crawl epoch —
-    the extraction-error feed an incremental-KG ingest reviews, as
-    opposed to cross-epoch change (edge_history's status)."""
-    from easyner_spark.operators.triples import (
-        temporal_functional_violations,
-    )
-
-    return temporal_functional_violations(
-        _tfv_triples(spark, sf_dir),
-        [("capital_of", "functional"), ("id_of", "inverse_functional")],
-    )
-
-
-def _kg_temporal_conflicts_oracle() -> str:
-    """q_kg_temporal_conflicts oracle: the epoch-stamped synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.triples import (
-        temporal_functional_violations_oracle_sql,
-    )
-
-    return temporal_functional_violations_oracle_sql(
-        _TFV_SQL,
-        [("capital_of", "functional"), ("id_of", "inverse_functional")],
-    )
 
 
 def q_kg_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4096,14 +3407,12 @@ _DRIVER_WINDOW_FIRST = [
     # close the external ledger; the driver checks the FIRST 50) ---
     "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk", "dsir_weights",
     "dsir_sample", "semdedup", "kappa", "kg_kcore", "heavy_hitters",
-    "kg_edge_history", "pack_sequences", "length_quantiles", "bpe_merges",
+    "pack_sequences", "length_quantiles", "bpe_merges",
     "bpe_token_counts", "bpe_encode", "tokenized_pack", "entity_bursts",
     "kg_degree_stats", "kg_pattern", "kg_violations", "containment",
     # --- remaining never-driver-verified (orders the tail so any
     # wider driver window keeps covering unchecked queries first) ---
-    "readability", "edge_evidence", "edge_temporal", "edge_negation",
-    "edge_confidence", "acronyms", "quotes", "numeric_facts", "ntriples",
-    "entity_labels", "contacts", "geo", "copula_isa", "apposition",
+    "readability", "acronyms", "ntriples", "entity_labels", "contacts",
     "host_langs", "compaction_plan", "lang_quantiles", "ner_examples",
     "eval_split", "kg_node_profile",
     "latest_crawl", "quality_sample", "crawl_delta", "name_match",
@@ -4133,12 +3442,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_entities": q_link_entities,
         "disambiguate": q_disambiguate,
         "triples": q_triples,
-        "predicate_triples": q_predicate_triples,
         "edges": q_edges,
-        "fuse_claims": q_fuse_claims,
-        "predicate_cardinality": q_predicate_cardinality,
         "entity_salience": q_entity_salience,
-        "entity_types": q_entity_types,
         "search_sentences": q_search_sentences,
         "search_mentions": q_search_mentions,
         "doc_offsets": q_doc_offsets,
@@ -4155,13 +3460,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_keywords": q_doc_keywords,
         "entity_merge_cands": q_entity_merge_cands,
         "kwic": q_kwic,
-        "pronoun_links": q_pronoun_links,
-        "passive_triples": q_passive_triples,
-        "nominal_triples": q_nominal_triples,
         "kappa": q_kappa,
         "kg_kcore": q_kg_kcore,
         "heavy_hitters": q_heavy_hitters,
-        "kg_edge_history": q_kg_edge_history,
         "pack_sequences": q_pack_sequences,
         "length_quantiles": q_length_quantiles,
         "bpe_merges": q_bpe_merges,
@@ -4170,11 +3471,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tokenized_pack": q_tokenized_pack,
         "host_skew": q_host_skew,
         "entity_bursts": q_entity_bursts,
-        "kg_rules": q_kg_rules,
-        "kg_rule_preds": q_kg_rule_preds,
-        "kg_pred_signatures": q_kg_pred_signatures,
-        "kg_pred_equiv": q_kg_pred_equiv,
-        "kg_type_infer": q_kg_type_infer,
         "kg_shortest_paths": q_kg_shortest_paths,
         "kg_paths": q_kg_paths_2hop,
         "kg_schema_graph": q_kg_schema_graph,
@@ -4195,7 +3491,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "blocking_quality": q_blocking_quality,
         "bcubed_quality": q_bcubed,
         "kg_ego": q_kg_ego,
-        "kg_temporal_conflicts": q_kg_temporal_conflicts,
         "kg_core_numbers": q_kg_core_numbers,
         "kg_standing_query": q_kg_standing_query,
         "emb_drift": q_emb_drift,
@@ -4204,28 +3499,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kmv_set_ops": q_kmv_set_ops,
         "zorder_keys": q_zorder_keys,
         "entity_cards": q_entity_cards,
-        "pred_support": q_pred_support,
         "kg_ntriples": q_kg_ntriples,
-        "kg_shapes": q_kg_shapes,
         "length_drift": q_length_drift,
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pattern": q_kg_pattern,
         "kg_violations": q_kg_violations,
         "containment": q_containment,
         "readability": q_readability,
-        "edge_evidence": q_edge_evidence,
-        "edge_temporal": q_edge_temporal,
-        "edge_negation": q_edge_negation,
-        "edge_confidence": q_edge_confidence,
         "acronyms": q_acronyms,
-        "quotes": q_quotes,
-        "numeric_facts": q_numeric_facts,
         "ntriples": q_ntriples,
         "entity_labels": q_entity_labels,
         "contacts": q_contacts,
-        "geo": q_geo,
-        "copula_isa": q_copula_isa,
-        "apposition": q_apposition,
         "host_langs": q_host_langs,
         "compaction_plan": q_compaction_plan,
         "lang_quantiles": q_lang_quantiles,
@@ -4812,71 +4096,6 @@ WITH tok AS (
     return cms_oracle_sql(stream, cand)
 
 
-def _predicate_triples_oracle(as_prefix: bool = False) -> str:
-    """Oracle for the char-gap pattern rule, expressed on TOKEN indices:
-    the engine's mentions are token-aligned and the lexicon is
-    letters-only, so "first lexicon token in the char gap
-    (subj.end, obj.begin)" == "first lexicon token with tok_idx in
-    [subj.end_tok, obj.begin_tok)" — same hit, same order. The prelude
-    is rewritten with the same ' slow ' -> ' inhibits ' verb injection the
-    Spark query applies (before senticizing, same replace order).
-    `as_prefix=True` returns the chain WITHOUT a final SELECT, ending
-    in e(subj_id, pred, obj_id) DISTINCT — for composition into
-    downstream oracles (entity_types)."""
-    from easyner_spark.operators.triples import PRED_LEXICON
-
-    lex_values = ", ".join(
-        f"('{s}', '{c}')" for s, c in sorted(PRED_LEXICON.items())
-    )
-    prelude = _PRELUDE.replace(
-        "regexp_replace(text, ' a ', '. ', 'g')",
-        "regexp_replace(regexp_replace(text, ' slow ', ' inhibits ', 'g'), ' a ', '. ', 'g')",
-    )
-    return (
-        prelude
-        + f"""
-, f2 AS (
-  SELECT doc_id, sent_idx, entity_id, begin_tok, end_tok,
-         row_number() OVER (PARTITION BY doc_id, sent_idx
-                            ORDER BY begin_tok, end_tok, entity_id) AS ord
-  FROM firsts WHERE rn = 1
-),
-pp AS (
-  SELECT a.doc_id, a.sent_idx, a.entity_id AS subj_id, b.entity_id AS obj_id,
-         a.end_tok AS gb, b.begin_tok AS ge
-  FROM f2 a JOIN f2 b
-    ON a.doc_id = b.doc_id AND a.sent_idx = b.sent_idx AND a.ord < b.ord
-),
-lex(surface, canon) AS (VALUES {lex_values}),
-lex_toks AS (
-  SELECT t.doc_id, t.sent_idx, t.tok_idx, l.canon
-  FROM toks t JOIN lex l ON lower(t.tok) = l.surface
-),
-hit AS (
-  SELECT p.doc_id, p.sent_idx, p.subj_id, p.obj_id,
-         arg_min(h.canon, h.tok_idx) AS canon
-  FROM pp p
-  LEFT JOIN lex_toks h
-    ON h.doc_id = p.doc_id AND h.sent_idx = p.sent_idx
-   AND h.tok_idx >= p.gb AND h.tok_idx < p.ge
-  GROUP BY p.doc_id, p.sent_idx, p.subj_id, p.obj_id
-)"""
-        + (
-            """,
-e AS (
-  SELECT DISTINCT subj_id, coalesce(canon, 'co_occurs_with') AS pred, obj_id
-  FROM hit
-)"""
-            if as_prefix
-            else """
-SELECT doc_id, sent_idx::BIGINT AS sent_idx, subj_id,
-       coalesce(canon, 'co_occurs_with') AS pred, obj_id
-FROM hit
-"""
-        )
-    )
-
-
 _MEDIA_META_SQL = """
 WITH m AS (
   SELECT doc_id::VARCHAR AS media_id, 'image' AS kind, text,
@@ -4965,56 +4184,6 @@ def _readability_oracle() -> str:
     )
 
 
-def _apposition_oracle() -> str:
-    """q_apposition oracle: the injected-apposition synthesis through
-    the operator's module-local twin."""
-    from easyner_spark.operators.triples import apposition_facts_oracle_sql
-
-    sentences_sql = """
-SELECT doc_id::VARCHAR AS url,
-  text || ' Note that Alice' || (doc_id % 21) || ', the '
-  || (CASE doc_id % 3 WHEN 0 THEN 'ceo' WHEN 1 THEN 'director'
-      ELSE 'founder' END)
-  || ' ' || (CASE WHEN doc_id % 2 = 0 THEN 'of' ELSE 'at' END)
-  || ' Acme' || (doc_id % 7) || ', spoke.' AS sentence
-FROM documents
-"""
-    return apposition_facts_oracle_sql(sentences_sql)
-
-
-def _copula_isa_oracle() -> str:
-    """q_copula_isa oracle: the injected-hypernym synthesis through
-    the operator's module-local twin."""
-    from easyner_spark.operators.triples import copula_isa_oracle_sql
-
-    sentences_sql = """
-SELECT doc_id::VARCHAR AS url,
-  text || ' A kind' || (doc_id % 25) || ' is a type'
-  || ((doc_id % 25) // 3) || ' indeed.' AS sentence
-FROM documents
-"""
-    return copula_isa_oracle_sql(sentences_sql)
-
-
-def _geo_oracle() -> str:
-    """q_geo oracle: the injected-coordinates synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.triples import geo_facts_oracle_sql
-
-    docs_sql = """
-SELECT doc_id AS id,
-  text || ' Located at ' || (doc_id % 170 - 85) || '.'
-  || (doc_id % 9000 + 1000) || ', ' || (doc_id % 350 - 175) || '.'
-  || (doc_id % 900 + 100) || ' on the map.'
-  || (CASE WHEN doc_id % 3 = 0
-      THEN ' Release 99.' || (doc_id % 10) || ', 999.' || (doc_id % 10)
-           || ' shipped.'
-      ELSE '' END) AS text
-FROM documents
-"""
-    return geo_facts_oracle_sql(docs_sql)
-
-
 def _contacts_oracle() -> str:
     """q_contacts oracle: the injected-imprint synthesis through the
     operator's module-local twin."""
@@ -5045,46 +4214,6 @@ def _ntriples_oracle() -> str:
         + " SELECT DISTINCT subj_id, pred, obj_id FROM triples)"
     )
     return to_ntriples_oracle_sql(edges_sql)
-
-
-def _numeric_facts_oracle() -> str:
-    """q_numeric_facts oracle: the injected-measurements synthesis
-    through the operator's module-local twin."""
-    from easyner_spark.operators.triples import numeric_facts_oracle_sql
-
-    docs_sql = """
-SELECT doc_id AS id,
-  text || ' The sample weighs ' || (doc_id % 90 + 10) || ' kg at '
-  || (doc_id % 80 + 10) || '.' || (doc_id % 10) || ' percent purity.'
-  || (CASE WHEN doc_id % 4 = 0
-      THEN ' Up ' || (doc_id % 30) || '% from 5kgs baseline.'
-      ELSE '' END) AS text
-FROM documents
-"""
-    return numeric_facts_oracle_sql(docs_sql)
-
-
-def _quotes_oracle() -> str:
-    """q_quotes oracle: the injected-quotes synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.triples import quote_attributions_oracle_sql
-
-    docs_sql = """
-SELECT doc_id AS id,
-  text || ' "Claim number ' || doc_id
-  || ' holds in every test we ran," said '
-  || (CASE (doc_id % 4) WHEN 0 THEN 'Ada Wong' WHEN 1 THEN 'Bo Chen'
-       WHEN 2 THEN 'Cy Day' ELSE 'Di Eko' END)
-  || '. More prose.'
-  || (CASE WHEN doc_id % 3 = 0
-      THEN ' "We will keep verifying the results" says '
-           || (CASE (doc_id % 4) WHEN 0 THEN 'Ada Wong'
-                WHEN 1 THEN 'Bo Chen' WHEN 2 THEN 'Cy Day'
-                ELSE 'Di Eko' END) || '.'
-      ELSE '' END) AS text
-FROM documents
-"""
-    return quote_attributions_oracle_sql(docs_sql)
 
 
 def _acronyms_oracle() -> str:
@@ -5267,48 +4396,6 @@ def _kg_degree_stats_oracle() -> str:
     return exact_quantiles_oracle_sql("deg", source=source)
 
 
-def _kg_rules_oracle() -> str:
-    """q_kg_rules oracle: the designed rule-KG synthesis fed to the
-    miner's module-local SQL twin."""
-    from easyner_spark.operators.triples import mine_rules_oracle_sql
-
-    return mine_rules_oracle_sql(_KG_RULES_SQL, min_support=2)
-
-
-def _kg_rule_preds_oracle() -> str:
-    """q_kg_rule_preds oracle: same synthesis through the prediction
-    twin (which composes the miner's oracle as a CTE)."""
-    from easyner_spark.operators.triples import rule_predictions_oracle_sql
-
-    return rule_predictions_oracle_sql(
-        _KG_RULES_SQL, min_support=2, min_pca_micro=700_000
-    )
-
-
-def _kg_pred_signatures_oracle() -> str:
-    """q_kg_pred_signatures oracle: rule-KG triples + the residue
-    type table through the operator's module-local twin."""
-    from easyner_spark.operators.triples import predicate_signatures_oracle_sql
-
-    return predicate_signatures_oracle_sql(_KG_RULES_SQL, _KG_TYPES_SQL)
-
-
-def _kg_pred_equiv_oracle() -> str:
-    """q_kg_pred_equiv oracle: rule-KG triples through the operator's
-    module-local pair-set overlap twin."""
-    from easyner_spark.operators.triples import predicate_equivalences_oracle_sql
-
-    return predicate_equivalences_oracle_sql(_KG_RULES_SQL)
-
-
-def _kg_type_infer_oracle() -> str:
-    """q_kg_type_infer oracle: rule-KG triples + the sparse type
-    table through the operator's module-local vote twin."""
-    from easyner_spark.operators.triples import infer_entity_types_oracle_sql
-
-    return infer_entity_types_oracle_sql(_KG_RULES_SQL, _KG_SPARSE_TYPES_SQL)
-
-
 def _kg_shortest_paths_oracle() -> str:
     """q_kg_shortest_paths oracle: the rule-KG edge set walked
     backwards from the landmarks by the operator's recursive twin."""
@@ -5444,16 +4531,6 @@ FROM bq_counts
 """
 
 
-def _kg_shapes_oracle() -> str:
-    """q_kg_shapes oracle: rule-KG triples + residue types + the
-    declared shapes through the operator's module-local twin."""
-    from easyner_spark.operators.triples import validate_shapes_oracle_sql
-
-    return validate_shapes_oracle_sql(
-        _KG_RULES_SQL, _KG_TYPES_SQL, _KG_SHAPES_SQL
-    )
-
-
 def _kg_ntriples_oracle() -> str:
     """q_kg_ntriples oracle: the escape-exercising synthesis through
     the sink's module-local twin (escape chains generated from the
@@ -5461,16 +4538,6 @@ def _kg_ntriples_oracle() -> str:
     from easyner_spark.sinks.rdf import to_ntriples_oracle_sql
 
     return to_ntriples_oracle_sql(_NT_SRC_SQL)
-
-
-def _pred_support_oracle() -> str:
-    """q_pred_support oracle: the provenance synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.triples import (
-        predicate_support_profile_oracle_sql,
-    )
-
-    return predicate_support_profile_oracle_sql(_PRED_SUPPORT_SQL)
 
 
 def _entity_cards_oracle() -> str:
@@ -5658,18 +4725,6 @@ plt0 AS (
 )"""
 
 
-def _pronoun_links_oracle() -> str:
-    from easyner_spark.operators.triples import pronoun_links_oracle_sql
-
-    return _PRONOUN_TOKS_CTE + pronoun_links_oracle_sql(
-        "SELECT doc_id, sent_idx, tok_idx, tok FROM plt0",
-        "SELECT doc_id, sent_idx, tok_idx AS begin_tok,"
-        " tok_idx + 1 AS end_tok, tok AS term FROM plt0"
-        " WHERE tok IN ('hash', 'scan')",
-        lookback=0,
-    )
-
-
 def _kappa_oracle() -> str:
     from easyner_spark.operators.evaluate import cohens_kappa_oracle_sql
 
@@ -5684,114 +4739,6 @@ def _kappa_oracle() -> str:
         " ELSE 'O' END AS label FROM plt0"
     )
     return _PRONOUN_TOKS_CTE + cohens_kappa_oracle_sql(pred, gold)
-
-
-def _passive_triples_oracle() -> str:
-    """Passive rule on TOKEN indices: an (aux, participle, 'by')
-    lead from the leads CTE that spans the ENTIRE pair gap — aux at
-    gb, 'by' at ge - 1 (strict adjacency, ADVICE r3: the unanchored
-    range test also fired for non-adjacent pairs around the phrase),
-    output roles flipped. The engine's anchored trim-equals char
-    regex sees exactly these phrases because the injected pattern is
-    space-separated word-soup tokens."""
-    from easyner_spark.operators.triples import PASSIVE_AUX, PASSIVE_LEXICON
-
-    lex_values = ", ".join(
-        f"('{s_}', '{c}')" for s_, c in sorted(PASSIVE_LEXICON.items())
-    )
-    aux_list = ", ".join(f"'{a}'" for a in PASSIVE_AUX)
-    prelude = _PRELUDE.replace(
-        "regexp_replace(text, ' a ', '. ', 'g')",
-        "regexp_replace(regexp_replace(text, ' slow ', ' is inhibited by ',"
-        " 'g'), ' a ', '. ', 'g')",
-    )
-    return (
-        prelude
-        + f"""
-, pvf2 AS (
-  SELECT doc_id, sent_idx, entity_id, begin_tok, end_tok,
-         row_number() OVER (PARTITION BY doc_id, sent_idx
-                            ORDER BY begin_tok, end_tok, entity_id) AS ord
-  FROM firsts WHERE rn = 1
-),
-pvpp AS (
-  SELECT a.doc_id, a.sent_idx, a.entity_id AS first_id,
-         b.entity_id AS second_id, a.end_tok AS gb, b.begin_tok AS ge
-  FROM pvf2 a JOIN pvf2 b
-    ON a.doc_id = b.doc_id AND a.sent_idx = b.sent_idx AND a.ord < b.ord
-),
-pvlex(surface, canon) AS (VALUES {lex_values}),
-pvhits AS (
-  SELECT l.doc_id, l.sent_idx, l.tok_idx, x.canon
-  FROM leads l JOIN pvlex x ON lower(l.t1) = x.surface
-  WHERE lower(l.t0) IN ({aux_list}) AND lower(l.t2) = 'by'
-),
-pvhit AS (
-  SELECT p.doc_id, p.sent_idx, p.first_id, p.second_id,
-         arg_min(h.canon, h.tok_idx) AS canon
-  FROM pvpp p
-  JOIN pvhits h
-    ON h.doc_id = p.doc_id AND h.sent_idx = p.sent_idx
-   AND h.tok_idx = p.gb AND h.tok_idx + 3 = p.ge
-  GROUP BY p.doc_id, p.sent_idx, p.first_id, p.second_id
-)
-SELECT doc_id, sent_idx::BIGINT AS sent_idx, second_id AS subj_id,
-       canon AS pred, first_id AS obj_id
-FROM pvhit
-"""
-    )
-
-
-def _nominal_triples_oracle() -> str:
-    """Nominalization rule on TOKEN indices: a leads row at
-    A.begin_tok - 2 must carry (nominal-in-lexicon, 'of'), the token
-    at A.end_tok must be 'by' with B starting right after — the exact
-    token mirror of the engine's char contract (prefix ends with
-    '<nominal> of ', gap trim-equals 'by') on the single-space
-    word-soup corpus. Roles flipped: B is the subject."""
-    from easyner_spark.operators.triples import NOMINAL_LEXICON
-
-    lex_values = ", ".join(
-        f"('{s_}', '{c}')" for s_, c in sorted(NOMINAL_LEXICON.items())
-    )
-    prelude = _PRELUDE.replace(
-        "regexp_replace(text, ' a ', '. ', 'g')",
-        "regexp_replace(regexp_replace(regexp_replace(text, ' slow ',"
-        " ' inhibition of hash by ', 'g'), ' big ',"
-        " ' suppression of merge by ', 'g'), ' a ', '. ', 'g')",
-    )
-    return (
-        prelude
-        + f"""
-, nmf AS (
-  SELECT doc_id, sent_idx, entity_id, begin_tok, end_tok,
-         row_number() OVER (PARTITION BY doc_id, sent_idx
-                            ORDER BY begin_tok, end_tok, entity_id) AS ord
-  FROM firsts WHERE rn = 1
-),
-nmpp AS (
-  SELECT a.doc_id, a.sent_idx, a.entity_id AS first_id,
-         b.entity_id AS second_id,
-         a.begin_tok AS ab, a.end_tok AS ae, b.begin_tok AS bb
-  FROM nmf a JOIN nmf b
-    ON a.doc_id = b.doc_id AND a.sent_idx = b.sent_idx AND a.ord < b.ord
-),
-nmlex(surface, canon) AS (VALUES {lex_values}),
-nmhit AS (
-  SELECT p.doc_id, p.sent_idx, p.first_id, p.second_id, x.canon
-  FROM nmpp p
-  JOIN leads l1 ON l1.doc_id = p.doc_id AND l1.sent_idx = p.sent_idx
-               AND l1.tok_idx = p.ab - 2 AND lower(l1.t1) = 'of'
-  JOIN nmlex x ON lower(l1.t0) = x.surface
-  JOIN leads l2 ON l2.doc_id = p.doc_id AND l2.sent_idx = p.sent_idx
-               AND l2.tok_idx = p.ae AND lower(l2.t0) = 'by'
-  WHERE p.bb = p.ae + 1
-)
-SELECT doc_id, sent_idx::BIGINT AS sent_idx, second_id AS subj_id,
-       canon AS pred, first_id AS obj_id
-FROM nmhit
-"""
-    )
 
 
 def _pagerank_oracle_body(iters: int = 3) -> str:
@@ -5889,11 +4836,6 @@ def oracle_sql() -> dict[str, str]:
     from easyner_spark.operators.nel import (
         fs_em_linkage_oracle_sql,
         name_similarity_oracle_sql,
-    )
-    from easyner_spark.operators.triples import (
-        entity_types_oracle_sql,
-        fuse_claims_oracle_sql,
-        predicate_cardinality_oracle_sql,
     )
     from easyner_spark.operators.sampling import (
         quality_weighted_sample_oracle_sql,
@@ -6166,10 +5108,6 @@ SELECT d.seq::BIGINT AS seq_id,
        t.lp AS label_pred
 FROM d CROSS JOIN t
 """,
-        "predicate_triples": _predicate_triples_oracle(),
-        "entity_types": entity_types_oracle_sql(
-            _predicate_triples_oracle(as_prefix=True), TYPE_RULES
-        ),
         **_dedup_oracles(),
         **_similarity_oracles(),
     }
@@ -6288,36 +5226,6 @@ SELECT subj_id, pred, obj_id, count(*)::BIGINT AS support,
 FROM triples
 GROUP BY subj_id, pred, obj_id
 """,
-        # Truth discovery over host-attributed claims: with_prefix ends
-        # on claims(source, subj_id, pred, obj_id); the generator
-        # unrolls 3 trust iterations with round(9) state.
-        "fuse_claims": fuse_claims_oracle_sql(
-            _PRELUDE
-            + """,
-claims AS (
-  SELECT 'h' || (doc_id::BIGINT % 7)::VARCHAR AS source,
-         subj_id, pred, obj_id
-  FROM triples
-)""",
-            iters=3,
-            state_round=9,
-        ),
-        # Per-predicate cardinality profile: real co-occurrence edges
-        # UNION (dedup) the three synthetic single-class predicates —
-        # mirrors q_predicate_cardinality's .distinct() on the union
-        "predicate_cardinality": predicate_cardinality_oracle_sql(
-            _PRELUDE
-            + """,
-e AS (
-  SELECT DISTINCT subj_id, pred, obj_id FROM triples
-  UNION
-  SELECT 's' || doc_id, 'capital_of', 'o' || doc_id FROM documents
-  UNION
-  SELECT 's' || (doc_id % 10), 'has_part', 'o' || doc_id FROM documents
-  UNION
-  SELECT 's' || doc_id, 'in_country', 'o' || (doc_id % 10) FROM documents
-)"""
-        ),
         "entity_salience": entity_salience_oracle_sql(
             _PRELUDE
             + """,
@@ -6631,36 +5539,10 @@ FROM walk GROUP BY source, node
         # strpos-located first occurrences + pure substr windows
         # (search.kwic_oracle_sql)
         "kwic": _kwic_oracle(),
-        # Banded doc-join + max(struct) nearest-antecedent rollup
-        # (triples.pronoun_links_oracle_sql over the injected stream)
-        "pronoun_links": _pronoun_links_oracle(),
-        # Token-index mirror of the adjacent aux/participle/'by'
-        # phrase rule via the leads CTE, roles flipped
-        "passive_triples": _passive_triples_oracle(),
-        # Token-index mirror of the '<nominal> of A by B' prefix/gap
-        # rule via two leads joins, roles flipped
-        "nominal_triples": _nominal_triples_oracle(),
         # N^2-scaled integer kappa (evaluate.cohens_kappa_oracle_sql)
         "kappa": _kappa_oracle(),
         "heavy_hitters": _cms_oracle(),
         "pack_sequences": _pack_oracle(),
-        "kg_edge_history": _PRELUDE
-        + """
-, ep AS (SELECT subj_id, pred, obj_id, doc_id % 5 AS epoch FROM triples),
-g AS (
-  SELECT subj_id, pred, obj_id,
-         min(epoch)::BIGINT AS first_epoch, max(epoch)::BIGINT AS last_epoch,
-         count(DISTINCT epoch)::BIGINT AS n_epochs, count(*)::BIGINT AS support
-  FROM ep GROUP BY 1, 2, 3
-),
-mx AS (SELECT max(last_epoch) AS m FROM g)
-SELECT g.subj_id, g.pred, g.obj_id, g.first_epoch, g.last_epoch,
-       g.n_epochs, g.support,
-       CASE WHEN g.first_epoch = mx.m THEN 'new'
-            WHEN g.last_epoch < mx.m THEN 'stale'
-            ELSE 'active' END AS status
-FROM g CROSS JOIN mx
-""",
         # Host-skew profile: rank/share/cum_share + salt factor
         # (webtext.host_skew_profile, target_partition_rows=50)
         "host_skew": _URL_PAGES_CTE
@@ -6680,21 +5562,6 @@ FROM c CROSS JOIN t
         # Per-entity epoch burst detection
         # (analysis.entity_bursts_oracle_sql over the mentions prelude)
         "entity_bursts": _entity_bursts_oracle(),
-        # AMIE-style horn-rule mining over the designed 31-entity
-        # rule KG (triples.mine_rules_oracle_sql)
-        "kg_rules": _kg_rules_oracle(),
-        # Rule application / KG completion
-        # (triples.rule_predictions_oracle_sql)
-        "kg_rule_preds": _kg_rule_preds_oracle(),
-        # Predicate domain/range signatures
-        # (triples.predicate_signatures_oracle_sql)
-        "kg_pred_signatures": _kg_pred_signatures_oracle(),
-        # Predicate synonym/inverse/symmetry detection
-        # (triples.predicate_equivalences_oracle_sql)
-        "kg_pred_equiv": _kg_pred_equiv_oracle(),
-        # Signature-vote type propagation to untyped entities
-        # (triples.infer_entity_types_oracle_sql)
-        "kg_type_infer": _kg_type_infer_oracle(),
         "kg_shortest_paths": _kg_shortest_paths_oracle(),
         "kg_paths": _kg_paths_oracle(),
         "kg_schema_graph": _kg_schema_graph_oracle(),
@@ -6715,7 +5582,6 @@ FROM c CROSS JOIN t
         "blocking_quality": _blocking_quality_oracle(),
         "bcubed_quality": _bcubed_oracle(),
         "kg_ego": _kg_ego_oracle(),
-        "kg_temporal_conflicts": _kg_temporal_conflicts_oracle(),
         "kg_core_numbers": _kg_core_numbers_oracle(),
         "kg_standing_query": _kg_standing_query_oracle(),
         "emb_drift": _emb_drift_oracle(),
@@ -6729,13 +5595,8 @@ FROM c CROSS JOIN t
         "zorder_keys": _zorder_keys_oracle(),
         # Rarity-ranked entity cards (triples.entity_summaries_oracle_sql)
         "entity_cards": _entity_cards_oracle(),
-        # Predicate source-diversity QA
-        # (triples.predicate_support_profile_oracle_sql)
-        "pred_support": _pred_support_oracle(),
         # RDF N-Triples serialization (rdf.to_ntriples_oracle_sql)
         "kg_ntriples": _kg_ntriples_oracle(),
-        # SHACL-lite shape validation (triples.validate_shapes_oracle_sql)
-        "kg_shapes": _kg_shapes_oracle(),
         # Epoch distribution drift (sketches.histogram_drift_oracle_sql)
         "length_drift": _length_drift_oracle(),
         # Degree-distribution quantiles of the closed KG
@@ -6749,131 +5610,17 @@ FROM c CROSS JOIN t
         "kg_violations": _kg_violations_oracle(),
         "containment": _containment_oracle(),
         "readability": _readability_oracle(),
-        # Evidence sentences per edge: the shared prelude's triples +
-        # sentences CTEs through the edge_evidence twin's shape; the
-        # rank ORDER BY casts doc_id to VARCHAR because the Spark side
-        # orders by the string url ("10" < "2")
-        "edge_evidence": _PRELUDE
-        + """,
-eev AS (SELECT DISTINCT subj_id, pred, obj_id, doc_id, sent_idx FROM triples),
-erk AS (
-  SELECT subj_id, pred, obj_id, doc_id, sent_idx,
-    row_number() OVER (PARTITION BY subj_id, pred, obj_id
-                       ORDER BY doc_id::VARCHAR, sent_idx) AS evidence_rank
-  FROM eev
-)
-SELECT r.subj_id, r.pred, r.obj_id, r.evidence_rank::BIGINT AS evidence_rank,
-       r.doc_id, r.sent_idx::BIGINT AS sent_idx, s.sentence
-FROM erk r JOIN sentences s
-  ON r.doc_id = s.doc_id AND r.sent_idx = s.sent_idx
-WHERE r.evidence_rank <= 3
-""",
-        # In-text temporal qualifiers: same prelude, every 3rd
-        # sentence date-injected identically on both engines
-        "edge_temporal": _PRELUDE
-        + """,
-tsn AS (
-  SELECT doc_id, sent_idx,
-    CASE WHEN sent_idx % 3 = 0
-      THEN sentence || ' dated 2020-01-'
-           || lpad((sent_idx % 28 + 1)::VARCHAR, 2, '0')
-      ELSE sentence END AS sentence
-  FROM sentences
-),
-tev AS (SELECT DISTINCT subj_id, pred, obj_id, doc_id, sent_idx FROM triples),
-tdt AS (
-  SELECT doc_id, sent_idx,
-    coalesce(
-      nullif(regexp_extract(sentence,
-        '\\b(19|20)\\d{2}-\\d{2}-\\d{2}\\b', 0), ''),
-      nullif(regexp_extract(sentence, '\\b(19|20)\\d{2}\\b', 0), ''))
-      AS qdate
-  FROM tsn
-)
-SELECT e.subj_id, e.pred, e.obj_id,
-       min(d.qdate) AS first_date, max(d.qdate) AS last_date,
-       count(d.qdate)::BIGINT AS n_dated, count(*)::BIGINT AS n_evidence
-FROM tev e LEFT JOIN tdt d
-  ON e.doc_id = d.doc_id AND e.sent_idx = d.sent_idx
-GROUP BY e.subj_id, e.pred, e.obj_id
-""",
-        # Composed confidence: negation rollup (same injection) +
-        # support/doc-diversity rollup, micro-unit formula
-        "edge_confidence": _PRELUDE
-        + r""",
-csn AS (
-  SELECT doc_id, sent_idx,
-    CASE WHEN sent_idx % 4 = 0
-      THEN sentence || ' but not confirmed' ELSE sentence END AS sentence
-  FROM sentences
-),
-cev AS (SELECT DISTINCT subj_id, pred, obj_id, doc_id, sent_idx FROM triples),
-cpb AS (SELECT doc_id, sent_idx,
-          regexp_matches(lower(sentence),
-            '\b(not|no|never|none|neither|nor|without|cannot)\b')::BIGINT
-            AS neg
-        FROM csn),
-cng AS (
-  SELECT e.subj_id, e.pred, e.obj_id,
-         sum(coalesce(p.neg, 0))::BIGINT AS n_negated,
-         count(*)::BIGINT AS n_evidence
-  FROM cev e LEFT JOIN cpb p
-    ON e.doc_id = p.doc_id AND e.sent_idx = p.sent_idx
-  GROUP BY e.subj_id, e.pred, e.obj_id
-),
-cst AS (
-  SELECT subj_id, pred, obj_id, count(*)::BIGINT AS support,
-         count(DISTINCT doc_id)::BIGINT AS doc_count
-  FROM triples GROUP BY subj_id, pred, obj_id
-)
-SELECT s.subj_id, s.pred, s.obj_id, s.support, s.doc_count,
-       n.n_negated, n.n_evidence,
-       ((n.n_evidence - n.n_negated) * 1000000 // n.n_evidence)
-         * least(s.doc_count, 5) // 5 AS conf_micro
-FROM cst s JOIN cng n
-  ON s.subj_id = n.subj_id AND s.pred = n.pred AND s.obj_id = n.obj_id
-""",
         # Acronym mining: the injected-definitions synthesis through
         # the operator's module-local twin
         "acronyms": _acronyms_oracle(),
-        # Quote attribution: injected attributed quotes through the
-        # operator's module-local twin
-        "quotes": _quotes_oracle(),
-        # Numeric facts: injected measurements through the twin
-        "numeric_facts": _numeric_facts_oracle(),
         # N-Triples export: prelude edges through the serializer twin
         "ntriples": _ntriples_oracle(),
         "entity_labels": _ENTITY_LABELS_ORACLE,
         "contacts": _contacts_oracle(),
-        "geo": _geo_oracle(),
-        "copula_isa": _copula_isa_oracle(),
-        "apposition": _apposition_oracle(),
         "host_langs": host_lang_mix_oracle_sql(
             "SELECT 'h' || (doc_id % 7) AS host, lang_pred AS lang"
             f" FROM ({langid_sql})"
         ),
-        # Negation QA: same prelude, every 4th sentence cue-injected
-        "edge_negation": _PRELUDE
-        + r""",
-nsn AS (
-  SELECT doc_id, sent_idx,
-    CASE WHEN sent_idx % 4 = 0
-      THEN sentence || ' but not confirmed' ELSE sentence END AS sentence
-  FROM sentences
-),
-nev AS (SELECT DISTINCT subj_id, pred, obj_id, doc_id, sent_idx FROM triples),
-npb AS (SELECT doc_id, sent_idx,
-          regexp_matches(lower(sentence),
-            '\b(not|no|never|none|neither|nor|without|cannot)\b')::BIGINT
-            AS neg
-        FROM nsn)
-SELECT e.subj_id, e.pred, e.obj_id,
-       sum(coalesce(p.neg, 0))::BIGINT AS n_negated,
-       count(*)::BIGINT AS n_evidence
-FROM nev e LEFT JOIN npb p
-  ON e.doc_id = p.doc_id AND e.sent_idx = p.sent_idx
-GROUP BY e.subj_id, e.pred, e.obj_id
-""",
         # Compaction planning (checkpoint.compaction_plan_oracle_sql)
         "compaction_plan": _compaction_plan_oracle(),
         # Per-language exact quantiles

@@ -229,10 +229,10 @@ def entity_bursts(
     burst_num: int = 2,
     burst_den: int = 1,
 ) -> DataFrame:
-    """Temporal burst detection per entity over crawl epochs — the
-    node-level companion to triples.edge_history: which entities spike
-    in one crawl window vs their own average ("trending" detection an
-    incremental KG uses to prioritize re-linking). Output per entity:
+    """Temporal burst detection per entity over crawl epochs: which
+    entities spike in one crawl window vs their own average
+    ("trending" detection an incremental KG uses to prioritize
+    re-linking). Output per entity:
 
       total_count   mentions across all epochs
       n_epochs      epochs the entity appears in

@@ -755,8 +755,8 @@ def fs_em_linkage(
       * M-step (count-weighted over patterns, each result snapped):
         m_f = round(sum(g*cnt*a_f) / sum(g*cnt), sr),
         u_f = round(sum((1-g)*cnt*a_f) / sum((1-g)*cnt), sr),
-        p = round(sum(g*cnt) / sum(cnt), sr) — the fuse_claims
-        round-snap recipe (arbitrary-valued ratios, so the half-grid
+        p = round(sum(g*cnt) / sum(cnt), sr) — the round-snap
+        recipe (arbitrary-valued ratios, so the half-grid
         failure mode textrank hit cannot occur);
       * match_prob = round(g under the POST-iteration params, sr);
         is_match = match_prob >= threshold.
@@ -768,8 +768,7 @@ def fs_em_linkage(
     and the floor below applies).
       * floor: m/u/p are clamped to [10^-sr, 1 - 10^-sr] after each
         round, so a degenerate field (all pairs agree) cannot zero a
-        product and poison later iterations — same role as
-        fuse_claims' trust floor.
+        product and poison later iterations.
 
     Scale shape: ONE shuffle builds the pattern table (groupBy on F
     boolean columns, map-side combined, <= 2^F result rows at ANY

@@ -1,4 +1,5 @@
-"""Triple extraction: linked mentions -> (subj, pred, obj) edges.
+"""Triples: linked mentions -> (subj, pred, obj) edges, and the
+queries the KG product answers over them.
 
 Generalizes the reference's germ of relation extraction —
 `hasCoOccurrence = len(entities) >= 2` per sentence
@@ -6,14 +7,16 @@ Generalizes the reference's germ of relation extraction —
 for each sentence, the DISTINCT canonical entity ids in span order
 (first occurrence; ties (begin, end, id)); emit (id_i,
 'co_occurs_with', id_j) for i < j (SURVEY.md section 7.0.4).
+`extract_triples` and `aggregate_edges` are the kg job's triples and
+edges stages.
 
-Spark shape: one groupBy (url, sent_idx, entity_id) for first-occurrence
-spans, a row_number window on the same key, then a per-sentence
-self-equi-join on (url, sent_idx). All three reuse ONE hash partitioning
-on (url, sent_idx) — Catalyst/AQE sees the shared clustering, and
-sentence groups are tiny (a handful of entities), so the self-join
-never explodes. Skewed hosts spread across partitions because the key
-includes sent_idx and url (full url, not host).
+The rest serves `--mode query` and `kg.KnowledgeGraph`: the
+SPARQL-BGP engine (`match_patterns`, its planner `bgp_stats`, and
+the epoch-stamped `match_patterns_when`), and the facade's KG ops
+(`functional_violations`, `entity_summaries`, `schema_graph`,
+`metapath_join`), plus `metapath_pathsim`, the PathSim measure built
+on `metapath_join`. Each of those but `bgp_stats` has a `*_oracle_sql`
+DuckDB twin that the oracle gate compares it against.
 """
 
 from __future__ import annotations
@@ -45,8 +48,7 @@ def extract_triples(
     BOTH groupBys' clustering requirements (hash on a PREFIX of the
     grouping key co-locates every group), so EnsureRequirements inserts
     no further exchange — verified 2 Exchanges -> 1 in the physical
-    plan. No join, no window state. `extract_triples_join` keeps the
-    relational formulation as a cross-validation path.
+    plan. No join, no window state.
     """
     ids = (
         linked_mentions.where(F.col("entity_id") != "")
@@ -84,40 +86,6 @@ def extract_triples(
     )
 
 
-def extract_triples_join(
-    linked_mentions: DataFrame,
-    pred: str = PRED_CO_OCCURS,
-) -> DataFrame:
-    """Relational formulation of extract_triples (row_number window +
-    per-sentence self-join) — slower at scale, kept as the
-    cross-validation twin; results are identical (tested)."""
-    ids = (
-        linked_mentions.where(F.col("entity_id") != "")
-        .groupBy("url", "sent_idx", "entity_id")
-        .agg(F.min(F.struct("begin", "end")).alias("first_span"))
-    )
-    w = Window.partitionBy("url", "sent_idx").orderBy("first_span", "entity_id")
-    ranked = ids.withColumn("ord", F.row_number().over(w)).select(
-        "url", "sent_idx", "entity_id", "ord"
-    )
-    a, b = ranked.alias("a"), ranked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.url") == F.col("b.url"))
-            & (F.col("a.sent_idx") == F.col("b.sent_idx"))
-            & (F.col("a.ord") < F.col("b.ord")),
-        )
-        .select(
-            F.col("a.url").alias("url"),
-            F.col("a.sent_idx").alias("sent_idx"),
-            F.col("a.entity_id").alias("subj_id"),
-            F.lit(pred).alias("pred"),
-            F.col("b.entity_id").alias("obj_id"),
-        )
-    )
-
-
 def aggregate_edges(triples: DataFrame, exact_sets: bool = False) -> DataFrame:
     """Deduplicated edge table with provenance (SURVEY section 7.2.8):
     (subj_id, pred, obj_id) -> support count + distinct-doc count
@@ -132,377 +100,6 @@ def aggregate_edges(triples: DataFrame, exact_sets: bool = False) -> DataFrame:
             F.slice(F.sort_array(F.collect_set("url")), 1, 16).alias("example_urls")
         )
     return triples.groupBy("subj_id", "pred", "obj_id").agg(*aggs)
-
-
-# Dependency-pattern predicate extraction (north_star: "dependency-
-# pattern triple extraction (subj, pred, obj)"). The reference never
-# ships a dependency parser — its relation signal is bare co-occurrence
-# (scripts/entity_parser.py:41-42) — so the pinned contract here is a
-# deterministic PATTERN rule, the classic dep-parse surrogate:
-#   pred(subj, obj) = canonical form of the FIRST relation-verb token
-#   in the text strictly BETWEEN subj's and obj's first occurrences,
-#   else the co-occurrence fallback.
-# A statistical parser (spaCy/stanza) can be slotted in behind the same
-# output contract via a pandas-UDF variant; the rule form keeps the hot
-# path 100% JVM (whole-stage codegen, zero Python).
-PRED_LEXICON: dict[str, str] = {}
-for _canon, _forms in {
-    "activates": ("activate", "activates", "activated", "activating"),
-    "inhibits": ("inhibit", "inhibits", "inhibited", "inhibiting"),
-    "binds": ("bind", "binds", "bound"),
-    "regulates": ("regulate", "regulates", "regulated", "regulating"),
-    "induces": ("induce", "induces", "induced", "inducing"),
-    "suppresses": ("suppress", "suppresses", "suppressed", "suppressing"),
-    "phosphorylates": ("phosphorylate", "phosphorylates", "phosphorylated"),
-    "encodes": ("encode", "encodes", "encoded", "encoding"),
-    "targets_": ("targets", "targeted", "targeting"),
-    "blocks": ("block", "blocks", "blocked", "blocking"),
-    "promotes": ("promote", "promotes", "promoted", "promoting"),
-    "mediates": ("mediate", "mediates", "mediated", "mediating"),
-    "modulates": ("modulate", "modulates", "modulated", "modulating"),
-    "causes": ("cause", "causes", "caused", "causing"),
-    "treats": ("treat", "treats", "treated", "treating"),
-    "interacts_with": ("interacts", "interacting", "interact"),
-}.items():
-    for _f in _forms:
-        PRED_LEXICON[_f] = _canon.rstrip("_")
-
-
-def extract_predicate_triples(
-    linked_mentions: DataFrame,
-    sentences: DataFrame,
-    lexicon: dict[str, str] | None = None,
-    fallback: str = PRED_CO_OCCURS,
-) -> DataFrame:
-    """linked mentions + sentences -> (url, sent_idx, subj_id, pred,
-    obj_id) with pattern-extracted predicates.
-
-    Plan: the same two-shuffle array formulation as extract_triples,
-    but pairs carry the inter-span char window (subj.end, obj.begin);
-    ONE extra equi-join on (url, sent_idx) attaches the sentence text
-    (co-clustered with the groupBys — AQE reuses the partitioning),
-    then the predicate rule is pure column algebra: substring ->
-    lowercase -> non-letter split -> first lexicon hit via a literal
-    map. Overlapping/nested spans yield an empty window -> fallback.
-    """
-    lex = PRED_LEXICON if lexicon is None else lexicon
-    lex_map = F.create_map(
-        *[F.lit(x) for surface, canon in sorted(lex.items()) for x in (surface, canon)]
-    )
-
-    ids = (
-        linked_mentions.where(F.col("entity_id") != "")
-        # one shuffle feeds both groupBys — see extract_triples
-        .repartition(F.col("url"), F.col("sent_idx"))
-        .groupBy("url", "sent_idx", "entity_id")
-        .agg(F.min(F.struct("begin", "end")).alias("first_span"))
-    )
-    per_sent = ids.groupBy("url", "sent_idx").agg(
-        F.array_sort(F.collect_list(F.struct("first_span", "entity_id"))).alias("ents")
-    )
-    n = F.size("ents")
-    pairs = F.flatten(
-        F.transform(
-            F.col("ents"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ents"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x.getField("entity_id").alias("subj_id"),
-                    y.getField("entity_id").alias("obj_id"),
-                    x.getField("first_span").getField("end").alias("gap_begin"),
-                    y.getField("first_span").getField("begin").alias("gap_end"),
-                ),
-            ),
-        )
-    )
-    exploded = (
-        per_sent.where(n >= 2)
-        .select("url", "sent_idx", F.explode(pairs).alias("p"))
-        .join(sentences.select("url", "sent_idx", "sentence"), ["url", "sent_idx"])
-    )
-    gap = F.expr(
-        "substring(sentence, p.gap_begin + 1, greatest(p.gap_end - p.gap_begin, 0))"
-    )
-    toks = F.split(F.lower(gap), r"[^\p{L}]+")
-    # try_element_at: ANSI-safe on missing map keys / empty hit arrays
-    canon = F.try_element_at(
-        F.filter(
-            F.transform(toks, lambda t: F.try_element_at(lex_map, t)),
-            lambda c: c.isNotNull(),
-        ),
-        F.lit(1),
-    )
-    return exploded.select(
-        "url",
-        "sent_idx",
-        F.col("p.subj_id").alias("subj_id"),
-        F.coalesce(canon, F.lit(fallback)).alias("pred"),
-        F.col("p.obj_id").alias("obj_id"),
-    )
-
-
-def predicate_cardinality(edges: DataFrame) -> DataFrame:
-    """Per-predicate functional-property profile over the DISTINCT
-    edge table: (pred, n_edges, n_subj, n_obj, max_fanout, max_fanin,
-    card_class) where card_class classifies the relation as
-    '1:1' / '1:N' / 'N:1' / 'N:M' from the max objects-per-subject
-    (fanout) and max subjects-per-object (fanin).
-
-    This is the schema-induction step of KG construction (north_star:
-    "materializing deduplicated node/edge tables"): functional
-    predicates ('1:N' fanin==1, e.g. capital_of) become UNIQUE
-    constraints / conflict-resolution keys downstream, and the profile
-    is the standard input to cardinality-aware link-prediction
-    sampling (Bordes et al. 2013's bern heuristic).
-
-    Exactness: the input is deduplicated per (subj, pred, obj) — pass
-    `aggregate_edges` output or dedup first — so every count is an
-    exact integer; card_class is a CASE on integers. No floats.
-
-    Scale: the edge table is localCheckpoint'ed (it is the
-    materialized KG product anyway) so the fanout and fanin branches
-    scan it once each instead of recomputing the full extraction
-    lineage twice. Each branch is two keyed shuffles: the heavy one on
-    the UNIFORM composite key ((pred, subj_id) / (pred, obj_id)) with
-    map-side partial agg, then a second shuffle of the already-
-    collapsed per-(pred, key) rollup onto pred. The alternative single
-    shuffle — repartition("pred") serves both aggs via the key-prefix
-    rule — is deliberately rejected: the predicate vocabulary is tiny
-    and Zipf-skewed (co_occurs_with alone carries most of a real KG),
-    so hashing the raw edge stream by pred alone sends ~all rows to
-    one task. Composite-key first, collapse, THEN the skewed-but-tiny
-    key. The per-pred rollups are vocabulary-sized, so the final join
-    on pred is AQE-broadcast. Plan-audited: 4 exchanges (2 per
-    branch) + 1 broadcast, none carrying the raw stream on a skewed
-    key.
-    """
-    e = edges.select("subj_id", "pred", "obj_id").localCheckpoint(eager=True)
-    fanout = (
-        e.groupBy("pred", "subj_id")
-        .agg(F.count(F.lit(1)).alias("n_obj_per_subj"))
-        .groupBy("pred")
-        .agg(
-            F.sum("n_obj_per_subj").cast("long").alias("n_edges"),
-            F.count(F.lit(1)).cast("long").alias("n_subj"),
-            F.max("n_obj_per_subj").cast("long").alias("max_fanout"),
-        )
-    )
-    fanin = (
-        e.groupBy("pred", "obj_id")
-        .agg(F.count(F.lit(1)).alias("n_subj_per_obj"))
-        .groupBy("pred")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_obj"),
-            F.max("n_subj_per_obj").cast("long").alias("max_fanin"),
-        )
-    )
-    card = (
-        F.when((F.col("max_fanout") == 1) & (F.col("max_fanin") == 1), "1:1")
-        .when(F.col("max_fanin") == 1, "1:N")
-        .when(F.col("max_fanout") == 1, "N:1")
-        .otherwise("N:M")
-    )
-    return fanout.join(fanin, "pred").select(
-        "pred",
-        "n_edges",
-        "n_subj",
-        "n_obj",
-        "max_fanout",
-        "max_fanin",
-        card.alias("card_class"),
-    )
-
-
-def predicate_cardinality_oracle_sql(with_prefix: str) -> str:
-    """DuckDB mirror of predicate_cardinality; `with_prefix` is a
-    complete WITH chain whose LAST relation is e(subj_id, pred,
-    obj_id), already DISTINCT — lets callers feed shared preludes
-    without nesting WITHs (the entity_bursts pattern). Kept beside the
-    operator so the expression trees cannot drift (repo oracle
-    policy)."""
-    return f"""{with_prefix},
-fanout AS (
-  SELECT pred, subj_id, count(*) AS n_obj_per_subj
-  FROM e GROUP BY pred, subj_id
-),
-fo AS (
-  SELECT pred,
-         sum(n_obj_per_subj)::BIGINT AS n_edges,
-         count(*)::BIGINT AS n_subj,
-         max(n_obj_per_subj)::BIGINT AS max_fanout
-  FROM fanout GROUP BY pred
-),
-fanin AS (
-  SELECT pred, obj_id, count(*) AS n_subj_per_obj
-  FROM e GROUP BY pred, obj_id
-),
-fi AS (
-  SELECT pred,
-         count(*)::BIGINT AS n_obj,
-         max(n_subj_per_obj)::BIGINT AS max_fanin
-  FROM fanin GROUP BY pred
-)
-SELECT fo.pred, fo.n_edges, fo.n_subj, fi.n_obj, fo.max_fanout, fi.max_fanin,
-       CASE WHEN fo.max_fanout = 1 AND fi.max_fanin = 1 THEN '1:1'
-            WHEN fi.max_fanin = 1 THEN '1:N'
-            WHEN fo.max_fanout = 1 THEN 'N:1'
-            ELSE 'N:M' END AS card_class
-FROM fo JOIN fi ON fo.pred = fi.pred
-"""
-
-
-def entity_types(
-    edges: DataFrame,
-    type_rules: list[tuple[str, str, str, int]],
-) -> DataFrame:
-    """Entity-type inference by predicate-signature voting: each rule
-    (pred, role, type, weight) says "the `role` ('subj'|'obj') of
-    `pred` is evidence `weight` for `type`" — e.g. the subject of
-    'inhibits' votes chemical, the object of 'treats' votes disease.
-    Every edge casts its rule-matched votes; per entity the winning
-    type is argmax(total weight), ties broken by type ascending.
-    Output: (entity_id, ent_type, votes, total_votes, n_types).
-
-    This is the untyped-web answer to the reference's per-model NER
-    class column (scripts/ner_inference.py labels come from the
-    model): once triples are canonicalized, the KG's own predicate
-    usage types its nodes (ontology-lite schema induction).
-
-    Exactness: weights are integers, votes are SUMs of integers, the
-    argmax is a min(struct(-votes, type)) — all BIGINT/string, no
-    floats (repo oracle rule).
-
-    Scale: the rule table is O(|preds| x roles x types) — broadcast by
-    construction. Vote emission is two broadcast equi-joins (subj
-    role, obj role) unioned — zero shuffle. Then the
-    predicate_cardinality shuffle shape, same reasoning: groupBy
-    (entity, type) WITHOUT a pre-repartition so map-side partial agg
-    absorbs hot entities (a hub node's votes collapse to <= n_types
-    rows per map task), then the per-entity rollup reshuffles the
-    already-collapsed (entity, type) table. Two shuffles, the heavy
-    one combine-absorbed, never the raw edge stream on a hot entity
-    key.
-    """
-    spark = edges.sparkSession
-    rules = spark.createDataFrame(
-        type_rules, "pred string, role string, ent_type string, weight long"
-    )
-    subj_votes = edges.join(
-        F.broadcast(rules.where(F.col("role") == "subj")), "pred"
-    ).select(F.col("subj_id").alias("entity_id"), "ent_type", "weight")
-    obj_votes = edges.join(
-        F.broadcast(rules.where(F.col("role") == "obj")), "pred"
-    ).select(F.col("obj_id").alias("entity_id"), "ent_type", "weight")
-    per_type = (
-        subj_votes.unionByName(obj_votes)
-        .groupBy("entity_id", "ent_type")
-        .agg(F.sum("weight").alias("votes"))
-    )
-    rolled = per_type.groupBy("entity_id").agg(
-        F.min(F.struct((-F.col("votes")).alias("neg"), F.col("ent_type"))).alias("_w"),
-        F.sum("votes").cast("long").alias("total_votes"),
-        F.count(F.lit(1)).cast("long").alias("n_types"),
-    )
-    return rolled.select(
-        "entity_id",
-        F.col("_w.ent_type").alias("ent_type"),
-        (-F.col("_w.neg")).cast("long").alias("votes"),
-        "total_votes",
-        "n_types",
-    )
-
-
-def entity_types_oracle_sql(
-    with_prefix: str,
-    type_rules: list[tuple[str, str, str, int]],
-) -> str:
-    """DuckDB twin of entity_types; `with_prefix` is a complete WITH
-    chain whose LAST relation is e(subj_id, pred, obj_id). The rule
-    table is inlined as VALUES from the SAME python list the Spark
-    side consumes — the two vote tables cannot drift."""
-    vals = ", ".join(
-        f"('{p}', '{r}', '{t}', {w})" for p, r, t, w in type_rules
-    )
-    return f"""{with_prefix},
-ty_rules(pred, role, ent_type, weight) AS (VALUES {vals}),
-ty_votes AS (
-  SELECT e.subj_id AS entity_id, r.ent_type, r.weight
-  FROM e JOIN ty_rules r ON e.pred = r.pred AND r.role = 'subj'
-  UNION ALL
-  SELECT e.obj_id, r.ent_type, r.weight
-  FROM e JOIN ty_rules r ON e.pred = r.pred AND r.role = 'obj'
-),
-ty_per_type AS (
-  SELECT entity_id, ent_type, sum(weight) AS votes
-  FROM ty_votes GROUP BY entity_id, ent_type
-),
-ty_ranked AS (
-  SELECT entity_id, ent_type, votes,
-         row_number() OVER (PARTITION BY entity_id
-                            ORDER BY votes DESC, ent_type ASC) AS rn,
-         sum(votes) OVER (PARTITION BY entity_id) AS total_votes,
-         count(*) OVER (PARTITION BY entity_id) AS n_types
-  FROM ty_per_type
-)
-SELECT entity_id, ent_type, votes::BIGINT AS votes,
-       total_votes::BIGINT AS total_votes, n_types::BIGINT AS n_types
-FROM ty_ranked WHERE rn = 1
-"""
-
-
-def edge_history(triples: DataFrame, epoch_col: str = "epoch") -> DataFrame:
-    """(subj_id, pred, obj_id, first_epoch, last_epoch, n_epochs,
-    support, status) — per-edge temporal lifecycle over an epoch-
-    stamped triple stream: the maintenance view an INCREMENTAL KG
-    (north_star: resumable per-epoch crawl ingestion) diffs each
-    round. status relative to the corpus-wide latest epoch:
-
-        new    first seen in the latest epoch
-        stale  not seen in the latest epoch (re-crawl candidate)
-        active seen in the latest epoch and before
-
-    Exactness: epochs are integers; min/max/count are exact; status
-    is a CASE on integers — no float anywhere. n_epochs uses
-    size(collect_set(epoch)) rather than countDistinct: epochs are
-    bounded (crawl rounds), so the set state is tiny and the plan
-    avoids countDistinct's Expand rewrite, which would double the
-    triple stream map-side just to dedup a handful of values.
-
-    Scale: ONE keyed shuffle (the edge rollup, partial-agg absorbed);
-    the rolled-up edge table is localCheckpoint'ed (it is the
-    north-star's materialized edges product anyway) so the 1-row
-    global-max epoch and the status projection read the
-    materialization instead of recomputing the rollup twice; the max
-    rides back as a broadcast 1-row cross join, never a collect and
-    never a partitionBy-less window (the Exchange SinglePartition
-    trap).
-    """
-    g = (
-        triples.groupBy("subj_id", "pred", "obj_id")
-        .agg(
-            F.min(epoch_col).cast("long").alias("first_epoch"),
-            F.max(epoch_col).cast("long").alias("last_epoch"),
-            F.size(F.collect_set(epoch_col)).cast("long").alias("n_epochs"),
-            F.count(F.lit(1)).alias("support"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    mx = g.agg(F.max("last_epoch").alias("m"))
-    status = (
-        F.when(F.col("first_epoch") == F.col("m"), F.lit("new"))
-        .when(F.col("last_epoch") < F.col("m"), F.lit("stale"))
-        .otherwise(F.lit("active"))
-    )
-    return g.crossJoin(F.broadcast(mx)).select(
-        "subj_id",
-        "pred",
-        "obj_id",
-        "first_epoch",
-        "last_epoch",
-        "n_epochs",
-        "support",
-        status.alias("status"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1339,9 +936,7 @@ def functional_violations(
     one row per violating entity with its exact conflicting-value
     count and the lexicographic min/max values as repair anchors.
     This is the contradiction table a KG-construction pipeline reviews
-    before promoting extracted edges to the canonical store (the
-    downstream consumer of predicate_cardinality's induced classes:
-    induce there, DECLARE here, enforce on ingest).
+    before promoting extracted edges to the canonical store.
 
     Exactness: input must be DISTINCT per (subj_id, pred, obj_id) —
     pass aggregate_edges output — so count(*) per key IS the distinct-
@@ -1421,1849 +1016,6 @@ GROUP BY pred, obj_id HAVING count(*) > 1""")
     return f"{with_prefix}\n" + "\nUNION ALL\n".join(selects)
 
 
-def edge_evidence(
-    triples: DataFrame,
-    sentences: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """Evidence sentences per KG edge: (subj_id, pred, obj_id,
-    evidence_rank, url, sent_idx, sentence) — up to `k` deterministic
-    examples per edge, the human-verification / error-analysis surface
-    the node-profile and edge tables link out to (and the context a
-    distant-supervision relation trainer reads). Selection is the
-    lexicographic-min (url, sent_idx) per edge — stable across runs
-    and engines, no sampling.
-
-    `sentences` is the splitter output (url, sent_idx, sentence).
-
-    Scale (2 shuffles + the evidence join): (1) per-(edge, url,
-    sent_idx) collapse rides the triples' existing dedup semantics —
-    a triple emitted once per sentence pair keeps keys uniform; (2)
-    the top-k window on the edge key — a hot edge's partition is
-    bounded by its DISTINCT evidence sentences, and k rows survive;
-    per BASELINE.md's hot-canonical-url tier the single-shuffle window
-    beats groupBy-min+join-back when every surviving row needs the
-    group verdict. The sentence TEXT joins in AFTER the k-filter on
-    the uniform (url, sent_idx) key — text never crosses the edge-key
-    exchange and the join's left side is |edges| * k rows.
-    """
-    ev = triples.select(
-        "subj_id", "pred", "obj_id", "url", "sent_idx"
-    ).dropDuplicates(["subj_id", "pred", "obj_id", "url", "sent_idx"])
-    w = Window.partitionBy("subj_id", "pred", "obj_id").orderBy(
-        "url", "sent_idx"
-    )
-    top = (
-        ev.withColumn("evidence_rank", F.row_number().over(w))
-        .where(F.col("evidence_rank") <= k)
-    )
-    return top.join(
-        sentences.select("url", "sent_idx", "sentence"),
-        ["url", "sent_idx"],
-    ).select(
-        "subj_id", "pred", "obj_id",
-        F.col("evidence_rank").cast("long").alias("evidence_rank"),
-        "url", "sent_idx", "sentence",
-    )
-
-
-def edge_evidence_oracle_sql(
-    triples_sql: str, sentences_sql: str, k: int = 3
-) -> str:
-    """DuckDB twin of edge_evidence; `triples_sql` yields (subj_id,
-    pred, obj_id, url, sent_idx), `sentences_sql` yields (url,
-    sent_idx, sentence)."""
-    return f"""
-WITH tr AS ({triples_sql}),
-sn AS ({sentences_sql}),
-ev AS (SELECT DISTINCT subj_id, pred, obj_id, url, sent_idx FROM tr),
-rk AS (
-  SELECT subj_id, pred, obj_id, url, sent_idx,
-    row_number() OVER (PARTITION BY subj_id, pred, obj_id
-                       ORDER BY url, sent_idx) AS evidence_rank
-  FROM ev
-)
-SELECT r.subj_id, r.pred, r.obj_id, r.evidence_rank::BIGINT AS evidence_rank,
-       r.url, r.sent_idx, s.sentence
-FROM rk r JOIN sn s ON r.url = s.url AND r.sent_idx = s.sent_idx
-WHERE r.evidence_rank <= {k}
-"""
-
-
-# temporal-qualifier contract, shared with the oracle: ISO dates
-# yyyy-mm-dd first, else bare years 1900-2099 as yyyy; the FIRST match
-# in the sentence qualifies every edge the sentence evidences.
-DATE_ISO_RE = r"\b(19|20)\d{2}-\d{2}-\d{2}\b"
-DATE_YEAR_RE = r"\b(19|20)\d{2}\b"
-
-
-def edge_temporal(
-    triples: DataFrame,
-    sentences: DataFrame,
-) -> DataFrame:
-    """In-text temporal qualifiers per KG edge: (subj_id, pred,
-    obj_id, first_date, last_date, n_dated, n_evidence) — the EVENT
-    time axis (dates written in the evidence sentences), as opposed to
-    entity_bursts' crawl-time axis (warc_ts epochs). first/last_date
-    are the min/max qualifier over all dated evidence (ISO yyyy-mm-dd
-    preferred, bare year as 'yyyy' fallback — string-comparable
-    forms); n_dated counts dated evidence sentences, n_evidence all
-    distinct evidence, so n_dated/n_evidence is the edge's temporal
-    support ratio. Undated edges keep NULL first/last.
-
-    Scale (2 shuffles): per-(edge, sentence) dedup on the uniform
-    composite key, then ONE algebraic edge rollup (min/max/count
-    absorb hot edges map-side); the date pull is a scan-fused regex
-    on the sentence join (uniform sentence key, text dropped before
-    the edge exchange — only the extracted date string crosses).
-    """
-    ev = triples.select(
-        "subj_id", "pred", "obj_id", "url", "sent_idx"
-    ).dropDuplicates(["subj_id", "pred", "obj_id", "url", "sent_idx"])
-    dated = sentences.select(
-        "url",
-        "sent_idx",
-        F.nullif(
-            F.coalesce(
-                F.regexp_extract(F.col("sentence"), DATE_ISO_RE, 0),
-                F.lit(""),
-            ),
-            F.lit(""),
-        ).alias("_iso"),
-        F.nullif(
-            F.regexp_extract(F.col("sentence"), DATE_YEAR_RE, 0), F.lit("")
-        ).alias("_yr"),
-    ).select(
-        "url", "sent_idx", F.coalesce(F.col("_iso"), F.col("_yr")).alias("qdate")
-    )
-    joined = ev.join(dated, ["url", "sent_idx"], "left")
-    return joined.groupBy("subj_id", "pred", "obj_id").agg(
-        F.min("qdate").alias("first_date"),
-        F.max("qdate").alias("last_date"),
-        F.count("qdate").cast("long").alias("n_dated"),
-        F.count(F.lit(1)).cast("long").alias("n_evidence"),
-    )
-
-
-def edge_temporal_oracle_sql(triples_sql: str, sentences_sql: str) -> str:
-    """DuckDB twin of edge_temporal; same shapes as
-    edge_evidence_oracle_sql's inputs."""
-    return f"""
-WITH tr AS ({triples_sql}),
-sn AS ({sentences_sql}),
-ev AS (SELECT DISTINCT subj_id, pred, obj_id, url, sent_idx FROM tr),
-dt AS (
-  SELECT url, sent_idx,
-    coalesce(
-      nullif(regexp_extract(sentence, '\\b(19|20)\\d{{2}}-\\d{{2}}-\\d{{2}}\\b', 0), ''),
-      nullif(regexp_extract(sentence, '\\b(19|20)\\d{{2}}\\b', 0), ''))
-      AS qdate
-  FROM sn
-)
-SELECT e.subj_id, e.pred, e.obj_id,
-       min(d.qdate) AS first_date, max(d.qdate) AS last_date,
-       count(d.qdate)::BIGINT AS n_dated,
-       count(*)::BIGINT AS n_evidence
-FROM ev e LEFT JOIN dt d ON e.url = d.url AND e.sent_idx = d.sent_idx
-GROUP BY e.subj_id, e.pred, e.obj_id
-"""
-
-
-# negation-cue contract, shared with the oracle (lowercased word-
-# boundary alternation; "n't" rides the \w+ boundary as 't')
-NEG_CUE_RE = r"\b(not|no|never|none|neither|nor|without|cannot)\b"
-
-
-def edge_negation(
-    triples: DataFrame,
-    sentences: DataFrame,
-    cue_re: str = NEG_CUE_RE,
-) -> DataFrame:
-    """Negation QA per KG edge: (subj_id, pred, obj_id, n_negated,
-    n_evidence) — how many of an edge's evidence sentences carry a
-    negation cue. The classic IE false-positive class: "X does NOT
-    inhibit Y" co-occurs exactly like "X inhibits Y"; an edge whose
-    evidence is mostly negated should be downgraded or dropped before
-    the KG ships (filter n_negated * 2 >= n_evidence, or join the
-    counts into an edge-confidence formula). Cue matching is a
-    word-boundary regex over the lowercased sentence — a cheap,
-    documented heuristic (scope resolution needs a parser; this is
-    the zero-dependency tier).
-
-    Scale: identical shape to edge_temporal — per-(edge, sentence)
-    dedup, scan-fused cue probe on the uniform sentence join, ONE
-    algebraic edge rollup; only a boolean crosses the edge exchange.
-    """
-    ev = triples.select(
-        "subj_id", "pred", "obj_id", "url", "sent_idx"
-    ).dropDuplicates(["subj_id", "pred", "obj_id", "url", "sent_idx"])
-    probed = sentences.select(
-        "url",
-        "sent_idx",
-        F.lower(F.col("sentence")).rlike(cue_re).cast("long").alias("_neg"),
-    )
-    joined = ev.join(probed, ["url", "sent_idx"], "left")
-    return joined.groupBy("subj_id", "pred", "obj_id").agg(
-        F.sum(F.coalesce(F.col("_neg"), F.lit(0))).cast("long").alias(
-            "n_negated"
-        ),
-        F.count(F.lit(1)).cast("long").alias("n_evidence"),
-    )
-
-
-def edge_negation_oracle_sql(
-    triples_sql: str, sentences_sql: str, cue_re: str = NEG_CUE_RE
-) -> str:
-    """DuckDB twin of edge_negation; same input shapes as
-    edge_temporal_oracle_sql."""
-    return f"""
-WITH tr AS ({triples_sql}),
-sn AS ({sentences_sql}),
-ev AS (SELECT DISTINCT subj_id, pred, obj_id, url, sent_idx FROM tr),
-pb AS (SELECT url, sent_idx,
-         regexp_matches(lower(sentence), '{cue_re}')::BIGINT AS neg
-       FROM sn)
-SELECT e.subj_id, e.pred, e.obj_id,
-       sum(coalesce(p.neg, 0))::BIGINT AS n_negated,
-       count(*)::BIGINT AS n_evidence
-FROM ev e LEFT JOIN pb p ON e.url = p.url AND e.sent_idx = p.sent_idx
-GROUP BY e.subj_id, e.pred, e.obj_id
-"""
-
-
-def edge_confidence(
-    triples: DataFrame,
-    sentences: DataFrame,
-    doc_clamp: int = 5,
-) -> DataFrame:
-    """Composed edge confidence: (subj_id, pred, obj_id, support,
-    doc_count, n_negated, n_evidence, conf_micro) where conf_micro =
-    (non-negated evidence share) x (doc-diversity clamp), in exact
-    1e6 micro-units:
-
-        conf_micro = ((n_evidence - n_negated) * 1_000_000
-                      div n_evidence) * least(doc_count, doc_clamp)
-                      div doc_clamp
-
-    The two facts a KG consumer always asks of an edge — "is the
-    claim asserted, not denied?" and "do INDEPENDENT documents say
-    it?" — folded into one rankable integer (1e6 = unanimous positive
-    evidence across >= doc_clamp docs). All-BIGINT, so the table
-    value-matches across engines; the formula is deliberately simple
-    and documented rather than learned — swap in a trained scorer
-    behind the same output contract when one exists.
-
-    Scale: two algebraic rollups over the same uniform keys
-    (support/doc_count over raw triples; negation over deduped
-    evidence + the scan-fused cue probe), joined on the edge key
-    (AQE-decided, both sides already edge-keyed).
-    """
-    stats = triples.groupBy("subj_id", "pred", "obj_id").agg(
-        F.count(F.lit(1)).cast("long").alias("support"),
-        F.countDistinct("url").cast("long").alias("doc_count"),
-    )
-    neg = edge_negation(triples, sentences)
-    return (
-        stats.join(neg, ["subj_id", "pred", "obj_id"])
-        .select(
-            "subj_id", "pred", "obj_id", "support", "doc_count",
-            "n_negated", "n_evidence",
-            F.expr(
-                f"((n_evidence - n_negated) * 1000000 div n_evidence)"
-                f" * least(doc_count, {doc_clamp}) div {doc_clamp}"
-            ).alias("conf_micro"),
-        )
-    )
-
-
-def edge_confidence_oracle_sql(
-    triples_sql: str, sentences_sql: str, doc_clamp: int = 5,
-    cue_re: str = NEG_CUE_RE,
-) -> str:
-    """DuckDB twin of edge_confidence."""
-    neg = edge_negation_oracle_sql(triples_sql, sentences_sql, cue_re)
-    return f"""
-WITH st AS (
-  SELECT subj_id, pred, obj_id, count(*)::BIGINT AS support,
-         count(DISTINCT url)::BIGINT AS doc_count
-  FROM ({triples_sql}) GROUP BY subj_id, pred, obj_id
-),
-ng AS (SELECT * FROM ({neg}))
-SELECT s.subj_id, s.pred, s.obj_id, s.support, s.doc_count,
-       n.n_negated, n.n_evidence,
-       ((n.n_evidence - n.n_negated) * 1000000 // n.n_evidence)
-         * least(s.doc_count, {doc_clamp}) // {doc_clamp} AS conf_micro
-FROM st s JOIN ng n
-  ON s.subj_id = n.subj_id AND s.pred = n.pred AND s.obj_id = n.obj_id
-"""
-
-
-# quote-attribution contract, shared with the oracle: straight-quoted
-# span of 10-300 chars followed by an attribution verb and a 1-3-word
-# capitalized name — the fixed-format tier of claim extraction.
-QUOTE_EL_RE = (
-    r'"[^"]{10,300}",? (?:said|says|wrote|told|added|warned)'
-    r" (?:[A-Z][A-Za-z-]+ ?){1,3}"  # no '.' in name words: a sentence
-    # period must END the name run, not splice the next sentence in
-)
-QUOTE_TEXT_RE = r'^"([^"]+)"'
-QUOTE_VERB_RE = r'",? (said|says|wrote|told|added|warned) '
-QUOTE_SPEAKER_RE = r'",? (?:said|says|wrote|told|added|warned) (.+)$'
-
-
-def quote_attributions(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Quote attribution — the claim-extraction surface: (id,
-    quote_idx, speaker, verb, quote) per '"...," said Name' pattern.
-    Each row is a provenance-grade (speaker, SAYS, claim) triple:
-    unlike co-occurrence edges, the predicate is explicit and the
-    object is the quoted assertion itself — the input to claim
-    verification and quote-level dedup (the same quote syndicated
-    across hosts collapses on sha2(quote)). speaker is the trailing
-    1-3-word capitalized name, lowercased to the engine's canonical
-    comparison form; document order pinned by quote_idx.
-
-    Zero shuffle: element extraction + three scan-fused field pulls.
-    """
-    els = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.expr(f"regexp_extract_all({text_col}, '{QUOTE_EL_RE}', 0)")
-        ).alias("quote_idx", "_el"),
-    )
-    return els.select(
-        "id",
-        "quote_idx",
-        F.lower(
-            F.trim(F.regexp_extract(F.col("_el"), QUOTE_SPEAKER_RE, 1))
-        ).alias("speaker"),
-        F.regexp_extract(F.col("_el"), QUOTE_VERB_RE, 1).alias("verb"),
-        F.regexp_extract(F.col("_el"), QUOTE_TEXT_RE, 1).alias("quote"),
-    )
-
-
-def quote_attributions_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of quote_attributions; `docs_sql` yields (id, text)."""
-    return f"""
-WITH d AS ({docs_sql}),
-els AS (SELECT id, u.i::INT AS quote_idx, u.v AS el
-        FROM (SELECT id, unnest(list_transform(range(0, len(es)),
-                i -> {{'i': i, 'v': es[(i+1)::INT]}})) AS u
-              FROM (SELECT id, regexp_extract_all(text,
-                      '"[^"]{{10,300}}",? (?:said|says|wrote|told|added|warned) (?:[A-Z][A-Za-z-]+ ?){{1,3}}',
-                      0) AS es FROM d)))
-SELECT id, quote_idx,
-  lower(trim(regexp_extract(el,
-    '",? (?:said|says|wrote|told|added|warned) (.+)$', 1))) AS speaker,
-  regexp_extract(el, '",? (said|says|wrote|told|added|warned) ', 1) AS verb,
-  regexp_extract(el, '^"([^"]+)"', 1) AS quote
-FROM els
-"""
-
-
-# numeric-fact contract, shared with the oracle. RE2 has no lookahead,
-# so the unit's right boundary is an explicit [space/punct/end] class
-# captured with the element (field pulls ignore it); '%' can't take a
-# \b (non-word char).
-NUMFACT_EL_RE = (
-    r"(\d+(?:\.\d+)?) ?"
-    r"(kg|km|mg|ml|gb|mb|usd|eur|percent|%)([ .,;)]|$)"
-)
-NUMFACT_VAL_RE = r"^(\d+(?:\.\d+)?)"
-NUMFACT_UNIT_RE = r"(kg|km|mg|ml|gb|mb|usd|eur|percent|%)"
-
-
-def numeric_facts(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Numeric-fact extraction: (id, fact_idx, value, unit) per
-    quantity-with-unit occurrence ('75 kg', '99.9 percent', '40%') —
-    the measurable-fact surface a KG attaches to entities (dosage,
-    price, capacity) and a curation gate uses to find data-rich pages.
-    `value` stays the EXACT source string (no float parsing — '0.10'
-    and '0.1' are different claims); '%' normalizes to 'percent' so
-    consumers aggregate one unit key. RE2-safe (no lookahead): the
-    right boundary is an explicit punctuation/end class.
-
-    Zero shuffle: element extraction + two scan-fused field pulls.
-    """
-    els = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.expr(
-                f"regexp_extract_all({text_col}, r'{NUMFACT_EL_RE}', 0)"
-            )  # r'': keep \d literal through the SQL parser
-        ).alias("fact_idx", "_el"),
-    )
-    unit = F.regexp_extract(F.col("_el"), NUMFACT_UNIT_RE, 1)
-    return els.select(
-        "id",
-        "fact_idx",
-        F.regexp_extract(F.col("_el"), NUMFACT_VAL_RE, 1).alias("value"),
-        F.when(unit == "%", F.lit("percent")).otherwise(unit).alias("unit"),
-    )
-
-
-def numeric_facts_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of numeric_facts; `docs_sql` yields (id, text)."""
-    return f"""
-WITH d AS ({docs_sql}),
-els AS (SELECT id, u.i::INT AS fact_idx, u.v AS el
-        FROM (SELECT id, unnest(list_transform(range(0, len(es)),
-                i -> {{'i': i, 'v': es[(i+1)::INT]}})) AS u
-              FROM (SELECT id, regexp_extract_all(text,
-                      '(\\d+(?:\\.\\d+)?) ?(kg|km|mg|ml|gb|mb|usd|eur|percent|%)([ .,;)]|$)',
-                      0) AS es FROM d)))
-SELECT id, fact_idx,
-  regexp_extract(el, '^(\\d+(?:\\.\\d+)?)', 1) AS value,
-  CASE WHEN regexp_extract(el,
-         '(kg|km|mg|ml|gb|mb|usd|eur|percent|%)', 1) = '%'
-       THEN 'percent'
-       ELSE regexp_extract(el,
-         '(kg|km|mg|ml|gb|mb|usd|eur|percent|%)', 1) END AS unit
-FROM els
-"""
-
-
-# geo contract, shared with the oracle: 'lat, lon' decimal pairs;
-# range-gated (|lat| <= 90, |lon| <= 180) via numeric casts used ONLY
-# for the boolean gate — output keeps the exact source strings.
-GEO_EL_RE = r"(-?\d{1,2}\.\d{1,6}), ?(-?\d{1,3}\.\d{1,6})"
-GEO_LAT_RE = r"^(-?\d{1,2}\.\d{1,6})"
-GEO_LON_RE = r"(-?\d{1,3}\.\d{1,6})$"
-
-
-def geo_facts(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Coordinate extraction: (id, geo_idx, lat, lon) per decimal
-    'lat, lon' pair — the geo-fact surface a KG attaches to place
-    entities (venues, imprint addresses, geotagged articles).
-    Values stay exact source strings ('40.70' != '40.7' as claims);
-    the plausibility gate casts only for the range check (|lat| <= 90,
-    |lon| <= 180 — '99.5, 200.1' is a version number, not a place).
-
-    Zero shuffle: element extraction + scan-fused pulls + the gate.
-    """
-    els = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.expr(
-                f"regexp_extract_all({text_col}, r'{GEO_EL_RE}', 0)"
-            )
-        ).alias("geo_idx", "_el"),
-    )
-    lat = F.regexp_extract(F.col("_el"), GEO_LAT_RE, 1)
-    lon = F.regexp_extract(F.col("_el"), GEO_LON_RE, 1)
-    return els.select(
-        "id", "geo_idx", lat.alias("lat"), lon.alias("lon")
-    ).where(
-        (F.abs(F.col("lat").cast("double")) <= 90.0)
-        & (F.abs(F.col("lon").cast("double")) <= 180.0)
-    )
-
-
-def geo_facts_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of geo_facts; `docs_sql` yields (id, text)."""
-    return f"""
-WITH d AS ({docs_sql}),
-els AS (SELECT id, u.i::INT AS geo_idx, u.v AS el
-        FROM (SELECT id, unnest(list_transform(range(0, len(es)),
-                i -> {{'i': i, 'v': es[(i+1)::INT]}})) AS u
-              FROM (SELECT id, regexp_extract_all(text,
-                      '(-?\\d{{1,2}}\\.\\d{{1,6}}), ?(-?\\d{{1,3}}\\.\\d{{1,6}})',
-                      0) AS es FROM d))),
-x AS (SELECT id, geo_idx,
-        regexp_extract(el, '^(-?\\d{{1,2}}\\.\\d{{1,6}})', 1) AS lat,
-        regexp_extract(el, '(-?\\d{{1,3}}\\.\\d{{1,6}})$', 1) AS lon
-      FROM els)
-SELECT * FROM x
-WHERE abs(lat::DOUBLE) <= 90.0 AND abs(lon::DOUBLE) <= 180.0
-"""
-
-
-# copula contract, shared with the oracle: 'X is/are a/an/the Y' over
-# the lowercased sentence; terms are single hyphenatable words (the
-# zero-parser tier — multi-word NP support needs a chunker)
-ISA_EL_RE = r"\b[a-z][a-z0-9-]+ (?:is|are) (?:a|an|the) [a-z][a-z0-9-]+"
-ISA_SUBJ_RE = r"^([a-z0-9-]+) "
-ISA_OBJ_RE = r" ([a-z0-9-]+)$"
-
-
-def copula_isa(
-    sentences: DataFrame,
-    url_col: str = "url",
-    text_col: str = "sentence",
-) -> DataFrame:
-    """Copula is-a mining: 'a transformer is a model' -> (child,
-    parent, n_docs) hypernym candidates — web-mined taxonomy edges
-    instead of a curated ontology. Single hyphenatable alphanumeric terms ('covid-19') by documented contract
-    (multi-word NPs need a chunker; this is the zero-dependency tier);
-    per-doc dedup before the support rollup so a repeated template
-    sentence counts once per document.
-
-    Scale (1 shuffle): scan-fused extraction, per-doc distinct riding
-    the (child, parent) rollup's composite key.
-    """
-    els = sentences.select(
-        F.col(url_col).alias("_u"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all(lower({text_col}), r'{ISA_EL_RE}', 0)"
-            )
-        ).alias("_el"),
-    )
-    pairs = els.select(
-        "_u",
-        F.regexp_extract(F.col("_el"), ISA_SUBJ_RE, 1).alias("child"),
-        F.regexp_extract(F.col("_el"), ISA_OBJ_RE, 1).alias("parent"),
-    ).distinct()
-    return pairs.groupBy("child", "parent").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-
-
-def copula_isa_oracle_sql(sentences_sql: str) -> str:
-    """DuckDB twin of copula_isa; `sentences_sql` yields (url,
-    sentence)."""
-    return f"""
-WITH s AS ({sentences_sql}),
-els AS (SELECT url,
-          unnest(regexp_extract_all(lower(sentence),
-            '\\b[a-z][a-z0-9-]+ (?:is|are) (?:a|an|the) [a-z][a-z0-9-]+', 0)) AS el
-        FROM s),
-p AS (SELECT DISTINCT url,
-        regexp_extract(el, '^([a-z0-9-]+) ', 1) AS child,
-        regexp_extract(el, ' ([a-z0-9-]+)$', 1) AS parent
-      FROM els)
-SELECT child, parent, count(*)::BIGINT AS n_docs
-FROM p GROUP BY child, parent
-"""
-
-
-# apposition contract, shared with the oracle: 'NAME, a/an/the ROLE
-# of/at NAME' over the raw (case-preserved) sentence; names are 1-2
-# capitalized hyphenatable tokens, the role is one lowercase word —
-# the same zero-parser tier as the copula rule (multi-word NPs and
-# nested appositions need a chunker).
-APPOS_EL_RE = (
-    r"\b[A-Z][a-z0-9-]*(?: [A-Z][a-z0-9-]*)?,"
-    r" (?:a|an|the) [a-z][a-z-]+ (?:of|at)"
-    r" [A-Z][a-z0-9-]*(?: [A-Z][a-z0-9-]*)?"
-)
-APPOS_SUBJ_RE = r"^([A-Z][a-z0-9-]*(?: [A-Z][a-z0-9-]*)?),"
-APPOS_ROLE_RE = r", (?:a|an|the) ([a-z-]+) (?:of|at) "
-APPOS_OBJ_RE = r" ([A-Z][a-z0-9-]*(?: [A-Z][a-z0-9-]*)?)$"
-
-
-def apposition_facts(
-    sentences: DataFrame,
-    url_col: str = "url",
-    text_col: str = "sentence",
-) -> DataFrame:
-    """Appositive role mining: 'Tim Cook, the CEO of Apple' ->
-    (subj, role, obj, n_docs) — the people/org relation family the
-    verb-lexicon path (extract_predicate_triples) can't see, because
-    the relation is carried by an NP apposition, not a verb. Pairs
-    with copula_isa: is-a edges feed the taxonomy, role-of edges feed
-    the entity graph. Names keep their case (they're surface forms
-    for entity_labels/NEL downstream); the role is lowercase by
-    construction of the pattern. Per-doc dedup before the support
-    rollup, same as copula_isa.
-
-    Scale (1 shuffle): scan-fused extraction, per-doc distinct riding
-    the (subj, role, obj) rollup's composite key.
-    """
-    els = sentences.select(
-        F.col(url_col).alias("_u"),
-        F.explode(
-            F.expr(f"regexp_extract_all({text_col}, r'{APPOS_EL_RE}', 0)")
-        ).alias("_el"),
-    )
-    facts = els.select(
-        "_u",
-        F.regexp_extract(F.col("_el"), APPOS_SUBJ_RE, 1).alias("subj"),
-        F.regexp_extract(F.col("_el"), APPOS_ROLE_RE, 1).alias("role"),
-        F.regexp_extract(F.col("_el"), APPOS_OBJ_RE, 1).alias("obj"),
-    ).distinct()
-    return facts.groupBy("subj", "role", "obj").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-
-
-def apposition_facts_oracle_sql(sentences_sql: str) -> str:
-    """DuckDB twin of apposition_facts; `sentences_sql` yields (url,
-    sentence)."""
-    return f"""
-WITH s AS ({sentences_sql}),
-els AS (SELECT url,
-          unnest(regexp_extract_all(sentence, '{APPOS_EL_RE}', 0)) AS el
-        FROM s),
-f AS (SELECT DISTINCT url,
-        regexp_extract(el, '{APPOS_SUBJ_RE}', 1) AS subj,
-        regexp_extract(el, '{APPOS_ROLE_RE}', 1) AS role,
-        regexp_extract(el, '{APPOS_OBJ_RE}', 1) AS obj
-      FROM els)
-SELECT subj, role, obj, count(*)::BIGINT AS n_docs
-FROM f GROUP BY subj, role, obj
-"""
-
-
-PRONOUNS = ("he", "she", "it", "they", "him", "her", "them", "its")
-
-
-def pronoun_links(
-    tokens: DataFrame,
-    mentions: DataFrame,
-    lookback: int = 2,
-    doc_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, sent_idx, tok_idx, pronoun, ant_sent, ant_tok,
-    antecedent) — coreference-lite: every pronoun token linked to the
-    NEAREST PRECEDING entity mention within `lookback` sentences
-    (document order: later sentence wins, then later token, then
-    longer mention, then term — a total order, so the result is
-    deterministic). The crude-but-measurable KG recall booster: the
-    reference pipeline (and extract_triples) drops every 'it inhibits
-    X' sentence on the floor because 'it' is not in the dictionary;
-    resolving the pronoun to the last mention recovers those triples.
-    Recall-over-precision contract stated plainly: nearest-mention is
-    a baseline heuristic (Hobbs-lite), not coreference.
-
-    Shape: tokens filtered to the tiny pronoun set (scan-fused), ONE
-    doc-keyed join against mentions banded to the lookback window,
-    then max(struct(...)) per pronoun — algebraic, partial-agg
-    absorbed, no row_number window. Per-doc fan-out is bounded by
-    mentions-per-lookback-window, not corpus size.
-    """
-    p = tokens.where(F.col("tok").isin(*PRONOUNS)).select(
-        F.col(doc_col).alias("d"),
-        F.col("sent_idx").alias("ps"),
-        F.col("tok_idx").alias("pt"),
-        F.col("tok").alias("pronoun"),
-    )
-    m = mentions.select(
-        F.col(doc_col).alias("d"),
-        F.col("sent_idx").alias("ms"),
-        F.col("begin_tok").alias("mb"),
-        F.col("end_tok").alias("me"),
-        F.col("term").alias("mterm"),
-    )
-    j = p.join(m, "d").where(
-        (F.col("ms") >= F.col("ps") - lookback)
-        & (
-            (F.col("ms") < F.col("ps"))
-            | ((F.col("ms") == F.col("ps")) & (F.col("mb") < F.col("pt")))
-        )
-    )
-    best = j.groupBy("d", "ps", "pt", "pronoun").agg(
-        F.max(
-            F.struct(
-                F.col("ms").alias("s"),
-                F.col("mb").alias("b"),
-                F.col("me").alias("e"),
-                F.col("mterm").alias("t"),
-            )
-        ).alias("a")
-    )
-    return best.select(
-        F.col("d").alias("doc_id"),
-        F.col("ps").alias("sent_idx"),
-        F.col("pt").alias("tok_idx"),
-        "pronoun",
-        F.col("a.s").alias("ant_sent"),
-        F.col("a.b").alias("ant_tok"),
-        F.col("a.t").alias("antecedent"),
-    )
-
-
-def pronoun_links_oracle_sql(
-    tokens_sql: str, mentions_sql: str, lookback: int = 2
-) -> str:
-    """DuckDB twin of :func:`pronoun_links`; tokens_sql yields
-    (doc_id, sent_idx, tok_idx, tok), mentions_sql (doc_id, sent_idx,
-    begin_tok, end_tok, term). CTE CONTINUATION (leading ', ')."""
-    plist = ", ".join(f"'{p}'" for p in PRONOUNS)
-    return f"""
-, plt AS (SELECT doc_id AS d, sent_idx AS ps, tok_idx AS pt,
-                 tok AS pronoun
-          FROM ({tokens_sql}) WHERE tok IN ({plist})),
-plm AS (SELECT doc_id AS d, sent_idx AS ms, begin_tok AS mb,
-               end_tok AS me, term AS mterm
-        FROM ({mentions_sql})),
-plj AS (
-  SELECT plt.d, plt.ps, plt.pt, plt.pronoun,
-         plm.ms, plm.mb, plm.me, plm.mterm
-  FROM plt JOIN plm ON plt.d = plm.d
-  WHERE plm.ms >= plt.ps - {lookback}
-    AND (plm.ms < plt.ps OR (plm.ms = plt.ps AND plm.mb < plt.pt))
-),
-plb AS (
-  SELECT d, ps, pt, pronoun,
-         max(struct_pack(s := ms, b := mb, e := me, t := mterm)) AS a
-  FROM plj GROUP BY d, ps, pt, pronoun
-)
-SELECT d AS doc_id, ps AS sent_idx, pt AS tok_idx, pronoun,
-       a.s AS ant_sent, a.b AS ant_tok, a.t AS antecedent
-FROM plb
-"""
-
-
-PASSIVE_AUX = ("is", "are", "was", "were")
-PASSIVE_LEXICON: dict[str, str] = {
-    "activated": "activates",
-    "inhibited": "inhibits",
-    "bound": "binds",
-    "regulated": "regulates",
-    "induced": "induces",
-    "suppressed": "suppresses",
-    "phosphorylated": "phosphorylates",
-    "encoded": "encodes",
-    "targeted": "targets",
-    "blocked": "blocks",
-    "promoted": "promotes",
-    "mediated": "mediates",
-    "modulated": "modulates",
-    "caused": "causes",
-    "treated": "treats",
-}
-
-
-def extract_passive_triples(
-    linked_mentions: DataFrame,
-    sentences: DataFrame,
-    lexicon: dict[str, str] | None = None,
-) -> DataFrame:
-    """(url, sent_idx, subj_id, pred, obj_id) — PASSIVE-voice pattern
-    triples with the roles FLIPPED: for an in-order entity pair
-    (A, B), an 'is|are|was|were <participle> by' phrase in the char
-    gap emits (B, canon(participle), A) — 'mtor is inhibited by
-    rapamycin' yields (rapamycin, inhibits, mtor), the triple
-    extract_predicate_triples gets BACKWARD (it assigns subj by
-    textual order). The standard coverage gap of order-based IE;
-    pairs without a passive phrase emit nothing (this operator is the
-    union partner of the active path, not a replacement).
-
-    Rule contract (mirrored on token indices by the oracle): the
-    passive phrase must span the ENTIRE gap between the pair — the
-    trimmed gap text IS '<aux> <participle> by' (aux, participle,
-    'by' adjacent, anchored to both span boundaries), the same strict
-    adjacency extract_nominal_triples uses. Anchoring is what keeps
-    precision: with >= 3 entities in a sentence ('Z ... A is
-    inhibited by B'), an unanchored scan would also fire for the
-    non-adjacent pair (Z, B) and emit a flipped triple with the wrong
-    agent (ADVICE r3). Same two-shuffle pair plan as
-    extract_predicate_triples + one sentence join; the phrase test is
-    one anchored regexp_extract + map lookup, 100% JVM.
-    """
-    lex = PASSIVE_LEXICON if lexicon is None else lexicon
-    lex_map = F.create_map(
-        *[F.lit(x) for s, c in sorted(lex.items()) for x in (s, c)]
-    )
-    aux = "|".join(PASSIVE_AUX)
-
-    ids = (
-        linked_mentions.where(F.col("entity_id") != "")
-        .repartition(F.col("url"), F.col("sent_idx"))
-        .groupBy("url", "sent_idx", "entity_id")
-        .agg(F.min(F.struct("begin", "end")).alias("first_span"))
-    )
-    per_sent = ids.groupBy("url", "sent_idx").agg(
-        F.array_sort(F.collect_list(F.struct("first_span", "entity_id"))).alias("ents")
-    )
-    n = F.size("ents")
-    pairs = F.flatten(
-        F.transform(
-            F.col("ents"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ents"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x.getField("entity_id").alias("first_id"),
-                    y.getField("entity_id").alias("second_id"),
-                    x.getField("first_span").getField("end").alias("gap_begin"),
-                    y.getField("first_span").getField("begin").alias("gap_end"),
-                ),
-            ),
-        )
-    )
-    exploded = (
-        per_sent.where(n >= 2)
-        .select("url", "sent_idx", F.explode(pairs).alias("p"))
-        .join(sentences.select("url", "sent_idx", "sentence"), ["url", "sent_idx"])
-    )
-    participle = F.expr(
-        "regexp_extract(trim(lower(substring(sentence, p.gap_begin + 1,"
-        " greatest(p.gap_end - p.gap_begin, 0)))),"
-        f" '^(?:{aux}) ([a-z]+) by$', 1)"
-    )
-    canon = F.try_element_at(lex_map, participle)
-    return (
-        exploded.select(
-            "url",
-            "sent_idx",
-            F.col("p.second_id").alias("subj_id"),
-            canon.alias("pred"),
-            F.col("p.first_id").alias("obj_id"),
-        )
-        .where(F.col("pred").isNotNull())
-    )
-
-
-NOMINAL_LEXICON: dict[str, str] = {
-    "activation": "activates",
-    "binding": "binds",
-    "blockade": "blocks",
-    "causation": "causes",
-    "encoding": "encodes",
-    "induction": "induces",
-    "inhibition": "inhibits",
-    "mediation": "mediates",
-    "modulation": "modulates",
-    "phosphorylation": "phosphorylates",
-    "promotion": "promotes",
-    "regulation": "regulates",
-    "suppression": "suppresses",
-    "targeting": "targets",
-    "treatment": "treats",
-}
-
-
-def extract_nominal_triples(
-    linked_mentions: DataFrame,
-    sentences: DataFrame,
-    lexicon: dict[str, str] | None = None,
-) -> DataFrame:
-    """(url, sent_idx, subj_id, pred, obj_id) — NOMINALIZATION pattern
-    triples: '<nominal> of A by B' emits (B, canon(nominal), A) —
-    'inhibition of mtor by rapamycin' yields (rapamycin, inhibits,
-    mtor). Neither the active order rule (the predicate token precedes
-    BOTH entities, so it is never in the inter-span gap
-    extract_predicate_triples scans) nor the passive rule (no aux/
-    participle) covers this shape; it is the third union partner of
-    the triple layer.
-
-    Rule contract (mirrored on token indices by the oracle): for an
-    in-order first-span entity pair (A, B), the characters before A
-    must END with '<nominal> of ' where the nominal maps through the
-    lexicon, and the char gap between A and B must be exactly the
-    token 'by' (trim-equal). All adjacency is strict — 'inhibition of
-    the mtor by ...' or '... by strong rapamycin' do not fire.
-
-    Same two-shuffle pair plan + one sentence join as the active and
-    passive extractors; the prefix/gap checks are regexp_extract +
-    literal-map lookup, 100% JVM codegen.
-    """
-    lex = NOMINAL_LEXICON if lexicon is None else lexicon
-    lex_map = F.create_map(
-        *[F.lit(x) for s, c in sorted(lex.items()) for x in (s, c)]
-    )
-
-    ids = (
-        linked_mentions.where(F.col("entity_id") != "")
-        .repartition(F.col("url"), F.col("sent_idx"))
-        .groupBy("url", "sent_idx", "entity_id")
-        .agg(F.min(F.struct("begin", "end")).alias("first_span"))
-    )
-    per_sent = ids.groupBy("url", "sent_idx").agg(
-        F.array_sort(F.collect_list(F.struct("first_span", "entity_id"))).alias("ents")
-    )
-    n = F.size("ents")
-    pairs = F.flatten(
-        F.transform(
-            F.col("ents"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ents"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x.getField("entity_id").alias("first_id"),
-                    y.getField("entity_id").alias("second_id"),
-                    x.getField("first_span").getField("begin").alias("a_begin"),
-                    x.getField("first_span").getField("end").alias("gap_begin"),
-                    y.getField("first_span").getField("begin").alias("gap_end"),
-                ),
-            ),
-        )
-    )
-    exploded = (
-        per_sent.where(n >= 2)
-        .select("url", "sent_idx", F.explode(pairs).alias("p"))
-        .join(sentences.select("url", "sent_idx", "sentence"), ["url", "sent_idx"])
-    )
-    # chars strictly before A; a_begin is 0-based so substring(s, 1, a_begin)
-    # is exactly that prefix (empty when A starts the sentence)
-    nominal = F.regexp_extract(
-        F.expr("lower(substring(sentence, 1, p.a_begin))"), r"([a-z]+) of $", 1
-    )
-    gap_is_by = (
-        F.lower(
-            F.trim(
-                F.expr(
-                    "substring(sentence, p.gap_begin + 1,"
-                    " greatest(p.gap_end - p.gap_begin, 0))"
-                )
-            )
-        )
-        == "by"
-    )
-    return (
-        exploded.select(
-            "url",
-            "sent_idx",
-            F.col("p.second_id").alias("subj_id"),
-            F.try_element_at(lex_map, nominal).alias("pred"),
-            F.col("p.first_id").alias("obj_id"),
-            gap_is_by.alias("_by"),
-        )
-        .where(F.col("pred").isNotNull() & F.col("_by"))
-        .drop("_by")
-    )
-
-
-def fuse_claims(
-    claims: DataFrame,
-    iters: int = 3,
-    state_round: int = 9,
-) -> DataFrame:
-    """Knowledge fusion by iterative truth discovery (Sums/TruthFinder
-    family, the Knowledge-Vault ingredient the reference pipeline has
-    no analog for): the SAME (subj, pred) slot extracted from many
-    sources carries conflicting objects; estimate per-source trust and
-    per-claim confidence jointly instead of majority-voting every host
-    equally (majority vote = iters=1 with uniform trust, which a spam
-    mirror farm defeats for free).
-
-    Input: claims(source, subj_id, pred, obj_id) — source is typically
-    the url host; rows are deduped here.
-
-    Contract (mirrored verbatim by the DuckDB oracle):
-      * t_0(source) = round(0.5, sr);
-      * support_t(claim) = round(sum of t_t over its sources, sr),
-        n_sources = that count;
-      * slot_mass_t(subj, pred) = round(sum of support over the slot's
-        competing claims, sr);
-      * conf_t(claim) = round(support / slot_mass, sr) — the slot's
-        trust-mass share, in (0, 1];
-      * t_{t+1}(source) = max(round(avg conf_t over the source's
-        claims, sr), 10^-sr) — trusted sources are those whose claims
-        win their slots; the floor keeps slot_mass > 0 on pathological
-        hub slots where a share underflows the state rounding;
-      * after `iters` rounds: confidence = conf_{iters}, is_best marks
-        the slot winner (max confidence, tie -> min obj_id).
-
-    Per-iteration round(sr) is what makes an iterative float algorithm
-    oracle-able at all (operators/graph.pagerank recipe): within one
-    iteration a k-double sum may differ across engines by ~k ulps;
-    rounding snaps both back to identical state before it compounds.
-
-    Output: (subj_id, pred, obj_id, n_sources, confidence, is_best).
-
-    Scale: the claim table is repartitioned ONCE on (subj_id, pred) and
-    localCheckpoint'ed; every iteration reuses that exchange for the
-    slot aggregate. Per iteration: one join keyed on source (uniform —
-    hosts), one (subj,pred,obj) agg and one (subj,pred) agg (both
-    partial-agg absorbed: a hot slot with millions of supporting rows
-    collapses map-side to one partial per task), one source agg. Trust
-    is O(#sources) — it could be broadcast, but stays a join so a
-    billion-host crawl doesn't pin the driver; AQE picks broadcast
-    when it fits. localCheckpoint per iteration caps lineage exactly
-    as pagerank/components do.
-    """
-    if iters < 1:
-        raise ValueError(f"fuse_claims needs iters >= 1: {iters}")
-    floor = 10.0 ** (-state_round)
-    c = (
-        claims.select("source", "subj_id", "pred", "obj_id")
-        .distinct()
-        .repartition("subj_id", "pred")
-        .localCheckpoint(eager=True)
-    )
-    trust = (
-        c.select("source")
-        .distinct()
-        .select("source", F.round(F.lit(0.5), state_round).alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    conf = None
-    for _ in range(iters):
-        sup = (
-            c.join(trust, "source")
-            .groupBy("subj_id", "pred", "obj_id")
-            .agg(
-                F.round(F.sum("t"), state_round).alias("support"),
-                F.count(F.lit(1)).cast("long").alias("n_sources"),
-            )
-        )
-        mass = sup.groupBy("subj_id", "pred").agg(
-            F.round(F.sum("support"), state_round).alias("slot_mass")
-        )
-        conf = sup.join(mass, ["subj_id", "pred"]).select(
-            "subj_id",
-            "pred",
-            "obj_id",
-            "n_sources",
-            F.round(F.col("support") / F.col("slot_mass"), state_round).alias(
-                "confidence"
-            ),
-        )
-        trust = (
-            c.join(
-                conf.select("subj_id", "pred", "obj_id", "confidence"),
-                ["subj_id", "pred", "obj_id"],
-            )
-            .groupBy("source")
-            .agg(
-                F.greatest(
-                    F.round(F.avg("confidence"), state_round), F.lit(floor)
-                ).alias("t")
-            )
-            .localCheckpoint(eager=True)
-        )
-    best = conf.groupBy("subj_id", "pred").agg(
-        F.min(
-            F.struct(
-                (-F.col("confidence")).alias("neg"),
-                F.col("obj_id").alias("o"),
-            )
-        ).alias("b")
-    )
-    return conf.join(best, ["subj_id", "pred"]).select(
-        "subj_id",
-        "pred",
-        "obj_id",
-        "n_sources",
-        "confidence",
-        (F.col("obj_id") == F.col("b.o")).alias("is_best"),
-    )
-
-
-def fuse_claims_oracle_sql(
-    with_prefix: str,
-    iters: int = 3,
-    state_round: int = 9,
-) -> str:
-    """DuckDB twin of fuse_claims; `with_prefix` is a complete WITH
-    chain whose LAST relation is claims(source, subj_id, pred, obj_id).
-    Iterations are unrolled; per-step round({state_round}) keeps both
-    engines on the identical state trajectory (pagerank recipe)."""
-    if iters < 1:
-        raise ValueError(f"fuse_claims needs iters >= 1: {iters}")
-    sr = state_round
-    floor = f"1e-{sr}"
-    parts = [
-        with_prefix,
-        """,
-c AS (SELECT DISTINCT source, subj_id, pred, obj_id FROM claims),
-t0 AS (SELECT DISTINCT source, round(0.5, %d) AS t FROM c)""" % sr,
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f""",
-sup{i} AS (
-  SELECT subj_id, pred, obj_id,
-         round(sum(t.t), {sr}) AS support,
-         count(*)::BIGINT AS n_sources
-  FROM c JOIN t{i - 1} t USING (source)
-  GROUP BY 1, 2, 3
-),
-mass{i} AS (
-  SELECT subj_id, pred, round(sum(support), {sr}) AS slot_mass
-  FROM sup{i} GROUP BY 1, 2
-),
-conf{i} AS (
-  SELECT s.subj_id, s.pred, s.obj_id, s.n_sources,
-         round(s.support / m.slot_mass, {sr}) AS confidence
-  FROM sup{i} s JOIN mass{i} m USING (subj_id, pred)
-),
-t{i} AS (
-  SELECT c.source,
-         greatest(round(avg(f.confidence), {sr}), {floor}) AS t
-  FROM c JOIN conf{i} f USING (subj_id, pred, obj_id)
-  GROUP BY 1
-)"""
-        )
-    parts.append(
-        f""",
-best AS (
-  SELECT subj_id, pred,
-         min(struct_pack(neg := -confidence, o := obj_id)) AS b
-  FROM conf{iters} GROUP BY 1, 2
-)
-SELECT f.subj_id, f.pred, f.obj_id, f.n_sources, f.confidence,
-       (f.obj_id = b.b.o) AS is_best
-FROM conf{iters} f JOIN best b USING (subj_id, pred)
-"""
-    )
-    return "".join(parts)
-
-
-# ---------------------------------------------------------------------------
-# AMIE-style horn-rule mining over the materialized KG edge table.
-# ---------------------------------------------------------------------------
-
-
-def mine_rules(
-    edges: DataFrame,
-    min_support: int = 2,
-    max_chain_degree: int | None = None,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-) -> DataFrame:
-    """Closed horn-rule mining over the KG edge table — the AMIE(+)
-    core (Galarraga et al., WWW 2013) restricted to the three rule
-    shapes that cover most KG-completion deployments:
-
-      imp    p(x,y)            => r(x,y)   (implication/subsumption)
-      inv    p(x,y)            => r(y,x)   (inversion; p = r detects
-                                            symmetric predicates)
-      chain  p(x,y) AND q(y,z) => r(x,z)   (composition)
-
-    Output, one row per rule passing ``support >= min_support``:
-    (rule_type, body_p, body_q, head_r, support, body_size,
-    head_size, pca_size, conf_micro, pca_conf_micro, hc_micro) with
-
-      support         #distinct head-variable groundings where body
-                      AND head hold (set semantics over DISTINCT
-                      (s,p,o); chain bodies dedup (p,q,x,z) first, so
-                      multiple connecting y count once),
-      body_size       #distinct body groundings,
-      head_size       #distinct pairs of the head predicate,
-      pca_size        #body groundings whose head-subject has SOME
-                      head_r edge (the Partial Completeness
-                      Assumption denominator — AMIE's answer to the
-                      open-world problem: missing facts only count
-                      against a rule where the KG is known non-empty
-                      for that subject),
-      conf_micro      support * 1e6 div body_size   (std confidence),
-      pca_conf_micro  support * 1e6 div pca_size    (PCA confidence),
-      hc_micro        support * 1e6 div head_size   (head coverage),
-
-    all exact BIGINTs (the repo-wide *_micro convention) so the DuckDB
-    oracle is bit-identical. ``body_q`` is '' for the 1-atom shapes.
-
-    Scale shape: ONE distinct over (s,p,o), then every statistic is an
-    equi-join + partial-agg count. Join keys are (s,o) pairs, subject
-    ids, or the chain pivot y — entity keys, uniform except hub
-    entities. The rule space itself is tiny (bounded by the predicate
-    vocabulary, P^2 + P^2 + P^3 for P predicates — dozens to a few
-    thousand rows even on open-domain KGs), so every *rollup* is
-    skew-free map-side combining; only the chain body join can
-    explode, on a hub pivot y (a country entity with 1e7 in-edges and
-    1e6 out-edges would ground 1e13 bodies). ``max_chain_degree``
-    is the standard mitigation: pivots whose per-predicate in- or
-    out-degree exceeds the cap are dropped from BOTH chain sides (a
-    stated, oracle-shared semantics change — hub-pivot rules are
-    exactly the near-zero-confidence ones the cap's bias discards;
-    AMIE+ applies the same functionality-driven pruning). Default
-    None = exact, for bounded KGs like the test corpus.
-
-    Reference parity: EasyNER has no rule mining (its KG surface stops
-    at co-occurrence counts, scripts/entity_parser.py:41-42); this is
-    the north-star KG-construction layer's completion/QA step,
-    downstream of aggregate_edges.
-    """
-    if min_support < 1:
-        raise ValueError(f"min_support must be >= 1: {min_support}")
-    t = (
-        edges.select(
-            F.col(subj).alias("s"), F.col(pred).alias("p"), F.col(obj).alias("o")
-        )
-        .distinct()
-    )
-    psize = t.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    sp = t.select("p", "s").distinct()  # (pred, subject) existence
-
-    def _metrics(
-        supp: DataFrame, bsize: DataFrame, pca: DataFrame, rtype: str, has_q: bool
-    ) -> DataFrame:
-        keys = ["p", "q", "hp"] if has_q else ["p", "hp"]
-        out = (
-            supp.join(bsize, keys[:-1])
-            .join(pca, keys)
-            .join(psize.select(F.col("p").alias("hp"), F.col("sz").alias("head_size")), "hp")
-            .where(F.col("support") >= F.lit(min_support))
-        )
-        return out.select(
-            F.lit(rtype).alias("rule_type"),
-            F.col("p").alias("body_p"),
-            (F.col("q") if has_q else F.lit("")).alias("body_q"),
-            F.col("hp").alias("head_r"),
-            "support",
-            "body_size",
-            "head_size",
-            "pca_size",
-            F.expr("(support * 1000000) div body_size").alias("conf_micro"),
-            F.expr("(support * 1000000) div pca_size").alias("pca_conf_micro"),
-            F.expr("(support * 1000000) div head_size").alias("hc_micro"),
-        )
-
-    # imp: p(x,y) => r(x,y), p != r
-    th = t.select("s", F.col("p").alias("hp"), "o")
-    imp_sup = (
-        t.join(th, ["s", "o"])
-        .where(F.col("p") != F.col("hp"))
-        .groupBy("p", "hp")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-    )
-    pair_bsize = psize.select("p", F.col("sz").alias("body_size"))
-    imp_pca = (
-        t.join(sp.select(F.col("s"), F.col("p").alias("hp")), "s")
-        .where(F.col("p") != F.col("hp"))
-        .groupBy("p", "hp")
-        .agg(F.count(F.lit(1)).cast("long").alias("pca_size"))
-    )
-    r_imp = _metrics(imp_sup, pair_bsize, imp_pca, "imp", has_q=False)
-
-    # inv: p(x,y) => r(y,x); p == r allowed (symmetry detection)
-    rev = t.select(
-        F.col("o").alias("s"), F.col("p").alias("hp"), F.col("s").alias("o")
-    )
-    inv_sup = (
-        t.join(rev, ["s", "o"])
-        .groupBy("p", "hp")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-    )
-    inv_pca = (
-        t.join(sp.select(F.col("s").alias("o"), F.col("p").alias("hp")), "o")
-        .groupBy("p", "hp")
-        .agg(F.count(F.lit(1)).cast("long").alias("pca_size"))
-    )
-    r_inv = _metrics(inv_sup, pair_bsize, inv_pca, "inv", has_q=False)
-
-    # chain: p(x,y) AND q(y,z) => r(x,z)
-    mid = t.select(F.col("o").alias("y"), "p", F.col("s").alias("x"))
-    nxt = t.select(F.col("s").alias("y"), F.col("p").alias("q"), F.col("o").alias("z"))
-    if max_chain_degree is not None:
-        cap = F.lit(int(max_chain_degree))
-        hot_in = (
-            t.groupBy(F.col("o").alias("y"), "p")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .where(F.col("_d") > cap)
-            .select("y")
-        )
-        hot_out = (
-            t.groupBy(F.col("s").alias("y"), "p")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .where(F.col("_d") > cap)
-            .select("y")
-        )
-        hot = hot_in.union(hot_out).distinct()
-        mid = mid.join(hot, "y", "left_anti")
-        nxt = nxt.join(hot, "y", "left_anti")
-    body = mid.join(nxt, "y").select("p", "q", "x", "z").distinct()
-    chain_bsize = body.groupBy("p", "q").agg(
-        F.count(F.lit(1)).cast("long").alias("body_size")
-    )
-    heads = t.select(
-        F.col("s").alias("x"), F.col("p").alias("hp"), F.col("o").alias("z")
-    )
-    chain_sup = (
-        body.join(heads, ["x", "z"])
-        .groupBy("p", "q", "hp")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-    )
-    chain_pca = (
-        body.join(sp.select(F.col("s").alias("x"), F.col("p").alias("hp")), "x")
-        .groupBy("p", "q", "hp")
-        .agg(F.count(F.lit(1)).cast("long").alias("pca_size"))
-    )
-    r_chain = _metrics(chain_sup, chain_bsize, chain_pca, "chain", has_q=True)
-
-    return r_imp.unionByName(r_inv).unionByName(r_chain)
-
-
-def mine_rules_oracle_sql(
-    triples_sql: str,
-    min_support: int = 2,
-    max_chain_degree: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`mine_rules`; ``triples_sql`` yields
-    (subj, pred, obj) rows (pre-dedup input is fine). Same CTE per
-    statistic, same integer micro-fractions — bit-identical."""
-    if max_chain_degree is None:
-        mid_src = "SELECT o AS y, p, s AS x FROM t"
-        nxt_src = "SELECT s AS y, p AS q, o AS z FROM t"
-        hot_cte = ""
-    else:
-        cap = int(max_chain_degree)
-        hot_cte = f"""
-hot AS (
-  SELECT DISTINCT y FROM (
-    SELECT o AS y, p, count(*) AS d FROM t GROUP BY o, p HAVING count(*) > {cap}
-    UNION ALL
-    SELECT s AS y, p, count(*) AS d FROM t GROUP BY s, p HAVING count(*) > {cap}
-  )
-),"""
-        mid_src = "SELECT o AS y, p, s AS x FROM t WHERE o NOT IN (SELECT y FROM hot)"
-        nxt_src = (
-            "SELECT s AS y, p AS q, o AS z FROM t WHERE s NOT IN (SELECT y FROM hot)"
-        )
-    return f"""
-WITH t AS MATERIALIZED (
-  SELECT DISTINCT subj AS s, pred AS p, obj AS o FROM ({triples_sql})
-),
-ps AS (SELECT p, count(*)::BIGINT AS sz FROM t GROUP BY p),
-sp AS (SELECT DISTINCT p, s FROM t),{hot_cte}
-imp_sup AS (
-  SELECT a.p, b.p AS hp, count(*)::BIGINT AS support
-  FROM t a JOIN t b ON a.s = b.s AND a.o = b.o AND a.p <> b.p
-  GROUP BY a.p, b.p
-),
-imp_pca AS (
-  SELECT a.p, h.p AS hp, count(*)::BIGINT AS pca_size
-  FROM t a JOIN sp h ON a.s = h.s AND a.p <> h.p
-  GROUP BY a.p, h.p
-),
-inv_sup AS (
-  SELECT a.p, b.p AS hp, count(*)::BIGINT AS support
-  FROM t a JOIN t b ON a.s = b.o AND a.o = b.s
-  GROUP BY a.p, b.p
-),
-inv_pca AS (
-  SELECT a.p, h.p AS hp, count(*)::BIGINT AS pca_size
-  FROM t a JOIN sp h ON a.o = h.s
-  GROUP BY a.p, h.p
-),
-body AS (
-  SELECT DISTINCT m.p, n.q, m.x, n.z
-  FROM ({mid_src}) m JOIN ({nxt_src}) n ON m.y = n.y
-),
-chain_bsize AS (
-  SELECT p, q, count(*)::BIGINT AS body_size FROM body GROUP BY p, q
-),
-chain_sup AS (
-  SELECT c.p, c.q, h.p AS hp, count(*)::BIGINT AS support
-  FROM body c JOIN t h ON c.x = h.s AND c.z = h.o
-  GROUP BY c.p, c.q, h.p
-),
-chain_pca AS (
-  SELECT c.p, c.q, h.p AS hp, count(*)::BIGINT AS pca_size
-  FROM body c JOIN sp h ON c.x = h.s
-  GROUP BY c.p, c.q, h.p
-)
-SELECT 'imp' AS rule_type, i.p AS body_p, '' AS body_q, i.hp AS head_r,
-       i.support, bs.sz AS body_size, hs.sz AS head_size, ip.pca_size,
-       (i.support * 1000000) // bs.sz AS conf_micro,
-       (i.support * 1000000) // ip.pca_size AS pca_conf_micro,
-       (i.support * 1000000) // hs.sz AS hc_micro
-FROM imp_sup i
-JOIN ps bs ON bs.p = i.p
-JOIN ps hs ON hs.p = i.hp
-JOIN imp_pca ip ON ip.p = i.p AND ip.hp = i.hp
-WHERE i.support >= {int(min_support)}
-UNION ALL
-SELECT 'inv', i.p, '', i.hp, i.support, bs.sz, hs.sz, ip.pca_size,
-       (i.support * 1000000) // bs.sz,
-       (i.support * 1000000) // ip.pca_size,
-       (i.support * 1000000) // hs.sz
-FROM inv_sup i
-JOIN ps bs ON bs.p = i.p
-JOIN ps hs ON hs.p = i.hp
-JOIN inv_pca ip ON ip.p = i.p AND ip.hp = i.hp
-WHERE i.support >= {int(min_support)}
-UNION ALL
-SELECT 'chain', c.p, c.q, c.hp, c.support, bs.body_size, hs.sz, cp.pca_size,
-       (c.support * 1000000) // bs.body_size,
-       (c.support * 1000000) // cp.pca_size,
-       (c.support * 1000000) // hs.sz
-FROM chain_sup c
-JOIN chain_bsize bs ON bs.p = c.p AND bs.q = c.q
-JOIN ps hs ON hs.p = c.hp
-JOIN chain_pca cp ON cp.p = c.p AND cp.q = c.q AND cp.hp = c.hp
-WHERE c.support >= {int(min_support)}
-"""
-
-
-def rule_predictions(
-    edges: DataFrame,
-    min_support: int = 2,
-    min_pca_micro: int = 500000,
-    max_chain_degree: int | None = None,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-) -> DataFrame:
-    """KG completion by applying the mined rules: (subj, pred, obj,
-    score_micro, n_rules) — every triple NOT in the KG that at least
-    one rule with ``pca_conf_micro >= min_pca_micro`` (and mining
-    ``min_support``) derives, scored with the best firing rule's PCA
-    confidence and the count of distinct firing rules.
-
-    Shape: rules come from :func:`mine_rules` — a vocabulary-bounded
-    table (never data-sized), so every rule application is a
-    BROADCAST join of rules against the body-grounding frames the
-    miner already defines; then one anti-join against the KG drops
-    known facts and one rollup aggregates per predicted triple.
-    Derivations are set-semantic (body groundings are distinct per
-    rule), so n_rules is an exact distinct-rule count without a
-    distinct aggregate.
-    """
-    t = (
-        edges.select(
-            F.col(subj).alias("s"), F.col(pred).alias("p"), F.col(obj).alias("o")
-        )
-        .distinct()
-    )
-    rules = mine_rules(
-        edges,
-        min_support=min_support,
-        max_chain_degree=max_chain_degree,
-        subj=subj,
-        pred=pred,
-        obj=obj,
-    ).where(F.col("pca_conf_micro") >= F.lit(int(min_pca_micro)))
-
-    imp_rules = F.broadcast(
-        rules.where(F.col("rule_type") == "imp").select(
-            F.col("body_p").alias("p"),
-            F.col("head_r").alias("hp"),
-            F.col("pca_conf_micro").alias("score"),
-        )
-    )
-    inv_rules = F.broadcast(
-        rules.where(F.col("rule_type") == "inv").select(
-            F.col("body_p").alias("p"),
-            F.col("head_r").alias("hp"),
-            F.col("pca_conf_micro").alias("score"),
-        )
-    )
-    chain_rules = F.broadcast(
-        rules.where(F.col("rule_type") == "chain").select(
-            F.col("body_p").alias("p"),
-            F.col("body_q").alias("q"),
-            F.col("head_r").alias("hp"),
-            F.col("pca_conf_micro").alias("score"),
-        )
-    )
-
-    d_imp = t.join(imp_rules, "p").select(
-        "s", F.col("hp").alias("p2"), "o", "score"
-    )
-    d_inv = t.join(inv_rules, "p").select(
-        F.col("o").alias("s"), F.col("hp").alias("p2"), F.col("s").alias("o"), "score"
-    )
-    mid = t.select(F.col("o").alias("y"), "p", F.col("s").alias("x"))
-    nxt = t.select(F.col("s").alias("y"), F.col("p").alias("q"), F.col("o").alias("z"))
-    body = mid.join(nxt, "y").select("p", "q", "x", "z").distinct()
-    d_chain = body.join(chain_rules, ["p", "q"]).select(
-        F.col("x").alias("s"), F.col("hp").alias("p2"), F.col("z").alias("o"), "score"
-    )
-    derived = d_imp.unionByName(d_inv).unionByName(d_chain)
-    known = t.select("s", F.col("p").alias("p2"), "o")
-    novel = derived.join(known, ["s", "p2", "o"], "left_anti")
-    return novel.groupBy("s", "p2", "o").agg(
-        F.max("score").cast("long").alias("score_micro"),
-        F.count(F.lit(1)).cast("long").alias("n_rules"),
-    ).select(
-        F.col("s").alias("subj"),
-        F.col("p2").alias("pred"),
-        F.col("o").alias("obj"),
-        "score_micro",
-        "n_rules",
-    )
-
-
-def rule_predictions_oracle_sql(
-    triples_sql: str,
-    min_support: int = 2,
-    min_pca_micro: int = 500000,
-    max_chain_degree: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`rule_predictions` — composes the miner's
-    oracle as a CTE and re-applies the same three derivation joins."""
-    rules_sql = mine_rules_oracle_sql(
-        triples_sql, min_support=min_support, max_chain_degree=max_chain_degree
-    )
-    return f"""
-WITH t2 AS MATERIALIZED (
-  SELECT DISTINCT subj AS s, pred AS p, obj AS o FROM ({triples_sql})
-),
-rules AS MATERIALIZED (
-  SELECT * FROM ({rules_sql}) WHERE pca_conf_micro >= {int(min_pca_micro)}
-),
-derived AS (
-  SELECT a.s, r.head_r AS p2, a.o, r.pca_conf_micro AS score
-  FROM t2 a JOIN rules r ON r.rule_type = 'imp' AND r.body_p = a.p
-  UNION ALL
-  SELECT a.o AS s, r.head_r, a.s AS o, r.pca_conf_micro
-  FROM t2 a JOIN rules r ON r.rule_type = 'inv' AND r.body_p = a.p
-  UNION ALL
-  SELECT c.x, r.head_r, c.z, r.pca_conf_micro
-  FROM (SELECT DISTINCT m.p, n.q, m.x, n.z
-        FROM (SELECT o AS y, p, s AS x FROM t2) m
-        JOIN (SELECT s AS y, p AS q, o AS z FROM t2) n ON m.y = n.y) c
-  JOIN rules r ON r.rule_type = 'chain' AND r.body_p = c.p AND r.body_q = c.q
-)
-SELECT d.s AS subj, d.p2 AS pred, d.o AS obj,
-       max(d.score)::BIGINT AS score_micro,
-       count(*)::BIGINT AS n_rules
-FROM derived d
-WHERE NOT EXISTS (
-  SELECT 1 FROM t2 k WHERE k.s = d.s AND k.p = d.p2 AND k.o = d.o
-)
-GROUP BY d.s, d.p2, d.o
-"""
-
-
-def predicate_signatures(
-    edges: DataFrame,
-    types: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    entity_col: str = "entity_id",
-    type_col: str = "ent_type",
-    unknown: str = "unknown",
-) -> DataFrame:
-    """Predicate argument-type signature induction — the inverse of
-    :func:`entity_types` (which types nodes FROM predicate usage, this
-    profiles predicates FROM node types): per (pred, subj_type,
-    obj_type) the edge count, the predicate total, the exact
-    share_micro, and an is_dominant flag on the winning signature
-    (ties broken (subj_type, obj_type) ascending via the repo's
-    min(struct) argmax). The schema-induction/QA table: 'inhibits:
-    chemical->gene 92%' is a usable domain/range constraint, and a
-    low-share signature row is a triple-extraction error candidate —
-    the relational face of SHACL-style domain/range validation.
-
-    `types` carries one row per entity (entity_types' contract);
-    untyped entities fall into the `unknown` bucket via left joins,
-    so coverage gaps are visible rather than silently dropped.
-
-    Scale: two entity-keyed equi-joins (uniform but for hub entities
-    — AQE skew-split, the engine-wide contract), then the
-    predicate_cardinality shuffle shape: groupBy (pred, types) with
-    map-side combine absorbing hot predicates (a web-scale pred has
-    billions of edges but <= |types|^2 signature rows per map task),
-    then a predicate rollup of the already-collapsed table.
-
-    Reference parity: no analog (the reference's classes are NER-model
-    outputs, scripts/ner_inference.py); this is north-star KG QA over
-    aggregate_edges + entity_types.
-    """
-    t = edges.select(
-        F.col(subj).alias("_s"), F.col(pred).alias("pred"), F.col(obj).alias("_o")
-    )
-    ty_s = types.select(
-        F.col(entity_col).alias("_s"), F.col(type_col).alias("_st")
-    )
-    ty_o = types.select(
-        F.col(entity_col).alias("_o"), F.col(type_col).alias("_ot")
-    )
-    sig = (
-        t.join(ty_s, "_s", "left")
-        .join(ty_o, "_o", "left")
-        .groupBy(
-            "pred",
-            F.coalesce("_st", F.lit(unknown)).alias("subj_type"),
-            F.coalesce("_ot", F.lit(unknown)).alias("obj_type"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    roll = sig.groupBy("pred").agg(
-        F.sum("n").cast("long").alias("total"),
-        F.min(
-            F.struct(
-                (-F.col("n")).alias("neg"),
-                F.col("subj_type").alias("st"),
-                F.col("obj_type").alias("ot"),
-            )
-        ).alias("_dom"),
-    )
-    return sig.join(roll, "pred").select(
-        "pred",
-        "subj_type",
-        "obj_type",
-        "n",
-        "total",
-        F.expr("(n * 1000000) div total").alias("share_micro"),
-        (
-            (F.col("n") == -F.col("_dom.neg"))
-            & (F.col("subj_type") == F.col("_dom.st"))
-            & (F.col("obj_type") == F.col("_dom.ot"))
-        ).alias("is_dominant"),
-    )
-
-
-def predicate_signatures_oracle_sql(
-    triples_sql: str, types_sql: str, unknown: str = "unknown"
-) -> str:
-    """DuckDB twin of :func:`predicate_signatures`; `triples_sql`
-    yields (subj, pred, obj), `types_sql` yields (entity_id,
-    ent_type) one row per entity."""
-    u = unknown.replace("'", "''")
-    return f"""
-WITH t AS MATERIALIZED (SELECT subj, pred, obj FROM ({triples_sql})),
-ty AS MATERIALIZED (SELECT entity_id, ent_type FROM ({types_sql})),
-sig AS (
-  SELECT t.pred,
-         coalesce(s.ent_type, '{u}') AS subj_type,
-         coalesce(o.ent_type, '{u}') AS obj_type,
-         count(*)::BIGINT AS n
-  FROM t
-  LEFT JOIN ty s ON s.entity_id = t.subj
-  LEFT JOIN ty o ON o.entity_id = t.obj
-  GROUP BY 1, 2, 3
-),
-roll AS (
-  SELECT pred, sum(n)::BIGINT AS total,
-         min(struct_pack(neg := -n, st := subj_type, ot := obj_type)) AS dom
-  FROM sig GROUP BY pred
-)
-SELECT s.pred, s.subj_type, s.obj_type, s.n, r.total,
-       (s.n * 1000000) // r.total AS share_micro,
-       (s.n = -r.dom.neg AND s.subj_type = r.dom.st
-        AND s.obj_type = r.dom.ot) AS is_dominant
-FROM sig s JOIN roll r ON r.pred = s.pred
-"""
-
-
-def predicate_equivalences(
-    edges: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    min_overlap: int = 1,
-) -> DataFrame:
-    """Predicate synonym / inverse detection by pair-set overlap — the
-    ontology-alignment step a web-scale KG needs because crawled
-    predicates are surface strings ('acquired' vs 'bought',
-    'employs' vs 'works_for' flipped): per unordered predicate pair
-    emit kind='equiv' overlap of the DISTINCT (subj, obj) pair sets
-    (pred_a < pred_b) and kind='inverse' overlap of A's pairs with
-    B's REVERSED pairs (pred_a <= pred_b; pred_a == pred_b is
-    symmetric-predicate detection — n_both then counts DIRECTED pairs
-    whose reverse also exists, so an involution scores
-    jaccard_micro=1_000_000). Scores are exact BIGINT micro-units:
-    jaccard over the pair-set union, plus both containments
-    (a_in_b_micro = n_both/n_a) so subset predicates ('city_of' ⊂
-    'located_in') surface even when Jaccard is low. This is the
-    length-1 specialization of :func:`mine_rules` (imp/inv shapes)
-    restricted to pair-set algebra — kept separate because it needs
-    no head-variable accounting and emits containment both ways.
-
-    Scale: dedup to distinct (pred, subj, obj) once (one shuffle),
-    self-join on the (subj, obj) pair key — a pair key appears at
-    most |pred-vocab| times per side, so fan-out per key is bounded
-    by vocab^2, not data; groupBy (pred_a, pred_b, kind) collapses
-    map-side to <= vocab^2 rows per task; per-predicate totals are a
-    bounded table joined broadcast. No driver collect.
-
-    Reference parity: no analog (the reference emits one fixed
-    'co-occurs' relation, scripts/entity_parser.py:41-42); north-star
-    canonicalization layer over aggregate_edges output.
-    """
-    pairs = edges.select(
-        F.col(pred).alias("p"), F.col(subj).alias("s"), F.col(obj).alias("o")
-    ).distinct()
-    tot = pairs.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("n"))
-
-    a = pairs.select(F.col("p").alias("pa"), "s", "o")
-    b = pairs.select(F.col("p").alias("pb"), "s", "o")
-    eq = (
-        a.join(b, ["s", "o"])
-        .where(F.col("pa") < F.col("pb"))
-        .select("pa", "pb", F.lit("equiv").alias("kind"))
-    )
-    brev = pairs.select(
-        F.col("p").alias("pb"), F.col("o").alias("s"), F.col("s").alias("o")
-    )
-    inv = (
-        a.join(brev, ["s", "o"])
-        .where(F.col("pa") <= F.col("pb"))
-        .select("pa", "pb", F.lit("inverse").alias("kind"))
-    )
-    both = (
-        eq.unionByName(inv)
-        .groupBy("pa", "pb", "kind")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-        .where(F.col("n_both") >= min_overlap)
-    )
-    ta = tot.select(F.col("p").alias("pa"), F.col("n").alias("n_a"))
-    tb = tot.select(F.col("p").alias("pb"), F.col("n").alias("n_b"))
-    return (
-        both.join(F.broadcast(ta), "pa")
-        .join(F.broadcast(tb), "pb")
-        .select(
-            F.col("pa").alias("pred_a"),
-            F.col("pb").alias("pred_b"),
-            "kind",
-            "n_a",
-            "n_b",
-            "n_both",
-            F.expr("(n_both * 1000000) div (n_a + n_b - n_both)").alias(
-                "jaccard_micro"
-            ),
-            F.expr("(n_both * 1000000) div n_a").alias("a_in_b_micro"),
-            F.expr("(n_both * 1000000) div n_b").alias("b_in_a_micro"),
-        )
-    )
-
-
-def predicate_equivalences_oracle_sql(
-    triples_sql: str, min_overlap: int = 1
-) -> str:
-    """DuckDB twin of :func:`predicate_equivalences`; `triples_sql`
-    yields (subj, pred, obj)."""
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT DISTINCT pred AS p, subj AS s, obj AS o FROM ({triples_sql})
-),
-tot AS (SELECT p, count(*)::BIGINT AS n FROM pairs GROUP BY p),
-eq AS (
-  SELECT a.p AS pa, b.p AS pb, 'equiv' AS kind
-  FROM pairs a JOIN pairs b ON a.s = b.s AND a.o = b.o AND a.p < b.p
-),
-inv AS (
-  SELECT a.p AS pa, b.p AS pb, 'inverse' AS kind
-  FROM pairs a JOIN pairs b ON a.s = b.o AND a.o = b.s AND a.p <= b.p
-),
-ovl AS (
-  SELECT pa, pb, kind, count(*)::BIGINT AS n_both
-  FROM (SELECT * FROM eq UNION ALL SELECT * FROM inv)
-  GROUP BY 1, 2, 3
-  HAVING count(*) >= {min_overlap}
-)
-SELECT b.pa AS pred_a, b.pb AS pred_b, b.kind,
-       ta.n AS n_a, tb.n AS n_b, b.n_both,
-       (b.n_both * 1000000) // (ta.n + tb.n - b.n_both) AS jaccard_micro,
-       (b.n_both * 1000000) // ta.n AS a_in_b_micro,
-       (b.n_both * 1000000) // tb.n AS b_in_a_micro
-FROM ovl b JOIN tot ta ON ta.p = b.pa JOIN tot tb ON tb.p = b.pb
-"""
-
-
-def infer_entity_types(
-    edges: DataFrame,
-    types: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    entity_col: str = "entity_id",
-    type_col: str = "ent_type",
-) -> DataFrame:
-    """Type propagation to UNTYPED entities via predicate-signature
-    votes — the KG-completion companion of
-    :func:`predicate_signatures` (which profiles predicates from
-    typed nodes; this types nodes from predicate profiles). For every
-    entity that appears in `edges` but not in `types`: each of its
-    subject occurrences under predicate p casts n_subj(p, ty) votes
-    for type ty (the count of TYPED subjects of type ty under p), and
-    each object occurrence casts n_obj(p, ty). All-BIGINT products
-    and sums — exact, order-independent, engine-checkable. Output one
-    row per (entity_id, candidate type) with votes, total, exact
-    share_micro, and is_best on the argmax (ties break on ent_type
-    ascending via the repo's min(struct) rule). Entities whose every
-    (pred, role) has zero typed participants emit no rows (no
-    evidence — visible as absence, never a fabricated type).
-
-    Scale: the (pred, role, type) vote table is bounded by
-    |pred-vocab| x |type-vocab| x 2 -> broadcast. The untyped
-    occurrence table is repartitioned ONCE on entity_id; all three
-    downstream groupBys key on an entity_id prefix, so
-    EnsureRequirements inserts no further exchange (the
-    extract_triples single-exchange pattern). Hub entities collapse
-    map-side to <= vocab-bounded rows per task.
-
-    Reference parity: no analog (reference types come only from the
-    NER model's class head, scripts/ner_inference.py); north-star
-    node-table enrichment.
-    """
-    t = edges.select(
-        F.col(subj).alias("_s"), F.col(pred).alias("p"), F.col(obj).alias("_o")
-    )
-    ty = types.select(
-        F.col(entity_col).alias("eid"), F.col(type_col).alias("ty")
-    )
-    sig = (
-        t.join(ty.withColumnRenamed("eid", "_s"), "_s")
-        .groupBy("p", "ty")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select("p", F.lit("s").alias("role"), "ty", "n")
-    ).unionByName(
-        t.join(ty.withColumnRenamed("eid", "_o"), "_o")
-        .groupBy("p", "ty")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select("p", F.lit("o").alias("role"), "ty", "n")
-    )
-    occ = t.select(
-        F.col("_s").alias("eid"), "p", F.lit("s").alias("role")
-    ).unionByName(t.select(F.col("_o").alias("eid"), "p", F.lit("o").alias("role")))
-    cnt = (
-        occ.join(ty.select("eid"), "eid", "left_anti")
-        .repartition("eid")
-        .groupBy("eid", "p", "role")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    votes = (
-        cnt.join(F.broadcast(sig), ["p", "role"])
-        .groupBy("eid", "ty")
-        .agg(F.sum(F.col("m") * F.col("n")).cast("long").alias("votes"))
-    )
-    roll = votes.groupBy("eid").agg(
-        F.sum("votes").cast("long").alias("total"),
-        F.min(
-            F.struct((-F.col("votes")).alias("neg"), F.col("ty").alias("t"))
-        ).alias("_best"),
-    )
-    return votes.join(roll, "eid").select(
-        F.col("eid").alias("entity_id"),
-        F.col("ty").alias("ent_type"),
-        "votes",
-        "total",
-        F.expr("(votes * 1000000) div total").alias("share_micro"),
-        (
-            (F.col("votes") == -F.col("_best.neg"))
-            & (F.col("ty") == F.col("_best.t"))
-        ).alias("is_best"),
-    )
-
-
-def infer_entity_types_oracle_sql(triples_sql: str, types_sql: str) -> str:
-    """DuckDB twin of :func:`infer_entity_types`; `triples_sql` yields
-    (subj, pred, obj), `types_sql` yields (entity_id, ent_type)."""
-    return f"""
-WITH t AS MATERIALIZED (SELECT subj, pred AS p, obj FROM ({triples_sql})),
-ty AS MATERIALIZED (SELECT entity_id AS eid, ent_type AS ty
-                    FROM ({types_sql})),
-sig AS (
-  SELECT p, 's' AS role, s.ty, count(*)::BIGINT AS n
-  FROM t JOIN ty s ON s.eid = t.subj GROUP BY 1, 2, 3
-  UNION ALL
-  SELECT p, 'o' AS role, o.ty, count(*)::BIGINT AS n
-  FROM t JOIN ty o ON o.eid = t.obj GROUP BY 1, 2, 3
-),
-occ AS (
-  SELECT subj AS eid, p, 's' AS role FROM t
-  UNION ALL
-  SELECT obj AS eid, p, 'o' AS role FROM t
-),
-cnt AS (
-  SELECT eid, p, role, count(*)::BIGINT AS m FROM occ
-  WHERE eid NOT IN (SELECT eid FROM ty)
-  GROUP BY 1, 2, 3
-),
-votes AS (
-  SELECT c.eid, s.ty, sum(c.m * s.n)::BIGINT AS votes
-  FROM cnt c JOIN sig s ON s.p = c.p AND s.role = c.role
-  GROUP BY 1, 2
-),
-roll AS (
-  SELECT eid, sum(votes)::BIGINT AS total,
-         min(struct_pack(neg := -votes, t := ty)) AS best
-  FROM votes GROUP BY eid
-)
-SELECT v.eid AS entity_id, v.ty AS ent_type, v.votes, r.total,
-       (v.votes * 1000000) // r.total AS share_micro,
-       (v.votes = -r.best.neg AND v.ty = r.best.t) AS is_best
-FROM votes v JOIN roll r ON r.eid = v.eid
-"""
-
-
 def entity_summaries(
     edges: DataFrame,
     k: int = 5,
@@ -3323,197 +1075,6 @@ SELECT entity_id, rank, pred, obj, pred_count FROM r WHERE rank <= {int(k)}
 """
 
 
-def predicate_support_profile(
-    triples: DataFrame,
-    pred: str = "pred",
-    source_col: str = "host",
-) -> DataFrame:
-    """Per-predicate source-diversity QA: n_facts, n_sources (exact
-    distinct), top_source and its exact share_micro — the provenance
-    lens on the edge table. A predicate asserted 10^6 times by ONE
-    host is a template artifact or spam campaign, not knowledge
-    (the fuse_claims intuition at schema granularity); surfacing
-    single-source predicates is the cheapest KG-poisoning tripwire a
-    crawl-scale pipeline can run.
-
-    Scale: one groupBy (pred, source) with map-side combine absorbing
-    hot predicates (<= |preds| x |sources-per-task| rows shipped),
-    then a predicate rollup of the collapsed table; top source via the
-    repo's min(struct) argmax — no window, no second scan.
-
-    Reference parity: no analog; north-star edge-table QA beside
-    :func:`predicate_signatures` (types) and
-    :func:`predicate_equivalences` (synonymy).
-    """
-    ps = (
-        triples.groupBy(
-            F.col(pred).alias("pred"), F.col(source_col).alias("src")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    roll = ps.groupBy("pred").agg(
-        F.sum("n").cast("long").alias("n_facts"),
-        F.count(F.lit(1)).cast("long").alias("n_sources"),
-        F.min(
-            F.struct((-F.col("n")).alias("neg"), F.col("src").alias("s"))
-        ).alias("_top"),
-    )
-    return roll.select(
-        "pred",
-        "n_facts",
-        "n_sources",
-        F.col("_top.s").alias("top_source"),
-        F.expr("((-_top.neg) * 1000000) div n_facts").alias(
-            "top_share_micro"
-        ),
-        (F.col("n_sources") == 1).alias("single_source"),
-    )
-
-
-def predicate_support_profile_oracle_sql(
-    triples_sql: str, source_col: str = "host"
-) -> str:
-    """DuckDB twin of :func:`predicate_support_profile`; `triples_sql`
-    yields (pred, <source_col>)."""
-    return f"""
-WITH ps AS (
-  SELECT pred, {source_col} AS src, count(*)::BIGINT AS n
-  FROM ({triples_sql}) GROUP BY 1, 2
-),
-roll AS (
-  SELECT pred, sum(n)::BIGINT AS n_facts, count(*)::BIGINT AS n_sources,
-         min(struct_pack(neg := -n, s := src)) AS top
-  FROM ps GROUP BY pred
-)
-SELECT pred, n_facts, n_sources, top.s AS top_source,
-       ((-top.neg) * 1000000) // n_facts AS top_share_micro,
-       (n_sources = 1) AS single_source
-FROM roll
-"""
-
-
-def validate_shapes(
-    edges: DataFrame,
-    types: DataFrame,
-    shapes: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    entity_col: str = "entity_id",
-    type_col: str = "ent_type",
-) -> DataFrame:
-    """SHACL-lite shape validation — the unified QA gate over the
-    edge table. `shapes` declares per-predicate constraints
-    (pred, domain_type, range_type, max_out): '' disables a type
-    constraint, max_out <= 0 disables the cardinality cap (explicit
-    sentinels, not NULLs, so Spark and the oracle share one equality
-    semantics). Emits one row per violation:
-
-      kind='domain' / 'range' — an edge whose typed subject/object
-        contradicts the declared type (detail = the actual type;
-        UNTYPED endpoints are unverifiable and never flagged — the
-        typing gap is visible in predicate_signatures' unknown
-        bucket, not here);
-      kind='max_out' — a (subj, pred) whose out-degree exceeds
-        max_out (obj='', detail = the count).
-
-    The relational face of SHACL sh:class / sh:maxCount — the checks
-    :func:`functional_violations` (max_out=1 special case) and
-    :func:`predicate_signatures` (induced, not declared) bracket.
-
-    Scale: shapes is vocabulary-bounded -> broadcast; type joins are
-    the entity-keyed equi-joins of predicate_signatures (AQE
-    skew-split); the out-degree groupBy collapses map-side per
-    (subj, pred). No window, no driver collect.
-
-    Reference parity: no analog; north-star edge-table QA.
-    """
-    t = edges.select(
-        F.col(subj).alias("s"), F.col(pred).alias("pred"), F.col(obj).alias("o")
-    )
-    sh = F.broadcast(
-        shapes.select(
-            F.col("pred"),
-            F.col("domain_type").alias("_dom"),
-            F.col("range_type").alias("_rng"),
-            F.col("max_out").cast("long").alias("_max"),
-        )
-    )
-    ty_s = types.select(
-        F.col(entity_col).alias("s"), F.col(type_col).alias("_st")
-    )
-    ty_o = types.select(
-        F.col(entity_col).alias("o"), F.col(type_col).alias("_ot")
-    )
-    constrained = t.join(sh, "pred")
-    dom = (
-        constrained.where(F.col("_dom") != "")
-        .join(ty_s, "s")
-        .where(F.col("_st") != F.col("_dom"))
-        .select(
-            F.lit("domain").alias("kind"),
-            "pred",
-            F.col("s").alias("subj"),
-            F.col("o").alias("obj"),
-            F.col("_st").alias("detail"),
-        )
-    )
-    rng = (
-        constrained.where(F.col("_rng") != "")
-        .join(ty_o, "o")
-        .where(F.col("_ot") != F.col("_rng"))
-        .select(
-            F.lit("range").alias("kind"),
-            "pred",
-            F.col("s").alias("subj"),
-            F.col("o").alias("obj"),
-            F.col("_ot").alias("detail"),
-        )
-    )
-    card = (
-        constrained.where(F.col("_max") > 0)
-        .groupBy("s", "pred", "_max")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .where(F.col("n") > F.col("_max"))
-        .select(
-            F.lit("max_out").alias("kind"),
-            "pred",
-            F.col("s").alias("subj"),
-            F.lit("").alias("obj"),
-            F.col("n").cast("string").alias("detail"),
-        )
-    )
-    return dom.unionByName(rng).unionByName(card)
-
-
-def validate_shapes_oracle_sql(
-    triples_sql: str, types_sql: str, shapes_sql: str
-) -> str:
-    """DuckDB twin of :func:`validate_shapes`; inputs yield
-    (subj, pred, obj), (entity_id, ent_type), and
-    (pred, domain_type, range_type, max_out)."""
-    return f"""
-WITH t AS MATERIALIZED (SELECT subj AS s, pred, obj AS o FROM ({triples_sql})),
-ty AS MATERIALIZED (SELECT entity_id, ent_type FROM ({types_sql})),
-sh AS MATERIALIZED (SELECT pred, domain_type, range_type,
-                           max_out::BIGINT AS max_out FROM ({shapes_sql})),
-c AS (SELECT t.*, sh.domain_type, sh.range_type, sh.max_out
-      FROM t JOIN sh ON sh.pred = t.pred)
-SELECT 'domain' AS kind, pred, s AS subj, o AS obj, st.ent_type AS detail
-FROM c JOIN ty st ON st.entity_id = c.s
-WHERE domain_type != '' AND st.ent_type != domain_type
-UNION ALL
-SELECT 'range', pred, s, o, ot.ent_type
-FROM c JOIN ty ot ON ot.entity_id = c.o
-WHERE range_type != '' AND ot.ent_type != range_type
-UNION ALL
-SELECT 'max_out', pred, s, '', CAST(n AS VARCHAR)
-FROM (SELECT s, pred, max_out, count(*)::BIGINT AS n
-      FROM c WHERE max_out > 0 GROUP BY 1, 2, 3)
-WHERE n > max_out
-"""
-
-
 def schema_graph(
     triples: DataFrame,
     types: DataFrame,
@@ -3527,9 +1088,8 @@ def schema_graph(
     endpoint types and rolled up, with exact distinct-participant
     counts per quotient edge. The schema summary a KG consumer reads
     FIRST (what relates to what, and how broadly), and the
-    size-estimation input a BGP planner (match_patterns) would use;
-    complements predicate_signatures (per-pred argmax shares) by
-    keeping the full type x pred x type matrix. Untyped entities
+    size-estimation input a BGP planner (match_patterns) would use,
+    as the full type x pred x type matrix. Untyped entities
     roll up under 'unknown' rather than dropping edges — the quotient
     must cover the instance graph.
 
@@ -3764,107 +1324,6 @@ WHERE m.src < m.dst
 """
 
 
-def temporal_functional_violations(
-    triples: DataFrame,
-    constraints: list[tuple[str, str]],
-    epoch_col: str = "epoch",
-) -> DataFrame:
-    """(pred, kind, entity, epoch, n_values, first_value, last_value)
-    — the TEMPORAL refinement of functional_violations: a functional
-    conflict only counts when the contradictory values are asserted
-    in the SAME crawl epoch. "The capital moved between epochs" is
-    history (edge_history's status column tracks it); "two capitals
-    claimed in one epoch" is an extraction error — this table is the
-    per-epoch error feed an incremental-KG ingest reviews before
-    folding an epoch in.
-
-    Same contracts as functional_violations: kinds 'functional' /
-    'inverse_functional'; counts are exact because the per-epoch
-    DISTINCT projection precedes the rollup; min/max values as repair
-    anchors; no collect_set (O(1) state per key).
-
-    Scale: the declared-predicate isin pushes to the scan; then ONE
-    distinct + ONE composite-key rollup per kind on
-    (pred, entity, epoch) — epochs bound the key space, partial aggs
-    absorb hub entities; kinds union with no further shuffle.
-    """
-    kinds = {k for _, k in constraints}
-    bad = kinds - {"functional", "inverse_functional"}
-    if bad:
-        raise ValueError(f"unknown constraint kind(s): {sorted(bad)!r}")
-
-    def _side(kind: str, key: str, val: str) -> DataFrame:
-        preds = sorted(p for p, k in constraints if k == kind)
-        if not preds:
-            return None
-        return (
-            triples.where(F.col("pred").isin(preds))
-            .select(
-                "pred",
-                F.col(key).alias("entity"),
-                F.col(epoch_col).cast("long").alias("epoch"),
-                F.col(val).alias("_v"),
-            )
-            .distinct()
-            .groupBy("pred", "entity", "epoch")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_values"),
-                F.min("_v").alias("first_value"),
-                F.max("_v").alias("last_value"),
-            )
-            .where(F.col("n_values") > 1)
-            .select(
-                "pred",
-                F.lit(kind).alias("kind"),
-                "entity",
-                "epoch",
-                "n_values",
-                "first_value",
-                "last_value",
-            )
-        )
-
-    f = _side("functional", "subj", "obj")
-    inv = _side("inverse_functional", "obj", "subj")
-    if f is None:
-        return inv
-    if inv is None:
-        return f
-    return f.unionByName(inv)
-
-
-def temporal_functional_violations_oracle_sql(
-    triples_sql: str, constraints: list[tuple[str, str]]
-) -> str:
-    """DuckDB twin of :func:`temporal_functional_violations`;
-    `triples_sql` yields (subj, pred, obj, epoch)."""
-    parts = []
-    for kind, key, val in (
-        ("functional", "subj", "obj"),
-        ("inverse_functional", "obj", "subj"),
-    ):
-        preds = sorted(p for p, k in constraints if k == kind)
-        if not preds:
-            continue
-        in_list = ", ".join(f"'{p}'" for p in preds)
-        parts.append(
-            f"""
-SELECT pred, '{kind}' AS kind, entity, epoch,
-       count(*)::BIGINT AS n_values,
-       min(v) AS first_value, max(v) AS last_value
-FROM (SELECT DISTINCT pred, {key} AS entity, epoch::BIGINT AS epoch,
-             {val} AS v
-      FROM tfv_t WHERE pred IN ({in_list}))
-GROUP BY pred, entity, epoch
-HAVING count(*) > 1"""
-        )
-    body = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH tfv_t AS ({triples_sql})
-{body}
-"""
-
-
 def match_patterns_when(
     edges: DataFrame,
     patterns: list[tuple[str, str, str]],
@@ -3891,8 +1350,7 @@ def match_patterns_when(
     dedup). Integer-exact.
 
     Shape: ONE rollup of the stream to distinct (s, p, o, min epoch)
-    — the same materialization edge_history keeps, so at scale this
-    reads the maintained table instead — then the standard pattern
+    — then the standard pattern
     equi-joins with each frame carrying its _e column, and
     first_epoch = greatest(...) in the final projection. Join order
     via the same greedy planner as match_patterns.

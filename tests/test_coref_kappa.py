@@ -1,59 +1,6 @@
-"""Pronoun antecedent links and Cohen's kappa."""
+"""Cohen's kappa."""
 
 from easyner_spark.operators.evaluate import cohens_kappa
-from easyner_spark.operators.triples import pronoun_links
-
-
-def _toks(spark, rows):
-    return spark.createDataFrame(
-        rows, ["doc_id", "sent_idx", "tok_idx", "tok"]
-    )
-
-
-def _ments(spark, rows):
-    return spark.createDataFrame(
-        rows, ["doc_id", "sent_idx", "begin_tok", "end_tok", "term"]
-    )
-
-
-def test_pronoun_links_nearest_preceding(spark):
-    toks = _toks(
-        spark,
-        [
-            (1, 0, 0, "rapamycin"), (1, 0, 1, "works"),
-            (1, 1, 0, "it"), (1, 1, 1, "inhibits"), (1, 1, 2, "mtor"),
-            (1, 2, 0, "they"),
-        ],
-    )
-    ments = _ments(
-        spark, [(1, 0, 0, 1, "rapamycin"), (1, 1, 2, 3, "mtor")]
-    )
-    out = {
-        (r.sent_idx, r.tok_idx): (r.pronoun, r.antecedent, r.ant_sent)
-        for r in pronoun_links(toks, ments).collect()
-    }
-    # 'it' at sent 1 tok 0: mtor is SAME sentence but at tok 2 (after),
-    # so the antecedent is rapamycin from sent 0
-    assert out[(1, 0)] == ("it", "rapamycin", 0)
-    # 'they' at sent 2: nearest preceding mention is mtor (sent 1)
-    assert out[(2, 0)] == ("they", "mtor", 1)
-
-
-def test_pronoun_links_lookback_and_ties(spark):
-    toks = _toks(spark, [(1, 5, 0, "it")])
-    ments = _ments(
-        spark,
-        [
-            (1, 1, 0, 1, "far"),            # outside lookback 2
-            (1, 4, 0, 1, "near"),
-            (1, 4, 0, 2, "nearer-longer"),  # same begin, longer span wins
-        ],
-    )
-    out = pronoun_links(toks, ments, lookback=2).collect()
-    assert len(out) == 1 and out[0].antecedent == "nearer-longer"
-    # nothing within lookback -> no row (unresolved pronouns drop)
-    none = pronoun_links(toks, ments, lookback=0).collect()
-    assert none == []
 
 
 def test_cohens_kappa(spark):
@@ -83,4 +30,3 @@ def test_cohens_kappa_perfect_degenerate(spark):
     )
     row = cohens_kappa(pred, pred).collect()[0]
     assert row.kappa == 1.0
-

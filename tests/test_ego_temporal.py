@@ -1,9 +1,8 @@
-"""Ego-subgraph extraction and per-epoch functional conflicts."""
+"""Ego-subgraph extraction, core numbers and the DOT sink."""
 
 import pytest
 
 from easyner_spark.operators.graph import ego_subgraph
-from easyner_spark.operators.triples import temporal_functional_violations
 
 
 def test_ego_subgraph_induced_edges(spark):
@@ -29,36 +28,6 @@ def test_ego_subgraph_multi_seed_and_validation(spark):
     assert out == {("a", "b"), ("x", "y")}
     with pytest.raises(ValueError, match="at least one seed"):
         ego_subgraph(e, ())
-
-
-def test_temporal_functional_violations(spark):
-    rows = [
-        # epoch 1: s1 capital_of two values -> violation
-        ("s1", "capital_of", "x", 1),
-        ("s1", "capital_of", "y", 1),
-        # epoch 2: s1 only one value -> fine (the capital "moved")
-        ("s1", "capital_of", "y", 2),
-        # duplicate assertion within the epoch must not double-count
-        ("s1", "capital_of", "y", 2),
-        # inverse-functional: two subjects for object o in epoch 1
-        ("a", "id_of", "o", 1),
-        ("b", "id_of", "o", 1),
-        # undeclared predicate ignored
-        ("s1", "knows", "z", 1),
-        ("s1", "knows", "w", 1),
-    ]
-    t = spark.createDataFrame(rows, ["subj", "pred", "obj", "epoch"])
-    out = temporal_functional_violations(
-        t,
-        [("capital_of", "functional"), ("id_of", "inverse_functional")],
-    ).collect()
-    got = {(r.pred, r.kind, r.entity, r.epoch): (r.n_values, r.first_value, r.last_value) for r in out}
-    assert got == {
-        ("capital_of", "functional", "s1", 1): (2, "x", "y"),
-        ("id_of", "inverse_functional", "o", 1): (2, "a", "b"),
-    }
-    with pytest.raises(ValueError, match="unknown constraint"):
-        temporal_functional_violations(t, [("p", "nope")])
 
 
 def test_core_numbers_triangle_with_tail(spark):

@@ -15,11 +15,7 @@ from easyner_spark.operators.evaluate import (
 from easyner_spark.operators.nel import canonicalize_mentions, link_entities, primary_alias
 from easyner_spark.operators.ner_dict import dict_ner
 from easyner_spark.operators.splitter import split_sentences
-from easyner_spark.operators.triples import (
-    aggregate_edges,
-    extract_predicate_triples,
-    extract_triples,
-)
+from easyner_spark.operators.triples import aggregate_edges, extract_triples
 
 
 @pytest.fixture(scope="module")
@@ -84,51 +80,6 @@ def test_aggregate_edges_provenance(spark, fx, mentions_df, alias_df):
     assert len(merged) == len(edges) == len(gold)
     assert (merged["support"] == merged["support_g"]).all()
     assert (merged["doc_count"] == merged["doc_count_g"]).all()
-
-
-def test_predicate_triples_lexicon_and_fallback(spark):
-    """Pattern rule: pred = first lexicon verb strictly between the two
-    entities' first spans, else the co-occurrence fallback."""
-    sents = spark.createDataFrame(
-        [("u", 0, "AKT1 inhibits MTOR near rapamycin")],
-        "url string, sent_idx int, sentence string",
-    )
-    linked = spark.createDataFrame(
-        [
-            ("u", 0, "KB:A", 0, 4),
-            ("u", 0, "KB:B", 14, 18),
-            ("u", 0, "KB:C", 24, 33),
-        ],
-        "url string, sent_idx int, entity_id string, begin int, end int",
-    )
-    out = {
-        (r["subj_id"], r["obj_id"]): r["pred"]
-        for r in extract_predicate_triples(linked, sents).collect()
-    }
-    assert out == {
-        ("KB:A", "KB:B"): "inhibits",
-        # (A, C) gap is chars [4, 24) = " inhibits MTOR near ": first lexicon hit wins
-        ("KB:A", "KB:C"): "inhibits",
-        # (B, C) gap " near " has no lexicon verb -> fallback
-        ("KB:B", "KB:C"): "co_occurs_with",
-    }
-
-
-def test_predicate_triples_pairs_match_cooccurrence(spark, pages_df, mentions_df, alias_df):
-    """Same pair set as extract_triples — the predicate join only
-    decorates; it never adds or drops a co-occurrence pair."""
-    from easyner_spark.operators.splitter import split_sentences as _ss
-
-    sents = _ss(pages_df)
-    linked = link_entities(mentions_df, primary_alias(alias_df), keep_unmatched=False)
-    a = extract_triples(linked).select("url", "sent_idx", "subj_id", "obj_id").toPandas()
-    b = (
-        extract_predicate_triples(linked, sents)
-        .select("url", "sent_idx", "subj_id", "obj_id")
-        .toPandas()
-    )
-    assert sorted(map(tuple, a.values.tolist())) == sorted(map(tuple, b.values.tolist()))
-    assert len(a) > 50
 
 
 def test_span_eval_tolerance_and_rollup(spark):
@@ -309,39 +260,3 @@ class TestFuzzyLink:
         }
         assert fuzzy["rapamycin"] == fuzzy["rapamycins"] == "KB:0004"
         assert fuzzy["zzz"] == "surface:zzz"
-
-
-class TestEdgeHistory:
-    def test_lifecycle_statuses(self, spark):
-        """Edges: A seen in epochs {0,2} (latest=2 -> active),
-        B only epoch 0 (stale), C first+only epoch 2 (new)."""
-        from pyspark.sql import functions as F
-
-        from easyner_spark.operators.triples import edge_history
-
-        rows = [
-            ("a", "p", "x", 0), ("a", "p", "x", 2), ("a", "p", "x", 2),
-            ("b", "p", "y", 0),
-            ("c", "p", "z", 2),
-        ]
-        t = spark.createDataFrame(
-            rows, "subj_id string, pred string, obj_id string, epoch long"
-        )
-        got = {r.subj_id: r for r in edge_history(t).collect()}
-        assert (got["a"].status, got["a"].n_epochs, got["a"].support) == ("active", 2, 3)
-        assert (got["b"].status, got["b"].first_epoch, got["b"].last_epoch) == ("stale", 0, 0)
-        assert (got["c"].status, got["c"].n_epochs) == ("new", 1)
-
-    def test_no_expand_and_no_single_partition(self, spark):
-        """The collect_set formulation must not plan countDistinct's
-        Expand rewrite, and the global max must not plan an Exchange
-        SinglePartition window."""
-        from easyner_spark.operators.triples import edge_history
-
-        t = spark.createDataFrame(
-            [("a", "p", "x", 0)], "subj_id string, pred string, obj_id string, epoch long"
-        )
-        plan = edge_history(t)._jdf.queryExecution().executedPlan().toString()
-        assert "Expand" not in plan
-        # the one allowed SinglePartition is the bounded 1-row max agg
-        assert plan.count("Exchange SinglePartition") <= 1

@@ -1,49 +1,6 @@
-"""KG profiling operators: predicate cardinality classes, per-doc
-entity salience and entity types."""
+"""KG profiling operators: per-doc entity salience."""
 
 from easyner_spark.operators.analysis import entity_salience
-from easyner_spark.operators.triples import predicate_cardinality
-
-
-def test_predicate_cardinality_classes(spark):
-    rows = [
-        # 1:1 — every subj one obj, every obj one subj
-        ("s1", "capital_of", "o1"),
-        ("s2", "capital_of", "o2"),
-        # 1:N — one subj fans out, every obj has one subj
-        ("h1", "has_part", "p1"),
-        ("h1", "has_part", "p2"),
-        ("h1", "has_part", "p3"),
-        ("h2", "has_part", "p4"),
-        # N:1 — every subj one obj, one obj fans in
-        ("c1", "in_country", "k1"),
-        ("c2", "in_country", "k1"),
-        ("c3", "in_country", "k2"),
-        # N:M — both fan
-        ("a", "links_to", "x"),
-        ("a", "links_to", "y"),
-        ("b", "links_to", "x"),
-    ]
-    edges = spark.createDataFrame(rows, "subj_id string, pred string, obj_id string")
-    got = {r["pred"]: r.asDict() for r in predicate_cardinality(edges).collect()}
-
-    assert got["capital_of"]["card_class"] == "1:1"
-    assert got["capital_of"]["n_edges"] == 2
-    assert got["capital_of"]["n_subj"] == 2
-    assert got["capital_of"]["n_obj"] == 2
-
-    assert got["has_part"]["card_class"] == "1:N"
-    assert got["has_part"]["max_fanout"] == 3
-    assert got["has_part"]["max_fanin"] == 1
-    assert got["has_part"]["n_subj"] == 2
-    assert got["has_part"]["n_obj"] == 4
-
-    assert got["in_country"]["card_class"] == "N:1"
-    assert got["in_country"]["max_fanout"] == 1
-    assert got["in_country"]["max_fanin"] == 2
-
-    assert got["links_to"]["card_class"] == "N:M"
-    assert got["links_to"]["n_edges"] == 3
 
 
 def test_entity_salience_weights_and_rank(spark):
@@ -82,40 +39,3 @@ def test_entity_salience_drops_unlinked(spark):
     )
     out = entity_salience(lm).collect()
     assert len(out) == 1 and out[0]["entity_id"] == "e1"
-
-
-def test_entity_types_votes_and_ties(spark):
-    from easyner_spark.operators.triples import entity_types
-
-    edges = spark.createDataFrame(
-        [
-            ("drugA", "inhibits", "geneX"),
-            ("drugA", "inhibits", "geneY"),
-            ("drugA", "co_occurs_with", "thing"),
-            ("geneX", "treats", "disZ"),   # no rule for 'treats' -> no vote
-            ("both", "binds", "both2"),
-        ],
-        "subj_id string, pred string, obj_id string",
-    )
-    rules = [
-        ("inhibits", "subj", "chemical", 2),
-        ("inhibits", "obj", "protein", 2),
-        ("co_occurs_with", "subj", "concept", 1),
-        ("co_occurs_with", "obj", "concept", 1),
-        # 'both' gets equal-weight votes for two types -> tie -> asc
-        ("binds", "subj", "aaa_type", 1),
-        ("binds", "subj", "bbb_type", 1),
-    ]
-    got = {r["entity_id"]: r.asDict() for r in entity_types(edges, rules).collect()}
-    # drugA: chemical 2+2=4, concept 1 -> chemical wins
-    assert got["drugA"]["ent_type"] == "chemical"
-    assert got["drugA"]["votes"] == 4
-    assert got["drugA"]["total_votes"] == 5
-    assert got["drugA"]["n_types"] == 2
-    # geneX: protein 2 (obj of inhibits); its 'treats' subj role unvoted
-    assert got["geneX"]["ent_type"] == "protein"
-    assert got["geneX"]["votes"] == 2
-    # tie 1-1 -> type asc
-    assert got["both"]["ent_type"] == "aaa_type"
-    # disZ: no matching rule at all -> absent
-    assert "disZ" not in got

@@ -6,11 +6,7 @@ tests cannot catch a serial plan)."""
 from pyspark.sql import functions as F
 
 from easyner_spark.operators.sketches import kmv_set_ops, kmv_sketch
-from easyner_spark.operators.triples import (
-    entity_summaries,
-    infer_entity_types,
-    predicate_equivalences,
-)
+from easyner_spark.operators.triples import entity_summaries
 from easyner_spark.sinks.layout import zorder_key
 
 
@@ -25,25 +21,6 @@ def _kg(spark, n=400):
         F.concat(F.lit("p"), (F.col("id") % 5).cast("string")).alias("pred"),
         F.concat(F.lit("e"), ((F.col("id") * 7) % 37).cast("string")).alias("obj"),
     )
-
-
-def test_predicate_equivalences_no_serial_reducer(spark):
-    plan = _final_plan(predicate_equivalences(_kg(spark)))
-    assert "Exchange SinglePartition" not in plan
-
-
-def test_infer_entity_types_no_serial_reducer(spark):
-    types = spark.range(30).select(
-        F.concat(F.lit("e"), F.col("id").cast("string")).alias("entity_id"),
-        F.when(F.col("id") % 2 == 0, F.lit("person"))
-        .otherwise(F.lit("org"))
-        .alias("ent_type"),
-    )
-    out = infer_entity_types(_kg(spark), types)
-    plan = _final_plan(out)
-    assert "Exchange SinglePartition" not in plan
-    # the bounded (pred, role, type) vote table rides a broadcast
-    assert "BroadcastExchange" in plan
 
 
 def test_entity_summaries_window_is_keyed(spark):

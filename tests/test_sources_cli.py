@@ -450,6 +450,61 @@ class TestCurationPipeline:
         corpus = SnapshotTable(f"{cfg['output_dir']}/corpus", ["url"]).read(spark)
         assert set(corpus.columns) == {"url", "text"}
 
+    def test_killed_stage_resumes_to_identical_tables(self, spark, pages_df, tmp_path, monkeypatch):
+        """Kill the `corpus` stage before its data is written, and
+        again after the write but before the pointer commit; a resumed
+        run then ends with the same corpus rows and counts as a clean
+        run."""
+        import os
+
+        from easyner_spark.cli import run_curation
+        from easyner_spark.operators import dedup
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+
+        pages_path = self._pages_path(spark, pages_df, tmp_path)
+
+        def table(out, name):
+            return SnapshotTable(f"{tmp_path / out}/{name}", [])
+
+        def rows(out, name):
+            return sorted(map(tuple, table(out, name).read(spark).collect()))
+
+        def cfg(out):
+            return {
+                "input": {"pages_path": pages_path},
+                "output_dir": str(tmp_path / out),
+                "curation": {"gopher": {"min_words": 3, "min_stop_hits": 0}},
+            }
+
+        clean = run_curation(spark, cfg("clean"))
+        assert clean["corpus"] > 0
+
+        def raise_in_stage(*a, **kw):
+            raise RuntimeError("killed inside the corpus stage")
+
+        orig_commit = SnapshotTable._commit
+
+        def raise_before_commit(self, snap, epoch=None):
+            if self.path.endswith("/corpus"):
+                raise RuntimeError("killed before the corpus pointer commit")
+            return orig_commit(self, snap, epoch)
+
+        faults = {
+            "before_write": (dedup, "paragraph_dedup", raise_in_stage),
+            "before_commit": (SnapshotTable, "_commit", raise_before_commit),
+        }
+        for out, (owner, attr, fault) in faults.items():
+            with monkeypatch.context() as m:
+                m.setattr(owner, attr, fault)
+                with pytest.raises(RuntimeError, match="killed"):
+                    run_curation(spark, cfg(out))
+            corpus = table(out, "corpus")
+            assert corpus.current_snapshot() is None
+            assert os.path.isdir(corpus._snap_dir(1)) == (out == "before_commit")
+            assert table(out, "gated").current_snapshot() == 1
+            assert run_curation(spark, dict(cfg(out), resume=True)) == clean, out
+            assert rows(out, "corpus") == rows("clean", "corpus"), out
+
     def test_curate_ppl_gate(self, spark, pages_df, tmp_path):
         from easyner_spark.cli import run_curation
 

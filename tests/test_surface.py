@@ -42,7 +42,7 @@ UNREACHED_PUBLIC = {
     "operators.splitter": 3,
     "operators.textstats": 24,
     "operators.tokenizer": 8,
-    "operators.triples": 80,
+    "operators.triples": 9,
     "operators.webtext": 3,
     "schemas": 7,
     "sinks.bucketed": 2,
@@ -81,6 +81,14 @@ def test_unreached_counts_match_recorded(report):
            for m in UNREACHED_PUBLIC.keys() | now.keys()
            if UNREACHED_PUBLIC.get(m) != now.get(m)}
     assert not off, f"unreached public defs (recorded, now): {off}"
+
+
+def test_every_query_has_an_oracle():
+    """`queries()` and `oracle_sql()` hold the same keys: a cut that
+    drops an oracle must drop its query too, and the other way round."""
+    import __spark_entry__ as e
+
+    assert set(e.queries()) == set(e.oracle_sql())
 
 
 def test_driver_window_names_are_registry_keys():

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Local stand-in for the driver's correctness gate: run every
 __spark_entry__ query AND its DuckDB oracle at sf0.01, compare row
-count, column names, and sorted values. Usage:
+count, column names, and sorted values. A query with no oracle fails.
+Usage:
 
     python tools/check_oracle.py [query ...]   # default: all
 """
@@ -67,15 +68,15 @@ def main() -> None:
     names = sys.argv[1:] or list(queries)
     failures = []
     for name in names:
-        qf = queries[name]
+        if name not in oracles:
+            failures.append(name)
+            print(f"FAIL {name}: no oracle")
+            continue
         try:
-            sdf = qf(spark, sf_dir).toPandas()
+            sdf = queries[name](spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error {e}")
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only check, {len(sdf)} rows)")
             continue
         try:
             ddf = con.sql(oracles[name]).df()

@@ -51,6 +51,24 @@ KEEP = {
         "sentence_pairs": "builds the co-occurrence graph of q_kg_kcore and "
                           "tests/test_graph.py's driver-scale k_core check",
     },
+    "easyner_spark.operators.triples": {
+        "match_patterns_oracle_sql": "DuckDB twin of match_patterns "
+                                     "(--mode query, kg.query)",
+        "functional_violations_oracle_sql": "DuckDB twin of functional_violations "
+                                            "(kg.conflicts)",
+        "entity_summaries_oracle_sql": "DuckDB twin of entity_summaries "
+                                       "(kg.summaries)",
+        "schema_graph_oracle_sql": "DuckDB twin of schema_graph (kg.schema)",
+        "metapath_join_oracle_sql": "DuckDB twin of metapath_join (kg.metapath)",
+        "metapath_pathsim": "PathSim over metapath_join (q_kg_pathsim); "
+                            "tested, left for a later cut",
+        "metapath_pathsim_oracle_sql": "DuckDB twin of metapath_pathsim "
+                                       "(q_kg_pathsim)",
+        "match_patterns_when": "batch reference for streaming.fold_standing_query "
+                               "(tests/test_streaming.py)",
+        "match_patterns_when_oracle_sql": "DuckDB twin of match_patterns_when "
+                                          "(q_kg_standing_query)",
+    },
 }
 
 
