@@ -2059,8 +2059,8 @@ def q_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data-pipeline operators (dedup / similarity / text analysis)
-# over the raw documents + embeddings tables.
+# Training-data-pipeline operators (dedup / text analysis) over the raw
+# documents and events tables.
 # ---------------------------------------------------------------------------
 
 
@@ -2081,10 +2081,6 @@ def _docs_perturbed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
     )
     return d.unionByName(p)
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2369,15 +2365,6 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return histogram_fixed_bins(_docs(spark, sf_dir), F.length("text"), 100, 20)
 
 
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroids (class prototypes): µ-unit
-    quantization before the one (label, dim) group sum keeps the
-    cross-row aggregation exact-integer; O(labels*dim) output."""
-    from easyner_spark.operators.similarity import label_centroids
-
-    return label_centroids(_emb(spark, sf_dir))
-
-
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized inverted index (term, doc, tf, df, idf) with a
     min_df=2 hapax cut — the unknown-query-terms counterpart of
@@ -2585,163 +2572,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return incremental_new_docs(new, d.select("doc_id", "text"))
-
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.similarity import brute_force_topk
-
-    return brute_force_topk(_emb(spark, sf_dir), k=10).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine"
-    )
-
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.similarity import lsh_topk
-
-    return lsh_topk(_emb(spark, sf_dir), k=10).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine"
-    )
-
-
-def q_ann_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path of exact top-k (VERDICT r1 fix #1): block-partitioned
-    matmul over packed chunks, no driver-side corpus collect. Same
-    oracle as ann_topk — the two paths must agree value-for-value.
-    block_size below the 500-row tier forces a real multi-block run."""
-    from easyner_spark.operators.similarity import brute_force_topk_blocked
-
-    return brute_force_topk_blocked(_emb(spark, sf_dir), k=10, block_size=128).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine"
-    )
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): IVF-cell clustering + within-cell
-    cosine pruning — one row per vector with its cell, the smallest
-    near-duplicate cell-mate (dup_of, NULL if unique at >= 0.3), and
-    the kept flag. The semantic-dedup counterpart of minhash (lexical)
-    and emb_neardup (pairwise): never all-pairs, quadratic only
-    within corpus/n_centroids-sized cells."""
-    from easyner_spark.operators.similarity import semdedup
-
-    return semdedup(_emb(spark, sf_dir), threshold=0.3)
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN: deterministic md5-ranked centroids, argmax-cosine
-    cell assignment (pure JVM array_max), nprobe-cell candidates, exact
-    re-rank. The oracle rebuilds the identical quantizer in SQL."""
-    from easyner_spark.operators.similarity import ivf_topk
-
-    return ivf_topk(_emb(spark, sf_dir), k=10).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine"
-    )
-
-
-def q_ann_ivf_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ivf_topk with a PRE-TRAINED centroid list (train_ivf_centroids
-    -> ivf_topk(centroids=...)): the repeat-query amortization path —
-    training runs once per corpus snapshot, queries skip the Lloyd
-    assignment jobs entirely. Values must equal the self-training
-    refine_iters=0 path exactly, so it shares ann_ivf_topk's oracle
-    SQL verbatim."""
-    from easyner_spark.operators.similarity import ivf_topk, train_ivf_centroids
-
-    emb = _emb(spark, sf_dir)
-    cents = train_ivf_centroids(emb, refine_iters=0)
-    return ivf_topk(emb, k=10, centroids=cents).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine"
-    )
-
-
-def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantized ANN: symmetric integer-dot ranking over int8-
-    style affine codes — the bandwidth leg of the ANN suite (8x fewer
-    bytes than float64, integer math, zero floats emitted). The oracle
-    rebuilds the identical quantizer in SQL (similarity.sq_topk)."""
-    from easyner_spark.operators.similarity import sq_topk
-
-    return sq_topk(_emb(spark, sf_dir), k=10)
-
-
-def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Default near-dup path is now sign-LSH bucketed (VERDICT r1 fix
-    #4): one equi-join shuffle on the 4-bit bucket key; the oracle
-    reproduces the same deterministic buckets in SQL."""
-    from easyner_spark.operators.similarity import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(_emb(spark, sf_dir), threshold=0.3).select(
-        "a", "b", "cosine"
-    )
-
-
-def q_emb_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The explicit O(n^2) verification twin (n_bits=0)."""
-    from easyner_spark.operators.similarity import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(
-        _emb(spark, sf_dir), threshold=0.3, n_bits=0
-    ).select("a", "b", "cosine")
-
-
-def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: documents' text bytes as an opaque media
-    blob -> mapInPandas fake decoder -> typed metadata (the Spark-side
-    schema/batch plumbing is real; the codec is a deterministic stub,
-    see operators/multimodal.py)."""
-    from easyner_spark.operators.multimodal import decode_media
-
-    media = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode("text", "UTF-8").alias("content"),
-    )
-    out = decode_media(media)
-    return out.select(
-        "media_id",
-        "kind",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-        "content_sha",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("n_frames").cast("long").alias("n_frames"),
-        "codec",
-    )
-
-
-def q_media_meta_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container decoding (engine='headers'): wrap each document's
-    text as a P6 PPM with deterministic dimensions and parse the header
-    back. The oracle recomputes dimensions/size/sha in SQL."""
-    from easyner_spark.operators.multimodal import decode_media
-
-    docs = _docs(spark, sf_dir)
-    w = F.pmod(F.col("doc_id"), F.lit(1000)) + 1
-    h = F.pmod(F.col("doc_id"), F.lit(77)) + 1
-    media = docs.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode(
-            F.concat(
-                F.lit("P6\n"),
-                w.cast("string"),
-                F.lit(" "),
-                h.cast("string"),
-                F.lit("\n255\n"),
-                F.col("text"),
-            ),
-            "UTF-8",
-        ).alias("content"),
-    )
-    out = decode_media(media, engine="headers")
-    return out.select(
-        "media_id",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-        "content_sha",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "codec",
-    )
 
 
 def q_boilerplate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3268,54 +3098,6 @@ def _kg_standing_query_oracle() -> str:
     )
 
 
-def q_emb_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-distribution drift across synthetic crawl epochs
-    (vec_id % 4): cosine between consecutive epoch mean embeddings —
-    micro-quantized BIGINT centroids, one (epoch, dim) rollup, float
-    only in the final round(·,6) cosine."""
-    from easyner_spark.operators.similarity import embedding_drift
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return embedding_drift(
-        e.select((F.col("vec_id") % 4).alias("epoch"), "embedding")
-    )
-
-
-def _emb_drift_oracle() -> str:
-    """q_emb_drift oracle: the epoch stamping through the operator's
-    module-local twin."""
-    from easyner_spark.operators.similarity import embedding_drift_oracle_sql
-
-    return embedding_drift_oracle_sql(
-        "SELECT vec_id % 4 AS epoch, embedding FROM embeddings"
-    )
-
-
-def q_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center coreset (k=6) over the embeddings table —
-    farthest-point traversal on exact milli-quantized BIGINT squared
-    distances; the diversity sampler (one exemplar per far mode) next
-    to sampling's distribution-preserving gates. The driver list is
-    k rows (bounded-collect class) re-framed for the value check."""
-    from easyner_spark.operators.similarity import kcenter_select
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sel = kcenter_select(e, k=6)
-    return spark.createDataFrame(
-        [(int(r), int(i), int(d)) for r, i, d in sel],
-        "rank long, id long, radius_q2 long",
-    )
-
-
-def _kcenter_oracle() -> str:
-    """q_kcenter oracle: unrolled greedy stages over the same table."""
-    from easyner_spark.operators.similarity import kcenter_select_oracle_sql
-
-    return kcenter_select_oracle_sql(
-        "SELECT vec_id AS id, embedding FROM embeddings", k=6
-    )
-
-
 _B3_ASSIGN_SQL = """SELECT 'r' || doc_id AS r,
   'p' || (doc_id % 20) AS p, 'g' || (doc_id % 25) AS g
   FROM documents"""
@@ -3406,7 +3188,7 @@ _DRIVER_WINDOW_FIRST = [
     # never-driver-verified registry queries (VERDICT r4 #1 —
     # close the external ledger; the driver checks the FIRST 50) ---
     "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk", "dsir_weights",
-    "dsir_sample", "semdedup", "kappa", "kg_kcore", "heavy_hitters",
+    "dsir_sample", "kappa", "kg_kcore", "heavy_hitters",
     "pack_sequences", "length_quantiles", "bpe_merges",
     "bpe_token_counts", "bpe_encode", "tokenized_pack", "entity_bursts",
     "kg_degree_stats", "kg_pattern", "kg_violations", "containment",
@@ -3419,10 +3201,10 @@ _DRIVER_WINDOW_FIRST = [
     "fuzzy_link", "topic_id", "repeated_spans", "chunk_docs", "mixture_sample",
     "deterministic_sample", "per_host_cap", "word_repetition",
     "gopher_filters", "mojibake", "paragraph_langs", "pii_redact",
-    "corpus_summary", "inverted_index", "tfidf_sim", "label_centroids",
+    "corpus_summary", "inverted_index", "tfidf_sim",
     "distinct_count", "length_histogram", "sessionize", "asof_join",
     "event_rollup", "bm25_rank", "winnow_fps", "winnow_dedup",
-    "fuzzy_dedup_groups", "incremental_dedup", "decontaminate", "ann_sq_topk",
+    "fuzzy_dedup_groups", "incremental_dedup", "decontaminate",
     "warc_extract", "craft_iob2", "flair_parse",
 ]
 
@@ -3493,8 +3275,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_ego": q_kg_ego,
         "kg_core_numbers": q_kg_core_numbers,
         "kg_standing_query": q_kg_standing_query,
-        "emb_drift": q_emb_drift,
-        "kcenter_coreset": q_kcenter,
         "host_kmv": q_host_kmv,
         "kmv_set_ops": q_kmv_set_ops,
         "zorder_keys": q_zorder_keys,
@@ -3544,7 +3324,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "textrank": q_textrank,
         "ppl_buckets": q_ppl_buckets,
         "fs_linkage": q_fs_linkage,
-        "label_centroids": q_label_centroids,
         "distinct_count": q_distinct_count,
         "length_histogram": q_length_histogram,
         "sessionize": q_sessionize,
@@ -3563,17 +3342,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fuzzy_dedup_groups": q_fuzzy_dedup_groups,
         "incremental_dedup": q_incremental_dedup,
         "decontaminate": q_decontaminate,
-        "ann_topk": q_ann_topk,
-        "ann_sq_topk": q_ann_sq_topk,
-        "ann_topk_blocked": q_ann_topk_blocked,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "semdedup": q_semdedup,
-        "ann_ivf_cached": q_ann_ivf_cached,
-        "emb_neardup": q_emb_neardup,
-        "emb_neardup_exact": q_emb_neardup_exact,
-        "media_meta": q_media_meta,
-        "media_meta_headers": q_media_meta_headers,
         "boilerplate_extract": q_boilerplate_extract,
         "pubmed_extract": q_pubmed_extract,
         "warc_extract": q_warc_extract,
@@ -3664,11 +3432,11 @@ triples AS (
 
 # ---------------------------------------------------------------------------
 # Oracle SQL for the training-data operators. Generated programmatically
-# so the hash constants / marker lists / hyperplanes are shared verbatim
-# with the Spark implementations (easyner_spark.operators.{textstats,
-# dedup,similarity}). Float determinism: every double is produced by the
-# same IEEE op sequence in both engines (sequential-fold dot products,
-# int/int divisions, literal-weight blends) — verified bitwise in tests.
+# so the hash constants and marker lists are shared verbatim with the
+# Spark implementations (easyner_spark.operators.{textstats,dedup}).
+# Float determinism: every double is produced by the same IEEE op
+# sequence in both engines (int/int divisions, literal-weight blends) —
+# verified bitwise in tests.
 # ---------------------------------------------------------------------------
 
 
@@ -3921,142 +3689,6 @@ FROM per
     }
 
 
-def _bucket_sql(planes: list[list[float]]) -> str:
-    return " || ".join(
-        "(CASE WHEN list_dot_product(v, ["
-        + ", ".join(f"{x:.1f}" for x in p)
-        + "]::DOUBLE[]) >= 0 THEN '1' ELSE '0' END)"
-        for p in planes
-    )
-
-
-def _similarity_oracles() -> dict[str, str]:
-    from easyner_spark.operators.similarity import (
-        DIM,
-        N_BITS,
-        NEARDUP_BITS,
-        hyperplanes,
-    )
-
-    planes = hyperplanes()
-    norm = """
-WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)"""
-    bucket_expr = _bucket_sql(planes)
-    topk = f"""{norm},
-p AS (
-  SELECT a.id AS query_id, b.id AS neighbor_id,
-         list_dot_product(a.v, b.v) / (a.norm * b.norm) AS cos
-  FROM n a JOIN n b ON a.id <> b.id
-),
-r AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 6) DESC, neighbor_id) AS rank
-  FROM p
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cosine FROM r WHERE rank <= 10
-"""
-    lsh = f"""{norm},
-bk AS (SELECT id, v, norm, {bucket_expr} AS bucket FROM n),
-p AS (
-  SELECT a.id AS query_id, b.id AS neighbor_id,
-         list_dot_product(a.v, b.v) / (a.norm * b.norm) AS cos
-  FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.id <> b.id
-),
-r AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 6) DESC, neighbor_id) AS rank
-  FROM p
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cosine FROM r WHERE rank <= 10
-"""
-    from easyner_spark.operators.similarity import IVF_CENTROIDS, IVF_NPROBE
-
-    ivf = f"""{norm},
-cent AS (SELECT id AS cid, v AS cv FROM n ORDER BY md5(id::VARCHAR), id LIMIT {IVF_CENTROIDS}),
-asg0 AS (
-  SELECT n.id, n.v, n.norm, c.cid,
-         list_dot_product(n.v, c.cv)
-           / (n.norm * sqrt(list_dot_product(c.cv, c.cv))) AS ccos,
-         row_number() OVER (PARTITION BY n.id
-                            ORDER BY list_dot_product(n.v, c.cv)
-                                     / (n.norm * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                                     c.cid ASC) AS rn
-  FROM n CROSS JOIN cent c
-),
-asg AS (SELECT id, v, norm, cid AS cell FROM asg0 WHERE rn = 1),
-probes AS (SELECT id, v, norm, cid AS cell FROM asg0 WHERE rn <= {IVF_NPROBE}),
-p AS (
-  SELECT a.id AS query_id, b.id AS neighbor_id,
-         list_dot_product(a.v, b.v) / (a.norm * b.norm) AS cos
-  FROM probes a JOIN asg b ON a.cell = b.cell AND a.id <> b.id
-),
-r AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 6) DESC, neighbor_id) AS rank
-  FROM p
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cosine FROM r WHERE rank <= 10
-"""
-    semdd = f"""{norm},
-cent AS (SELECT id AS cid, v AS cv FROM n ORDER BY md5(id::VARCHAR), id LIMIT {IVF_CENTROIDS}),
-asg0 AS (
-  SELECT n.id, n.v, n.norm, c.cid,
-         row_number() OVER (PARTITION BY n.id
-                            ORDER BY list_dot_product(n.v, c.cv)
-                                     / (n.norm * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                                     c.cid ASC) AS rn
-  FROM n CROSS JOIN cent c
-),
-asg AS (SELECT id, v, norm, cid AS cell FROM asg0 WHERE rn = 1),
-p AS (
-  SELECT b.id AS id, a.id AS dup,
-         list_dot_product(a.v, b.v) / (a.norm * b.norm) AS cos
-  FROM asg a JOIN asg b ON a.cell = b.cell AND a.id < b.id
-),
-d AS (SELECT id, min(dup) AS dup_of FROM p WHERE cos >= 0.3 GROUP BY id)
-SELECT asg.id, asg.cell, d.dup_of, d.dup_of IS NULL AS kept
-FROM asg LEFT JOIN d ON asg.id = d.id
-"""
-
-    nd_bucket = _bucket_sql(hyperplanes(NEARDUP_BITS, DIM))
-    neardup = f"""{norm},
-bk AS (SELECT id, v, norm, {nd_bucket} AS bucket FROM n),
-p AS (
-  SELECT a.id AS a, b.id AS b,
-         list_dot_product(a.v, b.v) / (a.norm * b.norm) AS cos
-  FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.id < b.id
-)
-SELECT a, b, round(cos, 6) AS cosine FROM p WHERE cos >= 0.3
-"""
-    neardup_exact = f"""{norm},
-p AS (
-  SELECT a.id AS a, b.id AS b,
-         list_dot_product(a.v, b.v) / (a.norm * b.norm) AS cos
-  FROM n a JOIN n b ON a.id < b.id
-)
-SELECT a, b, round(cos, 6) AS cosine FROM p WHERE cos >= 0.3
-"""
-    assert N_BITS == len(planes)
-    return {
-        "ann_topk": topk,
-        "ann_topk_blocked": topk,
-        "ann_lsh_topk": lsh,
-        "ann_ivf_topk": ivf,
-        "ann_ivf_cached": ivf,  # same values: supplied == seed centroids
-        "emb_neardup": neardup,
-        "emb_neardup_exact": neardup_exact,
-        "ann_sq_topk": _sq_oracle(),
-        "semdedup": semdd,
-    }
-
-
-def _sq_oracle() -> str:
-    from easyner_spark.operators.similarity import sq_topk_oracle_sql
-
-    return sq_topk_oracle_sql(source="embeddings", k=10, levels=256)
-
-
 def _cooc_pairs_cte() -> str:
     """_PRELUDE extended with pr(a, b): the canonical distinct entity
     co-occurrence pairs the kg_kcore oracle peels."""
@@ -4094,23 +3726,6 @@ WITH tok AS (
         f"SELECT '{t}' AS term" for t in CMS_CANDIDATES
     )
     return cms_oracle_sql(stream, cand)
-
-
-_MEDIA_META_SQL = """
-WITH m AS (
-  SELECT doc_id::VARCHAR AS media_id, 'image' AS kind, text,
-         ('0x' || substr(sha256(text), 1, 8))::BIGINT AS h
-  FROM documents
-)
-SELECT media_id, kind,
-  octet_length(encode(text))::BIGINT AS n_bytes,
-  sha256(text) AS content_sha,
-  (64 + h % 1024)::BIGINT AS width,
-  (64 + (h >> 10) % 1024)::BIGINT AS height,
-  (1 + h % 300)::BIGINT AS n_frames,
-  'fake/image' AS codec
-FROM m
-"""
 
 
 # Deterministic skewed url synthesis shared (verbatim) by the webtext
@@ -4841,7 +4456,6 @@ def oracle_sql() -> dict[str, str]:
         quality_weighted_sample_oracle_sql,
     )
     from easyner_spark.operators.sampling import chunk_docs_oracle_sql
-    from easyner_spark.operators.similarity import label_centroids_oracle_sql
     from easyner_spark.operators.sketches import (
         exact_quantiles_oracle_sql,
         histogram_oracle_sql,
@@ -4992,7 +4606,6 @@ sents AS (SELECT doc_id AS url, sent_idx, sentence FROM sentences)""",
             iters=5,
         )
         + ") tr",
-        "label_centroids": label_centroids_oracle_sql(),
         "distinct_count": linear_count_oracle_sql("text"),
         "length_histogram": histogram_oracle_sql("length(text)", 100, 20),
         "length_quantiles": exact_quantiles_oracle_sql("length(text)"),
@@ -5031,22 +4644,6 @@ FROM per_doc
         "unigram_lm": unigram_lm_oracle_sql(min_count=2),
         "bigram_lm": bigram_lm_oracle_sql(min_count=2),
         "quality_classifier": hashed_linear_oracle_sql(),
-        "media_meta": _MEDIA_META_SQL,
-        "media_meta_headers": """
-WITH m AS (
-  SELECT doc_id,
-         'P6' || chr(10) || (doc_id % 1000 + 1) || ' ' || (doc_id % 77 + 1)
-              || chr(10) || '255' || chr(10) || text AS payload
-  FROM documents
-)
-SELECT doc_id::VARCHAR AS media_id,
-       octet_length(encode(payload))::BIGINT AS n_bytes,
-       sha256(payload) AS content_sha,
-       (doc_id % 1000 + 1)::BIGINT AS width,
-       (doc_id % 77 + 1)::BIGINT AS height,
-       'image/ppm' AS codec
-FROM m
-""",
         # ADVERSARIAL: the synthesized page adds a kept <h1> headline
         # and a PRE- prefixed kept block with nested boilerplate inside
         # it, so extraction must produce this exact non-identity
@@ -5109,7 +4706,6 @@ SELECT d.seq::BIGINT AS seq_id,
 FROM d CROSS JOIN t
 """,
         **_dedup_oracles(),
-        **_similarity_oracles(),
     }
     return _prioritize(extra | {
         "split_sentences": _PRELUDE
@@ -5584,8 +5180,6 @@ FROM c CROSS JOIN t
         "kg_ego": _kg_ego_oracle(),
         "kg_core_numbers": _kg_core_numbers_oracle(),
         "kg_standing_query": _kg_standing_query_oracle(),
-        "emb_drift": _emb_drift_oracle(),
-        "kcenter_coreset": _kcenter_oracle(),
         # Bottom-k distinct sketch per host (sketches.kmv_sketch_oracle_sql)
         "host_kmv": _host_kmv_oracle(),
         # Sketch-only pairwise set-operation estimates

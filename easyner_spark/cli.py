@@ -127,6 +127,14 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
     else:
         pages = spark.read.parquet(inp["pages_path"])
 
+    # the reference's load-time language drop, ahead of every stage:
+    # Catalyst does not push a filter below the extractor's
+    # nondeterministic UDF, and the dedup gate must choose each content
+    # group's keeper among the kept pages only
+    lang = cfg.get("lang", "en")
+    if lang is not None and "lang" in pages.columns:
+        pages = pages.where(F.col("lang") == lang)
+
     # Boilerplate stripping (north_star stage 1): forced via
     # modules.extract, or automatic when the crawl has html but no
     # pre-extracted text column. Narrow projection — no snapshot table,
@@ -157,7 +165,7 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
     if modules["splitter"]:
         sents, counts["sentences"] = _materialize(
             spark, tables["sentences"],
-            lambda: split_sentences(pages, lang_filter=cfg.get("lang", "en")), resume,
+            lambda: split_sentences(pages, lang_filter=None), resume,
         )
 
     ments = None
@@ -284,8 +292,9 @@ def run_curation(spark: SparkSession, cfg: dict) -> dict[str, int]:
     Catalyst pushed the filter below the extractor's projection so
     the pandas UDF ran twice per surviving page. A url whose newest
     crawl fails the gate is dropped; an older crawl never stands in
-    for it. (Without `warc_ts` there is no collapse, and the filter
-    is still pushed below the extractor.)
+    for it. Without `warc_ts` there is no collapse, and the extractor
+    still runs once: `extract_text`'s UDF is nondeterministic, which
+    keeps the filter above its projection.
 
     Config (all under cfg["curation"], every key optional):
 

@@ -22,8 +22,6 @@ import pandas as pd
 
 from easyner_spark.functions.text import TOKEN_RE, split_sentences_py
 
-CLASSES = ["gene", "chemical", "disease", "species", "cell"]
-
 # Filler vocabulary — deliberately disjoint from dictionary-term tokens,
 # except `discovery`/`covert` which CONTAIN term tokens as substrings
 # (pins token-boundary semantics: "cov" must not match inside them).
@@ -126,7 +124,7 @@ def brute_force_matches(text: str, terms: list[tuple[str, str]]):
 
 def generate(n_docs: int = 500, seed: int = 42, with_gold: bool = True) -> Fixture:
     """`with_gold=False` skips the brute-force oracle pass (gold tables
-    come back empty) — used by bench.py to synthesize large pages
+    come back empty) — used by tools/skew_bench.py to synthesize large pages
     corpora quickly; correctness fixtures always use the default."""
     rng = random.Random(seed)
     host_w = [1.0 / (i + 1) ** ZIPF_S for i in range(N_HOSTS)]

@@ -369,8 +369,13 @@ def extract_text(
 ) -> DataFrame:
     """pages(url, ..., html: binary) -> + out_col string. Narrow
     projection, no shuffle; Arrow-batched. (UDF built lazily — pyspark
-    resolves the DDL return type against the active session.)"""
-    udf = pandas_udf(_extract_series, "string")
+    resolves the DDL return type against the active session.)
+
+    The UDF is marked nondeterministic so the extractor runs once per
+    row by construction: Catalyst then never pushes a filter on its
+    output (or on anything computed from it, like the Gopher flags)
+    below this projection, which would evaluate the pandas UDF twice."""
+    udf = pandas_udf(_extract_series, "string").asNondeterministic()
     return pages.withColumn(out_col, udf(F.col(html_col)))
 
 

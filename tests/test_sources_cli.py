@@ -400,6 +400,25 @@ class TestCliRound2Stages:
         svg = (tmp_path / "out" / "top_entities.svg").read_text()
         assert svg.startswith("<svg")
 
+    def test_dedup_keeps_the_copy_in_the_kept_language(self, spark, tmp_path):
+        """A dropped-language page never wins a content group's keeper
+        choice over an identical page in the kept language."""
+        from easyner_spark.cli import run_pipeline
+
+        pages_path = str(tmp_path / "pages.parquet")
+        spark.createDataFrame(
+            [("a-de", "The enzyme binds. It works.", "de"),
+             ("b-en", "The enzyme binds. It works.", "en")],
+            "url string, text string, lang string",
+        ).write.parquet(pages_path)
+        counts = run_pipeline(spark, {
+            "input": {"pages_path": pages_path},
+            "output_dir": str(tmp_path / "out"),
+            "modules": {"dedup": True, "ner": False, "analysis": False,
+                        "nel": False, "triples": False, "components": False},
+        })
+        assert counts["sentences"] == 2
+
     def test_pubmed_xml_input(self, spark, tmp_path):
         import gzip
 
@@ -637,6 +656,20 @@ class TestCurationRecrawls:
     def test_gated_plan_extracts_once(self, spark, crawl_path, tmp_path, monkeypatch):
         _, written = self._run(spark, crawl_path, tmp_path, monkeypatch)
         assert _optimized(written["gated"]).count("ArrowEvalPython") == 1
+
+    def test_gated_plan_extracts_once_without_warc_ts(self, spark, tmp_path, monkeypatch):
+        """Without `warc_ts` no collapse sits between the extractor and
+        the gate filter; the extractor still runs once."""
+        path = str(tmp_path / "html_only.parquet")
+        spark.createDataFrame(
+            [(u, h) for u, _, h in self.ROWS], "url string, html binary"
+        ).write.parquet(path)
+        got, written = self._run(spark, path, tmp_path, monkeypatch)
+        assert _optimized(written["gated"]).count("ArrowEvalPython") == 1
+        assert set(got) == {
+            "https://a.org/1", "https://a.org/2", "https://a.org/3",
+            "https://b.org/4", "https://b.org/5", "https://b.org/6",
+        }
 
 
 class TestKgHtmlExtractOnce:

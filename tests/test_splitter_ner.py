@@ -6,7 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from easyner_spark.fixtures import TERMS
-from easyner_spark.operators.ner_dict import dict_ner, dict_ner_join
+from easyner_spark.operators.ner_dict import dict_ner
 from easyner_spark.operators.splitter import split_sentences, split_sentences_udf
 from tests.conftest import assert_pdf_equal
 
@@ -56,17 +56,6 @@ def test_dict_ner_surface_slices_match_sentence(spark, fx, pages_df):
     )
     bad = joined.where(F.col("mention") != F.col("slice")).count()
     assert bad == 0
-
-
-def test_dict_ner_join_variant_agrees_on_token_spans(spark, fx, pages_df):
-    """The pure-built-ins broadcast-join formulation finds exactly the
-    same (url, sent_idx, begin_tok, end_tok, class) set as the trie."""
-    sents = split_sentences(pages_df)
-    trie = dict_ner(sents, TERMS).toPandas()
-    terms_df = spark.createDataFrame(pd.DataFrame(TERMS, columns=["term", "class"]))
-    join = dict_ner_join(sents, terms_df).toPandas()
-    key = ["url", "sent_idx", "begin_tok", "end_tok", "class"]
-    assert_pdf_equal(join[key], trie[key], key)
 
 
 def test_nested_and_boundary_semantics(spark):

@@ -2,7 +2,7 @@
 """Skew-stress tier (VERDICT r1 next-step #8): deliberately hot host +
 hot mention, salted vs unsalted plans, measured.
 
-Corpus: the cached bench pages corpus (fixtures.generate Zipf hosts),
+Corpus: a cached synthetic pages corpus (fixtures.generate Zipf hosts),
 skew-amplified at load time by a deterministic projection — ~30% of
 mention rows are remapped to ONE mention surface ('covid') on ONE host
 ('hot.example.com'), the worst case the north_rule's "URL-host skew via
@@ -42,12 +42,28 @@ def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def _pages_parquet(spark, n_docs: int) -> str:
+    """Materialize the deterministic synthetic pages corpus once."""
+    path = f"/tmp/easyner_bench_pages_{n_docs}.parquet"
+    marker = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(marker):
+        from easyner_spark.fixtures import generate
+
+        fx = generate(n_docs=n_docs, seed=42, with_gold=False)
+        (
+            spark.createDataFrame(fx.pages)
+            .repartition(32)
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+    return path
+
+
 def main() -> None:
     n_pages = int(os.environ.get("SKEW_PAGES", "600000"))
     cpus = int(os.environ.get("SKEW_CPUS", "32"))
     repeat = int(os.environ.get("SKEW_REPEAT", "3"))
 
-    from bench import _pages_parquet  # reuse the cached corpus
     from easyner_spark.fixtures import ALIAS, TERMS
     from easyner_spark.operators.analysis import (
         entity_frequency,
