@@ -38,9 +38,11 @@ import argparse
 import json
 import os
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def _load_terms(path: str | None) -> list[tuple[str, str | None]]:
@@ -63,10 +65,13 @@ def _load_alias(spark: SparkSession, path: str | None) -> DataFrame:
         from easyner_spark.fixtures import ALIAS
 
         return spark.createDataFrame(ALIAS, "term string, ID string")
+    # typed and strict: no schema-inferring job, and a line of the wrong
+    # width raises instead of loading with a null or truncated field
     return (
-        spark.read.option("sep", "\t")
+        spark.read.schema("term string, ID string")
+        .option("sep", "\t")
+        .option("mode", "FAILFAST")
         .csv(path)
-        .toDF("term", "ID")
         .where(F.col("term").isNotNull())
     )
 
@@ -74,20 +79,29 @@ def _load_alias(spark: SparkSession, path: str | None) -> DataFrame:
 def _materialize(spark: SparkSession, table, df_fn, resume: bool) -> tuple[DataFrame, int]:
     """Write `df_fn()` as `table`'s next snapshot; return the snapshot
     read back and its row count. The count rides the write as an
-    Observation, so the stage's plan runs once. Only a resumed stage,
-    whose snapshot already exists, is counted by a scan."""
+    Observation, so the stage's plan runs once, and the read-back
+    carries the schema just written, so no job infers it. Only a
+    resumed stage, whose snapshot already exists, is counted by a
+    scan."""
     snap = table.current_snapshot()
     if resume and snap is not None:
         print(f"[skip] {os.path.basename(table.path)}: snapshot {snap} exists")
         df = table.read(spark)
         return df, df.count()
+    df = df_fn()
     rows = Observation()
-    table.overwrite(df_fn().observe(rows, F.count(F.lit(1)).alias("n")))
-    return table.read(spark), rows.get["n"]
+    table.overwrite(df.observe(rows, F.count(F.lit(1)).alias("n")))
+    return table.read(spark, schema=df.schema), rows.get["n"]
 
 
 def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
-    """Run the enabled stages; returns {stage: row_count}."""
+    """Run the enabled stages; returns {stage: row_count}.
+
+    Each stage writes its snapshot before the next one reads it, except
+    the analysis stage (`frequency`, plus the optional chart): it feeds
+    no other stage, so it runs on a worker thread beside the
+    NEL -> triples -> components chain. An error in it is raised once
+    the chain's snapshots are committed."""
     from easyner_spark.operators.analysis import entity_frequency
     from easyner_spark.operators.components import connected_components
     from easyner_spark.operators.ner_dict import dict_ner
@@ -175,8 +189,8 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
             spark, tables["mentions"], lambda: dict_ner(sents, terms), resume
         )
 
-    if modules["analysis"] and ments is not None:
-        freq, counts["frequency"] = _materialize(
+    def analysis() -> int:
+        freq, n = _materialize(
             spark, tables["frequency"],
             lambda: entity_frequency(ments, mention_col="mention_lc"), resume,
         )
@@ -186,90 +200,102 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
             write_barchart_svg(
                 freq, f"{out_dir}/top_entities.svg", n=cfg.get("chart_top_n", 50)
             )
+        return n
 
-    linked = None
-    if modules["nel"] and ments is not None:
-        raw_alias = _load_alias(spark, cfg.get("alias_path"))
-        alias = primary_alias(raw_alias)
-        if cfg.get("disambiguate_nel") and sents is not None:
-            # context disambiguation: when one surface maps to SEVERAL
-            # alias ids, pick per mention the candidate whose corpus
-            # profile (built from unambiguous mentions only) best
-            # overlaps the mention's sentence — instead of the exact
-            # path's deterministic primary-alias collapse. Unambiguous
-            # surfaces pass through unchanged; surfaces absent from
-            # the alias table drop (keep_unmatched=False semantics).
-            from easyner_spark.operators.nel import disambiguate_mentions
+    # the analysis stage feeds no other stage, so it runs on a worker
+    # thread (which inherits the caller's job group) beside the
+    # NEL -> triples -> components chain; leaving the `with` block joins
+    # it, and `result()` re-raises its error once the chain is committed
+    freq_job = None
+    with ThreadPoolExecutor(1) as pool:
+        if modules["analysis"] and ments is not None:
+            freq_job = pool.submit(inheritable_thread_target(spark)(analysis))
 
-            key = ["url", "sent_idx", "begin_tok", "end_tok", "mention_lc"]
-            linked, counts["linked"] = _materialize(
-                spark, tables["linked"],
-                lambda: disambiguate_mentions(ments, sents, raw_alias)
-                .drop("n_cands", "score")
-                # reattach the char spans downstream triple extraction
-                # keys on (the disambiguator works in token space)
-                .join(ments.select(*key, "begin", "end"), key),
+        linked = None
+        if modules["nel"] and ments is not None:
+            raw_alias = _load_alias(spark, cfg.get("alias_path"))
+            alias = primary_alias(raw_alias)
+            if cfg.get("disambiguate_nel") and sents is not None:
+                # context disambiguation: when one surface maps to SEVERAL
+                # alias ids, pick per mention the candidate whose corpus
+                # profile (built from unambiguous mentions only) best
+                # overlaps the mention's sentence — instead of the exact
+                # path's deterministic primary-alias collapse. Unambiguous
+                # surfaces pass through unchanged; surfaces absent from
+                # the alias table drop (keep_unmatched=False semantics).
+                from easyner_spark.operators.nel import disambiguate_mentions
+
+                key = ["url", "sent_idx", "begin_tok", "end_tok", "mention_lc"]
+                linked, counts["linked"] = _materialize(
+                    spark, tables["linked"],
+                    lambda: disambiguate_mentions(ments, sents, raw_alias)
+                    .drop("n_cands", "score")
+                    # reattach the char spans downstream triple extraction
+                    # keys on (the disambiguator works in token space)
+                    .join(ments.select(*key, "begin", "end"), key),
+                    resume,
+                )
+            elif cfg.get("fuzzy_nel"):
+                # second-pass canonicalization: surface forms the exact
+                # alias join misses remap to the char-gram-closest alias
+                # entity (>= fuzzy_threshold), so morphological variants
+                # stop fragmenting KG nodes. NOTE the structural contrast
+                # with the exact path: exact drops unmatched mentions
+                # (keep_unmatched=False); fuzzy keeps EVERY mention —
+                # below-threshold ones enter the graph under stable
+                # surface:<mention> ids (documented in README)
+                from easyner_spark.operators.nel import fuzzy_canonicalize_mentions
+
+                thr = float(cfg.get("fuzzy_threshold", 0.6))
+                linked, counts["linked"] = _materialize(
+                    spark, tables["linked"],
+                    lambda: fuzzy_canonicalize_mentions(ments, raw_alias, threshold=thr),
+                    resume,
+                )
+            else:
+                linked, counts["linked"] = _materialize(
+                    spark, tables["linked"],
+                    lambda: link_entities(ments, alias, keep_unmatched=False), resume,
+                )
+
+        edges = None
+        if modules["triples"] and linked is not None:
+            edges, counts["edges"] = _materialize(
+                spark, tables["edges"],
+                lambda: aggregate_edges(extract_triples(linked)), resume,
+            )
+
+        if modules["components"] and edges is not None:
+            _, counts["nodes"] = _materialize(
+                spark, tables["nodes"],
+                lambda: connected_components(
+                    edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+                ),
                 resume,
             )
-        elif cfg.get("fuzzy_nel"):
-            # second-pass canonicalization: surface forms the exact
-            # alias join misses remap to the char-gram-closest alias
-            # entity (>= fuzzy_threshold), so morphological variants
-            # stop fragmenting KG nodes. NOTE the structural contrast
-            # with the exact path: exact drops unmatched mentions
-            # (keep_unmatched=False); fuzzy keeps EVERY mention —
-            # below-threshold ones enter the graph under stable
-            # surface:<mention> ids (documented in README)
-            from easyner_spark.operators.nel import fuzzy_canonicalize_mentions
 
-            thr = float(cfg.get("fuzzy_threshold", 0.6))
-            linked, counts["linked"] = _materialize(
-                spark, tables["linked"],
-                lambda: fuzzy_canonicalize_mentions(ments, raw_alias, threshold=thr),
-                resume,
-            )
-        else:
-            linked, counts["linked"] = _materialize(
-                spark, tables["linked"],
-                lambda: link_entities(ments, alias, keep_unmatched=False), resume,
-            )
+        # standing queries: fold each registered pattern set against the
+        # fresh edge snapshot (epoch = the snapshot id, so alerts line up
+        # with the resume ledger); idempotent on re-runs by construction
+        if cfg.get("standing_queries") and edges is not None:
+            from easyner_spark.operators.triples import _pattern_vars
+            from easyner_spark.streaming.pipeline import fold_standing_query
 
-    edges = None
-    if modules["triples"] and linked is not None:
-        edges, counts["edges"] = _materialize(
-            spark, tables["edges"],
-            lambda: aggregate_edges(extract_triples(linked)), resume,
-        )
+            for sq in cfg["standing_queries"]:
+                pats = [tuple(p) for p in sq["patterns"]]
+                mt = SnapshotTable(
+                    f"{out_dir}/standing_{sq['name']}", _pattern_vars(pats)
+                )
+                counts[f"standing_{sq['name']}"] = fold_standing_query(
+                    spark,
+                    tables["edges"],
+                    mt,
+                    pats,
+                    epoch=tables["edges"].current_snapshot() or 0,
+                )
 
-    if modules["components"] and edges is not None:
-        _, counts["nodes"] = _materialize(
-            spark, tables["nodes"],
-            lambda: connected_components(
-                edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-            ),
-            resume,
-        )
-
-    # standing queries: fold each registered pattern set against the
-    # fresh edge snapshot (epoch = the snapshot id, so alerts line up
-    # with the resume ledger); idempotent on re-runs by construction
-    if cfg.get("standing_queries") and edges is not None:
-        from easyner_spark.operators.triples import _pattern_vars
-        from easyner_spark.streaming.pipeline import fold_standing_query
-
-        for sq in cfg["standing_queries"]:
-            pats = [tuple(p) for p in sq["patterns"]]
-            mt = SnapshotTable(
-                f"{out_dir}/standing_{sq['name']}", _pattern_vars(pats)
-            )
-            counts[f"standing_{sq['name']}"] = fold_standing_query(
-                spark,
-                tables["edges"],
-                mt,
-                pats,
-                epoch=tables["edges"].current_snapshot() or 0,
-            )
-
+    if freq_job is not None:
+        counts["frequency"] = freq_job.result()
     return counts
 
 

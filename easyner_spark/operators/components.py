@@ -37,7 +37,8 @@ Plan-iteration record (round 2, interleaved A/B at bench scale):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -82,21 +83,28 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    # bit_xor: order-insensitive, overflow-free under ANSI mode; rows
-    # are distinct so xor cancellation can't mask a real change
-    row = edges.agg(
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """Eager local checkpoint of `edges` and its (count, bit_xor of
+    xxhash64) signature, observed on the checkpoint job itself — no
+    separate aggregate. bit_xor: order-insensitive, overflow-free under
+    ANSI mode; rows are distinct so xor cancellation can't mask a real
+    change."""
+    sig = Observation()
+    cp = edges.observe(
+        sig,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
+    ).localCheckpoint(eager=True)
+    m = sig.get
+    return cp, (m["n"], m["h"])
 
 
 def _local_finish(cur: DataFrame) -> DataFrame:
     """Union-find over a COLLECTED edge list (Arrow transfer), root =
     min node id — bit-identical output to the distributed fixpoint.
     Only called when the current edge count is below the driver
-    threshold (the same bounded-driver-data class as IVF centroids)."""
+    threshold (the same bounded-driver-data class as IVF centroids).
+    The result goes back as a pandas frame, over Arrow."""
     spark = cur.sparkSession
     node_type = cur.schema["src"].dataType.simpleString()
     pdf = cur.toPandas()
@@ -115,9 +123,10 @@ def _local_finish(cur: DataFrame) -> DataFrame:
         if rs != rd:
             lo, hi = (rs, rd) if rs < rd else (rd, rs)
             parent[hi] = lo
-    rows = [(v, find(v)) for v in parent]
+    nodes = list(parent)
     return spark.createDataFrame(
-        rows, f"node {node_type}, component {node_type}"
+        pd.DataFrame({"node": nodes, "component": [find(v) for v in nodes]}),
+        f"node {node_type}, component {node_type}",
     )
 
 
@@ -137,8 +146,7 @@ def connected_components(
     alternating-star rounds run DISTRIBUTED while the edge list is
     large; each round contracts the graph toward one star per
     component, and as soon as the surviving edge count drops to
-    `local_finish_edges` (checked from the same per-round checksum
-    aggregate — no extra job) the remainder is finished with a
+    `local_finish_edges` the remainder is finished with a
     driver-side union-find over a bounded collect (~16 bytes/edge; the
     default 200k caps it at a few MB, the same driver-data class as
     the IVF centroid list). At 10^12 documents the first rounds do the
@@ -150,27 +158,31 @@ def connected_components(
     (the value oracle runs that path; a pytest pins local ==
     distributed on random graphs).
 
+    Every eager `localCheckpoint` carries an `Observation` of the
+    checkpointed edge list's signature, (count, bit_xor of xxhash64):
+    the count decides the local finish, and an unchanged signature ends
+    the fixpoint — both without a job of their own.
+
     Pass `stats={}` to receive {"rounds": n, "local_finish": bool} —
     the skew/stress tooling reports round counts alongside wall time
     (a giant component costs extra ROUNDS, not a hot reducer; see
     tools/components_stress.py)."""
-    cur = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    cur = cur.localCheckpoint(eager=True)
+    cur, sig = _checkpoint(
+        _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    )
     rounds = 0
     if stats is not None:
         stats["rounds"] = rounds
         stats["local_finish"] = False
-    sig = _checksum(cur)
     for _ in range(max_iter):
         if sig[0] <= local_finish_edges:
             if stats is not None:
                 stats["local_finish"] = True
             return _local_finish(cur)
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        cur, new_sig = _checkpoint(_small_star(_large_star(cur)))
         rounds += 1
         if stats is not None:
             stats["rounds"] = rounds
-        new_sig = _checksum(cur)
         if new_sig == sig:
             break
         sig = new_sig

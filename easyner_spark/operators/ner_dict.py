@@ -17,18 +17,18 @@ Semantics preserved here:
 
 Spark shape: the dictionary is small (hundreds..100k terms) — its term
 list is broadcast once per executor, and every task builds a token-trie
-from it; matching runs inside `mapInPandas` (Arrow batches, no per-row
-Python serde). The operator is a narrow map — no shuffle — so it scales
-linearly to any number of executors; this is the "salted broadcast-join
-against an alias dictionary" analog from the north_star, with the
-broadcast making it immune to URL-host skew.
+from it; matching runs inside `mapInArrow` (Arrow record batches in and
+out, no pandas, no per-row Python serde). The operator is a narrow map —
+no shuffle — so it scales linearly to any number of executors; this is
+the "salted broadcast-join against an alias dictionary" analog from the
+north_star, with the broadcast making it immune to URL-host skew.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,20 +70,30 @@ def load_terms_file(path: str, cls: str | None = None) -> list[tuple[str, str | 
     return out
 
 
-def match_tokens(trie: dict, toks: list[tuple[str, int, int]]):
-    """Yield (begin_tok, end_tok, begin_char, end_char, classes) for every
-    trie match over the token stream; all overlaps kept; emission order
-    (begin, end) ascending — the engine's canonical mention order."""
+def lower_tokens(text: str) -> list[str]:
+    """The sentence's token stream (TOKEN_RE), each token lowercased.
+    One `lower()` over the space-joined tokens: tokens hold no
+    whitespace, and a space ends a word for the final-sigma rule just
+    as the end of a token does, so this equals lowercasing each token."""
+    toks = TOKEN_RE.findall(text)
+    return " ".join(toks).lower().split(" ") if toks else []
+
+
+def match_tokens(trie: dict, toks: list[str]):
+    """Yield (begin_tok, end_tok, classes) for every trie match over the
+    lowercased token stream (:func:`lower_tokens`); all overlaps kept;
+    emission order (begin, end) ascending — the engine's canonical
+    mention order."""
     n = len(toks)
     for i in range(n):
         node = trie
         for j in range(i, n):
-            node = node.get(toks[j][0].lower())
+            node = node.get(toks[j])
             if node is None:
                 break
             classes = node.get(None)
             if classes:
-                yield i, j + 1, toks[i][1], toks[j][2], classes
+                yield i, j + 1, classes
 
 
 def dict_ner(
@@ -95,35 +105,67 @@ def dict_ner(
 
     The term list is broadcast, and each task builds the trie from it
     once, on entry to its partition iterator: 60-120 ms per task on a
-    20k-term dictionary (4-core Xeon).
+    20k-term dictionary (4-core Xeon). Broadcasting the pickled trie
+    instead does not pay: measured side by side, unpickling it took
+    0.14 s and building it 0.12-0.13 s.
+
+    Matching runs in `mapInArrow`: each batch's texts are tokenized and
+    matched in Python, character offsets are computed only for the
+    sentences with a hit, and the output columns are built as Arrow
+    arrays (`url`/`sent_idx` by `take` on the input's).
     """
     spark = sentences.sparkSession
     bc = spark.sparkContext.broadcast(terms)
 
-    def _match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _match(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         trie = build_trie(bc.value)
         cols = [
             "url", "sent_idx", "mention", "mention_lc",
             "begin", "end", "begin_tok", "end_tok", "class",
         ]
-        for pdf in batches:
-            rows = []
-            for url, sent_idx, text in zip(
-                pdf["url"].values, pdf["sent_idx"].values, pdf[text_col].values
-            ):
+        for batch in batches:
+            rows: list[int] = []
+            mention: list[str] = []
+            begin: list[int] = []
+            end: list[int] = []
+            begin_tok: list[int] = []
+            end_tok: list[int] = []
+            cls_out: list[str | None] = []
+            for r, text in enumerate(batch.column(2).to_pylist()):
                 if not text:
                     continue
-                toks = tokenize_with_offsets(text)
-                for bt, et, bc_, ec, classes in match_tokens(trie, toks):
-                    surface = text[bc_:ec]
+                hits = list(match_tokens(trie, lower_tokens(text)))
+                if not hits:
+                    continue
+                spans = tokenize_with_offsets(text)
+                for bt, et, classes in hits:
+                    b, e = spans[bt][1], spans[et - 1][2]
                     for cls in classes:
-                        rows.append(
-                            (url, sent_idx, surface, surface.lower(), bc_, ec, bt, et, cls)
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+                        rows.append(r)
+                        mention.append(text[b:e])
+                        begin.append(b)
+                        end.append(e)
+                        begin_tok.append(bt)
+                        end_tok.append(et)
+                        cls_out.append(cls)
+            idx = pa.array(rows, pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(idx),
+                    batch.column(1).take(idx),
+                    pa.array(mention, pa.string()),
+                    pa.array([m.lower() for m in mention], pa.string()),
+                    pa.array(begin, pa.int32()),
+                    pa.array(end, pa.int32()),
+                    pa.array(begin_tok, pa.int32()),
+                    pa.array(end_tok, pa.int32()),
+                    pa.array(cls_out, pa.string()),
+                ],
+                names=cols,
+            )
 
     pruned = sentences.select("url", "sent_idx", text_col)
-    return pruned.mapInPandas(_match, MENTION_SCHEMA)
+    return pruned.mapInArrow(_match, MENTION_SCHEMA)
 
 
 def ner_examples(

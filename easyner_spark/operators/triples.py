@@ -44,15 +44,16 @@ def extract_triples(
          the ARRAY in-memory (sentences hold a handful of entities, so
          the sort is trivially cheap and bounded);
       3. nested array transform emits the i<j pairs; one explode.
-    ONE shuffle: the explicit repartition on (url, sent_idx) satisfies
-    BOTH groupBys' clustering requirements (hash on a PREFIX of the
-    grouping key co-locates every group), so EnsureRequirements inserts
-    no further exchange — verified 2 Exchanges -> 1 in the physical
-    plan. No join, no window state.
+    ONE shuffle: the explicit repartition on `url` satisfies BOTH
+    groupBys' clustering requirements (hash on a subset of the grouping
+    key co-locates every group), so EnsureRequirements inserts no
+    further exchange — verified 2 Exchanges -> 1 in the physical plan.
+    The output stays clustered by `url`, which `aggregate_edges`'
+    per-document level reuses. No join, no window state.
     """
     ids = (
         linked_mentions.where(F.col("entity_id") != "")
-        .repartition(F.col("url"), F.col("sent_idx"))
+        .repartition(F.col("url"))
         .groupBy("url", "sent_idx", "entity_id")
         # lexicographic-min (begin, end): the id's FIRST occurrence in
         # canonical mention order, not independent per-column minima
@@ -90,16 +91,26 @@ def aggregate_edges(triples: DataFrame, exact_sets: bool = False) -> DataFrame:
     """Deduplicated edge table with provenance (SURVEY section 7.2.8):
     (subj_id, pred, obj_id) -> support count + distinct-doc count
     (+ exemplar urls in the test profile — unbounded sets are gated off
-    at web scale, same policy as analysis.entity_frequency)."""
+    at web scale, same policy as analysis.entity_frequency).
+
+    Two levels instead of `countDistinct`'s Expand: per (edge, url) a
+    count, then per edge `sum` = support and `count` = doc_count. On
+    `extract_triples`' output, clustered by `url`, the first level runs
+    without a shuffle, so the table costs one exchange."""
+    per_doc = triples.groupBy("subj_id", "pred", "obj_id", "url").agg(
+        F.count(F.lit(1)).alias("n")
+    )
     aggs = [
-        F.count(F.lit(1)).alias("support"),
-        F.countDistinct("url").alias("doc_count"),
+        # coalesce: non-null like the count it sums (sum() is nullable)
+        F.coalesce(F.sum("n"), F.lit(0)).alias("support"),
+        F.count(F.lit(1)).alias("doc_count"),
     ]
     if exact_sets:
+        # the urls are distinct per edge at this level
         aggs.append(
-            F.slice(F.sort_array(F.collect_set("url")), 1, 16).alias("example_urls")
+            F.slice(F.sort_array(F.collect_list("url")), 1, 16).alias("example_urls")
         )
-    return triples.groupBy("subj_id", "pred", "obj_id").agg(*aggs)
+    return per_doc.groupBy("subj_id", "pred", "obj_id").agg(*aggs)
 
 
 # ---------------------------------------------------------------------------

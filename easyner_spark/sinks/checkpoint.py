@@ -41,6 +41,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 _CURRENT = "_CURRENT"
@@ -134,11 +135,17 @@ class SnapshotTable:
         self._commit(snap, self._snap_epoch(snap))
 
     # -- data ------------------------------------------------------------
-    def read(self, spark: SparkSession) -> DataFrame | None:
+    def read(
+        self, spark: SparkSession, schema: StructType | None = None
+    ) -> DataFrame | None:
+        """The current snapshot, or None before the first commit. Pass
+        the `schema` the snapshot was written with to skip the Spark job
+        that infers it from the parquet footers."""
         snap = self.current_snapshot()
         if snap is None:
             return None
-        return spark.read.parquet(self._snap_dir(snap))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._snap_dir(snap))
 
     def read_snapshot(self, spark: SparkSession, snap: int) -> DataFrame:
         """Time-travel read: any retained snapshot by id, WITHOUT

@@ -114,8 +114,7 @@ def windowed_mention_rates(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    from easyner_spark.operators.ner_dict import build_trie, match_tokens
-    from easyner_spark.functions.text import tokenize_with_offsets
+    from easyner_spark.operators.ner_dict import build_trie, lower_tokens, match_tokens
     from easyner_spark.operators.splitter import split_sentences
 
     bc = pages_stream.sparkSession.sparkContext.broadcast(terms)
@@ -130,9 +129,7 @@ def windowed_mention_rates(
             if not text:
                 return []
             out = []
-            for _bt, _et, _bc, _ec, classes in match_tokens(
-                trie, tokenize_with_offsets(text)
-            ):
+            for _bt, _et, classes in match_tokens(trie, lower_tokens(text)):
                 out.extend(classes)
             return out
 

@@ -330,6 +330,69 @@ class TestCli:
             for name in ("edges", "nodes"):
                 assert rows(out, name) == rows("clean", name), (out, name)
 
+    def test_failed_analysis_stage_leaves_the_chain_committed(
+        self, spark, pages_df, tmp_path, monkeypatch
+    ):
+        """The analysis stage runs beside the NEL -> triples ->
+        components chain: its error leaves run_pipeline, the chain's
+        snapshots are committed anyway, and a resumed run equals a
+        clean run."""
+        from easyner_spark.cli import run_pipeline
+        from easyner_spark.operators import analysis
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+
+        pages_path = str(tmp_path / "pages.parquet")
+        pages_df.write.parquet(pages_path)
+
+        def table(out, name):
+            return SnapshotTable(f"{tmp_path / out}/{name}", [])
+
+        def rows(out, name):
+            return sorted(map(tuple, table(out, name).read(spark).collect()))
+
+        def cfg(out, resume):
+            return {"input": {"pages_path": pages_path},
+                    "output_dir": str(tmp_path / out), "resume": resume}
+
+        clean = run_pipeline(spark, cfg("clean", False))
+
+        def raise_in_stage(*a, **kw):
+            raise RuntimeError("failed inside the frequency stage")
+
+        with monkeypatch.context() as m:
+            m.setattr(analysis, "entity_frequency", raise_in_stage)
+            with pytest.raises(RuntimeError, match="frequency stage"):
+                run_pipeline(spark, cfg("failed", False))
+        assert table("failed", "frequency").current_snapshot() is None
+        for name in ("linked", "edges", "nodes"):
+            assert table("failed", name).current_snapshot() == 1, name
+        assert run_pipeline(spark, cfg("failed", True)) == clean
+        for name in ("frequency", "linked", "edges", "nodes"):
+            assert rows("failed", name) == rows("clean", name), name
+
+    def test_short_alias_line_raises(self, spark, pages_df, tmp_path):
+        """The alias TSV loads with its two-column schema in FAILFAST
+        mode: a line with one field raises instead of linking its term
+        to a null ID."""
+        from easyner_spark.cli import run_pipeline
+        from easyner_spark.fixtures import ALIAS
+
+        pages_path = str(tmp_path / "pages.parquet")
+        pages_df.write.parquet(pages_path)
+        alias = tmp_path / "alias.tsv"
+        term = ALIAS[0][0]
+        alias.write_text(
+            "".join(f"{t}\t{i}\n" for t, i in ALIAS[1:]) + f"{term}\n",
+            encoding="utf-8",
+        )
+        with pytest.raises(Exception, match="MALFORMED"):
+            run_pipeline(spark, {
+                "input": {"pages_path": pages_path},
+                "output_dir": str(tmp_path / "out"),
+                "alias_path": str(alias),
+                "resume": False,
+            })
+
     def test_disambiguate_nel_stage(self, spark, pages_df, tmp_path):
         from easyner_spark.cli import run_pipeline
 
