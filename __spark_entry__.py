@@ -888,24 +888,11 @@ def q_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_topic_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexicon-argmax topic bucketing (lang_id contract applied to
-    subject matter; zero shuffle). Oracle generated from the SAME
+    """Lexicon-argmax topic bucketing (zero shuffle). Oracle generated from the SAME
     lexicon dict by topic_oracle_sql, so marker sets cannot drift."""
     from easyner_spark.operators.textstats import topic_id
 
     return topic_id(_docs(spark, sf_dir))
-
-
-def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide repeated-substring flagging (Lee et al. 2022
-    semantics, relational formulation) over the perturbed corpus —
-    the first-word-dropped twins guarantee long shared token runs, so
-    every document yields merged duplicate spans. k=8 token windows,
-    count>=2 anywhere in the corpus; oracle generated by the
-    operator's own repeated_spans_oracle_sql."""
-    from easyner_spark.operators.dedup import repeated_spans
-
-    return repeated_spans(_docs_perturbed(spark, sf_dir), k=8, min_count=2)
 
 
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1543,28 +1530,6 @@ def q_kg_property_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment (syndication) detection: every 7th doc
-    re-served inside a portal wrapper (id + 500000, chrome words
-    around the full text) — the (portal, article) direction flags at
-    100% containment of the article's shingles; Jaccard would score
-    the pair low. df-capped shingles, integer cross-multiply gate."""
-    from easyner_spark.operators.dedup import containment_pairs
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    portals = d.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat(
-            F.lit("portal syndication wrapper intro "),
-            F.col("text"),
-            F.lit(" portal footer navigation links"),
-        ).alias("text"),
-    )
-    return containment_pairs(d.unionByName(portals), k=5)
-
-
 def q_acronyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Acronym-definition mining over injected definitions: 12
     deterministic 3-word org names with matching acronyms (initials
@@ -1670,25 +1635,6 @@ def q_contacts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit("")),
     )
     return contact_facts(d.select("doc_id", text.alias("text")))
-
-
-def q_host_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host language mixture composing the REAL lang_id
-    predictions over the documents table with a deterministic 7-host
-    assignment — exact micro-unit shares per (host, lang)."""
-    from easyner_spark.operators.textstats import host_lang_mix, lang_id
-
-    d = _docs(spark, sf_dir)
-    lp = lang_id(d).select(
-        "doc_id", "lang_pred"
-    )
-    rows = lp.select(
-        F.concat(F.lit("h"), (F.col("doc_id") % 7).cast("string")).alias(
-            "host"
-        ),
-        "lang_pred",
-    )
-    return host_lang_mix(rows)
 
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2072,53 +2018,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def _docs_perturbed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ first-word-dropped copy (+100000 ids): deterministic
-    near-duplicates so the near-dup operators demonstrate real recall."""
-    d = _docs(spark, sf_dir)
-    p = d.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    return d.unionByName(p)
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.textstats import text_stats
-
-    out = text_stats(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_tokens_ws").cast("long").alias("n_tokens_ws"),
-        F.col("n_tokens_re").cast("long").alias("n_tokens_re"),
-        F.col("n_words").cast("long").alias("n_words"),
-        "alpha_ratio",
-        "punct_ratio",
-        "stopword_ratio",
-        "mean_word_len",
-        "quality",
-        "lang_pred",
-        "fingerprint",
-    )
-
-
-def q_paragraph_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-paragraph language segmentation rolled up per doc: majority
-    lang (algebraic argmax), distinct-lang count, mixed flag — the
-    CCNet/mC4-style segment-before-filter signal."""
-    from easyner_spark.operators.textstats import paragraph_langs
-
-    out = paragraph_langs(_docs(spark, sf_dir))
-    return out.select(
-        F.col("id").cast("long").alias("id"),
-        "n_paras",
-        "majority_lang",
-        "n_langs",
-        "is_mixed",
-    )
-
-
 def q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Double-encoding artifact detection. The synthetic corpus is
     clean ASCII, so deterministic corruption is injected first: docs
@@ -2150,17 +2049,6 @@ def q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_repl",
         "mojibake_hits",
         "is_mojibake",
-    )
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.textstats import lang_id
-
-    out = lang_id(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        "lang_pred",
-        *[F.col(f"hits_{lg}").cast("long").alias(f"hits_{lg}") for lg in ("de", "en", "es", "fr")],
     )
 
 
@@ -2196,25 +2084,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return pii_redact(injected)
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-3-style benchmark n-gram decontamination: bench = the
-    doc_id%97==0 slice of documents, so those docs score overlap 1.0
-    (self-contaminated) and the rest measure genuine 8-gram leakage.
-    The oracle rebuilds the 8-gram shingles + distinct bench grams +
-    per-doc hit rollup in SQL."""
-    from easyner_spark.operators.dedup import decontaminate
-
-    d = _docs(spark, sf_dir)
-    bench = d.where(F.col("doc_id") % 97 == 0)
-    return decontaminate(d, bench, n=8, threshold=0.5).select(
-        "id",
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        "overlap_frac",
-        "contaminated",
-    )
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2458,29 +2327,6 @@ def q_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row corpus health report over the text_stats chain —
-    integer-only aggregates (counts and sums of exact ints; float
-    columns enter only through comparisons against values the
-    text_stats oracle already hash-matches), so the rollup is
-    order-independent. The oracle wraps the text_stats SQL as a
-    subquery — one definition of the per-doc stats, two consumers."""
-    from easyner_spark.operators.textstats import text_stats
-
-    s = text_stats(_docs(spark, sf_dir))
-    langs = ("de", "en", "es", "fr")
-    return s.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("n_words").cast("long")).alias("total_words"),
-        F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
-        F.sum((F.col("quality") >= 0.5).cast("long")).alias("n_quality_ge_half"),
-        *[
-            F.sum((F.col("lang_pred") == lg).cast("long")).alias(f"n_{lg}")
-            for lg in langs
-        ],
-    )
-
-
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easyner_spark.operators.dedup import exact_dedup
 
@@ -2489,89 +2335,6 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(d.unionByName(dup)).select(
         "doc_id", "content_hash", "canonical_id", "is_dup"
     )
-
-
-def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(_docs_perturbed(spark, sf_dir)).select(
-        "a", "b", "est_jaccard"
-    )
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
-
-    docs2 = _docs_perturbed(spark, sf_dir)
-    return ngram_jaccard_pairs(docs2, minhash_lsh_pairs(docs2)).select(
-        "a", "b", "jaccard"
-    )
-
-
-def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easyner_spark.operators.dedup import simhash_pairs
-
-    return simhash_pairs(_docs_perturbed(spark, sf_dir)).select(
-        "a", "b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def q_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint selection (MOSS, SIGMOD 2003) over the
-    perturbed near-dup corpus: word-3-gram md5 hashes, window w=4,
-    min-per-window with the rightmost-tie rule — position-aware
-    fingerprints the set-based minhash/simhash paths don't provide.
-    Oracle replays the identical hash/key/window chain in DuckDB."""
-    from easyner_spark.operators.dedup import winnow_fingerprints
-
-    return winnow_fingerprints(_docs_perturbed(spark, sf_dir)).select(
-        "doc_id", F.col("pos").cast("long").alias("pos"), "fp"
-    )
-
-
-def q_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate near-dup pairs sharing >= 2 winnowing fingerprints,
-    df-capped (a fingerprint in > 200 docs is boilerplate and joins
-    nobody) — the position-aware complement to minhash_dedup."""
-    from easyner_spark.operators.dedup import winnow_candidate_pairs
-
-    return winnow_candidate_pairs(_docs_perturbed(spark, sf_dir)).select(
-        "a", "b", "n_shared"
-    )
-
-
-def q_fuzzy_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end fuzzy dedup: MinHash-LSH near-dup pairs -> connected
-    components -> min-id group keeper (operators/dedup.neardup_groups).
-    The oracle rebuilds the full chain in SQL: the shingle/signature/
-    band CTEs shared with minhash_dedup plus a recursive reachability
-    closure — so group assignment, not just the pair list, is
-    value-checked."""
-    from easyner_spark.operators.dedup import neardup_groups
-
-    return neardup_groups(
-        _docs_perturbed(spark, sf_dir), local_finish_edges=0
-    ).select("id", "group_id", "is_dup")
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New-crawl-vs-seen-corpus novelty with the distributed Bloom
-    prefilter ON (operators/dedup.incremental_new_docs): seen =
-    documents; new batch = exact copies (+100000, all dropped) union
-    first-word-truncated copies (+200000, all novel). The oracle is a
-    plain sha256 anti-join — Bloom false positives are re-verified so
-    the filter must never change values, and zero false negatives is
-    structural (a clear bit proves unseen)."""
-    from easyner_spark.operators.dedup import incremental_new_docs
-
-    d = _docs(spark, sf_dir)
-    new = d.select((F.col("doc_id") + 100000).alias("doc_id"), "text").unionByName(
-        d.select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-        )
-    )
-    return incremental_new_docs(new, d.select("doc_id", "text"))
 
 
 def q_boilerplate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3098,73 +2861,6 @@ def _kg_standing_query_oracle() -> str:
     )
 
 
-_B3_ASSIGN_SQL = """SELECT 'r' || doc_id AS r,
-  'p' || (doc_id % 20) AS p, 'g' || (doc_id % 25) AS g
-  FROM documents"""
-
-
-def q_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B-cubed clustering evaluation of a deterministic residue
-    clustering (predicted mod-20 vs gold mod-25 clusters — partial
-    systematic overlap) — per-record micro-floor ratios, group-size
-    arithmetic only, no pairwise join."""
-    from easyner_spark.operators.dedup import bcubed_quality
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    a = d.select(
-        F.concat(F.lit("r"), did.cast("string")).alias("record"),
-        F.concat(F.lit("p"), (did % 20).cast("string")).alias("pred_cluster"),
-        F.concat(F.lit("g"), (did % 25).cast("string")).alias("gold_cluster"),
-    )
-    return bcubed_quality(a)
-
-
-def _bcubed_oracle() -> str:
-    """q_bcubed oracle: the assignment synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.dedup import bcubed_quality_oracle_sql
-
-    return bcubed_quality_oracle_sql(_B3_ASSIGN_SQL)
-
-
-# Blocking-evaluation fixture: records are the documents themselves;
-# gold duplicate pairs are (d, d+1) for doc_id % 4 = 0, the "blocker"
-# under evaluation recalls half of gold (doc_id % 8 = 0) and adds
-# (d, d+2) noise pairs for doc_id % 5 = 0. One definition per side.
-_BQ_GOLD_SQL = """SELECT 'd' || doc_id AS a, 'd' || (doc_id + 1) AS b
-  FROM documents WHERE doc_id % 4 = 0"""
-_BQ_CAND_SQL = """SELECT 'd' || doc_id AS a, 'd' || (doc_id + 1) AS b
-  FROM documents WHERE doc_id % 8 = 0
-  UNION ALL
-  SELECT 'd' || (doc_id + 2) AS a, 'd' || doc_id AS b
-  FROM documents WHERE doc_id % 5 = 0"""
-
-
-def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ER-blocking evaluation (Christen's pairs-completeness / pairs-
-    quality / reduction-ratio triple) of a deterministic half-recall
-    blocker against designed gold duplicate pairs — all-BIGINT
-    micro-unit floors, the tuning harness for every LSH/blocking
-    candidate generator in operators/dedup."""
-    from easyner_spark.operators.dedup import blocking_quality
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    dd = lambda c: F.concat(F.lit("d"), c.cast("string"))  # noqa: E731
-    gold = d.where(did % 4 == 0).select(
-        dd(did).alias("a"), dd(did + 1).alias("b")
-    )
-    cand = d.where(did % 8 == 0).select(
-        dd(did).alias("a"), dd(did + 1).alias("b")
-    ).unionByName(
-        d.where(did % 5 == 0).select(
-            dd(did + 2).alias("a"), dd(did).alias("b")
-        )
-    )
-    return blocking_quality(cand, gold, n_records=d.count())
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: pages -> sentences -> dictionary NER -> ranked entity
     frequency top-50 (the reference pipeline's main output,
@@ -3191,20 +2887,19 @@ _DRIVER_WINDOW_FIRST = [
     "dsir_sample", "kappa", "kg_kcore", "heavy_hitters",
     "pack_sequences", "length_quantiles", "bpe_merges",
     "bpe_token_counts", "bpe_encode", "tokenized_pack", "entity_bursts",
-    "kg_degree_stats", "kg_pattern", "kg_violations", "containment",
+    "kg_degree_stats", "kg_pattern", "kg_violations",
     # --- remaining never-driver-verified (orders the tail so any
     # wider driver window keeps covering unchecked queries first) ---
     "readability", "acronyms", "ntriples", "entity_labels", "contacts",
-    "host_langs", "compaction_plan", "lang_quantiles", "ner_examples",
+    "compaction_plan", "lang_quantiles", "ner_examples",
     "eval_split", "kg_node_profile",
     "latest_crawl", "quality_sample", "crawl_delta", "name_match",
-    "fuzzy_link", "topic_id", "repeated_spans", "chunk_docs", "mixture_sample",
+    "fuzzy_link", "topic_id", "chunk_docs", "mixture_sample",
     "deterministic_sample", "per_host_cap", "word_repetition",
-    "gopher_filters", "mojibake", "paragraph_langs", "pii_redact",
-    "corpus_summary", "inverted_index", "tfidf_sim",
+    "gopher_filters", "mojibake", "pii_redact",
+    "inverted_index", "tfidf_sim",
     "distinct_count", "length_histogram", "sessionize", "asof_join",
-    "event_rollup", "bm25_rank", "winnow_fps", "winnow_dedup",
-    "fuzzy_dedup_groups", "incremental_dedup", "decontaminate",
+    "event_rollup", "bm25_rank",
     "warc_extract", "craft_iob2", "flair_parse",
 ]
 
@@ -3270,8 +2965,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_weights": q_dsir_weights,
         "dsir_sample": q_dsir_sample,
         "kg_pattern_union": q_kg_pattern_union,
-        "blocking_quality": q_blocking_quality,
-        "bcubed_quality": q_bcubed,
         "kg_ego": q_kg_ego,
         "kg_core_numbers": q_kg_core_numbers,
         "kg_standing_query": q_kg_standing_query,
@@ -3284,13 +2977,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pattern": q_kg_pattern,
         "kg_violations": q_kg_violations,
-        "containment": q_containment,
         "readability": q_readability,
         "acronyms": q_acronyms,
         "ntriples": q_ntriples,
         "entity_labels": q_entity_labels,
         "contacts": q_contacts,
-        "host_langs": q_host_langs,
         "compaction_plan": q_compaction_plan,
         "lang_quantiles": q_lang_quantiles,
         "ner_examples": q_ner_examples,
@@ -3305,7 +2996,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "name_match": q_name_match,
         "fuzzy_link": q_fuzzy_link,
         "topic_id": q_topic_id,
-        "repeated_spans": q_repeated_spans,
         "chunk_docs": q_chunk_docs,
         "mixture_sample": q_mixture_sample,
         "deterministic_sample": q_deterministic_sample,
@@ -3313,12 +3003,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_budget": q_token_budget,
         "word_repetition": q_word_repetition,
         "gopher_filters": q_gopher_filters,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
         "mojibake": q_mojibake,
-        "paragraph_langs": q_paragraph_langs,
         "pii_redact": q_pii_redact,
-        "corpus_summary": q_corpus_summary,
         "inverted_index": q_inverted_index,
         "tfidf_sim": q_tfidf_sim,
         "textrank": q_textrank,
@@ -3334,14 +3020,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bigram_lm": q_bigram_lm,
         "quality_classifier": q_quality_classifier,
         "exact_dedup": q_exact_dedup,
-        "minhash_dedup": q_minhash_dedup,
-        "ngram_jaccard": q_ngram_jaccard,
-        "simhash_dedup": q_simhash_dedup,
-        "winnow_fps": q_winnow_fps,
-        "winnow_dedup": q_winnow_dedup,
-        "fuzzy_dedup_groups": q_fuzzy_dedup_groups,
-        "incremental_dedup": q_incremental_dedup,
-        "decontaminate": q_decontaminate,
         "boilerplate_extract": q_boilerplate_extract,
         "pubmed_extract": q_pubmed_extract,
         "warc_extract": q_warc_extract,
@@ -3444,251 +3122,6 @@ def _sql_list(words) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
 
 
-def _textstats_oracle() -> tuple[str, str]:
-    from easyner_spark.operators.textstats import LANG_MARKERS, STOPWORDS_EN
-
-    hits_cols = ",\n    ".join(
-        f"len(list_filter(words, w -> list_contains({_sql_list(m)}, w))) AS hits_{lg}"
-        for lg, m in sorted(LANG_MARKERS.items())
-    )
-    # Mirror the Spark when-chain: CJK wins, then codes ascending on ties.
-    lang_case = (
-        "CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh' "
-        + " ".join(
-            f"WHEN hits_{lg} > 0 AND hits_{lg} = best THEN '{lg}'"
-            for lg in sorted(LANG_MARKERS)
-        )
-        + " ELSE 'und' END"
-    )
-    feat = f"""
-WITH base AS (
-  SELECT doc_id, text, regexp_extract_all(lower(text), '\\w+') AS words
-  FROM documents
-),
-feat AS (
-  SELECT doc_id, text, words,
-    length(text) AS n_chars,
-    len(words) AS n_words,
-    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-    length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS n_punct,
-    len(list_filter(words, w -> list_contains({_sql_list(STOPWORDS_EN)}, w))) AS n_stop,
-    list_sum(list_transform(words, w -> length(w))) AS sum_wlen,
-    {hits_cols}
-  FROM base
-),
-feat2 AS (
-  SELECT *,
-    greatest(hits_de, hits_en, hits_es, hits_fr) AS best,
-    CASE WHEN n_chars > 0 THEN n_alpha / n_chars ELSE 0.0::DOUBLE END AS alpha_ratio,
-    CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0::DOUBLE END AS punct_ratio,
-    CASE WHEN n_words > 0 THEN n_stop / n_words ELSE 0.0::DOUBLE END AS stop_ratio,
-    CASE WHEN n_words > 0 THEN sum_wlen / n_words ELSE 0.0::DOUBLE END AS mean_wlen
-  FROM feat
-)
-"""
-    stats = f"""{feat}
-SELECT doc_id,
-  n_chars::BIGINT AS n_chars,
-  len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens_ws,
-  len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))::BIGINT AS n_tokens_re,
-  n_words::BIGINT AS n_words,
-  round(alpha_ratio, 6) AS alpha_ratio,
-  round(punct_ratio, 6) AS punct_ratio,
-  round(stop_ratio, 6) AS stopword_ratio,
-  round(mean_wlen, 6) AS mean_word_len,
-  round(alpha_ratio * 0.4::DOUBLE + (1.0::DOUBLE - punct_ratio) * 0.3::DOUBLE
-        + stop_ratio * 0.3::DOUBLE, 6) AS quality,
-  {lang_case} AS lang_pred,
-  CASE WHEN length(text) >= 8
-    THEN list_min(list_transform(range(1, length(text) - 6),
-                                 i -> md5(substr(text, i::INT, 8))))
-    ELSE md5(text) END AS fingerprint
-FROM feat2
-"""
-    langid = f"""{feat}
-SELECT doc_id, {lang_case} AS lang_pred,
-  hits_de::BIGINT AS hits_de, hits_en::BIGINT AS hits_en,
-  hits_es::BIGINT AS hits_es, hits_fr::BIGINT AS hits_fr
-FROM feat2
-"""
-    return stats, langid
-
-
-def _dedup_oracles() -> dict[str, str]:
-    from easyner_spark.operators.dedup import (
-        BAND_ROWS,
-        N_HASHES,
-        SIMHASH_BITS,
-        winnow_candidate_pairs_oracle_sql,
-        winnow_fingerprints_oracle_sql,
-    )
-
-    # the SELECT twin of _docs_perturbed (ids +100000, first word
-    # dropped) — shared by the winnowing oracles
-    docs2_select = (
-        "SELECT doc_id AS id, text FROM documents UNION ALL "
-        "SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)"
-        " FROM documents"
-    )
-    winnow_fp_sql = winnow_fingerprints_oracle_sql(docs2_select).replace(
-        "SELECT doc_id, pos, fp FROM wfp",
-        "SELECT doc_id, pos::BIGINT AS pos, fp FROM wfp",
-    )
-    winnow_pair_sql = winnow_candidate_pairs_oracle_sql(docs2_select)
-
-    n_bands = N_HASHES // BAND_ROWS
-    docs2 = """
-docs2 AS (
-  SELECT doc_id AS id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1) FROM documents
-)"""
-    sig_comps = ", ".join(
-        f"list_min(list_transform(sh, s -> md5('{i}|' || s)))" for i in range(N_HASHES)
-    )
-    band_hash = " || '|' || ".join(
-        f"sig[({BAND_ROWS} * band_idx + {r + 1})::INT]" for r in range(BAND_ROWS)
-    )
-    eq_terms = " + ".join(f"(sig_a[{i + 1}] = sig_b[{i + 1}])::INT" for i in range(N_HASHES))
-    band_list = "[" + ", ".join(str(j) for j in range(n_bands)) + "]"
-    mh_prelude = f"""
-WITH {docs2},
-toks AS (SELECT id, regexp_extract_all(lower(text), '\\w+') AS toks FROM docs2),
-sh AS (
-  SELECT id, list_sort(list_distinct(
-    CASE WHEN len(toks) >= 3
-      THEN list_transform(range(0, len(toks) - 2),
-             i -> toks[(i + 1)::INT] || ' ' || toks[(i + 2)::INT] || ' ' || toks[(i + 3)::INT])
-      ELSE [array_to_string(toks, ' ')] END)) AS sh
-  FROM toks
-),
-sig AS (SELECT id, [{sig_comps}] AS sig FROM sh),
-bands AS (SELECT id, sig, unnest({band_list}) AS band_idx FROM sig),
-bands2 AS (SELECT id, sig, band_idx, md5({band_hash}) AS band_hash FROM bands),
-cand AS (
-  SELECT DISTINCT a.id AS a, b.id AS b, a.sig AS sig_a, b.sig AS sig_b
-  FROM bands2 a JOIN bands2 b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id
-)"""
-    minhash = f"""{mh_prelude}
-SELECT a, b, round(({eq_terms}) / {N_HASHES}, 6) AS est_jaccard FROM cand
-"""
-    jaccard = f"""{mh_prelude}
-SELECT c.a, c.b,
-  round(len(list_intersect(sa.sh, sb.sh))
-        / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6) AS jaccard
-FROM cand c JOIN sh sa ON c.a = sa.id JOIN sh sb ON c.b = sb.id
-"""
-    sum_cols = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN cnt ELSE -cnt END) AS s{b}"
-        for b in range(SIMHASH_BITS)
-    )
-    fp_expr = " + ".join(
-        f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(SIMHASH_BITS)
-    )
-    simhash = f"""
-WITH {docs2},
-toks AS (SELECT id, unnest(regexp_extract_all(lower(text), '\\w+')) AS tok FROM docs2),
-cnt AS (SELECT id, tok, count(*) AS cnt FROM toks GROUP BY id, tok),
-h AS (SELECT id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h, cnt FROM cnt),
-sums AS (SELECT id, {sum_cols} FROM h GROUP BY id),
-fp AS (SELECT id, ({fp_expr})::BIGINT AS simhash FROM sums),
-bands AS (SELECT id, simhash, unnest([0, 1, 2, 3]) AS band_idx FROM fp),
-bands2 AS (SELECT id, simhash, band_idx, (simhash >> (8 * band_idx)) & 255 AS band_val FROM bands),
-pairs AS (
-  SELECT DISTINCT a.id AS a, b.id AS b, a.simhash AS sa, b.simhash AS sb
-  FROM bands2 a JOIN bands2 b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.id < b.id
-)
-SELECT a, b, bit_count(xor(sa, sb))::BIGINT AS hamming
-FROM pairs WHERE bit_count(xor(sa, sb)) <= 3
-"""
-    exact = """
-WITH docs2 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 500000, text FROM documents
-),
-h AS (SELECT doc_id, sha256(text) AS content_hash FROM docs2)
-SELECT doc_id, content_hash,
-  min(doc_id) OVER (PARTITION BY content_hash) AS canonical_id,
-  doc_id <> min(doc_id) OVER (PARTITION BY content_hash) AS is_dup
-FROM h
-"""
-    # Fuzzy-dedup groups: the same candidate CTEs, thresholded at the
-    # rounded est_jaccard (the Spark side filters AFTER round(·, 6)),
-    # then a recursive min-label closure — the keeper contract of
-    # dedup.neardup_groups, value-checked end to end.
-    fuzzy_groups = mh_prelude.replace("WITH ", "WITH RECURSIVE ", 1) + f""",
-prs AS (SELECT a, b FROM cand WHERE round(({eq_terms}) / {N_HASHES}, 6) >= 0.5),
-sym AS (SELECT a, b FROM prs UNION SELECT b AS a, a AS b FROM prs),
-cc_nodes AS (SELECT DISTINCT a AS node FROM sym),
-reach(node, lbl) AS (
-  SELECT node, node FROM cc_nodes
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN sym e ON r.node = e.a
-),
-comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node)
-SELECT d.id, coalesce(c.component, d.id) AS group_id,
-       coalesce(c.component, d.id) <> d.id AS is_dup
-FROM (SELECT DISTINCT id FROM docs2) d LEFT JOIN comp c ON d.id = c.node
-"""
-    # Incremental novelty: plain sha256 canonicalize + anti-join — the
-    # Bloom prefilter on the Spark side must be value-invisible.
-    incremental = """
-WITH new_docs AS (
-  SELECT doc_id + 100000 AS id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1) FROM documents
-),
-canon AS (
-  SELECT min(id) AS id, sha256(text) AS content_hash
-  FROM new_docs GROUP BY sha256(text)
-),
-seen_h AS (SELECT DISTINCT sha256(text) AS content_hash FROM documents)
-SELECT c.id, c.content_hash FROM canon c
-WHERE NOT EXISTS (SELECT 1 FROM seen_h s WHERE s.content_hash = c.content_hash)
-"""
-    # Benchmark 8-gram decontamination: same shingle construction at
-    # k=8, bench grams = the doc_id%97==0 slice, per-doc hit rollup.
-    # count(bg.gram) (not sum(::INT)) keeps n_hits BIGINT — DuckDB's
-    # sum(INTEGER) is HUGEINT, which would break schema parity.
-    gram8 = " || ' ' || ".join(f"toks[(i + {j})::INT]" for j in range(1, 9))
-    decontaminate = f"""
-WITH toks AS (
-  SELECT doc_id AS id, regexp_extract_all(lower(text), '\\w+') AS toks FROM documents
-),
-sh AS (
-  SELECT id, list_sort(list_distinct(
-    CASE WHEN len(toks) >= 8
-      THEN list_transform(range(0, len(toks) - 7), i -> {gram8})
-      ELSE [array_to_string(toks, ' ')] END)) AS sh
-  FROM toks
-),
-dg AS (SELECT id, unnest(sh) AS gram FROM sh),
-bg AS (SELECT DISTINCT gram FROM dg WHERE id % 97 = 0),
-per AS (
-  SELECT dg.id, count(*) AS n_grams, count(bg.gram) AS n_hits
-  FROM dg LEFT JOIN bg ON dg.gram = bg.gram GROUP BY dg.id
-)
-SELECT id, n_grams, n_hits,
-       round(n_hits::DOUBLE / n_grams, 6) AS overlap_frac,
-       round(n_hits::DOUBLE / n_grams, 6) >= 0.5 AS contaminated
-FROM per
-"""
-    return {
-        "exact_dedup": exact,
-        "minhash_dedup": minhash,
-        "ngram_jaccard": jaccard,
-        "simhash_dedup": simhash,
-        "winnow_fps": winnow_fp_sql,
-        "winnow_dedup": winnow_pair_sql,
-        "fuzzy_dedup_groups": fuzzy_groups,
-        "incremental_dedup": incremental,
-        "decontaminate": decontaminate,
-    }
-
-
 def _cooc_pairs_cte() -> str:
     """_PRELUDE extended with pr(a, b): the canonical distinct entity
     co-occurrence pairs the kg_kcore oracle peels."""
@@ -3763,23 +3196,6 @@ def _kg_violations_oracle() -> str:
     return functional_violations_oracle_sql(
         f"WITH e AS ({_KG_FUNC_SQL})", _KG_CONSTRAINTS
     )
-
-
-def _containment_oracle() -> str:
-    """q_containment oracle: the base + portal-wrapper synthesis
-    through the operator's module-local twin (same \\w+ tokenizer,
-    5-shingles, df gate, cross-multiply containment gate)."""
-    from easyner_spark.operators.dedup import containment_pairs_oracle_sql
-
-    docs_sql = """
-SELECT doc_id AS id, text FROM documents
-UNION ALL
-SELECT doc_id + 500000 AS id,
-       'portal syndication wrapper intro ' || text
-         || ' portal footer navigation links' AS text
-FROM documents WHERE doc_id % 7 = 0
-"""
-    return containment_pairs_oracle_sql(docs_sql, k=5)
 
 
 def _readability_oracle() -> str:
@@ -4113,39 +3529,6 @@ def _kg_align_oracle() -> str:
     return reciprocal_best_links_oracle_sql(_KG_ALIGN_PAIRS_SQL)
 
 
-def _blocking_quality_oracle() -> str:
-    """q_blocking_quality oracle: the module twin's arithmetic with
-    n_records computed in-SQL (count of documents, matching the Spark
-    side's d.count())."""
-    return f"""
-WITH bq_cand AS (
-  SELECT DISTINCT least(a, b) AS lo, greatest(a, b) AS hi
-  FROM ({_BQ_CAND_SQL}) WHERE a <> b
-),
-bq_gold AS (
-  SELECT DISTINCT least(a, b) AS lo, greatest(a, b) AS hi
-  FROM ({_BQ_GOLD_SQL}) WHERE a <> b
-),
-bq_counts AS (
-  SELECT
-    (SELECT count(*) FROM bq_cand)::BIGINT AS n_cand,
-    (SELECT count(*) FROM bq_gold)::BIGINT AS n_gold,
-    (SELECT count(*) FROM bq_cand c
-       WHERE EXISTS (SELECT 1 FROM bq_gold g
-                     WHERE g.lo = c.lo AND g.hi = c.hi))::BIGINT AS n_true,
-    (SELECT count(*) FROM documents)::BIGINT AS nrec
-)
-SELECT n_cand, n_gold, n_true,
-  CASE WHEN n_gold > 0
-       THEN (1000000 * n_true) // n_gold ELSE NULL END::BIGINT AS pc_micro,
-  CASE WHEN n_cand > 0
-       THEN (1000000 * n_true) // n_cand ELSE NULL END::BIGINT AS pq_micro,
-  (1000000 - (1000000 * n_cand) // ((nrec * (nrec - 1)) // 2))::BIGINT
-    AS rr_micro
-FROM bq_counts
-"""
-
-
 def _kg_ntriples_oracle() -> str:
     """q_kg_ntriples oracle: the escape-exercising synthesis through
     the sink's module-local twin (escape chains generated from the
@@ -4443,11 +3826,8 @@ def oracle_sql() -> dict[str, str]:
     )
     from easyner_spark.operators.analysis import entity_salience_oracle_sql
     from easyner_spark.operators.textstats import (
-        host_lang_mix_oracle_sql,
         mojibake_stats_oracle_sql,
-        paragraph_langs_oracle_sql,
     )
-    from easyner_spark.operators.dedup import repeated_spans_oracle_sql
     from easyner_spark.operators.nel import (
         fs_em_linkage_oracle_sql,
         name_similarity_oracle_sql,
@@ -4480,7 +3860,6 @@ def oracle_sql() -> dict[str, str]:
         topic_oracle_sql,
     )
 
-    stats_sql, langid_sql = _textstats_oracle()
     # Same injection + same three-stage sequential redaction as
     # q_pii_redact. Placeholders (not an f-string): the regexes contain
     # {m,n} braces. DuckDB regexp_replace needs the explicit 'g' flag
@@ -4561,9 +3940,6 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
     extra = {
-        "text_stats": stats_sql,
-        "lang_id": langid_sql,
-        "paragraph_langs": paragraph_langs_oracle_sql(),
         "mojibake": mojibake_stats_oracle_sql(
             "SELECT doc_id AS id,"
             " (CASE WHEN doc_id % 3 = 0"
@@ -4625,18 +4001,6 @@ sents AS (SELECT doc_id AS url, sent_idx, sentence FROM sentences)""",
   SELECT doc_id, count(*)::BIGINT AS n_tokens FROM enc GROUP BY doc_id
 ) AS psrc""",
         ),
-        "corpus_summary": f"""
-WITH per_doc AS ({stats_sql})
-SELECT count(*) AS n_docs,
-       sum(n_words)::BIGINT AS total_words,
-       sum(n_chars)::BIGINT AS total_chars,
-       sum((quality >= 0.5)::INT)::BIGINT AS n_quality_ge_half,
-       sum((lang_pred = 'de')::INT)::BIGINT AS n_de,
-       sum((lang_pred = 'en')::INT)::BIGINT AS n_en,
-       sum((lang_pred = 'es')::INT)::BIGINT AS n_es,
-       sum((lang_pred = 'fr')::INT)::BIGINT AS n_fr
-FROM per_doc
-""",
         "sessionize": sessionize_sql,
         "asof_join": asof_sql,
         "event_rollup": rollup_sql,
@@ -4705,7 +4069,18 @@ SELECT d.seq::BIGINT AS seq_id,
        t.lp AS label_pred
 FROM d CROSS JOIN t
 """,
-        **_dedup_oracles(),
+        "exact_dedup": """
+WITH docs2 AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 500000, text FROM documents
+),
+h AS (SELECT doc_id, sha256(text) AS content_hash FROM docs2)
+SELECT doc_id, content_hash,
+  min(doc_id) OVER (PARTITION BY content_hash) AS canonical_id,
+  doc_id <> min(doc_id) OVER (PARTITION BY content_hash) AS is_dup
+FROM h
+""",
     }
     return _prioritize(extra | {
         "split_sentences": _PRELUDE
@@ -5175,8 +4550,6 @@ FROM c CROSS JOIN t
         "dsir_weights": _dsir_weights_oracle(),
         "dsir_sample": _dsir_sample_oracle(),
         "kg_pattern_union": _kg_pattern_union_oracle(),
-        "blocking_quality": _blocking_quality_oracle(),
-        "bcubed_quality": _bcubed_oracle(),
         "kg_ego": _kg_ego_oracle(),
         "kg_core_numbers": _kg_core_numbers_oracle(),
         "kg_standing_query": _kg_standing_query_oracle(),
@@ -5202,7 +4575,6 @@ FROM c CROSS JOIN t
         # Declared-constraint contradiction table
         # (triples.functional_violations_oracle_sql over _KG_FUNC_SQL)
         "kg_violations": _kg_violations_oracle(),
-        "containment": _containment_oracle(),
         "readability": _readability_oracle(),
         # Acronym mining: the injected-definitions synthesis through
         # the operator's module-local twin
@@ -5211,10 +4583,6 @@ FROM c CROSS JOIN t
         "ntriples": _ntriples_oracle(),
         "entity_labels": _ENTITY_LABELS_ORACLE,
         "contacts": _contacts_oracle(),
-        "host_langs": host_lang_mix_oracle_sql(
-            "SELECT 'h' || (doc_id % 7) AS host, lang_pred AS lang"
-            f" FROM ({langid_sql})"
-        ),
         # Compaction planning (checkpoint.compaction_plan_oracle_sql)
         "compaction_plan": _compaction_plan_oracle(),
         # Per-language exact quantiles
@@ -5401,15 +4769,6 @@ SELECT name, entity_id, jq FROM cand WHERE rn = 1
             ),
         ),
         "topic_id": topic_oracle_sql(),
-        "repeated_spans": repeated_spans_oracle_sql(
-            k=8,
-            min_count=2,
-            source=(
-                "(SELECT doc_id, text FROM documents UNION ALL "
-                "SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1) "
-                "FROM documents)"
-            ),
-        ),
         "chunk_docs": chunk_docs_oracle_sql(max_tokens=32, overlap=8, min_tail=5),
         # exact BIGINT mixture gate: h32(url) * 1e6 < ppm(lang) * 2^32
         "mixture_sample": _URL_PAGES_CTE

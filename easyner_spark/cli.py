@@ -166,13 +166,15 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
     # exact dedup gate (off by default): drop content-hash duplicates
     # before any downstream stage. Runs AFTER boilerplate extraction so
     # it hashes the text the pipeline actually processes (and works on
-    # html-only crawls); one shuffle on the uniform hash key.
+    # html-only crawls); one shuffle on the uniform hash key, with the
+    # page columns in-row so the extractor runs once.
     if modules.get("dedup"):
         from easyner_spark.operators.dedup import exact_dedup
 
-        flags = exact_dedup(pages, text_col="text", id_col="url")
-        pages = pages.join(
-            flags.where(~F.col("is_dup")).select("url"), "url", "left_semi"
+        pages = (
+            exact_dedup(pages, text_col="text", id_col="url")
+            .where(~F.col("is_dup"))
+            .drop("content_hash", "canonical_id", "is_dup")
         )
 
     sents = None

@@ -602,10 +602,9 @@ def _bigram_array(w: Column) -> Column:
 def _dsir_bucket(g: Column, n_buckets: int, hash_fn: str) -> Column:
     """Bigram -> bucket. hash_fn='md5' is the engine-portable oracle
     default (md5_long32, bit-identical in DuckDB); 'xxhash64' is the
-    JVM-native fast path (same knob and rationale as
-    dedup.minhash_signature's hash_fn — md5 is ~2x the cost and the
-    bucket assignment only needs to be a uniform hash, not a
-    cross-engine one). pmod keeps xxhash64's signed output in
+    JVM-native fast path (md5 is ~2x the cost and the bucket
+    assignment only needs to be a uniform hash, not a cross-engine
+    one). pmod keeps xxhash64's signed output in
     [0, n_buckets)."""
     if hash_fn == "xxhash64":
         return F.pmod(F.xxhash64(g), F.lit(n_buckets))

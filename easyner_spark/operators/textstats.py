@@ -1,5 +1,6 @@
-"""Text analysis for training-data pipelines: language-ID, quality
-scoring, token counting, document fingerprinting.
+"""Per-document text analysis for the curate job: the Gopher quality
+gate, PII redaction, and the word-repetition, readability, contact,
+mojibake and topic operators beside them.
 
 These extend the reference's corpus hygiene (empty-abstract filter,
 scripts/pubmed_bulk.py:115-117; char-count normalization,
@@ -7,7 +8,7 @@ tutorials/Tutorial_benchmarking_runtime.md:5-17) into the standard
 web-corpus curation battery a 100 TB pipeline needs before NER.
 
 Everything here is 100% JVM-side built-in column expressions — no
-Python UDFs, no shuffle: each operator is a narrow per-row projection
+Python UDFs; the per-document operators are narrow per-row projections
 that whole-stage codegen fuses into the scan, so throughput scales
 linearly with input splits at any cluster size. All derived values are
 integer counts or exact IEEE ratios of integer counts, written so the
@@ -17,33 +18,15 @@ Regex note: patterns here are ASCII-class (`\\w` without (?U)) so Java
 (Spark) and RE2 (DuckDB) agree; the NER tokenizer contract in
 functions.text keeps its own unicode-aware flavor.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WORD_RE = r"\w+"
-TOKEN_RE_ASCII = r"\w+|[^\w\s]"
-PUNCT_KEEP_RE = r"[\w\s]"       # delete these -> punctuation remains
-ALPHA_DEL_RE = r"[^A-Za-z]"     # delete these -> ascii letters remain
-WS_SPLIT_RE = r"\s+"
 
-# Tiny per-language marker lexicons for the stopword-heuristic language
-# ID. Closed sets, lowercase; a word may appear in several languages
-# (e.g. "en", "que") — the argmax handles it.
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "and", "of", "to", "in", "is", "that", "with", "for", "was"),
-    "de": ("der", "die", "das", "und", "nicht", "ist", "ein", "mit", "für", "auf"),
-    "fr": ("le", "la", "les", "et", "est", "une", "dans", "que", "pour", "pas"),
-    "es": ("el", "los", "las", "y", "es", "una", "en", "que", "por", "con"),
-}
-CJK_RE = r"[一-鿿]"
-
-FINGERPRINT_K = 8  # char-shingle width for the rolling fingerprint
-
-# English stopword set for the quality ratio (same as the en markers).
-STOPWORDS_EN = LANG_MARKERS["en"]
+# English stopword set for the Gopher stopword rule. Closed set, lowercase.
+STOPWORDS_EN = ("the", "and", "of", "to", "in", "is", "that", "with", "for", "was")
 
 
 def words_array(text_col: str) -> Column:
@@ -68,6 +51,27 @@ def _sum_wlen_col(words: Column) -> Column:
     return F.aggregate(F.transform(words, F.length), F.lit(0), lambda a, x: a + x)
 
 
+def _gram_chain(toks: Column, k: int) -> Column:
+    """Word k-grams in document order via a zip_with fold: gram i =
+    toks[i] + " " + ... + toks[i+k-1], built by k-1 zip_withs against
+    the progressively-offset tail (zip_with pads the short side with
+    NULL, concat-with-NULL is NULL, the final filter drops the <k
+    ragged tail). ~6x the index-lambda formulation (sequence +
+    per-index slice: HOF lambdas don't codegen, so interpreted
+    random access per index IS the cost — measured 3.9 s vs 0.7 s
+    per sf0.1 corpus scan on a word-3-gram shingle path; same lesson
+    as scoring._bigram_array)."""
+    n = F.size(toks)
+    acc = toks
+    for j in range(1, k):
+        acc = F.zip_with(
+            acc,
+            F.slice(toks, j + 1, F.greatest(n - j, F.lit(0))),
+            lambda a, b: F.concat(a, F.lit(" "), b),
+        )
+    return F.filter(acc, lambda x: x.isNotNull())
+
+
 # Layered-projection note (performance contract): higher-order-function
 # expressions (transform/filter/aggregate lambdas) are NOT deduplicated
 # by codegen subexpression elimination, so inlining the `words` array
@@ -75,137 +79,16 @@ def _sum_wlen_col(words: Column) -> Column:
 # Every public operator below therefore stacks Projects — words, then
 # integer counts, then derived ratios/argmax — and Catalyst keeps the
 # boundaries (CollapseProject refuses to duplicate non-cheap
-# multiply-referenced expressions). Same trick as dedup.shingle_df;
-# measured 150x on the MinHash path.
+# multiply-referenced expressions); measured 150x on a word-shingle
+# signature path.
 
 
 def _with_words(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return docs.select(F.col(id_col), F.col(text_col), _words(text_col).alias("_w"))
 
 
-def _token_count_cols(text_col: str, words: Column) -> dict[str, Column]:
-    return {
-        "n_chars": F.length(text_col),
-        "n_tokens_ws": F.size(F.split(F.trim(F.col(text_col)), WS_SPLIT_RE)),
-        "n_tokens_re": F.size(
-            F.expr(f"regexp_extract_all({text_col}, r'{TOKEN_RE_ASCII}', 0)")
-        ),
-        "n_words": F.size(words),
-    }
-
-
-def _quality_int_cols(text_col: str, words: Column) -> dict[str, Column]:
-    """The integer/count layer: each HOF evaluated exactly once."""
-    return {
-        "_n_chars": F.length(text_col),
-        "_n_words": F.size(words),
-        "_n_alpha": F.length(F.regexp_replace(F.col(text_col), ALPHA_DEL_RE, "")),
-        "_n_punct": F.length(F.regexp_replace(F.col(text_col), PUNCT_KEEP_RE, "")),
-        "_n_stop": _marker_hits(words, STOPWORDS_EN),
-        "_sum_wlen": _sum_wlen_col(words),
-    }
-
-
-def _quality_ratio_cols() -> dict[str, Column]:
-    """Ratio layer over the _-prefixed count columns (same IEEE op
-    sequence as the DuckDB oracle: int/int division, literal blends)."""
-    n_chars, n_words = F.col("_n_chars"), F.col("_n_words")
-    alpha_ratio = F.when(n_chars > 0, F.col("_n_alpha") / n_chars).otherwise(F.lit(0.0))
-    punct_ratio = F.when(n_chars > 0, F.col("_n_punct") / n_chars).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_words > 0, F.col("_n_stop") / n_words).otherwise(F.lit(0.0))
-    mean_wlen = F.when(n_words > 0, F.col("_sum_wlen") / n_words).otherwise(F.lit(0.0))
-    quality = F.round(
-        alpha_ratio * 0.4 + (F.lit(1.0) - punct_ratio) * 0.3 + stop_ratio * 0.3, 6
-    )
-    return {
-        "alpha_ratio": F.round(alpha_ratio, 6),
-        "punct_ratio": F.round(punct_ratio, 6),
-        "stopword_ratio": F.round(stop_ratio, 6),
-        "mean_word_len": F.round(mean_wlen, 6),
-        "quality": quality,
-    }
-
-
-def _hit_cols(words: Column) -> dict[str, Column]:
-    return {
-        f"hits_{lang}": _marker_hits(words, m)
-        for lang, m in sorted(LANG_MARKERS.items())
-    }
-
-
-def _lang_pred_col(text_col: str) -> Column:
-    """Deterministic argmax over the hits_* COLUMNS: CJK codepoints win
-    outright ('zh'); otherwise highest hit count, ties broken by
-    language code ascending; all-zero -> 'und'."""
-    hits = {lang: F.col(f"hits_{lang}") for lang in sorted(LANG_MARKERS)}
-    best = F.greatest(*hits.values())
-    pred = F.lit("und")
-    # Chain in REVERSE code order so the earliest code wins ties.
-    for lang in sorted(hits, reverse=True):
-        pred = F.when((hits[lang] > 0) & (hits[lang] == best), F.lit(lang)).otherwise(pred)
-    return F.when(
-        F.expr(f"regexp_extract({text_col}, r'{CJK_RE}', 0)") != "", F.lit("zh")
-    ).otherwise(pred)
-
-
-def _fingerprint_col(text_col: str) -> Column:
-    """Minimum md5 over all character 8-grams — a rolling-window
-    min-hash (the single-hash core of winnowing). Texts shorter than
-    the window hash whole."""
-    k = FINGERPRINT_K
-    win_min = F.array_min(
-        F.transform(
-            F.sequence(F.lit(1), F.length(text_col) - (k - 1)),
-            lambda i: F.md5(F.substring(F.col(text_col), i, k).cast("binary")),
-        )
-    )
-    return F.when(F.length(text_col) >= k, win_min).otherwise(
-        F.md5(F.col(text_col).cast("binary"))
-    )
-
-
 def _select(docs: DataFrame, id_col: str, cols: dict[str, Column]) -> DataFrame:
     return docs.select(F.col(id_col), *[c.alias(n) for n, c in cols.items()])
-
-
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Whitespace-token and regex-token (BPE-ish `\\w+|[^\\w\\s]`) counts.
-
-    Reference analog: per-corpus character counts used to normalize
-    runtimes (Tutorial_benchmarking_runtime.md:5-17), generalized to the
-    token statistics a tokenizer-budgeted training pipeline tracks.
-    """
-    base = _with_words(docs, text_col, id_col)
-    return _select(base, id_col, _token_count_cols(text_col, F.col("_w")))
-
-
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Heuristic quality features + composite score. All exact ratios of
-    integer counts; rows with no words score 0, not null."""
-    base = _with_words(docs, text_col, id_col)
-    ints = _select(base, id_col, _quality_int_cols(text_col, F.col("_w")))
-    return _select(ints, id_col, _quality_ratio_cols())
-
-
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Marker-lexicon language ID (`lang_pred` + per-language hit counts)."""
-    base = _with_words(docs, text_col, id_col)
-    hits = base.select(
-        F.col(id_col),
-        F.col(text_col),
-        *[c.alias(n) for n, c in _hit_cols(F.col("_w")).items()],
-    )
-    return hits.select(
-        F.col(id_col),
-        _lang_pred_col(text_col).alias("lang_pred"),
-        *[f"hits_{lang}" for lang in sorted(LANG_MARKERS)],
-    )
-
-
-def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Content-defined fingerprint column; identical content -> identical
-    fingerprint, robust to where a shared 8-gram sits in the document."""
-    return _select(docs, id_col, {"fingerprint": _fingerprint_col(text_col)})
 
 
 BULLET_LINE_RE = r"^[ \t]*[-*]"   # ASCII bullets; shared with the oracle
@@ -240,13 +123,12 @@ def gopher_filters(
       starting with a bullet <= 90%; lines ending in an ellipsis
       <= 30%; >= 80% of words contain an alphabetic char; >= 2
       English stopword hits; duplicate-line fraction <= 0.3 (the
-      line-wise member of Gopher's repetition family — the n-gram
-      members live in dedup.py as shingle/MinHash operators, which at
-      corpus scale subsume the within-doc variants).
+      line-wise member of Gopher's repetition family; the n-gram
+      member is word_repetition).
 
     Scale shape: zero shuffle — stacked narrow Projects over the scan
-    exactly like text_stats (words/lines arrays materialized once per
-    row; counts; then ratios+flags), so the gate runs at scan speed
+    (words/lines arrays materialized once per row; counts; then
+    ratios+flags), so the gate runs at scan speed
     and its selectivity makes every downstream stage cheaper. All
     ratios are exact IEEE int/int divisions, bit-identical to the
     DuckDB oracle.
@@ -347,8 +229,8 @@ def word_repetition(
 ) -> DataFrame:
     """The aggregation member of Gopher's repetition family (§A1.1
     "fraction of characters in most common n-gram"; the per-line
-    members live in gopher_filters, the cross-document members in
-    dedup.py): per document, the character fraction covered by the
+    members live in gopher_filters, the cross-document ones are
+    dedup.exact_dedup and dedup.paragraph_dedup): per document, the character fraction covered by the
     most frequent word n-gram.
 
     Contract (oracle-mirrored): words = lowercased `\\w+`; n-grams are
@@ -368,10 +250,8 @@ def word_repetition(
     (doc_id is unique).
     """
     base = _with_words(docs, text_col, id_col)
-    from easyner_spark.operators.dedup import _gram_chain
-
-    # zip_with gram fold (see dedup._gram_chain: ~6x the index-lambda
-    # form, identical values/order); the n>=size guard below keeps the
+    # zip_with gram fold (see _gram_chain: ~6x the index-lambda form,
+    # identical values/order); the n>=size guard below keeps the
     # short-doc ('', 0, 0.0) contract unchanged
     grams = _gram_chain(F.col("_w"), n)
     denom = base.select(
@@ -413,32 +293,6 @@ def word_repetition(
         F.round(frac, 6).alias("top_ngram_frac"),
         (frac <= max_top_ngram_frac).alias("repetition_ok"),
     )
-
-
-def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """All four analyses in one narrow chain of stacked Projects over the
-    scan (no joins, no shuffle — codegen fuses the layers into one
-    stage); at 100 TB this runs at scan speed."""
-    base = _with_words(docs, text_col, id_col)
-    w = F.col("_w")
-    mid_cols: dict[str, Column] = {}
-    mid_cols.update(_token_count_cols(text_col, w))
-    mid_cols.update({k: v for k, v in _quality_int_cols(text_col, w).items()
-                     if k not in ("_n_chars", "_n_words")})
-    mid_cols.update(_hit_cols(w))
-    mid_cols["fingerprint"] = _fingerprint_col(text_col)
-    mid = base.select(F.col(id_col), F.col(text_col), *[c.alias(n) for n, c in mid_cols.items()])
-    # ratio layer reads _n_chars/_n_words under their public names
-    mid = mid.withColumn("_n_chars", F.col("n_chars")).withColumn(
-        "_n_words", F.col("n_words")
-    )
-    final_cols: dict[str, Column] = {
-        n: F.col(n) for n in ("n_chars", "n_tokens_ws", "n_tokens_re", "n_words")
-    }
-    final_cols.update(_quality_ratio_cols())
-    final_cols["lang_pred"] = _lang_pred_col(text_col)
-    final_cols["fingerprint"] = F.col("fingerprint")
-    return _select(mid, id_col, final_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -503,8 +357,8 @@ def pii_redact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
-# Default topic lexicons for topic_id. Like LANG_MARKERS these are
-# demonstration lexicons (they partition the synthetic corpus vocab);
+# Default topic lexicons for topic_id. These are demonstration
+# lexicons (they partition the synthetic corpus vocab);
 # production callers pass their own curated keyword sets — the
 # operator and oracle generator are lexicon-agnostic.
 TOPIC_MARKERS: dict[str, tuple[str, ...]] = {
@@ -521,7 +375,7 @@ def topic_id(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, hits_<topic>..., topic_pred) — lexicon-argmax topic
-    bucketing, the lang_id contract applied to subject matter: highest
+    bucketing: highest
     marker-hit count wins, ties break by topic name ascending,
     all-zero -> 'other'. ZERO shuffle (one marker-count projection +
     a codegen argmax chain). Composes with sampling.mixture_sample to
@@ -746,168 +600,6 @@ WITH d AS ({docs_sql})
 {emails}
 UNION ALL
 {phones}
-"""
-
-
-def host_lang_mix(
-    rows: DataFrame,
-    host_col: str = "host",
-    lang_col: str = "lang_pred",
-) -> DataFrame:
-    """Per-host language mixture: (host, lang, n_docs, pct_micro) —
-    the curation-planning table over lang_id's predictions: which
-    hosts are monolingual (route whole-host), which are multilingual
-    (route per-page), and which report a language their content
-    doesn't match (join the pages' declared language for that).
-    pct_micro is the exact BIGINT micro-unit share of the host's docs.
-
-    Scale (1 data shuffle): the composite (host, lang) rollup; host
-    totals re-aggregate the ROLLUP's output (|hosts| x |langs| rows,
-    tiny) and join back AQE-decided — raw rows never shuffle twice.
-    """
-    cnt = rows.groupBy(
-        F.col(host_col).alias("host"), F.col(lang_col).alias("lang")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    tot = cnt.groupBy("host").agg(F.sum("n_docs").alias("_t"))
-    return cnt.join(tot, "host").select(
-        "host",
-        "lang",
-        "n_docs",
-        F.expr("n_docs * 1000000 div _t").alias("pct_micro"),
-    )
-
-
-def host_lang_mix_oracle_sql(rows_sql: str) -> str:
-    """DuckDB twin of host_lang_mix; `rows_sql` yields (host, lang)."""
-    return f"""
-WITH r AS ({rows_sql}),
-cnt AS (SELECT host, lang, count(*)::BIGINT AS n_docs
-        FROM r GROUP BY host, lang),
-tot AS (SELECT host, sum(n_docs)::BIGINT AS t FROM cnt GROUP BY host)
-SELECT c.host, c.lang, c.n_docs, c.n_docs * 1000000 // t.t AS pct_micro
-FROM cnt c JOIN tot t ON c.host = t.host
-"""
-
-
-def paragraph_langs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, n_paras, majority_lang, n_langs, is_mixed) — per-PARAGRAPH
-    language segmentation rolled up per document: the mixed-language
-    detection a doc-level lang_id cannot do (a page that is 60% English
-    navigation around a German article IDs as one language doc-level;
-    paragraph granularity exposes the mixture, the standard multilingual
-    crawl-curation split signal — CCNet/mC4 segment before filtering).
-    Reference parity: EasyNER processes monolingual English biomedical
-    text end to end (no language stage anywhere in scripts/); this is
-    north_star multilingual-crawl surface, the raw-text counterpart of
-    the input_hint's lang column.
-
-    Contract: paragraphs = '\\n'-split spans with non-empty trim (the
-    paragraph_dedup split); each paragraph classified by the SAME
-    marker-lexicon argmax as lang_id (CJK codepoints win as 'zh',
-    otherwise max marker hits over lowercase `\\w+` words, ties to the
-    ascending language code, zero hits -> 'und'); majority_lang = the
-    language of the most paragraphs (tie -> ascending code, via
-    min(struct(-cnt, lang)) — algebraic, no window); n_langs counts
-    distinct predicted languages including 'und'; is_mixed = n_langs>1.
-
-    Scale shape: explode + per-paragraph classification is scan-fused
-    codegen (no Python); the rollup is TWO partial-agg-absorbed
-    shuffles — (id, lang) paragraph counts, then the per-doc argmax /
-    distinct-lang count over a table already collapsed to a few rows
-    per document. No per-doc language cardinality can exceed the
-    lexicon size, so the second agg's input is bounded at
-    |langs|+1 rows per doc.
-    """
-    paras = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.filter(
-                F.split(F.col(text_col), "\n"), lambda p: F.trim(p) != ""
-            )
-        ).alias("_para"),
-    )
-    with_words = paras.select("id", "_para", _words("_para").alias("_w"))
-    hits = with_words.select(
-        "id",
-        "_para",
-        *[c.alias(n) for n, c in _hit_cols(F.col("_w")).items()],
-    )
-    classified = hits.select("id", _lang_pred_col("_para").alias("lang"))
-    per_lang = classified.groupBy("id", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    return (
-        per_lang.groupBy("id")
-        .agg(
-            F.sum("cnt").alias("n_paras"),
-            F.min(
-                F.struct((-F.col("cnt")).alias("neg"), F.col("lang").alias("l"))
-            ).alias("_b"),
-            F.count(F.lit(1)).cast("long").alias("n_langs"),
-        )
-        .select(
-            "id",
-            "n_paras",
-            F.col("_b.l").alias("majority_lang"),
-            "n_langs",
-            (F.col("n_langs") > 1).alias("is_mixed"),
-        )
-    )
-
-
-def paragraph_langs_oracle_sql(source: str = "documents") -> str:
-    """DuckDB twin of :func:`paragraph_langs` (marker lists interpolated
-    from LANG_MARKERS so the lexicons cannot drift)."""
-
-    def _lst(words):
-        return "[" + ", ".join(f"'{w}'" for w in words) + "]"
-
-    hit_cols = ",\n         ".join(
-        f"len(list_filter(w, x -> list_contains({_lst(m)}, x))) AS hits_{lg}"
-        for lg, m in sorted(LANG_MARKERS.items())
-    )
-    # the greatest(...) expression is inlined directly into each CASE
-    # arm (ADVICE r3: a post-hoc str.replace over assembled SQL would
-    # silently corrupt if any marker/code ever contained the
-    # placeholder substring)
-    best = "greatest(" + ", ".join(f"hits_{lg}" for lg in sorted(LANG_MARKERS)) + ")"
-    lang_case = (
-        "CASE WHEN regexp_matches(para, '[一-鿿]') THEN 'zh' "
-        + " ".join(
-            f"WHEN hits_{lg} > 0 AND hits_{lg} = {best} THEN '{lg}'"
-            for lg in sorted(LANG_MARKERS)
-        )
-        + " ELSE 'und' END"
-    )
-    return f"""
-WITH paras AS (
-  SELECT doc_id AS id,
-         unnest(list_filter(string_split(text, chr(10)), p -> trim(p) <> '')) AS para
-  FROM {source}
-),
-ww AS (
-  SELECT id, para, regexp_extract_all(lower(para), '\\w+') AS w FROM paras
-),
-hits AS (
-  SELECT id, para,
-         {hit_cols}
-  FROM ww
-),
-cls AS (
-  SELECT id, {lang_case} AS lang FROM hits
-),
-per_lang AS (
-  SELECT id, lang, count(*)::BIGINT AS cnt FROM cls GROUP BY id, lang
-)
-SELECT id,
-       sum(cnt)::BIGINT AS n_paras,
-       (min(struct_pack(neg := -cnt, l := lang))).l AS majority_lang,
-       count(*)::BIGINT AS n_langs,
-       (count(*) > 1) AS is_mixed
-FROM per_lang
-GROUP BY id
 """
 
 

@@ -7,8 +7,9 @@ the web-scale analog of those baseline files is Common Crawl's WARC
 segments: concatenated WARC/1.0 records, each record individually
 gzip-membered so readers can random-access members. This module turns
 a directory of `*.warc[.gz]` files into the engine's canonical pages
-table (url, warc_ts, html) that boilerplate.extract + textstats.lang_id
-then complete to the full (url, warc_ts, html, text, lang) shape.
+table (url, warc_ts, html); boilerplate.extract_text adds `text`. The
+table has no `lang` column, so the CLI's language filter passes every
+page.
 
 Spark shape: identical to the PubMed bulk loader — a `binaryFile`
 scan (one task per segment file, never split; cluster parallelism =
@@ -170,9 +171,8 @@ def warc_load(spark: SparkSession, path: str) -> DataFrame:
 def warc_pages(records: DataFrame, ok_only: bool = True) -> DataFrame:
     """Canonical pages projection (url, warc_ts, html): HTTP 200 +
     text/html gate (the standard Common Crawl curation cut) applied
-    scan-side. boilerplate.extract_text supplies `text` and
-    textstats.lang_id supplies `lang` to complete the engine's
-    five-column pages contract."""
+    scan-side. boilerplate.extract_text supplies `text`; with no
+    `lang` column the CLI's language filter passes every page."""
     out = records
     if ok_only:
         out = out.where((F.col("status") == 200) & (F.col("mime") == "text/html"))

@@ -81,8 +81,7 @@ def test_sample_plans_top_k_not_global_sort(spark, corpora):
 
 def test_xxhash_fast_path_same_ranking_shape(spark, corpora):
     """hash_fn='xxhash64' (JVM-native fast path) buckets differently
-    but preserves the ranking property that makes DSIR useful — the
-    minhash hash_fn precedent."""
+    but preserves the ranking property that makes DSIR useful."""
     target, raw = corpora
     w = {
         r.id: r.log_ratio

@@ -1,10 +1,9 @@
-"""Landmark BFS distances, bounded simple-path enumeration, and
-ER-blocking quality metrics — hand-graph/hand-count expectations
-checked exactly (everything is integer or string)."""
+"""Landmark BFS distances and bounded simple-path enumeration —
+hand-graph expectations checked exactly (everything is integer or
+string)."""
 
 import pyspark.sql.functions as F
 
-from easyner_spark.operators.dedup import blocking_quality
 from easyner_spark.operators.graph import kg_paths, shortest_paths
 
 
@@ -84,69 +83,3 @@ def test_kg_paths_cycle_guard_and_substring_ids(spark):
         ("x>y>t", 2),
         ("x>xx>t", 2),
     }
-
-
-def test_blocking_quality_hand_counts(spark):
-    # 6 records; gold dups: (1,2), (3,4), (5,6); candidates from a
-    # "blocker" that found (2,1) [dup order], (3,4), (1,5) [false
-    # positive], (3,3) [self, dropped], (3,4) again [duplicate row]
-    cand = spark.createDataFrame(
-        [("2", "1"), ("3", "4"), ("1", "5"), ("3", "3"), ("3", "4")],
-        ["a", "b"],
-    )
-    gold = spark.createDataFrame(
-        [("1", "2"), ("3", "4"), ("5", "6")], ["a", "b"]
-    )
-    row = blocking_quality(cand, gold, n_records=6).collect()[0]
-    assert row.n_cand == 3 and row.n_gold == 3 and row.n_true == 2
-    assert row.pc_micro == 666666  # floor(1e6 * 2/3)
-    assert row.pq_micro == 666666
-    # C(6,2)=15 -> rr = 1e6 - floor(1e6*3/15) = 800000
-    assert row.rr_micro == 800000
-
-
-def test_blocking_quality_empty_candidates(spark):
-    cand = spark.createDataFrame([], "a string, b string")
-    gold = spark.createDataFrame([("1", "2")], ["a", "b"])
-    row = blocking_quality(cand, gold, n_records=4).collect()[0]
-    assert row.n_cand == 0 and row.n_true == 0
-    assert row.pc_micro == 0 and row.pq_micro is None
-    assert row.rr_micro == 1000000
-
-
-def test_bcubed_quality_hand_counts(spark):
-    from easyner_spark.operators.dedup import bcubed_quality
-
-    # gold: {r1,r2,r3} + {r4}; predicted: {r1,r2} + {r3,r4}
-    rows_ = [
-        ("r1", "pA", "g1"),
-        ("r2", "pA", "g1"),
-        ("r3", "pB", "g1"),
-        ("r4", "pB", "g2"),
-    ]
-    a = spark.createDataFrame(rows_, ["record", "pred_cluster", "gold_cluster"])
-    row = bcubed_quality(a).collect()[0]
-    assert row.n_records == 4
-    # per record precision: r1,r2: 2/2=1; r3: 1/2; r4: 1/2
-    # avg = (1e6+1e6+500000+500000)/4 = 750000
-    assert row.bcubed_precision_micro == 750000
-    # recall: r1,r2: 2/3; r3: 1/3; r4: 1/1
-    # micro floors: 666666,666666,333333,1000000 -> avg 666666 (floor)
-    assert row.bcubed_recall_micro == 666666
-    # f1 = 2*750000*666666 // (750000+666666)
-    assert row.bcubed_f1_micro == (
-        2 * 750000 * 666666 // (750000 + 666666)
-    )
-
-
-def test_bcubed_perfect_clustering(spark):
-    from easyner_spark.operators.dedup import bcubed_quality
-
-    a = spark.createDataFrame(
-        [("r1", "p1", "g1"), ("r2", "p1", "g1"), ("r3", "p2", "g2")],
-        ["record", "pred_cluster", "gold_cluster"],
-    )
-    row = bcubed_quality(a).collect()[0]
-    assert row.bcubed_precision_micro == 1000000
-    assert row.bcubed_recall_micro == 1000000
-    assert row.bcubed_f1_micro == 1000000

@@ -94,3 +94,8 @@ def test_curate_call_budget(spark, kg_inputs, tmp_path, monkeypatch):
     }))
     assert set(plans) == {"gated", "corpus"}
     assert jobs == CURATE_JOBS
+    # the fixture pages carry text, so neither stage runs Python
+    for name in ("gated", "corpus"):
+        assert PYTHON_NODE.findall(plans[name]) == [], (name, plans[name])
+    # paragraph_dedup's two aggregates, then the host-cap window
+    assert len(re.findall(r"\bExchange hashpartitioning", plans["corpus"])) == 3, plans["corpus"]

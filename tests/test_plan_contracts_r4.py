@@ -76,26 +76,6 @@ def test_metapath_and_pathsim_no_serial_reducer(spark):
     assert "Exchange SinglePartition" not in plan2
 
 
-def test_blocking_quality_broadcast_combine(spark):
-    from easyner_spark.operators.dedup import blocking_quality
-
-    cand = spark.range(300).select(
-        F.concat(F.lit("d"), (F.col("id") % 50).cast("string")).alias("a"),
-        F.concat(F.lit("d"), ((F.col("id") + 1) % 50).cast("string")).alias("b"),
-    )
-    gold = spark.range(100).select(
-        F.concat(F.lit("d"), (F.col("id") % 25).cast("string")).alias("a"),
-        F.concat(F.lit("d"), ((F.col("id") + 1) % 25).cast("string")).alias("b"),
-    )
-    out = blocking_quality(cand, gold, n_records=50)
-    plan = _final_plan(out)
-    # the three 1-row aggregates combine via broadcast cross joins;
-    # a global agg's own SinglePartition exchange is inherent to a
-    # 1-row result — what must NOT appear is a serial exchange over
-    # ROW data, i.e. any SinglePartition feeding a non-agg operator.
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 def test_shortest_paths_and_kg_paths_no_serial_reducer(spark):
     from easyner_spark.operators.graph import kg_paths, shortest_paths
 

@@ -15,16 +15,6 @@ edges_strat = st.lists(
     max_size=15,
 )
 
-assign_strat = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=11),  # record
-        st.integers(min_value=0, max_value=3),   # pred cluster
-        st.integers(min_value=0, max_value=3),   # gold cluster
-    ),
-    min_size=1,
-    max_size=20,
-)
-
 
 def _py_shortest(pairs, landmarks, k):
     adj = defaultdict(set)
@@ -65,53 +55,6 @@ def test_shortest_paths_matches_python_bfs(spark, pairs, k):
         for r in shortest_paths(e, landmarks, k=k).collect()
     }
     assert got == _py_shortest(pairs, landmarks, k)
-
-
-def _py_bcubed(rows):
-    # model: per-record ratios with micro floors, floor-before-average
-    rows = [(f"r{r}", f"p{p}", f"g{g}") for r, p, g in rows]
-    n_pg = defaultdict(int)
-    n_p = defaultdict(int)
-    n_g = defaultdict(int)
-    for _, p, g in rows:
-        n_pg[(p, g)] += 1
-        n_p[p] += 1
-        n_g[g] += 1
-    n = len(rows)
-    ps = sum(
-        (1_000_000 * n_pg[(p, g)]) // n_p[p] for _, p, g in rows
-    )
-    rs = sum(
-        (1_000_000 * n_pg[(p, g)]) // n_g[g] for _, p, g in rows
-    )
-    P, R = ps // n, rs // n
-    f1 = (2 * P * R) // (P + R) if P + R > 0 else 0
-    return n, P, R, f1
-
-
-@settings(max_examples=10, deadline=None)
-@given(rows=assign_strat)
-def test_bcubed_matches_python_model(spark, rows):
-    from easyner_spark.operators.dedup import bcubed_quality
-
-    # records must be unique per assignment row for the group-size
-    # identity |pred∩gold| = n_pg to hold; dedupe by record id
-    seen = {}
-    for r, p, g in rows:
-        seen[r] = (r, p, g)
-    rows = sorted(seen.values())
-    df = spark.createDataFrame(
-        [(f"r{r}", f"p{p}", f"g{g}") for r, p, g in rows],
-        ["record", "pred_cluster", "gold_cluster"],
-    )
-    row = bcubed_quality(df).collect()[0]
-    n, P, R, f1 = _py_bcubed(rows)
-    assert (
-        row.n_records,
-        row.bcubed_precision_micro,
-        row.bcubed_recall_micro,
-        row.bcubed_f1_micro,
-    ) == (n, P, R, f1)
 
 
 def _py_paths(pairs, sources, targets, max_len):

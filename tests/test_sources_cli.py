@@ -762,6 +762,31 @@ class TestKgHtmlExtractOnce:
         assert len(udf) == 1
         assert lang and lang[0] > udf[0]
 
+    def test_dedup_gate_extracts_once(self, spark, tmp_path, monkeypatch):
+        """With `modules.dedup` on, the gate filters the extracted
+        pages in-row: the extractor runs once and each content group
+        keeps its smallest url."""
+        from easyner_spark.cli import run_pipeline
+
+        path = str(tmp_path / "pages.parquet")
+        spark.createDataFrame(
+            [("u2", _html("The enzyme binds. It works."), "en"),
+             ("u1", _html("The enzyme binds. It works."), "en"),
+             ("u3", _html("A protein folds."), "en")],
+            "url string, html binary, lang string",
+        ).write.parquet(path)
+        written = _spy_written(monkeypatch)
+        counts = run_pipeline(spark, {
+            "input": {"pages_path": path},
+            "output_dir": str(tmp_path / "out"),
+            "modules": {"dedup": True, "ner": False, "analysis": False,
+                        "nel": False, "triples": False, "components": False},
+        })
+        assert counts["sentences"] == 3
+        assert _optimized(written["sentences"]).count("ArrowEvalPython") == 1
+        urls = {r.url for r in written["sentences"].select("url").distinct().collect()}
+        assert urls == {"u1", "u3"}
+
 
 class TestCorpusShards:
     def test_deterministic_shards_roundtrip(self, spark, tmp_path):

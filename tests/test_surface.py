@@ -25,7 +25,6 @@ UNREACHED_PUBLIC = {
     "operators.analysis": 8,
     "operators.boilerplate": 1,
     "operators.components": 2,
-    "operators.dedup": 33,
     "operators.evaluate": 6,
     "operators.events": 3,
     "operators.graph": 6,
@@ -40,7 +39,7 @@ UNREACHED_PUBLIC = {
     "operators.search": 4,
     "operators.sketches": 23,
     "operators.splitter": 3,
-    "operators.textstats": 31,
+    "operators.textstats": 16,
     "operators.tokenizer": 8,
     "operators.triples": 9,
     "operators.webtext": 3,
