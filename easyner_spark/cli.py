@@ -271,7 +271,7 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
             _, counts["nodes"] = _materialize(
                 spark, tables["nodes"],
                 lambda: connected_components(
-                    edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+                    edges, src="subj_id", dst="obj_id", n_edges=counts["edges"]
                 ),
                 resume,
             )

@@ -137,6 +137,7 @@ def connected_components(
     max_iter: int = 30,
     stats: dict | None = None,
     local_finish_edges: int = 200_000,
+    n_edges: int | None = None,
 ) -> DataFrame:
     """edges -> (node, component) with component = min node id of the
     component. Isolated endpoints appear (an edge list has no isolated
@@ -163,17 +164,29 @@ def connected_components(
     the count decides the local finish, and an unchanged signature ends
     the fixpoint — both without a job of their own.
 
+    `n_edges`, when the caller already knows it, is an upper bound on
+    the row count of `edges` (the kg job passes its edge snapshot's
+    observed count). At or under `local_finish_edges` the raw edge
+    list, self-loops dropped, goes straight to the union-find: no
+    canonicalization shuffle and no checkpoint, one collect. The
+    canonical list is never longer than the raw one, so this is the
+    same decision the checkpoint's count would make, and union-find
+    ignores duplicates and edge direction, so the output is the same.
+
     Pass `stats={}` to receive {"rounds": n, "local_finish": bool} —
     the skew/stress tooling reports round counts alongside wall time
     (a giant component costs extra ROUNDS, not a hot reducer; see
     tools/components_stress.py)."""
-    cur, sig = _checkpoint(
-        _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    )
+    edges = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rounds = 0
     if stats is not None:
         stats["rounds"] = rounds
         stats["local_finish"] = False
+    if n_edges is not None and n_edges <= local_finish_edges:
+        if stats is not None:
+            stats["local_finish"] = True
+        return _local_finish(edges.where(F.col("src") != F.col("dst")))
+    cur, sig = _checkpoint(_canon(edges))
     for _ in range(max_iter):
         if sig[0] <= local_finish_edges:
             if stats is not None:

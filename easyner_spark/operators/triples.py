@@ -40,10 +40,14 @@ def extract_triples(
     sorts and row_number):
       1. groupBy (url, sent_idx, entity_id) min(first_span) — first
          occurrence per id;
-      2. groupBy (url, sent_idx) collect the (span, id) structs, sort
-         the ARRAY in-memory (sentences hold a handful of entities, so
-         the sort is trivially cheap and bounded);
-      3. nested array transform emits the i<j pairs; one explode.
+      2. groupBy (url, sent_idx) collect the (span, id) structs and
+         `sort_array` them in-memory (sentences hold a handful of
+         entities, so the sort is trivially cheap and bounded);
+      3. the i<j pairs: `posexplode(ids)` gives each subject with its
+         index i, then `explode(slice(ids, i+2, n-i-1))` its objects.
+    Both generators and `sort_array` run in generated code; a nested
+    `transform` or `array_sort`'s default comparator would be a lambda
+    function, which Spark evaluates interpreted, per element.
     ONE shuffle: the explicit repartition on `url` satisfies BOTH
     groupBys' clustering requirements (hash on a subset of the grouping
     key co-locates every group), so EnsureRequirements inserts no
@@ -60,29 +64,20 @@ def extract_triples(
         .agg(F.min(F.struct("begin", "end")).alias("first_span"))
     )
     per_sent = ids.groupBy("url", "sent_idx").agg(
-        F.array_sort(
+        F.sort_array(
             F.collect_list(F.struct("first_span", "entity_id"))
         ).getField("entity_id").alias("ids")
     )
-    n = F.size("ids")
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("subj_id"), y.alias("obj_id")),
-            ),
-        )
-    )
+    i = F.col("i")
     return (
-        per_sent.where(n >= 2)
-        .select("url", "sent_idx", F.explode(pairs).alias("p"))
+        per_sent.where(F.size("ids") >= 2)
+        .select("url", "sent_idx", "ids", F.posexplode("ids").alias("i", "subj_id"))
         .select(
             "url",
             "sent_idx",
-            F.col("p.subj_id").alias("subj_id"),
+            "subj_id",
             F.lit(pred).alias("pred"),
-            F.col("p.obj_id").alias("obj_id"),
+            F.explode(F.slice("ids", i + 2, F.size("ids") - i - 1)).alias("obj_id"),
         )
     )
 

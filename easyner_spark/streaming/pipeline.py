@@ -114,6 +114,7 @@ def windowed_mention_rates(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from easyner_spark.functions.text import TOKEN_RE
     from easyner_spark.operators.ner_dict import build_trie, lower_tokens, match_tokens
     from easyner_spark.operators.splitter import split_sentences
 
@@ -129,7 +130,8 @@ def windowed_mention_rates(
             if not text:
                 return []
             out = []
-            for _bt, _et, classes in match_tokens(trie, lower_tokens(text)):
+            toks = lower_tokens(TOKEN_RE.findall(text))
+            for _bt, _et, classes in match_tokens(trie, toks):
                 out.extend(classes)
             return out
 

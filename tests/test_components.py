@@ -28,12 +28,17 @@ def union_find_components(edges):
 
 
 def _check(spark, edges):
-    """Both execution paths — the hybrid local finish (default: these
-    graphs are tiny) AND the forced distributed fixpoint — against the
-    independent union-find, and against each other."""
+    """Every execution path — the hybrid local finish (default: these
+    graphs are tiny), the same finish on the raw edge list when the
+    caller passes its row count, AND the forced distributed fixpoint —
+    against the independent union-find, and against each other."""
     df = spark.createDataFrame(edges, "src string, dst string")
     got_local = {
         r["node"]: r["component"] for r in connected_components(df).collect()
+    }
+    got_hinted = {
+        r["node"]: r["component"]
+        for r in connected_components(df, n_edges=len(edges)).collect()
     }
     got_dist = {
         r["node"]: r["component"]
@@ -47,6 +52,7 @@ def _check(spark, edges):
         comp_min[r] = min(comp_min[r], n)
     expected_min = {n: comp_min[r] for n, r in expected.items()}
     assert got_local == expected_min
+    assert got_hinted == expected_min
     assert got_dist == expected_min
 
 
@@ -86,6 +92,42 @@ def test_alias_graph_components(spark, fx):
 def test_empty_and_selfloop(spark):
     df = spark.createDataFrame([("a", "a")], "src string, dst string")
     assert connected_components(df).count() == 0
+    assert connected_components(df, n_edges=1).count() == 0
+
+
+def test_n_edges_over_threshold_runs_fixpoint(spark):
+    # the row-count hint only skips the fixpoint when it is within
+    # local_finish_edges; above it the distributed rounds still run
+    edges = [("a", "b"), ("b", "c"), ("x", "y")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    stats: dict = {}
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(
+            df, n_edges=len(edges), local_finish_edges=0, stats=stats
+        ).collect()
+    }
+    assert stats["rounds"] >= 1 and not stats["local_finish"]
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_n_edges_hint_is_one_collect(spark):
+    # within local_finish_edges the hinted call skips the canonicalizing
+    # checkpoint: its only job is the union-find's collect
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("x", "y")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    sc = spark.sparkContext
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            connected_components(df, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("cc-hint-hinted", n_edges=len(edges)) == 1
+    assert jobs("cc-hint-unhinted") >= 2
 
 
 class TestIncrementalComponents:

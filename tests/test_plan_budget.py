@@ -11,7 +11,7 @@ import re
 
 import pytest
 
-KG_JOBS = 16
+KG_JOBS = 14
 CURATE_JOBS = 7
 
 # physical nodes that run Python: pandas/Arrow UDF evaluation and the
@@ -80,6 +80,10 @@ def test_kg_call_budget(spark, kg_inputs, tmp_path, monkeypatch):
         assert PYTHON_NODE.findall(plans[name]) == [], (name, plans[name])
     # one shuffle to cluster the triples by url, one for the edge rollup
     assert len(re.findall(r"\bExchange hashpartitioning", plans["edges"])) == 2, plans["edges"]
+    # the pairs come from generators, not from interpreted lambda functions
+    assert "lambdafunction" not in plans["edges"], plans["edges"]
+    # the bounded edge list is collected once: no canonicalization shuffle
+    assert "Exchange" not in plans["nodes"], plans["nodes"]
 
 
 def test_curate_call_budget(spark, kg_inputs, tmp_path, monkeypatch):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from easyner_spark.functions.text import (
     SENT_SPLIT_JAVA,
+    TOKEN_RE,
     normalize_text,
     normalize_text_py,
     split_sentences_py,
@@ -84,3 +85,77 @@ def test_jvm_python_split_parity(spark):
     ).collect()
     for row, t in zip(jvm, texts):
         assert row["sents"] == split_sentences_py(t), t
+
+
+def _offsets_reference(text):
+    """The tokenizer's offsets as regex match spans: the independent
+    reference for the `str.find` walk."""
+    return [(m.group(0), m.start(), m.end()) for m in TOKEN_RE.finditer(text)]
+
+
+# whitespace the walk must skip (tab, NBSP, U+3000, em space), repeated
+# tokens, punctuation runs, and text whose lower() changes length (İ)
+# or depends on context (final sigma)
+OFFSET_TEXTS = [
+    "",
+    "   ",
+    "a\tb\t\tc",
+    "x y   z",
+    "全　角　　字",
+    "cov cov cov",
+    "covcov cov-cov",
+    "!!?..,;",
+    "a--b  ((c)) ...!",
+    "İstanbul İİ i̇",
+    "STRAẞE ẞ ß",
+    "ΟΔΟΣ Σ ΣΑΣ σς",
+    "\t\n x   y ",
+]
+
+
+def test_tokenize_with_offsets_battery():
+    for text in OFFSET_TEXTS:
+        assert tokenize_with_offsets(text) == _offsets_reference(text), text
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)), max_size=80))
+def test_tokenize_with_offsets_matches_finditer(s):
+    assert tokenize_with_offsets(s) == _offsets_reference(s)
+
+
+def test_dict_ner_spans_slice_the_sentence(spark):
+    """Every mention is the cased slice its span names, and mention_lc
+    is that slice's lower(), on text whose lowercase has another
+    length; the hits are every token-aligned term match."""
+    from easyner_spark.operators.ner_dict import dict_ner
+
+    terms = [
+        ("cov", "V"), ("cov cov", "V"), ("straße", "S"), ("ß", "S"),
+        ("οδος", "G"), ("σ", "G"), ("y", "L"), ("角", "H"), ("c", "L"),
+        ("İİ", "T"), ("b", "L"),
+    ]
+    sents = spark.createDataFrame(
+        [("u", i, t) for i, t in enumerate(OFFSET_TEXTS)],
+        "url string, sent_idx int, sentence string",
+    )
+    rows = dict_ner(sents, terms).collect()
+    keys = {}
+    for term, cls in terms:
+        keys.setdefault(" ".join(TOKEN_RE.findall(term.lower())), []).append(cls)
+    want = set()
+    for i, text in enumerate(OFFSET_TEXTS):
+        spans = _offsets_reference(text)
+        low = [tok.lower() for tok, _, _ in spans]
+        for b in range(len(spans)):
+            for e in range(b + 1, len(spans) + 1):
+                for cls in keys.get(" ".join(low[b:e]), []):
+                    want.add((i, b, e, spans[b][1], spans[e - 1][2], cls))
+    assert want, "the battery must produce hits"
+    got = set()
+    for r in rows:
+        text = OFFSET_TEXTS[r["sent_idx"]]
+        assert r["mention"] == text[r["begin"]:r["end"]], r
+        assert r["mention_lc"] == r["mention"].lower(), r
+        got.add((r["sent_idx"], r["begin_tok"], r["end_tok"], r["begin"], r["end"], r["class"]))
+    assert got == want
