@@ -564,15 +564,6 @@ def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kwic(ments, sents, window=20)
 
 
-def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 TF-IDF keywords per document (smoothed sklearn-style
-    idf, round-6 contract, per-doc window — no SinglePartition) —
-    the per-document tagging/summarization product."""
-    from easyner_spark.operators.ranking import doc_keywords
-
-    return doc_keywords(_docs(spark, sf_dir), k=5)
-
-
 def _merge_label_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic noisy-label synthesis: four base names cycled by
     doc_id, a numeric qualifier, and a trailing-typo variant every 7th
@@ -644,62 +635,6 @@ def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easyner_spark.operators.sketches import exact_quantiles
 
     return exact_quantiles(_docs(spark, sf_dir), F.length("text"))
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training, first 6 merge rules: one corpus scan
-    collapses to the word-frequency table, then each round is a
-    bounded pair aggregate + 1-row argmax + broadcast rewrite — the
-    canonical corpus-scale BPE formulation (operators/tokenizer.py);
-    the oracle unrolls all 6 data-dependent rounds in SQL."""
-    from easyner_spark.operators.tokenizer import bpe_merges
-
-    return bpe_merges(_docs(spark, sf_dir), n_merges=6)
-
-
-def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus token frequencies after applying the 6 learned BPE
-    rules — the trained tokenizer's actual output distribution; the
-    oracle re-derives all 6 merges AND the final rewrite in SQL."""
-    from easyner_spark.operators.tokenizer import bpe_token_counts
-
-    return bpe_token_counts(_docs(spark, sf_dir), n_merges=6)
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus encoded by its own trained tokenizer (train 6 rules,
-    apply to every document's word stream): (doc_id, word_idx,
-    tok_idx, token). Encoding chains the 6 learned rules over the
-    DISTINCT-word dictionary, never per-document."""
-    from easyner_spark.operators.tokenizer import bpe_encode
-
-    return bpe_encode(_docs(spark, sf_dir), n_merges=6)
-
-
-def q_tokenized_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full pretraining assembly chain composed end-to-end: train
-    the BPE tokenizer on the corpus, encode every document, count each
-    document's REAL subword tokens, and concat-pack into capacity-128
-    context windows. Documents with zero in-alphabet words are absent
-    (nothing to pack). Uses pack_sequences' window twin — the packing
-    input is the bounded per-doc count table, not the corpus."""
-    from easyner_spark.operators.sampling import pack_sequences
-    from easyner_spark.operators.tokenizer import bpe_encode
-
-    enc = bpe_encode(_docs(spark, sf_dir), n_merges=6)
-    counts = enc.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tokens")
-    )
-    return pack_sequences(
-        counts, capacity=128, tokens_col="n_tokens", id_col="doc_id",
-        strategy="window",
-    ).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_tokens",
-        F.col("start_tok").cast("long").alias("start_tok"),
-        F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("seq_off").cast("long").alias("seq_off"),
-    )
 
 
 CMS_CANDIDATES = ["join", "hash", "row", "batch", "scan", "zzznope"]
@@ -885,14 +820,6 @@ def q_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.select(F.concat(F.col("name"), F.lit("s")).alias("name"))
     ).distinct()
     return name_similarity_edges(names, k=3, threshold=0.5)
-
-
-def q_topic_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexicon-argmax topic bucketing (zero shuffle). Oracle generated from the SAME
-    lexicon dict by topic_oracle_sql, so marker sets cannot drift."""
-    from easyner_spark.operators.textstats import topic_id
-
-    return topic_id(_docs(spark, sf_dir))
 
 
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1613,40 +1540,6 @@ def q_entity_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return entity_labels(linked, comp)
 
 
-def q_contacts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contact-fact extraction over injected imprint lines: one email
-    per doc (mixed case, lowercased) and a phone with rotating
-    grouping (normalized to digits-with-plus) on every 2nd doc."""
-    from easyner_spark.operators.textstats import contact_facts
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    s = did.cast("string")
-    text = F.concat(
-        F.col("text"),
-        F.lit(" Contact Team"), s,
-        F.lit("@Example"), (did % 5).cast("string"), F.lit(".ORG now."),
-        F.when(
-            did % 2 == 0,
-            F.concat(
-                F.lit(" Call +46 8-"), ((did % 900) + 100).cast("string"),
-                F.lit(" 4"), (did % 10).cast("string"), F.lit("6 78."),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    return contact_facts(d.select("doc_id", text.alias("text")))
-
-
-def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-integer readability counts over the real documents table:
-    sentence / word / vowel-group-syllable counts and micro-unit
-    ratios — the Flesch-family inputs, zero shuffle, no floats."""
-    from easyner_spark.operators.textstats import readability_counts
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return readability_counts(d)
-
-
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction planning over a synthetic ledger: mostly
     1-10 KB files with every 19th ~120 KB (oversized vs the 100 KB
@@ -1930,17 +1823,6 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_word_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top word-2-gram character fraction per document (the
-    aggregation member of the Gopher repetition family)."""
-    from easyner_spark.operators.textstats import word_repetition
-
-    out = word_repetition(_docs(spark, sf_dir), n=2)
-    return out.select(
-        "doc_id", "top_gram", "top_cnt", "top_ngram_frac", "repetition_ok"
-    )
-
-
 def q_latest_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of crawl-snapshot selection: 5 synthetic recrawls per url
     (doc_id % 100), deterministic warc_ts with deliberate ties so the
@@ -2016,40 +1898,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Double-encoding artifact detection. The synthetic corpus is
-    clean ASCII, so deterministic corruption is injected first: docs
-    with doc_id%3==0 get ' a ' ->
-    ' \u00c3\u00a1 ' (the UTF-8-as-Latin-1 shape), docs with
-    doc_id%7==0 get a smart-quote artifact suffix — both mirrored
-    verbatim in the oracle SQL."""
-    from easyner_spark.operators.textstats import mojibake_stats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corrupted = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat(
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.regexp_replace("text", " a ", " \u00c3\u00a1 "),
-            ).otherwise(F.col("text")),
-            F.when(F.col("doc_id") % 7 == 0, F.lit("\u00e2\u20ac\u2122\u00c2 ")).otherwise(
-                F.lit("")
-            ),
-        ).alias("text"),
-    )
-    return mojibake_stats(corrupted).select(
-        F.col("id").cast("long").alias("id"),
-        "n_chars",
-        "n_atilde",
-        "n_smart",
-        "n_acirc",
-        "n_repl",
-        "mojibake_hits",
-        "is_mojibake",
-    )
 
 
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2132,59 +1980,6 @@ def q_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_rollup(_events(spark, sf_dir))
 
 
-BM25_TERMS = ("spark", "join", "vector")
-
-
-def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 relevance of a fixed 3-term query over documents —
-    zero data-keyed shuffles (per-doc tf projection + one broadcast
-    1-row stats aggregate); oracle generated by the operator's own
-    bm25_oracle_sql so both float expression trees stay in lockstep."""
-    from easyner_spark.operators.ranking import bm25_rank
-
-    return bm25_rank(_docs(spark, sf_dir), BM25_TERMS)
-
-
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023): add-one-smoothed
-    hashed-bigram bag models for a target domain (doc_id % 7 == 0
-    slice) vs the raw corpus; per-doc weight = exact BIGINT sum of
-    per-bucket floor-quantized log ratios. The data-selection score
-    for steering a crawl toward a target distribution; model is a
-    bounded n_buckets-row table (train once, reuse via ratios=)."""
-    from easyner_spark.operators.scoring import dsir_weights
-
-    d = _docs(spark, sf_dir)
-    return dsir_weights(d, d.where(F.col("doc_id") % 7 == 0))
-
-
-def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR resampling step: Gumbel top-k over the importance weights
-    with an exact integer Gumbel key (md5-derived u, floor-quantized
-    micro-nats) — the surviving-k set is engine- and run-stable;
-    plans TakeOrderedAndProject, never a global sort."""
-    from easyner_spark.operators.scoring import dsir_sample
-
-    d = _docs(spark, sf_dir)
-    return dsir_sample(d, d.where(F.col("doc_id") % 7 == 0), k=50)
-
-
-def _dsir_weights_oracle() -> str:
-    """q_dsir_weights oracle: generated by the operator module from
-    the SAME bucket/smoothing/quantization construction."""
-    from easyner_spark.operators.scoring import dsir_weights_oracle_sql
-
-    return dsir_weights_oracle_sql()
-
-
-def _dsir_sample_oracle() -> str:
-    """q_dsir_sample oracle: same exact integer Gumbel key and total
-    order."""
-    from easyner_spark.operators.scoring import dsir_sample_oracle_sql
-
-    return dsir_sample_oracle_sql(50)
-
-
 def q_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-shape quality filter: unigram LM trained on the corpus
     itself (bounded vocab aggregate), every document scored by
@@ -2232,46 +2027,6 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easyner_spark.operators.sketches import histogram_fixed_bins
 
     return histogram_fixed_bins(_docs(spark, sf_dir), F.length("text"), 100, 20)
-
-
-def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized inverted index (term, doc, tf, df, idf) with a
-    min_df=2 hapax cut — the unknown-query-terms counterpart of
-    bm25_rank; ONE posting shuffle + a bounded df table joined back
-    AQE-decided. Oracle from the operator's own generator."""
-    from easyner_spark.operators.ranking import inverted_postings
-
-    return inverted_postings(_docs(spark, sf_dir), min_df=2)
-
-
-def q_tfidf_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse tf-idf cosine top-5 neighbors per document through the
-    inverted-index self-join (max_df=50 caps the quadratic hot-term
-    buckets — the gram_capped lesson); integer micro-unit dot/norms,
-    one final rounded float division."""
-    from easyner_spark.operators.ranking import tfidf_sim_topk
-
-    return tfidf_sim_topk(_docs(spark, sf_dir), k=5, min_df=2, max_df=50).select(
-        F.col("id").cast("long").alias("id"),
-        F.col("neighbor_id").cast("long").alias("neighbor_id"),
-        "rank",
-        "cos",
-    )
-
-
-def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank sentence salience per document: PageRank (5 rounds,
-    d=0.85, round(9) state) over the within-doc shared-token sentence
-    graph built via the (url, token) postings self-join."""
-    from easyner_spark.operators.ranking import textrank_sentences
-
-    out = textrank_sentences(_sentences(spark, sf_dir), iters=5)
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        "score",
-        "rank",
-    )
 
 
 def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2883,23 +2638,21 @@ _DRIVER_WINDOW_FIRST = [
     # --- round 5 window: the new FILTER query, then the oldest
     # never-driver-verified registry queries (VERDICT r4 #1 —
     # close the external ledger; the driver checks the FIRST 50) ---
-    "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk", "dsir_weights",
-    "dsir_sample", "kappa", "kg_kcore", "heavy_hitters",
-    "pack_sequences", "length_quantiles", "bpe_merges",
-    "bpe_token_counts", "bpe_encode", "tokenized_pack", "entity_bursts",
+    "kg_pattern_filter", "kg_pattern_agg", "kg_pattern_topk",
+    "kappa", "kg_kcore", "heavy_hitters",
+    "pack_sequences", "length_quantiles", "entity_bursts",
     "kg_degree_stats", "kg_pattern", "kg_violations",
     # --- remaining never-driver-verified (orders the tail so any
     # wider driver window keeps covering unchecked queries first) ---
-    "readability", "acronyms", "ntriples", "entity_labels", "contacts",
+    "acronyms", "ntriples", "entity_labels",
     "compaction_plan", "lang_quantiles", "ner_examples",
     "eval_split", "kg_node_profile",
     "latest_crawl", "quality_sample", "crawl_delta", "name_match",
-    "fuzzy_link", "topic_id", "chunk_docs", "mixture_sample",
-    "deterministic_sample", "per_host_cap", "word_repetition",
-    "gopher_filters", "mojibake", "pii_redact",
-    "inverted_index", "tfidf_sim",
+    "fuzzy_link", "chunk_docs", "mixture_sample",
+    "deterministic_sample", "per_host_cap",
+    "gopher_filters", "pii_redact",
     "distinct_count", "length_histogram", "sessionize", "asof_join",
-    "event_rollup", "bm25_rank",
+    "event_rollup",
     "warc_extract", "craft_iob2", "flair_parse",
 ]
 
@@ -2934,7 +2687,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_components": q_incremental_components,
         "k_hop": q_k_hop,
         "kg_pagerank": q_kg_pagerank,
-        "doc_keywords": q_doc_keywords,
         "entity_merge_cands": q_entity_merge_cands,
         "kwic": q_kwic,
         "kappa": q_kappa,
@@ -2942,10 +2694,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "heavy_hitters": q_heavy_hitters,
         "pack_sequences": q_pack_sequences,
         "length_quantiles": q_length_quantiles,
-        "bpe_merges": q_bpe_merges,
-        "bpe_token_counts": q_bpe_token_counts,
-        "bpe_encode": q_bpe_encode,
-        "tokenized_pack": q_tokenized_pack,
         "host_skew": q_host_skew,
         "entity_bursts": q_entity_bursts,
         "kg_shortest_paths": q_kg_shortest_paths,
@@ -2962,8 +2710,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_pattern_filter": q_kg_pattern_filter,
         "kg_pattern_agg": q_kg_pattern_agg,
         "kg_pattern_topk": q_kg_pattern_topk,
-        "dsir_weights": q_dsir_weights,
-        "dsir_sample": q_dsir_sample,
         "kg_pattern_union": q_kg_pattern_union,
         "kg_ego": q_kg_ego,
         "kg_core_numbers": q_kg_core_numbers,
@@ -2977,11 +2723,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pattern": q_kg_pattern,
         "kg_violations": q_kg_violations,
-        "readability": q_readability,
         "acronyms": q_acronyms,
         "ntriples": q_ntriples,
         "entity_labels": q_entity_labels,
-        "contacts": q_contacts,
         "compaction_plan": q_compaction_plan,
         "lang_quantiles": q_lang_quantiles,
         "ner_examples": q_ner_examples,
@@ -2995,19 +2739,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "paragraph_dedup": q_paragraph_dedup,
         "name_match": q_name_match,
         "fuzzy_link": q_fuzzy_link,
-        "topic_id": q_topic_id,
         "chunk_docs": q_chunk_docs,
         "mixture_sample": q_mixture_sample,
         "deterministic_sample": q_deterministic_sample,
         "per_host_cap": q_per_host_cap,
         "token_budget": q_token_budget,
-        "word_repetition": q_word_repetition,
         "gopher_filters": q_gopher_filters,
-        "mojibake": q_mojibake,
         "pii_redact": q_pii_redact,
-        "inverted_index": q_inverted_index,
-        "tfidf_sim": q_tfidf_sim,
-        "textrank": q_textrank,
         "ppl_buckets": q_ppl_buckets,
         "fs_linkage": q_fs_linkage,
         "distinct_count": q_distinct_count,
@@ -3015,7 +2753,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize": q_sessionize,
         "asof_join": q_asof_join,
         "event_rollup": q_event_rollup,
-        "bm25_rank": q_bm25_rank,
         "unigram_lm": q_unigram_lm,
         "bigram_lm": q_bigram_lm,
         "quality_classifier": q_quality_classifier,
@@ -3196,41 +2933,6 @@ def _kg_violations_oracle() -> str:
     return functional_violations_oracle_sql(
         f"WITH e AS ({_KG_FUNC_SQL})", _KG_CONSTRAINTS
     )
-
-
-def _readability_oracle() -> str:
-    """q_readability oracle: the real documents table through the
-    operator's module-local twin."""
-    from easyner_spark.operators.textstats import (
-        readability_counts_oracle_sql,
-    )
-
-    twin = readability_counts_oracle_sql(
-        "SELECT doc_id AS id, text FROM documents"
-    )
-    return (
-        "SELECT id AS doc_id, n_sents, n_words, n_syllables,"
-        " words_per_sent_micro, syll_per_word_micro"
-        f" FROM ({twin})"
-    )
-
-
-def _contacts_oracle() -> str:
-    """q_contacts oracle: the injected-imprint synthesis through the
-    operator's module-local twin."""
-    from easyner_spark.operators.textstats import contact_facts_oracle_sql
-
-    docs_sql = """
-SELECT doc_id AS id,
-  text || ' Contact Team' || doc_id || '@Example' || (doc_id % 5)
-  || '.ORG now.'
-  || (CASE WHEN doc_id % 2 = 0
-      THEN ' Call +46 8-' || (doc_id % 900 + 100) || ' 4'
-           || (doc_id % 10) || '6 78.'
-      ELSE '' END) AS text
-FROM documents
-"""
-    return contact_facts_oracle_sql(docs_sql)
 
 
 def _ntriples_oracle() -> str:
@@ -3678,12 +3380,6 @@ FROM r
 """
 
 
-def _doc_keywords_oracle() -> str:
-    from easyner_spark.operators.ranking import doc_keywords_oracle_sql
-
-    return doc_keywords_oracle_sql(k=5)
-
-
 def _merge_cands_oracle() -> str:
     from easyner_spark.operators.nel import edit_merge_candidates_oracle_sql
 
@@ -3818,16 +3514,7 @@ SELECT node, min(lbl) AS component FROM reach GROUP BY node
 
 
 def oracle_sql() -> dict[str, str]:
-    from easyner_spark.operators.ranking import (
-        bm25_oracle_sql,
-        inverted_postings_oracle_sql,
-        textrank_oracle_sql,
-        tfidf_sim_topk_oracle_sql,
-    )
     from easyner_spark.operators.analysis import entity_salience_oracle_sql
-    from easyner_spark.operators.textstats import (
-        mojibake_stats_oracle_sql,
-    )
     from easyner_spark.operators.nel import (
         fs_em_linkage_oracle_sql,
         name_similarity_oracle_sql,
@@ -3841,12 +3528,6 @@ def oracle_sql() -> dict[str, str]:
         histogram_oracle_sql,
         linear_count_oracle_sql,
     )
-    from easyner_spark.operators.sampling import pack_sequences_oracle_sql
-    from easyner_spark.operators.tokenizer import (
-        bpe_encode_oracle_sql,
-        bpe_merges_oracle_sql,
-        bpe_token_counts_oracle_sql,
-    )
     from easyner_spark.operators.scoring import (
         bigram_lm_oracle_sql,
         hashed_linear_oracle_sql,
@@ -3857,7 +3538,6 @@ def oracle_sql() -> dict[str, str]:
         PII_EMAIL_RE,
         PII_IPV4_RE,
         PII_PHONE_RE,
-        topic_oracle_sql,
     )
 
     # Same injection + same three-stage sequential redaction as
@@ -3940,17 +3620,7 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
     extra = {
-        "mojibake": mojibake_stats_oracle_sql(
-            "SELECT doc_id AS id,"
-            " (CASE WHEN doc_id % 3 = 0"
-            "   THEN regexp_replace(text, ' a ', ' \u00c3\u00a1 ', 'g')"
-            "   ELSE text END)"
-            " || (CASE WHEN doc_id % 7 = 0 THEN '\u00e2\u20ac\u2122\u00c2 ' ELSE '' END)"
-            " AS text FROM documents"
-        ),
         "pii_redact": pii_sql,
-        "inverted_index": inverted_postings_oracle_sql(min_df=2),
-        "tfidf_sim": tfidf_sim_topk_oracle_sql(k=5, min_df=2, max_df=50),
         "ppl_buckets": ppl_buckets_oracle_sql(min_count=2),
         "fs_linkage": fs_em_linkage_oracle_sql(
             """
@@ -3971,40 +3641,12 @@ pairs AS (
             n_fields=3,
             iters=5,
         ),
-        # TextRank over the prelude's sentence split; doc_id aliased to
-        # url to meet the generator's sents(url, sent_idx, sentence)
-        # contract, then back in the outer projection
-        "textrank": "SELECT url::BIGINT AS doc_id, sent_idx::BIGINT AS sent_idx, score, rank FROM ("
-        + textrank_oracle_sql(
-            _PRELUDE
-            + """,
-sents AS (SELECT doc_id AS url, sent_idx, sentence FROM sentences)""",
-            iters=5,
-        )
-        + ") tr",
         "distinct_count": linear_count_oracle_sql("text"),
         "length_histogram": histogram_oracle_sql("length(text)", 100, 20),
         "length_quantiles": exact_quantiles_oracle_sql("length(text)"),
-        "bpe_merges": bpe_merges_oracle_sql(n_merges=6),
-        "bpe_token_counts": bpe_token_counts_oracle_sql(n_merges=6),
-        # Corpus encoded by its own trained tokenizer
-        # (tokenizer.bpe_encode_oracle_sql — shared training rounds)
-        "bpe_encode": bpe_encode_oracle_sql(n_merges=6),
-        # Full assembly chain: encode -> count -> concat-pack. The
-        # packing SQL is single-sourced from pack_sequences_oracle_sql
-        # (the encode counts ride in as its `source` subquery).
-        "tokenized_pack": pack_sequences_oracle_sql(
-            128,
-            tokens_expr="n_tokens",
-            source=f"""(
-  WITH enc AS ({bpe_encode_oracle_sql(n_merges=6)})
-  SELECT doc_id, count(*)::BIGINT AS n_tokens FROM enc GROUP BY doc_id
-) AS psrc""",
-        ),
         "sessionize": sessionize_sql,
         "asof_join": asof_sql,
         "event_rollup": rollup_sql,
-        "bm25_rank": bm25_oracle_sql(BM25_TERMS),
         "unigram_lm": unigram_lm_oracle_sql(min_count=2),
         "bigram_lm": bigram_lm_oracle_sql(min_count=2),
         "quality_classifier": hashed_linear_oracle_sql(),
@@ -4501,9 +4143,6 @@ FROM walk GROUP BY source, node
         # canonical co-occurrence pair CTE; capped-round contract
         # matches the engine bit-for-bit
         "kg_kcore": _kcore_oracle(),
-        # Smoothed-idf TF-IDF with a per-doc rank window
-        # (ranking.doc_keywords_oracle_sql on the raw documents table)
-        "doc_keywords": _doc_keywords_oracle(),
         # Two-key blocked self-join + levenshtein verify over the
         # noisy-label synthesis (nel.edit_merge_candidates_oracle_sql)
         "entity_merge_cands": _merge_cands_oracle(),
@@ -4547,8 +4186,6 @@ FROM c CROSS JOIN t
         "kg_pattern_filter": _kg_pattern_filter_oracle(),
         "kg_pattern_agg": _kg_pattern_agg_oracle(),
         "kg_pattern_topk": _kg_pattern_topk_oracle(),
-        "dsir_weights": _dsir_weights_oracle(),
-        "dsir_sample": _dsir_sample_oracle(),
         "kg_pattern_union": _kg_pattern_union_oracle(),
         "kg_ego": _kg_ego_oracle(),
         "kg_core_numbers": _kg_core_numbers_oracle(),
@@ -4575,14 +4212,12 @@ FROM c CROSS JOIN t
         # Declared-constraint contradiction table
         # (triples.functional_violations_oracle_sql over _KG_FUNC_SQL)
         "kg_violations": _kg_violations_oracle(),
-        "readability": _readability_oracle(),
         # Acronym mining: the injected-definitions synthesis through
         # the operator's module-local twin
         "acronyms": _acronyms_oracle(),
         # N-Triples export: prelude edges through the serializer twin
         "ntriples": _ntriples_oracle(),
         "entity_labels": _ENTITY_LABELS_ORACLE,
-        "contacts": _contacts_oracle(),
         # Compaction planning (checkpoint.compaction_plan_oracle_sql)
         "compaction_plan": _compaction_plan_oracle(),
         # Per-language exact quantiles
@@ -4768,7 +4403,6 @@ SELECT name, entity_id, jq FROM cand WHERE rn = 1
                 "   FROM documents))"
             ),
         ),
-        "topic_id": topic_oracle_sql(),
         "chunk_docs": chunk_docs_oracle_sql(max_tokens=32, overlap=8, min_tail=5),
         # exact BIGINT mixture gate: h32(url) * 1e6 < ppm(lang) * 2^32
         "mixture_sample": _URL_PAGES_CTE
@@ -4829,38 +4463,4 @@ WHERE rn = 1
 """,
         # Gopher quality-gate battery over restructured multi-line text
         "gopher_filters": _gopher_oracle(),
-        # Top word-2-gram char fraction; row_number (cnt DESC, gram
-        # ASC) mirrors textstats.word_repetition's min(struct) argmin
-        "word_repetition": """
-WITH base AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '\\w+') AS words FROM documents
-),
-denom AS (
-  SELECT doc_id, list_sum(list_transform(words, w -> length(w))) AS sum_wlen
-  FROM base
-),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(range(0, len(words) - 1),
-                               i -> words[i + 1] || ' ' || words[i + 2])) AS gram
-  FROM base WHERE len(words) >= 2
-),
-cnts AS (SELECT doc_id, gram, count(*) AS cnt FROM grams GROUP BY doc_id, gram),
-top AS (
-  SELECT doc_id, gram, cnt FROM (
-    SELECT *, row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY cnt DESC, gram) AS rn
-    FROM cnts) WHERE rn = 1
-)
-SELECT d.doc_id,
-  coalesce(t.gram, '') AS top_gram,
-  coalesce(t.cnt, 0)::BIGINT AS top_cnt,
-  round(CASE WHEN t.cnt IS NOT NULL AND d.sum_wlen > 0
-             THEN (t.cnt * (length(t.gram) - 1)) / d.sum_wlen
-             ELSE 0.0::DOUBLE END, 6) AS top_ngram_frac,
-  (CASE WHEN t.cnt IS NOT NULL AND d.sum_wlen > 0
-        THEN (t.cnt * (length(t.gram) - 1)) / d.sum_wlen
-        ELSE 0.0::DOUBLE END <= 0.2) AS repetition_ok
-FROM denom d LEFT JOIN top t ON d.doc_id = t.doc_id
-""",
     })

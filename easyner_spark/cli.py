@@ -451,6 +451,8 @@ def run_query(spark: SparkSession, cfg: dict) -> dict[str, int]:
     edges = SnapshotTable(
         f"{out_dir}/edges", ["subj_id", "pred", "obj_id"]
     ).read(spark)
+    if edges is None:
+        raise FileNotFoundError(f"{out_dir}/edges has no committed snapshot")
     stats = bgp_stats(edges)
     counts: dict[str, int] = {}
     for q in cfg.get("queries", []):

@@ -57,6 +57,10 @@ class KnowledgeGraph:
         edges = SnapshotTable(
             f"{output_dir}/edges", ["subj_id", "pred", "obj_id"]
         ).read(spark)
+        if edges is None:
+            raise FileNotFoundError(
+                f"{output_dir}/edges has no committed snapshot"
+            )
         nodes_t = SnapshotTable(f"{output_dir}/nodes", ["node"])
         nodes = (
             nodes_t.read(spark) if nodes_t.current_snapshot() is not None

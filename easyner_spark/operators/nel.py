@@ -756,8 +756,8 @@ def fs_em_linkage(
         m_f = round(sum(g*cnt*a_f) / sum(g*cnt), sr),
         u_f = round(sum((1-g)*cnt*a_f) / sum((1-g)*cnt), sr),
         p = round(sum(g*cnt) / sum(cnt), sr) — the round-snap
-        recipe (arbitrary-valued ratios, so the half-grid
-        failure mode textrank hit cannot occur);
+        recipe (arbitrary-valued ratios, so the half-grid rounding
+        failure of exact small-rational states cannot occur);
       * match_prob = round(g under the POST-iteration params, sr);
         is_match = match_prob >= threshold.
     Denominators are strictly positive: g in (0,1) whenever
@@ -774,8 +774,7 @@ def fs_em_linkage(
     boolean columns, map-side combined, <= 2^F result rows at ANY
     corpus size); each EM iteration is one bounded agg over that tiny
     frame cross-joined with the 1-row param frame — no corpus pass,
-    no driver collect (the same bounded-aggregate discipline as
-    ranking.bm25_rank's stats row). The final scoring join broadcasts
+    no driver collect. The final scoring join broadcasts
     the <= 2^F scored patterns back onto the pair table: one
     broadcast join over the only corpus-sized relation.
 

@@ -37,8 +37,7 @@ per-token log-probabilities / weights are quantized to BIGINT
 micro-units (floor(x * 1e6)) BEFORE any cross-row sum, so sums are
 order-independent exact integer arithmetic; floats appear only in
 per-row final expressions (ln / exp / division — <=1-ulp libm calls
-on identical IEEE operands, same recipe as ranking.bm25_rank and
-graph.pmi_edges), rounded to 6 decimals. The md5-based token bucket
+on identical IEEE operands), rounded to 6 decimals. The md5-based token bucket
 is the sampling module's cross-engine primitive (sampling.sample_hash
 rationale: md5 is bit-identical everywhere; xxhash64 is
 Spark-private).
@@ -129,7 +128,7 @@ def unigram_vocab(
     words' mass to the OOV bucket rather than inflating kept words'
     probabilities. The tiny two-column count frame is localCheckpointed
     so the N aggregate and the cutoff projection share one token scan
-    (same bounded-materialization class as ranking.bm25_rank's `per`).
+    (a bounded materialization: O(vocab) rows).
     """
     counts = _unigram_counts(docs, text_col)
     stats = counts.agg(F.sum("cnt").alias("n"))
@@ -203,7 +202,7 @@ per AS (
 def unigram_lm_oracle_sql(min_count: int = 2, source: str = "documents") -> str:
     """DuckDB twin of :func:`unigram_lm_score` (kept beside the
     operator so the quantization and float expression shapes stay in
-    lockstep — the bm25_oracle_sql pattern)."""
+    lockstep)."""
     return f"""{_unigram_lm_ctes(min_count, source)}
 SELECT id, n_tokens, score_q,
        round((-score_q / 1000000.0) / n_tokens, 6) AS cross_entropy,
@@ -570,284 +569,4 @@ SELECT id, n_transitions, score_q,
        round((-score_q / 1000000.0) / n_transitions, 6) AS cross_entropy,
        round(exp((-score_q / 1000000.0) / n_transitions), 6) AS ppl
 FROM per
-"""
-
-
-# ---------------------------------------------------------------------------
-# DSIR-style importance resampling (Xie et al. 2023, "Data Selection
-# for Language Models via Importance Resampling")
-# ---------------------------------------------------------------------------
-
-DSIR_BUCKETS = 2048
-
-
-def _bigram_array(w: Column) -> Column:
-    """["a","b","c"] -> ["a b","b c"]; [] / single-word -> [].
-    zip_with(w, tail(w), concat) — zip_with pads the shorter side
-    with NULL, concat-with-NULL is NULL, and the filter drops it, so
-    no length guard is needed. This shape is ~14x faster than the
-    index-lambda formulation (sequence + try_element_at per element:
-    interpreted random access per index — measured 5.3 s vs 0.38 s
-    per sf0.1 corpus scan); HOFs don't codegen, so the lambda BODY
-    cost is everything. DuckDB twin: list_transform(range(1, len(w)),
-    i -> w[i] || ' ' || w[i+1]) — same values, range() end-exclusive,
-    1-based list index."""
-    tail = F.slice(w, 2, F.greatest(F.size(w) - 1, F.lit(0)))
-    return F.filter(
-        F.zip_with(w, tail, lambda a, b: F.concat(a, F.lit(" "), b)),
-        lambda x: x.isNotNull(),
-    )
-
-
-def _dsir_bucket(g: Column, n_buckets: int, hash_fn: str) -> Column:
-    """Bigram -> bucket. hash_fn='md5' is the engine-portable oracle
-    default (md5_long32, bit-identical in DuckDB); 'xxhash64' is the
-    JVM-native fast path (md5 is ~2x the cost and the bucket
-    assignment only needs to be a uniform hash, not a cross-engine
-    one). pmod keeps xxhash64's signed output in
-    [0, n_buckets)."""
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(g), F.lit(n_buckets))
-    if hash_fn != "md5":
-        raise ValueError(f"hash_fn must be md5|xxhash64: {hash_fn!r}")
-    from easyner_spark.operators.sampling import md5_long32
-
-    return md5_long32(g) % F.lit(n_buckets)
-
-
-def _dsir_bucket_counts(
-    docs: DataFrame, text_col: str, n_buckets: int, hash_fn: str = "md5"
-) -> DataFrame:
-    """(b, c) — hashed-bigram bucket counts for one corpus. One
-    groupBy-bucket shuffle; map-side partial combine absorbs the
-    Zipf-hot buckets, and the output is BOUNDED at n_buckets rows
-    regardless of corpus size."""
-    return (
-        docs.select(_bigram_array(words_array(text_col)).alias("_b"))
-        .select(F.explode("_b").alias("g"))
-        .groupBy(_dsir_bucket(F.col("g"), n_buckets, hash_fn).alias("b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def dsir_log_ratios(
-    target: DataFrame,
-    raw: DataFrame,
-    n_buckets: int = DSIR_BUCKETS,
-    text_col: str = "text",
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(b, lr_q) for EVERY bucket 0..n_buckets-1 — the DSIR importance
-    model: add-one-smoothed hashed-bigram bag models for the target
-    and raw corpora, lr_q = floor(ln p_target(b) * 1e6) - floor(ln
-    p_raw(b) * 1e6) as exact BIGINT micro-nats (the module's
-    quantize-before-sum contract, so per-document sums below are
-    order-independent integers). Bounded at n_buckets rows — train
-    once per (target, corpus-snapshot) pair and reuse, exactly like
-    unigram_vocab / train_ivf_centroids."""
-    spark = raw.sparkSession
-    t = _dsir_bucket_counts(target, text_col, n_buckets, hash_fn)
-    r = _dsir_bucket_counts(raw, text_col, n_buckets, hash_fn)
-    nt = t.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("nt"))
-    nr = r.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("nr"))
-    buckets = spark.range(n_buckets).select(F.col("id").alias("b"))
-    joined = (
-        buckets.join(t.withColumnRenamed("c", "tc"), "b", "left")
-        .join(r.withColumnRenamed("c", "rc"), "b", "left")
-        .crossJoin(F.broadcast(nt))
-        .crossJoin(F.broadcast(nr))
-    )
-    fb = F.lit(float(n_buckets))
-    lp_t = F.floor(
-        F.log(
-            (F.coalesce(F.col("tc"), F.lit(0)) + F.lit(1.0))
-            / (F.col("nt") + fb)
-        )
-        * F.lit(float(Q))
-    ).cast("long")
-    lp_r = F.floor(
-        F.log(
-            (F.coalesce(F.col("rc"), F.lit(0)) + F.lit(1.0))
-            / (F.col("nr") + fb)
-        )
-        * F.lit(float(Q))
-    ).cast("long")
-    return joined.select("b", (lp_t - lp_r).alias("lr_q"))
-
-
-def dsir_weights(
-    raw: DataFrame,
-    target: DataFrame,
-    n_buckets: int = DSIR_BUCKETS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ratios: DataFrame | None = None,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(id, n_grams, weight_q, log_ratio) — per-document DSIR
-    importance weights: weight_q = sum over the document's hashed
-    bigrams of the bucket log-ratio (exact BIGINT micro-nats),
-    log_ratio = weight_q / 1e6 rounded to 6 (the only float, per-row).
-    High weight = looks like the target domain relative to the raw
-    crawl — the data-selection score FineWeb-style pipelines rank
-    with when a quality classifier is too blunt.
-
-    Documents with < 2 words have no bigrams and are absent (the
-    unigram_lm_score GROUP BY convention). `ratios` accepts a
-    persisted :func:`dsir_log_ratios` frame to skip model fitting
-    (the vocab= / centroids= amortization pattern) — it must have
-    been built with the SAME hash_fn and n_buckets; a frame whose row
-    count is not n_buckets, or whose `b` leaves [0, n_buckets), raises
-    ValueError (one aggregate over the bounded frame) instead of
-    silently dropping bigram mass in the join. `hash_fn=
-    'xxhash64'` is the production fast path (~3x at sf0.1: the cost
-    is one hash per bigram occurrence over three corpus scans, and
-    xxhash64 is JVM-native where md5 round-trips a hex string);
-    'md5' (default) is the engine-portable oracle twin.
-
-    Scale: two bounded bucket-count shuffles to fit the model (or
-    zero with `ratios=`); scoring is explode-bigrams -> broadcast
-    join against the n_buckets-row ratio table -> one groupBy(id)
-    with partial combine. No corpus collect, no unbounded state."""
-    if ratios is None:
-        ratios = dsir_log_ratios(target, raw, n_buckets, text_col, hash_fn)
-    else:
-        n, in_range = ratios.agg(
-            F.count(F.lit(1)),
-            F.count(F.when(F.col("b").between(0, n_buckets - 1), 1)),
-        ).first()
-        if n != n_buckets or in_range != n:
-            raise ValueError(
-                f"ratios has {n} rows ({n - in_range} with b outside "
-                f"[0, {n_buckets})); dsir_weights expects n_buckets="
-                f"{n_buckets}: build it with dsir_log_ratios at the same "
-                "n_buckets"
-            )
-    bg = raw.select(
-        F.col(id_col).alias("id"),
-        F.explode(_bigram_array(words_array(text_col))).alias("g"),
-    ).select("id", _dsir_bucket(F.col("g"), n_buckets, hash_fn).alias("b"))
-    per = (
-        bg.join(F.broadcast(ratios), "b")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum("lr_q").alias("weight_q"),
-        )
-    )
-    return per.select(
-        "id",
-        "n_grams",
-        "weight_q",
-        F.round(F.col("weight_q") / F.lit(float(Q)), 6).alias("log_ratio"),
-    )
-
-
-def dsir_sample(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    n_buckets: int = DSIR_BUCKETS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: str = "",
-    ratios: DataFrame | None = None,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(id, n_grams, weight_q, key_q) — the DSIR selection itself:
-    Gumbel top-k over the importance weights (sampling WITHOUT
-    replacement proportional to exp(weight), the paper's resampling
-    step). The Gumbel noise is DETERMINISTIC and exact: u = (md5_32
-    (seed || id) + 0.5) / 2^32, g_q = floor(-ln(-ln(u)) * 1e6) as
-    BIGINT micro-nats, key_q = weight_q + g_q — an exact integer
-    sort key, so the surviving-k set is engine- and run-stable
-    (ties broken by id). Plans TakeOrderedAndProject: per-partition
-    top-k, one tiny merge, never a global sort. Distinct `seed`
-    strings draw independent samples."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1: {k}")
-    from easyner_spark.operators.sampling import md5_long32
-
-    w = dsir_weights(raw, target, n_buckets, text_col, id_col, ratios, hash_fn)
-    h = md5_long32(F.col("id"), seed)
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
-    g_q = F.floor(-F.log(-F.log(u)) * F.lit(float(Q))).cast("long")
-    return (
-        w.select("id", "n_grams", "weight_q", (F.col("weight_q") + g_q).alias("key_q"))
-        .orderBy(F.col("key_q").desc(), F.col("id").asc())
-        .limit(int(k))
-    )
-
-
-def _dsir_cte(n_buckets: int, target_where: str, source: str) -> str:
-    """Shared WITH-body of the DSIR oracles (per, the per-doc weight
-    relation) — one definition feeding both twins."""
-    nb = int(n_buckets)
-    bg = (
-        "CASE WHEN len(w) >= 2 THEN list_transform(range(1, len(w)), "
-        "i -> w[i] || ' ' || w[i+1]) ELSE [] END"
-    )
-    bkt = f"('0x' || substr(md5(g), 1, {HASH_NIBBLES}))::BIGINT % {nb}"
-    return f"""
-tw AS (SELECT regexp_extract_all(lower(text), '\\w+') AS w
-       FROM {source} WHERE {target_where}),
-tg AS (SELECT unnest({bg}) AS g FROM tw),
-tcnt AS (SELECT {bkt} AS b, count(*) AS c FROM tg GROUP BY 1),
-rw AS (SELECT regexp_extract_all(lower(text), '\\w+') AS w FROM {source}),
-rg AS (SELECT unnest({bg}) AS g FROM rw),
-rcnt AS (SELECT {bkt} AS b, count(*) AS c FROM rg GROUP BY 1),
-tstat AS (SELECT coalesce(sum(c), 0) AS nt FROM tcnt),
-rstat AS (SELECT coalesce(sum(c), 0) AS nr FROM rcnt),
-lr AS (
-  SELECT bk.range AS b,
-         CAST(floor(ln((coalesce(t.c, 0) + 1.0) / (tstat.nt + {nb}.0)) * 1000000.0) AS BIGINT)
-       - CAST(floor(ln((coalesce(r.c, 0) + 1.0) / (rstat.nr + {nb}.0)) * 1000000.0) AS BIGINT) AS lr_q
-  FROM range({nb}) bk
-  LEFT JOIN tcnt t ON t.b = bk.range
-  LEFT JOIN rcnt r ON r.b = bk.range, tstat, rstat
-),
-docg AS (
-  SELECT doc_id AS id, unnest({bg}) AS g
-  FROM (SELECT doc_id, regexp_extract_all(lower(text), '\\w+') AS w FROM {source})
-),
-per AS (
-  SELECT d.id, count(*)::BIGINT AS n_grams, sum(lr.lr_q)::BIGINT AS weight_q
-  FROM docg d JOIN lr ON {bkt.replace("md5(g)", "md5(d.g)")} = lr.b
-  GROUP BY d.id
-)"""
-
-
-def dsir_weights_oracle_sql(
-    n_buckets: int = DSIR_BUCKETS,
-    target_where: str = "doc_id % 7 = 0",
-    source: str = "documents",
-) -> str:
-    """DuckDB twin of :func:`dsir_weights` (same construction: hashed
-    bigram buckets, add-one smoothing, per-term floor-quantized ln)."""
-    return f"""
-WITH {_dsir_cte(n_buckets, target_where, source)}
-SELECT id, n_grams, weight_q,
-       round(weight_q / 1000000.0, 6) AS log_ratio
-FROM per
-"""
-
-
-def dsir_sample_oracle_sql(
-    k: int,
-    n_buckets: int = DSIR_BUCKETS,
-    target_where: str = "doc_id % 7 = 0",
-    source: str = "documents",
-    seed: str = "",
-) -> str:
-    """DuckDB twin of :func:`dsir_sample` — same exact integer Gumbel
-    key, same total order (key_q DESC, id ASC)."""
-    lit = seed.replace("'", "''")
-    h = f"('0x' || substr(md5('{lit}' || id::VARCHAR), 1, {HASH_NIBBLES}))::BIGINT"
-    return f"""
-WITH {_dsir_cte(n_buckets, target_where, source)}
-SELECT id, n_grams, weight_q,
-       (weight_q + CAST(floor(-ln(-ln(({h} + 0.5) / 4294967296.0)) * 1000000.0) AS BIGINT)) AS key_q
-FROM per
-ORDER BY key_q DESC, id ASC
-LIMIT {int(k)}
 """

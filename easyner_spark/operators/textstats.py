@@ -1,6 +1,6 @@
 """Per-document text analysis for the curate job: the Gopher quality
-gate, PII redaction, and the word-repetition, readability, contact,
-mojibake and topic operators beside them.
+gate and PII redaction, plus contact-fact extraction from the same PII
+regexes.
 
 These extend the reference's corpus hygiene (empty-abstract filter,
 scripts/pubmed_bulk.py:115-117; char-count normalization,
@@ -51,27 +51,6 @@ def _sum_wlen_col(words: Column) -> Column:
     return F.aggregate(F.transform(words, F.length), F.lit(0), lambda a, x: a + x)
 
 
-def _gram_chain(toks: Column, k: int) -> Column:
-    """Word k-grams in document order via a zip_with fold: gram i =
-    toks[i] + " " + ... + toks[i+k-1], built by k-1 zip_withs against
-    the progressively-offset tail (zip_with pads the short side with
-    NULL, concat-with-NULL is NULL, the final filter drops the <k
-    ragged tail). ~6x the index-lambda formulation (sequence +
-    per-index slice: HOF lambdas don't codegen, so interpreted
-    random access per index IS the cost — measured 3.9 s vs 0.7 s
-    per sf0.1 corpus scan on a word-3-gram shingle path; same lesson
-    as scoring._bigram_array)."""
-    n = F.size(toks)
-    acc = toks
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc,
-            F.slice(toks, j + 1, F.greatest(n - j, F.lit(0))),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.filter(acc, lambda x: x.isNotNull())
-
-
 # Layered-projection note (performance contract): higher-order-function
 # expressions (transform/filter/aggregate lambdas) are NOT deduplicated
 # by codegen subexpression elimination, so inlining the `words` array
@@ -81,10 +60,6 @@ def _gram_chain(toks: Column, k: int) -> Column:
 # boundaries (CollapseProject refuses to duplicate non-cheap
 # multiply-referenced expressions); measured 150x on a word-shingle
 # signature path.
-
-
-def _with_words(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return docs.select(F.col(id_col), F.col(text_col), _words(text_col).alias("_w"))
 
 
 def _select(docs: DataFrame, id_col: str, cols: dict[str, Column]) -> DataFrame:
@@ -123,8 +98,7 @@ def gopher_filters(
       starting with a bullet <= 90%; lines ending in an ellipsis
       <= 30%; >= 80% of words contain an alphabetic char; >= 2
       English stopword hits; duplicate-line fraction <= 0.3 (the
-      line-wise member of Gopher's repetition family; the n-gram
-      member is word_repetition).
+      line-wise member of Gopher's repetition family).
 
     Scale shape: zero shuffle — stacked narrow Projects over the scan
     (words/lines arrays materialized once per row; counts; then
@@ -220,81 +194,6 @@ def gopher_filters(
     return _select(mid, id_col, out_cols)
 
 
-def word_repetition(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-    max_top_ngram_frac: float = 0.20,
-) -> DataFrame:
-    """The aggregation member of Gopher's repetition family (§A1.1
-    "fraction of characters in most common n-gram"; the per-line
-    members live in gopher_filters, the cross-document ones are
-    dedup.exact_dedup and dedup.paragraph_dedup): per document, the character fraction covered by the
-    most frequent word n-gram.
-
-    Contract (oracle-mirrored): words = lowercased `\\w+`; n-grams are
-    space-joined consecutive windows; the top gram is the (count DESC,
-    gram ASC) argmin — `min(struct(-cnt, gram))`, the same
-    first-per-key trick as dedup.paragraph_dedup; `top_ngram_frac =
-    cnt * (length(gram) - (n-1)) / sum(word lengths)` (the subtraction
-    removes the joining spaces, so the numerator is exactly the
-    characters the gram's occurrences cover). Documents with fewer
-    than n words emit ('', 0, 0.0) and pass the gate.
-
-    Scale: gram expansion is per-row (bounded by words-per-doc); the
-    rollup is two algebraic aggregates — (doc, gram) partial counts
-    absorb within-doc repetition map-side, then the per-doc argmin.
-    The doc-level denominator join is doc_id-keyed and both sides are
-    pre-aggregated (one row per doc) — no window, no skew hazard
-    (doc_id is unique).
-    """
-    base = _with_words(docs, text_col, id_col)
-    # zip_with gram fold (see _gram_chain: ~6x the index-lambda form,
-    # identical values/order); the n>=size guard below keeps the
-    # short-doc ('', 0, 0.0) contract unchanged
-    grams = _gram_chain(F.col("_w"), n)
-    denom = base.select(
-        F.col(id_col),
-        _sum_wlen_col(F.col("_w")).alias("_sum_wlen"),
-    )
-    exploded = base.select(
-        F.col(id_col),
-        F.explode(
-            F.when(F.size(F.col("_w")) >= n, grams).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("gram"),
-    )
-    top = (
-        exploded.groupBy(id_col, "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(id_col)
-        .agg(
-            F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("gram"))).alias("_s")
-        )
-        .select(
-            F.col(id_col),
-            F.col("_s.gram").alias("top_gram"),
-            (-F.col("_s.nc")).cast("long").alias("top_cnt"),
-        )
-    )
-    joined = denom.join(top, id_col, "left")
-    frac_raw = (
-        F.col("top_cnt") * (F.length(F.col("top_gram")) - F.lit(n - 1))
-    ) / F.col("_sum_wlen")
-    frac = F.when(
-        F.col("top_cnt").isNotNull() & (F.col("_sum_wlen") > 0), frac_raw
-    ).otherwise(F.lit(0.0))
-    return joined.select(
-        F.col(id_col),
-        F.coalesce(F.col("top_gram"), F.lit("")).alias("top_gram"),
-        F.coalesce(F.col("top_cnt"), F.lit(0)).cast("long").alias("top_cnt"),
-        F.round(frac, 6).alias("top_ngram_frac"),
-        (frac <= max_top_ngram_frac).alias("repetition_ok"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII redaction
 # ---------------------------------------------------------------------------
@@ -355,181 +254,6 @@ def pii_redact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         F.col("n_phones").cast("long").alias("n_phones"),
         ((F.col("n_emails") + F.col("n_ips") + F.col("n_phones")) > 0).alias("has_pii"),
     )
-
-
-# Default topic lexicons for topic_id. These are demonstration
-# lexicons (they partition the synthetic corpus vocab);
-# production callers pass their own curated keyword sets — the
-# operator and oracle generator are lexicon-agnostic.
-TOPIC_MARKERS: dict[str, tuple[str, ...]] = {
-    "storage": ("table", "row", "column", "part", "line"),
-    "compute": ("scan", "hash", "sort", "merge", "agg", "join", "filter", "group"),
-    "runtime": ("spark", "stream", "batch", "window", "query"),
-}
-
-
-def topic_id(
-    docs: DataFrame,
-    topics: dict[str, tuple[str, ...]] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, hits_<topic>..., topic_pred) — lexicon-argmax topic
-    bucketing: highest
-    marker-hit count wins, ties break by topic name ascending,
-    all-zero -> 'other'. ZERO shuffle (one marker-count projection +
-    a codegen argmax chain). Composes with sampling.mixture_sample to
-    rebalance a corpus by topic (bucket -> mixture_rates -> exact
-    hash gate) — the WebOrganizer-style curation loop with lexicons
-    standing in for a trained classifier."""
-    topics = TOPIC_MARKERS if topics is None else topics
-    if not topics:
-        raise ValueError("topic_id needs at least one topic lexicon")
-    names = sorted(topics)
-    base = _with_words(docs, text_col, id_col)
-    hit_cols = {f"hits_{t}": _marker_hits(F.col("_w"), tuple(topics[t])) for t in names}
-    per = base.select(F.col(id_col), *[c.alias(n) for n, c in hit_cols.items()])
-    hits = {t: F.col(f"hits_{t}") for t in names}
-    best = hits[names[0]] if len(names) == 1 else F.greatest(*hits.values())
-    pred = F.lit("other")
-    for t in sorted(names, reverse=True):
-        pred = F.when((hits[t] > 0) & (hits[t] == best), F.lit(t)).otherwise(pred)
-    return per.select(id_col, *[f"hits_{t}" for t in names], pred.alias("topic_pred"))
-
-
-def topic_oracle_sql(
-    topics: dict[str, tuple[str, ...]] | None = None,
-    source: str = "documents",
-) -> str:
-    """DuckDB twin of :func:`topic_id` (generated from the same
-    lexicon dict so marker sets cannot drift). Lexicon entries must be
-    lowercase word tokens — interpolated as SQL string literals."""
-    import re as _re
-
-    topics = TOPIC_MARKERS if topics is None else topics
-    names = sorted(topics)
-    for t in names:
-        bad = [m for m in topics[t] if not _re.match(r"[a-z0-9_]+\Z", m)]
-        if bad or not _re.match(r"[a-z0-9_]+\Z", t):
-            raise ValueError(f"topic markers must be lowercase word tokens: {t}={bad}")
-    hit_exprs = ",\n  ".join(
-        "len(list_filter(w, x -> x IN ({}))) AS hits_{}".format(
-            ", ".join(f"'{m}'" for m in topics[t]), t
-        )
-        for t in names
-    )
-    best = "greatest({})".format(", ".join(f"hits_{t}" for t in names))
-    case = "CASE "
-    for t in names:
-        case += f"WHEN hits_{t} > 0 AND hits_{t} = best THEN '{t}' "
-    case += "ELSE 'other' END"
-    cols = ", ".join(f"hits_{t}" for t in names)
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '\\w+') AS w FROM {source}
-),
-per AS (
-  SELECT doc_id,
-  {hit_exprs}
-  FROM toks
-),
-b AS (
-  SELECT *, {best} AS best FROM per
-)
-SELECT doc_id, {cols}, {case} AS topic_pred FROM b
-"""
-
-
-# readability contract, shared verbatim with the oracle: sentences =
-# maximal runs split on [.!?]+ that contain at least one word;
-# syllables = vowel-group count per word ([aeiouy]+ runs), the
-# standard dictionary-free heuristic, floored at 1 per word.
-SENT_SPLIT_RE = r"[.!?]+"
-VOWEL_GROUP_RE = r"[aeiouy]+"
-
-
-def readability_counts(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-integer readability counts per doc: (id, n_sents,
-    n_words, n_syllables, words_per_sent_micro, syll_per_word_micro)
-    — the inputs to any Flesch/FK-family score, kept as BIGINT counts
-    and micro-unit (1e6) ratios so values hash-match across engines
-    (the float grade formula is one multiply away for consumers, and
-    a curation gate compares thresholds in micro-units directly).
-    Sentences are [.!?]+ runs containing >= 1 word; syllables are
-    vowel-group counts floored at 1 per word (the dictionary-free
-    heuristic). Empty docs emit zero counts and zero ratios.
-
-    Zero shuffle: tokenization, the sentence filter, and the syllable
-    fold are all scan-fused array expressions.
-    """
-    words = words_array(text_col)
-    sents = F.filter(
-        F.split(F.lower(F.col(text_col)), SENT_SPLIT_RE),
-        lambda s: s.rlike(WORD_RE),
-    )
-    syll = F.aggregate(
-        words,
-        F.lit(0).cast("long"),
-        lambda acc, w: acc
-        + F.greatest(
-            F.size(
-                F.filter(
-                    F.split(w, r"[^aeiouy]+"),
-                    lambda p: p != F.lit(""),
-                )
-            ),
-            F.lit(1),
-        ).cast("long"),
-    )
-    n_words = F.size(words).cast("long")
-    n_sents = F.size(sents).cast("long")
-    return docs.select(
-        F.col(id_col),
-        n_sents.alias("n_sents"),
-        n_words.alias("n_words"),
-        F.when(n_words > 0, syll).otherwise(F.lit(0)).cast("long").alias(
-            "n_syllables"
-        ),
-    ).select(
-        id_col,
-        "n_sents",
-        "n_words",
-        "n_syllables",
-        F.expr("CASE WHEN n_sents > 0 THEN n_words * 1000000 div n_sents"
-               " ELSE 0 END").alias("words_per_sent_micro"),
-        F.expr("CASE WHEN n_words > 0 THEN n_syllables * 1000000 div n_words"
-               " ELSE 0 END").alias("syll_per_word_micro"),
-    )
-
-
-def readability_counts_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of readability_counts; `docs_sql` yields
-    (id, text). Same tokenizer, sentence split, vowel-group syllable
-    heuristic, and micro-unit floor divisions."""
-    return f"""
-WITH d AS ({docs_sql}),
-w AS (SELECT id, regexp_extract_all(lower(text), '\\w+') AS ws,
-        len(list_filter(string_split_regex(lower(text), '[.!?]+'),
-            s -> regexp_matches(s, '\\w+')))::BIGINT AS n_sents
-      FROM d),
-c AS (
-  SELECT id, n_sents, len(ws)::BIGINT AS n_words,
-    CASE WHEN len(ws) > 0 THEN
-      list_sum(list_transform(ws, x -> greatest(
-        len(list_filter(string_split_regex(x, '[^aeiouy]+'),
-            p -> p != '')), 1)))::BIGINT
-    ELSE 0 END AS n_syllables
-  FROM w
-)
-SELECT id, n_sents, n_words, n_syllables,
-  CASE WHEN n_sents > 0 THEN n_words * 1000000 // n_sents ELSE 0 END
-    AS words_per_sent_micro,
-  CASE WHEN n_words > 0 THEN n_syllables * 1000000 // n_words ELSE 0 END
-    AS syll_per_word_micro
-FROM c
-"""
 
 
 def contact_facts(
@@ -600,101 +324,4 @@ WITH d AS ({docs_sql})
 {emails}
 UNION ALL
 {phones}
-"""
-
-
-# mojibake contract: the three classic UTF-8-bytes-redecoded-as-
-# Latin-1/windows-1252 artifact families, matched as the LITERAL
-# characters they become in the corrupted text (e.g. 'é' -> 'Ã©',
-# smart quotes -> 'â€¦'-family, NBSP -> 'Â'), plus U+FFFD replacement
-# chars from lossy decodes. Shared verbatim with the DuckDB oracle.
-MOJIBAKE_ATILDE_RE = "Ã[¡-¿]"   # double-encoded Latin-1 letters
-MOJIBAKE_SMART_RE = "â€"        # double-encoded windows-1252 punctuation
-MOJIBAKE_ACIRC_RE = "Â"         # double-encoded NBSP / soft hyphen lead
-MOJIBAKE_REPL_RE = "�"     # replacement character
-
-
-def mojibake_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hits_per_kchar: int = 1,
-) -> DataFrame:
-    """(id, n_chars, n_atilde, n_smart, n_acirc, n_repl, mojibake_hits,
-    is_mojibake) — double-encoding corruption detection, the crawl-
-    cleaning signal the quality/lang gates miss: a page whose bytes
-    were decoded with the wrong charset reads as fluent-ish text full
-    of 'Ã©'/'â€™'/'Â ' artifacts (UTF-8 bytes re-decoded as Latin-1 /
-    windows-1252) — it passes length and stopword checks while being
-    garbage for training. Counts are exact integers per artifact
-    family; is_mojibake flags docs with >= `hits_per_kchar` artifacts
-    per 1000 chars (integer cross-multiply, no float).
-
-    Zero shuffle: four regexp_extract_all counts fused into the scan.
-    Fix-up belongs upstream (ftfy-style repair is byte-level work for
-    the loader); this operator is the detector that routes pages there.
-
-    Reference parity: EasyNER assumes clean UTF-8 PubMed XML
-    (scripts/downloader.py) and has no charset hygiene; north_star
-    web-crawl surface.
-    """
-    if hits_per_kchar < 1:
-        raise ValueError(f"hits_per_kchar must be >= 1: {hits_per_kchar}")
-
-    def cnt(pat: str):
-        return F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), 0)).cast(
-            "long"
-        )
-
-    base = docs.select(
-        F.col(id_col).alias("id"),
-        F.length(text_col).cast("long").alias("n_chars"),
-        cnt(MOJIBAKE_ATILDE_RE).alias("n_atilde"),
-        cnt(MOJIBAKE_SMART_RE).alias("n_smart"),
-        cnt(MOJIBAKE_ACIRC_RE).alias("n_acirc"),
-        cnt(MOJIBAKE_REPL_RE).alias("n_repl"),
-    )
-    hits = (
-        F.col("n_atilde") + F.col("n_smart") + F.col("n_acirc") + F.col("n_repl")
-    )
-    return base.select(
-        "*",
-        hits.alias("mojibake_hits"),
-        (
-            (hits * F.lit(1000) >= F.col("n_chars") * F.lit(int(hits_per_kchar)))
-            & (hits > 0)
-        ).alias("is_mojibake"),
-    )
-
-
-def mojibake_stats_oracle_sql(
-    source_sql: str, hits_per_kchar: int = 1
-) -> str:
-    """DuckDB twin of :func:`mojibake_stats`; `source_sql` yields
-    (id, text)."""
-    if hits_per_kchar < 1:
-        raise ValueError(f"hits_per_kchar must be >= 1: {hits_per_kchar}")
-    pats = {
-        "n_atilde": MOJIBAKE_ATILDE_RE,
-        "n_smart": MOJIBAKE_SMART_RE,
-        "n_acirc": MOJIBAKE_ACIRC_RE,
-        "n_repl": MOJIBAKE_REPL_RE,
-    }
-    cols = ",\n         ".join(
-        f"len(regexp_extract_all(text, '{p}'))::BIGINT AS {n}"
-        for n, p in pats.items()
-    )
-    return f"""
-WITH src AS ({source_sql}),
-c AS (
-  SELECT id, length(text)::BIGINT AS n_chars,
-         {cols}
-  FROM src
-)
-SELECT id, n_chars, n_atilde, n_smart, n_acirc, n_repl,
-       (n_atilde + n_smart + n_acirc + n_repl)::BIGINT AS mojibake_hits,
-       ((n_atilde + n_smart + n_acirc + n_repl) * 1000
-          >= n_chars * {int(hits_per_kchar)}
-        AND (n_atilde + n_smart + n_acirc + n_repl) > 0) AS is_mojibake
-FROM c
 """

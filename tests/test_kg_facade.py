@@ -1,6 +1,10 @@
 """KnowledgeGraph facade — thin-delegation correctness and the
 pipeline->facade end-to-end path."""
 
+import re
+
+import pytest
+
 from easyner_spark.kg import KnowledgeGraph
 
 
@@ -75,6 +79,12 @@ def test_load_from_pipeline_output(spark, pages_df, tmp_path):
     assert kg.nodes is not None and kg.nodes.count() > 0
     res = kg.query([("?x", "co_occurs_with", "?y")], distinct=True)
     assert res.count() > 0
+
+
+def test_load_without_edges_snapshot_raises(spark, tmp_path):
+    out_dir = str(tmp_path / "out")
+    with pytest.raises(FileNotFoundError, match=re.escape(f"{out_dir}/edges")):
+        KnowledgeGraph.load(spark, out_dir)
 
 
 def test_ego_labeled_and_dot(spark):

@@ -113,50 +113,6 @@ class TestHashedLinear:
             assert abs(hi[k] - 0.5) >= abs(lo[k] - 0.5) - 1e-9
 
 
-class TestTopicId:
-    DOCS = [
-        (1, "table row column row table"),          # storage
-        (2, "scan hash merge table"),               # compute 3 > storage 1
-        (3, "zzz qqq unrelated"),                   # no markers -> other
-        (4, "table scan"),                          # 1-1 tie -> compute (asc)
-        (5, ""),                                    # empty -> other
-    ]
-
-    def _run(self, spark, **kw):
-        from easyner_spark.operators.textstats import topic_id
-
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        return {r["doc_id"]: r for r in topic_id(df, **kw).collect()}
-
-    def test_argmax_and_tiebreak(self, spark):
-        got = self._run(spark)
-        assert got[1]["topic_pred"] == "storage"
-        assert got[2]["topic_pred"] == "compute"
-        assert got[3]["topic_pred"] == "other"
-        assert got[4]["topic_pred"] == "compute"   # tie -> name ascending
-        assert got[5]["topic_pred"] == "other"
-        assert got[1]["hits_storage"] == 5
-
-    def test_custom_lexicons_and_validation(self, spark):
-        import pytest as _pt
-
-        got = self._run(spark, topics={"db": ("table",), "os": ("scan",)})
-        assert got[4]["topic_pred"] == "db"  # tie -> 'db' < 'os'
-        with _pt.raises(ValueError):
-            self._run(spark, topics={})
-        from easyner_spark.operators.textstats import topic_oracle_sql
-
-        with _pt.raises(ValueError):
-            topic_oracle_sql({"bad topic": ("x'y",)})
-
-    def test_zero_shuffle_plan(self, spark):
-        from easyner_spark.operators.textstats import topic_id
-
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        plan = topic_id(df)._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-
-
 class TestBigramLm:
     # doc 1/2 share the 'the cat'/'cat sat' transition structure; doc 6
     # uses the same WORDS in scrambled order (bigram-broken) — the

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -927,6 +928,18 @@ class TestQueryMode:
             },
         )
         assert 0 < counts["per_subj"] <= 10
+
+    def test_query_without_edges_snapshot_raises(self, spark, tmp_path):
+        """No committed edges snapshot (no kg run yet, or one killed
+        before its edges commit) is a missing input, not a crash in
+        bgp_stats."""
+        from easyner_spark.cli import run_query
+
+        out_dir = str(tmp_path / "out")
+        q = {"output_dir": out_dir,
+             "queries": [{"name": "q", "patterns": [["?x", "p", "?y"]]}]}
+        with pytest.raises(FileNotFoundError, match=re.escape(f"{out_dir}/edges")):
+            run_query(spark, q)
 
     def test_query_runs_plan_once(self, spark, tmp_path):
         """run_query's count rides the TSV write: it runs no more jobs

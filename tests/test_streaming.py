@@ -377,13 +377,6 @@ class TestCurationOpsOnStreams:
             "m_mix", lambda r: r["doc_id"],
         )
 
-    def test_topic_id_streams(self, spark, docs_dir):
-        from easyner_spark.operators.textstats import topic_id
-
-        self._assert_stream_eq_batch(
-            spark, docs_dir, topic_id, "m_topic", lambda r: r["doc_id"],
-        )
-
     def test_chunk_docs_streams(self, spark, docs_dir):
         from easyner_spark.operators.sampling import chunk_docs
 

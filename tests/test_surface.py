@@ -33,14 +33,12 @@ UNREACHED_PUBLIC = {
     "operators.nel": 15,
     "operators.ner_dict": 2,
     "operators.ner_model": 9,
-    "operators.ranking": 12,
     "operators.sampling": 21,
-    "operators.scoring": 17,
+    "operators.scoring": 11,
     "operators.search": 4,
     "operators.sketches": 23,
     "operators.splitter": 3,
-    "operators.textstats": 16,
-    "operators.tokenizer": 8,
+    "operators.textstats": 2,
     "operators.triples": 9,
     "operators.webtext": 3,
     "schemas": 7,

@@ -178,37 +178,6 @@ class TestPlanShapes:
         assert "Exchange" not in plan
 
 
-class TestWordRepetition:
-    def _run(self, spark, texts, **kw):
-        from easyner_spark.operators.textstats import word_repetition
-
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        return {r["doc_id"]: r for r in word_repetition(df, **kw).collect()}
-
-    def test_repetitive_doc_fails_gate(self, spark):
-        out = self._run(spark, ["spam ham spam ham spam ham"])
-        r = out[0]
-        # "spam ham" x3 covers 3*7 of 21 word chars -> frac 1.0
-        assert (r["top_gram"], r["top_cnt"]) == ("spam ham", 3)
-        assert r["top_ngram_frac"] == 1.0
-        assert not r["repetition_ok"]
-
-    def test_edge_docs_pass(self, spark):
-        distinct_words = " ".join(f"w{i:02d}x" for i in range(30))
-        out = self._run(spark, ["solo", "", distinct_words])
-        assert (out[0]["top_gram"], out[0]["top_cnt"], out[0]["top_ngram_frac"]) == ("", 0, 0.0)
-        assert out[1]["repetition_ok"]
-        # 30 distinct words: any 2-gram occurs once, 8/120 chars < 0.2
-        assert out[2]["top_cnt"] == 1 and out[2]["repetition_ok"]
-
-    def test_tie_breaks_to_smallest_gram(self, spark):
-        out = self._run(spark, ["b a b a b"])
-        # "b a" x2 and "a b" x2 tie; smallest gram wins
-        assert out[0]["top_gram"] == "a b"
-
-
 class TestAnchorsAndDelta:
     def test_crawl_delta_null_text_contract(self, spark):
         """Null text (failed extraction) coalesces to '': consecutive

@@ -385,49 +385,6 @@ def main() -> None:
                 }
             )
         )
-    if os.environ.get("SKEW_TIER", "all") in ("all", "tfidf"):
-        # hot-TERM document similarity: 30% of docs share ONE mid-df
-        # token ('station', df ~= 0.3N — far below the idf==0 cut, so
-        # it SURVIVES the vector space), making that term's postings
-        # self-join bucket quadratic: (0.3N)^2 / 2 candidate pairs.
-        # Contenders: exact (max_df=None) vs df-capped — the same
-        # decision the gram tier measured for name matching, now on
-        # tfidf_sim_topk's term buckets.
-        from easyner_spark.operators.ranking import tfidf_sim_topk
-
-        n_docs = int(os.environ.get("SKEW_DOCS", "20000"))
-        hot_doc = F.pmod(F.col("id"), F.lit(10)) < 3
-        h = F.md5(F.col("id").cast("string"))
-        docs = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.regexp_replace(F.substring(h, 1, 24), "(....)", "w$1 "),
-                F.when(hot_doc, F.lit(" station")).otherwise(
-                    F.concat(F.lit(" t"), F.substring(h, 25, 6))
-                ),
-            ).alias("text"),
-        ).localCheckpoint(eager=True)
-
-        tfidf_results = timed_all(
-            {
-                "tfidf_exact": lambda: tfidf_sim_topk(docs, k=5, min_df=2),
-                "tfidf_capped": lambda: tfidf_sim_topk(
-                    docs, k=5, min_df=2, max_df=100
-                ),
-            }
-        )
-        print(
-            json.dumps(
-                {
-                    "metric": "skew_stress_tfidf",
-                    "docs": n_docs,
-                    "hot_share": 0.3,
-                    "cpus": cpus,
-                    "repeat": repeat,
-                    "sec": tfidf_results,
-                }
-            )
-        )
     spark.stop()
 
 
