@@ -78,6 +78,11 @@ def test_kg_call_budget(spark, kg_inputs, tmp_path, monkeypatch):
     assert PYTHON_NODE.findall(plans["mentions"]) == ["MapInArrow"], plans["mentions"]
     for name in ("linked", "edges", "nodes"):
         assert PYTHON_NODE.findall(plans[name]) == [], (name, plans[name])
+    # the splitter and the matcher are narrow maps; NEL shuffles once,
+    # for the primary-alias rollup, and broadcasts its result
+    for name, n in (("sentences", 0), ("mentions", 0), ("linked", 1)):
+        assert len(re.findall(r"\bExchange\b", plans[name])) == n, (name, plans[name])
+    assert len(re.findall(r"\bBroadcastExchange\b", plans["linked"])) == 1, plans["linked"]
     # one shuffle to cluster the triples by url, one for the edge rollup
     assert len(re.findall(r"\bExchange hashpartitioning", plans["edges"])) == 2, plans["edges"]
     # the pairs come from generators, not from interpreted lambda functions

@@ -56,7 +56,8 @@ def main() -> None:
 
     from easyner_spark.session import get_spark
 
-    spark = get_spark("oracle-check")
+    # no console progress bar: its `[Stage n:>` lines overwrite the verdicts
+    spark = get_spark("oracle-check", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
