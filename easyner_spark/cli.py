@@ -38,7 +38,9 @@ import argparse
 import json
 import os
 import sys
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -77,12 +79,12 @@ def _load_alias(spark: SparkSession, path: str | None) -> DataFrame:
 
 
 def _materialize(spark: SparkSession, table, df_fn, resume: bool) -> tuple[DataFrame, int]:
-    """Write `df_fn()` as `table`'s next snapshot; return the snapshot
-    read back and its row count. The count rides the write as an
-    Observation, so the stage's plan runs once, and the read-back
-    carries the schema just written, so no job infers it. Only a
-    resumed stage, whose snapshot already exists, is counted by a
-    scan."""
+    """Write `df_fn()` as `table`'s next snapshot, expire all but the
+    last two, and return the snapshot read back and its row count. The
+    count rides the write as an Observation, so the stage's plan runs
+    once, and the read-back carries the schema just written, so no job
+    infers it. Only a resumed stage, whose snapshot already exists, is
+    counted by a scan."""
     snap = table.current_snapshot()
     if resume and snap is not None:
         print(f"[skip] {os.path.basename(table.path)}: snapshot {snap} exists")
@@ -91,56 +93,29 @@ def _materialize(spark: SparkSession, table, df_fn, resume: bool) -> tuple[DataF
     df = df_fn()
     rows = Observation()
     table.overwrite(df.observe(rows, F.count(F.lit(1)).alias("n")))
+    table.expire_snapshots(keep_last=2)
     return table.read(spark, schema=df.schema), rows.get["n"]
 
 
-def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
-    """Run the enabled stages; returns {stage: row_count}.
+class Stage(NamedTuple):
+    """One kg stage: the table `name`, keyed on `keys`, that
+    `build(frames, counts)` makes from the frames of the stages before
+    it (`frames["pages"]` is the prepared input; `counts` holds the
+    batch driver's row counts, empty in streaming). `fold` is how the
+    streaming driver folds a micro-batch into the table: "merge"
+    (keyed last-wins), "sum" (additive on `support`/`doc_count`) or
+    None, a whole-corpus stage that only the batch driver runs."""
 
-    Each stage writes its snapshot before the next one reads it, except
-    the analysis stage (`frequency`, plus the optional chart): it feeds
-    no other stage, so it runs on a worker thread beside the
-    NEL -> triples -> components chain. An error in it is raised once
-    the chain's snapshots are committed."""
-    from easyner_spark.operators.analysis import entity_frequency
-    from easyner_spark.operators.components import connected_components
-    from easyner_spark.operators.ner_dict import dict_ner
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.splitter import split_sentences
-    from easyner_spark.operators.triples import aggregate_edges, extract_triples
-    from easyner_spark.sinks.checkpoint import SnapshotTable
+    name: str
+    keys: list[str]
+    fold: str | None
+    build: Callable[[dict, dict], DataFrame]
 
-    out_dir = cfg.get("output_dir", "/tmp/easyner_out")
-    modules = {
-        "splitter": True, "ner": True, "analysis": True,
-        "nel": True, "triples": True, "components": True,
-        **cfg.get("modules", {}),
-    }
-    resume = cfg.get("resume", True)
-    keys = {
-        "sentences": ["url", "sent_idx"],
-        "mentions": ["url", "sent_idx", "begin", "end", "class"],
-        "frequency": ["mention"],
-        "linked": ["url", "sent_idx", "begin", "end", "class", "entity_id"],
-        "edges": ["subj_id", "pred", "obj_id"],
-        "nodes": ["node"],
-    }
-    tables = {n: SnapshotTable(f"{out_dir}/{n}", k) for n, k in keys.items()}
-    counts: dict[str, int] = {}
-    inp = cfg["input"]
-    if "pubmed_xml_path" in inp:
-        # the reference's primary real-data ingest (S2): baseline
-        # XML[.gz] files -> article table -> canonical pages shape
-        from easyner_spark.sources.pubmed import pubmed_bulk_load, pubmed_pages
 
-        pages = (
-            pubmed_pages(pubmed_bulk_load(spark, inp["pubmed_xml_path"]))
-            .withColumnRenamed("doc_id", "url")
-            .withColumn("lang", F.lit(cfg.get("lang", "en")))
-        )
-    else:
-        pages = spark.read.parquet(inp["pages_path"])
-
+def prepare_pages(pages: DataFrame, cfg: dict) -> DataFrame:
+    """The page prep both kg drivers run ahead of the stages: the
+    `lang` filter, boilerplate extraction and the dedup gate."""
+    modules = cfg.get("modules", {})
     # the reference's load-time language drop, ahead of every stage:
     # Catalyst does not push a filter below the extractor's
     # nondeterministic UDF, and the dedup gate must choose each content
@@ -153,8 +128,7 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
     # modules.extract, or automatic when the crawl has html but no
     # pre-extracted text column. Narrow projection — no snapshot table,
     # it fuses into the splitter stage's scan.
-    want_extract = modules.get("extract", "text" not in pages.columns)
-    if want_extract and "html" in pages.columns:
+    if modules.get("extract", "text" not in pages.columns) and "html" in pages.columns:
         from easyner_spark.operators.boilerplate import extract_text
 
         pages = (
@@ -176,128 +150,157 @@ def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
             .where(~F.col("is_dup"))
             .drop("content_hash", "canonical_id", "is_dup")
         )
+    return pages
 
-    sents = None
-    if modules["splitter"]:
-        sents, counts["sentences"] = _materialize(
-            spark, tables["sentences"],
-            lambda: split_sentences(pages, lang_filter=None), resume,
+
+def kg_stages(spark: SparkSession, cfg: dict) -> list[Stage]:
+    """The kg job's stages in run order, as enabled by `modules`: a
+    stage runs when its module is on and the stage it reads ran. The
+    operators are looked up here, per call, so a wrapper installed on
+    their module attribute is seen."""
+    from easyner_spark.operators.analysis import entity_frequency
+    from easyner_spark.operators.components import connected_components
+    from easyner_spark.operators.ner_dict import dict_ner
+    from easyner_spark.operators.nel import (
+        disambiguate_mentions,
+        fuzzy_canonicalize_mentions,
+        link_entities,
+        primary_alias,
+    )
+    from easyner_spark.operators.splitter import split_sentences
+    from easyner_spark.operators.triples import aggregate_edges, extract_triples
+
+    def linked(f: dict, _n: dict) -> DataFrame:
+        raw_alias = _load_alias(spark, cfg.get("alias_path"))
+        if cfg.get("disambiguate_nel"):
+            # context disambiguation: when one surface maps to SEVERAL
+            # alias ids, pick per mention the candidate whose corpus
+            # profile (built from unambiguous mentions only) best
+            # overlaps the mention's sentence — instead of the exact
+            # path's deterministic primary-alias collapse. Unambiguous
+            # surfaces pass through unchanged; surfaces absent from
+            # the alias table drop (keep_unmatched=False semantics).
+            key = ["url", "sent_idx", "begin_tok", "end_tok", "mention_lc"]
+            return (
+                disambiguate_mentions(f["mentions"], f["sentences"], raw_alias)
+                .drop("n_cands", "score")
+                # reattach the char spans downstream triple extraction
+                # keys on (the disambiguator works in token space)
+                .join(f["mentions"].select(*key, "begin", "end"), key)
+            )
+        if cfg.get("fuzzy_nel"):
+            # second-pass canonicalization: surface forms the exact
+            # alias join misses remap to the char-gram-closest alias
+            # entity (>= fuzzy_threshold), so morphological variants
+            # stop fragmenting KG nodes. NOTE the structural contrast
+            # with the exact path: exact drops unmatched mentions
+            # (keep_unmatched=False); fuzzy keeps EVERY mention —
+            # below-threshold ones enter the graph under stable
+            # surface:<mention> ids (documented in README)
+            thr = float(cfg.get("fuzzy_threshold", 0.6))
+            return fuzzy_canonicalize_mentions(f["mentions"], raw_alias, threshold=thr)
+        return link_entities(f["mentions"], primary_alias(raw_alias), keep_unmatched=False)
+
+    modules = {
+        "splitter": True, "ner": True, "analysis": True,
+        "nel": True, "triples": True, "components": True,
+        **cfg.get("modules", {}),
+    }
+    chain = [  # (module, the stage it reads, stage)
+        ("splitter", "pages", Stage(
+            "sentences", ["url", "sent_idx"], "merge",
+            lambda f, _n: split_sentences(f["pages"], lang_filter=None))),
+        ("ner", "sentences", Stage(
+            "mentions", ["url", "sent_idx", "begin", "end", "class"], "merge",
+            lambda f, _n: dict_ner(f["sentences"], _load_terms(cfg.get("dictionary_path"))))),
+        ("analysis", "mentions", Stage(
+            "frequency", ["mention"], None,
+            lambda f, _n: entity_frequency(f["mentions"], mention_col="mention_lc"))),
+        ("nel", "mentions", Stage(
+            "linked", ["url", "sent_idx", "begin", "end", "class", "entity_id"], "merge", linked)),
+        ("triples", "linked", Stage(
+            "edges", ["subj_id", "pred", "obj_id"], "sum",
+            lambda f, _n: aggregate_edges(extract_triples(f["linked"])))),
+        ("components", "edges", Stage(
+            "nodes", ["node"], None,
+            lambda f, n: connected_components(
+                f["edges"], src="subj_id", dst="obj_id", n_edges=n["edges"]))),
+    ]
+    ran, stages = {"pages"}, []
+    for module, reads, stage in chain:
+        if modules[module] and reads in ran:
+            ran.add(stage.name)
+            stages.append(stage)
+    return stages
+
+
+def run_pipeline(spark: SparkSession, cfg: dict) -> dict[str, int]:
+    """Run the enabled :func:`kg_stages`; returns {stage: row_count}.
+
+    Each stage writes its snapshot before the next one reads it, except
+    the analysis stage (`frequency`, plus the optional chart): it feeds
+    no other stage, so it runs on a worker thread beside the
+    NEL -> triples -> components chain. An error in it is raised once
+    the chain's snapshots are committed."""
+    from easyner_spark.sinks.checkpoint import SnapshotTable
+    from easyner_spark.streaming.pipeline import fold_standing_queries
+
+    out_dir = cfg.get("output_dir", "/tmp/easyner_out")
+    resume = cfg.get("resume", True)
+    inp = cfg["input"]
+    if "pubmed_xml_path" in inp:
+        # the reference's primary real-data ingest (S2): baseline
+        # XML[.gz] files -> article table -> canonical pages shape
+        from easyner_spark.sources.pubmed import pubmed_bulk_load, pubmed_pages
+
+        pages = (
+            pubmed_pages(pubmed_bulk_load(spark, inp["pubmed_xml_path"]))
+            .withColumnRenamed("doc_id", "url")
+            .withColumn("lang", F.lit(cfg.get("lang", "en")))
+        )
+    else:
+        pages = spark.read.parquet(inp["pages_path"])
+    frames = {"pages": prepare_pages(pages, cfg)}
+    counts: dict[str, int] = {}
+
+    def run(stage: Stage) -> None:
+        table = SnapshotTable(f"{out_dir}/{stage.name}", stage.keys)
+        frames[stage.name], counts[stage.name] = _materialize(
+            spark, table, lambda: stage.build(frames, counts), resume
         )
 
-    ments = None
-    if modules["ner"] and sents is not None:
-        terms = _load_terms(cfg.get("dictionary_path"))
-        ments, counts["mentions"] = _materialize(
-            spark, tables["mentions"], lambda: dict_ner(sents, terms), resume
-        )
-
-    def analysis() -> int:
-        freq, n = _materialize(
-            spark, tables["frequency"],
-            lambda: entity_frequency(ments, mention_col="mention_lc"), resume,
-        )
-        if modules.get("chart"):
+    def analysis(stage: Stage) -> None:
+        run(stage)
+        if cfg.get("modules", {}).get("chart"):
             from easyner_spark.sinks.chart import write_barchart_svg
 
             write_barchart_svg(
-                freq, f"{out_dir}/top_entities.svg", n=cfg.get("chart_top_n", 50)
+                frames["frequency"], f"{out_dir}/top_entities.svg",
+                n=cfg.get("chart_top_n", 50),
             )
-        return n
 
-    # the analysis stage feeds no other stage, so it runs on a worker
-    # thread (which inherits the caller's job group) beside the
-    # NEL -> triples -> components chain; leaving the `with` block joins
-    # it, and `result()` re-raises its error once the chain is committed
+    # the worker thread inherits the caller's job group; leaving the
+    # `with` block joins it, and `result()` re-raises its error once
+    # the chain is committed
     freq_job = None
     with ThreadPoolExecutor(1) as pool:
-        if modules["analysis"] and ments is not None:
-            freq_job = pool.submit(inheritable_thread_target(spark)(analysis))
-
-        linked = None
-        if modules["nel"] and ments is not None:
-            raw_alias = _load_alias(spark, cfg.get("alias_path"))
-            alias = primary_alias(raw_alias)
-            if cfg.get("disambiguate_nel") and sents is not None:
-                # context disambiguation: when one surface maps to SEVERAL
-                # alias ids, pick per mention the candidate whose corpus
-                # profile (built from unambiguous mentions only) best
-                # overlaps the mention's sentence — instead of the exact
-                # path's deterministic primary-alias collapse. Unambiguous
-                # surfaces pass through unchanged; surfaces absent from
-                # the alias table drop (keep_unmatched=False semantics).
-                from easyner_spark.operators.nel import disambiguate_mentions
-
-                key = ["url", "sent_idx", "begin_tok", "end_tok", "mention_lc"]
-                linked, counts["linked"] = _materialize(
-                    spark, tables["linked"],
-                    lambda: disambiguate_mentions(ments, sents, raw_alias)
-                    .drop("n_cands", "score")
-                    # reattach the char spans downstream triple extraction
-                    # keys on (the disambiguator works in token space)
-                    .join(ments.select(*key, "begin", "end"), key),
-                    resume,
-                )
-            elif cfg.get("fuzzy_nel"):
-                # second-pass canonicalization: surface forms the exact
-                # alias join misses remap to the char-gram-closest alias
-                # entity (>= fuzzy_threshold), so morphological variants
-                # stop fragmenting KG nodes. NOTE the structural contrast
-                # with the exact path: exact drops unmatched mentions
-                # (keep_unmatched=False); fuzzy keeps EVERY mention —
-                # below-threshold ones enter the graph under stable
-                # surface:<mention> ids (documented in README)
-                from easyner_spark.operators.nel import fuzzy_canonicalize_mentions
-
-                thr = float(cfg.get("fuzzy_threshold", 0.6))
-                linked, counts["linked"] = _materialize(
-                    spark, tables["linked"],
-                    lambda: fuzzy_canonicalize_mentions(ments, raw_alias, threshold=thr),
-                    resume,
-                )
+        for stage in kg_stages(spark, cfg):
+            if stage.name == "frequency":
+                freq_job = pool.submit(inheritable_thread_target(spark)(analysis), stage)
             else:
-                linked, counts["linked"] = _materialize(
-                    spark, tables["linked"],
-                    lambda: link_entities(ments, alias, keep_unmatched=False), resume,
-                )
-
-        edges = None
-        if modules["triples"] and linked is not None:
-            edges, counts["edges"] = _materialize(
-                spark, tables["edges"],
-                lambda: aggregate_edges(extract_triples(linked)), resume,
-            )
-
-        if modules["components"] and edges is not None:
-            _, counts["nodes"] = _materialize(
-                spark, tables["nodes"],
-                lambda: connected_components(
-                    edges, src="subj_id", dst="obj_id", n_edges=counts["edges"]
-                ),
-                resume,
-            )
+                run(stage)
 
         # standing queries: fold each registered pattern set against the
         # fresh edge snapshot (epoch = the snapshot id, so alerts line up
         # with the resume ledger); idempotent on re-runs by construction
-        if cfg.get("standing_queries") and edges is not None:
-            from easyner_spark.operators.triples import _pattern_vars
-            from easyner_spark.streaming.pipeline import fold_standing_query
-
-            for sq in cfg["standing_queries"]:
-                pats = [tuple(p) for p in sq["patterns"]]
-                mt = SnapshotTable(
-                    f"{out_dir}/standing_{sq['name']}", _pattern_vars(pats)
-                )
-                counts[f"standing_{sq['name']}"] = fold_standing_query(
-                    spark,
-                    tables["edges"],
-                    mt,
-                    pats,
-                    epoch=tables["edges"].current_snapshot() or 0,
-                )
+        if "edges" in frames:
+            edges = SnapshotTable(f"{out_dir}/edges", [])
+            counts.update(fold_standing_queries(
+                spark, cfg, edges, epoch=edges.current_snapshot() or 0
+            ))
 
     if freq_job is not None:
-        counts["frequency"] = freq_job.result()
+        freq_job.result()
     return counts
 
 

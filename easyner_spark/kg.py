@@ -1,8 +1,9 @@
 """KnowledgeGraph — the consumer facade over the materialized KG.
 
-The pipeline (cli.run_pipeline / streaming.incremental_kg) materializes
-edge and node SnapshotTables; this class is the one-import surface a
-downstream user drives them with:
+The kg job (cli.kg_stages, walked in batch by cli.run_pipeline and per
+micro-batch by streaming.incremental_kg) materializes the edge
+SnapshotTable, and the batch driver the node table too; this class is
+the one-import surface a downstream user drives them with:
 
     from easyner_spark.kg import KnowledgeGraph
 

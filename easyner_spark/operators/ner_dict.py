@@ -104,8 +104,10 @@ def dict_ner(
     sentences: DataFrame,
     terms: list[tuple[str, str | None]],
     text_col: str = "sentence",
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """sentences (url, sent_idx, sentence) -> mentions table.
+    """sentences (url, sent_idx, sentence) -> mentions table, plus the
+    sentence's `keep_cols` on each of its mentions.
 
     The term list is broadcast, and each task builds the trie from it
     once, on entry to its partition iterator: 60-120 ms per task on a
@@ -119,7 +121,7 @@ def dict_ner(
     matched against the trie, and a hit's span is read off the cased
     tokens' offsets. `mention` is that slice of the sentence and
     `mention_lc` its `lower()`. The output columns are built as Arrow
-    arrays (`url`/`sent_idx` by `take` on the input's).
+    arrays (`url`/`sent_idx` and `keep_cols` by `take` on the input's).
     """
     spark = sentences.sparkSession
     bc = spark.sparkContext.broadcast(terms)
@@ -128,7 +130,7 @@ def dict_ner(
         trie = build_trie(bc.value)
         cols = [
             "url", "sent_idx", "mention", "mention_lc",
-            "begin", "end", "begin_tok", "end_tok", "class",
+            "begin", "end", "begin_tok", "end_tok", "class", *keep_cols,
         ]
         for batch in batches:
             rows: list[int] = []
@@ -165,12 +167,14 @@ def dict_ner(
                     pa.array(begin_tok, pa.int32()),
                     pa.array(end_tok, pa.int32()),
                     pa.array(cls_out, pa.string()),
+                    *[batch.column(3 + i).take(idx) for i in range(len(keep_cols))],
                 ],
                 names=cols,
             )
 
-    pruned = sentences.select("url", "sent_idx", text_col)
-    return pruned.mapInArrow(_match, MENTION_SCHEMA)
+    pruned = sentences.select("url", "sent_idx", text_col, *keep_cols)
+    kept = "".join(f", {c} {pruned.schema[c].dataType.simpleString()}" for c in keep_cols)
+    return pruned.mapInArrow(_match, MENTION_SCHEMA + kept)
 
 
 def ner_examples(

@@ -15,17 +15,6 @@ from __future__ import annotations
 
 import pyspark.sql.types as T
 
-# Primary input — BASELINE.json input_hint shape (Common-Crawl-style).
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
 # Exploded sentence table (reference splitter output, one row per sentence).
 SENTENCES = T.StructType(
     [

@@ -5,15 +5,18 @@ The reference has no streaming surface — its incremental story is
 Here the same pipeline becomes a Structured Streaming job over the
 pages table's landing directory, with two consumption modes:
 
-  1. `incremental_kg` — foreachBatch micro-batching into the engine's
-     SnapshotTable checkpoint layer: sentences/mentions/linked merge
-     last-wins on their keys; edges fold ADDITIVELY
+  1. `incremental_kg` — the kg job's second driver: foreachBatch walks
+     the SAME stage list as `cli.run_pipeline` (`cli.kg_stages`, after
+     the same `cli.prepare_pages`) and folds each stage into its
+     SnapshotTable as the stage declares: sentences/mentions/linked
+     merge last-wins on their keys; edges fold ADDITIVELY
      (`SnapshotTable.merge_additive`), so each micro-batch costs one
      shuffle sized to the delta + one sized to the (small) edge
      aggregate, never a reprocess of history. A processed-batch ledger
      makes replayed epochs no-ops — foreachBatch re-delivers the last
      uncommitted batch after a crash, and exactly-once then comes from
-     idempotency, the standard Spark recipe.
+     idempotency, the standard Spark recipe. The whole-corpus stages
+     (`frequency`, `nodes`) are batch-only.
   2. `windowed_mention_rates` — a native streaming windowed
      aggregation with a watermark on `warc_ts` (late crawl records
      are folded in up to the watermark, then dropped), demonstrating
@@ -22,7 +25,8 @@ pages table's landing directory, with two consumption modes:
 Both reuse the BATCH operators verbatim — split_sentences / dict_ner /
 link_entities / extract_triples are stateless row transforms, so the
 same code serves `spark.read` and `spark.readStream` (the DataFrame
-abstraction is the unification point; no operator forks).
+abstraction is the unification point). No operator forks, and neither
+does the kg driver: one stage list, two walks.
 
 Scale notes: file-source listing is driver-side — at real crawl scale
 set `maxFilesPerTrigger` to bound micro-batch size, and partition the
@@ -39,17 +43,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from easyner_spark.schemas import PAGES
-
 
 def stream_pages(
     spark: SparkSession,
     pages_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """readStream over the crawl landing directory (parquet files of
-    PAGES shape). Schema is pinned — no streaming inference."""
-    reader = spark.readStream.schema(PAGES)
+    """readStream over the crawl landing directory, with the schema its
+    parquet files carry, as a batch read of it has: an html-only crawl
+    streams without a `text` column, which the kg page prep extracts."""
+    reader = spark.readStream.schema(spark.read.parquet(pages_dir).schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(pages_dir)
@@ -106,44 +109,17 @@ def windowed_mention_rates(
     watermark are finalized and their state dropped. Append-mode safe.
 
     Streaming-safe shape: NO self-join back to the sentence row (that
-    would be a stream-stream join needing two watermarks) — instead the
-    timestamp stays ON the row and a narrow Arrow UDF emits the matched
-    classes per sentence, exploded in place. One stateful operator
-    total: the windowed aggregation.
+    would be a stream-stream join needing two watermarks) — instead
+    `dict_ner` carries the timestamp through its Arrow map onto each
+    mention row. One stateful operator total: the windowed aggregation.
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from easyner_spark.functions.text import TOKEN_RE
-    from easyner_spark.operators.ner_dict import build_trie, lower_tokens, match_tokens
+    from easyner_spark.operators.ner_dict import dict_ner
     from easyner_spark.operators.splitter import split_sentences
 
-    bc = pages_stream.sparkSession.sparkContext.broadcast(terms)
-
-    # no type annotations: postponed-annotations mode stringizes them,
-    # which pyspark's pandas_udf signature inference can't resolve;
-    # the explicit returnType on pandas_udf() below is authoritative
-    def _classes(texts):
-        trie = build_trie(bc.value)
-
-        def one(text: str) -> list[str]:
-            if not text:
-                return []
-            out = []
-            toks = lower_tokens(TOKEN_RE.findall(text))
-            for _bt, _et, classes in match_tokens(trie, toks):
-                out.extend(classes)
-            return out
-
-        return texts.map(one)
-
-    classes_udf = pandas_udf(_classes, "array<string>")
     sents = split_sentences(pages_stream, keep_cols=("warc_ts",))
-    with_ts = sents.select(
-        "warc_ts", F.explode(classes_udf(F.col("sentence"))).alias("class")
-    )
     return (
-        with_ts.withWatermark("warc_ts", watermark)
+        dict_ner(sents, terms, keep_cols=("warc_ts",))
+        .withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "class")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
         .select(
@@ -157,44 +133,36 @@ def windowed_mention_rates(
 
 def incremental_kg(
     spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    terms: list[tuple[str, str | None]],
-    alias_df: DataFrame,
+    cfg: dict,
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    standing_patterns: list | None = None,
 ):
-    """Continuous pages -> KG job. Returns the started StreamingQuery;
-    with available_now the caller `awaitTermination()`s to drain the
-    backlog and stop (the incremental batch-refresh pattern).
+    """Continuous pages -> KG job over the landing directory
+    `cfg["input"]["pages_path"]`, configured like `cli.run_pipeline`.
+    Returns the started StreamingQuery; with available_now the caller
+    `awaitTermination()`s to drain the backlog and stop (the
+    incremental batch-refresh pattern).
 
-    `standing_patterns` (optional) registers a standing conjunctive
-    query: after each epoch's edge fold, fold_standing_query runs the
-    patterns over the cumulative edge snapshot and appends newly-true
-    bindings to `<out_dir>/matches` with `first_epoch` = the epoch id
-    — the continuous-alert table a monitor tails."""
-    from easyner_spark.operators.ner_dict import dict_ner
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.splitter import split_sentences
-    from easyner_spark.operators.triples import aggregate_edges, extract_triples
+    Each epoch walks `cli.kg_stages` and folds every stage that can be
+    folded per micro-batch into its table under `output_dir`; then each
+    `standing_queries` entry folds against the cumulative edges, its
+    new bindings stamped `first_epoch` = the epoch id — the
+    continuous-alert table `standing_<name>` a monitor tails. A config
+    whose result depends on the whole corpus (`modules.dedup`,
+    `disambiguate_nel`) raises ValueError."""
+    from easyner_spark.cli import kg_stages, prepare_pages
     from easyner_spark.sinks.checkpoint import SnapshotTable
 
-    alias = primary_alias(alias_df)
-    tables = {
-        "sentences": SnapshotTable(f"{out_dir}/sentences", ["url", "sent_idx"]),
-        "mentions": SnapshotTable(
-            f"{out_dir}/mentions", ["url", "sent_idx", "begin", "end", "class"]
-        ),
-        "edges": SnapshotTable(f"{out_dir}/edges", ["subj_id", "pred", "obj_id"]),
-    }
-    if standing_patterns:
-        from easyner_spark.operators.triples import _pattern_vars
-
-        tables["matches"] = SnapshotTable(
-            f"{out_dir}/matches", _pattern_vars(standing_patterns)
-        )
+    for key, on in (
+        ("modules.dedup", cfg.get("modules", {}).get("dedup")),
+        ("disambiguate_nel", cfg.get("disambiguate_nel")),
+    ):
+        if on:
+            raise ValueError(f"{key}: depends on the whole corpus, not foldable per micro-batch")
+    out_dir = cfg.get("output_dir", "/tmp/easyner_out")
+    stages = [s for s in kg_stages(spark, cfg) if s.fold is not None]
+    tables = {s.name: SnapshotTable(f"{out_dir}/{s.name}", s.keys) for s in stages}
     ledger_dir = f"{out_dir}/_epochs"
     os.makedirs(ledger_dir, exist_ok=True)
 
@@ -202,47 +170,36 @@ def incremental_kg(
         marker = os.path.join(ledger_dir, f"epoch-{batch_id}")
         if os.path.exists(marker):  # replayed epoch after restart: no-op
             return
-        sents = split_sentences(batch_df)
-        # one micro-batch feeds three sinks — cache the shared prefix
-        # so NER runs once, not three times
-        sents.persist()
+        frames = {"pages": prepare_pages(batch_df, cfg)}
         try:
-            mentions = dict_ner(sents, terms)
-            mentions.persist()
-            try:
-                linked = link_entities(mentions, alias, keep_unmatched=False)
-                delta_edges = aggregate_edges(extract_triples(linked))
-                tables["sentences"].merge(sents)
-                tables["mentions"].merge(mentions)
-                # the ONLY non-idempotent merge: the epoch id is
-                # committed atomically with the edges snapshot, so a
-                # crash between this commit and the marker write
-                # cannot double-count on replay (the last-wins merges
-                # above are replay-safe by construction) — ADVICE r1
-                tables["edges"].merge_additive(
-                    delta_edges,
-                    sum_cols=["support", "doc_count"],
-                    epoch=batch_id,
-                )
-                if standing_patterns:
-                    # replay-safe: re-folding an epoch rewrites the
-                    # identical binding rows (keyed last-wins)
-                    fold_standing_query(
-                        spark,
-                        tables["edges"],
-                        tables["matches"],
-                        standing_patterns,
-                        epoch=batch_id,
-                    )
-            finally:
-                mentions.unpersist()
+            for stage in stages:
+                # each stage feeds its sink and the stages after it:
+                # cache it so it is computed once
+                df = frames[stage.name] = stage.build(frames, {}).persist()
+                table = tables[stage.name]
+                if stage.fold == "sum":
+                    # the ONLY non-idempotent merge: the epoch id is
+                    # committed atomically with the edges snapshot, so a
+                    # crash between this commit and the marker write
+                    # cannot double-count on replay (the last-wins merges
+                    # are replay-safe by construction) — ADVICE r1
+                    table.merge_additive(df, sum_cols=["support", "doc_count"], epoch=batch_id)
+                else:
+                    table.merge(df)
+                table.expire_snapshots(keep_last=2)
+            if "edges" in tables:
+                # replay-safe: re-folding an epoch rewrites the identical
+                # binding rows (keyed last-wins)
+                fold_standing_queries(spark, cfg, tables["edges"], epoch=batch_id)
         finally:
-            sents.unpersist()
+            for name, df in frames.items():
+                if name != "pages":
+                    df.unpersist()
         with open(marker, "w") as f:  # commit the epoch last
             f.write("done")
 
     writer = (
-        stream_pages(spark, pages_dir, max_files_per_trigger)
+        stream_pages(spark, cfg["input"]["pages_path"], max_files_per_trigger)
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -563,3 +520,24 @@ def fold_standing_query(
     if n:
         matches_table.merge(new)
     return n
+
+
+def fold_standing_queries(
+    spark: SparkSession, cfg: dict, edges_table, epoch: int
+) -> dict[str, int]:
+    """Fold each `cfg["standing_queries"]` entry ({"name", "patterns"})
+    into its table `<output_dir>/standing_<name>` with
+    :func:`fold_standing_query`; returns {standing_<name>: new
+    bindings}. Both kg drivers call it after their edge commit."""
+    from easyner_spark.operators.triples import _pattern_vars
+    from easyner_spark.sinks.checkpoint import SnapshotTable
+
+    out_dir = cfg.get("output_dir", "/tmp/easyner_out")
+    counts = {}
+    for sq in cfg.get("standing_queries", []):
+        pats = [tuple(p) for p in sq["patterns"]]
+        name = f"standing_{sq['name']}"
+        table = SnapshotTable(f"{out_dir}/{name}", _pattern_vars(pats))
+        counts[name] = fold_standing_query(spark, edges_table, table, pats, epoch=epoch)
+        table.expire_snapshots(keep_last=2)
+    return counts

@@ -1,8 +1,21 @@
 import pandas as pd
+import pyspark.sql.types as T
 import pytest
 
 from easyner_spark import get_spark
 from easyner_spark.fixtures import generate
+
+# the crawl pages shape (BASELINE.json input_hint, Common-Crawl-style);
+# the pipeline reads whatever schema its input carries
+PAGES = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), True),
+        T.StructField("html", T.BinaryType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+    ]
+)
 
 
 @pytest.fixture(scope="session")
@@ -19,8 +32,6 @@ def fx():
 
 @pytest.fixture(scope="session")
 def pages_df(spark, fx):
-    from easyner_spark.schemas import PAGES
-
     return spark.createDataFrame(fx.pages, schema=PAGES)
 
 

@@ -279,6 +279,21 @@ class TestCli:
         for name, n in counts.items():
             assert SnapshotTable(f"{out}/{name}", []).read(spark).count() == n > 0, name
 
+    def test_resume_false_runs_keep_two_snapshots(self, spark, pages_df, tmp_path):
+        """Each stage commit expires all but its table's last two
+        snapshots: three fresh runs into one output_dir leave two."""
+        from easyner_spark.cli import run_pipeline
+        from easyner_spark.sinks.checkpoint import SnapshotTable
+
+        pages_path = str(tmp_path / "pages.parquet")
+        pages_df.write.parquet(pages_path)
+        out = str(tmp_path / "out")
+        cfg = {"input": {"pages_path": pages_path}, "output_dir": out, "resume": False}
+        for _ in range(3):
+            counts = run_pipeline(spark, cfg)
+        for name in counts:
+            assert SnapshotTable(f"{out}/{name}", []).history() == [2, 3], name
+
     def test_killed_stage_resumes_to_identical_tables(self, spark, pages_df, tmp_path, monkeypatch):
         """Kill the `linked` stage before its data is written, and
         again after the write but before the pointer commit; a resumed

@@ -1,92 +1,114 @@
-"""Structured Streaming front-end: incremental KG equivalence with the
-batch pipeline, epoch-replay idempotency, and the watermark + windowed
+"""Structured Streaming front-end: the streaming kg driver against the
+batch one, epoch-replay idempotency, and the watermark + windowed
 aggregation path."""
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from easyner_spark.fixtures import ALIAS, TERMS
-from easyner_spark.schemas import PAGES
+from easyner_spark.fixtures import TERMS
 from easyner_spark.streaming import incremental_kg, windowed_mention_rates, stream_pages
 
-
-def _batch_edges(spark, pages_df):
-    from easyner_spark.operators.ner_dict import dict_ner
-    from easyner_spark.operators.nel import link_entities, primary_alias
-    from easyner_spark.operators.splitter import split_sentences
-    from easyner_spark.operators.triples import aggregate_edges, extract_triples
-
-    alias = primary_alias(spark.createDataFrame(ALIAS, "term string, ID string"))
-    linked = link_entities(
-        dict_ner(split_sentences(pages_df), TERMS), alias, keep_unmatched=False
-    )
-    return aggregate_edges(extract_triples(linked))
-
-
-def _edges_pdf(df):
-    return (
-        df.select("subj_id", "pred", "obj_id", "support", "doc_count")
-        .toPandas()
-        .sort_values(["subj_id", "pred", "obj_id"])
-        .reset_index(drop=True)
-    )
+# the tables both kg drivers write; whole-corpus stages are batch-only
+BOTH_DRIVERS = ("sentences", "mentions", "linked", "edges")
 
 
 @pytest.fixture(scope="module")
-def landing(tmp_path_factory, spark, fx):
-    """Two arrival waves of fixture pages written as separate files."""
+def landing(tmp_path_factory, spark, fx, pages_df):
+    """The fixture pages landed as two files, one per arrival wave."""
     root = tmp_path_factory.mktemp("stream")
     pages_dir = str(root / "pages")
-    os.makedirs(pages_dir)
-    pdf = fx.pages
-    half = len(pdf) // 2
-    df1 = spark.createDataFrame(pdf.iloc[:half], schema=PAGES)
-    df2 = spark.createDataFrame(pdf.iloc[half:], schema=PAGES)
-    return {"root": root, "pages_dir": pages_dir, "waves": (df1, df2)}
+    half = len(fx.pages) // 2
+    for part in (fx.pages.iloc[:half], fx.pages.iloc[half:]):
+        spark.createDataFrame(part, schema=pages_df.schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(pages_dir)
+    return {"root": root, "pages_dir": pages_dir}
 
 
 def _drain(q):
     q.awaitTermination(300)
 
 
+def _table(out_dir, name):
+    from easyner_spark.sinks.checkpoint import SnapshotTable
+
+    return SnapshotTable(f"{out_dir}/{name}", [])
+
+
+def _rows(spark, out_dir, name):
+    df = _table(out_dir, name).read(spark)
+    cols = sorted(df.columns)
+    return df.select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
+
+
+def _waves(spark, fx, pages_df, n, drop=()):
+    """The fixture pages cut into `n` arrival waves."""
+    step = -(-len(fx.pages) // n)
+    return [
+        spark.createDataFrame(fx.pages.iloc[i:i + step], schema=pages_df.schema).drop(*drop)
+        for i in range(0, len(fx.pages), step)
+    ]
+
+
+def _assert_drivers_agree(spark, tmp_path, waves, cfg):
+    """Land `waves` one file at a time, draining incremental_kg after
+    each, then run run_pipeline on the same directory and config: every
+    table both drivers write holds the same rows, and the streaming
+    driver kept at most two snapshots of each. Returns the streaming
+    driver's config."""
+    from easyner_spark.cli import run_pipeline
+
+    pages = str(tmp_path / "pages")
+    stream = {**cfg, "input": {"pages_path": pages}, "output_dir": str(tmp_path / "stream")}
+    for wave in waves:
+        wave.coalesce(1).write.mode("append").parquet(pages)
+        _drain(incremental_kg(spark, stream, str(tmp_path / "cp")))
+    batch = {**stream, "output_dir": str(tmp_path / "batch"), "resume": False}
+    counts = run_pipeline(spark, batch)
+    for name in BOTH_DRIVERS:
+        got = _rows(spark, stream["output_dir"], name)
+        assert len(got) == counts[name], name
+        pd.testing.assert_frame_equal(got, _rows(spark, batch["output_dir"], name), obj=name)
+        assert len(_table(stream["output_dir"], name).history()) <= 2, name
+    return stream, counts
+
+
 class TestIncrementalKG:
-    def test_two_wave_equivalence_and_replay(self, spark, landing, pages_df):
-        pages_dir = landing["pages_dir"]
-        out_dir = str(landing["root"] / "out")
-        cp = str(landing["root"] / "cp")
-        df1, df2 = landing["waves"]
-        alias_df = spark.createDataFrame(ALIAS, "term string, ID string")
+    def test_two_wave_equivalence_and_replay(self, spark, fx, pages_df, tmp_path):
+        """html-only pages in two waves: the streaming driver extracts
+        the text like the batch one, and a drain with no new files
+        changes no snapshot."""
+        stream, counts = _assert_drivers_agree(
+            spark, tmp_path, _waves(spark, fx, pages_df, 2, drop=("text",)), {}
+        )
+        assert counts["edges"] > 0
+        edges = _table(stream["output_dir"], "edges")
+        snap_before = edges.current_snapshot()
+        _drain(incremental_kg(spark, stream, str(tmp_path / "cp")))
+        assert edges.current_snapshot() == snap_before
 
-        # wave 1 arrives; drain the backlog
-        df1.coalesce(1).write.mode("append").parquet(pages_dir)
-        _drain(incremental_kg(spark, pages_dir, out_dir, TERMS, alias_df, cp))
+    def test_configured_lang(self, spark, fx, pages_df, tmp_path):
+        """The streaming driver keeps the configured language's pages
+        only, like the batch one (three waves)."""
+        _, counts = _assert_drivers_agree(spark, tmp_path, _waves(spark, fx, pages_df, 3), {"lang": "de"})
+        assert counts["edges"] > 0
 
-        from easyner_spark.sinks.checkpoint import SnapshotTable
-
-        edges_t = SnapshotTable(f"{out_dir}/edges", ["subj_id", "pred", "obj_id"])
-        got1 = _edges_pdf(edges_t.read(spark))
-        want1 = _edges_pdf(_batch_edges(spark, df1))
-        assert got1.equals(want1), "wave-1 edges != batch edges on wave 1"
-
-        # wave 2 arrives; same checkpoint resumes and folds the delta
-        df2.coalesce(1).write.mode("append").parquet(pages_dir)
-        _drain(incremental_kg(spark, pages_dir, out_dir, TERMS, alias_df, cp))
-        got_all = _edges_pdf(edges_t.read(spark))
-        want_all = _edges_pdf(_batch_edges(spark, pages_df))
-        assert got_all.equals(want_all), "incremental edges != batch edges on full input"
-
-        # drain again with no new files: snapshots unchanged (idempotent)
-        snap_before = edges_t.current_snapshot()
-        _drain(incremental_kg(spark, pages_dir, out_dir, TERMS, alias_df, cp))
-        assert edges_t.current_snapshot() == snap_before
-
-        # sentences table matches batch splitter output
-        sents_t = SnapshotTable(f"{out_dir}/sentences", ["url", "sent_idx"])
-        from easyner_spark.operators.splitter import split_sentences
-
-        assert sents_t.read(spark).count() == split_sentences(pages_df).count()
+    @pytest.mark.parametrize(
+        "key, cfg",
+        [("modules.dedup", {"modules": {"dedup": True}}),
+         ("disambiguate_nel", {"disambiguate_nel": True})],
+    )
+    def test_whole_corpus_config_raises(self, spark, tmp_path, key, cfg):
+        with pytest.raises(ValueError, match=key):
+            incremental_kg(
+                spark,
+                {**cfg, "input": {"pages_path": str(tmp_path / "pages")},
+                 "output_dir": str(tmp_path / "out")},
+                str(tmp_path / "cp"),
+            )
 
 
 class TestWindowedRates:
@@ -504,44 +526,30 @@ def test_standing_query_fold_matches_batch_twin(spark, tmp_path):
     assert matches_t.read(spark).count() == 2
 
 
-def test_incremental_kg_standing_patterns(spark, fx, tmp_path):
-    """incremental_kg with a registered standing query: the matches
-    table equals a fresh batch match over the final edges, and every
+def test_incremental_kg_standing_patterns(spark, pages_df, tmp_path):
+    """incremental_kg with a configured standing query: its table
+    equals a fresh batch match over the final edges, and every
     first_epoch is a real folded epoch id."""
-    import os as _os
-
     from easyner_spark.operators.triples import match_patterns
-    from easyner_spark.sinks.checkpoint import SnapshotTable
-    from easyner_spark.streaming.pipeline import incremental_kg
 
     pages_dir = str(tmp_path / "pages")
-    _os.makedirs(pages_dir)
-    pdf = fx.pages
-    spark.createDataFrame(pdf, schema=PAGES).coalesce(1).write.mode(
-        "append"
-    ).parquet(pages_dir)
-    alias_df = spark.createDataFrame(ALIAS, "term string, ID string")
-    pats = [("?x", "co_occurs_with", "?y")]
+    pages_df.coalesce(1).write.parquet(pages_dir)
+    pats = [["?x", "co_occurs_with", "?y"]]
     out_dir = str(tmp_path / "out")
-    _drain(
-        incremental_kg(
-            spark, pages_dir, out_dir, TERMS, alias_df,
-            str(tmp_path / "cp"), standing_patterns=pats,
-        )
-    )
-    edges_t = SnapshotTable(f"{out_dir}/edges", ["subj_id", "pred", "obj_id"])
-    matches_t = SnapshotTable(f"{out_dir}/matches", ["x", "y"])
-    got = sorted(
-        (r.x, r.y) for r in matches_t.read(spark).collect()
-    )
+    cfg = {
+        "input": {"pages_path": pages_dir},
+        "output_dir": out_dir,
+        "standing_queries": [{"name": "cooc", "patterns": pats}],
+    }
+    _drain(incremental_kg(spark, cfg, str(tmp_path / "cp")))
+    matches = _table(out_dir, "standing_cooc").read(spark).collect()
+    got = sorted((r.x, r.y) for r in matches)
     want = sorted(
         tuple(r)
         for r in match_patterns(
-            edges_t.read(spark), pats, distinct=True
+            _table(out_dir, "edges").read(spark), [tuple(p) for p in pats], distinct=True
         ).collect()
     )
     assert got == want and got
-    epochs = {
-        r.first_epoch for r in matches_t.read(spark).collect()
-    }
+    epochs = {r.first_epoch for r in matches}
     assert epochs and all(e >= 0 for e in epochs)
