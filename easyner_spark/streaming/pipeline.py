@@ -51,7 +51,9 @@ def stream_pages(
 ) -> DataFrame:
     """readStream over the crawl landing directory, with the schema its
     parquet files carry, as a batch read of it has: an html-only crawl
-    streams without a `text` column, which the kg page prep extracts."""
+    streams without a `text` column, which the kg page prep extracts.
+    The directory must hold a file when the stream starts; an empty one
+    raises Spark's UNABLE_TO_INFER_SCHEMA."""
     reader = spark.readStream.schema(spark.read.parquet(pages_dir).schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
