@@ -5,7 +5,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from easyner_spark.fixtures import ALIAS, TERMS
 from easyner_spark.operators.evaluate import (
     corpus_rollup,
     prf,
@@ -13,14 +12,26 @@ from easyner_spark.operators.evaluate import (
     span_match_counts,
 )
 from easyner_spark.operators.nel import canonicalize_mentions, link_entities, primary_alias
-from easyner_spark.operators.ner_dict import dict_ner
-from easyner_spark.operators.splitter import split_sentences
 from easyner_spark.operators.triples import aggregate_edges, extract_triples
 
 
 @pytest.fixture(scope="module")
-def mentions_df(spark, pages_df):
-    return dict_ner(split_sentences(pages_df), TERMS).cache()
+def kg_frames(spark, pages_df):
+    """The kg job's frames up to `linked` on the fixture pages, built by
+    its stage list without writing snapshots (default config: the
+    fixture dictionary and alias table)."""
+    from easyner_spark.cli import kg_stages, prepare_pages
+
+    cfg = {"modules": {"analysis": False, "triples": False}}
+    frames = {"pages": prepare_pages(pages_df, cfg)}
+    for stage in kg_stages(spark, cfg):
+        frames[stage.name] = stage.build(frames, {}).cache()
+    return frames
+
+
+@pytest.fixture(scope="module")
+def mentions_df(kg_frames):
+    return kg_frames["mentions"]
 
 
 @pytest.fixture(scope="module")
@@ -56,11 +67,10 @@ def test_primary_alias_deterministic(spark, alias_df):
     assert pa["akt1"] == "KB:0001"
 
 
-def test_triples_match_gold_gate(spark, fx, mentions_df, alias_df):
+def test_triples_match_gold_gate(spark, fx, kg_frames):
     """The BASELINE gate: emitted triples vs analytic gold, P/R >= 0.95
     (engine is exact by construction -> expect 1.0)."""
-    linked = link_entities(mentions_df, primary_alias(alias_df), keep_unmatched=False)
-    triples = extract_triples(linked)
+    triples = extract_triples(kg_frames["linked"])
     gold = spark.createDataFrame(fx.gold_triples)
     res = set_eval(triples, gold, ["url", "sent_idx", "subj_id", "pred", "obj_id"])
     assert res["n_gold"] > 50
@@ -70,9 +80,8 @@ def test_triples_match_gold_gate(spark, fx, mentions_df, alias_df):
     assert res["precision"] == 1.0 and res["recall"] == 1.0, res
 
 
-def test_aggregate_edges_provenance(spark, fx, mentions_df, alias_df):
-    linked = link_entities(mentions_df, primary_alias(alias_df), keep_unmatched=False)
-    edges = aggregate_edges(extract_triples(linked), exact_sets=True).toPandas()
+def test_aggregate_edges_provenance(spark, fx, kg_frames):
+    edges = aggregate_edges(extract_triples(kg_frames["linked"]), exact_sets=True).toPandas()
     gold = fx.gold_triples.groupby(["subj_id", "pred", "obj_id"]).agg(
         support=("url", "size"), doc_count=("url", "nunique")
     ).reset_index()

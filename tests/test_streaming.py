@@ -18,14 +18,13 @@ BOTH_DRIVERS = ("sentences", "mentions", "linked", "edges")
 @pytest.fixture(scope="module")
 def landing(tmp_path_factory, spark, fx, pages_df):
     """The fixture pages landed as two files, one per arrival wave."""
-    root = tmp_path_factory.mktemp("stream")
-    pages_dir = str(root / "pages")
+    pages_dir = str(tmp_path_factory.mktemp("stream") / "pages")
     half = len(fx.pages) // 2
     for part in (fx.pages.iloc[:half], fx.pages.iloc[half:]):
         spark.createDataFrame(part, schema=pages_df.schema).coalesce(1).write.mode(
             "append"
         ).parquet(pages_dir)
-    return {"root": root, "pages_dir": pages_dir}
+    return {"pages_dir": pages_dir}
 
 
 def _drain(q):
