@@ -128,7 +128,8 @@ def prepare_pages(pages: DataFrame, cfg: dict) -> DataFrame:
     # modules.extract, or automatic when the crawl has html but no
     # pre-extracted text column. Narrow projection — no snapshot table,
     # it fuses into the splitter stage's scan.
-    if modules.get("extract", "text" not in pages.columns) and "html" in pages.columns:
+    want_extract = modules.get("extract", "text" not in pages.columns)
+    if want_extract and "html" in pages.columns:
         from easyner_spark.operators.boilerplate import extract_text
 
         pages = (
