@@ -184,7 +184,7 @@ def incremental_kg(
                     # committed atomically with the edges snapshot, so a
                     # crash between this commit and the marker write
                     # cannot double-count on replay (the last-wins merges
-                    # are replay-safe by construction) — ADVICE r1
+                    # are replay-safe by construction)
                     table.merge_additive(df, sum_cols=["support", "doc_count"], epoch=batch_id)
                 else:
                     table.merge(df)
